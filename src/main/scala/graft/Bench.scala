@@ -1,16 +1,31 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
+  /** `env`=<comma-separated name prefixes>, the single-query reproduction
+    * switch of Bench and ScaleCheck: None when unset, else the matching
+    * `names`. Fails fast (exit 2) when nothing matches — a typo'd prefix,
+    * or an empty value that would otherwise match EVERYTHING while looking
+    * like a filtered run — because either would produce a normal-looking
+    * artifact that timed the wrong set.
+    */
+  private[graft] def onlyMatching(env: String, tag: String,
+                                  names: Seq[String]): Option[Seq[String]] =
+    sys.env.get(env).map { v =>
+      val ps = v.split(',').map(_.trim).filter(_.nonEmpty)
+      val hit = names.filter(n => ps.exists(n.startsWith))
+      if (hit.isEmpty) {
+        System.err.println(s"[$tag] $env='$v' matched zero names — check the prefix spelling")
+        sys.exit(2)
+      }
+      System.err.println(s"[$tag] $env matched ${hit.size}: ${hit.mkString(", ")}")
+      hit
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.SessionTuning.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.core.SessionTuning.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JIT + codegen + first read of every parquet table, so
     // the first timed query doesn't absorb one-time costs (round-2 q10 was
@@ -39,35 +54,9 @@ object Bench {
     // matching queries — the local-reproduction switch for adjudicating
     // single-query drift (the driver sets nothing, so it always runs the
     // full set).
-    // Empty/typo'd filters fail fast: a prefix that matches nothing (or an
-    // empty-string value, which would match EVERYTHING while looking like a
-    // single-query run) would otherwise produce a normal-looking BENCH
-    // artifact that timed the wrong set.
-    val only: String => Boolean = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(ps0) =>
-        val ps = ps0.split(',').map(_.trim).filter(_.nonEmpty)
-        if (ps.isEmpty) {
-          System.err.println(
-            "[bench] SPARK_GRAFT_BENCH_ONLY is set but empty — refusing to " +
-              "time the full set under a filter flag; unset it or name a prefix")
-          sys.exit(2)
-        }
-        n => ps.exists(n.startsWith)
-      case None => _ => true
-    }
-    val ordered0 = SparkEntry.queries.toSeq.filter(kv => only(kv._1))
-      .sortBy(_._1)
-    if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY")) {
-      if (ordered0.isEmpty) {
-        System.err.println(
-          s"[bench] SPARK_GRAFT_BENCH_ONLY=${sys.env("SPARK_GRAFT_BENCH_ONLY")} " +
-            "matched zero queries — check the prefix spelling")
-        sys.exit(2)
-      }
-      System.err.println(
-        s"[bench] SPARK_GRAFT_BENCH_ONLY matched ${ordered0.size} queries: " +
-          ordered0.map(_._1).mkString(", "))
-    }
+    val all = SparkEntry.queries.toSeq.sortBy(_._1)
+    val only = onlyMatching("SPARK_GRAFT_BENCH_ONLY", "bench", all.map(_._1))
+    val ordered0 = all.filter(kv => only.forall(_.contains(kv._1)))
     // full untimed pass over the (possibly filtered) query set: builds/caches
     // the memoized fixtures (graft.queries.Fixtures — JobRunner-backed, so
     // the second pass reuses them) and absorbs per-query first-run codegen.
@@ -104,6 +93,10 @@ object Bench {
     def heapUsedMb(): Long = java.lang.management.ManagementFactory
       .getMemoryMXBean.getHeapMemoryUsage.getUsed >> 20
     final case class Sample(sec: Double, gcMs: Long, heapMb: Long)
+    // A query that throws in any pass is FAILED: its time-to-failure is not
+    // a sample, it is left out of every table and total, and the run exits
+    // non-zero after writing the artifact (PlanDump's and Verify's policy).
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val passes = 3
     val samples = (1 to passes).map { pass =>
       // drop every persisted RDD/Dataset from previous passes: queries
@@ -115,8 +108,7 @@ object Bench {
       // flat (53.6/49.3/50.2), so the growth is environmental, but the
       // purge bounds the engine-side contribution either way. Disk-backed
       // state (snapshot fixtures) is unaffected.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.catalog.clearCache()
+      graft.core.Materialize.purge(spark)
       orderFor(pass).map { case (name, fn) =>
         val gc0 = gcMillis()
         val t0 = System.nanoTime()
@@ -124,11 +116,16 @@ object Bench {
         // Catalyst prune projections and eliminate unique-key left joins,
         // so several queries timed a collapsed plan (see core/Materialize;
         // numbers from r12 on are re-baselined under the honest action)
-        try { graft.core.Materialize.full(fn(spark, sfDir)) }
-        catch { case _: Throwable => () }
-        val sec = (System.nanoTime() - t0) / 1e9
-        name -> Sample(sec, gcMillis() - gc0, heapUsedMb())
-      }.toMap
+        try {
+          graft.core.Materialize.full(fn(spark, sfDir))
+          val sec = (System.nanoTime() - t0) / 1e9
+          Some(name -> Sample(sec, gcMillis() - gc0, heapUsedMb()))
+        } catch { case NonFatal(e) =>
+          failed += name
+          System.err.println(s"[bench] pass $pass $name failed: ${e.getMessage}")
+          None
+        }
+      }.flatten.toMap
     }
     // per-pass totals to stderr: when a future round's numbers look off,
     // this shows whether noise hit one pass or all three (the JSON line on
@@ -137,53 +134,30 @@ object Bench {
       System.err.println(
         f"[bench] pass ${i + 1}: ${m.values.map(_.sec).sum}%.1f s, gc ${m.values.map(_.gcMs).sum} ms")
     }
-    val results = ordered0.map { case (name, _) =>
+    val timed = ordered0.filterNot(kv => failed(kv._1))
+    val results = timed.map { case (name, _) =>
       name -> samples.map(_(name)).minBy(_.sec)
     }
     // 4 decimals (0.1 ms): full double precision tripled the line length
     // and the driver archives only a fixed-size tail of stdout — r7's
     // BENCH tail lost the first ~18 queries AND the total to truncation.
-    val qs = results.map { case (k, v) => f""""$k":${v.sec}%.4f""" }
-      .mkString("{", ",", "}")
+    def obj[V](kvs: Seq[(String, V)])(f: V => String): String =
+      kvs.map { case (k, v) => s""""$k":${f(v)}""" }.mkString("{", ",", "}")
+    val qs = obj(results)(v => f"${v.sec}%.4f")
     val total = results.map(_._2.sec).sum
-    // THE stdout contract line (VERDICT r20 item 1). The driver archives
-    // and parses only a ~2000-char stdout TAIL; at 170 queries the
-    // per-query line is ~4.3 KB, so its head was cut and the parse failed
-    // every round since ~r14 (BENCH_r14..r20.json all `parsed: null`,
-    // PERF per_query/geomean/scaling all empty). The contract line is
-    // therefore tail-sized: total + cpus + per-FAMILY subtotals (11
-    // families, ~300 chars — fits any tail with room to spare). The
-    // per-query min-of-3 table — same methodology, nothing dropped — is
-    // written every run to the cpus-stamped BENCH_FULL_c$cpus.json below
-    // (VERDICT r20 item 2: the driver's c8 re-run used to clobber the c32
-    // table when the artifact name had no core count in it).
-    // family = name up to the first '_' with trailing digits stripped, so
-    // q1/q3/q5/q6/q10/q_* all land in "q" (ann, dd, gr, job, mm, op, pl,
-    // q, rt, tx, urd).
-    def family(n: String): String =
-      n.takeWhile(_ != '_').reverse.dropWhile(_.isDigit).reverse
-    val famQs = results.groupBy { case (k, _) => family(k) }.toSeq
-      .sortBy(_._1)
-      .map { case (f, rs) => f""""$f":${rs.map(_._2.sec).sum}%.4f""" }
-      .mkString("{", ",", "}")
-    val line =
-      f"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.size},"queries":$famQs,"value":$total%.4f}"""
-    println(line)
     // Complete per-query table (the pre-r21 stdout line, now file-only +
     // echoed to stderr for logs) — with per-query telemetry columns:
     // gc_ms = GC time during the min-wall sample (the reported number's
     // own GC cost), gc_ms_worst = max GC delta across the 3 passes
     // (neighbor-debt / pressure signal), heap_mb = used heap right after
-    // the min-wall sample.
-    val gcQs = results.map { case (k, v) => s""""$k":${v.gcMs}""" }
-      .mkString("{", ",", "}")
-    val gcWorstQs = ordered0.map { case (name, _) =>
-      s""""$name":${samples.map(_(name).gcMs).max}"""
-    }.mkString("{", ",", "}")
-    val heapQs = results.map { case (k, v) => s""""$k":${v.heapMb}""" }
-      .mkString("{", ",", "}")
+    // the min-wall sample; failed = the queries that threw in any pass.
+    val gcQs = obj(results)(_.gcMs.toString)
+    val gcWorstQs =
+      obj(results.map { case (k, _) => k -> samples.map(_(k).gcMs).max })(_.toString)
+    val heapQs = obj(results)(_.heapMb.toString)
+    val failedQs = failed.map(graft.core.JsonLite.quote).mkString("[", ",", "]")
     val fullLine =
-      f"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"queries":$qs,"gc_ms":$gcQs,"gc_ms_worst":$gcWorstQs,"heap_mb":$heapQs,"value":$total%.4f}"""
+      f"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"queries":$qs,"gc_ms":$gcQs,"gc_ms_worst":$gcWorstQs,"heap_mb":$heapQs,"failed":$failedQs,"value":$total%.4f}"""
     System.err.println(fullLine)
     // A filtered (SPARK_GRAFT_BENCH_ONLY) run writes to BENCH_PARTIAL_*
     // so a single-query repro can never clobber the committed full-table
@@ -192,12 +166,32 @@ object Bench {
     // name so the driver's low-core scaling run coexists with the main
     // run instead of overwriting it.
     val artifact =
-      if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY")) s"BENCH_PARTIAL_c$cpus.json"
+      if (only.isDefined) s"BENCH_PARTIAL_c$cpus.json"
       else s"BENCH_FULL_c$cpus.json"
     try java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>
       System.err.println(s"[bench] $artifact write failed: ${e.getMessage}") }
     spark.stop()
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+    // THE stdout contract line, printed LAST: a bench consumer that keeps
+    // only a ~2000-char tail of stdout and stderr together must still see
+    // it whole, so the 4.3 KB per-query line above comes first. The
+    // contract line is tail-sized: total + cpus + per-FAMILY subtotals
+    // (11 families, ~300 chars). The per-query min-of-3 table — same
+    // methodology, nothing dropped — is the cpus-stamped
+    // BENCH_FULL_c$cpus.json above (the core count in the name keeps a
+    // low-core re-run from clobbering the main run's table).
+    // family = name up to the first '_' with trailing digits stripped, so
+    // q1/q3/q5/q6/q10/q_* all land in "q" (ann, dd, gr, job, mm, op, pl,
+    // q, rt, tx, urd).
+    def family(n: String): String =
+      n.takeWhile(_ != '_').reverse.dropWhile(_.isDigit).reverse
+    val famQs = obj(results.groupBy { case (k, _) => family(k) }.toSeq.sortBy(_._1))(
+      rs => f"${rs.map(_._2.sec).sum}%.4f")
+    println(
+      f"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.size},"families":$famQs,"value":$total%.4f}""")
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.{Materialize, Measure}
+import scala.collection.immutable.ListMap
 
 /** Empirical scale check: the 100 TB design claims (banded candidate
   * generation, O(k) per-group reduces, broadcast-sized decontam, no global
@@ -167,10 +169,10 @@ object ScaleCheck {
     * assignment, two drop joins) without the snapshot-index round-trip,
     * so the slope isolates the join/assignment engine work.
     */
-  private val ScaledTargets: Map[String, (SparkSession, String, Int) => org.apache.spark.sql.DataFrame] = {
+  private val ScaledTargets: ListMap[String, (SparkSession, String, Int) => DataFrame] = {
     import graft.core.Tables
     import graft.ops.{KMeans, SemDeDup}
-    Map(
+    ListMap(
       "dd_semantic" -> ((s: SparkSession, dir: String, mult: Int) =>
         SemDeDup.semantic(Tables.embeddings(s, dir), "vec_id", "embedding",
           k = 8 * mult, iters = 3, tauSq = 6500L)),
@@ -220,11 +222,8 @@ object ScaleCheck {
         graft.queries.GraphPack.knnLabelPropScaled(s, dir,
           kClusters = 4 * mult)))
   }
-  private val ScaledNames = Seq("dd_semantic", "dd_inc_semantic",
-    "pl_curation_e2e", "gr_cluster_labelprop", "ann_ivfpq",
-    "gr_knn_labelprop")
 
-  /** Per-decade twins used ONLY by the X1000 mode (set in main): the
+  /** Per-decade twins used ONLY by the X1000 mode (set in runTargeted): the
     * scaled-twin discipline applied per-run — same function at both
     * scales of the slope row, consulted before ScaledTargets.
     */
@@ -232,7 +231,7 @@ object ScaleCheck {
     Map.empty
 
   private def runTarget(s: SparkSession, name: String, dir: String,
-                        mult: Int): Long = {
+                        mult: Int): Unit = {
     // three-decade runs operate near the sandbox's disk ceiling; fail
     // loudly BEFORE a pass rather than let a mid-shuffle ENOSPC corrupt
     // the session (the shuffle dirs live on the same filesystem)
@@ -250,8 +249,7 @@ object ScaleCheck {
     // the measured "slope" is the warm-iteration cost with the dominant
     // build stage cached away. Purging first makes every timed pass pay
     // the full cold plan — the cost a fresh consumer actually sees.
-    s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    s.catalog.clearCache()
+    Materialize.purge(s)
     // At the big scales, also DRAIN the memory freed above before the
     // next cold pass: ContextCleaner reclaims broadcast/unpersisted
     // blocks asynchronously (periodicGC defaults to 30 min), so a long
@@ -265,17 +263,12 @@ object ScaleCheck {
     // count() collapsed several plans (projection pruning, unique-key
     // left-join elimination), so pre-r12 slope rows for those queries
     // measured a fraction of the real work.
-    x1000Twins.get(name) match {
-      case Some(f) => graft.core.Materialize.full(f(s, dir)); 0L
-      case None => ScaledTargets.get(name) match {
-        case Some(f) => graft.core.Materialize.full(f(s, dir, mult)); 0L
-        case None =>
-          graft.core.Materialize.full(SparkEntry.queries(name)(s, dir)); 0L
-      }
-    }
+    Materialize.full(x1000Twins.get(name).map(_(s, dir))
+      .orElse(ScaledTargets.get(name).map(_(s, dir, mult)))
+      .getOrElse(SparkEntry.queries(name)(s, dir)))
   }
 
-  private def allTargets: Seq[String] = Targets ++ ScaledNames
+  private def allTargets: Seq[String] = Targets ++ ScaledTargets.keys
 
   /** Key offset per replica — far above any base key (max base key is
     * o_orderkey ~ 1.5e5 at sf0.1), so replica key spaces never collide.
@@ -346,56 +339,82 @@ object ScaleCheck {
       java.nio.file.Files.writeString(marker, s"reps=$reps base=$baseDir\n")
   }
 
-  /** Cumulative shuffle-volume listener: per-query shuffle WRITE bytes are
-    * the scale diagnostic time alone can't give — a candidate-pair blowup
-    * or an accidental re-shuffle shows up as a super-linear BYTES slope
-    * even when wall time hides behind parallelism. Stage events arrive
-    * async; `flush` drains the listener bus (package-private in Spark =
-    * public in bytecode, so plain reflection reaches it) before reading.
+  /** Per-query min-of-N wall seconds and pass-1 shuffle-write bytes at one
+    * scale (shuffle volume is deterministic per plan+data; one sample
+    * suffices). Each query is metered alone, its wall timed without the
+    * meter's drain.
     */
-  private final class ShuffleMeter extends org.apache.spark.scheduler.SparkListener {
-    private val written = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-      written.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    def value: Long = written.get
+  private final case class Timed(sec: Map[String, Double], shuffle: Map[String, Long])
+
+  /** Both scales of a decade's slope rows. */
+  private final case class Decade(reps: Int, base: Timed, big: Timed) {
+    /** One artifact row per name: the two walls and their log-log slope
+      * over the decade, then the same for shuffle bytes — the
+      * data-movement scaling law, with the log guarded against
+      * zero-shuffle (fully map-side / broadcast) plans. `withRatio` adds
+      * the wall ratio column the x10/x100 tables carry.
+      */
+    def rows(names: Seq[String], withRatio: Boolean): String = names.map { name =>
+      val x = s"x$reps"
+      val (t1, tk) = (base.sec(name), big.sec(name))
+      val slope = math.log(tk / t1) / math.log(reps.toDouble)
+      val (s1, sk) = (base.shuffle(name), big.shuffle(name))
+      val bSlope =
+        if (s1 > 0 && sk > 0) math.log(sk.toDouble / s1) / math.log(reps.toDouble)
+        else 0.0
+      val ratio = if (withRatio) f""""ratio":${tk / t1}%.2f,""" else ""
+      f""""$name":{"sf01_sec":$t1%.3f,"${x}_sec":$tk%.3f,$ratio"slope":$slope%.3f,""" +
+        f""""shuffle_sf01_mb":${s1 / 1e6}%.1f,"shuffle_${x}_mb":${sk / 1e6}%.1f,"shuffle_slope":$bSlope%.3f}"""
+    }.mkString(",")
   }
 
-  private def flushListenerBus(s: SparkSession): Unit =
-    try {
-      val sc = s.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      val m = bus.getClass.getMethods.find(m =>
-        m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-      m.foreach(_.invoke(bus))
-    } catch { case _: Throwable => Thread.sleep(300) }
+  private def seconds(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
 
-  /** min-of-N wall time per query + shuffle bytes from the first pass
-    * (shuffle volume is deterministic per plan+data; one sample suffices).
-    */
-  private def timedPasses(dir: String, mult: Int, passes: Int,
-                          meter: ShuffleMeter,
-                          targets: Seq[String]): (Map[String, Double], Map[String, Long]) = {
-    val shuffles = scala.collection.mutable.Map[String, Long]()
-    flushListenerBus(activeSpark)
-    shuffles("__prev") = meter.value
+  private def timedPasses(s: SparkSession, dir: String, mult: Int, passes: Int,
+                          targets: Seq[String]): Timed = {
     val samples = (1 to passes).map { p =>
       targets.map { name =>
-        val t0 = System.nanoTime()
-        runTarget(activeSpark, name, dir, mult)
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (p == 1) {
-          flushListenerBus(activeSpark)
-          val now = meter.value
-          shuffles(name) = now - shuffles("__prev")
-          shuffles("__prev") = now
-        }
+        var dt = 0.0
+        val bytes = Measure.during(s) { dt = seconds(runTarget(s, name, dir, mult)) }
+          .shuffleBytes
         System.err.println(f"[scale] $dir pass $p $name: $dt%.2f s")
-        name -> dt
+        name -> (dt, bytes)
       }.toMap
     }
-    shuffles.remove("__prev")
-    (targets.map(n => n -> samples.map(_(n)).min).toMap, shuffles.toMap)
+    Timed(targets.map(n => n -> samples.map(_(n)._1).min).toMap,
+      samples.head.map { case (n, (_, bytes)) => n -> bytes })
+  }
+
+  /** One decade of slope rows: synthesize `tables` (every table when None)
+    * at `reps`x into `dir`, check each replicated table holds exactly
+    * `reps` times the base rows, warm both scales untimed (tables, JIT,
+    * codegen, memoized fixtures), then time min-of-3 at sf0.1 and min-of-2
+    * at the decade (each big pass is ~reps x the wall time; min over warm
+    * passes still suppresses GC/contention noise, which only ever inflates
+    * samples). A `base` already timed in this session — the full mode's
+    * x100 and x1000 sets reuse the x10 run's sf0.1 passes — is neither
+    * re-warmed nor re-timed.
+    */
+  private def runDecade(s: SparkSession, baseDir: String, dir: String, reps: Int,
+                        names: Seq[String], tables: Option[Seq[String]],
+                        base: Option[Timed] = None): Decade = {
+    synthesize(s, baseDir, dir, reps, tables)
+    tables.getOrElse(FactKeys.keys.toSeq.sorted).filter(FactKeys.contains).foreach { t =>
+      val nBase = s.read.parquet(s"$baseDir/$t.parquet").count()
+      val nBig = s.read.parquet(s"$dir/$t.parquet").count()
+      require(nBig == reps * nBase,
+        s"x$reps synthesis wrong for $t: $nBig != $reps*$nBase")
+    }
+    val scales = (if (base.isEmpty) Seq(baseDir -> 1) else Nil) :+ (dir -> reps)
+    for ((d, mult) <- scales; name <- names)
+      System.err.println(
+        f"[scale] warmup x$mult $d $name: ${seconds(runTarget(s, name, d, mult))}%.2f s")
+    Decade(reps, base.getOrElse(timedPasses(s, baseDir, 1, 3, names)),
+      timedPasses(s, dir, reps, 2, names))
   }
 
   /** The 100x extrapolation set: the cheapest-slope operators with 10x
@@ -448,188 +467,100 @@ object ScaleCheck {
     // unweighted/biased twins have (x10 slopes 0.225/0.233).
     "gr_pagerank_w", "gr_walks")
 
-  private var activeSpark: SparkSession = _
+  /** Targets of the X100 mode and the one fact table each touches. */
+  private val X100Tables = Map(
+    "gr_pagerank" -> Seq("lineitem"),
+    "gr_pagerank_w" -> Seq("lineitem"),
+    "gr_ppr" -> Seq("lineitem"),
+    "gr_pagerank_resume" -> Seq("lineitem"),
+    "rt_bm25" -> Seq("documents"),
+    "dd_line_dedup" -> Seq("documents"),
+    "pl_dedup_corpus" -> Seq("documents"),
+    // the two remaining super-linear x10 shuffle residuals (1.297 /
+    // 1.467): whether the posting-pair / pigeonhole-candidate growth
+    // saturates or compounds is exactly what a second decade answers
+    "dd_ngram_jaccard" -> Seq("documents"),
+    "dd_simhash" -> Seq("documents"),
+    // the bits=60 dial's proof-of-scale twin: same corpus, 24-bit band
+    // keys — the x100 row should show the random-collision shuffle
+    // term shrinking vs dd_simhash's (birthday arithmetic: 2^8 fewer
+    // random candidates at equal replication)
+    "dd_simhash_wide" -> Seq("documents"),
+    // r21: the one-corpus-pass dsirWeights restructure (persist +
+    // driver-finished B-row model) is plan-invisible at sf0.1 walls;
+    // the second decade is where the deduped tokenize passes and the
+    // halved shuffle must show up as wall
+    "pl_dsir" -> Seq("documents"))
 
-  /** SPARK_GRAFT_SCALE_ONLY=<comma-separated name prefixes>: the
-    * single-query reproduction switch (Bench's SPARK_GRAFT_BENCH_ONLY,
-    * applied to scale rows) — time only matching targets and write to
-    * SCALE_CHECK_REPRO.json instead of SCALE_CHECK.json, so a repro run
-    * never clobbers the full artifact. Diagnostics and notes are skipped
-    * under the filter. Fails fast on an empty or zero-match filter.
-    */
-  private val onlyFilter: Option[String => Boolean] =
-    sys.env.get("SPARK_GRAFT_SCALE_ONLY").map { ps0 =>
-      val ps = ps0.split(',').map(_.trim).filter(_.nonEmpty)
-      if (ps.isEmpty) {
-        System.err.println("[scale] SPARK_GRAFT_SCALE_ONLY is set but empty")
-        sys.exit(2)
-      }
-      (n: String) => ps.exists(n.startsWith)
-    }
+  /** Targets of the X1000 mode and the one fact table each touches. */
+  private val X1000Tables = Map(
+    "pl_dedup_corpus" -> Seq("documents"),
+    "dd_line_dedup" -> Seq("documents"),
+    "rt_bm25" -> Seq("documents"),
+    "gr_pagerank" -> Seq("lineitem"),
+    // the bits=60 sketch at the third decade: at 5M docs the 40-bit
+    // birthday term is ~N²·10/2^16 ≈ 3.8B candidate pairs — the
+    // 24-bit keys keep it ~15M, which is the whole point of the dial
+    "dd_simhash_wide" -> Seq("documents"),
+    // r21 (VERDICT r20 item 7): the tokenizer/model-filter family's
+    // first third-decade row. The replicas' disjoint token spaces grow
+    // the NB count table 1000× with the corpus — the regime where the
+    // positions×counts hash join must hold without broadcast
+    "pl_nb_lang" -> Seq("documents"))
 
-  /** The X1000 mode body. Tables are synthesized per query (the
-    * documents-only trick generalized: each three-decade candidate
-    * touches exactly one fact table, so the synthesis cost and the disk
-    * footprint stay bounded by that table alone). Twins: gr_pagerank
-    * runs [[graft.queries.GraphPack.pagerankX1000Q]] at BOTH scales —
-    * fpShift 18 (the >4M-node overflow dial) + checkpointEvery 1
-    * (lineage truncation; without it the 5-iteration DAG's live shuffle
-    * footprint at x1000 exceeds this sandbox's disk) — see that method's
-    * Scaladoc for why both are engine features, not measurement
-    * shortcuts.
+  /** The targeted modes, SPARK_GRAFT_SCALE_X100=<names> and
+    * SPARK_GRAFT_SCALE_X1000=<names>: ONLY the sf0.1 baseline (min-of-3)
+    * and the decade's measurement (min-of-2) for the named queries, each
+    * synthesizing just the fact table it touches (the disk footprint stays
+    * bounded by that table alone), written to SCALE_CHECK_X100.json or
+    * SCALE_CHECK_X1000.json (tools/merge_x100.py / merge_x1000.py fold rows
+    * into the full artifact). So a plan change can refresh its family's
+    * rows without — or clobbering — the multi-hour full SCALE_CHECK run;
+    * first x100 use: the r20 src-bucketed rank-family stores, whose x10
+    * repro showed 3-6x less shuffle than the pre-bucketing x100 table
+    * rows.
+    *
+    * X100 runs the DEFAULT (lz4) shuffle codec, so absolute shuffle MB
+    * stay comparable with the full x10/x100 tables. X1000 runs zstd (set
+    * in main) and one twin: gr_pagerank runs
+    * [[graft.queries.GraphPack.pagerankX1000Q]] at BOTH scales — fpShift
+    * 18 (the >4M-node overflow dial) + checkpointEvery 1 (lineage
+    * truncation; without it the 5-iteration DAG's live shuffle footprint
+    * at x1000 exceeds this sandbox's disk) — see that method's Scaladoc
+    * for why both are engine features, not measurement shortcuts.
     */
-  private def runX1000(spark: SparkSession, baseDir: String,
-                       spec: String): Unit = {
+  private def runTargeted(spark: SparkSession, baseDir: String, reps: Int,
+                          spec: String): Unit = {
+    val tablesFor = if (reps == 1000) X1000Tables else X100Tables
     val names = spec.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    val tablesFor = Map(
-      "pl_dedup_corpus" -> Seq("documents"),
-      "dd_line_dedup" -> Seq("documents"),
-      "rt_bm25" -> Seq("documents"),
-      "gr_pagerank" -> Seq("lineitem"),
-      // the bits=60 sketch at the third decade: at 5M docs the 40-bit
-      // birthday term is ~N²·10/2^16 ≈ 3.8B candidate pairs — the
-      // 24-bit keys keep it ~15M, which is the whole point of the dial
-      "dd_simhash_wide" -> Seq("documents"),
-      // r21 (VERDICT r20 item 7): the tokenizer/model-filter family's
-      // first third-decade row. The replicas' disjoint token spaces grow
-      // the NB count table 1000× with the corpus — the regime where the
-      // positions×counts hash join must hold without broadcast
-      "pl_nb_lang" -> Seq("documents"))
     val unknown = names.filterNot(tablesFor.contains)
     require(names.nonEmpty && unknown.isEmpty,
-      s"SPARK_GRAFT_SCALE_X1000: unknown/empty targets $unknown — " +
+      s"SPARK_GRAFT_SCALE_X$reps: unknown/empty targets $unknown — " +
         s"known: ${tablesFor.keys.toSeq.sorted.mkString(", ")}")
-    x1000Twins = Map(
-      "gr_pagerank" -> ((s: SparkSession, dir: String) =>
-        graft.queries.GraphPack.pagerankX1000Q(s, dir)))
-    val reps1000 = 1000
-    val out1000 = s"${sys.props("user.dir")}/target/scale1000"
-    val tables = names.flatMap(tablesFor).distinct
-    synthesize(spark, baseDir, out1000, reps1000, Some(tables))
-    tables.foreach { t =>
-      val nBase = spark.read.parquet(s"$baseDir/$t.parquet").count()
-      val nBig = spark.read.parquet(s"$out1000/$t.parquet").count()
-      require(nBig == reps1000 * nBase,
-        s"x1000 synthesis wrong for $t: $nBig != $reps1000*$nBase")
-    }
-    for ((dir, mult) <- Seq(baseDir -> 1, out1000 -> reps1000)) {
-      names.foreach { name =>
-        val t0 = System.nanoTime()
-        runTarget(spark, name, dir, mult)
-        System.err.println(f"[scale] x1000-mode warmup $dir $name: " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-    }
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
-    val (small, shufS) = timedPasses(baseDir, mult = 1, passes = 3, meter,
-      names)
-    val (big, shufK) = timedPasses(out1000, mult = reps1000, passes = 2,
-      meter, names)
-    val entries = names.map { name =>
-      val (t1, tk) = (small(name), big(name))
-      val slope = math.log(tk / t1) / math.log(reps1000.toDouble)
-      val (s1, sk) = (shufS(name), shufK(name))
-      val bSlope =
-        if (s1 > 0 && sk > 0)
-          math.log(sk.toDouble / s1) / math.log(reps1000.toDouble)
-        else 0.0
-      f""""$name":{"sf01_sec":$t1%.3f,"x1000_sec":$tk%.3f,"slope":$slope%.3f,""" +
-        f""""shuffle_sf01_mb":${s1 / 1e6}%.1f,"shuffle_x1000_mb":${sk / 1e6}%.1f,"shuffle_slope":$bSlope%.3f}"""
-    }
-    val twinNote = if (names.contains("gr_pagerank"))
-      ""","notes":{"gr_pagerank":"scaled twin pagerankX1000Q at BOTH decades: the DEPLOYMENT shape - 5 iterations over a src-BUCKETED normalized-edge snapshot (memoized build, untimed warmup, like gr_ppr/gr_pagerank_w one decade down) with fpShift=18/maxNodes=2^25 (the documented >4M-node overflow dial; x1000 has ~20M part nodes), checkpointEvery=1 (per-iteration lineage truncation - without it the unrolled DAG retains every iteration's shuffle files until the final action; the raw-tables cached variant measured >60 GB live before one x1000 warmup pass finished, beyond this sandbox's disk), and cacheEdges=false (each iteration re-scans the bucketed snapshot whose read recovers HashPartitioning(src), so the per-iteration join is exchange-free on the edge side with zero executor storage pinned to the 2.4B-edge graph - the only shape an edge set larger than cluster memory can take). Bit-exactness of checkpoint + uncached paths: PageRankSpec laws"}"""
-    else ""
+    if (reps == 1000)
+      x1000Twins = Map(
+        "gr_pagerank" -> ((s: SparkSession, dir: String) =>
+          graft.queries.GraphPack.pagerankX1000Q(s, dir)))
+    val d = runDecade(spark, baseDir, s"${sys.props("user.dir")}/target/scale$reps",
+      reps, names, Some(names.flatMap(tablesFor).distinct))
+    val (protocol, notes) =
+      if (reps == 1000)
+        ("per-query table synthesis; same purge + noop-sink + min-of-3 sf0.1 / min-of-2 x1000 protocol as SCALE_CHECK x1000 rows; slope is log(t_x1000/t_sf01)/log(1000); SHUFFLE CODEC IS ZSTD for this whole session (one lz4 copy of the x1000 edge relation plus its parquet output exceeds the sandbox disk) - both scales of each row share the codec so shuffle_slope stays internally paired, but absolute shuffle MB are NOT comparable to the lz4 x10/x100 tables",
+         if (names.contains("gr_pagerank"))
+           ""","notes":{"gr_pagerank":"scaled twin pagerankX1000Q at BOTH decades: the DEPLOYMENT shape - 5 iterations over a src-BUCKETED normalized-edge snapshot (memoized build, untimed warmup, like gr_ppr/gr_pagerank_w one decade down) with fpShift=18/maxNodes=2^25 (the documented >4M-node overflow dial; x1000 has ~20M part nodes), checkpointEvery=1 (per-iteration lineage truncation - without it the unrolled DAG retains every iteration's shuffle files until the final action; the raw-tables cached variant measured >60 GB live before one x1000 warmup pass finished, beyond this sandbox's disk), and cacheEdges=false (each iteration re-scans the bucketed snapshot whose read recovers HashPartitioning(src), so the per-iteration join is exchange-free on the edge side with zero executor storage pinned to the 2.4B-edge graph - the only shape an edge set larger than cluster memory can take). Bit-exactness of checkpoint + uncached paths: PageRankSpec laws"}"""
+         else "")
+      else
+        ("per-query table synthesis; same purge + noop-sink + min-of-3 sf0.1 / min-of-2 x100 protocol as SCALE_CHECK x100 rows; slope is log(t_x100/t_sf01)/log(100); default lz4 shuffle codec, shuffle MB comparable with the full x10/x100 tables", "")
     val json =
-      s"""{"x1000_only":true,"reps":$reps1000,"base":"$baseDir","protocol":"per-query table synthesis; same purge + noop-sink + min-of-3 sf0.1 / min-of-2 x1000 protocol as SCALE_CHECK x1000 rows; slope is log(t_x1000/t_sf01)/log(1000); SHUFFLE CODEC IS ZSTD for this whole session (one lz4 copy of the x1000 edge relation plus its parquet output exceeds the sandbox disk) - both scales of each row share the codec so shuffle_slope stays internally paired, but absolute shuffle MB are NOT comparable to the lz4 x10/x100 tables"$twinNote,"queries":{${entries.mkString(",")}}}"""
-    println(json)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(
-      s"${sys.props("user.dir")}/SCALE_CHECK_X1000.json"), json + "\n")
+      s"""{"x${reps}_only":true,"reps":$reps,"base":"$baseDir","protocol":"$protocol"$notes,"queries":{${d.rows(names, withRatio = reps == 100)}}}"""
+    publish(s"SCALE_CHECK_X$reps.json", json)
   }
 
-  /** SPARK_GRAFT_SCALE_X100=<names>: the targeted-decade discipline of
-    * [[runX1000]] applied to x100 — ONLY the sf0.1 baseline (min-of-3)
-    * and the x100 measurement (min-of-2) for the named queries, each
-    * synthesizing just the fact table it touches, written to
-    * SCALE_CHECK_X100.json (tools/merge_x100.py folds rows into the
-    * full artifact). Exists so a plan change can refresh its family's
-    * two-decade rows without the multi-hour full SCALE_CHECK run —
-    * first use: the r20 src-bucketed rank-family stores, whose x10
-    * repro showed 3-6x less shuffle than the pre-bucketing x100 table
-    * rows. Runs the DEFAULT (lz4) shuffle codec, so absolute shuffle MB
-    * stay comparable with the full x10/x100 tables (unlike x1000's
-    * zstd session).
-    */
-  private def runX100(spark: SparkSession, baseDir: String,
-                      spec: String): Unit = {
-    val names = spec.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    val tablesFor = Map(
-      "gr_pagerank" -> Seq("lineitem"),
-      "gr_pagerank_w" -> Seq("lineitem"),
-      "gr_ppr" -> Seq("lineitem"),
-      "gr_pagerank_resume" -> Seq("lineitem"),
-      "rt_bm25" -> Seq("documents"),
-      "dd_line_dedup" -> Seq("documents"),
-      "pl_dedup_corpus" -> Seq("documents"),
-      // the two remaining super-linear x10 shuffle residuals (1.297 /
-      // 1.467): whether the posting-pair / pigeonhole-candidate growth
-      // saturates or compounds is exactly what a second decade answers
-      "dd_ngram_jaccard" -> Seq("documents"),
-      "dd_simhash" -> Seq("documents"),
-      // the bits=60 dial's proof-of-scale twin: same corpus, 24-bit band
-      // keys — the x100 row should show the random-collision shuffle
-      // term shrinking vs dd_simhash's (birthday arithmetic: 2^8 fewer
-      // random candidates at equal replication)
-      "dd_simhash_wide" -> Seq("documents"),
-      // r21: the one-corpus-pass dsirWeights restructure (persist +
-      // driver-finished B-row model) is plan-invisible at sf0.1 walls;
-      // the second decade is where the deduped tokenize passes and the
-      // halved shuffle must show up as wall
-      "pl_dsir" -> Seq("documents"))
-    val unknown = names.filterNot(tablesFor.contains)
-    require(names.nonEmpty && unknown.isEmpty,
-      s"SPARK_GRAFT_SCALE_X100: unknown/empty targets $unknown — " +
-        s"known: ${tablesFor.keys.toSeq.sorted.mkString(", ")}")
-    val reps100 = 100
-    val out100 = s"${sys.props("user.dir")}/target/scale100"
-    val tables = names.flatMap(tablesFor).distinct
-    synthesize(spark, baseDir, out100, reps100, Some(tables))
-    tables.foreach { t =>
-      val nBase = spark.read.parquet(s"$baseDir/$t.parquet").count()
-      val nBig = spark.read.parquet(s"$out100/$t.parquet").count()
-      require(nBig == reps100 * nBase,
-        s"x100 synthesis wrong for $t: $nBig != $reps100*$nBase")
-    }
-    for ((dir, mult) <- Seq(baseDir -> 1, out100 -> reps100)) {
-      names.foreach { name =>
-        val t0 = System.nanoTime()
-        runTarget(spark, name, dir, mult)
-        System.err.println(f"[scale] x100-mode warmup $dir $name: " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-    }
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
-    val (small, shufS) = timedPasses(baseDir, mult = 1, passes = 3, meter,
-      names)
-    val (big, shufK) = timedPasses(out100, mult = reps100, passes = 2,
-      meter, names)
-    val entries = names.map { name =>
-      val (t1, tk) = (small(name), big(name))
-      val slope = math.log(tk / t1) / math.log(reps100.toDouble)
-      val (s1, sk) = (shufS(name), shufK(name))
-      val bSlope =
-        if (s1 > 0 && sk > 0)
-          math.log(sk.toDouble / s1) / math.log(reps100.toDouble)
-        else 0.0
-      f""""$name":{"sf01_sec":$t1%.3f,"x100_sec":$tk%.3f,"ratio":${tk / t1}%.2f,"slope":$slope%.3f,""" +
-        f""""shuffle_sf01_mb":${s1 / 1e6}%.1f,"shuffle_x100_mb":${sk / 1e6}%.1f,"shuffle_slope":$bSlope%.3f}"""
-    }
-    val json =
-      s"""{"x100_only":true,"reps":$reps100,"base":"$baseDir","protocol":"per-query table synthesis; same purge + noop-sink + min-of-3 sf0.1 / min-of-2 x100 protocol as SCALE_CHECK x100 rows; slope is log(t_x100/t_sf01)/log(100); default lz4 shuffle codec, shuffle MB comparable with the full x10/x100 tables","queries":{${entries.mkString(",")}}}"""
+  /** Prints an artifact and writes it to `name` in the working directory. */
+  private def publish(name: String, json: String): Unit = {
     println(json)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(
-      s"${sys.props("user.dir")}/SCALE_CHECK_X100.json"), json + "\n")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(sys.props("user.dir"), name), json + "\n")
   }
 
   def main(args: Array[String]): Unit = {
@@ -637,12 +568,9 @@ object ScaleCheck {
     val outDir = args.headOption.getOrElse(
       s"${sys.props("user.dir")}/target/scale10")
     val reps = 10
-    val builder0 = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    // ---- targeted modes: one decade's rows only, separate artifact ----
+    val targeted = sys.env.get("SPARK_GRAFT_SCALE_X1000").map(1000 -> _)
+      .orElse(sys.env.get("SPARK_GRAFT_SCALE_X100").map(100 -> _))
     // X1000 mode runs zstd shuffle compression: one lz4 copy of the
     // x1000 edge relation in flight (~29 GB) plus its parquet output no
     // longer fits this sandbox's disk beside the source table — measured
@@ -650,92 +578,33 @@ object ScaleCheck {
     // are timed in THIS session under the same codec, so slopes stay
     // internally paired; absolute shuffle MB are not comparable to the
     // lz4 x10/x100 tables (the artifact's protocol note records this).
-    val builder =
-      if (sys.env.contains("SPARK_GRAFT_SCALE_X1000"))
-        builder0.config("spark.io.compression.codec", "zstd")
-      else builder0
-    val spark = graft.core.SessionTuning.tune(builder).getOrCreate()
+    val builder = graft.core.SessionTuning.local(32)
+    val spark = (if (targeted.exists(_._1 == 1000))
+      builder.config("spark.io.compression.codec", "zstd") else builder)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    activeSpark = spark
-
-    // ---- X1000 mode: three-decade rows only, separate artifact ----
-    // SPARK_GRAFT_SCALE_X1000=<names>: run ONLY the sf0.1 baseline
-    // (min-of-3) and the x1000 measurement (min-of-2) for the named
-    // queries, synthesizing just the tables each touches, and write
-    // SCALE_CHECK_X1000.json — the repro-mode discipline applied to the
-    // third decade, so adding an x1000 row never requires (or clobbers)
-    // a full multi-hour SCALE_CHECK run.
-    sys.env.get("SPARK_GRAFT_SCALE_X1000") match {
-      case Some(spec) =>
-        runX1000(spark, baseDir, spec)
-        spark.stop()
-        return
-      case None =>
-    }
-    // ---- X100 mode: targeted two-decade refresh, separate artifact ----
-    sys.env.get("SPARK_GRAFT_SCALE_X100") match {
-      case Some(spec) =>
-        runX100(spark, baseDir, spec)
-        spark.stop()
-        return
-      case None =>
+    targeted.foreach { case (decade, spec) =>
+      runTargeted(spark, baseDir, decade, spec)
+      spark.stop()
+      return
     }
 
-    synthesize(spark, baseDir, outDir, reps)
-    // sanity: the 10x documents table really is reps x the base
-    val nBase = spark.read.parquet(s"$baseDir/documents.parquet").count()
-    val nBig = spark.read.parquet(s"$outDir/documents.parquet").count()
-    require(nBig == reps * nBase, s"synthesis wrong: $nBig != $reps*$nBase")
-
-    val runTargets = onlyFilter match {
-      case Some(f) =>
-        val t = allTargets.filter(f)
-        if (t.isEmpty && X100Targets.filter(f).isEmpty) {
-          System.err.println("[scale] SPARK_GRAFT_SCALE_ONLY matched zero targets")
-          sys.exit(2)
-        }
-        System.err.println(s"[scale] SPARK_GRAFT_SCALE_ONLY matched: ${t.mkString(", ")}")
-        t
-      case None => allTargets
-    }
-
-    // untimed warmup at both scales: tables, codegen, memoized fixtures
-    for ((dir, mult) <- Seq(baseDir -> 1, outDir -> reps)) {
-      (FactKeys.keys.toSeq ++ DimTables).foreach { t =>
-        spark.read.parquet(s"$dir/$t.parquet").count()
-      }
-      runTargets.foreach { name =>
-        val t0 = System.nanoTime()
-        runTarget(spark, name, dir, mult)
-        System.err.println(f"[scale] warmup $dir $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-    }
-
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
-    val (small, shufS) = timedPasses(baseDir, mult = 1, passes = 3, meter,
-      runTargets)
-    val (big, shufB) = timedPasses(outDir, mult = reps, passes = 2, meter,
-      runTargets)
+    // SPARK_GRAFT_SCALE_ONLY=<comma-separated name prefixes>: the
+    // single-query reproduction switch (Bench's SPARK_GRAFT_BENCH_ONLY,
+    // applied to scale rows) — time only matching targets and write to
+    // SCALE_CHECK_REPRO.json instead of SCALE_CHECK.json, so a repro run
+    // never clobbers the full artifact. Diagnostics and notes are skipped
+    // under the filter.
+    val only = Bench.onlyMatching("SPARK_GRAFT_SCALE_ONLY", "scale", allTargets)
+    val runTargets = only.getOrElse(allTargets)
+    val x10 = runDecade(spark, baseDir, outDir, reps, runTargets, tables = None)
 
     // repro mode: filtered rows only, no diagnostics, separate artifact —
     // never clobbers the full SCALE_CHECK.json
-    onlyFilter.foreach { f =>
-      val entries = runTargets.map { name =>
-        val (t1, t10) = (small(name), big(name))
-        val slope = math.log(t10 / t1) / math.log(reps.toDouble)
-        val (s1, s10) = (shufS(name), shufB(name))
-        val bSlope =
-          if (s1 > 0 && s10 > 0) math.log(s10.toDouble / s1) / math.log(reps.toDouble)
-          else 0.0
-        f""""$name":{"sf01_sec":$t1%.3f,"x10_sec":$t10%.3f,"slope":$slope%.3f,""" +
-          f""""shuffle_sf01_mb":${s1 / 1e6}%.1f,"shuffle_x10_mb":${s10 / 1e6}%.1f,"shuffle_slope":$bSlope%.3f}"""
-      }
+    if (only.isDefined) {
       val json =
-        s"""{"repro":true,"reps":$reps,"base":"$baseDir","queries":{${entries.mkString(",")}}}"""
-      println(json)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(
-        s"${sys.props("user.dir")}/SCALE_CHECK_REPRO.json"), json + "\n")
+        s"""{"repro":true,"reps":$reps,"base":"$baseDir","queries":{${x10.rows(runTargets, withRatio = false)}}}"""
+      publish("SCALE_CHECK_REPRO.json", json)
       spark.stop()
       return
     }
@@ -744,8 +613,7 @@ object ScaleCheck {
     // IVF-PQ probe fraction: what share of the code store a query's
     // nprobe lists actually contain, measured at both scales.
     def probeFraction(dir: String, mult: Int): (Double, Long, Long) = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.catalog.clearCache()
+      Materialize.purge(spark)
       val emb = graft.core.Tables.embeddings(spark, dir)
       val rows = graft.ops.Pq.probeStats(emb, emb.filter(col("vec_id") < 5),
           "vec_id", "embedding", iters = 2, nlist = 16 * mult,
@@ -761,8 +629,7 @@ object ScaleCheck {
     // Triangle census adjudication: wedges (data) vs oriented two-hop
     // candidates (engine) at both scales.
     def triDiag(dir: String): (Long, Long, Long, Long) = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.catalog.clearCache()
+      Materialize.purge(spark)
       val r = graft.queries.GraphPack.trianglesDiag(spark, dir).collect().head
       (r.getAs[Long]("n_wedges"), r.getAs[Long]("n_candidates"),
        r.getAs[Long]("n_oriented_edges"), r.getAs[Long]("max_oriented_outdeg"))
@@ -771,16 +638,8 @@ object ScaleCheck {
     val (wB, cB, eB, mB) = triDiag(outDir)
 
     // ---- 100x extrapolation set ----
-    val out100 = s"${sys.props("user.dir")}/target/scale100"
-    val reps100 = 100
-    synthesize(spark, baseDir, out100, reps100)
-    X100Targets.foreach { name =>
-      val t0 = System.nanoTime()
-      runTarget(spark, name, out100, reps100)
-      System.err.println(f"[scale] warmup x100 $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
-    val (huge, shufH) = timedPasses(out100, mult = reps100, passes = 2,
-      meter, X100Targets)
+    val x100 = runDecade(spark, baseDir, s"${sys.props("user.dir")}/target/scale100",
+      100, X100Targets, tables = None, base = Some(x10.base))
 
     // ---- x1000 probes: THREE decades for documents-only flagships.
     // pl_dedup_corpus (r18, VERDICT r17 item 7): its drop list
@@ -793,84 +652,37 @@ object ScaleCheck {
     // synthesis replicates documents alone — ~600 MB of parquet at
     // x1000, 5M documents with replica-disjoint token spaces. Same
     // purge + min-of-2 protocol as x100.
-    val out1000 = s"${sys.props("user.dir")}/target/scale1000"
-    val reps1000 = 1000
     val x1000Targets = Seq("pl_dedup_corpus", "dd_line_dedup")
-    synthesize(spark, baseDir, out1000, reps1000, Some(Seq("documents")))
-    x1000Targets.foreach { name =>
-      val t0 = System.nanoTime()
-      runTarget(spark, name, out1000, reps1000)
-      System.err.println(
-        f"[scale] warmup x1000 $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
-    val (huge1000, shufK) = timedPasses(out1000, mult = reps1000, passes = 2,
-      meter, x1000Targets)
+    val x1000 = runDecade(spark, baseDir, s"${sys.props("user.dir")}/target/scale1000",
+      1000, x1000Targets, tables = Some(Seq("documents")), base = Some(x10.base))
 
     // dd_simhash's pair count sits on a threshold cliff (most pairs land at
     // hamming == maxHamming), so publish the full hamming distribution at
     // both scales — future runs can then separate a data-volume shift
     // (histogram scales uniformly) from an engine regression mechanically.
     def hammingHist(dir: String): String =
-      SparkEntry.queries("dd_simhash")(activeSpark, dir)
+      SparkEntry.queries("dd_simhash")(spark, dir)
         .groupBy(col("hamming")).count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
         .map { case (h, n) => s""""$h":$n""" }.mkString("{", ",", "}")
     val hist = s""""simhash_hamming_hist":{"sf01":${hammingHist(baseDir)},"x10":${hammingHist(outDir)}}"""
 
-    val entries = allTargets.map { name =>
-      val (t1, t10) = (small(name), big(name))
-      val ratio = t10 / t1
-      val slope = math.log(ratio) / math.log(reps.toDouble)
-      // shuffle-bytes slope: the data-movement scaling law. Guard the log
-      // against zero-shuffle queries (fully map-side / broadcast plans).
-      val (s1, s10) = (shufS(name), shufB(name))
-      val bSlope =
-        if (s1 > 0 && s10 > 0) math.log(s10.toDouble / s1) / math.log(reps.toDouble)
-        else 0.0
-      f""""$name":{"sf01_sec":$t1%.3f,"x10_sec":$t10%.3f,"ratio":$ratio%.2f,"slope":$slope%.3f,""" +
-        f""""shuffle_sf01_mb":${s1 / 1e6}%.1f,"shuffle_x10_mb":${s10 / 1e6}%.1f,"shuffle_slope":$bSlope%.3f}"""
-    }
-    val totalS = allTargets.map(small).sum
-    val totalB = allTargets.map(big).sum
-    val x100Entries = X100Targets.map { name =>
-      val (t1, t100) = (small(name), huge(name))
-      val ratio = t100 / t1
-      val slope = math.log(ratio) / math.log(reps100.toDouble)
-      val (s1, s100) = (shufS(name), shufH(name))
-      val bSlope =
-        if (s1 > 0 && s100 > 0)
-          math.log(s100.toDouble / s1) / math.log(reps100.toDouble)
-        else 0.0
-      f""""$name":{"sf01_sec":$t1%.3f,"x100_sec":$t100%.3f,"ratio":$ratio%.2f,"slope":$slope%.3f,""" +
-        f""""shuffle_sf01_mb":${s1 / 1e6}%.1f,"shuffle_x100_mb":${s100 / 1e6}%.1f,"shuffle_slope":$bSlope%.3f}"""
-    }
+    val totalS = allTargets.map(x10.base.sec).sum
+    val totalB = allTargets.map(x10.big.sec).sum
     val triNote =
       f""""gr_triangles":"adjudication (r11 weak #1), MEASURED: wedges (sum d(d-1)/2 over the even-part co-purchase graph) grow ${wS}%d -> ${wB}%d at 10x (${wB.toDouble / wS}%.1fx) and the oriented two-hop candidates the census join actually materializes grow ${cS}%d -> ${cB}%d (${cB.toDouble / cS}%.1fx) - BOTH LINEAR (the replica-disjoint synthesis adds no densification; r11 hypothesized densification and the measurement refutes it); oriented edges ${eS}%d -> ${eB}%d, max oriented out-degree ${mS}%d -> ${mB}%d, far below sqrt(m), so the degree-ordered orientation admits exactly linear candidate volume. The superlinear shuffle-BYTES slope is therefore a PLAN TRANSITION, not candidate growth: at sf0.1 the oriented edge table is broadcast-sized and both census joins run as broadcast probes (~zero shuffle), at 10x it outgrows the broadcast threshold and the (linear) candidate stream pays SMJ shuffle bytes it paid nothing for at the base scale - the same broadcast->SMJ log-slope amplification documented in the dd_semantic caveat; wall slope stays sub-linear. DECADE-OVER-DECADE (r17): candidate exchange bytes measured linear once both scales sit past the transition (r17: 828.9 -> 8373.7 MB for 10x data), so the sf0.1-anchored slope overstates 1000x behavior. SINCE r19 these rows measure the PACKED single-long probe key on every decade: gr_report/gr_triangles run over memoized dense-id-compacted edge snapshots (Graphs.denseIdMap + remapDense), so the 1e9 replica stride no longer pushes ids past the 31-bit packing gate - the r17/r18 rows measured the unpacked worst case, r19 rows the production packed shape (id-bijection-invariant counts, parity law in GraphsSpec)""""
     val reportNote =
-      """"gr_report":"packed-key adjudication (r19, tools/DiagReportShuffle same-entropy A/B at x10): the single-long packing HALVES the pre-compression exchange payload but COMPRESSED shuffle bytes are data-dependent - on the bipartite fulfillment graph's key-only reciprocity exchange, two dense-id columns LZ4-compress to 140.8 MB vs 191.9 MB packed (+36 pct: two sparse longs carry ~10 zero bytes/row the codec collapses; the packed long interleaves both varying fields into 8 high-entropy bytes), wall neutral; on the triangle census's wedge probe the packed key measures 773.3 MB vs 882.6 MB two-column (-12 pct) with wall slightly better. The packed gate stays: it halves UNCOMPRESSED exchange-buffer memory and serialization CPU (what a 1000-executor shuffle actually pressures) at neutral-or-better wall, and the r19 x10 wall drop (14.1 -> 9.1 s) comes from the memoized dense snapshot removing edge extraction from the timed path""""
+      """"gr_report":"packed-key adjudication (r19 same-entropy A/B at x10 by tools/DiagReportShuffle.scala, a one-off probe since deleted - see git history): the single-long packing HALVES the pre-compression exchange payload but COMPRESSED shuffle bytes are data-dependent - on the bipartite fulfillment graph's key-only reciprocity exchange, two dense-id columns LZ4-compress to 140.8 MB vs 191.9 MB packed (+36 pct: two sparse longs carry ~10 zero bytes/row the codec collapses; the packed long interleaves both varying fields into 8 high-entropy bytes), wall neutral; on the triangle census's wedge probe the packed key measures 773.3 MB vs 882.6 MB two-column (-12 pct) with wall slightly better. The packed gate stays: it halves UNCOMPRESSED exchange-buffer memory and serialization CPU (what a 1000-executor shuffle actually pressures) at neutral-or-better wall, and the r19 x10 wall drop (14.1 -> 9.1 s) comes from the memoized dense snapshot removing edge extraction from the timed path""""
     val knnNote =
       """"gr_knn_labelprop":"the GATED query builds its 5-NN edges by DELIBERATE brute-force O(N^2) quantized-L2 (its doc declares the swap: at production scale the same edges come from the ANN index family) so the oracle can replay every pair; a slope row over it would measure the fixture's designed quadratic pair growth. The scaled twin (GraphPack.knnLabelPropScaled) keeps the identical sub-graph, seed set, propagate iterations and agreement output and swaps only the edge build for the production cluster-bucketed kNN under the k-with-N sizing rule (4*mult clusters over the vec_id-even half, constant ~250 vectors per cluster) - the same scaled-twin discipline as dd_semantic and ann_ivfpq""""
     val pqNote =
       f""""ann_ivfpq":"sizing discipline: nlist scales with N (16 -> ${16 * reps}%d at 10x) holding inverted-list size constant, nprobe with nlist (4 -> ${4 * reps}%d) holding the probed fraction ~25 pct; MEASURED probe fraction of the code store per query: ${100 * pfS}%.1f pct at sf0.1 (avg ${pfScanS}%d of ${pfTotS}%d codes), ${100 * pfB}%.1f pct at 10x (avg ${pfScanB}%d of ${pfTotB}%d codes). The timed query retrains coarse+codebooks in-plan by design (the driver gate covers training); ann_pq_persisted is the deployment shape whose store build is memoized in warmup, so its row isolates the code-store scan + broadcast-ADC + bounded-heap search path""""
     val json =
-      s"""{"reps":$reps,"base":"$baseDir","protocol":"min-of-3 at sf0.1, min-of-2 at 10x, untimed warmup per scale, local[32] shuffle=32 at both scales; shuffle bytes sampled on pass 1; cache manager purged before every timed query (r11) so persist()-ing operators pay their build stage cold; timed action is a NOOP-SINK FULL MATERIALIZATION since r12, not count() - count() let Catalyst prune projections and eliminate unique-key left joins, so pre-r12 rows for plans with those shapes (gr_pagerank, labelprop, scoring left-joins, pure-projection tx rows) measured a collapsed plan; r12 numbers are the honest re-baseline and are NOT comparable to earlier files","notes":{"dd_simhash":"output-pair count is threshold-cliff sensitive (75% of pairs sit at hamming exactly 3), so each replica's independent token-hash draw moves borderline mass across the cutoff: measured per-replica pairs 11.6k-123k around replica 0's 15.2k. The elevated slope is TRUE near-dup volume in the synthesized data, not engine cost growth; the quadratic random-collision candidate term was separately measured and fixed (blocks=5 generalized Manku banding: 23.3M -> 7.7M candidates at 10x)","dd_semantic":"k scales with N (k=8 at sf0.1, k=80 at 10x) per the SemDeDup sizing rule k ~ N/1e4..1e5 (Abbas et al. 2023) - the same rule the operator's maxClusterSize gate enforces - holding per-cluster size constant so the slope measures engine cost, not the data's designed O(sum c^2) pair growth under a fixed k. dd_inc_semantic is the in-memory twin of the gated query (fit on history, frozen-centroid batch assignment, history+batch drop joins) without the snapshot-index round-trip. Shuffle-slope caveat for this family: absolute shuffle volumes are sub-MB at BOTH scales (the sf0.1 run broadcast-joins everything), so the log-slope numerically amplifies an AQE broadcast->SMJ plan transition; read the absolute MB columns, not the slope, when sf01 volume is ~0","op_type_fuzz":"width-stable since r15: the query derives its digit strings from pmod(l_orderkey, 1e9) - the identity at every gated scale (oracle untouched) - so the replica*1e9 key offset no longer widens the per-CHARACTER parse columns from 6 to 10 digits; the r14 adjudication traced the table's only >1 slope (1.02) to exactly that synthesis artifact. Expected and measured: ~linear, tracking op_dataset_type2 (same parse engine, width-stable fixture strings, slope ~0.98)",$triNote,$reportNote,$pqNote,$knnNote},"queries":{${entries.mkString(",")}},""" +
+      s"""{"reps":$reps,"base":"$baseDir","protocol":"min-of-3 at sf0.1, min-of-2 at 10x, untimed warmup per scale, local[32] shuffle=32 at both scales; shuffle bytes sampled on pass 1; cache manager purged before every timed query (r11) so persist()-ing operators pay their build stage cold; timed action is a NOOP-SINK FULL MATERIALIZATION since r12, not count() - count() let Catalyst prune projections and eliminate unique-key left joins, so pre-r12 rows for plans with those shapes (gr_pagerank, labelprop, scoring left-joins, pure-projection tx rows) measured a collapsed plan; r12 numbers are the honest re-baseline and are NOT comparable to earlier files","notes":{"dd_simhash":"output-pair count is threshold-cliff sensitive (75% of pairs sit at hamming exactly 3), so each replica's independent token-hash draw moves borderline mass across the cutoff: measured per-replica pairs 11.6k-123k around replica 0's 15.2k. The elevated slope is TRUE near-dup volume in the synthesized data, not engine cost growth; the quadratic random-collision candidate term was separately measured and fixed (blocks=5 generalized Manku banding: 23.3M -> 7.7M candidates at 10x)","dd_semantic":"k scales with N (k=8 at sf0.1, k=80 at 10x) per the SemDeDup sizing rule k ~ N/1e4..1e5 (Abbas et al. 2023) - the same rule the operator's maxClusterSize gate enforces - holding per-cluster size constant so the slope measures engine cost, not the data's designed O(sum c^2) pair growth under a fixed k. dd_inc_semantic is the in-memory twin of the gated query (fit on history, frozen-centroid batch assignment, history+batch drop joins) without the snapshot-index round-trip. Shuffle-slope caveat for this family: absolute shuffle volumes are sub-MB at BOTH scales (the sf0.1 run broadcast-joins everything), so the log-slope numerically amplifies an AQE broadcast->SMJ plan transition; read the absolute MB columns, not the slope, when sf01 volume is ~0","op_type_fuzz":"width-stable since r15: the query derives its digit strings from pmod(l_orderkey, 1e9) - the identity at every gated scale (oracle untouched) - so the replica*1e9 key offset no longer widens the per-CHARACTER parse columns from 6 to 10 digits; the r14 adjudication traced the table's only >1 slope (1.02) to exactly that synthesis artifact. Expected and measured: ~linear, tracking op_dataset_type2 (same parse engine, width-stable fixture strings, slope ~0.98)",$triNote,$reportNote,$pqNote,$knnNote},"queries":{${x10.rows(allTargets, withRatio = true)}},""" +
       f""""total_sf01_sec":$totalS%.3f,"total_x10_sec":$totalB%.3f,"total_slope":${math.log(totalB / totalS) / math.log(reps.toDouble)}%.3f,""" +
-      s""""x100":{"reps":$reps100,"protocol":"same session and purge discipline; untimed warmup at x100, then min-of-2; slopes are log(t_x100/t_sf01)/log(100) - two decades from sf0.1; gr_cluster_labelprop runs k=8*100=800 per the k-with-N sizing discipline","queries":{${x100Entries.mkString(",")}}},""" + {
-        val x1000Entries = x1000Targets.map { name =>
-          val (t1, tk) = (small(name), huge1000(name))
-          val slope = math.log(tk / t1) / math.log(reps1000.toDouble)
-          val (s1, sk) = (shufS(name), shufK(name))
-          val bSlope =
-            if (s1 > 0 && sk > 0)
-              math.log(sk.toDouble / s1) / math.log(reps1000.toDouble)
-            else 0.0
-          f""""$name":{"sf01_sec":$t1%.3f,"x1000_sec":$tk%.3f,"slope":$slope%.3f,"shuffle_sf01_mb":${s1 / 1e6}%.1f,"shuffle_x1000_mb":${sk / 1e6}%.1f,"shuffle_slope":$bSlope%.3f}"""
-        }
-        s""""x1000":{"reps":$reps1000,"protocol":"documents-only synthesis (the one table these queries touch), same purge + min-of-2; slope is log(t_x1000/t_sf01)/log(1000) - THREE decades from sf0.1","queries":{${x1000Entries.mkString(",")}}}}"""
-      }
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"${sys.props("user.dir")}/SCALE_CHECK.json"), json + "\n")
+      s""""x100":{"reps":${x100.reps},"protocol":"same session and purge discipline; untimed warmup at x100, then min-of-2; slopes are log(t_x100/t_sf01)/log(100) - two decades from sf0.1; gr_cluster_labelprop runs k=8*100=800 per the k-with-N sizing discipline","queries":{${x100.rows(X100Targets, withRatio = true)}}},""" +
+      s""""x1000":{"reps":${x1000.reps},"protocol":"documents-only synthesis (the one table these queries touch), same purge + min-of-2; slope is log(t_x1000/t_sf01)/log(1000) - THREE decades from sf0.1","queries":{${x1000.rows(x1000Targets, withRatio = false)}}}}"""
+    publish("SCALE_CHECK.json", json)
     spark.stop()
   }
 }

@@ -1,9 +1,9 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Cols.{q => Q}
-import graft.core.SnapshotStore
+import graft.core.{JsonLite, SnapshotStore}
 import graft.ops.{CsvExport, CsvExportConfig}
 
 /** Shell-style introspection over a snapshot store — the reference's daily
@@ -275,7 +275,7 @@ object Shell {
     val rows = Files.list(root).iterator().asScala
       .filter(p => Files.exists(p.resolve("setup.json"))).toSeq
       .map { p =>
-        val m = graft.core.JsonLite.parse(Files.readString(p.resolve("setup.json")))
+        val m = JsonLite.parse(Files.readString(p.resolve("setup.json")))
           .asInstanceOf[Map[String, Any]]
         (m.getOrElse("method", "?").toString, m.getOrElse("version", "?").toString)
       }
@@ -303,13 +303,13 @@ object Shell {
       e.map(u.entryJson).getOrElse("null")
     path.split("/").toList match {
       case "list" :: Nil =>
-        u.keys.map(u.jsonString).mkString("[", ",", "]") + "\n"
+        u.keys.map(JsonLite.quote).mkString("[", ",", "]") + "\n"
       case user :: build :: "latest" :: Nil =>
         entry(u.latest(s"$user/$build")) + "\n"
       case user :: build :: "first" :: Nil =>
         entry(u.first(s"$user/$build")) + "\n"
       case user :: build :: "since" :: ts :: Nil =>
-        u.since(s"$user/$build", ts).map(e => u.jsonString(e.timestamp))
+        u.since(s"$user/$build", ts).map(e => JsonLite.quote(e.timestamp))
           .mkString("[", ",", "]") + "\n"
       case user :: build :: ts :: Nil =>
         val key = s"$user/$build"
@@ -417,11 +417,8 @@ object Shell {
 
   def main(argv: Array[String]): Unit = {
     require(argv.nonEmpty, "usage: Shell ds|cat|grep ...")
-    val spark = graft.core.SessionTuning.tune(SparkSession.builder()
+    val spark = graft.core.SessionTuning.local(4)
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try argv(0) match {

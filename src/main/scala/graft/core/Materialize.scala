@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The honest benchmark action. `df.count()` is NOT one: Catalyst prunes
   * every column a count does not need (so a projection of expensive
@@ -15,4 +15,14 @@ import org.apache.spark.sql.DataFrame
 object Materialize {
   def full(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
+
+  /** Drops every persisted RDD/Dataset and cache-manager entry, so the
+    * next timed action pays its plan's build stages cold instead of
+    * reusing an earlier run's cache (entries are keyed on the logical
+    * plan, so a repeated query silently hits them).
+    */
+  def purge(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    spark.catalog.clearCache()
+  }
 }

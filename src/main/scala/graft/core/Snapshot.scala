@@ -714,15 +714,7 @@ object ZoneMapOrder {
   * jars on the classpath) and the format trivially stable.
   */
 object MetaJson {
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  import JsonLite.{quote => q}
   private def opt(o: Option[String]): String = o.map(q).getOrElse("null")
 
   def render(m: SnapshotMeta): String = {
@@ -773,6 +765,20 @@ object MetaJson {
   */
 object JsonLite {
   def parse(s: String): Any = new P(s).value()
+
+  /** The one JSON string writer: quotes `s`, escaping quote, backslash and
+    * every control character (< 0x20) — a tab or CR left raw would make a
+    * strict JSON reader (Python's json.load) reject the whole file.
+    */
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
   private final class P(s: String) {
     private var i = 0
     private def ws(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1

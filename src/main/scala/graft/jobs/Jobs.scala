@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.core.{JsonLite, Snapshot, SnapshotStore}
+import graft.core.JsonLite.quote
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 import scala.jdk.CollectionConverters._
@@ -190,15 +191,8 @@ final class JobRunner(
     f"j-${(used.maxOption.getOrElse(-1) + 1)}%04d"
   }
 
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
   private def jmap(m: Map[String, String]): String =
-    m.toSeq.sorted.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
+    m.toSeq.sorted.map { case (k, v) => s"${quote(k)}:${quote(v)}" }
       .mkString("{", ",", "}")
 
   /** Build or reuse: returns the finished job satisfying `req`, running
@@ -216,7 +210,7 @@ final class JobRunner(
     val dir = jobDir(jobid)
     Files.createDirectories(dir)
     Files.writeString(dir.resolve("setup.json"),
-      s"""{"method":${jstr(req.method)},"version":${jstr(req.version)},""" +
+      s"""{"method":${quote(req.method)},"version":${quote(req.version)},""" +
       s""""options":${jmap(req.options)},"inputs":${jmap(req.inputs)}}""")
     val ctx = new JobContext(store, jobid, req, dir)
     val outputs = body(ctx)

@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.core.JsonLite
+import graft.core.JsonLite.quote
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
@@ -33,14 +34,6 @@ final class Urd(val path: String) {
 
   // replayed state: per key, timestamp -> entry (ghosted entries removed)
   private var dbm: Map[String, Map[String, UrdEntry]] = replay()
-
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   private def replay(): Map[String, Map[String, UrdEntry]] = {
     var state = Map.empty[String, Map[String, UrdEntry]]
@@ -94,11 +87,8 @@ final class Urd(val path: String) {
       s"urd: $key already has an entry at $timestamp")
     require(existing.keys.forall(_ < timestamp),
       s"urd: $key timestamps must increase (have ${existing.keys.toSeq.sorted.lastOption}, adding $timestamp)")
-    val jl = joblist.map { case (n, j) => s"[${jstr(n)},${jstr(j)}]" }
-      .mkString("[", ",", "]")
-    append(s"""{"action":"add","key":${jstr(key)},"timestamp":${jstr(timestamp)},""" +
-      s""""caption":${jstr(caption)},"joblist":$jl}""")
     val e = UrdEntry(key, timestamp, caption, joblist)
+    append(s"""{"action":"add",${entryJson(e).drop(1)}""")
     dbm = dbm.updated(key, existing.updated(timestamp, e))
     e
   }
@@ -148,19 +138,17 @@ final class Urd(val path: String) {
 
   /** Entry as the urd HTTP API's JSON shape (urd.py GET responses). */
   def entryJson(e: UrdEntry): String = {
-    val jl = e.joblist.map { case (n, j) => s"[${jstr(n)},${jstr(j)}]" }
+    val jl = e.joblist.map { case (n, j) => s"[${quote(n)},${quote(j)}]" }
       .mkString("[", ",", "]")
-    s"""{"key":${jstr(e.key)},"timestamp":${jstr(e.timestamp)},""" +
-      s""""caption":${jstr(e.caption)},"joblist":$jl}"""
+    s"""{"key":${quote(e.key)},"timestamp":${quote(e.timestamp)},""" +
+      s""""caption":${quote(e.caption)},"joblist":$jl}"""
   }
-
-  private[graft] def jsonString(s: String): String = jstr(s)
 
   /** Ghost all entries at or after `timestamp` (reference truncate:
     * urd.py:334-360 — entries stay in the log, replay drops them).
     */
   def truncate(key: String, timestamp: String): Unit = {
-    append(s"""{"action":"truncate","key":${jstr(key)},"timestamp":${jstr(timestamp)}}""")
+    append(s"""{"action":"truncate","key":${quote(key)},"timestamp":${quote(timestamp)}}""")
     dbm = dbm.updated(key,
       dbm.getOrElse(key, Map.empty).filter { case (t, _) => t < timestamp })
   }

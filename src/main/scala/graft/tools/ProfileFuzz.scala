@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Measures the whole-stage-codegen huge-method JIT cliff that
   * SessionTuning.HugeMethodLimit works around, using the widest parse
@@ -13,11 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object ProfileFuzz {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("profile-fuzz")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
+    val spark = graft.core.SessionTuning.local(32).appName("profile-fuzz")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -137,25 +137,12 @@ class GraphsSpec extends AnyFunSuite {
     // subplans reprint), so measure the runtime truth: stages submitted
     // for a fresh report() (the pre-r12 shape paid six separate
     // aggregate pipelines over the edge set).
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    spark.catalog.clearCache()
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(
-          st: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    graft.core.Materialize.purge(spark)
+    val n = graft.core.Measure.during(spark) {
       Graphs.report(e.toDF("src", "dst"), "src", "dst")
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .foreach(_.invoke(bus))
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(n.get() <= 12,
-      s"report() submitted ${n.get()} stages — the consolidation " +
+    }.stages
+    assert(n <= 12,
+      s"report() submitted $n stages — the consolidation " +
         "(one degree pass + one global agg + reciprocity) regressed")
   }
 

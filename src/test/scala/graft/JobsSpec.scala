@@ -114,4 +114,23 @@ class JobsSpec extends AnyFunSuite {
       u2.add("u/b", "2024-01-01", Seq("imp" -> "j-0009"))
     }
   }
+
+  test("JSON escaping round-trips through setup.json, urd.log and meta.json") {
+    // quote, backslash, newline, tab, CR and a C0 control: every class the
+    // one escaper (JsonLite.quote) rewrites
+    val hostile = "a\"b\\c\nd\te\rf\u0001g"
+    val root = tmpDir("jobs_json_roundtrip")
+    val store = new SnapshotStore(spark, s"$root/store")
+    val req = JobRequest("m" + hostile, hostile, Map(hostile -> hostile),
+      Map("in" -> hostile))
+    val a = new JobRunner(store, s"$root/jobs").build(req) { _ => Map("out" -> hostile) }
+    val hit = new JobRunner(store, s"$root/jobs").matchExact(req)
+    assert(hit.map(_.jobid).contains(a.jobid), "reopened runner must match setup.json exactly")
+    assert(hit.get.outputs == Map("out" -> hostile))
+    val u = new Urd(s"$root/urd.log")
+    val e = u.add("u/" + hostile, "2024-01-01", Seq(hostile -> hostile), caption = hostile)
+    assert(new Urd(s"$root/urd.log").get(e.key, e.timestamp).contains(e))
+    store.write(spark.range(3).toDF("k"), "rt", slices = 1, caption = hostile)
+    assert(new SnapshotStore(spark, s"$root/store").get("rt").meta.caption == hostile)
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.{Materialize, Measure}
 import graft.ops.PageRank
 import TestSpark.spark
 
@@ -176,27 +177,11 @@ class PageRankSpec extends AnyFunSuite {
     // marginal cost is CONSTANT (no prefix-chain recompute — that would
     // be super-linear) and bounded well under the edge-build depth (no
     // re-shuffle of the cached eDeg/nodes relations per round).
-    def stagesFor(iters: Int): Int = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.catalog.clearCache()
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onStageSubmitted(
-            s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-          n.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
+    def stagesFor(iters: Int): Long = {
+      Materialize.purge(spark)
+      Measure.during(spark) {
         PageRank.ranks(edges.toDF("src", "dst"), "src", "dst", iters).count()
-        // listenerBus is package-private; the reflective drain is the
-        // ScaleCheck pattern
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-          .foreach(_.invoke(bus))
-        n.get()
-      } finally spark.sparkContext.removeSparkListener(l)
+      }.stages
     }
     val s2 = stagesFor(2)
     val s6 = stagesFor(6)
@@ -237,26 +222,12 @@ class PageRankSpec extends AnyFunSuite {
     store.write(norm, "u", slices = 4,
       formatVersion = Some(ArtifactFormats.GraphEdges))
     def shuffleBytes(name: String, iters: Int): Long = {
-      s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      s.catalog.clearCache()
-      val n = new java.util.concurrent.atomic.AtomicLong
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            ev: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          n.addAndGet(ev.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-      s.sparkContext.addSparkListener(l)
-      try {
+      Materialize.purge(s)
+      Measure.during(s) {
         PageRank.ranksIndexed(
           store.readArtifact(name, ArtifactFormats.GraphEdges),
           iters = iters).count()
-        val sc = s.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-          .foreach(_.invoke(bus))
-        n.get()
-      } finally s.sparkContext.removeSparkListener(l)
+      }.shuffleBytes
     }
     // two contribution shuffles' worth of bytes: the unit the eliminated
     // edge exchange must exceed

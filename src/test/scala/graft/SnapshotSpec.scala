@@ -93,6 +93,24 @@ class SnapshotSpec extends AnyFunSuite {
       s"re-registered bucketed table must keep co-partitioning:\n$plan2")
   }
 
+  test("groupBy(hashlabel) over an unfiltered hashed chain: one group per key") {
+    // Two links hashed on the same key: each link's bucketed scan is
+    // hash-partitioned, but their Union is not — a Union that reported its
+    // children's partitioning let the aggregate skip its Exchange and count
+    // every key once per link (200 groups here, not 100).
+    val s = spark
+    import s.implicits._
+    val store = new SnapshotStore(s, tmpDir("snap_union"))
+    val day = (0 until 1000).map(i => (i.toLong % 100, i.toLong)).toDF("key", "v")
+    store.write(day, "un.0", hashlabel = Some("key"))
+    store.write(day, "un.1", hashlabel = Some("key"), previous = Some("un.0"))
+    val chain = store.iterateChain("un.1")
+    assert(chain.groupBy("key").count().count() == 100)
+    assert(chain.agg(countDistinct(col("key"))).head.getLong(0) == 100)
+    val counts = chain.groupBy("key").count().collect().map(_.getLong(1)).toSet
+    assert(counts == Set(20L), "every key appears 10 times per link")
+  }
+
   test("strange column names survive the snapshot layer (reference parity)") {
     val s = spark
     import s.implicits._

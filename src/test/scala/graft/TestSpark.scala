@@ -7,13 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = graft.core.SessionTuning.tune(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
+    val s = graft.core.SessionTuning.local(4).appName("graft-test")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
