@@ -41,7 +41,9 @@ import org.apache.spark.sql.types._
   *    (r17; like 16-bit PNG, no truncated raster is fabricated), and
   *    12-BIT extended-sequential gray (SOF1 — the DICOM shape) through
   *    [[jpeg12Stats]] with the 2^11 level shift and [0, 4095] clamp
-  *    (r17). Arithmetic coding and hierarchical frames return null.
+  *    (r17). Arithmetic coding (SOF9/SOF10/SOF11) decodes too; only
+  *    hierarchical frames return null. One segment walk, one block
+  *    walker and one IDCT serve every flavor ([[decodeJpeg]]).
   *  - WAV: integer PCM at 8 (unsigned, reported center-zeroed), 16, 24
   *    and 32 bits, G.711 µ-law/A-law, IEEE float32 (reported on the
   *    16-bit integer lattice: floor(f·2^15), a power-of-two scale so the
@@ -646,24 +648,7 @@ object MediaCodecHelper {
     */
   def png16ResizeNearest(bytes: Array[Byte], dstW: Int, dstH: Int): Array[Byte] = {
     val r = decodePng16(bytes)
-    if (r == null) return null
-    val out = new Array[Byte](dstW * dstH * r.bpp)
-    var y = 0
-    while (y < dstH) {
-      val sy = y * r.height / dstH
-      var x = 0
-      while (x < dstW) {
-        val sx = x * r.width / dstW
-        var c = 0
-        while (c < r.bpp) {
-          out((y * dstW + x) * r.bpp + c) = r.pix((sy * r.width + sx) * r.bpp + c)
-          c += 1
-        }
-        x += 1
-      }
-      y += 1
-    }
-    encodePng(new Raster(dstW, dstH, r.bpp, out), 0, depth = 16)
+    if (r == null) null else encodePng(resizeNearest(r, dstW, dstH), 0, depth = 16)
   }
 
   /** struct(width, height, channels, px_sum, px_min, px_max) over all
@@ -672,8 +657,12 @@ object MediaCodecHelper {
     * float-summation-order hazards), and mean is a trivial downstream
     * `px_sum / (width*height*channels)`.
     */
-  def pngStats(bytes: Array[Byte]): InternalRow = {
-    val r = decodePng(bytes)
+  def pngStats(bytes: Array[Byte]): InternalRow = rasterStats(decodePng(bytes))
+
+  /** struct(width, height, channels, px_sum, px_min, px_max) over every
+    * channel byte of an 8-bit raster; null for a null raster.
+    */
+  private def rasterStats(r: Raster): InternalRow = {
     if (r == null) return null
     var sum = 0L; var mn = 255; var mx = 0
     var i = 0
@@ -699,7 +688,14 @@ object MediaCodecHelper {
     */
   def pngResizeNearest(bytes: Array[Byte], dstW: Int, dstH: Int): Array[Byte] = {
     val r = decodePng(bytes)
-    if (r == null) return null
+    if (r == null) null else encodePng(resizeNearest(r, dstW, dstH))
+  }
+
+  /** Nearest-neighbor resize with the integer floor index map
+    * `sx = x·srcW/dstW`, copying whole `bpp`-byte pixels (so 16-bit
+    * samples move as big-endian pairs).
+    */
+  private def resizeNearest(r: Raster, dstW: Int, dstH: Int): Raster = {
     val out = new Array[Byte](dstW * dstH * r.bpp)
     var y = 0
     while (y < dstH) {
@@ -716,15 +712,29 @@ object MediaCodecHelper {
       }
       y += 1
     }
-    encodePng(new Raster(dstW, dstH, r.bpp, out))
+    new Raster(dstW, dstH, r.bpp, out)
   }
 
-  // ---------------- JPEG (baseline decode) ----------------
+  // ---------------- JPEG (ITU-T T.81) ----------------
+  //
+  // T.81 defines a JPEG stream as four independent choices, and the
+  // decoder is built the same way, one piece per choice:
+  //  - marker syntax: [[jWalk]] is the one segment walk. It parses DQT,
+  //    DHT, DAC, DRI, SOF and SOS into a [[JFrame]] and hands each scan
+  //    to the process that decodes it; every JPEG entry point runs it;
+  //  - entropy coder: canonical Huffman ([[JBits]]) or the Annex D QM
+  //    coder ([[JQm]]), one [[JCoder]] each, with one DC-difference and
+  //    one AC-first decode per coder;
+  //  - process: sequential, multi-scan and progressive DCT scans share
+  //    the block walker [[jScanBlocks]]; the two lossless coders share
+  //    [[jLosslessScan]]'s predictor and row loop;
+  //  - precision: [[JIdct]] takes its level shift and clamp from the
+  //    frame precision (8 or 12 bits).
 
   /** Zigzag index → natural raster position (row*8+col), ITU-T T.81
-    * Figure A.6. The fixture encoder in ops/Multimodal generates its own
-    * zigzag algorithmically — no shared table between test-data
-    * construction and production decode.
+    * Figure A.6. The fixture encoders in ops/Multimodal take their
+    * coefficients in zigzag order and never reorder them — no shared
+    * table between test-data construction and production decode.
     */
   private val JpegZigzag: Array[Int] = Array(
     0, 1, 8, 16, 9, 2, 3, 10,
@@ -843,167 +853,42 @@ object MediaCodecHelper {
     new JHuff(StdAcLumaCounts, StdAcLumaVals),
     new JHuff(StdAcChromaCounts, StdAcChromaVals))
 
-  /** MSB-first bit reader over entropy-coded data with FF00 unstuffing.
-    * Any non-stuffing marker hit mid-read throws (entropy data may contain
-    * any byte sequence only via stuffing; a bare marker there is corrupt
-    * or an unsupported layout). Restart markers are consumed only at the
-    * decoder's expected MCU boundaries via [[restart]].
-    */
-  private final class JBits(b: Array[Byte], var pos: Int, end: Int) {
-    private var buf = 0
-    private var cnt = 0
-    def bit(): Int = {
-      if (cnt == 0) {
-        if (pos >= end) throw JpegBail
-        val v = b(pos) & 0xff; pos += 1
-        if (v == 0xff) {
-          if (pos >= end) throw JpegBail
-          if ((b(pos) & 0xff) != 0x00) throw JpegBail
-          pos += 1
-        }
-        buf = v; cnt = 8
-      }
-      cnt -= 1
-      (buf >> cnt) & 1
-    }
-    def receive(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    /** Byte-align and consume the expected RSTn marker. */
-    def restart(idx: Int): Unit = {
-      cnt = 0
-      if (pos + 2 > end) throw JpegBail
-      if ((b(pos) & 0xff) != 0xff || (b(pos + 1) & 0xff) != (0xd0 + idx)) throw JpegBail
-      pos += 2
-    }
-  }
-
-  private def jDecodeSym(r: JBits, t: JHuff): Int = {
-    var code = 0; var l = 0
-    while (l < 16) {
-      code = (code << 1) | r.bit(); l += 1
-      if (t.maxc(l) >= 0 && code <= t.maxc(l))
-        return t.vals(t.vptr(l) + code - t.minc(l))
-    }
-    throw JpegBail
-  }
-
-  /** T.81 §F.2.2.1 EXTEND: map a `t`-bit magnitude to its signed value. */
-  private def jExtend(v: Int, t: Int): Int =
-    if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
+  // What each entry point decodes; selects the few per-process rules
+  // of the segment walk.
+  private final val KDct = 0 // 8-bit DCT raster (decodeJpeg)
+  private final val K12 = 1 // 12-bit sequential gray (decodeJpeg12)
+  private final val KLossless = 2 // lossless (decodeJpegLossless)
+  private final val KMeta = 3 // frame header only (jpegMeta)
 
   private final class JComp {
     var id = 0
     var h = 1; var v = 1; var tq = 0
     var td = 0; var ta = 0
-    var plane: Array[Byte] = null
-    var planeW = 0
     var pred = 0
-    // progressive only: full-image quantized coefficients, zigzag order
-    // per block, on the PADDED (MCU-aligned) block grid
+    // block grids: padded (MCU-aligned) bw×bh for interleaved scans and
+    // plane/coefficient addressing, real rw×rh (T.81 A.2.2) for the
+    // non-interleaved scans that only visit blocks covering samples
+    var bw = 0; var bh = 0
+    var rw = 0; var rh = 0
+    // buffered decode only: quantized coefficients, zigzag order per
+    // block, on the padded grid
     var coefs: Array[Int] = null
-    var bw = 0 // padded grid width in blocks (row stride)
-    var bh = 0 // padded grid height in blocks
-    var rw = 0 // real (non-interleaved) grid width in blocks
-    var rh = 0 // real grid height in blocks
+    // decoded samples on the padded grid: bytes at 8-bit precision,
+    // full-precision Ints at 12-bit
+    var plane: Array[Byte] = null
+    var plane12: Array[Int] = null
+    var planeW = 0
   }
 
-  /** Full baseline JPEG decode — Huffman entropy decode, dequantization,
-    * floating IDCT with deterministic rounding, 4:2:0/4:2:2/4:4:4 chroma
-    * replication upsample, integer YCbCr→RGB. Pure JVM, zero codec
-    * libraries: every piece is bounded public-spec work (ITU-T T.81),
-    * same pattern as the PNG inflate+unfilter path above.
-    *
-    * Envelope (null outside it — honest partial decoder, never garbage):
-    * SOF0/SOF1 (baseline/extended sequential, Huffman) in a single
-    * interleaved scan or split across multiple full-band non-interleaved
-    * scans, SOF2 progressive (spectral selection + successive
-    * approximation, Huffman, per the Annex G machinery below), AND the
-    * ARITHMETIC-coded frames SOF9 (extended sequential — single
-    * interleaved scan OR the non-interleaved multi-scan layout) and
-    * SOF10 (progressive: DC/AC first + refinement scans, per-scan
-    * statistics segments) — the T.81 Annex D QM-coder with the
-    * F.1.4.4/G.2 statistical models and DAC conditioning. 8-bit
-    * precision, 1 or 3 components, sampling factors 1 or 2, restart
-    * markers, 8- or 16-bit quant tables. Null only for 12-bit precision
-    * and lossless/hierarchical frames — lossless (SOF3/SOF11) and 12-bit
-    * gray (SOF1) decode at full precision through the dedicated
-    * [[jpegLosslessStats]] / [[jpeg12Stats]] paths, never through this
-    * 8-bit raster one. Hierarchical frames (Annex J) stay null — the
-    * one T.81 coding process with no mainstream decoder support either.
-    *
-    * Output: gray raster (bpp=1) for 1 component; interleaved RGB (bpp=3)
-    * for 3, converted with the fixed-point CCIR 601 constants
-    * (91881/22554/46802/116130 : 65536) and floor((x+32768)>>16) rounding
-    * so an oracle replays the exact integers.
+  /** What the segment walk has read so far: the tables, conditioning and
+    * restart interval in force, the frame header, the current scan's
+    * spectral/approximation parameters, and the multi-scan bookkeeping.
     */
-  def decodeJpeg(bytes: Array[Byte]): Raster = decodeJpeg(bytes, false)
-
-  /** As [[decodeJpeg]], with `impliedStdTables` preloading the Annex K
-    * typical Huffman tables into slots 0 (luma) and 1 (chroma) — the
-    * OpenDML convention for DHT-less MJPEG frames. In-stream DHT
-    * segments still override the implied tables.
-    */
-  def decodeJpeg(bytes: Array[Byte], impliedStdTables: Boolean): Raster = {
-    if (bytes == null || bytes.length < 4) return null
-    try decodeJpeg0(bytes, impliedStdTables)
-    catch { case _: RuntimeException => null }
-  }
-
-  /** True when the marker walk finds no DHT segment before the first SOS
-    * — the precondition for the OpenDML implied-standard-tables
-    * convention. (DHT between later scans of a multi-scan frame is fine:
-    * in-stream tables override the implied ones scan by scan.) Bails
-    * false on any malformed walk so the caller never retries garbage.
-    */
-  private def jpegLacksDhtBeforeScan(b: Array[Byte]): Boolean = {
-    if (b == null || b.length < 4 ||
-        (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return false
-    var off = 2
-    while (off + 1 < b.length) {
-      if ((b(off) & 0xff) != 0xff) return false
-      var m = b(off + 1) & 0xff
-      while (m == 0xff && off + 2 < b.length) { off += 1; m = b(off + 1) & 0xff }
-      off += 2
-      m match {
-        case 0xd8 | 0x01 => // standalone, no length
-        case x if x >= 0xd0 && x <= 0xd7 => // RSTn: standalone
-        case 0xc4 => return false // a DHT exists: nothing to imply
-        case 0xda => return true // reached the scan with no DHT seen
-        case 0xd9 => return false // EOI before any scan
-        case _ =>
-          if (off + 2 > b.length) return false
-          val len = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-          if (len < 2 || off + len > b.length) return false
-          off += len
-      }
-    }
-    false
-  }
-
-  /** Strict decode first; when that fails AND the stream carries no DHT
-    * before its first scan, retry with the Annex K implied standard
-    * tables — so a frame extracted from a DHT-less MJPEG AVI (which
-    * [[AviCodecHelper.mjpegStats]] decodes via the same convention)
-    * composes with the still-image stats/resize path instead of nulling.
-    * A stream that HAS its own DHT never falls back: retrying it under
-    * different tables could "succeed" with garbage pixels.
-    */
-  def decodeJpegAuto(bytes: Array[Byte]): Raster = {
-    val r = decodeJpeg(bytes, false)
-    if (r != null) r
-    else if (jpegLacksDhtBeforeScan(bytes)) decodeJpeg(bytes, true)
-    else null
-  }
-
-  private def decodeJpeg0(b: Array[Byte], impliedStdTables: Boolean): Raster = {
-    if ((b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return null
+  private final class JFrame(val kind: Int, impliedStdTables: Boolean) {
     val qt = Array.ofDim[Int](4, 64) // zigzag order
-    // a slot is usable only after a DQT populated it (mirrors the
-    // dcT/acT null checks): without this, a stream carrying DHT but no
-    // DQT dequantizes every coefficient against an all-zero table and
+    // a slot is usable only after a DQT populated it (mirrors the null
+    // Huffman slots): without this, a stream carrying DHT but no DQT
+    // dequantizes every coefficient against an all-zero table and
     // fabricates a constant raster instead of the honest null
     val qtDef = new Array[Boolean](4)
     val dcT = new Array[JHuff](4)
@@ -1012,288 +897,510 @@ object MediaCodecHelper {
       dcT(0) = StdDcHuff(0); dcT(1) = StdDcHuff(1)
       acT(0) = StdAcHuff(0); acT(1) = StdAcHuff(1)
     }
-    var w = 0; var h = 0
-    var comps: Array[JComp] = null
-    var restartInt = 0
-    var progressive = false
-    var arith = false // SOF9: QM-coded extended sequential
     // DAC conditioning (T.81 B.2.4.3), defaults per F.1.4.4.1.2/F.1.4.4.2
-    val dcCondL = Array.fill(4)(0)
-    val dcCondU = Array.fill(4)(1)
-    val acCondK = Array.fill(4)(5)
-    var multiScan = false // sequential (SOF0/1) frame split across scans
-    var seqSeen = Set.empty[Int] // component ids already scanned
-    var anyScan = false
+    val condL = Array.fill(4)(0)
+    val condU = Array.fill(4)(1)
+    val condK = Array.fill(4)(5)
+    var restartInt = 0
+    var sof = 0 // frame marker, 0 before any SOF
+    var precision = 0; var w = 0; var h = 0
+    var comps: Array[JComp] = null
+    var hmax = 1; var vmax = 1; var mcusX = 0; var mcusY = 0
+    var ss = 0; var se = 0; var ah = 0; var al = 0 // current scan
+    var multiScan = false // sequential frame split across scans
+    var seqSeen = Set.empty[Int] // multi-scan: component ids scanned
+    var anyScan = false // a buffered scan has been decoded
+    var scanSeen = false // the walk reached an SOS marker
+    var dhtSeen = false // a DHT marker came before the first SOS
+
+    def progressive: Boolean = sof == 0xc2 || sof == 0xca
+    def arith: Boolean = sof == 0xc9 || sof == 0xca || sof == 0xcb
+  }
+
+  private def be16(b: Array[Byte], o: Int): Int =
+    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
+
+  /** Run the segment walk for `f.kind`; any bounds or table failure
+    * inside the decode is the honest null.
+    */
+  private def jRun(bytes: Array[Byte], f: JFrame): AnyRef =
+    try jWalk(bytes, f)
+    catch { case _: RuntimeException => null }
+
+  /** The one T.81 marker-segment walk (Annex B) behind every JPEG entry
+    * point. Table and header segments go into `f`; at SOS the scan is
+    * decoded by the process `f.kind` selects, and a buffered frame
+    * finishes at EOI. Returns the entry point's result, or null for a
+    * stream outside its envelope. Bounds-checked throughout: entropy data
+    * is never scanned for markers, and adversarial lengths cannot read
+    * out of range.
+    *
+    * The per-process rules are few and local: a lossless frame has no
+    * quant tables (DQT is skipped) and no restart marker outside its
+    * interval; only the DCT path skips the JPG extension marker (C8); the
+    * 12-bit path has no DAC; [[jpegMeta]] reads only up to the first SOF
+    * and never parses table segments.
+    */
+  private def jWalk(b: Array[Byte], f: JFrame): AnyRef = {
+    if (b == null || b.length < 4 ||
+        (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return null
     var off = 2
     while (off + 1 < b.length) {
       if ((b(off) & 0xff) != 0xff) return null
+      // fill bytes: any number of FFs may pad before the marker id
       var m = b(off + 1) & 0xff
       while (m == 0xff && off + 2 < b.length) { off += 1; m = b(off + 1) & 0xff }
       off += 2
       def segLen: Int = {
         if (off + 2 > b.length) throw JpegBail
-        val len = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
+        val len = be16(b, off)
         if (len < 2 || off + len > b.length) throw JpegBail
         len
       }
       m match {
         case 0xd8 | 0x01 => // stray SOI / TEM: standalone
-        case x if x >= 0xd0 && x <= 0xd7 => // RSTn outside scan: ignore
-        case 0xd9 => // EOI: buffered (progressive / multi-scan) decode
-          // completes here. A progressive stream may legitimately stop
-          // after any scan (partial rendering is the format's point); a
-          // sequential multi-scan stream missing a component is corrupt.
-          if (progressive && anyScan)
-            return jProgFinish(w, h, comps, qt)
-          if (multiScan && seqSeen.size == comps.length)
-            return jProgFinish(w, h, comps, qt)
-          return null // EOI before any scan / incomplete sequential
-        case 0xdb => // DQT: one or more tables
+        case x if x >= 0xd0 && x <= 0xd7 => // RSTn outside a scan
+          if (f.kind == KLossless) return null
+        case 0xd9 => return jEoi(f)
+        case _ if f.kind == KMeta =>
+          if (m == 0xda) return null // SOS before any SOF
+          if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc)
+            return jMetaRow(b, off)
+          off += segLen
+        case 0xdb if f.kind != KLossless => // DQT: one or more tables
           val len = segLen
-          var p = off + 2; val stop = off + len
-          while (p < stop) {
-            val pq = (b(p) & 0xff) >> 4; val tq = b(p) & 0x0f
-            if (pq > 1 || tq > 3) throw JpegBail
-            p += 1
-            val step = if (pq == 0) 1 else 2
-            if (p + 64 * step > stop) throw JpegBail
-            var i = 0
-            while (i < 64) {
-              qt(tq)(i) =
-                if (pq == 0) b(p + i) & 0xff
-                else ((b(p + 2 * i) & 0xff) << 8) | (b(p + 2 * i + 1) & 0xff)
-              if (qt(tq)(i) == 0) throw JpegBail
-              i += 1
-            }
-            qtDef(tq) = true
-            p += 64 * step
-          }
+          jDqt(b, off + 2, off + len, f)
           off += len
         case 0xc4 => // DHT: one or more tables
+          if (!f.scanSeen) f.dhtSeen = true
           val len = segLen
-          var p = off + 2; val stop = off + len
-          while (p < stop) {
-            val tc = (b(p) & 0xff) >> 4; val th = b(p) & 0x0f
-            if (tc > 1 || th > 3) throw JpegBail
-            p += 1
-            if (p + 16 > stop) throw JpegBail
-            val counts = Array.tabulate(16)(i => b(p + i) & 0xff)
-            p += 16
-            val n = counts.sum
-            if (n > 256 || p + n > stop) throw JpegBail
-            val vals = Array.tabulate(n)(i => b(p + i) & 0xff)
-            p += n
-            val t = new JHuff(counts, vals)
-            if (tc == 0) dcT(th) = t else acT(th) = t
-          }
+          jDht(b, off + 2, off + len, f)
           off += len
-        case 0xc0 | 0xc1 | 0xc2 | 0xc9 | 0xca => // SOF0/1 baseline, SOF2
-          // progressive, SOF9/SOF10 arithmetic sequential/progressive
-          progressive = m == 0xc2 || m == 0xca
-          arith = m == 0xc9 || m == 0xca
+        case 0xcc if f.kind != K12 => // DAC: arithmetic conditioning
           val len = segLen
-          if (len < 8) throw JpegBail
-          val precision = b(off + 2) & 0xff
-          h = ((b(off + 3) & 0xff) << 8) | (b(off + 4) & 0xff)
-          w = ((b(off + 5) & 0xff) << 8) | (b(off + 6) & 0xff)
-          val nc = b(off + 7) & 0xff
-          if (precision != 8 || w <= 0 || h <= 0 || (nc != 1 && nc != 3)) return null
-          if (len < 8 + 3 * nc) throw JpegBail
-          // decoded-size cap, same rationale as PNG: forged dims can't OOM.
-          // Progressive additionally buffers 4-byte coefficients for every
-          // sample, so its cap is tighter (~64 MB of coefficient state).
-          if (w.toLong * h * nc > 64L * 1024 * 1024) return null
-          if (progressive && w.toLong * h * nc > 16L * 1024 * 1024) return null
-          comps = Array.tabulate(nc) { i =>
-            val c = new JComp
-            c.id = b(off + 8 + 3 * i) & 0xff
-            val hv = b(off + 9 + 3 * i) & 0xff
-            c.h = hv >> 4; c.v = hv & 0x0f
-            c.tq = b(off + 10 + 3 * i) & 0xff
-            if (c.h < 1 || c.h > 2 || c.v < 1 || c.v > 2 || c.tq > 3) return null
-            c
-          }
-          // single-component scans carry one data unit per MCU regardless
-          // of declared sampling (T.81 A.2.2) — normalize to 1x1
-          if (nc == 1) { comps(0).h = 1; comps(0).v = 1 }
-          off += len
-        case x if x >= 0xc3 && x <= 0xcf && x != 0xc4 && x != 0xc8 &&
-            x != 0xc9 && x != 0xca && x != 0xcc =>
-          return null // lossless (SOF3/SOF11) / hierarchical: not an
-          // 8-bit raster — lossless flavors decode at full precision
-          // through decodeJpegLossless; hierarchical (Annex J) is null
-        case 0xcc => // DAC: arithmetic conditioning (T.81 B.2.4.3)
-          val len = segLen
-          var p = off + 2; val stop = off + len
-          while (p + 1 < stop) {
-            val tc = (b(p) & 0xff) >> 4; val tb = b(p) & 0x0f
-            val v = b(p + 1) & 0xff
-            if (tb > 3) throw JpegBail
-            if (tc == 0) {
-              val l = v & 0x0f; val u = v >> 4
-              if (l > u) throw JpegBail // B.2.4.3: 0 <= L <= U <= 15
-              dcCondL(tb) = l; dcCondU(tb) = u
-            } else if (tc == 1) {
-              if (v < 1 || v > 63) throw JpegBail
-              acCondK(tb) = v
-            } else throw JpegBail
-            p += 2
-          }
+          jDac(b, off + 2, off + len, f)
           off += len
         case 0xdd => // DRI
           val len = segLen
           if (len != 4) throw JpegBail
-          restartInt = ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
+          f.restartInt = be16(b, off + 2)
           off += len
-        case 0xda => // SOS
+        case 0xc8 if f.kind == KDct => off += segLen // JPG extension
+        case x if x >= 0xc0 && x <= 0xcf => // SOF (DHT/DAC matched above)
           val len = segLen
-          if (comps == null) return null
-          val ns = b(off + 2) & 0xff
-          if (ns < 1 || ns > comps.length || len < 6 + 2 * ns) return null
+          if (!jSof(b, off, len, m, f)) return null
+          off += len
+        case 0xda =>
+          f.scanSeen = true
+          val len = segLen
+          val idx = jSos(b, off, len, f)
+          if (idx == null) return null
+          val scan = idx.map(f.comps)
+          if (f.kind == KLossless) return jLosslessScan(b, off + len, f, scan)
+          // T.81 B.2.4.1: the quant table a scan dequantizes against
+          // must have been installed by a preceding DQT
+          if (scan.exists(c => !f.qtDef(c.tq))) return null
           // a sequential frame whose first scan covers a strict subset
           // of the components is a MULTI-SCAN sequential stream (T.81
           // non-interleaved layout): decode through the coefficient
           // buffers like progressive, one full-band scan per subset
-          if (!progressive && ns != comps.length) multiScan = true
-          val scanComps = new Array[JComp](ns)
-          var i = 0
-          while (i < ns) {
-            val cid = b(off + 3 + 2 * i) & 0xff
-            // single-interleaved-scan envelope: scan order == frame order
-            // (match by position); progressive / multi-scan sequential
-            // scans name a subset, matched by id
-            val c =
-              if (progressive || multiScan) {
-                val found = comps.find(_.id == cid).orNull
-                if (found == null) return null
-                found
-              } else comps(i)
-            val tdta = b(off + 4 + 2 * i) & 0xff
-            c.td = tdta >> 4; c.ta = tdta & 0x0f
-            if (c.td > 3 || c.ta > 3) return null
-            scanComps(i) = c
-            i += 1
+          if (!f.progressive && scan.length != f.comps.length) f.multiScan = true
+          if (!f.progressive && !f.multiScan) {
+            if (f.ss != 0 || f.se != 63 || f.ah != 0 || f.al != 0) return null
+            jScanDirect(b, off + len, f, scan, idx)
+            return if (f.kind == K12) j12Crop(f) else jAssemble(f)
           }
-          // a scan header naming the same component twice would decode
-          // its blocks twice with interleaved MCU geometry — garbage
-          // coefficient state, not a partial image. Reject.
-          if (scanComps.map(_.id).distinct.length != ns) return null
-          // T.81 B.2.4.1: the quant table a scan dequantizes against
-          // must have been installed by a preceding DQT
-          if (scanComps.exists(c => !qtDef(c.tq))) return null
-          val ss = b(off + 3 + 2 * ns) & 0xff
-          val se = b(off + 4 + 2 * ns) & 0xff
-          val ahal = b(off + 5 + 2 * ns) & 0xff
-          if (!progressive && !multiScan) {
-            if (ss != 0 || se != 63 || ahal != 0) return null
-            if (arith)
-              return jScanArith(b, off + len, w, h, comps, qt,
-                dcCondL, dcCondU, acCondK, restartInt)
-            return jScan(b, off + len, w, h, comps, qt, dcT, acT, restartInt)
-          }
-          if (multiScan) {
+          if (f.multiScan) {
             // sequential scans are always full-band, no approximation,
             // and each component appears in exactly one scan
-            if (ss != 0 || se != 63 || ahal != 0) return null
-            if (scanComps.exists(c => seqSeen(c.id))) return null
-            seqSeen ++= scanComps.map(_.id)
+            if (f.ss != 0 || f.se != 63 || f.ah != 0 || f.al != 0) return null
+            if (scan.exists(c => f.seqSeen(c.id))) return null
+            f.seqSeen ++= scan.map(_.id)
+            // multiScan is only discoverable here (at SOS, not SOF), so
+            // the buffered-coefficient cap — 4 bytes/sample of Int
+            // state, the reason progressive caps at 16M samples — is
+            // re-checked on this entry too
+            if (f.w.toLong * f.h * f.comps.length > 16L * 1024 * 1024) return null
           }
           // buffered path: decode this scan into the coefficient
-          // buffers, then continue the marker walk (EOI finishes).
-          // multiScan is only discoverable here (at SOS, not SOF), so the
-          // tighter buffered-coefficient cap — 4 bytes/sample of Int state,
-          // the reason progressive caps at 16M samples — must be re-checked
-          // on this entry too, or a 3-component SOF0 multi-scan stream
-          // passing the 64M-sample cap allocates ~4x the documented ceiling
-          if (multiScan && w.toLong * h * comps.length > 16L * 1024 * 1024)
-            return null
-          if (comps(0).coefs == null) jProgAlloc(w, h, comps)
-          off =
-            if (arith)
-              jProgScanArith(b, off + len, comps, scanComps, ss, se,
-                ahal >> 4, ahal & 0x0f, dcCondL, dcCondU, acCondK,
-                restartInt, sequential = multiScan)
-            else
-              jProgScan(b, off + len, comps, scanComps, ss, se,
-                ahal >> 4, ahal & 0x0f, dcT, acT, restartInt,
-                sequential = multiScan)
-          anyScan = true
+          // buffers, then continue the marker walk (EOI finishes)
+          if (f.comps(0).coefs == null)
+            f.comps.foreach(c => c.coefs = new Array[Int](c.bw * c.bh * 64))
+          off = jScanBuffered(b, off + len, f, scan, idx)
+          f.anyScan = true
         case _ => off += segLen // APPn / COM / other: skip
       }
     }
     null // ran off the end without a scan
   }
 
-  /** Entropy-decode the interleaved scan, IDCT each block into its
-    * component plane, then upsample + color-convert + crop.
+  /** EOI: a buffered DCT frame completes here. A progressive stream may
+    * legitimately stop after any scan (partial rendering is the format's
+    * point); a sequential multi-scan stream missing a component is
+    * corrupt; every other entry point needed its scan before EOI.
     */
-  private def jScan(b: Array[Byte], scanOff: Int, w: Int, h: Int,
-                    comps: Array[JComp], qt: Array[Array[Int]],
-                    dcT: Array[JHuff], acT: Array[JHuff],
-                    restartInt: Int): Raster = {
-    var hmax = 1; var vmax = 1
-    comps.foreach { c => if (c.h > hmax) hmax = c.h; if (c.v > vmax) vmax = c.v }
-    val mcusX = (w + 8 * hmax - 1) / (8 * hmax)
-    val mcusY = (h + 8 * vmax - 1) / (8 * vmax)
-    comps.foreach { c =>
-      if (dcT(c.td) == null || acT(c.ta) == null) throw JpegBail
-      c.planeW = mcusX * 8 * c.h
-      c.plane = new Array[Byte](c.planeW * mcusY * 8 * c.v)
-      c.pred = 0
-    }
-    val r = new JBits(b, scanOff, b.length)
-    val coef = new Array[Int](64)
-    val tmp = new Array[Double](64)
-    var mcu = 0; var rstIdx = 0
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        if (restartInt > 0 && mcu > 0 && mcu % restartInt == 0) {
-          r.restart(rstIdx); rstIdx = (rstIdx + 1) & 7
-          comps.foreach(_.pred = 0)
-        }
-        var ci = 0
-        while (ci < comps.length) {
-          val c = comps(ci)
-          val q = qt(c.tq)
-          var by = 0
-          while (by < c.v) {
-            var bx = 0
-            while (bx < c.h) {
-              // --- decode one block: DC diff + AC run/size, dequantized
-              java.util.Arrays.fill(coef, 0)
-              val t = jDecodeSym(r, dcT(c.td))
-              if (t > 11) throw JpegBail
-              c.pred += jExtend(r.receive(t), t)
-              coef(0) = c.pred * q(0)
-              var k = 1
-              while (k < 64) {
-                val rs = jDecodeSym(r, acT(c.ta))
-                val run = rs >> 4; val s = rs & 15
-                if (s == 0) {
-                  if (run == 15) k += 16 else k = 64 // ZRL / EOB
-                } else {
-                  k += run
-                  if (k > 63) throw JpegBail
-                  coef(JpegZigzag(k)) = jExtend(r.receive(s), s) * q(k)
-                  k += 1
-                }
-              }
-              jIdctBlock(coef, tmp, c.plane, c.planeW,
-                (mx * c.h + bx) * 8, (my * c.v + by) * 8)
-              bx += 1
-            }
-            by += 1
-          }
-          ci += 1
-        }
-        mcu += 1; mx += 1
-      }
-      my += 1
-    }
-    jAssemble(w, h, comps, hmax, vmax)
+  private def jEoi(f: JFrame): AnyRef =
+    if (f.kind == KDct && f.comps != null &&
+        ((f.progressive && f.anyScan) ||
+          (f.multiScan && f.seqSeen.size == f.comps.length))) jFinish(f)
+    else null
+
+  /** jpegMeta's SOF read: len(2) precision(1) height(2) width(2)
+    * ncomp(1). Metadata needs only this fixed prefix, so the segment may
+    * run past a truncated stream's end.
+    */
+  private def jMetaRow(b: Array[Byte], off: Int): InternalRow = {
+    if (off + 8 > b.length) return null
+    val len = be16(b, off)
+    val h = be16(b, off + 3)
+    val w = be16(b, off + 5)
+    val nc = b(off + 7) & 0xff
+    if (len < 8 + 3 * nc || w <= 0 || h <= 0 || nc <= 0) return null
+    new GenericInternalRow(Array[Any](w, h, nc))
   }
+
+  /** DQT (B.2.4.1): 8- or 16-bit tables, zero entries rejected. */
+  private def jDqt(b: Array[Byte], from: Int, stop: Int, f: JFrame): Unit = {
+    var p = from
+    while (p < stop) {
+      val pq = (b(p) & 0xff) >> 4; val tq = b(p) & 0x0f
+      if (pq > 1 || tq > 3) throw JpegBail
+      p += 1
+      val step = if (pq == 0) 1 else 2
+      if (p + 64 * step > stop) throw JpegBail
+      var i = 0
+      while (i < 64) {
+        f.qt(tq)(i) = if (pq == 0) b(p + i) & 0xff else be16(b, p + 2 * i)
+        if (f.qt(tq)(i) == 0) throw JpegBail
+        i += 1
+      }
+      f.qtDef(tq) = true
+      p += 64 * step
+    }
+  }
+
+  /** DHT (B.2.4.2): BITS counts then HUFFVAL, per table. */
+  private def jDht(b: Array[Byte], from: Int, stop: Int, f: JFrame): Unit = {
+    var p = from
+    while (p < stop) {
+      val tc = (b(p) & 0xff) >> 4; val th = b(p) & 0x0f
+      if (tc > 1 || th > 3) throw JpegBail
+      p += 1
+      if (p + 16 > stop) throw JpegBail
+      val counts = Array.tabulate(16)(i => b(p + i) & 0xff)
+      p += 16
+      val n = counts.sum
+      if (n > 256 || p + n > stop) throw JpegBail
+      val vals = Array.tabulate(n)(i => b(p + i) & 0xff)
+      p += n
+      val t = new JHuff(counts, vals)
+      if (tc == 0) f.dcT(th) = t else f.acT(th) = t
+    }
+  }
+
+  /** DAC (B.2.4.3): DC-class (U<<4)|L bounds, AC-class Kx. */
+  private def jDac(b: Array[Byte], from: Int, stop: Int, f: JFrame): Unit = {
+    var p = from
+    while (p + 1 < stop) {
+      val tc = (b(p) & 0xff) >> 4; val tb = b(p) & 0x0f
+      val v = b(p + 1) & 0xff
+      if (tc > 1 || tb > 3) throw JpegBail
+      if (tc == 0) {
+        val l = v & 0x0f; val u = v >> 4
+        if (l > u) throw JpegBail // 0 <= L <= U <= 15
+        f.condL(tb) = l; f.condU(tb) = u
+      } else {
+        // a lossless frame has no AC coefficients and ignores Kx
+        if (f.kind == KDct && (v < 1 || v > 63)) throw JpegBail
+        f.condK(tb) = v
+      }
+      p += 2
+    }
+  }
+
+  /** SOF (B.2.2): frame header and component geometry. False when the
+    * frame is outside the calling entry point's envelope: the DCT raster
+    * takes 8-bit SOF0/1/2/9/10 with 1 or 3 components sampled 1–2; the
+    * 12-bit path takes 12-bit SOF1 gray at 1×1; the lossless path takes
+    * SOF3/SOF11 at 2–16 bits with 1–4 components at 1×1.
+    */
+  private def jSof(b: Array[Byte], off: Int, len: Int, m: Int,
+                   f: JFrame): Boolean = {
+    if (len < 8) throw JpegBail
+    val p = b(off + 2) & 0xff
+    val h = be16(b, off + 3)
+    val w = be16(b, off + 5)
+    val nc = b(off + 7) & 0xff
+    val accepted = f.kind match {
+      case KDct => (m == 0xc0 || m == 0xc1 || m == 0xc2 || m == 0xc9 ||
+        m == 0xca) && p == 8 && (nc == 1 || nc == 3)
+      case K12 => m == 0xc1 && p == 12 && nc == 1
+      case _ => (m == 0xc3 || m == 0xcb) && p >= 2 && p <= 16 &&
+        nc >= 1 && nc <= 4
+    }
+    if (!accepted || w <= 0 || h <= 0 || len < 8 + 3 * nc) return false
+    // decoded-size caps, same rationale as PNG: forged dims can't OOM.
+    // The direct 8-bit path holds one byte per sample; every buffered
+    // path (progressive here, multi-scan at its first SOS, 12-bit and
+    // lossless samples) holds a 4-byte Int, so its cap is tighter.
+    val buffered = f.kind != KDct || m == 0xc2 || m == 0xca
+    if (w.toLong * h * nc > (if (buffered) 16L else 64L) * 1024 * 1024)
+      return false
+    val comps = Array.tabulate(nc) { i =>
+      val c = new JComp
+      c.id = b(off + 8 + 3 * i) & 0xff
+      val hv = b(off + 9 + 3 * i) & 0xff
+      c.h = hv >> 4; c.v = hv & 0x0f
+      c.tq = b(off + 10 + 3 * i) & 0xff
+      c
+    }
+    val maxHv = if (f.kind == KDct) 2 else 1
+    if (comps.exists(c => c.h < 1 || c.h > maxHv || c.v < 1 || c.v > maxHv ||
+        (f.kind != KLossless && c.tq > 3))) return false
+    // single-component scans carry one data unit per MCU regardless of
+    // declared sampling (T.81 A.2.2) — normalize to 1x1
+    if (nc == 1) { comps(0).h = 1; comps(0).v = 1 }
+    f.sof = m; f.precision = p; f.w = w; f.h = h; f.comps = comps
+    f.hmax = comps.map(_.h).max; f.vmax = comps.map(_.v).max
+    f.mcusX = (w + 8 * f.hmax - 1) / (8 * f.hmax)
+    f.mcusY = (h + 8 * f.vmax - 1) / (8 * f.vmax)
+    comps.foreach { c =>
+      c.bw = f.mcusX * c.h; c.bh = f.mcusY * c.v
+      c.rw = ((w * c.h + f.hmax - 1) / f.hmax + 7) / 8
+      c.rh = ((h * c.v + f.vmax - 1) / f.vmax + 7) / 8
+    }
+    true
+  }
+
+  /** SOS (B.2.3): the scan's components as frame indices, their table
+    * selectors, and Ss/Se/Ah/Al into `f`. Every id must name a frame
+    * component, in frame order: a missing, repeated or out-of-order id is
+    * corrupt (libjpeg rejects it as well), never matched by position.
+    * Null outside the envelope; the DCT raster path alone takes scans
+    * over a subset of the components.
+    */
+  private def jSos(b: Array[Byte], off: Int, len: Int, f: JFrame): Array[Int] = {
+    val comps = f.comps
+    if (comps == null) return null
+    val ns = b(off + 2) & 0xff
+    if (ns < 1 || ns > comps.length || len < 6 + 2 * ns) return null
+    if (f.kind != KDct && (ns != comps.length || len != 6 + 2 * ns)) return null
+    val idx = new Array[Int](ns)
+    var prev = -1
+    var i = 0
+    while (i < ns) {
+      val cid = b(off + 3 + 2 * i) & 0xff
+      val ci = comps.indexWhere(_.id == cid)
+      if (ci <= prev) return null
+      val c = comps(ci)
+      val tdta = b(off + 4 + 2 * i) & 0xff
+      c.td = tdta >> 4; c.ta = tdta & 0x0f
+      if (c.td > 3 || (f.kind != KLossless && c.ta > 3)) return null
+      idx(i) = ci; prev = ci
+      i += 1
+    }
+    f.ss = b(off + 3 + 2 * ns) & 0xff
+    f.se = b(off + 4 + 2 * ns) & 0xff
+    f.ah = (b(off + 5 + 2 * ns) & 0xff) >> 4
+    f.al = b(off + 5 + 2 * ns) & 0x0f
+    idx
+  }
+
+  /** Entropy decoder of one scan. DCT scans use the four T.81 block
+    * procedures below; lossless scans call the coders' difference decode
+    * directly ([[JBits.diff]], [[JQm.diff]]).
+    */
+  private abstract class JCoder {
+    /** DC difference of a block of component `c` (frame index `ci`). */
+    def dcDiff(f: JFrame, c: JComp, ci: Int): Int
+    /** First AC pass over zigzag band [ss, se]: values << al into
+      * `cf(off + k)`. With se = 63, ss = 1, al = 0 it is the whole
+      * sequential AC decode.
+      */
+    def acFirst(f: JFrame, c: JComp, cf: Array[Int], off: Int,
+                ss: Int, se: Int, al: Int): Unit
+    /** DC successive-approximation refinement: one correction bit. */
+    def dcRefine(cf: Array[Int], off: Int, p1: Int): Unit
+    /** AC successive-approximation refinement over [ss, se]. */
+    def acRefine(f: JFrame, c: JComp, cf: Array[Int], off: Int,
+                 ss: Int, se: Int, al: Int): Unit
+    /** Resynchronize at the expected RSTn and reset coder state. */
+    def restart(idx: Int): Unit
+    /** Offset of the marker that follows the scan's entropy data. */
+    def end: Int
+  }
+
+  /** Huffman coder: MSB-first bit reader over entropy-coded data with
+    * FF00 unstuffing. Any non-stuffing marker hit mid-read throws
+    * (entropy data may contain any byte sequence only via stuffing; a
+    * bare marker there is corrupt or an unsupported layout). Restart
+    * markers are consumed only at the expected MCU boundaries via
+    * [[restart]]. `eobRuns` selects the progressive meaning of an
+    * (r, 0) symbol with r < 15 (an EOB run, G.1.2.2) over the sequential
+    * one (end of block).
+    */
+  private final class JBits(b: Array[Byte], var pos: Int, eobRuns: Boolean)
+      extends JCoder {
+    private var buf = 0
+    private var cnt = 0
+    private var eobrun = 0
+
+    def bit(): Int = {
+      if (cnt == 0) {
+        if (pos >= b.length) throw JpegBail
+        val v = b(pos) & 0xff; pos += 1
+        if (v == 0xff) {
+          if (pos >= b.length) throw JpegBail
+          if ((b(pos) & 0xff) != 0x00) throw JpegBail
+          pos += 1
+        }
+        buf = v; cnt = 8
+      }
+      cnt -= 1
+      (buf >> cnt) & 1
+    }
+
+    def receive(n: Int): Int = {
+      var v = 0; var i = 0
+      while (i < n) { v = (v << 1) | bit(); i += 1 }
+      v
+    }
+
+    /** Canonical-code symbol decode (T.81 F.2.2.3). */
+    def sym(t: JHuff): Int = {
+      var code = 0; var l = 0
+      while (l < 16) {
+        code = (code << 1) | bit(); l += 1
+        if (t.maxc(l) >= 0 && code <= t.maxc(l))
+          return t.vals(t.vptr(l) + code - t.minc(l))
+      }
+      throw JpegBail
+    }
+
+    /** A DC or lossless difference: the SSSS category (at most `maxCat`)
+      * then SSSS magnitude bits, EXTENDed to a signed value (F.2.2.1).
+      * SSSS = 16 is lossless's bitless 32768 (H.1.2.2).
+      */
+    def diff(t: JHuff, maxCat: Int): Int = {
+      val s = sym(t)
+      if (s > maxCat) throw JpegBail
+      if (s == 16) 32768 else jExtend(receive(s), s)
+    }
+
+    // DC categories run to 11 at 8-bit precision, 15 at 12 (Table F.1)
+    def dcDiff(f: JFrame, c: JComp, ci: Int): Int =
+      diff(f.dcT(c.td), if (f.precision == 12) 15 else 11)
+
+    def acFirst(f: JFrame, c: JComp, cf: Array[Int], off: Int,
+                ss: Int, se: Int, al: Int): Unit = {
+      if (eobrun > 0) { eobrun -= 1; return }
+      val t = f.acT(c.ta)
+      var k = ss
+      while (k <= se) {
+        val rs = sym(t)
+        val run = rs >> 4; val s = rs & 15
+        if (s == 0) {
+          if (run == 15) k += 16 // ZRL
+          else {
+            // EOB; progressive: ends the band for 2^r + receive(r)
+            // consecutive blocks, this one included
+            if (eobRuns) {
+              eobrun = (1 << run) - 1
+              if (run > 0) eobrun += receive(run)
+            }
+            return
+          }
+        } else {
+          k += run
+          if (k > se) throw JpegBail
+          cf(off + k) = jExtend(receive(s), s) << al
+          k += 1
+        }
+      }
+    }
+
+    def dcRefine(cf: Array[Int], off: Int, p1: Int): Unit =
+      if (bit() == 1) cf(off) |= p1
+
+    // AC refinement (Ah=Al+1): newly nonzero coefficients arrive as
+    // (run, 1) symbols with a sign bit; coefficients already nonzero from
+    // earlier passes read one correction bit wherever the scan advances
+    // past them (they do not break zero runs); EOB runs carry correction
+    // bits for the remainder of each ended band. The history-bit test
+    // (cur & p1) is exact because every magnitude at this level is a
+    // multiple of 2^Al, so two's complement keeps bit Al equal to the
+    // magnitude's bit Al.
+    def acRefine(f: JFrame, c: JComp, cf: Array[Int], off: Int,
+                 ss: Int, se: Int, al: Int): Unit = {
+      val p1 = 1 << al
+      val t = f.acT(c.ta)
+      var k = ss
+      if (eobrun == 0) {
+        var atEob = false
+        while (k <= se && !atEob) {
+          val rs = sym(t)
+          var run = rs >> 4; val s = rs & 15
+          var newval = 0
+          if (s == 0) {
+            if (run != 15) {
+              eobrun = 1 << run
+              if (run > 0) eobrun += receive(run)
+              atEob = true
+            }
+            // run == 15: ZRL — advance over 16 zero-history positions
+          } else {
+            if (s != 1) throw JpegBail
+            newval = if (bit() == 1) p1 else -p1
+          }
+          if (!atEob) {
+            var placed = false
+            while (k <= se && !placed) {
+              val cur = cf(off + k)
+              if (cur != 0) {
+                if (bit() == 1 && (cur & p1) == 0)
+                  cf(off + k) = if (cur >= 0) cur + p1 else cur - p1
+              } else {
+                if (run == 0) {
+                  if (s != 0) cf(off + k) = newval
+                  placed = true
+                } else run -= 1
+              }
+              k += 1
+            }
+            if (!placed && s != 0) throw JpegBail // ran off the band
+          }
+        }
+      }
+      if (eobrun > 0) {
+        // correction sweep over the rest of the band, then consume one
+        // block of the run
+        while (k <= se) {
+          val cur = cf(off + k)
+          if (cur != 0) {
+            if (bit() == 1 && (cur & p1) == 0)
+              cf(off + k) = if (cur >= 0) cur + p1 else cur - p1
+          }
+          k += 1
+        }
+        eobrun -= 1
+      }
+    }
+
+    /** Byte-align and consume the expected RSTn marker. */
+    def restart(idx: Int): Unit = {
+      cnt = 0
+      if (pos + 2 > b.length) throw JpegBail
+      if ((b(pos) & 0xff) != 0xff || (b(pos + 1) & 0xff) != (0xd0 + idx)) throw JpegBail
+      pos += 2
+      eobrun = 0
+    }
+
+    def end: Int = pos
+  }
+
+  /** T.81 §F.2.2.1 EXTEND: map a `t`-bit magnitude to its signed value. */
+  private def jExtend(v: Int, t: Int): Int =
+    if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
 
   /** T.81 Table D.3 — the QM-coder probability estimation state machine
     * (113 working states + the stationary index-113 entry the AC sign's
@@ -1352,12 +1459,28 @@ object MediaCodecHelper {
     * interval's 2^16 carry is dropped symmetrically on both sides — the
     * code offset is always < A <= 0xFFFF after the first subdivision).
     * Context bins pack (state index << 1) | MPS into one byte.
+    *
+    * Statistics live with the coder: every scan and every restart
+    * interval is its own arithmetic segment with fresh statistics
+    * (F.1.4.1.1). DC bins are sized for lossless's 158 (a DCT scan uses
+    * the first 49), AC bins for the DCT's 245; the DC conditioning
+    * context is kept per frame component (`nc` of them).
     */
-  private final class JQm(b: Array[Byte], end: Int) {
+  private final class JQm(b: Array[Byte], start: Int, nc: Int) extends JCoder {
     private var c = 0L
     private var a = 0L
     private var ct = 0
-    var bp = 0 // index of the byte most recently fed into C
+    private var bp = 0 // index of the byte most recently fed into C
+    val dcStats = Array.ofDim[Byte](4, 158)
+    private val acStats = Array.ofDim[Byte](4, 256)
+    // non-adaptive AC sign bin: the stationary index-113 state
+    private val fixedBin = Array[Byte]((113 << 1).toByte)
+    private val dcContext = new Array[Int](nc)
+    /** Classification of the last [[diff]]: 0 zero (or below L), 1/2
+      * small positive/negative, 3/4 large positive/negative.
+      */
+    var cat = 0
+    init(start)
 
     // Past the PHYSICAL end there is no marker to stop at — a valid
     // stream always terminates its entropy data with a marker (EOI or
@@ -1365,10 +1488,10 @@ object MediaCodecHelper {
     // the end therefore means a truncated stream: honest-null, never
     // zero-padded garbage.
     private def byteAt(i: Int): Int =
-      if (i >= 0 && i < end) b(i) & 0xff else throw JpegBail
+      if (i >= 0 && i < b.length) b(i) & 0xff else throw JpegBail
 
-    def init(start: Int): Unit = {
-      c = 0L; bp = start - 1
+    private def init(from: Int): Unit = {
+      c = 0L; bp = from - 1
       byteIn(); c = (c << 8) & 0xffffffffL
       byteIn(); c = (c << 8) & 0xffffffffL
       ct = 0
@@ -1431,291 +1554,111 @@ object MediaCodecHelper {
       d
     }
 
-    /** Byte-align at a restart boundary: the next marker in the stream
-      * must be the expected RSTn (within entropy data every 0xFF is
-      * followed by a stuffed byte < 0x80, so the first 0xFF followed by
-      * >= 0x90 IS the marker). Returns the offset just past it.
+    /** The DC-difference decision tree (F.1.4.4.1; lossless H.1.2.2
+      * reuses it): the zero decision at `ctx`, sign, then the magnitude
+      * category walk from the X bins at `xBase`, then the magnitude bits
+      * in the matching M bins. Sets [[cat]] against the DAC bounds L, U.
       */
-    def seekRestart(idx: Int): Int = {
-      var i = bp
-      while (i + 1 < end && !((b(i) & 0xff) == 0xff && (b(i + 1) & 0xff) >= 0x90))
-        i += 1
-      if (i + 1 >= end || (b(i + 1) & 0xff) != 0xd0 + idx) throw JpegBail
-      i + 2
-    }
-  }
-
-  /** The interleaved SOF9 scan: per block, the T.81 F.1.4.4.1 DC model
-    * (sign/magnitude decision tree conditioned on the previous diff's
-    * classification against the DAC L/U bounds) and the F.1.4.4.2 AC
-    * model (per-position EOB/run decisions, the non-adaptive sign bin,
-    * Kx-split magnitude trees), decoded by the Annex-D QM-coder —
-    * then the same dequant + IDCT + assembly as the Huffman scan.
-    * Restart intervals re-initialize the coder AND zero every
-    * statistics bin (F.1.4.1.1), exactly like the encoder side.
-    */
-  private def jScanArith(b: Array[Byte], scanOff: Int, w: Int, h: Int,
-                         comps: Array[JComp], qt: Array[Array[Int]],
-                         dcCondL: Array[Int], dcCondU: Array[Int],
-                         acCondK: Array[Int], restartInt: Int): Raster = {
-    var hmax = 1; var vmax = 1
-    comps.foreach { c => if (c.h > hmax) hmax = c.h; if (c.v > vmax) vmax = c.v }
-    val mcusX = (w + 8 * hmax - 1) / (8 * hmax)
-    val mcusY = (h + 8 * vmax - 1) / (8 * vmax)
-    comps.foreach { c =>
-      c.planeW = mcusX * 8 * c.h
-      c.plane = new Array[Byte](c.planeW * mcusY * 8 * c.v)
-      c.pred = 0
-    }
-    val dcStats = Array.ofDim[Byte](4, 64)
-    val acStats = Array.ofDim[Byte](4, 256)
-    // non-adaptive AC sign bin: the stationary index-113 state
-    val fixedBin = Array[Byte]((113 << 1).toByte)
-    val dcContext = new Array[Int](comps.length)
-    val qm = new JQm(b, b.length)
-    qm.init(scanOff)
-    val coef = new Array[Int](64)
-    val tmp = new Array[Double](64)
-    var mcu = 0; var rstIdx = 0
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        if (restartInt > 0 && mcu > 0 && mcu % restartInt == 0) {
-          val next = qm.seekRestart(rstIdx)
-          rstIdx = (rstIdx + 1) & 7
-          var t = 0
-          while (t < 4) {
-            java.util.Arrays.fill(dcStats(t), 0.toByte)
-            java.util.Arrays.fill(acStats(t), 0.toByte)
-            t += 1
-          }
-          comps.foreach(_.pred = 0)
-          java.util.Arrays.fill(dcContext, 0)
-          qm.init(next)
+    def diff(st: Array[Byte], ctx: Int, xBase: Int, l: Int, u: Int): Int = {
+      if (decode(st, ctx) == 0) { cat = 0; return 0 }
+      val sign = decode(st, ctx + 1)
+      var m = 0
+      var si = ctx + 2 + sign
+      if (decode(st, si) != 0) {
+        m = 1
+        si = xBase
+        while (decode(st, si) != 0) {
+          m <<= 1
+          if (m == 0x8000) throw JpegBail
+          si += 1
         }
-        var ci = 0
-        while (ci < comps.length) {
-          val c = comps(ci)
-          val q = qt(c.tq)
-          var by = 0
-          while (by < c.v) {
-            var bx = 0
-            while (bx < c.h) {
-              java.util.Arrays.fill(coef, 0)
-              // ---- DC: F.1.4.4.1 / F.2.4.1 ----
-              val dst = dcStats(c.td)
-              val ctx = dcContext(ci)
-              if (qm.decode(dst, ctx) == 0) {
-                dcContext(ci) = 0
-              } else {
-                val sign = qm.decode(dst, ctx + 1)
-                var m = 0
-                var si = ctx + 2 + sign
-                if (qm.decode(dst, si) != 0) {
-                  m = 1
-                  si = 20 // X1 bin (Table F.4 layout)
-                  while (qm.decode(dst, si) != 0) {
-                    m <<= 1
-                    if (m == 0x8000) throw JpegBail
-                    si += 1
-                  }
-                }
-                dcContext(ci) =
-                  if (m < ((1 << dcCondL(c.td)) >> 1)) 0
-                  else if (m > ((1 << dcCondU(c.td)) >> 1)) 12 + sign * 4
-                  else 4 + sign * 4
-                var v = m
-                si += 14 // the matching M (mantissa) bin
-                while ({ m >>= 1; m != 0 }) {
-                  if (qm.decode(dst, si) != 0) v |= m
-                }
-                v += 1
-                c.pred += (if (sign != 0) -v else v)
-              }
-              coef(0) = c.pred * q(0)
-              // ---- AC: F.1.4.4.2 / F.2.4.2 ----
-              val ast = acStats(c.ta)
-              var k = 1
-              var eob = false
-              while (!eob && k < 64) {
-                var si = 3 * (k - 1)
-                if (qm.decode(ast, si) != 0) eob = true
-                else {
-                  while (qm.decode(ast, si + 1) == 0) {
-                    si += 3; k += 1
-                    if (k > 63) throw JpegBail
-                  }
-                  val sign = qm.decode(fixedBin, 0)
-                  si += 2
-                  var m = qm.decode(ast, si)
-                  if (m != 0 && qm.decode(ast, si) != 0) {
-                    m <<= 1
-                    si = if (k <= acCondK(c.ta)) 189 else 217
-                    while (qm.decode(ast, si) != 0) {
-                      m <<= 1
-                      if (m == 0x8000) throw JpegBail
-                      si += 1
-                    }
-                  }
-                  var v = m
-                  si += 14
-                  while ({ m >>= 1; m != 0 }) {
-                    if (qm.decode(ast, si) != 0) v |= m
-                  }
-                  v += 1
-                  coef(JpegZigzag(k)) = (if (sign != 0) -v else v) * q(k)
-                  k += 1
-                }
-              }
-              jIdctBlock(coef, tmp, c.plane, c.planeW,
-                (mx * c.h + bx) * 8, (my * c.v + by) * 8)
-              bx += 1
-            }
-            by += 1
-          }
-          ci += 1
-        }
-        mcu += 1; mx += 1
       }
-      my += 1
+      cat =
+        if (m < ((1 << l) >> 1)) 0
+        else if (m > ((1 << u) >> 1)) 3 + sign
+        else 1 + sign
+      var v = m
+      si += 14 // the matching M (mantissa) bin
+      while ({ m >>= 1; m != 0 }) {
+        if (decode(st, si) != 0) v |= m
+      }
+      v += 1
+      if (sign != 0) -v else v
     }
-    jAssemble(w, h, comps, hmax, vmax)
-  }
 
-  /** Decode one PROGRESSIVE arithmetic scan (SOF10) into the coefficient
-    * buffers; returns the byte offset of the next marker's 0xFF. The
-    * four T.81 §G.2 procedures over the QM coder, matching the Huffman
-    * progressive envelope: interleaved/single-component DC-first scans
-    * (the sequential DC diff model, values shifted left Al), DC
-    * refinement (one fixed-bin correction bit per block), AC-first
-    * scans over [Ss, Se] (the sequential AC model with per-position EOB
-    * decisions, values shifted left Al), and AC refinement (per-band
-    * EOB-extension decision beyond the previous pass's end-of-block
-    * index, st+2 correction bits on known coefficients, fixed-bin signs
-    * on new ones). Every scan is its own arithmetic segment: fresh
-    * statistics, fresh coder — as are restart intervals within a scan.
-    */
-  private def jProgScanArith(b: Array[Byte], dataOff: Int,
-                             comps: Array[JComp], scanComps: Array[JComp],
-                             ss: Int, se: Int, ah: Int, al: Int,
-                             dcCondL: Array[Int], dcCondU: Array[Int],
-                             acCondK: Array[Int], restartInt: Int,
-                             sequential: Boolean = false): Int = {
-    if (al < 0 || al > 13) throw JpegBail
-    if (ah != 0 && ah != al + 1) throw JpegBail
-    val isDc = ss == 0 && !sequential
-    if (!sequential) {
-      if (isDc && se != 0) throw JpegBail
-      if (!isDc && (scanComps.length != 1 || se < ss || se > 63))
-        throw JpegBail
+    // DCT DC: the context is the previous difference's classification
+    // (Table F.4 layout: 0, 4, 8, 12, 16), X bins from 20
+    def dcDiff(f: JFrame, c: JComp, ci: Int): Int = {
+      val d = diff(dcStats(c.td), dcContext(ci), 20, f.condL(c.td), f.condU(c.td))
+      dcContext(ci) = 4 * cat
+      d
     }
-    val dcStats = Array.ofDim[Byte](4, 64)
-    val acStats = Array.ofDim[Byte](4, 256)
-    val fixedBin = Array[Byte]((113 << 1).toByte)
-    val dcContext = new Array[Int](comps.length)
-    val compIdx = scanComps.map(c => comps.indexOf(c))
-    val qm = new JQm(b, b.length)
-    qm.init(dataOff)
-    scanComps.foreach(_.pred = 0)
-    val p1 = 1 << al
-    val m1 = -1 << al
 
-    def decodeDcFirst(c: JComp, ci: Int, blkOff: Int): Unit = {
-      val dst = dcStats(c.td)
-      val ctx = dcContext(ci)
-      if (qm.decode(dst, ctx) == 0) dcContext(ci) = 0
-      else {
-        val sign = qm.decode(dst, ctx + 1)
-        var m = 0
-        var si = ctx + 2 + sign
-        if (qm.decode(dst, si) != 0) {
-          m = 1
-          si = 20
-          while (qm.decode(dst, si) != 0) {
+    // F.1.4.4.2: per-position EOB decision, zero-run decisions, the
+    // fixed sign bin, magnitude category split at Kx (X bins 189 / 217)
+    def acFirst(f: JFrame, c: JComp, cf: Array[Int], off: Int,
+                ss: Int, se: Int, al: Int): Unit = {
+      val ast = acStats(c.ta)
+      var k = ss
+      while (k <= se) {
+        var si = 3 * (k - 1)
+        if (decode(ast, si) != 0) return // EOB
+        while (decode(ast, si + 1) == 0) {
+          si += 3; k += 1
+          if (k > se) throw JpegBail
+        }
+        val sign = decode(fixedBin, 0)
+        si += 2
+        var m = decode(ast, si)
+        if (m != 0 && decode(ast, si) != 0) {
+          m <<= 1
+          si = if (k <= f.condK(c.ta)) 189 else 217
+          while (decode(ast, si) != 0) {
             m <<= 1
             if (m == 0x8000) throw JpegBail
             si += 1
           }
         }
-        dcContext(ci) =
-          if (m < ((1 << dcCondL(c.td)) >> 1)) 0
-          else if (m > ((1 << dcCondU(c.td)) >> 1)) 12 + sign * 4
-          else 4 + sign * 4
         var v = m
         si += 14
         while ({ m >>= 1; m != 0 }) {
-          if (qm.decode(dst, si) != 0) v |= m
+          if (decode(ast, si) != 0) v |= m
         }
         v += 1
-        c.pred += (if (sign != 0) -v else v)
-      }
-      c.coefs(blkOff) = c.pred << al
-    }
-
-    def decodeDcRefine(c: JComp, blkOff: Int): Unit =
-      if (qm.decode(fixedBin, 0) != 0) c.coefs(blkOff) |= p1
-
-    val acFrom = if (sequential) 1 else ss
-    val acTo = if (sequential) 63 else se
-    def decodeAcFirst(c: JComp, blkOff: Int): Unit = {
-      val ast = acStats(c.ta)
-      val cf = c.coefs
-      var k = acFrom
-      var eob = false
-      while (!eob && k <= acTo) {
-        var si = 3 * (k - 1)
-        if (qm.decode(ast, si) != 0) eob = true
-        else {
-          while (qm.decode(ast, si + 1) == 0) {
-            si += 3; k += 1
-            if (k > acTo) throw JpegBail
-          }
-          val sign = qm.decode(fixedBin, 0)
-          si += 2
-          var m = qm.decode(ast, si)
-          if (m != 0 && qm.decode(ast, si) != 0) {
-            m <<= 1
-            si = if (k <= acCondK(c.ta)) 189 else 217
-            while (qm.decode(ast, si) != 0) {
-              m <<= 1
-              if (m == 0x8000) throw JpegBail
-              si += 1
-            }
-          }
-          var v = m
-          si += 14
-          while ({ m >>= 1; m != 0 }) {
-            if (qm.decode(ast, si) != 0) v |= m
-          }
-          v += 1
-          cf(blkOff + k) = (if (sign != 0) -v else v) << al
-          k += 1
-        }
+        cf(off + k) = (if (sign != 0) -v else v) << al
+        k += 1
       }
     }
 
-    def decodeAcRefine(c: JComp, blkOff: Int): Unit = {
+    def dcRefine(cf: Array[Int], off: Int, p1: Int): Unit =
+      if (decode(fixedBin, 0) != 0) cf(off) |= p1
+
+    // G.2: EOB decisions only beyond the previous pass's end-of-block
+    // index, st+2 correction bits on known coefficients, fixed-bin signs
+    // on new ones
+    def acRefine(f: JFrame, c: JComp, cf: Array[Int], off: Int,
+                 ss: Int, se: Int, al: Int): Unit = {
+      val p1 = 1 << al
+      val m1 = -1 << al
       val ast = acStats(c.ta)
-      val cf = c.coefs
       // previous pass's end-of-block index: the highest occupied position
       var kex = se
-      while (kex > 0 && cf(blkOff + kex) == 0) kex -= 1
+      while (kex > 0 && cf(off + kex) == 0) kex -= 1
       var k = ss
       var eob = false
       while (!eob && k <= se) {
         var si = 3 * (k - 1)
-        if (k > kex && qm.decode(ast, si) != 0) eob = true
+        if (k > kex && decode(ast, si) != 0) eob = true
         else {
           var placed = false
           while (!placed) {
-            val cur = cf(blkOff + k)
+            val cur = cf(off + k)
             if (cur != 0) {
-              if (qm.decode(ast, si + 2) != 0)
-                cf(blkOff + k) = if (cur < 0) cur + m1 else cur + p1
+              if (decode(ast, si + 2) != 0)
+                cf(off + k) = if (cur < 0) cur + m1 else cur + p1
               placed = true
-            } else if (qm.decode(ast, si + 1) != 0) {
-              cf(blkOff + k) = if (qm.decode(fixedBin, 0) != 0) m1 else p1
+            } else if (decode(ast, si + 1) != 0) {
+              cf(off + k) = if (decode(fixedBin, 0) != 0) m1 else p1
               placed = true
             } else {
               si += 3; k += 1
@@ -1727,137 +1670,240 @@ object MediaCodecHelper {
       }
     }
 
-    def decodeBlock(c: JComp, ci: Int, blkOff: Int): Unit =
-      if (sequential) {
-        // full-band scan of a multi-scan SEQUENTIAL stream: the
-        // sequential DC diff model then the AC model over 1..63, raw
-        // coefficients into the buffer (dequant happens once at EOI)
-        decodeDcFirst(c, ci, blkOff)
-        decodeAcFirst(c, blkOff)
-      } else if (isDc) {
-        if (ah == 0) decodeDcFirst(c, ci, blkOff) else decodeDcRefine(c, blkOff)
-      } else {
-        if (ah == 0) decodeAcFirst(c, blkOff) else decodeAcRefine(c, blkOff)
+    /** Byte-align at a restart boundary: the next marker in the stream
+      * must be the expected RSTn (within entropy data every 0xFF is
+      * followed by a stuffed byte < 0x80, so the first 0xFF followed by
+      * >= 0x90 IS the marker); then a fresh segment — zeroed statistics
+      * and DC contexts, re-initialized coder past the marker.
+      */
+    def restart(idx: Int): Unit = {
+      var i = bp
+      while (i + 1 < b.length && !((b(i) & 0xff) == 0xff && (b(i + 1) & 0xff) >= 0x90))
+        i += 1
+      if (i + 1 >= b.length || (b(i + 1) & 0xff) != 0xd0 + idx) throw JpegBail
+      var t = 0
+      while (t < 4) {
+        java.util.Arrays.fill(dcStats(t), 0.toByte)
+        java.util.Arrays.fill(acStats(t), 0.toByte)
+        t += 1
       }
+      java.util.Arrays.fill(dcContext, 0)
+      init(i + 2)
+    }
 
+    // scan data ends where the coder stopped: the next marker at/after
+    // the last consumed byte (fill 0xFFs allowed; FF00 is data)
+    def end: Int = {
+      var i = bp
+      while (i + 1 < b.length) {
+        if ((b(i) & 0xff) == 0xff) {
+          var j = i + 1
+          while (j < b.length && (b(j) & 0xff) == 0xff) j += 1
+          if (j < b.length && (b(j) & 0xff) >= 0x90) return j - 1
+          i = j + 1
+        } else i += 1
+      }
+      throw JpegBail // ran off the end without a terminating marker
+    }
+  }
+
+  /** Per-block callback of [[jScanBlocks]]: component, its frame index,
+    * and the block's position on the component's grid.
+    */
+  private abstract class JBlockFn {
+    def apply(c: JComp, ci: Int, bx: Int, by: Int): Unit
+  }
+
+  /** The one MCU/block walker (T.81 A.2): a single-component scan visits
+    * its REAL block grid row by row, one block per MCU; an interleaved
+    * scan visits MCUs over the padded grid, each component's h×v blocks
+    * in turn. Every `restartInt` MCUs the coder resynchronizes and the
+    * DC predictions reset.
+    */
+  private def jScanBlocks(f: JFrame, scan: Array[JComp], idx: Array[Int],
+                          coder: JCoder, fn: JBlockFn): Unit = {
+    scan.foreach(_.pred = 0)
     var mcu = 0; var rstIdx = 0
-    def maybeRestart(): Unit =
-      if (restartInt > 0 && mcu > 0 && mcu % restartInt == 0) {
-        val next = qm.seekRestart(rstIdx)
-        rstIdx = (rstIdx + 1) & 7
-        var t = 0
-        while (t < 4) {
-          java.util.Arrays.fill(dcStats(t), 0.toByte)
-          java.util.Arrays.fill(acStats(t), 0.toByte)
-          t += 1
-        }
-        scanComps.foreach(_.pred = 0)
-        java.util.Arrays.fill(dcContext, 0)
-        qm.init(next)
+    def nextMcu(): Unit = {
+      if (f.restartInt > 0 && mcu > 0 && mcu % f.restartInt == 0) {
+        coder.restart(rstIdx); rstIdx = (rstIdx + 1) & 7
+        scan.foreach(_.pred = 0)
       }
-
-    if (scanComps.length == 1) {
-      // non-interleaved: one block per MCU over the REAL grid
-      val c = scanComps(0)
-      val ci = compIdx(0)
+      mcu += 1
+    }
+    if (scan.length == 1) {
+      val c = scan(0); val ci = idx(0)
       var by = 0
       while (by < c.rh) {
         var bx = 0
-        while (bx < c.rw) {
-          maybeRestart()
-          decodeBlock(c, ci, (by * c.bw + bx) * 64)
-          mcu += 1
-          bx += 1
-        }
+        while (bx < c.rw) { nextMcu(); fn(c, ci, bx, by); bx += 1 }
         by += 1
       }
     } else {
-      // interleaved DC scan: MCU order over the padded grid
-      val mcusX = comps.map(c => c.bw / c.h).max
-      val mcusY = comps.map(c => c.bh / c.v).max
       var my = 0
-      while (my < mcusY) {
+      while (my < f.mcusY) {
         var mx = 0
-        while (mx < mcusX) {
-          maybeRestart()
-          var ci = 0
-          while (ci < scanComps.length) {
-            val c = scanComps(ci)
+        while (mx < f.mcusX) {
+          nextMcu()
+          var s = 0
+          while (s < scan.length) {
+            val c = scan(s)
             var v = 0
             while (v < c.v) {
               var hh = 0
-              while (hh < c.h) {
-                decodeBlock(c, compIdx(ci),
-                  ((my * c.v + v) * c.bw + (mx * c.h + hh)) * 64)
-                hh += 1
-              }
+              while (hh < c.h) { fn(c, idx(s), mx * c.h + hh, my * c.v + v); hh += 1 }
               v += 1
             }
-            ci += 1
+            s += 1
           }
-          mcu += 1
           mx += 1
         }
         my += 1
       }
     }
-    // scan data ends where the coder stopped: the next marker at/after
-    // the last consumed byte (fill 0xFFs allowed; FF00 is data)
-    var i = qm.bp
-    while (i + 1 < b.length) {
-      if ((b(i) & 0xff) == 0xff) {
-        var j = i + 1
-        while (j < b.length && (b(j) & 0xff) == 0xff) j += 1
-        if (j < b.length && (b(j) & 0xff) >= 0x90) return j - 1
-        i = j + 1
-      } else i += 1
-    }
-    throw JpegBail // ran off the end without a terminating marker
   }
 
-  /** Separable IDCT of one dequantized NATURAL-order coefficient block
-    * into a component plane at (x0, y0), with the deterministic
-    * floor(x+128.5) rounding the oracle replays.
+  private def jCoder(b: Array[Byte], off: Int, f: JFrame): JCoder =
+    if (f.arith) new JQm(b, off, f.comps.length)
+    else new JBits(b, off, eobRuns = f.progressive)
+
+  /** The single interleaved scan of a sequential frame (8- or 12-bit),
+    * decoded straight into the component planes: no coefficient buffer,
+    * so this path keeps the 64M-sample cap.
     */
-  private def jIdctBlock(coef: Array[Int], tmp: Array[Double],
-                         plane: Array[Byte], planeW: Int,
-                         x0: Int, y0: Int): Unit = {
-    var x = 0
-    while (x < 8) {
-      var v = 0
-      while (v < 8) {
-        var acc = 0.0
-        var u = 0
-        while (u < 8) { acc += coef(v * 8 + u) * IdctCos(u)(x); u += 1 }
-        tmp(v * 8 + x) = acc
-        v += 1
-      }
-      x += 1
+  private def jScanDirect(b: Array[Byte], off: Int, f: JFrame,
+                          scan: Array[JComp], idx: Array[Int]): Unit = {
+    if (!f.arith && scan.exists(c => f.dcT(c.td) == null || f.acT(c.ta) == null))
+      throw JpegBail
+    val idct = new JIdct(f)
+    val coder = jCoder(b, off, f)
+    val zz = new Array[Int](64)
+    jScanBlocks(f, scan, idx, coder, (c, ci, bx, by) => {
+      java.util.Arrays.fill(zz, 0)
+      c.pred += coder.dcDiff(f, c, ci)
+      zz(0) = c.pred
+      coder.acFirst(f, c, zz, 0, 1, 63, 0)
+      idct.block(c, zz, 0, f.qt(c.tq), bx, by)
+    })
+  }
+
+  /** One scan of a buffered frame — a progressive pass (T.81 Annex G:
+    * DC scans interleaved or single-component, AC scans single-component
+    * over [Ss, Se], first (Ah=0) and refinement (Ah=Al+1) passes) or one
+    * full-band scan of a multi-scan sequential frame — decoded into the
+    * coefficient buffers. Returns the offset of the next marker.
+    */
+  private def jScanBuffered(b: Array[Byte], off: Int, f: JFrame,
+                            scan: Array[JComp], idx: Array[Int]): Int = {
+    val ss = f.ss; val se = f.se; val ah = f.ah; val al = f.al
+    if (al > 13) throw JpegBail
+    if (ah != 0 && ah != al + 1) throw JpegBail
+    val isDc = f.progressive && ss == 0
+    if (f.progressive) {
+      if (isDc && se != 0) throw JpegBail
+      if (!isDc && (scan.length != 1 || se < ss || se > 63)) throw JpegBail
     }
-    var y = 0
-    while (y < 8) {
-      var xx = 0
-      while (xx < 8) {
-        var f = 0.0
+    if (!f.arith && scan.exists(c =>
+        (!isDc && f.acT(c.ta) == null) ||
+          ((!f.progressive || (isDc && ah == 0)) && f.dcT(c.td) == null)))
+      throw JpegBail
+    val coder = jCoder(b, off, f)
+    jScanBlocks(f, scan, idx, coder, (c, ci, bx, by) => {
+      val o = (by * c.bw + bx) * 64
+      if (!f.progressive) {
+        // raw coefficients: dequantization happens once, at EOI
+        c.pred += coder.dcDiff(f, c, ci)
+        c.coefs(o) = c.pred
+        coder.acFirst(f, c, c.coefs, o, 1, 63, 0)
+      } else if (isDc) {
+        if (ah == 0) {
+          c.pred += coder.dcDiff(f, c, ci)
+          c.coefs(o) = c.pred << al
+        } else coder.dcRefine(c.coefs, o, 1 << al)
+      } else if (ah == 0) coder.acFirst(f, c, c.coefs, o, ss, se, al)
+      else coder.acRefine(f, c, c.coefs, o, ss, se, al)
+    })
+    coder.end
+  }
+
+  /** Dequantize + separable IDCT + level shift + clamp of one zigzag
+    * block into its component's plane, with the deterministic
+    * floor(x + 2^(P−1) + 0.5) rounding the oracle replays (P = 8 or 12,
+    * clamp [0, 2^P − 1]). Allocates the planes on the padded grid.
+    */
+  private final class JIdct(f: JFrame) {
+    private val nat = new Array[Int](64)
+    private val tmp = new Array[Double](64)
+    private val bias = (1 << (f.precision - 1)) + 0.5
+    private val max = (1 << f.precision) - 1
+    f.comps.foreach { c =>
+      c.planeW = c.bw * 8
+      if (f.precision == 12) c.plane12 = new Array[Int](c.planeW * c.bh * 8)
+      else c.plane = new Array[Byte](c.planeW * c.bh * 8)
+    }
+
+    def block(c: JComp, zz: Array[Int], off: Int, q: Array[Int],
+              bx: Int, by: Int): Unit = {
+      var k = 0
+      while (k < 64) { nat(JpegZigzag(k)) = zz(off + k) * q(k); k += 1 }
+      var x = 0
+      while (x < 8) {
         var v = 0
-        while (v < 8) { f += tmp(v * 8 + xx) * IdctCos(v)(y); v += 1 }
-        var p = StrictMath.floor(f + 128.5).toInt
-        if (p < 0) p = 0 else if (p > 255) p = 255
-        plane((y0 + y) * planeW + x0 + xx) = p.toByte
-        xx += 1
+        while (v < 8) {
+          var acc = 0.0
+          var u = 0
+          while (u < 8) { acc += nat(v * 8 + u) * IdctCos(u)(x); u += 1 }
+          tmp(v * 8 + x) = acc
+          v += 1
+        }
+        x += 1
       }
-      y += 1
+      val base = by * 8 * c.planeW + bx * 8
+      var y = 0
+      while (y < 8) {
+        var xx = 0
+        while (xx < 8) {
+          var s = 0.0
+          var v = 0
+          while (v < 8) { s += tmp(v * 8 + xx) * IdctCos(v)(y); v += 1 }
+          var p = StrictMath.floor(s + bias).toInt
+          if (p < 0) p = 0 else if (p > max) p = max
+          if (c.plane12 != null) c.plane12(base + y * c.planeW + xx) = p
+          else c.plane(base + y * c.planeW + xx) = p.toByte
+          xx += 1
+        }
+        y += 1
+      }
     }
   }
 
-  /** Assemble decoded component planes into the output raster: crop
-    * (gray) or replication-upsample + fixed-point YCbCr→RGB (color) —
-    * shared by the baseline and progressive paths.
+  /** Dequantize + IDCT every buffered block at EOI, then crop, upsample
+    * and color-convert.
     */
-  private def jAssemble(w: Int, h: Int, comps: Array[JComp],
-                        hmax: Int, vmax: Int): Raster = {
-    if (comps.length == 1) {
-      val c = comps(0)
+  private def jFinish(f: JFrame): Raster = {
+    val idct = new JIdct(f)
+    f.comps.foreach { c =>
+      val q = f.qt(c.tq)
+      var by = 0
+      while (by < c.bh) {
+        var bx = 0
+        while (bx < c.bw) {
+          idct.block(c, c.coefs, (by * c.bw + bx) * 64, q, bx, by)
+          bx += 1
+        }
+        by += 1
+      }
+    }
+    jAssemble(f)
+  }
+
+  /** Assemble decoded 8-bit component planes into the output raster: crop
+    * (gray) or replication-upsample + fixed-point YCbCr→RGB (color).
+    */
+  private def jAssemble(f: JFrame): Raster = {
+    val w = f.w; val h = f.h
+    if (f.comps.length == 1) {
+      val c = f.comps(0)
       val pix = new Array[Byte](w * h)
       var y = 0
       while (y < h) {
@@ -1866,7 +1912,8 @@ object MediaCodecHelper {
       }
       new Raster(w, h, 1, pix)
     } else {
-      val cy = comps(0); val cb = comps(1); val cr = comps(2)
+      val hmax = f.hmax; val vmax = f.vmax
+      val cy = f.comps(0); val cb = f.comps(1); val cr = f.comps(2)
       val pix = new Array[Byte](w * h * 3)
       var y = 0
       while (y < h) {
@@ -1892,283 +1939,183 @@ object MediaCodecHelper {
     }
   }
 
-  // ---------------- progressive JPEG (SOF2) scan machinery ----------------
-  //
-  // T.81 Annex G, Huffman procedures: a progressive frame carries its DCT
-  // coefficients across MULTIPLE scans — spectral selection (each AC scan
-  // covers a zigzag band [Ss, Se] of ONE component; DC scans cover
-  // coefficient 0, optionally interleaved over several components) and
-  // successive approximation (the first scan of a band delivers the
-  // point-transformed value << Al; each refinement scan appends one
-  // magnitude bit at the next lower Al). Decoding therefore buffers the
-  // quantized coefficients for the whole image (zigzag order, padded
-  // MCU-aligned block grid per component) and runs dequant + IDCT +
-  // assemble once, at EOI.
-
-  /** Allocate per-component coefficient buffers and block-grid geometry:
-    * padded (MCU-aligned) grid bw×bh for interleaved addressing, real
-    * grid rw×rh (T.81 A.2.2) for the non-interleaved scans that only
-    * visit blocks covering actual samples.
-    */
-  private def jProgAlloc(w: Int, h: Int, comps: Array[JComp]): Unit = {
-    var hmax = 1; var vmax = 1
-    comps.foreach { c => if (c.h > hmax) hmax = c.h; if (c.v > vmax) vmax = c.v }
-    val mcusX = (w + 8 * hmax - 1) / (8 * hmax)
-    val mcusY = (h + 8 * vmax - 1) / (8 * vmax)
-    comps.foreach { c =>
-      c.bw = mcusX * c.h
-      c.bh = mcusY * c.v
-      c.rw = ((w * c.h + hmax - 1) / hmax + 7) / 8
-      c.rh = ((h * c.v + vmax - 1) / vmax + 7) / 8
-      c.coefs = new Array[Int](c.bw * c.bh * 64)
-      c.pred = 0
+  /** Crop the 12-bit plane to the frame. */
+  private def j12Crop(f: JFrame): J12 = {
+    val c = f.comps(0)
+    val out = new Array[Int](f.w * f.h)
+    var y = 0
+    while (y < f.h) {
+      System.arraycopy(c.plane12, y * c.planeW, out, y * f.w, f.w)
+      y += 1
     }
+    new J12(f.w, f.h, out)
   }
 
-  /** Decode one progressive scan into the coefficient buffers; returns
-    * the byte offset of the next marker's 0xFF. Envelope: DC scans
-    * (Ss=Se=0) interleaved or single-component, AC scans (1≤Ss≤Se≤63)
-    * single-component, first (Ah=0) and refinement (Ah=Al+1) passes,
-    * restart markers. Anything else bails → null from the entry point.
+  /** One interleaved lossless scan (T.81 Annex H), either coder: for
+    * each sample in raster order (components interleaved per MCU — one
+    * sample each at 1×1 sampling), decode the difference, add it to the
+    * prediction modulo 2^16, then apply the inverse point transform.
+    *
+    * Huffman (SOF3): the SSSS category from the component's DC-class
+    * table, then the magnitude bits (SSSS=16 → 32768, no bits).
+    * Arithmetic (SOF11): the DC difference tree under the §H.1.2.2
+    * model — the zero/sign/first-magnitude decisions conditioned on the
+    * 5×5 classification of the two neighbouring differences (Da: the
+    * diff decoded at the left sample of the current row; Db: the diff at
+    * the same column of the row above — both category 0 where the
+    * neighbour doesn't exist), each classified against the DAC L/U
+    * bounds of the component's table, and TWO X/M magnitude-bin sets
+    * selected by whether Db classifies large (either sign). Statistics
+    * area: 25 contexts × 4 (S0/SS/SP/SN) + 2 × (X1–X15 + M2–M15) = 158
+    * bins per table. Magnitudes run to 32768, so X walks may reach X15 —
+    * the full 16-bit difference ring.
     */
-  private def jProgScan(b: Array[Byte], dataOff: Int, comps: Array[JComp],
-                        scanComps: Array[JComp], ss: Int, se: Int,
-                        ah: Int, al: Int, dcT: Array[JHuff],
-                        acT: Array[JHuff], restartInt: Int,
-                        sequential: Boolean = false): Int = {
-    if (al < 0 || al > 13) throw JpegBail
-    if (ah != 0 && ah != al + 1) throw JpegBail
-    val isDc = ss == 0 && !sequential
-    if (sequential) // full-band DC+AC per block: both tables required
-      scanComps.foreach(c =>
-        if (dcT(c.td) == null || acT(c.ta) == null) throw JpegBail)
-    else {
-      if (isDc && se != 0) throw JpegBail
-      if (!isDc && (scanComps.length != 1 || se < ss || se > 63)) throw JpegBail
-      if (isDc && ah == 0)
-        scanComps.foreach(c => if (dcT(c.td) == null) throw JpegBail)
-      if (!isDc && acT(scanComps(0).ta) == null) throw JpegBail
-    }
-    var hmax = 1; var vmax = 1
-    comps.foreach { c => if (c.h > hmax) hmax = c.h; if (c.v > vmax) vmax = c.v }
-    val r = new JBits(b, dataOff, b.length)
-    scanComps.foreach(_.pred = 0)
-    var eobrun = 0
-    val p1 = 1 << al
-
-    def decodeDc(c: JComp, blkOff: Int): Unit =
-      if (ah == 0) {
-        val t = jDecodeSym(r, dcT(c.td))
-        if (t > 11) throw JpegBail
-        c.pred += jExtend(r.receive(t), t)
-        c.coefs(blkOff) = c.pred << al
-      } else if (r.bit() == 1) c.coefs(blkOff) |= p1
-
-    // AC first pass (Ah=0): baseline run/size coding plus EOB runs —
-    // symbol (r, 0) with r < 15 ends the band for 2^r + receive(r)
-    // consecutive blocks (this one included).
-    def decodeAcFirst(c: JComp, blkOff: Int): Unit = {
-      if (eobrun > 0) { eobrun -= 1; return }
-      val cf = c.coefs
-      var k = ss
-      while (k <= se) {
-        val rs = jDecodeSym(r, acT(c.ta))
-        val run = rs >> 4; val s = rs & 15
-        if (s == 0) {
-          if (run == 15) k += 16 // ZRL
-          else {
-            eobrun = (1 << run) - 1
-            if (run > 0) eobrun += r.receive(run)
-            return
-          }
-        } else {
-          k += run
-          if (k > se) throw JpegBail
-          cf(blkOff + k) = jExtend(r.receive(s), s) << al
-          k += 1
-        }
+  private def jLosslessScan(b: Array[Byte], off: Int, f: JFrame,
+                            scan: Array[JComp]): JLossless = {
+    val sel = f.ss // predictor
+    val pt = f.al // point transform
+    if (sel < 1 || sel > 7 || f.se != 0 || f.ah != 0 || pt >= f.precision)
+      return null
+    if (!f.arith && scan.exists(c => f.dcT(c.td) == null)) return null
+    val w = f.w; val h = f.h; val nc = scan.length
+    // Restart envelope: intervals must land on row starts (at 1x1
+    // interleaved sampling a line is w MCUs). The H.1.1 reset rules
+    // name "the first line of the restart interval", which is only
+    // unambiguous when intervals ARE whole lines — mid-row restarts
+    // would need Rb/Rc references across the resynchronization
+    // point, defeating it; they stay honest-null.
+    val restartRows =
+      if (f.restartInt == 0) 0
+      else if (f.restartInt % w == 0) f.restartInt / w
+      else return null
+    val bits = if (f.arith) null else new JBits(b, off, eobRuns = false)
+    val qm = if (f.arith) new JQm(b, off, nc) else null
+    val out = new Array[Int](w * h * nc)
+    val init = 1 << (f.precision - pt - 1)
+    val prev = Array.ofDim[Int](nc, w) // reconstructed row above (Rb/Rc)
+    val cur = Array.ofDim[Int](nc, w)
+    // arithmetic conditioning state: the category of the diff decoded at
+    // each column of the row above (Db source, overwritten in place as
+    // the row advances) and at the left neighbour (Da)
+    val catUp = Array.ofDim[Int](nc, w)
+    val catLeft = new Array[Int](nc)
+    var rstIdx = 0
+    var y = 0
+    while (y < h) {
+      // H.2.2 row-aligned restart: byte-align onto the expected RSTn and
+      // treat this row as a scan-start first line (default prediction at
+      // x=0, Ra for the rest — the H.1.1 reset rules); an arithmetic
+      // interval is its own segment, (Da, Db) state zeroed too
+      val restartRow = restartRows > 0 && y > 0 && y % restartRows == 0
+      if (restartRow) {
+        if (qm != null) {
+          qm.restart(rstIdx)
+          catUp.foreach(java.util.Arrays.fill(_, 0))
+        } else bits.restart(rstIdx)
+        rstIdx = (rstIdx + 1) & 7
       }
-    }
-
-    // AC refinement pass (Ah=Al+1): newly nonzero coefficients arrive as
-    // (run, 1) symbols with a sign bit; coefficients already nonzero from
-    // earlier passes read one correction bit wherever the scan advances
-    // past them (they do not break zero runs); EOB runs carry correction
-    // bits for the remainder of each ended band. The history-bit test
-    // (cur & p1) is exact because every magnitude at this level is a
-    // multiple of 2^Al, so two's complement keeps bit Al equal to the
-    // magnitude's bit Al.
-    def decodeAcRefine(c: JComp, blkOff: Int): Unit = {
-      val cf = c.coefs
-      var k = ss
-      if (eobrun == 0) {
-        var atEob = false
-        while (k <= se && !atEob) {
-          val rs = jDecodeSym(r, acT(c.ta))
-          var run = rs >> 4; val s = rs & 15
-          var newval = 0
-          if (s == 0) {
-            if (run != 15) {
-              eobrun = 1 << run
-              if (run > 0) eobrun += r.receive(run)
-              atEob = true
+      val firstLine = y == 0 || restartRow
+      java.util.Arrays.fill(catLeft, 0)
+      var x = 0
+      while (x < w) {
+        var ci = 0
+        while (ci < nc) {
+          val c = scan(ci)
+          val diff =
+            if (qm == null) bits.diff(f.dcT(c.td), 16)
+            else {
+              val up = catUp(ci)(x)
+              val d = qm.diff(qm.dcStats(c.td), (catLeft(ci) * 5 + up) * 4,
+                if (up > 2) 129 else 100, f.condL(c.td), f.condU(c.td))
+              catLeft(ci) = qm.cat
+              catUp(ci)(x) = qm.cat
+              d
             }
-            // run == 15: ZRL — advance over 16 zero-history positions
-          } else {
-            if (s != 1) throw JpegBail
-            newval = if (r.bit() == 1) p1 else -p1
-          }
-          if (!atEob) {
-            var placed = false
-            while (k <= se && !placed) {
-              val cur = cf(blkOff + k)
-              if (cur != 0) {
-                if (r.bit() == 1 && (cur & p1) == 0)
-                  cf(blkOff + k) = if (cur >= 0) cur + p1 else cur - p1
-              } else {
-                if (run == 0) {
-                  if (s != 0) cf(blkOff + k) = newval
-                  placed = true
-                } else run -= 1
+          val pred =
+            if (firstLine && x == 0) init
+            else if (firstLine) cur(ci)(x - 1) // first line: Ra
+            else if (x == 0) prev(ci)(0) // first column: Rb
+            else {
+              val ra = cur(ci)(x - 1)
+              val rb = prev(ci)(x)
+              val rc = prev(ci)(x - 1)
+              sel match {
+                case 1 => ra
+                case 2 => rb
+                case 3 => rc
+                case 4 => ra + rb - rc
+                case 5 => ra + ((rb - rc) >> 1)
+                case 6 => rb + ((ra - rc) >> 1)
+                case _ => (ra + rb) >> 1
               }
-              k += 1
             }
-            if (!placed && s != 0) throw JpegBail // ran off the band
-          }
+          val rx = (pred + diff) & 0xffff
+          cur(ci)(x) = rx
+          out((y * w + x) * nc + ci) = (rx << pt) & 0xffff
+          ci += 1
         }
+        x += 1
       }
-      if (eobrun > 0) {
-        // correction sweep over the rest of the band, then consume one
-        // block of the run
-        while (k <= se) {
-          val cur = cf(blkOff + k)
-          if (cur != 0) {
-            if (r.bit() == 1 && (cur & p1) == 0)
-              cf(blkOff + k) = if (cur >= 0) cur + p1 else cur - p1
-          }
-          k += 1
-        }
-        eobrun -= 1
+      var ci = 0
+      while (ci < nc) {
+        System.arraycopy(cur(ci), 0, prev(ci), 0, w)
+        ci += 1
       }
+      y += 1
     }
-
-    // sequential full-band block: the baseline per-block entropy decode
-    // (DC diff + AC run/size), stored RAW in zigzag order — dequant
-    // happens once at EOI like every buffered path
-    def decodeSeq(c: JComp, blkOff: Int): Unit = {
-      val cf = c.coefs
-      val t = jDecodeSym(r, dcT(c.td))
-      if (t > 11) throw JpegBail
-      c.pred += jExtend(r.receive(t), t)
-      cf(blkOff) = c.pred
-      var k = 1
-      while (k < 64) {
-        val rs = jDecodeSym(r, acT(c.ta))
-        val run = rs >> 4; val s = rs & 15
-        if (s == 0) {
-          if (run == 15) k += 16 else k = 64 // ZRL / EOB
-        } else {
-          k += run
-          if (k > 63) throw JpegBail
-          cf(blkOff + k) = jExtend(r.receive(s), s)
-          k += 1
-        }
-      }
-    }
-
-    def decodeBlock(c: JComp, blkOff: Int): Unit =
-      if (sequential) decodeSeq(c, blkOff)
-      else if (isDc) decodeDc(c, blkOff)
-      else if (ah == 0) decodeAcFirst(c, blkOff)
-      else decodeAcRefine(c, blkOff)
-
-    var mcu = 0; var rstIdx = 0
-    def maybeRestart(): Unit =
-      if (restartInt > 0 && mcu > 0 && mcu % restartInt == 0) {
-        r.restart(rstIdx); rstIdx = (rstIdx + 1) & 7
-        scanComps.foreach(_.pred = 0)
-        eobrun = 0
-      }
-
-    if (scanComps.length == 1) {
-      // non-interleaved: one block per MCU over the REAL grid, row
-      // stride = the padded grid width
-      val c = scanComps(0)
-      var by = 0
-      while (by < c.rh) {
-        var bx = 0
-        while (bx < c.rw) {
-          maybeRestart()
-          decodeBlock(c, (by * c.bw + bx) * 64)
-          mcu += 1
-          bx += 1
-        }
-        by += 1
-      }
-    } else {
-      // interleaved DC scan: MCU order over the padded grid
-      val mcusX = (comps.map(c => c.bw / c.h).max)
-      val mcusY = (comps.map(c => c.bh / c.v).max)
-      var my = 0
-      while (my < mcusY) {
-        var mx = 0
-        while (mx < mcusX) {
-          maybeRestart()
-          var ci = 0
-          while (ci < scanComps.length) {
-            val c = scanComps(ci)
-            var v = 0
-            while (v < c.v) {
-              var hh = 0
-              while (hh < c.h) {
-                decodeBlock(c,
-                  ((my * c.v + v) * c.bw + (mx * c.h + hh)) * 64)
-                hh += 1
-              }
-              v += 1
-            }
-            ci += 1
-          }
-          mcu += 1
-          mx += 1
-        }
-        my += 1
-      }
-    }
-    r.pos
+    new JLossless(w, h, nc, f.precision, out)
   }
 
-  /** Dequantize + IDCT every buffered block into component planes, then
-    * crop/upsample/color-convert — the progressive twin of [[jScan]]'s
-    * tail, run once at EOI.
+  /** Full 8-bit JPEG decode to a raster: one run of the segment walk
+    * [[jWalk]], whose SOS dispatch picks the process.
+    *
+    * Envelope (null outside it — honest partial decoder, never garbage):
+    * SOF0/SOF1 (baseline/extended sequential) in a single interleaved
+    * scan or split across multiple full-band non-interleaved scans, SOF2
+    * progressive (spectral selection + successive approximation, Annex
+    * G), and their ARITHMETIC-coded twins SOF9/SOF10 (the Annex D
+    * QM-coder with the F.1.4.4/G.2 statistical models and DAC
+    * conditioning). 8-bit precision, 1 or 3 components, sampling factors
+    * 1 or 2, restart markers, 8- or 16-bit quant tables. Either entropy
+    * coder ([[JBits]], [[JQm]]) feeds the same block walker
+    * ([[jScanBlocks]]) and the same dequant + IDCT ([[JIdct]]): a single
+    * interleaved sequential scan decodes straight into the component
+    * planes, every other layout into coefficient buffers finished at EOI.
+    * Lossless (SOF3/SOF11) and 12-bit gray (SOF1) frames decode at full
+    * precision through [[decodeJpegLossless]] / [[decodeJpeg12]], never
+    * through this 8-bit raster one. Hierarchical frames (Annex J) stay
+    * null — the one T.81 coding process with no mainstream decoder
+    * support either.
+    *
+    * Output: gray raster (bpp=1) for 1 component; interleaved RGB (bpp=3)
+    * for 3, converted with the fixed-point CCIR 601 constants
+    * (91881/22554/46802/116130 : 65536) and floor((x+32768)>>16) rounding
+    * so an oracle replays the exact integers.
     */
-  private def jProgFinish(w: Int, h: Int, comps: Array[JComp],
-                          qt: Array[Array[Int]]): Raster = {
-    var hmax = 1; var vmax = 1
-    comps.foreach { c => if (c.h > hmax) hmax = c.h; if (c.v > vmax) vmax = c.v }
-    val nat = new Array[Int](64)
-    val tmp = new Array[Double](64)
-    comps.foreach { c =>
-      val q = qt(c.tq)
-      c.planeW = c.bw * 8
-      c.plane = new Array[Byte](c.planeW * c.bh * 8)
-      var by = 0
-      while (by < c.bh) {
-        var bx = 0
-        while (bx < c.bw) {
-          val blkOff = (by * c.bw + bx) * 64
-          var k = 0
-          while (k < 64) {
-            nat(JpegZigzag(k)) = c.coefs(blkOff + k) * q(k)
-            k += 1
-          }
-          jIdctBlock(nat, tmp, c.plane, c.planeW, bx * 8, by * 8)
-          bx += 1
-        }
-        by += 1
-      }
-    }
-    jAssemble(w, h, comps, hmax, vmax)
+  def decodeJpeg(bytes: Array[Byte]): Raster = decodeJpeg(bytes, false)
+
+  /** As [[decodeJpeg]], with `impliedStdTables` preloading the Annex K
+    * typical Huffman tables into slots 0 (luma) and 1 (chroma) — the
+    * OpenDML convention for DHT-less MJPEG frames. In-stream DHT
+    * segments still override the implied tables.
+    */
+  def decodeJpeg(bytes: Array[Byte], impliedStdTables: Boolean): Raster =
+    jRun(bytes, new JFrame(KDct, impliedStdTables)).asInstanceOf[Raster]
+
+  /** Strict decode first; when that fails AND the walk reached a scan
+    * with no DHT before it, retry with the Annex K implied standard
+    * tables — so a frame extracted from a DHT-less MJPEG AVI (which
+    * [[AviCodecHelper.mjpegStats]] decodes via the same convention)
+    * composes with the still-image stats/resize path instead of nulling.
+    * A stream that HAS its own DHT never falls back: retrying it under
+    * different tables could "succeed" with garbage pixels. (DHT between
+    * later scans of a multi-scan frame is fine: in-stream tables override
+    * the implied ones scan by scan.)
+    */
+  def decodeJpegAuto(bytes: Array[Byte]): Raster = {
+    val f = new JFrame(KDct, impliedStdTables = false)
+    val r = jRun(bytes, f).asInstanceOf[Raster]
+    if (r != null || !f.scanSeen || f.dhtSeen) r else decodeJpeg(bytes, true)
   }
 
   // ---------------- 12-bit extended-sequential JPEG (SOF1) ----------------
@@ -2191,15 +2138,20 @@ object MediaCodecHelper {
     */
   def jpeg12Stats(bytes: Array[Byte]): InternalRow = {
     val r = decodeJpeg12(bytes)
-    if (r == null) return null
+    if (r == null) null
+    else new GenericInternalRow(Array[Any](r.width, r.height) ++ sampleStats(r.samples))
+  }
+
+  /** (px_sum, px_min, px_max) over full-precision samples. */
+  private def sampleStats(s: Array[Int]): Array[Any] = {
     var sum = 0L; var mn = Int.MaxValue; var mx = 0
     var i = 0
-    while (i < r.samples.length) {
-      val v = r.samples(i)
+    while (i < s.length) {
+      val v = s(i)
       sum += v; if (v < mn) mn = v; if (v > mx) mx = v
       i += 1
     }
-    new GenericInternalRow(Array[Any](r.width, r.height, sum, mn, mx))
+    Array[Any](sum, mn, mx)
   }
 
   /** 12-bit extended-sequential JPEG decode (T.81, SOF1, Huffman).
@@ -2212,201 +2164,8 @@ object MediaCodecHelper {
     * rounding the 8-bit path proves at floor(x+128.5), clamped to
     * [0, 4095].
     */
-  def decodeJpeg12(bytes: Array[Byte]): J12 = {
-    if (bytes == null || bytes.length < 4) return null
-    try decodeJpeg12_0(bytes)
-    catch { case _: RuntimeException => null }
-  }
-
-  private def decodeJpeg12_0(b: Array[Byte]): J12 = {
-    if ((b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return null
-    val qt = Array.ofDim[Int](4, 64)
-    // DQT-populated flag per slot, same honest-null rationale as the
-    // 8-bit path: never dequantize against a never-installed table
-    val qtDef = new Array[Boolean](4)
-    val dcT = new Array[JHuff](4)
-    val acT = new Array[JHuff](4)
-    var w = 0; var h = 0
-    var haveFrame = false
-    var tq = 0; var td = 0; var ta = 0
-    var restartInt = 0
-    var off = 2
-    while (off + 1 < b.length) {
-      if ((b(off) & 0xff) != 0xff) return null
-      var m = b(off + 1) & 0xff
-      while (m == 0xff && off + 2 < b.length) { off += 1; m = b(off + 1) & 0xff }
-      off += 2
-      def segLen: Int = {
-        if (off + 2 > b.length) throw JpegBail
-        val len = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-        if (len < 2 || off + len > b.length) throw JpegBail
-        len
-      }
-      m match {
-        case 0xd8 | 0x01 => // standalone
-        case 0xd9 => return null // EOI before the scan
-        case 0xdb => // DQT: 8- or 16-bit tables
-          val len = segLen
-          var p = off + 2; val stop = off + len
-          while (p < stop) {
-            val pq = (b(p) & 0xff) >> 4; val t = b(p) & 0x0f
-            if (pq > 1 || t > 3) throw JpegBail
-            p += 1
-            val step = if (pq == 0) 1 else 2
-            if (p + 64 * step > stop) throw JpegBail
-            var i = 0
-            while (i < 64) {
-              qt(t)(i) =
-                if (pq == 0) b(p + i) & 0xff
-                else ((b(p + 2 * i) & 0xff) << 8) | (b(p + 2 * i + 1) & 0xff)
-              if (qt(t)(i) == 0) throw JpegBail
-              i += 1
-            }
-            qtDef(t) = true
-            p += 64 * step
-          }
-          off += len
-        case 0xc4 => // DHT
-          val len = segLen
-          var p = off + 2; val stop = off + len
-          while (p < stop) {
-            val tc = (b(p) & 0xff) >> 4; val th = b(p) & 0x0f
-            if (tc > 1 || th > 3) throw JpegBail
-            p += 1
-            if (p + 16 > stop) throw JpegBail
-            val counts = Array.tabulate(16)(i => b(p + i) & 0xff)
-            p += 16
-            val n = counts.sum
-            if (n > 256 || p + n > stop) throw JpegBail
-            val vals = Array.tabulate(n)(i => b(p + i) & 0xff)
-            p += n
-            val t = new JHuff(counts, vals)
-            if (tc == 0) dcT(th) = t else acT(th) = t
-          }
-          off += len
-        case 0xc1 => // SOF1: extended sequential
-          val len = segLen
-          if (len < 11) throw JpegBail
-          val precision = b(off + 2) & 0xff
-          h = ((b(off + 3) & 0xff) << 8) | (b(off + 4) & 0xff)
-          w = ((b(off + 5) & 0xff) << 8) | (b(off + 6) & 0xff)
-          val nc = b(off + 7) & 0xff
-          if (precision != 12 || w <= 0 || h <= 0 || nc != 1) return null
-          if (w.toLong * h > 16L * 1024 * 1024) return null
-          val hv = b(off + 9) & 0xff
-          if (hv != 0x11) return null // 1x1 sampling
-          tq = b(off + 10) & 0xff
-          if (tq > 3) return null
-          haveFrame = true
-          off += len
-        case x if (x >= 0xc0 && x <= 0xcf && x != 0xc1 && x != 0xc4) =>
-          return null // 8-bit baseline / progressive / lossless: other paths
-        case 0xdd =>
-          val len = segLen
-          if (len != 4) throw JpegBail
-          restartInt = ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
-          off += len
-        case 0xda =>
-          val len = segLen
-          if (!haveFrame) return null
-          if ((b(off + 2) & 0xff) != 1 || len != 8) return null
-          val tdta = b(off + 4) & 0xff
-          td = tdta >> 4; ta = tdta & 0x0f
-          if (td > 3 || ta > 3) return null
-          val ss = b(off + 5) & 0xff
-          val se = b(off + 6) & 0xff
-          if (ss != 0 || se != 63 || (b(off + 7) & 0xff) != 0) return null
-          if (dcT(td) == null || acT(ta) == null) return null
-          if (!qtDef(tq)) return null // DQT never installed this slot
-          return jScan12(b, off + len, w, h, qt(tq), dcT(td), acT(ta),
-            restartInt)
-        case x if x >= 0xd0 && x <= 0xd7 => // RSTn outside scan: ignore
-        case _ => off += segLen
-      }
-    }
-    null
-  }
-
-  /** The single-component 12-bit scan: per 8×8 block, DC diff (category
-    * ≤ 15 per Table F.1) + AC run/size, dequantize, IDCT with the
-    * 12-bit level shift floor(x+2048.5) clamped to [0, 4095], crop.
-    */
-  private def jScan12(b: Array[Byte], scanOff: Int, w: Int, h: Int,
-                      q: Array[Int], dc: JHuff, ac: JHuff,
-                      restartInt: Int): J12 = {
-    val bxN = (w + 7) / 8; val byN = (h + 7) / 8
-    val planeW = bxN * 8
-    val plane = new Array[Int](planeW * byN * 8)
-    val r = new JBits(b, scanOff, b.length)
-    val coef = new Array[Int](64)
-    val tmp = new Array[Double](64)
-    var pred = 0
-    var mcu = 0; var rstIdx = 0
-    var by = 0
-    while (by < byN) {
-      var bx = 0
-      while (bx < bxN) {
-        if (restartInt > 0 && mcu > 0 && mcu % restartInt == 0) {
-          r.restart(rstIdx); rstIdx = (rstIdx + 1) & 7
-          pred = 0
-        }
-        java.util.Arrays.fill(coef, 0)
-        val t = jDecodeSym(r, dc)
-        if (t > 15) throw JpegBail // 12-bit DC categories run 0..15
-        pred += jExtend(r.receive(t), t)
-        coef(0) = pred * q(0)
-        var k = 1
-        while (k < 64) {
-          val rs = jDecodeSym(r, ac)
-          val run = rs >> 4; val s = rs & 15
-          if (s == 0) {
-            if (run == 15) k += 16 else k = 64
-          } else {
-            k += run
-            if (k > 63) throw JpegBail
-            coef(JpegZigzag(k)) = jExtend(r.receive(s), s) * q(k)
-            k += 1
-          }
-        }
-        // IDCT with the 12-bit level shift and clamp
-        var x = 0
-        while (x < 8) {
-          var v = 0
-          while (v < 8) {
-            var acc = 0.0
-            var u = 0
-            while (u < 8) { acc += coef(v * 8 + u) * IdctCos(u)(x); u += 1 }
-            tmp(v * 8 + x) = acc
-            v += 1
-          }
-          x += 1
-        }
-        var y = 0
-        while (y < 8) {
-          var xx = 0
-          while (xx < 8) {
-            var f = 0.0
-            var v = 0
-            while (v < 8) { f += tmp(v * 8 + xx) * IdctCos(v)(y); v += 1 }
-            var p = StrictMath.floor(f + 2048.5).toInt
-            if (p < 0) p = 0 else if (p > 4095) p = 4095
-            plane((by * 8 + y) * planeW + bx * 8 + xx) = p
-            xx += 1
-          }
-          y += 1
-        }
-        mcu += 1; bx += 1
-      }
-      by += 1
-    }
-    val out = new Array[Int](w * h)
-    var y = 0
-    while (y < h) {
-      System.arraycopy(plane, y * planeW, out, y * w, w)
-      y += 1
-    }
-    new J12(w, h, out)
-  }
+  def decodeJpeg12(bytes: Array[Byte]): J12 =
+    jRun(bytes, new JFrame(K12, false)).asInstanceOf[J12]
 
   val Jpeg12StatsType: StructType = StructType(Seq(
     StructField("width", IntegerType, nullable = false),
@@ -2439,21 +2198,14 @@ object MediaCodecHelper {
     */
   def jpegLosslessStats(bytes: Array[Byte]): InternalRow = {
     val r = decodeJpegLossless(bytes)
-    if (r == null) return null
-    var sum = 0L; var mn = Int.MaxValue; var mx = 0
-    var i = 0
-    while (i < r.samples.length) {
-      val v = r.samples(i)
-      sum += v; if (v < mn) mn = v; if (v > mx) mx = v
-      i += 1
-    }
-    new GenericInternalRow(
-      Array[Any](r.width, r.height, r.nc, r.precision, sum, mn, mx))
+    if (r == null) null
+    else new GenericInternalRow(
+      Array[Any](r.width, r.height, r.nc, r.precision) ++ sampleStats(r.samples))
   }
 
   /** Full lossless-JPEG decode (ITU-T T.81 Annex H): SOF3 Huffman and
     * SOF11 arithmetic (QM-coded differences under the H.1.2.2 model,
-    * with DAC conditioning bounds honoured — see [[jLosslessScanArith]]).
+    * with DAC conditioning bounds honoured — see [[jLosslessScan]]).
     *
     * Envelope (null outside it): SOF3/SOF11 frames, 2–16 bit precision,
     * 1–4 components all with 1×1 sampling factors, ONE interleaved scan
@@ -2493,341 +2245,8 @@ object MediaCodecHelper {
     * Sourcing one third-party SOF11 golden closes this; until then,
     * treat SOF11 decodes of externally-produced streams as unverified.
     */
-  def decodeJpegLossless(bytes: Array[Byte]): JLossless = {
-    if (bytes == null || bytes.length < 4) return null
-    try decodeJpegLossless0(bytes)
-    catch { case _: RuntimeException => null }
-  }
-
-  private def decodeJpegLossless0(b: Array[Byte]): JLossless = {
-    if ((b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return null
-    val dcT = new Array[JHuff](4)
-    var w = 0; var h = 0; var precision = 0
-    var comps: Array[JComp] = null
-    var arith = false // SOF11: QM-coded differences instead of Huffman
-    val condL = Array.fill(4)(0) // DAC DC-class conditioning bounds
-    val condU = Array.fill(4)(1) // (defaults per F.1.4.4.1.4: L=0, U=1)
-    var restartInt = 0 // DRI interval in MCUs (row-aligned only; see SOS)
-    var off = 2
-    while (off + 1 < b.length) {
-      if ((b(off) & 0xff) != 0xff) return null
-      var m = b(off + 1) & 0xff
-      while (m == 0xff && off + 2 < b.length) { off += 1; m = b(off + 1) & 0xff }
-      off += 2
-      def segLen: Int = {
-        if (off + 2 > b.length) throw JpegBail
-        val len = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-        if (len < 2 || off + len > b.length) throw JpegBail
-        len
-      }
-      m match {
-        case 0xd8 | 0x01 => // stray SOI / TEM: standalone
-        case 0xd9 => return null // EOI before any scan
-        case 0xc4 => // DHT: lossless uses the DC table class
-          val len = segLen
-          var p = off + 2; val stop = off + len
-          while (p < stop) {
-            val tc = (b(p) & 0xff) >> 4; val th = b(p) & 0x0f
-            if (tc > 1 || th > 3) throw JpegBail
-            p += 1
-            if (p + 16 > stop) throw JpegBail
-            val counts = Array.tabulate(16)(i => b(p + i) & 0xff)
-            p += 16
-            val n = counts.sum
-            if (n > 256 || p + n > stop) throw JpegBail
-            val vals = Array.tabulate(n)(i => b(p + i) & 0xff)
-            p += n
-            if (tc == 0) dcT(th) = new JHuff(counts, vals)
-          }
-          off += len
-        case 0xc3 | 0xcb => // SOF3 (Huffman) / SOF11 (arithmetic) lossless
-          arith = m == 0xcb
-          val len = segLen
-          if (len < 8) throw JpegBail
-          precision = b(off + 2) & 0xff
-          h = ((b(off + 3) & 0xff) << 8) | (b(off + 4) & 0xff)
-          w = ((b(off + 5) & 0xff) << 8) | (b(off + 6) & 0xff)
-          val nc = b(off + 7) & 0xff
-          if (precision < 2 || precision > 16 || w <= 0 || h <= 0 ||
-              nc < 1 || nc > 4) return null
-          if (len < 8 + 3 * nc) throw JpegBail
-          // 4-byte Int state per sample: same buffered-decode cap as the
-          // progressive path (forged dims can't OOM)
-          if (w.toLong * h * nc > 16L * 1024 * 1024) return null
-          comps = Array.tabulate(nc) { i =>
-            val c = new JComp
-            c.id = b(off + 8 + 3 * i) & 0xff
-            val hv = b(off + 9 + 3 * i) & 0xff
-            c.h = hv >> 4; c.v = hv & 0x0f
-            if (c.h != 1 || c.v != 1) return null // 1x1 sampling only
-            c
-          }
-          off += len
-        case 0xcc => // DAC: conditioning bounds for the arithmetic scan
-          val len = segLen
-          var p = off + 2; val stop = off + len
-          while (p + 1 < stop) {
-            val tc = (b(p) & 0xff) >> 4; val tb = b(p) & 0x0f
-            val v = b(p + 1) & 0xff
-            if (tc > 1 || tb > 3) throw JpegBail
-            if (tc == 0) { // DC class: (U << 4) | L, 0 <= L <= U <= 15
-              condL(tb) = v & 0x0f
-              condU(tb) = v >> 4
-              if (condL(tb) > condU(tb)) throw JpegBail
-            } // AC-class (Kx) tables are meaningless in a lossless frame
-            p += 2
-          }
-          off += len
-        case x if (x >= 0xc0 && x <= 0xcf && x != 0xc3 && x != 0xc4 &&
-            x != 0xcb && x != 0xcc) =>
-          return null // any other frame type: not a lossless stream
-        case 0xdd => // DRI: ROW-aligned restart intervals are in envelope
-          val len = segLen
-          if (len != 4) throw JpegBail
-          restartInt = ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
-          off += len
-        case 0xda => // SOS: predictor in Ss, point transform in Al
-          val len = segLen
-          if (comps == null) return null
-          val ns = b(off + 2) & 0xff
-          if (ns != comps.length || len != 6 + 2 * ns) return null
-          var i = 0
-          while (i < ns) {
-            val cid = b(off + 3 + 2 * i) & 0xff
-            if (cid != comps(i).id) return null // scan order == frame order
-            val tdta = b(off + 4 + 2 * i) & 0xff
-            comps(i).td = tdta >> 4
-            if (comps(i).td > 3) return null
-            if (!arith && dcT(comps(i).td) == null) return null
-            i += 1
-          }
-          val sel = b(off + 3 + 2 * ns) & 0xff
-          val se = b(off + 4 + 2 * ns) & 0xff
-          val ahal = b(off + 5 + 2 * ns) & 0xff
-          val pt = ahal & 0x0f
-          if (sel < 1 || sel > 7 || se != 0 || (ahal >> 4) != 0 ||
-              pt >= precision) return null
-          // Restart envelope: intervals must land on row starts (at 1x1
-          // interleaved sampling a line is w MCUs). The H.1.1 reset rules
-          // name "the first line of the restart interval", which is only
-          // unambiguous when intervals ARE whole lines — mid-row restarts
-          // would need Rb/Rc references across the resynchronization
-          // point, defeating it; they stay honest-null.
-          val restartRows =
-            if (restartInt == 0) 0
-            else if (restartInt % w == 0) restartInt / w
-            else return null
-          return if (arith)
-            jLosslessScanArith(b, off + len, w, h, comps, condL, condU,
-              precision, sel, pt, restartRows)
-          else jLosslessScan(b, off + len, w, h, comps, dcT,
-            precision, sel, pt, restartRows)
-        case x if x >= 0xd0 && x <= 0xd7 => return null // RSTn w/o DRI
-        case _ => off += segLen // APPn / COM / DQT(ignored) / other: skip
-      }
-    }
-    null // ran off the end without a scan
-  }
-
-  /** One interleaved lossless scan: for each sample in raster order
-    * (components interleaved per MCU — one sample each at 1×1 sampling),
-    * Huffman-decode the SSSS category from the component's DC-class
-    * table, EXTEND the magnitude bits (SSSS=16 → 32768, no bits), add to
-    * the prediction modulo 2^16, then apply the inverse point transform.
-    */
-  private def jLosslessScan(b: Array[Byte], scanOff: Int, w: Int, h: Int,
-                            comps: Array[JComp], dcT: Array[JHuff],
-                            p: Int, sel: Int, pt: Int,
-                            restartRows: Int = 0): JLossless = {
-    val nc = comps.length
-    val r = new JBits(b, scanOff, b.length)
-    val out = new Array[Int](w * h * nc)
-    val init = 1 << (p - pt - 1)
-    val prev = Array.ofDim[Int](nc, w) // reconstructed row above (Rb/Rc)
-    val cur = Array.ofDim[Int](nc, w)
-    var rstIdx = 0
-    var y = 0
-    while (y < h) {
-      // H.2.2 row-aligned restart: byte-align onto the expected RSTn and
-      // treat this row as a scan-start first line (default prediction at
-      // x=0, Ra for the rest — the H.1.1 reset rules)
-      val restartRow = restartRows > 0 && y > 0 && y % restartRows == 0
-      if (restartRow) {
-        r.restart(rstIdx)
-        rstIdx = (rstIdx + 1) & 7
-      }
-      val firstLine = y == 0 || restartRow
-      var x = 0
-      while (x < w) {
-        var ci = 0
-        while (ci < nc) {
-          val t = jDecodeSym(r, dcT(comps(ci).td))
-          if (t > 16) throw JpegBail
-          val diff = if (t == 16) 32768 else jExtend(r.receive(t), t)
-          val pred =
-            if (firstLine && x == 0) init
-            else if (firstLine) cur(ci)(x - 1) // first line: Ra
-            else if (x == 0) prev(ci)(0) // first column: Rb
-            else {
-              val ra = cur(ci)(x - 1)
-              val rb = prev(ci)(x)
-              val rc = prev(ci)(x - 1)
-              sel match {
-                case 1 => ra
-                case 2 => rb
-                case 3 => rc
-                case 4 => ra + rb - rc
-                case 5 => ra + ((rb - rc) >> 1)
-                case 6 => rb + ((ra - rc) >> 1)
-                case _ => (ra + rb) >> 1
-              }
-            }
-          val rx = (pred + diff) & 0xffff
-          cur(ci)(x) = rx
-          out((y * w + x) * nc + ci) = (rx << pt) & 0xffff
-          ci += 1
-        }
-        x += 1
-      }
-      var ci = 0
-      while (ci < nc) {
-        System.arraycopy(cur(ci), 0, prev(ci), 0, w)
-        ci += 1
-      }
-      y += 1
-    }
-    new JLossless(w, h, nc, p, out)
-  }
-
-  /** One interleaved lossless ARITHMETIC scan (SOF11): the same raster
-    * walk, predictor rules, and mod-2^16 reconstruction as
-    * [[jLosslessScan]], but each difference is decoded by the Annex-D
-    * QM coder under the T.81 §H.1.2.2 statistical model — the DC
-    * difference decision tree of F.1.4.4.1, with the zero/sign/
-    * first-magnitude decisions conditioned on the 5×5 classification of
-    * the two neighbouring differences (Da: the diff decoded at the left
-    * sample of the current row; Db: the diff at the same column of the
-    * row above — both category 0 where the neighbour doesn't exist),
-    * each classified by the F.1.4.4.1.3 procedure against the DAC L/U
-    * bounds of the component's table, and TWO X/M magnitude-bin sets
-    * selected by whether Db classifies large (either sign). Statistics
-    * area: 25 contexts × 4 (S0/SS/SP/SN) + 2 × (X1–X15 + M2–M15) =
-    * 158 bins per table (the public bin count for the lossless
-    * arithmetic process; DC is 49, AC is 245). Magnitudes run to 32768,
-    * so X walks may reach X15 — the full 16-bit difference ring.
-    */
-  private def jLosslessScanArith(b: Array[Byte], scanOff: Int,
-                                 w: Int, h: Int, comps: Array[JComp],
-                                 condL: Array[Int], condU: Array[Int],
-                                 p: Int, sel: Int, pt: Int,
-                                 restartRows: Int = 0): JLossless = {
-    val nc = comps.length
-    val qm = new JQm(b, b.length)
-    qm.init(scanOff)
-    val stats = Array.ofDim[Byte](4, 158)
-    val out = new Array[Int](w * h * nc)
-    val init = 1 << (p - pt - 1)
-    val prev = Array.ofDim[Int](nc, w)
-    val cur = Array.ofDim[Int](nc, w)
-    // conditioning state: the CATEGORY (0 zero, 1 small+, 2 small−,
-    // 3 large+, 4 large−) of the diff decoded at each column of the row
-    // above (Db source, overwritten in place as the row advances) and at
-    // the left neighbour (Da)
-    val catUp = Array.ofDim[Int](nc, w)
-    val catLeft = new Array[Int](nc)
-    var rstIdx = 0
-    var firstLine = true
-    var y = 0
-    while (y < h) {
-      // H.2.2 row-aligned restart: each interval is its own arithmetic
-      // segment — coder re-initialized past the RSTn, every statistics
-      // bin AND the (Da, Db) conditioning state zeroed, and the restarted
-      // row predicts as a scan-start first line
-      val restartRow = restartRows > 0 && y > 0 && y % restartRows == 0
-      if (restartRow) {
-        val next = qm.seekRestart(rstIdx)
-        rstIdx = (rstIdx + 1) & 7
-        qm.init(next)
-        var t = 0
-        while (t < 4) { java.util.Arrays.fill(stats(t), 0.toByte); t += 1 }
-        var ci = 0
-        while (ci < nc) {
-          java.util.Arrays.fill(catUp(ci), 0)
-          ci += 1
-        }
-      }
-      firstLine = y == 0 || restartRow
-      java.util.Arrays.fill(catLeft, 0)
-      var x = 0
-      while (x < w) {
-        var ci = 0
-        while (ci < nc) {
-          val c = comps(ci)
-          val st = stats(c.td)
-          val ctx = (catLeft(ci) * 5 + catUp(ci)(x)) * 4
-          var diff = 0
-          var cat = 0
-          if (qm.decode(st, ctx) != 0) {
-            val sign = qm.decode(st, ctx + 1)
-            var m = 0
-            var si = ctx + 2 + sign
-            if (qm.decode(st, si) != 0) {
-              m = 1
-              si = if (catUp(ci)(x) > 2) 129 else 100 // X set by Db large?
-              while (qm.decode(st, si) != 0) {
-                m <<= 1
-                if (m == 0x8000) throw JpegBail
-                si += 1
-              }
-            }
-            cat = // same classification the DC model applies to Da
-              if (m < ((1 << condL(c.td)) >> 1)) 0
-              else if (m > ((1 << condU(c.td)) >> 1)) 3 + sign
-              else 1 + sign
-            var v = m
-            si += 14
-            while ({ m >>= 1; m != 0 }) {
-              if (qm.decode(st, si) != 0) v |= m
-            }
-            v += 1
-            diff = if (sign != 0) -v else v
-          }
-          catLeft(ci) = cat
-          catUp(ci)(x) = cat
-          val pred =
-            if (firstLine && x == 0) init
-            else if (firstLine) cur(ci)(x - 1) // first line: Ra
-            else if (x == 0) prev(ci)(0) // first column: Rb
-            else {
-              val ra = cur(ci)(x - 1)
-              val rb = prev(ci)(x)
-              val rc = prev(ci)(x - 1)
-              sel match {
-                case 1 => ra
-                case 2 => rb
-                case 3 => rc
-                case 4 => ra + rb - rc
-                case 5 => ra + ((rb - rc) >> 1)
-                case 6 => rb + ((ra - rc) >> 1)
-                case _ => (ra + rb) >> 1
-              }
-            }
-          val rx = (pred + diff) & 0xffff
-          cur(ci)(x) = rx
-          out((y * w + x) * nc + ci) = (rx << pt) & 0xffff
-          ci += 1
-        }
-        x += 1
-      }
-      var ci = 0
-      while (ci < nc) {
-        System.arraycopy(cur(ci), 0, prev(ci), 0, w)
-        ci += 1
-      }
-      y += 1
-    }
-    new JLossless(w, h, nc, p, out)
-  }
+  def decodeJpegLossless(bytes: Array[Byte]): JLossless =
+    jRun(bytes, new JFrame(KLossless, false)).asInstanceOf[JLossless]
 
   val JpegLosslessStatsType: StructType = StructType(Seq(
     StructField("width", IntegerType, nullable = false),
@@ -3078,18 +2497,7 @@ object MediaCodecHelper {
     StructField("height", IntegerType, nullable = false),
     StructField("n_frames", IntegerType, nullable = false)))
 
-  def gifStats(bytes: Array[Byte]): InternalRow = {
-    val r = decodeGif(bytes)
-    if (r == null) return null
-    var sum = 0L; var mn = 255; var mx = 0
-    var i = 0
-    while (i < r.pix.length) {
-      val v = r.pix(i) & 0xff
-      sum += v; if (v < mn) mn = v; if (v > mx) mx = v
-      i += 1
-    }
-    new GenericInternalRow(Array[Any](r.width, r.height, r.bpp, sum, mn, mx))
-  }
+  def gifStats(bytes: Array[Byte]): InternalRow = rasterStats(decodeGif(bytes))
 
   /** Multi-frame GIF COMPOSITING decode — the animation-aware path that
     * [[decodeGif]] (first-frame, full-screen-only) deliberately is not.
@@ -3322,18 +2730,7 @@ object MediaCodecHelper {
     * fully decoded JPEG raster (same shape as [[pngStats]]); null outside
     * the baseline envelope.
     */
-  def jpegStats(bytes: Array[Byte]): InternalRow = {
-    val r = decodeJpegAuto(bytes)
-    if (r == null) return null
-    var sum = 0L; var mn = 255; var mx = 0
-    var i = 0
-    while (i < r.pix.length) {
-      val v = r.pix(i) & 0xff
-      sum += v; if (v < mn) mn = v; if (v > mx) mx = v
-      i += 1
-    }
-    new GenericInternalRow(Array[Any](r.width, r.height, r.bpp, sum, mn, mx))
-  }
+  def jpegStats(bytes: Array[Byte]): InternalRow = rasterStats(decodeJpegAuto(bytes))
 
   /** Transcode: baseline JPEG decode → integer-floor nearest-neighbor
     * resize → PNG re-encode (the lossless landing format, so downstream
@@ -3341,82 +2738,27 @@ object MediaCodecHelper {
     */
   def jpegResizeToPng(bytes: Array[Byte], dstW: Int, dstH: Int): Array[Byte] = {
     val r = decodeJpegAuto(bytes)
-    if (r == null) return null
-    val out = new Array[Byte](dstW * dstH * r.bpp)
-    var y = 0
-    while (y < dstH) {
-      val sy = y * r.height / dstH
-      var x = 0
-      while (x < dstW) {
-        val sx = x * r.width / dstW
-        var c = 0
-        while (c < r.bpp) {
-          out((y * dstW + x) * r.bpp + c) = r.pix((sy * r.width + sx) * r.bpp + c)
-          c += 1
-        }
-        x += 1
-      }
-      y += 1
-    }
-    encodePng(new Raster(dstW, dstH, r.bpp, out))
+    if (r == null) null else encodePng(resizeNearest(r, dstW, dstH))
   }
 
   // ---------------- JPEG (header metadata only) ----------------
 
-  /** JPEG frame-header metadata via the SOI/SOF marker walk:
-    * struct(width, height, components), null for non-JPEG or malformed
-    * streams. Metadata needs NO codec: every JPEG segment before the
-    * entropy-coded scan is a (FF, marker, 2-byte big-endian length)
-    * frame, and the SOF segment carries precision/height/width/component
-    * count at fixed offsets. Pixel DECODE stays behind the documented
-    * external-codec seam (ops/Multimodal.decodeImageStub) — this walk
-    * covers the 90% of what a pipeline does with JPEGs (dimension
-    * filtering, aspect gates, metadata columns, content-hash dedup).
+  /** JPEG frame-header metadata: struct(width, height, components),
+    * null for non-JPEG or malformed streams. The segment walk [[jWalk]]
+    * in its header-only mode: segments before the first SOF are skipped
+    * by length (never parsed), and the SOF segment's fixed prefix carries
+    * height/width/component count — no entropy decode, so this covers
+    * dimension filtering, aspect gates, metadata columns and content-hash
+    * dedup cheaply.
     *
     * Accepted SOF markers: C0–CF excluding C4 (DHT), C8 (JPG ext), CC
     * (DAC) — baseline, extended sequential, progressive, lossless, and
     * their arithmetic twins all share the frame-header layout. The walk
     * stops (returns null) at SOS or EOI without a SOF: entropy-coded data
     * may contain any byte sequence and must never be scanned for markers.
-    * Bounds-checked throughout — adversarial lengths cannot read out of
-    * range.
     */
-  def jpegMeta(bytes: Array[Byte]): InternalRow = {
-    if (bytes == null || bytes.length < 4) return null
-    if ((bytes(0) & 0xff) != 0xff || (bytes(1) & 0xff) != 0xd8) return null
-    var off = 2
-    while (off + 1 < bytes.length) {
-      if ((bytes(off) & 0xff) != 0xff) return null
-      // fill bytes: any number of FFs may pad before the marker id
-      var m = bytes(off + 1) & 0xff
-      while (m == 0xff && off + 2 < bytes.length) {
-        off += 1; m = bytes(off + 1) & 0xff
-      }
-      off += 2
-      m match {
-        case 0xd8 | 0x01 => // SOI again / TEM: standalone, no length
-        case x if x >= 0xd0 && x <= 0xd7 => // RSTn: standalone
-        case 0xd9 => return null // EOI before any SOF
-        case 0xda => return null // SOS before any SOF
-        case x if x >= 0xc0 && x <= 0xcf && x != 0xc4 && x != 0xc8 &&
-            x != 0xcc =>
-          // SOF: len(2) precision(1) height(2) width(2) ncomp(1)
-          if (off + 8 > bytes.length) return null
-          val len = ((bytes(off) & 0xff) << 8) | (bytes(off + 1) & 0xff)
-          val h = ((bytes(off + 3) & 0xff) << 8) | (bytes(off + 4) & 0xff)
-          val w = ((bytes(off + 5) & 0xff) << 8) | (bytes(off + 6) & 0xff)
-          val nc = bytes(off + 7) & 0xff
-          if (len < 8 + 3 * nc || w <= 0 || h <= 0 || nc <= 0) return null
-          return new GenericInternalRow(Array[Any](w, h, nc))
-        case _ =>
-          if (off + 2 > bytes.length) return null
-          val len = ((bytes(off) & 0xff) << 8) | (bytes(off + 1) & 0xff)
-          if (len < 2 || off + len > bytes.length) return null
-          off += len
-      }
-    }
-    null
-  }
+  def jpegMeta(bytes: Array[Byte]): InternalRow =
+    jRun(bytes, new JFrame(KMeta, false)).asInstanceOf[InternalRow]
 
   val JpegMetaType: StructType = StructType(Seq(
     StructField("width", IntegerType, nullable = false),

@@ -286,6 +286,13 @@ object ModelFilter {
     * Scale: the bucket model is B rows regardless of corpus size —
     * broadcast; per-doc features reduce map-side to (id, bucket, n); the
     * weight is one grouped sum. Nothing global, nothing quadratic.
+    *
+    * Eager: constructing the returned frame runs a Spark job — the one
+    * corpus pass, which persists the (id, is_target, bkt, n) proxy
+    * relation and collects the B-row model to the driver — before any
+    * action on the result. The persisted proxy relation is caller-owned:
+    * nothing here unpersists it, so a caller that builds many weight
+    * frames releases it (or purges the session's cache) itself.
     */
   def dsirWeights(df: DataFrame, idCol: String, textCol: String,
                   targetFilter: Column, buckets: Int = 2048): DataFrame = {

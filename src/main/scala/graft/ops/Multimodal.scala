@@ -40,6 +40,20 @@ object Multimodal {
     * (width, height): pixel (x,y) = (x*31 + y*17) & 0xFF.
     */
   def pngBytes(width: Int, height: Int): Array[Byte] = {
+    val raw = new Array[Byte](height * (width + 1)) // filter byte 0 per row
+    for (y <- 0 until height; x <- 0 until width)
+      raw(y * (width + 1) + 1 + x) = ((x * 31 + y * 17) & 0xff).toByte
+    pngFile(width, height, 8, 0, interlaced = false, null, null, raw)
+  }
+
+  /** A fixture PNG around an already-filtered image stream: signature,
+    * IHDR, optional PLTE/tRNS, one deflated IDAT, IEND — each chunk with
+    * its length and CRC. Fixture-side: shares no code with
+    * MediaCodecHelper's PNG decode or encode paths.
+    */
+  private def pngFile(width: Int, height: Int, depth: Int, colorType: Int,
+                      interlaced: Boolean, palette: Array[(Int, Int, Int)],
+                      trns: Array[Int], filtered: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     def be(i: Int): Array[Byte] =
       Array(((i >> 24) & 0xff).toByte, ((i >> 16) & 0xff).toByte,
@@ -53,34 +67,72 @@ object Multimodal {
       out.write(be(crc.getValue.toInt))
     }
     out.write(Array(0x89, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n').map(_.toByte))
-    // IHDR: w, h, bit depth 8, color type 0 (gray), compression/filter/interlace 0
-    chunk("IHDR", be(width) ++ be(height) ++ Array[Byte](8, 0, 0, 0, 0))
-    val raw = new Array[Byte](height * (width + 1)) // filter byte 0 per row
-    for (y <- 0 until height; x <- 0 until width)
-      raw(y * (width + 1) + 1 + x) = ((x * 31 + y * 17) & 0xff).toByte
+    chunk("IHDR", be(width) ++ be(height) ++
+      Array[Byte](depth.toByte, colorType.toByte, 0, 0,
+        if (interlaced) 1 else 0))
+    if (palette != null)
+      chunk("PLTE", palette.flatMap { case (r, g, b) =>
+        Array(r.toByte, g.toByte, b.toByte) })
+    if (trns != null) chunk("tRNS", trns.map(_.toByte))
     val deflater = new java.util.zip.Deflater()
-    deflater.setInput(raw); deflater.finish()
+    deflater.setInput(filtered); deflater.finish()
     // loop until finished — a single deflate() call truncates the IDAT
     // stream once stored-block overhead exceeds the slack on large rasters
     val zout = new java.io.ByteArrayOutputStream()
     val buf = new Array[Byte](64 * 1024)
-    while (!deflater.finished()) {
-      val n = deflater.deflate(buf)
-      zout.write(buf, 0, n)
-    }
+    while (!deflater.finished()) zout.write(buf, 0, deflater.deflate(buf))
     deflater.end()
     chunk("IDAT", zout.toByteArray)
     chunk("IEND", Array.empty)
     out.toByteArray
   }
 
+  /** The filtered stream of a fixture PNG: seven Adam7 sub-images or one
+    * full-image pass, rows alternating None and Sub — Sub at BYTE level,
+    * the left neighbor `filterBpp` bytes back. `row(xs, y)` returns the
+    * unfiltered bytes of the pass row at image row `y` covering image
+    * columns `xs`.
+    */
+  private def pngFiltered(width: Int, height: Int, interlaced: Boolean,
+                          filterBpp: Int)
+                         (row: (Seq[Int], Int) => Array[Int]): Array[Byte] = {
+    val passes =
+      if (interlaced)
+        Array((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
+          (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
+      else Array((0, 0, 1, 1))
+    val raw = new java.io.ByteArrayOutputStream()
+    for ((x0, y0, dx, dy) <- passes) {
+      val pw = if (width > x0) (width - x0 + dx - 1) / dx else 0
+      val ph = if (height > y0) (height - y0 + dy - 1) / dy else 0
+      if (pw > 0 && ph > 0) {
+        for (py <- 0 until ph) {
+          val r = row((0 until pw).map(x0 + _ * dx), y0 + py * dy)
+          if (py % 2 == 0) {
+            raw.write(0) // None
+            r.foreach(raw.write)
+          } else {
+            raw.write(1) // Sub — own subtraction math
+            for (i <- r.indices) {
+              val left = if (i >= filterBpp) r(i - filterBpp) else 0
+              raw.write((r(i) - left) & 0xff)
+            }
+          }
+        }
+      }
+    }
+    raw.toByteArray
+  }
+
+  /** `v`'s low `n` bytes, little-endian (the RIFF/WAV field order). */
+  private def le(v: Long, n: Int): Array[Byte] =
+    (0 until n).map(b => ((v >> (8 * b)) & 0xff).toByte).toArray
+
   /** Minimal valid PCM WAV (RIFF/fmt/data), 16-bit mono: deterministic
     * triangle-ish samples.
     */
   def wavBytes(sampleRate: Int, nSamples: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def le(i: Int, n: Int): Array[Byte] =
-      (0 until n).map(b => ((i >> (8 * b)) & 0xff).toByte).toArray
     val dataLen = nSamples * 2
     out.write("RIFF".getBytes("US-ASCII")); out.write(le(36 + dataLen, 4))
     out.write("WAVE".getBytes("US-ASCII"))
@@ -99,8 +151,6 @@ object Multimodal {
     */
   def wavBytesWithList(sampleRate: Int, nSamples: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def le(i: Int, n: Int): Array[Byte] =
-      (0 until n).map(b => ((i >> (8 * b)) & 0xff).toByte).toArray
     val dataLen = nSamples * 2
     val listData = "INFOIART".getBytes("US-ASCII") ++ le(2, 4) ++
       "g\u0000".getBytes("US-ASCII") // INFO + IART sub-chunk, 14 bytes
@@ -132,8 +182,6 @@ object Multimodal {
     require(bits == 8 || bits == 16 || bits == 24 || bits == 32)
     val bp = bits / 8
     val out = new java.io.ByteArrayOutputStream()
-    def le(i: Int, n: Int): Array[Byte] =
-      (0 until n).map(b => ((i >> (8 * b)) & 0xff).toByte).toArray
     val dataLen = nSamples * bp
     out.write("RIFF".getBytes("US-ASCII")); out.write(le(36 + dataLen, 4))
     out.write("WAVE".getBytes("US-ASCII"))
@@ -179,8 +227,6 @@ object Multimodal {
   def wavG711Bytes(aLaw: Boolean, sampleRate: Int, nSamples: Int,
                    byteAt: Int => Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def le(i: Int, n: Int): Array[Byte] =
-      (0 until n).map(b => ((i >> (8 * b)) & 0xff).toByte).toArray
     out.write("RIFF".getBytes("US-ASCII")); out.write(le(36 + nSamples, 4))
     out.write("WAVE".getBytes("US-ASCII"))
     out.write("fmt ".getBytes("US-ASCII")); out.write(le(16, 4))
@@ -215,8 +261,6 @@ object Multimodal {
                     num: Int => Int): Array[Byte] = {
     require(den > 0 && (den & (den - 1)) == 0, s"den must be a power of 2: $den")
     val out = new java.io.ByteArrayOutputStream()
-    def le(i: Int, n: Int): Array[Byte] =
-      (0 until n).map(b => ((i >> (8 * b)) & 0xff).toByte).toArray
     val dataLen = nSamples * 4
     out.write("RIFF".getBytes("US-ASCII"))
     out.write(le(4 + (8 + 18) + (8 + 4) + (8 + dataLen), 4))
@@ -252,8 +296,6 @@ object Multimodal {
                       num: Int => Int): Array[Byte] = {
     require(den > 0 && (den & (den - 1)) == 0, s"den must be a power of 2: $den")
     val out = new java.io.ByteArrayOutputStream()
-    def le(i: Long, n: Int): Array[Byte] =
-      (0 until n).map(b => ((i >> (8 * b)) & 0xff).toByte).toArray
     val dataLen = nSamples * 8
     out.write("RIFF".getBytes("US-ASCII"))
     out.write(le(4 + (8 + 18) + (8 + 4) + (8 + dataLen), 4))
@@ -298,8 +340,6 @@ object Multimodal {
     val spb = 1 + 8 * groups // samples per block per channel
     val dataLen = nBlocks * blockAlign
     val out = new java.io.ByteArrayOutputStream()
-    def le(i: Int, n: Int): Array[Byte] =
-      (0 until n).map(b => ((i >> (8 * b)) & 0xff).toByte).toArray
     out.write("RIFF".getBytes("US-ASCII"))
     out.write(le(4 + (8 + 20) + (8 + 4) + (8 + dataLen), 4))
     out.write("WAVE".getBytes("US-ASCII"))
@@ -369,8 +409,6 @@ object Multimodal {
     val coefs = Array((256, 0), (512, -256), (0, 0), (192, 64), (240, 0),
       (460, -208), (392, -232))
     val out = new java.io.ByteArrayOutputStream()
-    def le(i: Int, n: Int): Array[Byte] =
-      (0 until n).map(b => ((i >> (8 * b)) & 0xff).toByte).toArray
     out.write("RIFF".getBytes("US-ASCII"))
     out.write(le(4 + (8 + 50) + (8 + 4) + (8 + dataLen), 4))
     out.write("WAVE".getBytes("US-ASCII"))
@@ -441,8 +479,6 @@ object Multimodal {
                          payload: java.io.ByteArrayOutputStream => Unit): Array[Byte] = {
     val bp = bits / 8
     val out = new java.io.ByteArrayOutputStream()
-    def le(i: Int, n: Int): Array[Byte] =
-      (0 until n).map(b => ((i >> (8 * b)) & 0xff).toByte).toArray
     val dataLen = nFrames * channels * bp
     out.write("RIFF".getBytes("US-ASCII"))
     out.write(le(4 + (8 + 40) + (8 + 4) + (8 + dataLen), 4))
@@ -499,36 +535,11 @@ object Multimodal {
     * pixel (x,y) = (x*31 + y*17 + c*53) & 0xFF.
     */
   def rgbPngBytes(width: Int, height: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def be(i: Int): Array[Byte] =
-      Array(((i >> 24) & 0xff).toByte, ((i >> 16) & 0xff).toByte,
-            ((i >> 8) & 0xff).toByte, (i & 0xff).toByte)
-    def chunk(tag: String, data: Array[Byte]): Unit = {
-      out.write(be(data.length))
-      val tagged = tag.getBytes("US-ASCII") ++ data
-      out.write(tagged)
-      val crc = new java.util.zip.CRC32()
-      crc.update(tagged)
-      out.write(be(crc.getValue.toInt))
-    }
-    out.write(Array(0x89, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n').map(_.toByte))
-    chunk("IHDR", be(width) ++ be(height) ++ Array[Byte](8, 2, 0, 0, 0))
     val stride = width * 3
     val raw = new Array[Byte](height * (stride + 1))
     for (y <- 0 until height; x <- 0 until width; c <- 0 until 3)
       raw(y * (stride + 1) + 1 + x * 3 + c) = ((x * 31 + y * 17 + c * 53) & 0xff).toByte
-    val deflater = new java.util.zip.Deflater()
-    deflater.setInput(raw); deflater.finish()
-    val zout = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](64 * 1024)
-    while (!deflater.finished()) {
-      val n = deflater.deflate(buf)
-      zout.write(buf, 0, n)
-    }
-    deflater.end()
-    chunk("IDAT", zout.toByteArray)
-    chunk("IEND", Array.empty)
-    out.toByteArray
+    pngFile(width, height, 8, 2, interlaced = false, null, null, raw)
   }
 
   /** Shared fixture-side PNG writer — signature, chunk+CRC emission,
@@ -545,67 +556,14 @@ object Multimodal {
                               colorType: Int, bpp: Int, interlaced: Boolean,
                               pixBytes: (Int, Int) => Array[Int],
                               palette: Array[(Int, Int, Int)],
-                              trns: Array[Int]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def be(i: Int): Array[Byte] =
-      Array(((i >> 24) & 0xff).toByte, ((i >> 16) & 0xff).toByte,
-            ((i >> 8) & 0xff).toByte, (i & 0xff).toByte)
-    def chunk(tag: String, data: Array[Byte]): Unit = {
-      out.write(be(data.length))
-      val tagged = tag.getBytes("US-ASCII") ++ data
-      out.write(tagged)
-      val crc = new java.util.zip.CRC32()
-      crc.update(tagged)
-      out.write(be(crc.getValue.toInt))
-    }
-    out.write(Array(0x89, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n').map(_.toByte))
-    chunk("IHDR", be(width) ++ be(height) ++
-      Array[Byte](depth.toByte, colorType.toByte, 0, 0,
-        if (interlaced) 1 else 0))
-    if (palette != null)
-      chunk("PLTE", palette.flatMap { case (r, g, b) =>
-        Array(r.toByte, g.toByte, b.toByte) })
-    if (trns != null) chunk("tRNS", trns.map(_.toByte))
-    // filtered stream: seven Adam7 sub-images, or one full-image pass
-    val passes =
-      if (interlaced)
-        Array((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-          (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-      else Array((0, 0, 1, 1))
-    val raw = new java.io.ByteArrayOutputStream()
-    for ((x0, y0, dx, dy) <- passes) {
-      val pw = if (width > x0) (width - x0 + dx - 1) / dx else 0
-      val ph = if (height > y0) (height - y0 + dy - 1) / dy else 0
-      if (pw > 0 && ph > 0) {
-        for (py <- 0 until ph) {
-          val row = new Array[Int](pw * bpp)
-          for (pxi <- 0 until pw) {
-            val v = pixBytes(x0 + pxi * dx, y0 + py * dy)
-            for (c <- 0 until bpp) row(pxi * bpp + c) = v(c) & 0xff
-          }
-          if (py % 2 == 0) {
-            raw.write(0) // None
-            row.foreach(raw.write)
-          } else {
-            raw.write(1) // Sub — own subtraction math
-            for (i <- row.indices) {
-              val left = if (i >= bpp) row(i - bpp) else 0
-              raw.write((row(i) - left) & 0xff)
-            }
-          }
+                              trns: Array[Int]): Array[Byte] =
+    pngFile(width, height, depth, colorType, interlaced, palette, trns,
+      pngFiltered(width, height, interlaced, bpp) { (xs, y) =>
+        xs.toArray.flatMap { x =>
+          val v = pixBytes(x, y)
+          Array.tabulate(bpp)(c => v(c) & 0xff)
         }
-      }
-    }
-    val deflater = new java.util.zip.Deflater()
-    deflater.setInput(raw.toByteArray); deflater.finish()
-    val zout = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](64 * 1024)
-    while (!deflater.finished()) zout.write(buf, 0, deflater.deflate(buf))
-    deflater.end()
-    chunk("IDAT", zout.toByteArray)
-    chunk("IEND", Array.empty)
-    out.toByteArray
-  }
+      })
 
   /** SUB-BYTE PNG fixture (depth 1/2/4, color types 0/3) — bit-packed
     * rows MSB-first with per-row byte padding (spec §7.2), the same
@@ -621,67 +579,17 @@ object Multimodal {
                       trns: Array[Int] = null): Array[Byte] = {
     require(depth == 1 || depth == 2 || depth == 4, s"bad depth $depth")
     require(colorType == 0 || colorType == 3, s"bad sub-byte type $colorType")
-    val out = new java.io.ByteArrayOutputStream()
-    def be(i: Int): Array[Byte] =
-      Array(((i >> 24) & 0xff).toByte, ((i >> 16) & 0xff).toByte,
-            ((i >> 8) & 0xff).toByte, (i & 0xff).toByte)
-    def chunk(tag: String, data: Array[Byte]): Unit = {
-      out.write(be(data.length))
-      val tagged = tag.getBytes("US-ASCII") ++ data
-      out.write(tagged)
-      val crc = new java.util.zip.CRC32()
-      crc.update(tagged)
-      out.write(be(crc.getValue.toInt))
-    }
-    out.write(Array(0x89, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n').map(_.toByte))
-    chunk("IHDR", be(width) ++ be(height) ++
-      Array[Byte](depth.toByte, colorType.toByte, 0, 0,
-        if (interlaced) 1 else 0))
-    if (palette != null)
-      chunk("PLTE", palette.flatMap { case (r, g, b) =>
-        Array(r.toByte, g.toByte, b.toByte) })
-    if (trns != null) chunk("tRNS", trns.map(_.toByte))
-    val passes =
-      if (interlaced)
-        Array((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-          (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-      else Array((0, 0, 1, 1))
-    val raw = new java.io.ByteArrayOutputStream()
     val mask = (1 << depth) - 1
-    for ((x0, y0, dx, dy) <- passes) {
-      val pw = if (width > x0) (width - x0 + dx - 1) / dx else 0
-      val ph = if (height > y0) (height - y0 + dy - 1) / dy else 0
-      if (pw > 0 && ph > 0) {
-        val rowBytes = (pw * depth + 7) / 8
-        for (py <- 0 until ph) {
-          val row = new Array[Int](rowBytes)
-          for (pxi <- 0 until pw) {
-            val v = sample(x0 + pxi * dx, y0 + py * dy) & mask
-            val bit = pxi * depth
-            row(bit / 8) |= v << (8 - depth - bit % 8)
-          }
-          if (py % 2 == 0) {
-            raw.write(0) // None
-            row.foreach(raw.write)
-          } else {
-            raw.write(1) // Sub on the PACKED bytes, left = 1 byte back
-            for (i <- row.indices) {
-              val left = if (i >= 1) row(i - 1) else 0
-              raw.write((row(i) - left) & 0xff)
-            }
-          }
+    // Sub on the PACKED bytes: left neighbor 1 byte back
+    pngFile(width, height, depth, colorType, interlaced, palette, trns,
+      pngFiltered(width, height, interlaced, 1) { (xs, y) =>
+        val row = new Array[Int]((xs.length * depth + 7) / 8)
+        for ((x, pxi) <- xs.zipWithIndex) {
+          val bit = pxi * depth
+          row(bit / 8) |= (sample(x, y) & mask) << (8 - depth - bit % 8)
         }
-      }
-    }
-    val deflater = new java.util.zip.Deflater()
-    deflater.setInput(raw.toByteArray); deflater.finish()
-    val zout = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](64 * 1024)
-    while (!deflater.finished()) zout.write(buf, 0, deflater.deflate(buf))
-    deflater.end()
-    chunk("IDAT", zout.toByteArray)
-    chunk("IEND", Array.empty)
-    out.toByteArray
+        row
+      })
   }
 
   /** Bi-level (depth 1) gray lane: (17+id%14)×(9+id%10) — wider than a
@@ -848,6 +756,212 @@ object Multimodal {
         ((x * 19 + y * 7 + id + 142) % 256).toInt,
         ((x * 3 + y * 5 + id) % 256).toInt))
 
+  // ---------------- fixture-side JPEG writer ----------------
+  //
+  // One writer under every JPEG fixture encoder below: marker segments,
+  // canonical Huffman codes, the FF00-stuffing bit writer, the block walk
+  // and the QM encoder ([[QmEnc]]). It deliberately shares NO code with
+  // the production decoder in expr/MediaCodecHelper — its zigzag-order
+  // inputs, tables, code derivations and coders are its own — so a hash
+  // match on decoded statistics proves two independent implementations of
+  // the T.81 layers agree.
+
+  /** A canonical Huffman table (T.81 Annex C): BITS counts per code
+    * length and the symbol values in code order. `vals` may be just the
+    * HEAD of the value list (a constant-block encoder only emits the
+    * first symbols); positions past it still advance the code space.
+    */
+  private final class FixHuff(val counts: Array[Int], val vals: Array[Int]) {
+    val code: Map[Int, (Int, Int)] = {
+      var c = 0; var k = 0
+      val m = scala.collection.mutable.Map[Int, (Int, Int)]()
+      for (l <- 1 to 16) {
+        for (_ <- 0 until counts(l - 1)) {
+          if (k < vals.length) m(vals(k)) = (c, l)
+          c += 1; k += 1
+        }
+        c <<= 1
+      }
+      m.toMap
+    }
+  }
+
+  /** A table whose symbols all sit at code length `len`. */
+  private def flatHuff(len: Int, vals: Seq[Int]): FixHuff =
+    new FixHuff(Array.tabulate(16)(i => if (i == len - 1) vals.length else 0),
+      vals.toArray)
+
+  // DC categories 0..11 and the 12 AC symbols the constant and seed
+  // blocks need, all at code length 4 (16 slots, all-ones code unused)
+  private val FixDc = flatHuff(4, 0 to 11)
+  private val FixAc = flatHuff(4,
+    Seq(0x00, 0x01, 0x02, 0x03, 0x04, 0x05, 0x11, 0x12, 0x21, 0x31, 0xB1, 0xF0))
+  // quant tables, zigzag order: luma DC=8 / AC=16, chroma DC=4 / AC=16
+  private val FixQ0 = Seq.tabulate(64)(i => if (i == 0) 8 else 16)
+  private val FixQ1 = Seq.tabulate(64)(i => if (i == 0) 4 else 16)
+
+  private def be16(v: Int): Seq[Int] = Seq((v >> 8) & 0xff, v & 0xff)
+
+  /** One component of a fixture frame: frame index, id, sampling factors,
+    * table selectors, real block grid (T.81 A.2.2), and its quantized
+    * zigzag coefficient block at block position (bx, by).
+    */
+  private final case class FixComp(idx: Int, id: Int, hf: Int, vf: Int,
+                                   tdta: Int, bwReal: Int, bhReal: Int,
+                                   blk: (Int, Int) => Array[Int])
+
+  /** The 1- or 3-component fixture frame: Y (2x2 when `sub420`) + Cb/Cr
+    * at 1x1, block constant v quantized to (v-128)·8/q (exact: the DC
+    * quant step q is 8 for luma and 4 for chroma), `acSeed` replacing
+    * Y block (0,0). Chroma block functions take chroma block positions —
+    * under 4:2:0 one per MCU.
+    */
+  private def fixComps(width: Int, height: Int, color: Boolean, sub420: Boolean,
+                       yBlock: (Int, Int) => Int, cbBlock: (Int, Int) => Int,
+                       crBlock: (Int, Int) => Int, acSeed: Array[Int],
+                       chromaTables: Int): Seq[FixComp] = {
+    def const(v: Int, q: Int): Array[Int] = {
+      val a = new Array[Int](64); a(0) = (v - 128) * 8 / q; a
+    }
+    val y = FixComp(0, 1, if (sub420) 2 else 1, if (sub420) 2 else 1, 0x00,
+      (width + 7) / 8, (height + 7) / 8, (bx, by) =>
+        if (acSeed != null && bx == 0 && by == 0) acSeed else const(yBlock(bx, by), 8))
+    if (!color) Seq(y)
+    else {
+      val (cw, ch) = if (sub420) ((width + 1) / 2, (height + 1) / 2) else (width, height)
+      def chroma(i: Int, f: (Int, Int) => Int) = FixComp(i, i + 1, 1, 1,
+        chromaTables, (cw + 7) / 8, (ch + 7) / 8, (bx, by) => const(f(bx, by), 4))
+      Seq(y, chroma(1, cbBlock), chroma(2, crBlock))
+    }
+  }
+
+  private final class JpegWriter {
+    val out = new java.io.ByteArrayOutputStream()
+    def b(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
+
+    /** One marker segment: FF, marker, 2-byte length, payload. */
+    def seg(marker: Int, payload: Seq[Int]): Unit = {
+      b(0xff, marker); b(be16(payload.length + 2): _*); b(payload: _*)
+    }
+    /** DQT: (Pq<<4 | Tq, zigzag entries), 16-bit entries when Pq = 1. */
+    def dqt(tables: (Int, Seq[Int])*): Unit =
+      seg(0xdb, tables.flatMap { case (pqTq, q) =>
+        pqTq +: (if ((pqTq >> 4) == 0) q else q.flatMap(be16)) })
+    /** DHT: (Tc<<4 | Th, table) — several tables may share a segment. */
+    def dht(tables: (Int, FixHuff)*): Unit =
+      seg(0xc4, tables.flatMap { case (tcTh, t) => tcTh +: (t.counts.toSeq ++ t.vals) })
+    /** SOF: (id, H<<4 | V, Tq) per component. */
+    def sof(marker: Int, precision: Int, w: Int, h: Int,
+            comps: Seq[(Int, Int, Int)]): Unit =
+      seg(marker, Seq(precision) ++ be16(h) ++ be16(w) ++ Seq(comps.length) ++
+        comps.flatMap { case (id, hv, tq) => Seq(id, hv, tq) })
+    def dri(interval: Int): Unit = if (interval > 0) seg(0xdd, be16(interval))
+    /** SOS: (id, Td<<4 | Ta) per component, then Ss, Se, Ah<<4 | Al. */
+    def sos(comps: Seq[(Int, Int)], ss: Int, se: Int, ahal: Int): Unit =
+      seg(0xda, Seq(comps.length) ++ comps.flatMap { case (id, t) => Seq(id, t) } ++
+        Seq(ss, se, ahal))
+    /** SOI, the fixture quant tables (the chroma one only for color) and
+      * an 8-bit SOF: luma on quant table 0, chroma on 1.
+      */
+    def dctHeader(marker: Int, w: Int, h: Int, comps: Seq[FixComp]): Unit = {
+      b(0xff, 0xd8)
+      dqt(Seq(0x00 -> FixQ0) ++ (if (comps.length > 1) Seq(0x01 -> FixQ1) else Nil): _*)
+      sof(marker, 8, w, h,
+        comps.map(c => (c.id, (c.hf << 4) | c.vf, if (c.idx == 0) 0 else 1)))
+    }
+    def frameSos(comps: Seq[FixComp], ss: Int, se: Int, ahal: Int): Unit =
+      sos(comps.map(c => (c.id, c.tdta)), ss, se, ahal)
+    def finish(): Array[Byte] = { b(0xff, 0xd9); out.toByteArray }
+
+    // ---- MSB-first bit writer with FF00 stuffing ----
+    private var acc = 0
+    private var nbits = 0
+    def putBit(bit: Int): Unit = {
+      acc = (acc << 1) | bit; nbits += 1
+      if (nbits == 8) {
+        out.write(acc)
+        if (acc == 0xff) out.write(0x00)
+        acc = 0; nbits = 0
+      }
+    }
+    def putBits(v: Int, n: Int): Unit = {
+      var i = n - 1
+      while (i >= 0) { putBit((v >> i) & 1); i -= 1 }
+    }
+    def flushBits(): Unit = while (nbits != 0) putBit(1) // pad with 1s
+    /** Byte-align, then the RSTn marker. */
+    def restart(idx: Int): Unit = { flushBits(); b(0xff, 0xd0 + idx) }
+
+    def putSym(t: FixHuff, sym: Int): Unit = {
+      val (c, l) = t.code(sym); putBits(c, l)
+    }
+    /** Category symbol then the F.1.2.1 magnitude bits (d < 0 codes as
+      * d − 1 + 2^s); category 16 is lossless's bitless 32768.
+      */
+    def putDiff(t: FixHuff, d: Int): Unit = {
+      val s = cat(d)
+      putSym(t, s)
+      if (s > 0 && s < 16) putBits(if (d < 0) d + (1 << s) - 1 else d, s)
+    }
+    /** AC run/size symbols over zigzag [from, to] of `zz` (already point
+      * transformed) up to its last nonzero value, ZRL for runs past 15.
+      */
+    def putAcRuns(ac: FixHuff, zz: Int => Int, from: Int, to: Int): Unit = {
+      var lastNz = from - 1
+      for (k <- from to to if zz(k) != 0) lastNz = k
+      var k = from
+      while (k <= lastNz) {
+        var run = 0
+        while (zz(k) == 0) { run += 1; k += 1 }
+        while (run >= 16) { putSym(ac, 0xF0); run -= 16 }
+        val v = zz(k); val s = cat(v)
+        putSym(ac, (run << 4) | s)
+        putBits(if (v < 0) v + (1 << s) - 1 else v, s)
+        k += 1
+      }
+    }
+    /** A sequential block: DC difference, AC runs, EOB unless coefficient
+      * 63 is nonzero. Returns the block's DC, the next prediction.
+      */
+    def putBlock(dc: FixHuff, ac: FixHuff, zz: Array[Int], pred: Int): Int = {
+      putDiff(dc, zz(0) - pred)
+      putAcRuns(ac, zz(_), 1, 63)
+      if (zz(63) == 0) putSym(ac, 0x00)
+      zz(0)
+    }
+  }
+
+  private def cat(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
+
+  /** The fixture block walk (T.81 A.2): one component visits its real
+    * block grid, several interleave by MCU over a `width`×`height` frame
+    * whose largest sampling factor is `hmax` (fixtures sample
+    * symmetrically), each component's hf×vf blocks in turn. `restart(n)`
+    * runs before every `restartInterval`-th MCU with the RSTn index.
+    */
+  private def fixScan(comps: Seq[FixComp], width: Int, height: Int, hmax: Int,
+                      restartInterval: Int, restart: Int => Unit)
+                     (block: (FixComp, Int, Int) => Unit): Unit = {
+    val mcusX = (width + 8 * hmax - 1) / (8 * hmax)
+    val mcusY = (height + 8 * hmax - 1) / (8 * hmax)
+    var mcu = 0
+    def boundary(): Unit = {
+      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0)
+        restart((mcu / restartInterval - 1) & 7)
+      mcu += 1
+    }
+    if (comps.length == 1) {
+      val c = comps.head
+      for (by <- 0 until c.bhReal; bx <- 0 until c.bwReal) { boundary(); block(c, bx, by) }
+    } else {
+      for (my <- 0 until mcusY; mx <- 0 until mcusX) {
+        boundary()
+        for (c <- comps; v <- 0 until c.vf; h <- 0 until c.hf)
+          block(c, mx * c.hf + h, my * c.vf + v)
+      }
+    }
+  }
+
   /** Minimal structurally-valid JPEG: SOI, JFIF APP0, a COM segment whose
     * length varies with (w+h) so the SOF offset is data-dependent (a
     * fixed-offset parser reads garbage), SOF0 with the given dimensions
@@ -857,26 +971,17 @@ object Multimodal {
     * code with the production parser.
     */
   def jpegBytes(width: Int, height: Int, components: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def b(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    b(0xff, 0xd8)                                   // SOI
-    b(0xff, 0xe0); be16(16)                         // APP0 JFIF
-    out.write("JFIF".getBytes("US-ASCII")); b(0)
-    b(1, 1, 0); be16(1); be16(1); b(0, 0)           // v1.1, no density, no thumb
-    val pad = (width + height) % 7                  // data-dependent COM size
-    b(0xff, 0xfe); be16(2 + 5 + pad)
-    out.write("graft".getBytes("US-ASCII"))
-    (0 until pad).foreach(_ => b('x'))
-    b(0xff, 0xc0); be16(8 + 3 * components); b(8)   // SOF0, precision 8
-    be16(height); be16(width); b(components)
-    (0 until components).foreach { c =>
-      b(c + 1, 0x11, if (c == 0) 0 else 1)          // id, 1x1 sampling, qtab
-    }
-    b(0xff, 0xda); be16(8); b(1, 1, 0, 0, 63, 0)    // SOS, 1 component
-    b(0x12, 0xff, 0x00, 0x34)                       // entropy bytes incl. stuffed FF
-    b(0xff, 0xd9)                                   // EOI
-    out.toByteArray
+    val j = new JpegWriter
+    j.b(0xff, 0xd8) // SOI
+    // APP0 JFIF v1.1, no density, no thumbnail
+    j.seg(0xe0, "JFIF".map(_.toInt) ++ Seq(0, 1, 1, 0) ++ be16(1) ++ be16(1) ++ Seq(0, 0))
+    val pad = (width + height) % 7 // data-dependent COM size
+    j.seg(0xfe, "graft".map(_.toInt) ++ Seq.fill(pad)('x'.toInt))
+    j.sof(0xc0, 8, width, height,
+      (0 until components).map(c => (c + 1, 0x11, if (c == 0) 0 else 1)))
+    j.sos(Seq(1 -> 0), 0, 63, 0)
+    j.b(0x12, 0xff, 0x00, 0x34) // entropy bytes incl. stuffed FF
+    j.finish()
   }
 
   /** REAL baseline JPEG encoder (fixture side): constant-valued 8×8
@@ -884,12 +989,10 @@ object Multimodal {
     * under any conforming IDCT), an optional hand-set quantized
     * coefficient block at Y position (0,0) that exercises the AC/IDCT
     * path with pre-verified integer outputs, 4:4:4 or 4:2:0 chroma
-    * layout, and restart markers. Deliberately shares NO code with the
-    * production decoder in expr/MediaCodecHelper — its zigzag is
-    * generated algorithmically, its Huffman tables are custom canonical
-    * tables built here, and its bit writer is its own — so a hash match
-    * on decoded statistics proves two independent implementations of the
-    * T.81 entropy/DCT layers agree.
+    * layout, and restart markers, written through the fixture-side
+    * [[JpegWriter]] with custom canonical Huffman tables — so a hash
+    * match on decoded statistics proves two independent implementations
+    * of the T.81 entropy/DCT layers agree.
     *
     * Quant tables: luma DC=8 / AC=16 (table 0), chroma DC=4 / AC=16
     * (table 1). Block constant v encodes to quantized DC (v-128)·8/q —
@@ -910,166 +1013,24 @@ object Multimodal {
                         acSeed: Array[Int],
                         restartInterval: Int): Array[Byte] = {
     require(width > 0 && height > 0)
-    val out = new java.io.ByteArrayOutputStream()
-    def b(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def seg(marker: Int, payload: Array[Byte]): Unit = {
-      b(0xff, marker); be16(payload.length + 2); out.write(payload)
-    }
-    // zigzag (index -> (row, col)) generated by the diagonal walk — the
-    // decoder hard-codes the T.81 table; independent derivations.
-    val zz = {
-      val a = new Array[(Int, Int)](64)
-      var r = 0; var c = 0
-      for (i <- 0 until 64) {
-        a(i) = (r, c)
-        if ((r + c) % 2 == 0) {
-          if (c == 7) r += 1 else if (r == 0) c += 1 else { r -= 1; c += 1 }
-        } else {
-          if (r == 7) c += 1 else if (c == 0) r += 1 else { r += 1; c -= 1 }
-        }
-      }
-      a
-    }
-    val _ = zz // zigzag identity: constant blocks only need position 0;
-    // acSeed is SPECIFIED in zigzag order so no reorder happens here —
-    // the decoder's dezigzag is what's under test.
-    // quant tables, zigzag order
-    val q0 = Array.tabulate(64)(i => if (i == 0) 8 else 16)
-    val q1 = Array.tabulate(64)(i => if (i == 0) 4 else 16)
-    b(0xff, 0xd8) // SOI
-    seg(0xdb, (0x00.toByte +: q0.map(_.toByte)) ++
-      (if (color) 0x01.toByte +: q1.map(_.toByte) else Array.empty[Byte]))
-    // SOF0
-    val ncomp = if (color) 3 else 1
-    val sofPayload = new java.io.ByteArrayOutputStream()
-    sofPayload.write(8) // precision
-    sofPayload.write((height >> 8) & 0xff); sofPayload.write(height & 0xff)
-    sofPayload.write((width >> 8) & 0xff); sofPayload.write(width & 0xff)
-    sofPayload.write(ncomp)
-    if (color) {
-      sofPayload.write(1); sofPayload.write(if (sub420) 0x22 else 0x11); sofPayload.write(0)
-      sofPayload.write(2); sofPayload.write(0x11); sofPayload.write(1)
-      sofPayload.write(3); sofPayload.write(0x11); sofPayload.write(1)
-    } else {
-      sofPayload.write(1); sofPayload.write(0x11); sofPayload.write(0)
-    }
-    seg(0xc0, sofPayload.toByteArray)
-    // Huffman tables: 12 DC categories and 12 AC run/size symbols, all at
-    // code length 4 (16 slots, no all-ones code used).
-    val dcVals = (0 to 11).toArray
-    val acVals = Array(0x00, 0x01, 0x02, 0x03, 0x04, 0x05,
-      0x11, 0x12, 0x21, 0x31, 0xB1, 0xF0)
-    val counts = Array(0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-    def canon(vals: Array[Int]): Map[Int, (Int, Int)] = {
-      var code = 0; var k = 0
-      val m = scala.collection.mutable.Map[Int, (Int, Int)]()
-      for (l <- 1 to 16) {
-        for (_ <- 0 until counts(l - 1)) { m(vals(k)) = (code, l); code += 1; k += 1 }
-        code <<= 1
-      }
-      m.toMap
-    }
-    val dcCode = canon(dcVals)
-    val acCode = canon(acVals)
-    def dhtPayload(tc: Int, th: Int, vals: Array[Int]): Array[Byte] =
-      (((tc << 4) | th) +: (counts ++ vals)).map(_.toByte)
+    // acSeed is SPECIFIED in zigzag order, so no reorder happens here —
+    // the decoder's dezigzag is what's under test
+    val comps = fixComps(width, height, color, sub420, yBlock, cbBlock,
+      crBlock, acSeed, chromaTables = 0x11)
+    val j = new JpegWriter
+    j.dctHeader(0xc0, width, height, comps)
     // two tables per DHT segment (exercises the decoder's multi-table walk)
-    seg(0xc4, dhtPayload(0, 0, dcVals) ++ dhtPayload(1, 0, acVals))
-    if (color) seg(0xc4, dhtPayload(0, 1, dcVals) ++ dhtPayload(1, 1, acVals))
-    if (restartInterval > 0)
-      seg(0xdd, Array(((restartInterval >> 8) & 0xff).toByte,
-        (restartInterval & 0xff).toByte))
-    // SOS
-    val sosPayload = new java.io.ByteArrayOutputStream()
-    sosPayload.write(ncomp)
-    sosPayload.write(1); sosPayload.write(0x00)
-    if (color) {
-      sosPayload.write(2); sosPayload.write(0x11)
-      sosPayload.write(3); sosPayload.write(0x11)
+    j.dht(0x00 -> FixDc, 0x10 -> FixAc)
+    if (color) j.dht(0x01 -> FixDc, 0x11 -> FixAc)
+    j.dri(restartInterval)
+    j.frameSos(comps, 0, 63, 0)
+    val preds = new Array[Int](comps.length)
+    fixScan(comps, width, height, comps.head.hf, restartInterval,
+      rst => { j.restart(rst); java.util.Arrays.fill(preds, 0) }) { (c, bx, by) =>
+      preds(c.idx) = j.putBlock(FixDc, FixAc, c.blk(bx, by), preds(c.idx))
     }
-    sosPayload.write(0); sosPayload.write(63); sosPayload.write(0)
-    seg(0xda, sosPayload.toByteArray)
-    // entropy-coded data: MSB-first bit writer with FF00 stuffing
-    var acc = 0; var nbits = 0
-    def putBit(bit: Int): Unit = {
-      acc = (acc << 1) | bit; nbits += 1
-      if (nbits == 8) {
-        out.write(acc)
-        if (acc == 0xff) out.write(0x00)
-        acc = 0; nbits = 0
-      }
-    }
-    def putBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { putBit((v >> i) & 1); i -= 1 }
-    }
-    def flushBits(): Unit = while (nbits != 0) putBit(1) // pad with 1s
-    def cat(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    def emitDc(diff: Int): Unit = {
-      val t = cat(diff)
-      val (c0, l0) = dcCode(t)
-      putBits(c0, l0)
-      if (t > 0) putBits(if (diff < 0) diff + (1 << t) - 1 else diff, t)
-    }
-    def emitEob(): Unit = { val (c0, l0) = acCode(0x00); putBits(c0, l0) }
-    /** Encode one block from quantized zigzag coefficients; returns new DC pred. */
-    def emitBlock(coeffs: Array[Int], pred: Int): Int = {
-      emitDc(coeffs(0) - pred)
-      var lastNz = 0
-      for (k <- 1 until 64 if coeffs(k) != 0) lastNz = k
-      var k = 1
-      while (k <= lastNz) {
-        var run = 0
-        while (coeffs(k) == 0) { run += 1; k += 1 }
-        while (run >= 16) { val (c0, l0) = acCode(0xF0); putBits(c0, l0); run -= 16 }
-        val v = coeffs(k); val s = cat(v)
-        val (c0, l0) = acCode((run << 4) | s)
-        putBits(c0, l0)
-        putBits(if (v < 0) v + (1 << s) - 1 else v, s)
-        k += 1
-      }
-      if (lastNz < 63) emitEob()
-      coeffs(0)
-    }
-    val constBlock = new Array[Int](64)
-    def emitConst(value: Int, qdc: Int, pred: Int): Int = {
-      val dcq = (value - 128) * 8 / qdc // exact: qdc ∈ {8, 4}
-      constBlock(0) = dcq
-      emitBlock(constBlock, pred)
-    }
-    val hmax = if (color && sub420) 2 else 1
-    val vmax = hmax // fixtures sample symmetrically (1x1 / 2x2); the MCU
-    // walk still counts rows by the VERTICAL factor so an asymmetric
-    // (2x1) lane added later cannot inherit a wrong block walk
-    val mcusX = (width + 8 * hmax - 1) / (8 * hmax)
-    val mcusY = (height + 8 * vmax - 1) / (8 * vmax)
-    var predY = 0; var predCb = 0; var predCr = 0
-    var mcu = 0; var rstIdx = 0
-    for (my <- 0 until mcusY; mx <- 0 until mcusX) {
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        flushBits()
-        b(0xff, 0xd0 + rstIdx); rstIdx = (rstIdx + 1) & 7
-        predY = 0; predCb = 0; predCr = 0
-      }
-      val yBlocks =
-        if (hmax == 2) Seq((2 * mx, 2 * my), (2 * mx + 1, 2 * my),
-          (2 * mx, 2 * my + 1), (2 * mx + 1, 2 * my + 1))
-        else Seq((mx, my))
-      for ((bx, by) <- yBlocks) {
-        predY =
-          if (acSeed != null && bx == 0 && by == 0) emitBlock(acSeed, predY)
-          else emitConst(yBlock(bx, by), 8, predY)
-      }
-      if (color) {
-        predCb = emitConst(cbBlock(mx, my), 4, predCb)
-        predCr = emitConst(crBlock(mx, my), 4, predCr)
-      }
-      mcu += 1
-    }
-    flushBits()
-    b(0xff, 0xd9) // EOI
-    out.toByteArray
+    j.flushBits()
+    j.finish()
   }
 
   /** The hand-set AC test block (quantized, zigzag order): DC + 9 AC
@@ -1283,6 +1244,72 @@ object Multimodal {
         }
       }
     }
+
+    /** The DC-difference decision tree (F.1.4.4.1; lossless H.1.2.2
+      * reuses it): zero decision at `ctx`, sign, magnitude category up
+      * the X bins from `xBase`, magnitude bits in the matching M bins.
+      * Returns the difference's class against the DAC bounds: 0 zero or
+      * small below L, 1/2 small positive/negative, 3/4 large.
+      */
+    def codeDiff(st: Array[Int], ctx: Int, xBase: Int, d: Int,
+                 condL: Int, condU: Int): Int = {
+      if (d == 0) { code(st, ctx, 0); return 0 }
+      code(st, ctx, 1)
+      val sign = if (d < 0) 1 else 0
+      code(st, ctx + 1, sign)
+      val v = math.abs(d) - 1
+      var m = 0
+      var si = ctx + 2 + sign
+      if (v == 0) code(st, si, 0)
+      else {
+        code(st, si, 1)
+        m = 1; si = xBase
+        while (v >= (m << 1)) { code(st, si, 1); m <<= 1; si += 1 }
+        code(st, si, 0)
+      }
+      si += 14
+      var mm = m >> 1
+      while (mm != 0) { code(st, si, if ((v & mm) != 0) 1 else 0); mm >>= 1 }
+      if (m < ((1 << condL) >> 1)) 0
+      else if (m > ((1 << condU) >> 1)) 3 + sign
+      else 1 + sign
+    }
+
+    private val fixedBin = Array(113 << 1) // non-adaptive AC sign bin
+
+    /** A block's AC band 1..63 (the F.1.4.4.2 model), zigzag order. */
+    def codeAc(st: Array[Int], zz: Array[Int], condK: Int): Unit = {
+      var lastNz = 0
+      for (i <- 1 until 64 if zz(i) != 0) lastNz = i
+      var k = 1
+      while (k <= lastNz) {
+        var si = 3 * (k - 1)
+        code(st, si, 0) // not EOB
+        while (zz(k) == 0) { code(st, si + 1, 0); si += 3; k += 1 }
+        code(st, si + 1, 1)
+        val cv = zz(k)
+        code(fixedBin, 0, if (cv < 0) 1 else 0)
+        val v = math.abs(cv) - 1
+        var m = 0
+        si += 2
+        if (v == 0) code(st, si, 0)
+        else {
+          code(st, si, 1)
+          if (v == 1) { code(st, si, 0); m = 1 }
+          else {
+            code(st, si, 1)
+            m = 2; si = if (k <= condK) 189 else 217
+            while (v >= (m << 1)) { code(st, si, 1); m <<= 1; si += 1 }
+            code(st, si, 0)
+          }
+        }
+        si += 14
+        var mm = m >> 1
+        while (mm != 0) { code(st, si, if ((v & mm) != 0) 1 else 0); mm >>= 1 }
+        k += 1
+      }
+      if (lastNz < 63) code(st, 3 * (k - 1), 1) // EOB
+    }
   }
 
   /** REAL arithmetic-coded JPEG encoder (fixture side): SOF9 extended
@@ -1315,253 +1342,60 @@ object Multimodal {
     // (Y-only full-band scan + interleaved Cb+Cr scan)
     require(!multiScan || (color && !sub420 && !progressive),
       "multi-scan fixture lane is 1x1 color")
-    val out = new java.io.ByteArrayOutputStream()
-    def b(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def seg(marker: Int, payload: Array[Byte]): Unit = {
-      b(0xff, marker); be16(payload.length + 2); out.write(payload)
-    }
     val condL = 0
     val condU = if (dacU >= 0) dacU else 1
     val condK = if (dacK >= 0) dacK else 5
-    val q0 = Array.tabulate(64)(i => if (i == 0) 8 else 16)
-    val q1 = Array.tabulate(64)(i => if (i == 0) 4 else 16)
-    b(0xff, 0xd8) // SOI
-    seg(0xdb, (0x00.toByte +: q0.map(_.toByte)) ++
-      (if (color) 0x01.toByte +: q1.map(_.toByte) else Array.empty[Byte]))
-    val ncomp = if (color) 3 else 1
-    val sof = new java.io.ByteArrayOutputStream()
-    sof.write(8)
-    sof.write((height >> 8) & 0xff); sof.write(height & 0xff)
-    sof.write((width >> 8) & 0xff); sof.write(width & 0xff)
-    sof.write(ncomp)
-    if (color) {
-      sof.write(1); sof.write(if (sub420) 0x22 else 0x11); sof.write(0)
-      sof.write(2); sof.write(0x11); sof.write(1)
-      sof.write(3); sof.write(0x11); sof.write(1)
-    } else { sof.write(1); sof.write(0x11); sof.write(0) }
-    seg(if (progressive) 0xca else 0xc9,
-      sof.toByteArray) // SOF9 sequential / SOF10 progressive arithmetic
-    if (dacU >= 0 || dacK >= 0) {
-      // DAC: DC table 0 (U<<4|L) and AC table 0 (Kx); chroma slots use
-      // slot 0's values via Td/Ta below, so one pair suffices
-      seg(0xcc, Array(0x00.toByte, ((condU << 4) | condL).toByte,
-        0x10.toByte, condK.toByte))
+    // every component codes against conditioning/statistics slot 0
+    val comps = fixComps(width, height, color, sub420, yBlock, cbBlock,
+      crBlock, acSeed, chromaTables = 0x00)
+    val j = new JpegWriter
+    // SOF9 sequential / SOF10 progressive arithmetic
+    j.dctHeader(if (progressive) 0xca else 0xc9, width, height, comps)
+    // DAC: DC table 0 (U<<4|L) and AC table 0 (Kx)
+    if (dacU >= 0 || dacK >= 0)
+      j.seg(0xcc, Seq(0x00, (condU << 4) | condL, 0x10, condK))
+    j.dri(restartInterval)
+    // ---- entropy layer: each scan is its own arithmetic segment ----
+    val enc = new QmEnc(j.out)
+    val dcStats = new Array[Int](64)
+    val acStats = new Array[Int](256)
+    val dcCtx = new Array[Int](comps.length)
+    val preds = new Array[Int](comps.length)
+    def segmentStart(): Unit = {
+      enc.reset()
+      java.util.Arrays.fill(dcStats, 0); java.util.Arrays.fill(acStats, 0)
+      java.util.Arrays.fill(dcCtx, 0); java.util.Arrays.fill(preds, 0)
     }
-    if (restartInterval > 0)
-      seg(0xdd, Array(((restartInterval >> 8) & 0xff).toByte,
-        (restartInterval & 0xff).toByte))
-    if (!progressive && !multiScan) { // the single full-band scan header
-      val sos = new java.io.ByteArrayOutputStream()
-      sos.write(ncomp)
-      sos.write(1); sos.write(0x00)
-      if (color) { sos.write(2); sos.write(0x00); sos.write(3); sos.write(0x00) }
-      sos.write(0); sos.write(63); sos.write(0)
-      seg(0xda, sos.toByteArray)
+    def dcPart(c: FixComp, coef0: Int): Unit = {
+      dcCtx(c.idx) = 4 * enc.codeDiff(dcStats, dcCtx(c.idx), 20,
+        coef0 - preds(c.idx), condL, condU)
+      preds(c.idx) = coef0
     }
-    // ---- entropy layer ----
-    val enc = new QmEnc(out)
-    val dcStats = Array.ofDim[Int](4, 64)
-    val acStats = Array.ofDim[Int](4, 256)
-    val fixedBin = Array(113 << 1)
-    val dcCtx = new Array[Int](ncomp)
-    val preds = new Array[Int](ncomp)
-    def resetStats(): Unit = {
-      var t = 0
-      while (t < 4) {
-        java.util.Arrays.fill(dcStats(t), 0)
-        java.util.Arrays.fill(acStats(t), 0)
-        t += 1
+    /** One arithmetic scan: DC and/or AC parts per block, restarts
+      * flushing the coder into a fresh segment.
+      */
+    def scan(sc: Seq[FixComp], ss: Int, se: Int, dc: Boolean, ac: Boolean): Unit = {
+      j.frameSos(sc, ss, se, 0)
+      segmentStart()
+      fixScan(sc, width, height, comps.head.hf, restartInterval,
+        rst => { enc.flush(); j.b(0xff, 0xd0 + rst); segmentStart() }) { (c, bx, by) =>
+        val zz = c.blk(bx, by)
+        if (dc) dcPart(c, zz(0))
+        if (ac) enc.codeAc(acStats, zz, condK)
       }
-      fixedBin(0) = 113 << 1
-      java.util.Arrays.fill(dcCtx, 0)
-      java.util.Arrays.fill(preds, 0)
-    }
-    /** Encode a block's DC coefficient (the F.1.4.4.1 diff model). */
-    def emitDcPart(coef0: Int, ci: Int): Unit = {
-      val dc = dcStats(0) // all components share conditioning slot 0
-      val diff = coef0 - preds(ci)
-      preds(ci) = coef0
-      val ctx = dcCtx(ci)
-      if (diff == 0) { enc.code(dc, ctx, 0); dcCtx(ci) = 0 }
-      else {
-        enc.code(dc, ctx, 1)
-        val sign = if (diff < 0) 1 else 0
-        enc.code(dc, ctx + 1, sign)
-        var v = math.abs(diff) - 1
-        var m = 0
-        var si = ctx + 2 + sign
-        if (v == 0) enc.code(dc, si, 0)
-        else {
-          enc.code(dc, si, 1)
-          m = 1; si = 20
-          while (v >= (m << 1)) { enc.code(dc, si, 1); m <<= 1; si += 1 }
-          enc.code(dc, si, 0)
-        }
-        dcCtx(ci) =
-          if (m < ((1 << condL) >> 1)) 0
-          else if (m > ((1 << condU) >> 1)) 12 + sign * 4
-          else 4 + sign * 4
-        si += 14
-        var mm = m >> 1
-        while (mm != 0) {
-          enc.code(dc, si, if ((v & mm) != 0) 1 else 0); mm >>= 1
-        }
-      }
-    }
-    /** Encode a block's AC band 1..63 (the F.1.4.4.2 model). */
-    def emitAcPart(coefs: Array[Int]): Unit = {
-      val ac = acStats(0)
-      var lastNz = 0
-      var i = 1
-      while (i < 64) { if (coefs(i) != 0) lastNz = i; i += 1 }
-      var k = 1
-      while (k <= lastNz) {
-        var si = 3 * (k - 1)
-        enc.code(ac, si, 0) // not EOB
-        while (coefs(k) == 0) { enc.code(ac, si + 1, 0); si += 3; k += 1 }
-        enc.code(ac, si + 1, 1)
-        val cv = coefs(k)
-        val sign = if (cv < 0) 1 else 0
-        enc.code(fixedBin, 0, sign)
-        var v = math.abs(cv) - 1
-        var m = 0
-        si += 2
-        if (v == 0) enc.code(ac, si, 0)
-        else {
-          enc.code(ac, si, 1)
-          if (v == 1) { enc.code(ac, si, 0); m = 1 }
-          else {
-            enc.code(ac, si, 1)
-            m = 2; si = if (k <= condK) 189 else 217
-            while (v >= (m << 1)) { enc.code(ac, si, 1); m <<= 1; si += 1 }
-            enc.code(ac, si, 0)
-          }
-        }
-        si += 14
-        var mm = m >> 1
-        while (mm != 0) {
-          enc.code(ac, si, if ((v & mm) != 0) 1 else 0); mm >>= 1
-        }
-        k += 1
-      }
-      if (lastNz < 63) enc.code(ac, 3 * (k - 1), 1) // EOB
-    }
-    def emitBlock(coefs: Array[Int], ci: Int): Unit = {
-      emitDcPart(coefs(0), ci)
-      emitAcPart(coefs)
-    }
-    val constBlock = new Array[Int](64)
-    def emitConst(value: Int, qdc: Int, ci: Int): Unit = {
-      constBlock(0) = (value - 128) * 8 / qdc // exact: qdc in {8, 4}
-      emitBlock(constBlock, ci)
+      enc.flush()
     }
     if (progressive) {
-      // gray spectral script: SOS(DC, Ss=Se=0) then SOS(AC, 1..63),
-      // each its own arithmetic segment over the real block grid,
-      // restart markers inside both scans
-      val bxN = (width + 7) / 8; val byN = (height + 7) / 8
-      def coefsAt(bx: Int, by: Int): Array[Int] =
-        if (acSeed != null && bx == 0 && by == 0) acSeed
-        else { constBlock(0) = yBlock(bx, by) - 128; constBlock }
-      def scanWalk(emit: (Int, Int) => Unit): Unit = {
-        var mcu = 0; var rstIdx = 0
-        for (by <- 0 until byN; bx <- 0 until bxN) {
-          if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-            enc.flush()
-            b(0xff, 0xd0 + rstIdx); rstIdx = (rstIdx + 1) & 7
-            enc.reset(); resetStats()
-          }
-          emit(bx, by)
-          mcu += 1
-        }
-        enc.flush()
-      }
-      def sos(ss: Int, se: Int): Unit =
-        seg(0xda, Array[Byte](1, 1, 0x00, ss.toByte, se.toByte, 0))
-      sos(0, 0)
-      enc.reset(); resetStats()
-      scanWalk((bx, by) => emitDcPart(coefsAt(bx, by)(0), 0))
-      sos(1, 63)
-      enc.reset(); resetStats()
-      scanWalk((bx, by) => emitAcPart(coefsAt(bx, by)))
-      b(0xff, 0xd9) // EOI
-      return out.toByteArray
-    }
-    if (multiScan) {
-      // T.81 non-interleaved sequential layout: scan 1 = Y full-band
-      // over the block grid, scan 2 = Cb+Cr interleaved; each scan its
-      // own arithmetic segment, restarts inside both
-      val bxN = (width + 7) / 8; val byN = (height + 7) / 8
-      def sos(ids: Seq[Int]): Unit = {
-        val pl = new java.io.ByteArrayOutputStream()
-        pl.write(ids.length)
-        ids.foreach { id => pl.write(id); pl.write(0x00) }
-        pl.write(0); pl.write(63); pl.write(0)
-        seg(0xda, pl.toByteArray)
-      }
-      def scanWalk(perPos: (Int, Int) => Unit): Unit = {
-        var mcu = 0; var rstIdx = 0
-        for (by <- 0 until byN; bx <- 0 until bxN) {
-          if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-            enc.flush()
-            b(0xff, 0xd0 + rstIdx); rstIdx = (rstIdx + 1) & 7
-            enc.reset(); resetStats()
-          }
-          perPos(bx, by)
-          mcu += 1
-        }
-        enc.flush()
-      }
-      sos(Seq(1))
-      enc.reset(); resetStats()
-      scanWalk { (bx, by) =>
-        if (acSeed != null && bx == 0 && by == 0) emitBlock(acSeed, 0)
-        else emitConst(yBlock(bx, by), 8, 0)
-      }
-      sos(Seq(2, 3))
-      enc.reset(); resetStats()
-      scanWalk { (bx, by) =>
-        emitConst(cbBlock(bx, by), 4, 1)
-        emitConst(crBlock(bx, by), 4, 2)
-      }
-      b(0xff, 0xd9) // EOI
-      return out.toByteArray
-    }
-    val hmax = if (color && sub420) 2 else 1
-    val vmax = hmax // fixtures sample symmetrically (1x1 / 2x2); the MCU
-    // walk still counts rows by the VERTICAL factor so an asymmetric
-    // (2x1) lane added later cannot inherit a wrong block walk
-    val mcusX = (width + 8 * hmax - 1) / (8 * hmax)
-    val mcusY = (height + 8 * vmax - 1) / (8 * vmax)
-    var mcu = 0; var rstIdx = 0
-    for (my <- 0 until mcusY; mx <- 0 until mcusX) {
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        enc.flush()
-        b(0xff, 0xd0 + rstIdx); rstIdx = (rstIdx + 1) & 7
-        enc.reset(); resetStats()
-      }
-      val yBlocks =
-        if (hmax == 2) Seq((2 * mx, 2 * my), (2 * mx + 1, 2 * my),
-          (2 * mx, 2 * my + 1), (2 * mx + 1, 2 * my + 1))
-        else Seq((mx, my))
-      for ((bx, by) <- yBlocks) {
-        if (acSeed != null && bx == 0 && by == 0) {
-          // acSeed is zigzag-ordered; this encoder codes positions in
-          // zigzag order directly, so pass through
-          val blk = acSeed.clone()
-          emitBlock(blk, 0)
-        } else emitConst(yBlock(bx, by), 8, 0)
-      }
-      if (color) {
-        emitConst(cbBlock(mx, my), 4, 1)
-        emitConst(crBlock(mx, my), 4, 2)
-      }
-      mcu += 1
-    }
-    enc.flush()
-    b(0xff, 0xd9) // EOI
-    out.toByteArray
+      // gray spectral script: SOS(DC, Ss=Se=0) then SOS(AC, 1..63)
+      scan(comps, 0, 0, dc = true, ac = false)
+      scan(comps, 1, 63, dc = false, ac = true)
+    } else if (multiScan) {
+      // T.81 non-interleaved sequential layout: Y full-band over its
+      // block grid, then Cb+Cr interleaved
+      scan(comps.take(1), 0, 63, dc = true, ac = true)
+      scan(comps.drop(1), 0, 63, dc = true, ac = true)
+    } else scan(comps, 0, 63, dc = true, ac = true)
+    j.finish()
   }
 
   /** Gray arithmetic JPEG fixture for doc `id`: (14+id%19)×(10+id%11),
@@ -1644,84 +1478,24 @@ object Multimodal {
   def jpeg12Bytes(w: Int, h: Int, q0: Int, q16: Boolean,
                   dcBlock: (Int, Int) => Int, ac00: Seq[Int],
                   restartInterval: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def b2(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8)
-    out.write(0xff); out.write(0xdb) // DQT: q0 then unit steps
-    if (q16) {
-      b2(2 + 1 + 128); out.write(0x10)
-      b2(q0); for (_ <- 1 until 64) b2(1)
-    } else {
-      b2(2 + 1 + 64); out.write(0x00)
-      out.write(q0); for (_ <- 1 until 64) out.write(1)
+    val dc = flatHuff(5, 0 to 15)
+    val ac = flatHuff(5, 0x00 +: (1 to 10) :+ 0xf0)
+    val j = new JpegWriter
+    j.b(0xff, 0xd8) // SOI
+    j.dqt((if (q16) 0x10 else 0x00) -> (q0 +: Seq.fill(63)(1))) // q0, unit steps
+    j.dht(0x00 -> dc)
+    j.dht(0x10 -> ac)
+    j.sof(0xc1, 12, w, h, Seq((1, 0x11, 0))) // SOF1: 12-bit gray
+    j.dri(restartInterval)
+    j.sos(Seq(1 -> 0x00), 0, 63, 0)
+    var pred = 0
+    val gray = FixComp(0, 1, 1, 1, 0x00, (w + 7) / 8, (h + 7) / 8, (bx, by) =>
+      (dcBlock(bx, by) +: (if (bx == 0 && by == 0) ac00 else Nil)).padTo(64, 0).toArray)
+    fixScan(Seq(gray), w, h, 1, restartInterval, rst => { j.restart(rst); pred = 0 }) {
+      (c, bx, by) => pred = j.putBlock(dc, ac, c.blk(bx, by), pred)
     }
-    out.write(0xff); out.write(0xc4) // DHT: DC class 0 id 0
-    b2(2 + 1 + 16 + 16)
-    out.write(0x00)
-    for (l <- 1 to 16) out.write(if (l == 5) 16 else 0)
-    for (s <- 0 to 15) out.write(s)
-    out.write(0xff); out.write(0xc4) // DHT: AC class 1 id 0
-    b2(2 + 1 + 16 + 12)
-    out.write(0x10)
-    for (l <- 1 to 16) out.write(if (l == 5) 12 else 0)
-    out.write(0x00); for (s <- 1 to 10) out.write(s); out.write(0xf0)
-    val acSym: Map[Int, Int] =
-      (Seq(0x00) ++ (1 to 10).map(s => s) ++ Seq(0xf0)).zipWithIndex.toMap
-    out.write(0xff); out.write(0xc1) // SOF1: 12-bit gray
-    b2(11); out.write(12); b2(h); b2(w); out.write(1)
-    out.write(1); out.write(0x11); out.write(0)
-    if (restartInterval > 0) {
-      out.write(0xff); out.write(0xdd); b2(4); b2(restartInterval)
-    }
-    out.write(0xff); out.write(0xda) // SOS
-    b2(8); out.write(1); out.write(1); out.write(0x00)
-    out.write(0); out.write(63); out.write(0)
-    var acc = 0; var nbits = 0
-    def putBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1); nbits += 1
-        if (nbits == 8) {
-          out.write(acc)
-          if (acc == 0xff) out.write(0x00)
-          acc = 0; nbits = 0
-        }
-        i -= 1
-      }
-    }
-    def putSigned(d: Int): Unit = {
-      val mag = math.abs(d)
-      var t = 0
-      while ((1 << t) <= mag) t += 1
-      putBits(t, 5) // DC category code = symbol index = category
-      if (t > 0) putBits(if (d >= 0) d else d - 1 + (1 << t), t)
-    }
-    val bxN = (w + 7) / 8; val byN = (h + 7) / 8
-    var pred = 0; var mcu = 0; var rstIdx = 0
-    for (by <- 0 until byN; bx <- 0 until bxN) {
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        if (nbits > 0) putBits((1 << (8 - nbits)) - 1, 8 - nbits)
-        out.write(0xff); out.write(0xd0 + rstIdx)
-        rstIdx = (rstIdx + 1) & 7; pred = 0
-      }
-      val dc = dcBlock(bx, by)
-      putSigned(dc - pred); pred = dc
-      if (bx == 0 && by == 0 && ac00.nonEmpty) {
-        ac00.foreach { a => // run-0 coefficients at zigzag 1..n
-          val mag = math.abs(a)
-          var t = 0
-          while ((1 << t) <= mag) t += 1
-          require(t >= 1 && t <= 10, s"AC size $t out of the table")
-          putBits(acSym(t), 5)
-          putBits(if (a >= 0) a else a - 1 + (1 << t), t)
-        }
-      }
-      putBits(acSym(0x00), 5) // EOB
-      mcu += 1
-    }
-    if (nbits > 0) putBits((1 << (8 - nbits)) - 1, 8 - nbits)
-    out.write(0xff); out.write(0xd9)
-    out.toByteArray
+    j.flushBits()
+    j.finish()
   }
 
   /** 12-bit JPEG lane A: (10+id%15)×(9+id%8), q0=8 (8-bit DQT), restart
@@ -1766,65 +1540,49 @@ object Multimodal {
                         pt: Int, nc: Int,
                         diff: (Int, Int, Int) => Int,
                         restartInterval: Int = 0): Array[Byte] = {
+    val t = flatHuff(5, 0 to 16)
+    val j = losslessHeader(0xc3, w, h, precision, predictor, pt, nc,
+      restartInterval, j => j.dht(0x00 -> t))
+    losslessRows(w, h, nc, restartInterval, j.restart) { (c, x, y) =>
+      val d = diff(c, x, y)
+      require(d == 32768 || (d > -32768 && d < 32768), s"diff $d unrepresentable")
+      j.putDiff(t, d) // SSSS: 2^(s-1) <= |d| < 2^s
+    }
+    j.flushBits()
+    j.finish()
+  }
+
+  /** SOI, the tables `tables` writes, SOF3/SOF11, DRI and the one
+    * interleaved SOS (predictor in Ss, point transform in Al) of a
+    * lossless fixture frame: components 1..nc at 1×1, table 0.
+    */
+  private def losslessHeader(sof: Int, w: Int, h: Int, precision: Int,
+                             predictor: Int, pt: Int, nc: Int,
+                             restartInterval: Int,
+                             tables: JpegWriter => Unit): JpegWriter = {
     require(restartInterval == 0 || restartInterval % w == 0,
       "fixture restart intervals are row-aligned (the decode envelope)")
-    val out = new java.io.ByteArrayOutputStream()
-    def b2(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xc4) // DHT: class 0, id 0
-    b2(2 + 1 + 16 + 17)
-    out.write(0x00)
-    for (l <- 1 to 16) out.write(if (l == 5) 17 else 0)
-    for (s <- 0 to 16) out.write(s)
-    out.write(0xff); out.write(0xc3) // SOF3
-    b2(8 + 3 * nc)
-    out.write(precision); b2(h); b2(w); out.write(nc)
-    for (c <- 0 until nc) { out.write(1 + c); out.write(0x11); out.write(0) }
-    if (restartInterval > 0) {
-      out.write(0xff); out.write(0xdd); b2(4); b2(restartInterval)
-    }
-    out.write(0xff); out.write(0xda) // SOS
-    b2(6 + 2 * nc)
-    out.write(nc)
-    for (c <- 0 until nc) { out.write(1 + c); out.write(0x00) }
-    out.write(predictor); out.write(0); out.write(pt)
-    var acc = 0; var nbits = 0
-    def putBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1); nbits += 1
-        if (nbits == 8) {
-          out.write(acc)
-          if (acc == 0xff) out.write(0x00)
-          acc = 0; nbits = 0
-        }
-        i -= 1
-      }
-    }
+    val j = new JpegWriter
+    j.b(0xff, 0xd8) // SOI
+    tables(j)
+    j.sof(sof, precision, w, h, (0 until nc).map(c => (1 + c, 0x11, 0)))
+    j.dri(restartInterval)
+    j.sos((0 until nc).map(c => (1 + c, 0x00)), predictor, 0, pt)
+    j
+  }
+
+  /** Lossless sample order: rows, then columns, then components, with
+    * `restart(n)` before every row a row-aligned interval starts.
+    */
+  private def losslessRows(w: Int, h: Int, nc: Int, restartInterval: Int,
+                           restart: Int => Unit)
+                          (sample: (Int, Int, Int) => Unit): Unit = {
     val restartRows = if (restartInterval > 0) restartInterval / w else 0
-    var rstIdx = 0
     for (y <- 0 until h) {
-      if (restartRows > 0 && y > 0 && y % restartRows == 0) {
-        if (nbits > 0) putBits((1 << (8 - nbits)) - 1, 8 - nbits)
-        out.write(0xff); out.write(0xd0 + rstIdx)
-        rstIdx = (rstIdx + 1) & 7
-      }
-      for (x <- 0 until w; c <- 0 until nc) {
-        val d = diff(c, x, y)
-        require(d == 32768 || (d > -32768 && d < 32768), s"diff $d unrepresentable")
-        if (d == 32768) putBits(16, 5)
-        else {
-          val mag = math.abs(d)
-          var t = 0
-          while ((1 << t) <= mag) t += 1 // SSSS: 2^(t-1) <= |d| < 2^t
-          putBits(t, 5)
-          if (t > 0) putBits(if (d >= 0) d else d - 1 + (1 << t), t)
-        }
-      }
+      if (restartRows > 0 && y > 0 && y % restartRows == 0)
+        restart((y / restartRows - 1) & 7)
+      for (x <- 0 until w; c <- 0 until nc) sample(c, x, y)
     }
-    if (nbits > 0) putBits((1 << (8 - nbits)) - 1, 8 - nbits)
-    out.write(0xff); out.write(0xd9) // EOI
-    out.toByteArray
   }
 
   /** Lossless gray 16-bit lane (predictor 1 — Ra): (6+id%5)×(5+id%4),
@@ -1879,87 +1637,36 @@ object Multimodal {
                              pt: Int, nc: Int, dacL: Int, dacU: Int,
                              diff: (Int, Int, Int) => Int,
                              restartInterval: Int = 0): Array[Byte] = {
-    require(restartInterval == 0 || restartInterval % w == 0,
-      "fixture restart intervals are row-aligned (the decode envelope)")
-    val out = new java.io.ByteArrayOutputStream()
-    def b2(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
     val condL = if (dacL >= 0) dacL else 0
     val condU = if (dacU >= 0) dacU else 1
-    out.write(0xff); out.write(0xd8) // SOI
-    if (dacL >= 0 || dacU >= 0) { // DAC: DC-class table 0, (U<<4)|L
-      out.write(0xff); out.write(0xcc)
-      b2(2 + 2)
-      out.write(0x00); out.write((condU << 4) | condL)
-    }
-    out.write(0xff); out.write(0xcb) // SOF11
-    b2(8 + 3 * nc)
-    out.write(precision); b2(h); b2(w); out.write(nc)
-    for (c <- 0 until nc) { out.write(1 + c); out.write(0x11); out.write(0) }
-    if (restartInterval > 0) {
-      out.write(0xff); out.write(0xdd); b2(4); b2(restartInterval)
-    }
-    out.write(0xff); out.write(0xda) // SOS
-    b2(6 + 2 * nc)
-    out.write(nc)
-    for (c <- 0 until nc) { out.write(1 + c); out.write(0x00) }
-    out.write(predictor); out.write(0); out.write(pt)
-    val enc = new QmEnc(out)
-    val st = Array.ofDim[Int](158)
+    val j = losslessHeader(0xcb, w, h, precision, predictor, pt, nc,
+      restartInterval, j => // DAC: DC-class table 0, (U<<4)|L
+        if (dacL >= 0 || dacU >= 0) j.seg(0xcc, Seq(0x00, (condU << 4) | condL)))
+    val enc = new QmEnc(j.out)
+    val st = new Array[Int](158)
     // category of the diff at each column of the row above / at the left
     val catUp = Array.ofDim[Int](nc, w)
     val catLeft = new Array[Int](nc)
-    val restartRows = if (restartInterval > 0) restartInterval / w else 0
-    var rstIdx = 0
-    for (y <- 0 until h) {
-      if (restartRows > 0 && y > 0 && y % restartRows == 0) {
-        // each interval is its own arithmetic segment: flush, marker,
-        // fresh coder, zeroed statistics AND conditioning state
-        enc.flush()
-        out.write(0xff); out.write(0xd0 + rstIdx)
-        rstIdx = (rstIdx + 1) & 7
-        enc.reset()
-        java.util.Arrays.fill(st, 0)
-        for (c <- 0 until nc) java.util.Arrays.fill(catUp(c), 0)
-      }
-      java.util.Arrays.fill(catLeft, 0)
-      for (x <- 0 until w; c <- 0 until nc) {
-        val d = diff(c, x, y)
-        require(d > -32769 && d <= 32768, s"diff $d unrepresentable")
-        val ctx = (catLeft(c) * 5 + catUp(c)(x)) * 4
-        var cat = 0
-        if (d == 0) enc.code(st, ctx, 0)
-        else {
-          enc.code(st, ctx, 1)
-          val sign = if (d < 0) 1 else 0
-          enc.code(st, ctx + 1, sign)
-          val v = math.abs(d) - 1
-          var m = 0
-          var si = ctx + 2 + sign
-          if (v == 0) enc.code(st, si, 0)
-          else {
-            enc.code(st, si, 1)
-            m = 1
-            si = if (catUp(c)(x) > 2) 129 else 100
-            while (v >= (m << 1)) { enc.code(st, si, 1); m <<= 1; si += 1 }
-            enc.code(st, si, 0)
-          }
-          cat =
-            if (m < ((1 << condL) >> 1)) 0
-            else if (m > ((1 << condU) >> 1)) 3 + sign
-            else 1 + sign
-          si += 14
-          var mm = m >> 1
-          while (mm != 0) {
-            enc.code(st, si, if ((v & mm) != 0) 1 else 0); mm >>= 1
-          }
-        }
-        catLeft(c) = cat
-        catUp(c)(x) = cat
-      }
+    losslessRows(w, h, nc, restartInterval, rst => {
+      // each interval is its own arithmetic segment: flush, marker,
+      // fresh coder, zeroed statistics AND conditioning state
+      enc.flush()
+      j.b(0xff, 0xd0 + rst)
+      enc.reset()
+      java.util.Arrays.fill(st, 0)
+      catUp.foreach(java.util.Arrays.fill(_, 0))
+    }) { (c, x, y) =>
+      if (x == 0) catLeft(c) = 0
+      val d = diff(c, x, y)
+      require(d > -32769 && d <= 32768, s"diff $d unrepresentable")
+      val up = catUp(c)(x)
+      val cat = enc.codeDiff(st, (catLeft(c) * 5 + up) * 4,
+        if (up > 2) 129 else 100, d, condL, condU)
+      catLeft(c) = cat
+      catUp(c)(x) = cat
     }
     enc.flush()
-    out.write(0xff); out.write(0xd9) // EOI
-    out.toByteArray
+    j.finish()
   }
 
   /** SOF11 gray 16-bit lane (predictor 1 — Ra), no DAC (decoder default
@@ -2031,7 +1738,7 @@ object Multimodal {
     * successive approximation, written from T.81 Annex G with its own
     * scan scripts, EOB-run accumulator, correction-bit buffer and bit
     * writer: zero shared code with the production decoder's progressive
-    * path (graft.expr.MediaCodecHelper.jProgScan), so a hash match on
+    * path (graft.expr.MediaCodecHelper.jScanBuffered), so a hash match on
     * decoded statistics proves two independent implementations of the
     * progressive entropy layer agree.
     *
@@ -2058,217 +1765,66 @@ object Multimodal {
                            acSeed: Array[Int],
                            restartInterval: Int): Array[Byte] = {
     require(width > 0 && height > 0)
-    val out = new java.io.ByteArrayOutputStream()
-    def b(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def seg(marker: Int, payload: Array[Byte]): Unit = {
-      b(0xff, marker); be16(payload.length + 2); out.write(payload)
-    }
-    // quant tables (zigzag order), as the baseline fixtures
-    val q0 = Array.tabulate(64)(i => if (i == 0) 8 else 16)
-    val q1 = Array.tabulate(64)(i => if (i == 0) 4 else 16)
-    b(0xff, 0xd8)
-    seg(0xdb, (0x00.toByte +: q0.map(_.toByte)) ++
-      (if (color) 0x01.toByte +: q1.map(_.toByte) else Array.empty[Byte]))
-    val ncomp = if (color) 3 else 1
-    val sof = new java.io.ByteArrayOutputStream()
-    sof.write(8)
-    sof.write((height >> 8) & 0xff); sof.write(height & 0xff)
-    sof.write((width >> 8) & 0xff); sof.write(width & 0xff)
-    sof.write(ncomp)
-    if (color) {
-      sof.write(1); sof.write(0x22); sof.write(0)
-      sof.write(2); sof.write(0x11); sof.write(1)
-      sof.write(3); sof.write(0x11); sof.write(1)
-    } else {
-      sof.write(1); sof.write(0x11); sof.write(0)
-    }
-    seg(0xc2, sof.toByteArray) // SOF2: progressive
-    // Huffman tables. DC: categories 0..11 at length 4 (as baseline).
+    val comps = fixComps(width, height, color, color, yBlock, cbBlock,
+      crBlock, acSeed, chromaTables = 0x11)
     // AC: the full symbol universe a progressive scan can emit — (run,
     // size) for run 0..15 / size 1..10, EOBn for n-exponent 0..14, ZRL —
-    // 176 symbols, all at code length 8 (codes 0..175; all-ones unused).
-    val dcVals = (0 to 11).toArray
-    val acVals = ((for (r <- 0 to 15; s <- 1 to 10) yield (r << 4) | s) ++
-      (0 to 14).map(_ << 4) :+ 0xF0).toArray
-    def canon(vals: Array[Int], counts: Array[Int]): Map[Int, (Int, Int)] = {
-      var code = 0; var k = 0
-      val mm = scala.collection.mutable.Map[Int, (Int, Int)]()
-      for (l <- 1 to 16) {
-        for (_ <- 0 until counts(l - 1)) { mm(vals(k)) = (code, l); code += 1; k += 1 }
-        code <<= 1
-      }
-      mm.toMap
-    }
-    val dcCounts = Array(0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-    val acCounts = Array(0, 0, 0, 0, 0, 0, 0, 176, 0, 0, 0, 0, 0, 0, 0, 0)
-    val dcCode = canon(dcVals, dcCounts)
-    val acCode = canon(acVals, acCounts)
-    def dht(tc: Int, th: Int, vals: Array[Int], counts: Array[Int]): Array[Byte] =
-      (((tc << 4) | th) +: (counts ++ vals)).map(_.toByte)
-    seg(0xc4, dht(0, 0, dcVals, dcCounts) ++ dht(1, 0, acVals, acCounts))
-    if (color) seg(0xc4, dht(0, 1, dcVals, dcCounts) ++ dht(1, 1, acVals, acCounts))
-    if (restartInterval > 0)
-      seg(0xdd, Array(((restartInterval >> 8) & 0xff).toByte,
-        (restartInterval & 0xff).toByte))
-
-    // ---- quantized coefficient grids (zigzag order per block) ----
-    val hmax = if (color) 2 else 1
-    val vmax = hmax // symmetric fixture sampling; vertical count uses vmax
-    val mcusX = (width + 8 * hmax - 1) / (8 * hmax)
-    val mcusY = (height + 8 * vmax - 1) / (8 * vmax)
-    def constBlk(v: Int, qdc: Int): Array[Int] = {
-      val a = new Array[Int](64); a(0) = (v - 128) * 8 / qdc; a
-    }
-    // (padded grid for the interleaved DC scan; real grid for AC scans)
-    case class Grid(id: Int, bwPad: Int, bhPad: Int, bwReal: Int, bhReal: Int,
-                    hf: Int, vf: Int, td: Int, ta: Int,
-                    blk: (Int, Int) => Array[Int])
-    val grids: Seq[Grid] =
-      if (!color) {
-        val bw = (width + 7) / 8; val bh = (height + 7) / 8
-        Seq(Grid(1, bw, bh, bw, bh, 1, 1, 0, 0, (bx, by) =>
-          if (acSeed != null && bx == 0 && by == 0) acSeed
-          else constBlk(yBlock(bx, by), 8)))
-      } else Seq(
-        Grid(1, mcusX * 2, mcusY * 2, (width + 7) / 8, (height + 7) / 8,
-          2, 2, 0, 0, (bx, by) => constBlk(yBlock(bx, by), 8)),
-        Grid(2, mcusX, mcusY, ((width + 1) / 2 + 7) / 8,
-          ((height + 1) / 2 + 7) / 8, 1, 1, 1, 1,
-          (bx, by) => constBlk(cbBlock(bx, by), 4)),
-        Grid(3, mcusX, mcusY, ((width + 1) / 2 + 7) / 8,
-          ((height + 1) / 2 + 7) / 8, 1, 1, 1, 1,
-          (bx, by) => constBlk(crBlock(bx, by), 4)))
-
-    // ---- per-scan bit writer with FF00 stuffing ----
-    var acc = 0; var nbits = 0
-    def putBit(bit: Int): Unit = {
-      acc = (acc << 1) | bit; nbits += 1
-      if (nbits == 8) {
-        out.write(acc); if (acc == 0xff) out.write(0x00)
-        acc = 0; nbits = 0
-      }
-    }
-    def putBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { putBit((v >> i) & 1); i -= 1 }
-    }
-    def flushBits(): Unit = while (nbits != 0) putBit(1)
-    def cat(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    def sos(comps: Seq[Grid], ss: Int, se: Int, ah: Int, al: Int): Unit = {
-      val p = new java.io.ByteArrayOutputStream()
-      p.write(comps.length)
-      comps.foreach { g => p.write(g.id); p.write((g.td << 4) | g.ta) }
-      p.write(ss); p.write(se); p.write((ah << 4) | al)
-      seg(0xda, p.toByteArray)
-    }
+    // 176 symbols, all at code length 8 (codes 0..175; all-ones unused)
+    val ac = flatHuff(8, (for (r <- 0 to 15; s <- 1 to 10) yield (r << 4) | s) ++
+      (0 to 14).map(_ << 4) :+ 0xF0)
+    val j = new JpegWriter
+    j.dctHeader(0xc2, width, height, comps) // SOF2: progressive
+    j.dht(0x00 -> FixDc, 0x10 -> ac)
+    if (color) j.dht(0x01 -> FixDc, 0x11 -> ac)
+    j.dri(restartInterval)
     // EOB-run accumulator + buffered correction bits (refine scans)
     var eobrun = 0
     val bitBuf = scala.collection.mutable.ArrayBuffer.empty[Int]
     def flushEob(): Unit = {
       if (eobrun > 0) {
         val r = 31 - Integer.numberOfLeadingZeros(eobrun)
-        val (c0, l0) = acCode(r << 4)
-        putBits(c0, l0)
-        if (r > 0) putBits(eobrun - (1 << r), r)
+        j.putSym(ac, r << 4)
+        if (r > 0) j.putBits(eobrun - (1 << r), r)
         eobrun = 0
       }
-      bitBuf.foreach(putBit); bitBuf.clear()
-    }
-    def emitDcSym(g: Grid, diff: Int): Unit = {
-      val t = cat(diff)
-      val (c0, l0) = dcCode(t)
-      putBits(c0, l0)
-      if (t > 0) putBits(if (diff < 0) diff + (1 << t) - 1 else diff, t)
+      bitBuf.foreach(j.putBit); bitBuf.clear()
     }
     // AC point transform: magnitude shift (truncate toward zero, T.81
     // G.1.2.2); DC uses the arithmetic shift.
     def pt(v: Int, al: Int): Int =
       if (v >= 0) v >> al else -((-v) >> al)
-
-    def restartBoundary(mcu: Int, preds: Array[Int], rst: Array[Int]): Unit =
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        flushEob(); flushBits()
-        b(0xff, 0xd0 + rst(0)); rst(0) = (rst(0) + 1) & 7
-        java.util.Arrays.fill(preds, 0)
-      }
-
-    // ---- scan emitters ----
-    def dcScan(comps: Seq[Grid], ah: Int, al: Int): Unit = {
-      sos(comps, 0, 0, ah, al)
+    /** One scan: header, block walk with restarts, final flush. */
+    def scan(sc: Seq[FixComp], ss: Int, se: Int, ah: Int, al: Int)
+            (block: (FixComp, Array[Int], Array[Int]) => Unit): Unit = {
+      j.frameSos(sc, ss, se, (ah << 4) | al)
       val preds = new Array[Int](comps.length)
-      val rst = Array(0)
-      var mcu = 0
-      val interleaved = comps.length > 1
-      if (!interleaved) {
-        val g = comps.head
-        for (by <- 0 until g.bhReal; bx <- 0 until g.bwReal) {
-          restartBoundary(mcu, preds, rst)
-          val dc = g.blk(bx, by)(0)
-          if (ah == 0) {
-            val t = dc >> al
-            emitDcSym(g, t - preds(0)); preds(0) = t
-          } else putBit((dc >> al) & 1)
-          mcu += 1
-        }
-      } else {
-        for (my <- 0 until mcusY; mx <- 0 until mcusX) {
-          restartBoundary(mcu, preds, rst)
-          for ((g, gi) <- comps.zipWithIndex; v <- 0 until g.vf; hh <- 0 until g.hf) {
-            val dc = g.blk(mx * g.hf + hh, my * g.vf + v)(0)
-            if (ah == 0) {
-              val t = dc >> al
-              emitDcSym(g, t - preds(gi)); preds(gi) = t
-            } else putBit((dc >> al) & 1)
-          }
-          mcu += 1
-        }
-      }
-      flushEob(); flushBits()
+      fixScan(sc, width, height, comps.head.hf, restartInterval, rst => {
+        flushEob(); j.restart(rst); java.util.Arrays.fill(preds, 0)
+      }) { (c, bx, by) => block(c, c.blk(bx, by), preds) }
+      flushEob(); j.flushBits()
     }
 
-    def acFirstScan(g: Grid, ss: Int, se: Int, al: Int): Unit = {
-      sos(Seq(g), ss, se, 0, al)
-      val preds = new Array[Int](1)
-      val rst = Array(0)
-      var mcu = 0
-      for (by <- 0 until g.bhReal; bx <- 0 until g.bwReal) {
-        restartBoundary(mcu, preds, rst)
-        val cf = g.blk(bx, by)
-        var lastNz = ss - 1
-        for (k <- ss to se if pt(cf(k), al) != 0) lastNz = k
-        if (lastNz < ss) eobrun += 1
+    def dcScan(sc: Seq[FixComp], ah: Int, al: Int): Unit =
+      scan(sc, 0, 0, ah, al) { (c, cf, preds) =>
+        if (ah == 0) {
+          val t = cf(0) >> al
+          j.putDiff(FixDc, t - preds(c.idx)); preds(c.idx) = t
+        } else j.putBit((cf(0) >> al) & 1)
+      }
+
+    def acFirstScan(c: FixComp, ss: Int, se: Int, al: Int): Unit =
+      scan(Seq(c), ss, se, 0, al) { (_, cf, _) =>
+        if (!(ss to se).exists(k => pt(cf(k), al) != 0)) eobrun += 1
         else {
           flushEob()
-          var k = ss
-          while (k <= lastNz) {
-            var run = 0
-            while (pt(cf(k), al) == 0) { run += 1; k += 1 }
-            while (run >= 16) {
-              val (c0, l0) = acCode(0xF0); putBits(c0, l0); run -= 16
-            }
-            val v = pt(cf(k), al); val s = cat(v)
-            val (c0, l0) = acCode((run << 4) | s)
-            putBits(c0, l0)
-            putBits(if (v < 0) v + (1 << s) - 1 else v, s)
-            k += 1
-          }
-          if (lastNz < se) eobrun += 1
+          j.putAcRuns(ac, k => pt(cf(k), al), ss, se)
+          if (pt(cf(se), al) == 0) eobrun += 1
         }
         if (eobrun == 0x7fff) flushEob()
-        mcu += 1
       }
-      flushEob(); flushBits()
-    }
 
-    def acRefineScan(g: Grid, ss: Int, se: Int, al: Int): Unit = {
-      sos(Seq(g), ss, se, al + 1, al)
-      val preds = new Array[Int](1)
-      val rst = Array(0)
-      var mcu = 0
-      for (by <- 0 until g.bhReal; bx <- 0 until g.bwReal) {
-        restartBoundary(mcu, preds, rst)
-        val cf = g.blk(bx, by)
+    def acRefineScan(c: FixComp, ss: Int, se: Int, al: Int): Unit =
+      scan(Seq(c), ss, se, al + 1, al) { (_, cf, _) =>
         // t == 1: newly nonzero this pass (gets a (run,1) symbol + sign);
         // t > 1: history — one buffered correction bit (its low bit);
         // t == 0: zero run
@@ -2288,15 +1844,14 @@ object Multimodal {
             // buffered correction bits strictly in position order, so a
             // run may never carry more than 15 zeros past a history bit
             while (run > 15) {
-              val (c0, l0) = acCode(0xF0); putBits(c0, l0); run -= 16
-              pending.foreach(putBit); pending.clear()
+              j.putSym(ac, 0xF0); run -= 16
+              pending.foreach(j.putBit); pending.clear()
             }
             if (t(k) > 1) pending += (t(k) & 1)
             else {
-              val (c0, l0) = acCode((run << 4) | 1)
-              putBits(c0, l0)
-              putBit(if (cf(k) > 0) 1 else 0)
-              pending.foreach(putBit); pending.clear()
+              j.putSym(ac, (run << 4) | 1)
+              j.putBit(if (cf(k) > 0) 1 else 0)
+              pending.foreach(j.putBit); pending.clear()
               run = 0
             }
           }
@@ -2313,26 +1868,22 @@ object Multimodal {
           bitBuf ++= pending
         }
         if (eobrun == 0x7fff) flushEob()
-        mcu += 1
       }
-      flushEob(); flushBits()
-    }
 
     // ---- progression scripts ----
     if (!color) {
-      val g = grids.head
-      dcScan(Seq(g), 0, 1)
+      val g = comps.head
+      dcScan(comps, 0, 1)
       acFirstScan(g, 1, 5, 1)
       acFirstScan(g, 6, 63, 1)
-      dcScan(Seq(g), 1, 0)
+      dcScan(comps, 1, 0)
       acRefineScan(g, 1, 5, 0)
       acRefineScan(g, 6, 63, 0)
     } else {
-      dcScan(grids, 0, 0)
-      grids.foreach(g => acFirstScan(g, 1, 63, 0))
+      dcScan(comps, 0, 0)
+      comps.foreach(c => acFirstScan(c, 1, 63, 0))
     }
-    b(0xff, 0xd9)
-    out.toByteArray
+    j.finish()
   }
 
   /** SEQUENTIAL MULTI-SCAN (SOF0, non-interleaved layout) JPEG fixture
@@ -2348,95 +1899,22 @@ object Multimodal {
                           cbBlock: (Int, Int) => Int,
                           crBlock: (Int, Int) => Int): Array[Byte] = {
     require(width > 0 && height > 0)
-    val out = new java.io.ByteArrayOutputStream()
-    def b(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def seg(marker: Int, payload: Array[Byte]): Unit = {
-      b(0xff, marker); be16(payload.length + 2); out.write(payload)
-    }
-    val q0 = Array.tabulate(64)(i => if (i == 0) 8 else 16)
-    val q1 = Array.tabulate(64)(i => if (i == 0) 4 else 16)
-    b(0xff, 0xd8)
-    seg(0xdb, (0x00.toByte +: q0.map(_.toByte)) ++
-      (0x01.toByte +: q1.map(_.toByte)))
-    val sof = new java.io.ByteArrayOutputStream()
-    sof.write(8)
-    sof.write((height >> 8) & 0xff); sof.write(height & 0xff)
-    sof.write((width >> 8) & 0xff); sof.write(width & 0xff)
-    sof.write(3)
-    sof.write(1); sof.write(0x22); sof.write(0)
-    sof.write(2); sof.write(0x11); sof.write(1)
-    sof.write(3); sof.write(0x11); sof.write(1)
-    seg(0xc0, sof.toByteArray) // SOF0: sequential
-    val dcVals = (0 to 11).toArray
-    val acVals = Array(0x00, 0x01, 0x02, 0x03, 0x04, 0x05,
-      0x11, 0x12, 0x21, 0x31, 0xB1, 0xF0)
-    val counts = Array(0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-    def canon(vals: Array[Int]): Map[Int, (Int, Int)] = {
-      var code = 0; var k = 0
-      val mm = scala.collection.mutable.Map[Int, (Int, Int)]()
-      for (l <- 1 to 16) {
-        for (_ <- 0 until counts(l - 1)) { mm(vals(k)) = (code, l); code += 1; k += 1 }
-        code <<= 1
+    val comps = fixComps(width, height, true, true, yBlock, cbBlock, crBlock,
+      null, chromaTables = 0x11)
+    val j = new JpegWriter
+    j.dctHeader(0xc0, width, height, comps) // SOF0: sequential
+    j.dht(0x00 -> FixDc, 0x10 -> FixAc, 0x01 -> FixDc, 0x11 -> FixAc)
+    // scan 1: Y alone, non-interleaved over its REAL block grid; scan 2:
+    // Cb + Cr interleaved (one block each per MCU)
+    for (sc <- Seq(comps.take(1), comps.drop(1))) {
+      j.frameSos(sc, 0, 63, 0)
+      val preds = new Array[Int](comps.length)
+      fixScan(sc, width, height, 2, 0, _ => ()) { (c, bx, by) =>
+        preds(c.idx) = j.putBlock(FixDc, FixAc, c.blk(bx, by), preds(c.idx))
       }
-      mm.toMap
+      j.flushBits()
     }
-    val dcCode = canon(dcVals)
-    val acCode = canon(acVals)
-    def dht(tc: Int, th: Int, vals: Array[Int]): Array[Byte] =
-      (((tc << 4) | th) +: (counts ++ vals)).map(_.toByte)
-    seg(0xc4, dht(0, 0, dcVals) ++ dht(1, 0, acVals) ++
-      dht(0, 1, dcVals) ++ dht(1, 1, acVals))
-    var acc = 0; var nbits = 0
-    def putBit(bit: Int): Unit = {
-      acc = (acc << 1) | bit; nbits += 1
-      if (nbits == 8) {
-        out.write(acc); if (acc == 0xff) out.write(0x00)
-        acc = 0; nbits = 0
-      }
-    }
-    def putBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { putBit((v >> i) & 1); i -= 1 }
-    }
-    def flushBits(): Unit = while (nbits != 0) putBit(1)
-    def cat(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    // constant block = DC diff + EOB
-    def emitConst(dcq: Int, pred: Int): Int = {
-      val diff = dcq - pred
-      val t = cat(diff)
-      val (c0, l0) = dcCode(t)
-      putBits(c0, l0)
-      if (t > 0) putBits(if (diff < 0) diff + (1 << t) - 1 else diff, t)
-      val (ce, le) = acCode(0x00)
-      putBits(ce, le)
-      dcq
-    }
-    def sos(ids: Seq[(Int, Int)]): Unit = { // (componentId, tdta)
-      val p = new java.io.ByteArrayOutputStream()
-      p.write(ids.length)
-      ids.foreach { case (cid, tdta) => p.write(cid); p.write(tdta) }
-      p.write(0); p.write(63); p.write(0)
-      seg(0xda, p.toByteArray)
-    }
-    val mcusX = (width + 15) / 16
-    val mcusY = (height + 15) / 16
-    // scan 1: Y alone, non-interleaved over the REAL block grid
-    sos(Seq(1 -> 0x00))
-    var pred = 0
-    for (by <- 0 until (height + 7) / 8; bx <- 0 until (width + 7) / 8)
-      pred = emitConst(yBlock(bx, by) - 128, pred) // qdc = 8: (v-128)*8/8
-    flushBits()
-    // scan 2: Cb + Cr interleaved (one block each per MCU)
-    sos(Seq(2 -> 0x11, 3 -> 0x11))
-    var pb = 0; var pr = 0
-    for (my <- 0 until mcusY; mx <- 0 until mcusX) {
-      pb = emitConst((cbBlock(mx, my) - 128) * 2, pb) // qdc = 4
-      pr = emitConst((crBlock(mx, my) - 128) * 2, pr)
-    }
-    flushBits()
-    b(0xff, 0xd9)
-    out.toByteArray
+    j.finish()
   }
 
   /** 4:2:0 sequential multi-scan JPEG fixture for doc `id`:
@@ -2470,48 +1948,10 @@ object Multimodal {
                    pal: Int => (Int, Int, Int),
                    pixIdx: (Int, Int, Int) => Int): Array[Byte] = {
     require(width > 0 && height > 0 && nFrames >= 1)
-    val out = new java.io.ByteArrayOutputStream()
-    def b(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    out.write("GIF89a".getBytes("US-ASCII"))
-    le16(width); le16(height)
-    b(0x80 | 3, 0, 0) // global table, 16 entries
-    for (i <- 0 until 16) { val (r, g, bb) = pal(i); b(r, g, bb) }
-    val mcs = 4
-    val clear = 1 << mcs
-    val codeW = mcs + 1
-    // safe literal run between CLEARs: dictionary starts at clear+2
-    // entries and gains one per code after the first; stay under 2^codeW
-    val runCap = (1 << codeW) - clear - 3
-    for (f <- 0 until nFrames) {
-      b(0x21, 0xf9, 4, 0, 10, 0, 0, 0) // GCE: 10cs delay, no transparency
-      b(0x2c); le16(0); le16(0); le16(width); le16(height); b(0)
-      b(mcs)
-      val data = new java.io.ByteArrayOutputStream()
-      var acc = 0; var nbits = 0
-      def putCode(c: Int): Unit = {
-        acc |= c << nbits; nbits += codeW
-        while (nbits >= 8) { data.write(acc & 0xff); acc >>= 8; nbits -= 8 }
-      }
-      putCode(clear)
-      var run = 0
-      for (y <- 0 until height; x <- 0 until width) {
-        if (run == runCap) { putCode(clear); run = 0 }
-        putCode(pixIdx(x, y, f) & 15)
-        run += 1
-      }
-      putCode(clear + 1) // EOI
-      if (nbits > 0) data.write(acc & 0xff)
-      val bytes = data.toByteArray
-      var o = 0
-      while (o < bytes.length) {
-        val n = math.min(255, bytes.length - o)
-        b(n); out.write(bytes, o, n); o += n
-      }
-      b(0)
-    }
-    b(0x3b)
-    out.toByteArray
+    // GCE disposal 0 and no transparent index: 10cs delay, opaque
+    gifComposeBytes(width, height, pal, (0 until nFrames).map(f =>
+      GifFrameSpec(0, 0, width, height, disposal = 0, transIdx = -1,
+        (x, y) => pixIdx(x, y, f))))
   }
 
   /** Per-doc animated fixture: (11+id%13) x (7+id%7), 2+id%5 frames,
@@ -2581,12 +2021,7 @@ object Multimodal {
       }
       putCode(clear + 1) // EOI
       if (nbits > 0) data.write(acc & 0xff)
-      val bytes = data.toByteArray
-      var o = 0
-      while (o < bytes.length) {
-        val n = math.min(255, bytes.length - o)
-        b(n); out.write(bytes, o, n); o += n
-      }
+      gifSubBlocks(out, data.toByteArray)
       b(0)
     }
     b(0x3b)
@@ -2716,15 +2151,19 @@ object Multimodal {
     putCode(cur)
     putCode(eoi)
     if (nbits > 0) lzw.write((acc & 0xff).toInt)
-    // sub-block chunking
-    val bytes = lzw.toByteArray
+    gifSubBlocks(out, lzw.toByteArray)
+    b(0x00, 0x3b) // block terminator + trailer
+    out.toByteArray
+  }
+
+  /** LZW data as GIF sub-blocks of at most 255 bytes, each length-prefixed. */
+  private def gifSubBlocks(out: java.io.ByteArrayOutputStream,
+                           bytes: Array[Byte]): Unit = {
     var off = 0
     while (off < bytes.length) {
       val n = math.min(255, bytes.length - off)
-      b(n); out.write(bytes, off, n); off += n
+      out.write(n); out.write(bytes, off, n); off += n
     }
-    b(0x00, 0x3b) // block terminator + trailer
-    out.toByteArray
   }
 
   /** GIF fixture for doc `id`: (13+id%17)×(8+id%9), 16-color palette
@@ -2844,99 +2283,30 @@ object Multimodal {
                      cbBlock: (Int, Int) => Int,
                      crBlock: (Int, Int) => Int): Array[Byte] = {
     require(width > 0 && height > 0)
-    val out = new java.io.ByteArrayOutputStream()
-    def b(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def seg(marker: Int, payload: Array[Byte]): Unit = {
-      b(0xff, marker); be16(payload.length + 2); out.write(payload)
+    // Annex K typical tables, fixture-side copy (T.81 Tables K.3-K.6);
+    // the AC value lists stop after EOB, the only AC symbol emitted
+    val dc = Seq(Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0),
+      Array(0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0))
+      .map(new FixHuff(_, (0 to 11).toArray))
+    val ac = Seq(
+      new FixHuff(Array(0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7d),
+        Array(0x01, 0x02, 0x03, 0x00)),
+      new FixHuff(Array(0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77),
+        Array(0x00)))
+    val comps = fixComps(width, height, true, true, yBlock, cbBlock, crBlock,
+      null, chromaTables = 0x11)
+    val j = new JpegWriter
+    j.dctHeader(0xc0, width, height, comps)
+    // deliberately NO DHT — the decode side must imply Annex K: Y on the
+    // luma tables (slot 0), Cb/Cr on the chroma tables (slot 1)
+    j.frameSos(comps, 0, 63, 0)
+    val preds = new Array[Int](comps.length)
+    fixScan(comps, width, height, 2, 0, _ => ()) { (c, bx, by) =>
+      val t = if (c.idx == 0) 0 else 1
+      preds(c.idx) = j.putBlock(dc(t), ac(t), c.blk(bx, by), preds(c.idx))
     }
-    // Annex K typical tables, fixture-side copy (T.81 Tables K.3-K.6)
-    val kDcLumaCounts = Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
-    val kDcChromaCounts = Array(0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0)
-    val kDcVals = (0 to 11).toArray
-    val kAcLumaCounts = Array(0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7d)
-    val kAcLumaValsHead = Array(0x01, 0x02, 0x03, 0x00, 0x04, 0x11) // EOB = 4th
-    val kAcChromaCounts = Array(0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77)
-    val kAcChromaValsHead = Array(0x00, 0x01, 0x02, 0x03, 0x11, 0x04) // EOB = 1st
-    // `vals` may be just the HEAD of the full Annex K value list (the
-    // constant-block encoder only emits DC categories and EOB, all within
-    // the first entries); positions past it still advance the code space.
-    def canon(counts: Array[Int], vals: Array[Int]): Map[Int, (Int, Int)] = {
-      var code = 0; var k = 0
-      val m = scala.collection.mutable.Map[Int, (Int, Int)]()
-      for (l <- 1 to 16) {
-        for (_ <- 0 until counts(l - 1)) {
-          if (k < vals.length) m(vals(k)) = (code, l)
-          code += 1; k += 1
-        }
-        code <<= 1
-      }
-      m.toMap
-    }
-    val dcLuma = canon(kDcLumaCounts, kDcVals)
-    val dcChroma = canon(kDcChromaCounts, kDcVals)
-    val eobLuma = canon(kAcLumaCounts, kAcLumaValsHead)(0x00)
-    val eobChroma = canon(kAcChromaCounts, kAcChromaValsHead)(0x00)
-    val q0 = Array.tabulate(64)(i => if (i == 0) 8 else 16)
-    val q1 = Array.tabulate(64)(i => if (i == 0) 4 else 16)
-    b(0xff, 0xd8) // SOI
-    seg(0xdb, (0x00.toByte +: q0.map(_.toByte)) ++
-      (0x01.toByte +: q1.map(_.toByte)))
-    val sof = new java.io.ByteArrayOutputStream()
-    sof.write(8)
-    sof.write((height >> 8) & 0xff); sof.write(height & 0xff)
-    sof.write((width >> 8) & 0xff); sof.write(width & 0xff)
-    sof.write(3)
-    sof.write(1); sof.write(0x22); sof.write(0) // Y 4:2:0, q0
-    sof.write(2); sof.write(0x11); sof.write(1) // Cb, q1
-    sof.write(3); sof.write(0x11); sof.write(1) // Cr, q1
-    seg(0xc0, sof.toByteArray)
-    // deliberately NO DHT — the decode side must imply Annex K
-    val sos = new java.io.ByteArrayOutputStream()
-    sos.write(3)
-    sos.write(1); sos.write(0x00) // Y: DC0/AC0 (implied luma)
-    sos.write(2); sos.write(0x11) // Cb: DC1/AC1 (implied chroma)
-    sos.write(3); sos.write(0x11)
-    sos.write(0); sos.write(63); sos.write(0)
-    seg(0xda, sos.toByteArray)
-    var acc = 0; var nbits = 0
-    def putBit(bit: Int): Unit = {
-      acc = (acc << 1) | bit; nbits += 1
-      if (nbits == 8) {
-        out.write(acc)
-        if (acc == 0xff) out.write(0x00)
-        acc = 0; nbits = 0
-      }
-    }
-    def putBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { putBit((v >> i) & 1); i -= 1 }
-    }
-    def cat(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    def emitConst(value: Int, qdc: Int, pred: Int,
-                  dc: Map[Int, (Int, Int)], eob: (Int, Int)): Int = {
-      val dcq = (value - 128) * 8 / qdc
-      val diff = dcq - pred
-      val t = cat(diff)
-      val (c0, l0) = dc(t)
-      putBits(c0, l0)
-      if (t > 0) putBits(if (diff < 0) diff + (1 << t) - 1 else diff, t)
-      putBits(eob._1, eob._2)
-      dcq
-    }
-    val mcusX = (width + 15) / 16
-    val mcusY = (height + 15) / 16
-    var predY = 0; var predCb = 0; var predCr = 0
-    for (my <- 0 until mcusY; mx <- 0 until mcusX) {
-      for ((bx, by) <- Seq((2 * mx, 2 * my), (2 * mx + 1, 2 * my),
-          (2 * mx, 2 * my + 1), (2 * mx + 1, 2 * my + 1)))
-        predY = emitConst(yBlock(bx, by), 8, predY, dcLuma, eobLuma)
-      predCb = emitConst(cbBlock(mx, my), 4, predCb, dcChroma, eobChroma)
-      predCr = emitConst(crBlock(mx, my), 4, predCr, dcChroma, eobChroma)
-    }
-    while (nbits != 0) putBit(1)
-    b(0xff, 0xd9) // EOI
-    out.toByteArray
+    j.flushBits()
+    j.finish()
   }
 
   /** AVI whose MJPEG frames omit DHT (the OpenDML implied-standard-tables

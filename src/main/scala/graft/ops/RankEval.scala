@@ -36,7 +36,10 @@ object RankEval {
     *   the final metrics join is INNER on qid against `agg`, whose qids
     *   are a subset of the ranking's, so ideal-DCG rows fabricated for
     *   superset-only qids are discarded — any superset yields the same
-    *   output (RankEvalSpec pins this law, superset and exact).
+    *   output (RankEvalSpec pins this law, superset and exact). A set
+    *   that MISSES a ranked qid would drop that query's row silently, so
+    *   it fails the query instead (a filter on `agg`'s own qids against
+    *   the literal set: the ranking subtree is still planned once).
     * @return (qid, mrr_fp, dcg_fp, idcg_fp, ndcg_bp): MRR on the 2^20
     *   scale, DCG/IDCG as Σ 2^40 div log2fp(rank+1), nDCG basis points.
     */
@@ -84,7 +87,19 @@ object RankEval {
       .withColumn("disc", ModelFilter.log2fp(col("i") + 1))
       .select(col("qid"), expr(s"${fp2}L div disc").as("d"))
       .groupBy("qid").agg(sum(col("d")).as("idcg_fp"))
-    agg.join(ideal, "qid")
+    val checked = qidSuperset match {
+      case Some(qs) =>
+        val known = qs.toSet
+        // nondeterministic, so the optimizer keeps the check on agg's
+        // own rows: pushed below the aggregate and across the qid join,
+        // it would also test the labels relation's ids
+        val covered = udf { (q: Long) =>
+          known(q) || sys.error(s"labelMetrics: qidSuperset misses ranked qid $q")
+        }.asNondeterministic()
+        agg.filter(covered(col("qid")))
+      case None => agg
+    }
+    checked.join(ideal, "qid")
       .select(col("qid"), col("mrr_fp"), col("dcg_fp"), col("idcg_fp"),
         expr("(10000 * dcg_fp) div idcg_fp").as("ndcg_bp"))
   }

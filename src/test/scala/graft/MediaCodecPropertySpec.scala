@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.expr.MediaCodecHelper
+import graft.expr.{AviCodecHelper, MediaCodecHelper}
 import graft.expr.MediaCodecHelper.Raster
 
 /** Property tests for the PNG codec: ANY raster (arbitrary dims, gray or
@@ -102,6 +102,60 @@ class MediaCodecPropertySpec extends AnyFunSuite {
       if (r != null) {
         assert(r.getInt(0) > 0 && r.getInt(1) > 0 && r.getInt(2) > 0)
       }
+    }
+  }
+  test("JPEG mutations: every decode entry point is total and keeps SOF dims") {
+    // seeded bit flips and truncations of each fixture flavor through
+    // every public JPEG decode: never an exception, and any raster that
+    // still decodes carries the dimensions of a SOF in the stream
+    import graft.ops.Multimodal._
+    val flavors: Seq[Long => Array[Byte]] = Seq(grayJpegBytes, colorJpegBytes,
+      seqJpegBytes, grayJpegArithBytes, condJpegArithBytes,
+      grayJpegArithProgBytes, msJpegArithBytes, colorJpegArithBytes,
+      grayProgressiveJpegBytes, colorProgressiveJpegBytes, jpeg12Bytes(_),
+      jpeg12WideQBytes, jpegLosslessG16Bytes, jpegLosslessG12Bytes,
+      jpegLossless3cBytes, jpegLosslessArithG16Bytes,
+      jpegLosslessArithG12Bytes, jpegLosslessRstBytes,
+      jpegLosslessArithRstBytes, jpegLosslessArith3cBytes)
+    def mutants(good: Array[Byte], seed: Long): Seq[Array[Byte]] = {
+      val rnd = new scala.util.Random(seed)
+      Seq.fill(30) {
+        val m = good.clone(); val pos = rnd.nextInt(m.length)
+        m(pos) = (m(pos) ^ (1 << rnd.nextInt(8))).toByte; m
+      } ++ Seq.fill(6)(good.take(rnd.nextInt(good.length)))
+    }
+    // (width, height) of every SOF-marker position: entropy data never
+    // holds a bare FF Cx, so the byte scan finds every real frame header
+    def sofDims(b: Array[Byte]): Set[(Int, Int)] =
+      (0 until b.length - 8).filter { i =>
+        val m = b(i + 1) & 0xff
+        (b(i) & 0xff) == 0xff && m >= 0xc0 && m <= 0xcf && m != 0xc4 &&
+          m != 0xc8 && m != 0xcc
+      }.map(i => (((b(i + 7) & 0xff) << 8) | (b(i + 8) & 0xff),
+        ((b(i + 5) & 0xff) << 8) | (b(i + 6) & 0xff))).toSet
+    var decoded = 0
+    for ((gen, fi) <- flavors.zipWithIndex; id <- 0L until 6L;
+         m <- mutants(gen(id), fi * 1000L + id)) {
+      val dims = sofDims(m)
+      def check(w: Int, h: Int, what: String): Unit = {
+        decoded += 1
+        assert(dims((w, h)), s"flavor $fi id $id: $what ${w}x$h not a SOF")
+      }
+      val r = MediaCodecHelper.decodeJpegAuto(m)
+      if (r != null) check(r.width, r.height, "raster")
+      val t = MediaCodecHelper.decodeJpeg12(m)
+      if (t != null) check(t.width, t.height, "12-bit")
+      val l = MediaCodecHelper.decodeJpegLossless(m)
+      if (l != null) check(l.width, l.height, "lossless")
+      val meta = MediaCodecHelper.jpegMeta(m)
+      if (meta != null) check(meta.getInt(0), meta.getInt(1), "meta")
+    }
+    assert(decoded > 1000, "mutants mostly keep decoding: the law is exercised")
+    for (gen <- Seq[Long => Array[Byte]](aviMjpegBytes, aviMjpegNoDhtBytes);
+         id <- 0L until 4L; m <- mutants(gen(id), 77L + id)) {
+      val row = AviCodecHelper.mjpegStats(m, 1)
+      if (row != null)
+        assert(row.getInt(2) <= row.getInt(1) && row.getInt(1) <= row.getInt(0))
     }
   }
 }

@@ -1691,7 +1691,7 @@ class MediaCodecSpec extends AnyFunSuite {
     // 4000x4000x3 = 48M samples: passes the 64M single-scan cap, but the
     // buffered (multi-scan) path holds 4-byte Ints per sample, so the
     // 16M-sample progressive ceiling must apply the moment multiScan is
-    // discovered at SOS — before jProgAlloc's ~192 MB allocation.
+    // discovered at SOS — before the ~192 MB coefficient-buffer allocation.
     val out = new java.io.ByteArrayOutputStream()
     def b(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
     b(0xff, 0xd8) // SOI
@@ -1716,6 +1716,36 @@ class MediaCodecSpec extends AnyFunSuite {
     assert((dup(sos(1) + 4) & 0xff) == 2, "second scan is ns=2")
     dup(sos(1) + 7) = dup(sos(1) + 5) // Cr's id := Cb's id
     assert(MediaCodecHelper.decodeJpeg(dup) == null)
+  }
+
+  test("a scan naming a component id the frame lacks is rejected on every path") {
+    // libjpeg: "Invalid component ID in SOS". The single-scan 8-bit and
+    // the 12-bit paths must match scan components by id, never by
+    // position; scan ids out of frame order are corrupt too
+    def patchSosId(good: Array[Byte], id: Int): Array[Byte] = {
+      val sos = (0 until good.length - 1).find(i =>
+        (good(i) & 0xff) == 0xff && (good(i + 1) & 0xff) == 0xda).get
+      val bad = good.clone()
+      assert((bad(sos + 5) & 0xff) == 1, "first scan component is id 1")
+      bad(sos + 5) = id.toByte
+      bad
+    }
+    val gray = Multimodal.grayJpegBytes(0)
+    val j12 = Multimodal.jpeg12Bytes(0)
+    assert(MediaCodecHelper.decodeJpeg(gray) != null)
+    assert(MediaCodecHelper.decodeJpeg12(j12) != null)
+    assert(MediaCodecHelper.decodeJpeg(patchSosId(gray, 9)) == null)
+    assert(MediaCodecHelper.decodeJpegAuto(patchSosId(gray, 9)) == null)
+    assert(MediaCodecHelper.decodeJpeg12(patchSosId(j12, 9)) == null)
+    assert(MediaCodecHelper.jpeg12Stats(patchSosId(j12, 9)) == null)
+    // color single scan listing Y, Cr, Cb: every id exists, order wrong
+    val color = Multimodal.colorJpegBytes(0)
+    val sos = (0 until color.length - 1).find(i =>
+      (color(i) & 0xff) == 0xff && (color(i + 1) & 0xff) == 0xda).get
+    val swapped = color.clone()
+    swapped(sos + 7) = 3; swapped(sos + 9) = 2
+    assert(MediaCodecHelper.decodeJpeg(color) != null)
+    assert(MediaCodecHelper.decodeJpeg(swapped) == null)
   }
 
   test("GIF image offset from / smaller than the logical screen is null") {

@@ -57,6 +57,21 @@ class RankEvalSpec extends AnyFunSuite {
     assert(superset == derived)
   }
 
+  test("a qidSuperset that misses a ranked qid fails loudly") {
+    // without the check, qid 2 (ranked, but absent from the literal set)
+    // would vanish from the output: the ideal side never enumerates it
+    val labels = Seq((1L, "a"), (10L, "a"), (2L, "a"), (20L, "a"))
+      .toDF("id", "label")
+    val ranking = Seq((1L, 10L, 1L), (2L, 20L, 1L)).toDF("qid", "id", "rank")
+    val e = intercept[Exception] {
+      RankEval.labelMetrics(ranking, labels, k = 3,
+        qidSuperset = Some(Seq(1L, 9L))).collect()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("qidSuperset")),
+      s"unexpected failure: $e")
+  }
+
   test("a query whose label has no other member is dropped (c = 0)") {
     // q=2's label 'c' has no second member: the oracle's
     // range(1, least(c,k)+1) is empty, so its inner join drops qid 2.
