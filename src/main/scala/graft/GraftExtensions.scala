@@ -113,69 +113,69 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject("graft_jpeg_meta",
       "graft_jpeg_meta(bin) - struct(width, height, components) via the JPEG SOI/SOF marker walk") {
       args => expect(args, 1)
-        graft.expr.JpegMeta(args(0))
+        graft.expr.MediaCall.jpegMeta(args(0))
     }
     inject("graft_avi_meta",
       "graft_avi_meta(bin) - struct(width, height, n_frames, usec_per_frame, handler) via the AVI RIFF walk") {
       args => expect(args, 1)
-        graft.expr.AviMeta(args(0))
+        graft.expr.MediaCall.aviMeta(args(0))
     }
     inject("graft_mjpeg_stats",
       "graft_mjpeg_stats(bin, step) - every-step-th MJPEG frame decoded, aggregated pixel statistics") {
       args => expect(args, 2)
-        graft.expr.MjpegStats(args(0), litInt(args(1), "step"))
+        graft.expr.MediaCall.mjpegStats(args(0), litInt(args(1), "step"))
     }
     inject("graft_mjpeg_frame",
       "graft_mjpeg_frame(bin, idx) - the idx-th video frame's raw JPEG bytes") {
       args => expect(args, 2)
-        graft.expr.MjpegFrame(args(0), litInt(args(1), "idx"))
+        graft.expr.MediaCall.mjpegFrame(args(0), litInt(args(1), "idx"))
     }
     inject("graft_gif_stats",
       "graft_gif_stats(bin) - struct(width, height, channels, px_sum, px_min, px_max) of a fully decoded GIF") {
       args => expect(args, 1)
-        graft.expr.GifStats(args(0))
+        graft.expr.MediaCall.gifStats(args(0))
     }
 
     inject("graft_gif_meta",
       "graft_gif_meta(bin) - struct(width, height, n_frames): GIF animation length via the sub-block walk, no decode") {
       args => expect(args, 1)
-        graft.expr.GifMeta(args(0))
+        graft.expr.MediaCall.gifMeta(args(0))
     }
 
     inject("graft_png_stats",
       "graft_png_stats(bin) - struct(width, height, channels, px_sum, px_min, px_max) of a decoded PNG (all 8-bit color types, Adam7 included)") {
       args => expect(args, 1)
-        graft.expr.PngStats(args(0))
+        graft.expr.MediaCall.pngStats(args(0))
     }
 
     inject("graft_png16_stats",
       "graft_png16_stats(bin) - struct(width, height, channels, px_sum, px_min, px_max) over a 16-bit PNG's full-precision samples") {
       args => expect(args, 1)
-        graft.expr.Png16Stats(args(0))
+        graft.expr.MediaCall.png16Stats(args(0))
     }
 
     inject("graft_jpeg_stats",
       "graft_jpeg_stats(bin) - struct(width, height, channels, px_sum, px_min, px_max) of a decoded JPEG (baseline/multi-scan/progressive/arithmetic)") {
       args => expect(args, 1)
-        graft.expr.JpegStats(args(0))
+        graft.expr.MediaCall.jpegStats(args(0))
     }
 
     inject("graft_wav_stats",
       "graft_wav_stats(bin) - struct(n_samples, sample_rate, pcm_sum, pcm_sqsum, pcm_peak, pcm_zc, pcm_bits) of a WAV across the whole envelope: integer PCM 8/16/24/32-bit, G.711 u/A-law, IEEE float32/float64, WAVE_FORMAT_EXTENSIBLE, IMA and Microsoft ADPCM") {
       args => expect(args, 1)
-        graft.expr.WavPcmStats(args(0))
+        graft.expr.MediaCall.wavPcmStats(args(0))
     }
 
     inject("graft_jpeg12_stats",
       "graft_jpeg12_stats(bin) - struct(width, height, px_sum, px_min, px_max) of a 12-bit extended-sequential (SOF1) gray JPEG at full precision") {
       args => expect(args, 1)
-        graft.expr.Jpeg12Stats(args(0))
+        graft.expr.MediaCall.jpeg12Stats(args(0))
     }
 
     inject("graft_jpeg_lossless_stats",
       "graft_jpeg_lossless_stats(bin) - struct(width, height, components, precision, px_sum, px_min, px_max) of a lossless (SOF3) JPEG at full 2-16 bit precision") {
       args => expect(args, 1)
-        graft.expr.JpegLosslessStats(args(0))
+        graft.expr.MediaCall.jpegLosslessStats(args(0))
     }
 
     inject("graft_piece_decode",

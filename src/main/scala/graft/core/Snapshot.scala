@@ -71,8 +71,11 @@ final case class Snapshot(meta: SnapshotMeta, dir: String) {
     * that's only the appended columns + rowid — use
     * SnapshotStore.readResolved for the full logical dataset).
     */
-  def read(spark: SparkSession): DataFrame =
-    spark.read.parquet(meta.dataDir.getOrElse(s"$dir/data"))
+  def read(spark: SparkSession): DataFrame = spark.read.parquet(dataDir)
+  /** Where this snapshot's files live: its own `data/`, or the shared
+    * directory of the snapshot it links to.
+    */
+  def dataDir: String = meta.dataDir.getOrElse(s"$dir/data")
   def columnNames: Seq[String] = meta.columns.map(_.name)
   def minOf(col: String): Option[String] =
     meta.columns.find(_.name == col).flatMap(_.min)
@@ -87,9 +90,14 @@ final case class Snapshot(meta: SnapshotMeta, dir: String) {
   *
   * Scale note: the sidecar holds only O(columns) metadata; data goes through
   * `DataFrameWriter.parquet`, so a snapshot written from a 1000-executor
-  * cluster is just a normal distributed Parquet write. Zone-map min/max are
-  * computed in the same Spark job (one extra agg pass) and enable driver-side
-  * chain pruning before any scan is planned.
+  * cluster is just a normal distributed Parquet write. The line count and
+  * zone-map min/max come from a second Spark job after the write, an agg
+  * that re-evaluates `df` from its source; they enable driver-side chain
+  * pruning before any scan is planned.
+  *
+  * `meta.json` is the commit record: a snapshot exists exactly when its
+  * `meta.json` does, and every writer publishes it last, atomically
+  * ([[commit]]).
   */
 final class SnapshotStore(val spark: SparkSession, val root: String) {
   Files.createDirectories(Paths.get(root))
@@ -132,6 +140,11 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
     }
     val dir = dirOf(name)
     val dataDir = s"$dir/data"
+    // A rewrite un-publishes the old snapshot before touching its data, so
+    // a write that fails part-way leaves no snapshot rather than the old
+    // meta.json (line count, zone maps) over new partial data.
+    Files.deleteIfExists(Paths.get(dir, "meta.json"))
+    metaCache.remove(name)
     // Drop any stale bucket-table registration for this data dir (rewrites).
     spark.sql(s"DROP TABLE IF EXISTS ${SnapshotStore.bucketTable(dataDir)}")
     hashlabel match {
@@ -198,9 +211,18 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
     val meta = SnapshotMeta(name, cols, lines, n, hashlabel, previous, caption,
       storedSchema = hashlabel.map(_ => routed.schema.toDDL),
       formatVersion = formatVersion)
-    Files.writeString(Paths.get(dir, "meta.json"), MetaJson.render(meta))
+    commit(meta)
+  }
+
+  /** Publish `meta` as its snapshot: `meta.json` is written to a temp file
+    * in the snapshot directory and renamed over the old one atomically, so
+    * a reader sees the old sidecar, the new one or none, never a torn one.
+    */
+  private def commit(meta: SnapshotMeta): Snapshot = {
+    val dir = dirOf(meta.name)
+    SnapshotStore.writeAtomically(Paths.get(dir, "meta.json"), MetaJson.render(meta))
     val snap = Snapshot(meta, dir)
-    metaCache.put(name, snap)
+    metaCache.put(meta.name, snap)
     snap
   }
 
@@ -278,10 +300,7 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
       hashlabel = parent.meta.hashlabel.filterNot(overlap.contains),
       columns = parent.meta.columns.filterNot(c => overlap.contains(c.name)) ++
         snap.meta.columns.filterNot(_.name == RowId))
-    Files.writeString(Paths.get(dirOf(name), "meta.json"), MetaJson.render(merged))
-    val out = Snapshot(merged, dirOf(name))
-    metaCache.put(name, out)
-    out
+    commit(merged)
   }
 
   /** link_to_here (reference dataset.py:292-327): expose an existing
@@ -291,16 +310,11 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
   def linkToHere(target: String, name: String,
                  previous: Option[String] = None): Snapshot = {
     val t = get(target)
-    val dir = dirOf(name)
-    Files.createDirectories(Paths.get(dir))
-    val meta = t.meta.copy(name = name,
+    Files.createDirectories(Paths.get(dirOf(name)))
+    commit(t.meta.copy(name = name,
       previous = previous.orElse(t.meta.previous),
       parent = t.meta.parent,
-      dataDir = Some(t.meta.dataDir.getOrElse(s"${t.dir}/data")))
-    Files.writeString(Paths.get(dir, "meta.json"), MetaJson.render(meta))
-    val out = Snapshot(meta, dir)
-    metaCache.put(name, out)
-    out
+      dataDir = Some(t.dataDir)))
   }
 
   /** Full logical dataset: resolves the parent chain (column-append) by
@@ -354,7 +368,7 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
   private def readStored(snap: Snapshot): DataFrame =
     (snap.meta.hashlabel, snap.meta.storedSchema) match {
       case (Some(h), Some(ddl)) =>
-        val dataDir = snap.meta.dataDir.getOrElse(s"${snap.dir}/data")
+        val dataDir = snap.dataDir
         val tbl = SnapshotStore.bucketTable(dataDir)
         if (!spark.catalog.tableExists(tbl))
           spark.sql(s"CREATE TABLE $tbl ($ddl) USING parquet " +
@@ -648,16 +662,11 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
     val t = get(target)
     val missing = keep.filterNot(t.columnNames.contains)
     require(missing.isEmpty, s"filterColumns: no such columns $missing")
-    val dir = dirOf(name)
-    Files.createDirectories(Paths.get(dir))
-    val meta = t.meta.copy(name = name,
+    Files.createDirectories(Paths.get(dirOf(name)))
+    commit(t.meta.copy(name = name,
       columns = t.meta.columns.filter(c => keep.contains(c.name)),
       hashlabel = t.meta.hashlabel.filter(keep.contains),
-      dataDir = Some(t.meta.dataDir.getOrElse(s"${t.dir}/data")))
-    Files.writeString(Paths.get(dir, "meta.json"), MetaJson.render(meta))
-    val out = Snapshot(meta, dir)
-    metaCache.put(name, out)
-    out
+      dataDir = Some(t.dataDir)))
   }
 
   def list(): Seq[String] =
@@ -669,6 +678,18 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
 
 object SnapshotStore {
   val RowIdName = "__rowid"
+
+  /** Replace `path` with `text` atomically: write `<path>.tmp`, then
+    * rename it over `path`. A crash leaves the old file or the new one,
+    * never a truncated one.
+    */
+  private[graft] def writeAtomically(path: Path, text: String): Unit = {
+    val tmp = Paths.get(s"$path.tmp")
+    try {
+      Files.writeString(tmp, text)
+      Files.move(tmp, path, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
+  }
 
   /** Catalog table name for a hashed snapshot's bucketed data directory.
     * Keyed by the data dir (not the snapshot name) so metadata-only views

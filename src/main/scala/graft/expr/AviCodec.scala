@@ -1,7 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -33,8 +32,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * All walks are bounded and bounds-checked: chunk sizes are read as
   * unsigned, every advance is validated against the enclosing chunk, and
   * frame counts are capped — an adversarial header can't loop, over-read,
-  * or allocate unboundedly. Per-value scan-side work wrapped in codegen'd
-  * expressions, same pattern as [[MediaCodecHelper]]: no shuffle, no UDF,
+  * or allocate unboundedly. Per-value scan-side work wrapped in the
+  * codegen'd [[MediaCall]], like [[MediaCodecHelper]]: no shuffle, no UDF,
   * memory bounded by one blob + one decoded frame per row.
   */
 object AviCodecHelper {
@@ -231,66 +230,4 @@ object AviCodecHelper {
     val size = (frames(idx) & 0xffffffffL).toInt
     java.util.Arrays.copyOfRange(bytes, off, off + size)
   }
-}
-
-/** AVI container metadata (width, height, counted frames, µs/frame, video
-  * handler fourcc) via the bounded RIFF list walk; null for non-AVI blobs.
-  */
-case class AviMeta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = AviCodecHelper.AviMetaType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_avi_meta"
-  override def nullSafeEval(input: Any): Any =
-    AviCodecHelper.aviMeta(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.AviCodecHelper.aviMeta($c);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): AviMeta =
-    copy(child = newChild)
-}
-
-/** Every-`step`-th-frame MJPEG decode + aggregated pixel statistics; null
-  * for non-AVI blobs (undecodable frames are counted, not nulled).
-  */
-case class MjpegStats(child: Expression, step: Int) extends UnaryExpression {
-  require(step > 0, s"bad frame-sample step $step")
-  override def dataType: DataType = AviCodecHelper.MjpegStatsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_mjpeg_stats"
-  override def nullSafeEval(input: Any): Any =
-    AviCodecHelper.mjpegStats(input.asInstanceOf[Array[Byte]], step)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.AviCodecHelper.mjpegStats($c, $step);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): MjpegStats =
-    copy(child = newChild)
-}
-
-/** The `idx`-th video frame's raw chunk bytes (a self-contained JPEG for
-  * MJPEG streams); null when out of range or not an AVI.
-  */
-case class MjpegFrame(child: Expression, idx: Int) extends UnaryExpression {
-  require(idx >= 0, s"bad frame index $idx")
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_mjpeg_frame"
-  override def nullSafeEval(input: Any): Any =
-    AviCodecHelper.mjpegFrame(input.asInstanceOf[Array[Byte]], idx)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.AviCodecHelper.mjpegFrame($c, $idx);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): MjpegFrame =
-    copy(child = newChild)
 }

@@ -65,11 +65,15 @@ import org.apache.spark.sql.types._
   *    disposal methods 0–3 are the [[gifAnimStats]] compositing path;
   *    [[gifMeta]] counts frames without decoding.
   *
-  * Everything here is per-value scan-side work wrapped in codegen'd
-  * expressions (static call per value, same pattern as [[RecodeHelper]]),
-  * so decode/resize/feature-extract stay inside whole-stage codegen and
-  * scale as a map over the binary column — no shuffle, no driver
-  * involvement, memory bounded by one blob per row.
+  * Each container has one walk: [[pngWalk]] for both PNG depth
+  * envelopes, [[GifWalk]] for every GIF path, [[wavFmt]] for the WAV
+  * header of every codec, and [[jWalk]] for JPEG.
+  *
+  * Everything here is per-value scan-side work wrapped in one codegen'd
+  * expression, [[MediaCall]] (static call per value, same pattern as
+  * [[RecodeHelper]]), so decode/resize/feature-extract stay inside
+  * whole-stage codegen and scale as a map over the binary column — no
+  * shuffle, no driver involvement, memory bounded by one blob per row.
   *
   * Why decode can be real here with zero codec libraries: PNG's IDAT is a
   * zlib stream (java.util.zip) and the filter pass is ~40 lines of integer
@@ -100,8 +104,8 @@ object MediaCodecHelper {
     (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
 
   /** Decode a PNG within the supported envelope; null otherwise (bad
-    * magic, unsupported layout, truncated/corrupt stream). Bounds-checked
-    * chunk walk — adversarial lengths cannot read out of range.
+    * magic, unsupported layout, truncated/corrupt stream). The chunk walk
+    * is [[pngWalk]], shared with [[decodePng16]].
     *
     * Depth 8 on all five color types; SUB-BYTE depths 1/2/4 on gray
     * (type 0) and palette (type 3) — exactly the spec's table 11.1
@@ -122,55 +126,118 @@ object MediaCodecHelper {
     * comparison the spec defines.
     */
   def decodePng(bytes: Array[Byte]): Raster = {
+    val f = pngWalk(bytes, sixteen = false)
+    if (f == null) return null
+    val d = f.depth
+    // sub-byte gray scales to 8-bit by the spec's 255/(2^d−1) factor
+    // (255, 85, 17 — all exact); the color key compares in RAW sample
+    // space, so a valid key scales with the samples and an out-of-range
+    // key becomes unmatchable (256 > any byte) while still synthesizing
+    // the (fully opaque) alpha channel, exactly the 8-bit path's key>255
+    // behavior. Palette indices are never scaled.
+    val pix =
+      if (d < 8 && f.color == 0) {
+        val scale = 255 / ((1 << d) - 1)
+        if (f.key != null)
+          f.key(0) = if (f.key(0) <= (1 << d) - 1) f.key(0) * scale else 256
+        val sc = new Array[Byte](f.pix.length)
+        var i = 0
+        while (i < sc.length) {
+          sc(i) = ((f.pix(i) & 0xff) * scale).toByte
+          i += 1
+        }
+        sc
+      } else f.pix
+    if (f.key != null) return keyAlpha(f, pix, 1)
+    if (f.color != 3) return new Raster(f.w, f.h, f.bpp, pix)
+    // palette expansion: index -> RGB, or RGBA when tRNS is present
+    val plte = f.plte; val trns = f.trns
+    val obpp = if (trns == null) 3 else 4
+    val out = new Array[Byte](f.w * f.h * obpp)
+    var p = 0
+    while (p < pix.length) {
+      val idx = pix(p) & 0xff
+      if (idx >= plte.length) return null // corrupt index stream
+      val c = plte(idx)
+      out(p * obpp) = (c >> 16).toByte
+      out(p * obpp + 1) = ((c >> 8) & 0xff).toByte
+      out(p * obpp + 2) = (c & 0xff).toByte
+      if (obpp == 4)
+        out(p * obpp + 3) = if (idx < trns.length) trns(idx) else -1
+      p += 1
+    }
+    new Raster(f.w, f.h, obpp, out)
+  }
+
+  /** A walked PNG: header fields, the PLTE/tRNS side data and the
+    * inflated, unfiltered samples (`bpp` coded bytes per pixel; one byte
+    * per RAW sample at sub-byte depths). `key` holds the tRNS color key
+    * of types 0 (gray) and 2 (R, G, B), null without one.
+    */
+  private final class PngImage(val w: Int, val h: Int, val depth: Int,
+                               val color: Int, val bpp: Int,
+                               val plte: Array[Int], val trns: Array[Byte],
+                               val key: Array[Int], val pix: Array[Byte])
+
+  /** The one PNG chunk walk behind [[decodePng]] and [[decodePng16]]:
+    * signature, IHDR as the first chunk and only there, PLTE and tRNS
+    * before the first IDAT (spec §5.6), IDAT data concatenated, IEND;
+    * ancillary chunks are skipped by length. Bounds-checked — adversarial
+    * lengths cannot read out of range. The depth envelope is the only
+    * caller choice: depth 16 on types 0/2/4/6 when `sixteen` (no palette,
+    * so PLTE is ancillary there), else depth 8 on every type plus 1/2/4
+    * on types 0 and 3. Null outside it or on any structural error.
+    */
+  private def pngWalk(bytes: Array[Byte], sixteen: Boolean): PngImage = {
     if (bytes == null || bytes.length < 33) return null
     var i = 0
     while (i < 8) { if (bytes(i) != PngSig(i)) return null; i += 1 }
     var off = 8
-    var w = 0; var h = 0; var bpp = 0; var color = -1; var d = 8
+    var w = 0; var h = 0; var bpp = 0; var color = -1; var depth = 8
     var interlaced = false
     var plte: Array[Int] = null
     var trns: Array[Byte] = null
-    var keyR = -1; var keyG = -1; var keyB = -1 // color-key (types 0/2)
-    var idat: java.io.ByteArrayOutputStream = null
+    var key: Array[Int] = null
+    val idat = new java.io.ByteArrayOutputStream()
     var idatStarted = false // PLTE/tRNS must precede all image data
+    def u16(o: Int): Int = ((bytes(o) & 0xff) << 8) | (bytes(o + 1) & 0xff)
     while (off + 8 <= bytes.length) {
       val len = beInt(bytes, off)
       if (len < 0 || off + 12L + len > bytes.length) return null
       val tag = new String(bytes, off + 4, 4, "US-ASCII")
+      // IHDR is the first chunk and appears exactly once (§5.6): a second
+      // one would silently reset the geometry mid-stream
+      if ((tag == "IHDR") != (off == 8)) return null
       tag match {
         case "IHDR" =>
           if (len != 13) return null
           w = beInt(bytes, off + 8); h = beInt(bytes, off + 12)
-          val depth = bytes(off + 16); color = bytes(off + 17)
+          depth = bytes(off + 16); color = bytes(off + 17)
           val interlace = bytes(off + 20)
-          // depth 8 on all types; sub-byte depths 1/2/4 exactly where
-          // the spec allows them (types 0 and 3 — table 11.1): the
-          // icon/fax/tiny-palette layouts
-          val subByte = (depth == 1 || depth == 2 || depth == 4) &&
-            (color == 0 || color == 3)
-          if ((depth != 8 && !subByte) || interlace < 0 || interlace > 1)
-            return null
-          d = depth
+          // sub-byte depths 1/2/4 exactly where the spec allows them
+          // (types 0 and 3 — table 11.1): the icon/fax/tiny-palette layouts
+          val inEnvelope =
+            if (sixteen) depth == 16 && color != 3
+            else depth == 8 || (depth == 1 || depth == 2 || depth == 4) &&
+              (color == 0 || color == 3)
+          if (!inEnvelope || interlace < 0 || interlace > 1) return null
           interlaced = interlace == 1
           // bytes per pixel IN THE CODED STREAM (palette = 1 index byte;
           // sub-byte samples unpack to 1 byte each after unfiltering)
-          bpp = color match {
+          val channels = color match {
             case 0 => 1; case 2 => 3; case 3 => 1; case 4 => 2; case 6 => 4
             case _ => return null
           }
+          bpp = if (depth == 16) 2 * channels else channels
           // cap decoded size at 64 MiB so a forged header can't OOM an
-          // executor; palette may expand 1 -> 4 bytes and color-key tRNS
-          // adds an alpha byte, so cap on the worst-case output pixel size
-          val outBpp = color match {
-            case 0 => 2; case 2 => 4; case 3 => 4; case _ => bpp
-          }
-          if (w <= 0 || h <= 0 || w.toLong * h * outBpp > 64L * 1024 * 1024)
+          // executor; palette may expand 1 -> 4 channels and color-key
+          // tRNS adds an alpha channel, so cap on the worst-case output
+          val outChannels = if (color == 0 || color == 4) 2 else 4
+          val outBytes = if (depth == 16) 2 * outChannels else outChannels
+          if (w <= 0 || h <= 0 || w.toLong * h * outBytes > 64L * 1024 * 1024)
             return null
-          idat = new java.io.ByteArrayOutputStream()
-        case "PLTE" =>
-          // spec §5.6 chunk ordering: PLTE before the first IDAT
-          if (idat == null || idatStarted ||
-              len % 3 != 0 || len == 0 || len > 768) return null
+        case "PLTE" if !sixteen =>
+          if (idatStarted || len % 3 != 0 || len == 0 || len > 768) return null
           val n = len / 3
           plte = new Array[Int](n)
           var p = 0
@@ -181,103 +248,62 @@ object MediaCodecHelper {
             p += 1
           }
         case "tRNS" =>
-          // same ordering rule as PLTE: before the first IDAT
-          if (idat == null || idatStarted) return null
+          if (idatStarted) return null
           color match {
             case 3 =>
               if (plte == null || len > plte.length) return null
               trns = java.util.Arrays.copyOfRange(bytes, off + 8, off + 8 + len)
             case 0 => // color-key: one 16-bit gray sample
               if (len != 2) return null
-              keyG = ((bytes(off + 8) & 0xff) << 8) | (bytes(off + 9) & 0xff)
+              key = Array(u16(off + 8))
             case 2 => // color-key: three 16-bit samples (R, G, B)
               if (len != 6) return null
-              keyR = ((bytes(off + 8) & 0xff) << 8) | (bytes(off + 9) & 0xff)
-              keyG = ((bytes(off + 10) & 0xff) << 8) | (bytes(off + 11) & 0xff)
-              keyB = ((bytes(off + 12) & 0xff) << 8) | (bytes(off + 13) & 0xff)
+              key = Array(u16(off + 8), u16(off + 10), u16(off + 12))
             case _ => return null // tRNS on an alpha-bearing type: invalid
           }
         case "IDAT" =>
-          if (idat == null) return null
           idatStarted = true
           idat.write(bytes, off + 8, len)
         case "IEND" =>
-          if (idat == null) return null
           if (color == 3 && plte == null) return null
-          val pix0 = reconstruct(idat.toByteArray, w, h, bpp, interlaced, d)
-          if (pix0 == null) return null
-          // sub-byte gray scales to 8-bit by the spec's 255/(2^d−1)
-          // factor (255, 85, 17 — all exact); the color key compares in
-          // RAW sample space, so a valid key scales with the samples and
-          // an out-of-range key becomes unmatchable (256 > any byte)
-          // while still synthesizing the (fully opaque) alpha channel,
-          // exactly the 8-bit path's key>255 behavior. Palette indices
-          // are never scaled.
-          val pix =
-            if (d < 8 && color == 0) {
-              val scale = 255 / ((1 << d) - 1)
-              if (keyG >= 0)
-                keyG = if (keyG <= (1 << d) - 1) keyG * scale else 256
-              val sc = new Array[Byte](pix0.length)
-              var i = 0
-              while (i < pix0.length) {
-                sc(i) = ((pix0(i) & 0xff) * scale).toByte
-                i += 1
-              }
-              sc
-            } else pix0
-          if (color == 0 && keyG >= 0) {
-            // gray + synthesized color-key alpha
-            val out = new Array[Byte](w * h * 2)
-            var p = 0
-            while (p < pix.length) {
-              val g = pix(p) & 0xff
-              out(p * 2) = pix(p)
-              out(p * 2 + 1) = if (g == keyG) 0 else -1
-              p += 1
-            }
-            return new Raster(w, h, 2, out)
-          }
-          if (color == 2 && keyG >= 0) {
-            // RGB + synthesized color-key alpha (all three must match)
-            val n = w * h
-            val out = new Array[Byte](n * 4)
-            var p = 0
-            while (p < n) {
-              val r = pix(p * 3) & 0xff
-              val g = pix(p * 3 + 1) & 0xff
-              val bl = pix(p * 3 + 2) & 0xff
-              out(p * 4) = pix(p * 3)
-              out(p * 4 + 1) = pix(p * 3 + 1)
-              out(p * 4 + 2) = pix(p * 3 + 2)
-              out(p * 4 + 3) =
-                if (r == keyR && g == keyG && bl == keyB) 0 else -1
-              p += 1
-            }
-            return new Raster(w, h, 4, out)
-          }
-          if (color != 3) return new Raster(w, h, bpp, pix)
-          // palette expansion: index -> RGB, or RGBA when tRNS is present
-          val obpp = if (trns == null) 3 else 4
-          val out = new Array[Byte](w * h * obpp)
-          var p = 0
-          while (p < pix.length) {
-            val idx = pix(p) & 0xff
-            if (idx >= plte.length) return null // corrupt index stream
-            val c = plte(idx)
-            out(p * obpp) = (c >> 16).toByte
-            out(p * obpp + 1) = ((c >> 8) & 0xff).toByte
-            out(p * obpp + 2) = (c & 0xff).toByte
-            if (obpp == 4)
-              out(p * obpp + 3) = if (idx < trns.length) trns(idx) else -1
-            p += 1
-          }
-          return new Raster(w, h, obpp, out)
+          val pix = reconstruct(idat.toByteArray, w, h, bpp, interlaced, depth)
+          if (pix == null) return null
+          return new PngImage(w, h, depth, color, bpp, plte, trns, key, pix)
         case _ => // ancillary chunk — skip
       }
       off += 12 + len
     }
     null // no IEND
+  }
+
+  /** Append the synthesized color-key alpha channel (tRNS on types 0/2):
+    * alpha 0 where every sample equals its key, opaque elsewhere. `s` is
+    * the sample width in bytes (1, or 2 for big-endian 16-bit samples),
+    * and the alpha sample takes the same width.
+    */
+  private def keyAlpha(f: PngImage, pix: Array[Byte], s: Int): Raster = {
+    val ch = f.key.length
+    val inB = ch * s; val outB = inB + s
+    val n = f.w * f.h
+    val out = new Array[Byte](n * outB)
+    var p = 0
+    while (p < n) {
+      System.arraycopy(pix, p * inB, out, p * outB, inB)
+      var opaque = false
+      var c = 0
+      while (c < ch) {
+        val o = p * inB + c * s
+        val v = if (s == 2) ((pix(o) & 0xff) << 8) | (pix(o + 1) & 0xff)
+                else pix(o) & 0xff
+        if (v != f.key(c)) opaque = true
+        c += 1
+      }
+      val a: Byte = if (opaque) -1 else 0
+      c = 0
+      while (c < s) { out(p * outB + inB + c) = a; c += 1 }
+      p += 1
+    }
+    new Raster(f.w, f.h, outB, out)
   }
 
   /** Inflate exactly `expect` bytes of the zlib stream; null on
@@ -390,7 +416,7 @@ object MediaCodecHelper {
     * sample exactly as at depth 8.
     */
   private def reconstruct(z: Array[Byte], w: Int, h: Int, bpp: Int,
-                          interlaced: Boolean, depth: Int = 8): Array[Byte] = {
+                          interlaced: Boolean, depth: Int): Array[Byte] = {
     def rowBytes(pw: Int): Int =
       if (depth >= 8) pw * bpp else (pw * depth + 7) / 8
     if (!interlaced) {
@@ -548,95 +574,20 @@ object MediaCodecHelper {
 
   /** Full 16-bit PNG raster decode: Raster with bpp = 2·channels where
     * each sample is a big-endian byte pair at FULL precision — no 8-bit
-    * truncation. Same chunk walk and envelope as [[png16Stats]]
-    * (gray16/RGB16/gray+alpha16/RGBA16, sequential or Adam7); null
-    * outside it. Color-key tRNS on types 0/2 (r17) synthesizes a 16-bit
-    * alpha channel exactly as the 8-bit path does — gray16 →
-    * gray+alpha16, RGB16 → RGBA16, alpha 0x0000 where the full-precision
-    * sample(s) equal the key, 0xFFFF elsewhere; at depth 16 every key
-    * value is reachable, so the comparison is the spec's plain 16-bit
-    * sample equality. tRNS on alpha-bearing types stays invalid, and the
-    * §5.6 ordering rule (tRNS before the first IDAT) holds.
+    * truncation. [[decodePng]]'s chunk walk ([[pngWalk]]) with the
+    * 16-bit depth envelope (gray16/RGB16/gray+alpha16/RGBA16, sequential
+    * or Adam7); null outside it. Color-key tRNS on types 0/2 (r17)
+    * synthesizes a 16-bit alpha channel exactly as the 8-bit path does —
+    * gray16 → gray+alpha16, RGB16 → RGBA16, alpha 0x0000 where the
+    * full-precision sample(s) equal the key, 0xFFFF elsewhere; at depth
+    * 16 every key value is reachable, so the comparison is the spec's
+    * plain 16-bit sample equality.
     */
   def decodePng16(bytes: Array[Byte]): Raster = {
-    if (bytes == null || bytes.length < 33) return null
-    var i = 0
-    while (i < 8) { if (bytes(i) != PngSig(i)) return null; i += 1 }
-    var off = 8
-    var w = 0; var h = 0; var channels = 0; var color = -1
-    var interlaced = false
-    var keyR = -1; var keyG = -1; var keyB = -1 // color-key (types 0/2)
-    var idat: java.io.ByteArrayOutputStream = null
-    var idatStarted = false // tRNS must precede all image data (§5.6)
-    while (off + 8 <= bytes.length) {
-      val len = beInt(bytes, off)
-      if (len < 0 || off + 12L + len > bytes.length) return null
-      val tag = new String(bytes, off + 4, 4, "US-ASCII")
-      tag match {
-        case "IHDR" =>
-          if (len != 13) return null
-          w = beInt(bytes, off + 8); h = beInt(bytes, off + 12)
-          val depth = bytes(off + 16); color = bytes(off + 17)
-          val interlace = bytes(off + 20)
-          if (depth != 16 || interlace < 0 || interlace > 1) return null
-          interlaced = interlace == 1
-          channels = color match {
-            case 0 => 1; case 2 => 3; case 4 => 2; case 6 => 4
-            case _ => return null
-          }
-          // cap on the worst-case OUTPUT size: color-key synthesis can
-          // add one 16-bit alpha channel on types 0/2
-          val outCh = color match {
-            case 0 => 2; case 2 => 4; case _ => channels
-          }
-          if (w <= 0 || h <= 0 ||
-              w.toLong * h * 2 * outCh > 64L * 1024 * 1024) return null
-          idat = new java.io.ByteArrayOutputStream()
-        case "tRNS" =>
-          if (idat == null || idatStarted) return null
-          color match {
-            case 0 => // color-key: one 16-bit gray sample
-              if (len != 2) return null
-              keyG = ((bytes(off + 8) & 0xff) << 8) | (bytes(off + 9) & 0xff)
-            case 2 => // color-key: three 16-bit samples (R, G, B)
-              if (len != 6) return null
-              keyR = ((bytes(off + 8) & 0xff) << 8) | (bytes(off + 9) & 0xff)
-              keyG = ((bytes(off + 10) & 0xff) << 8) | (bytes(off + 11) & 0xff)
-              keyB = ((bytes(off + 12) & 0xff) << 8) | (bytes(off + 13) & 0xff)
-            case _ => return null // tRNS on an alpha-bearing type: invalid
-          }
-        case "IDAT" =>
-          if (idat == null) return null
-          idatStarted = true
-          idat.write(bytes, off + 8, len)
-        case "IEND" =>
-          if (idat == null) return null
-          val pix = reconstruct(idat.toByteArray, w, h, 2 * channels,
-            interlaced)
-          if (pix == null) return null
-          if (keyG < 0) return new Raster(w, h, 2 * channels, pix)
-          def s16(o: Int): Int = ((pix(o) & 0xff) << 8) | (pix(o + 1) & 0xff)
-          val n = w * h
-          val inB = 2 * channels; val outB = inB + 2
-          val out = new Array[Byte](n * outB)
-          var p = 0
-          while (p < n) {
-            System.arraycopy(pix, p * inB, out, p * outB, inB)
-            val opaque =
-              if (color == 0) s16(p * inB) != keyG
-              else s16(p * inB) != keyR || s16(p * inB + 2) != keyG ||
-                s16(p * inB + 4) != keyB
-            val a: Byte = if (opaque) -1 else 0
-            out(p * outB + inB) = a
-            out(p * outB + inB + 1) = a
-            p += 1
-          }
-          return new Raster(w, h, outB, out)
-        case _ => // ancillary chunk — skip
-      }
-      off += 12 + len
-    }
-    null // no IEND
+    val f = pngWalk(bytes, sixteen = true)
+    if (f == null) null
+    else if (f.key == null) new Raster(f.w, f.h, f.bpp, f.pix)
+    else keyAlpha(f, f.pix, 2)
   }
 
   /** Nearest-neighbor resize of a 16-BIT PNG, re-encoded as 16-bit PNG —
@@ -2259,110 +2210,172 @@ object MediaCodecHelper {
 
   // ---------------- GIF (87a / 89a) ----------------
 
-  /** Full GIF decode — LZW decompression (variable-width LSB-first codes,
-    * CLEAR/EOI, 4096-entry dictionary with the KwKwK case), global or
-    * local color table, optional interlace (the four-pass 8/8-4/8-2/4-1/2
-    * row order). FIRST image only: extension blocks are skipped via their
-    * sub-block chains (never scanned for markers), and the walk stops at
-    * the first image's end — animation frames beyond it are out of
-    * envelope, as is an image whose descriptor places it at a nonzero
-    * left/top offset or smaller than the logical screen (that requires
-    * background-color compositing; decoding it image-local would diverge
-    * from a reference decoder, so it returns null instead). Output is
-    * interleaved RGB (bpp = 3). null for non-GIF / malformed / truncated
-    * / oversized streams — never garbage.
+  /** The one GIF block walk (GIF89a §17–§27). Construction reads the
+    * signature, the logical screen descriptor and the global color table;
+    * each [[nextImage]] steps over extension blocks — recording the
+    * Graphic Control Extension that applies to the next image — to the
+    * next image descriptor, whose local color table and LZW sub-block data
+    * it skips by length. Sub-block chains are walked by their length
+    * bytes, never scanned for markers. Every read is bounds-checked, and a
+    * short read, a bad signature or an unknown block throws [[JpegBail]],
+    * which each visitor ([[decodeGif]], [[gifMeta]], [[gifComposite]])
+    * turns into null. A visitor decodes the images it wants with
+    * [[paint]].
     */
-  def decodeGif(bytes: Array[Byte]): Raster = {
-    if (bytes == null || bytes.length < 14) return null
-    try decodeGif0(bytes)
-    catch { case _: RuntimeException => null }
-  }
-
-  private def decodeGif0(b: Array[Byte]): Raster = {
-    def u8(i: Int): Int = { if (i < 0 || i >= b.length) throw JpegBail; b(i) & 0xff }
-    def u16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    val sig = new String(b, 0, 6, "US-ASCII")
-    if (sig != "GIF87a" && sig != "GIF89a") return null
-    def palette(off: Int, n: Int): Array[Int] = {
+  private final class GifWalk(b: Array[Byte]) {
+    private def u8(i: Int): Int = { if (i < 0 || i >= b.length) throw JpegBail; b(i) & 0xff }
+    private def u16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
+    if (b == null || b.length < 14) throw JpegBail
+    private val sig = new String(b, 0, 6, "US-ASCII")
+    if (sig != "GIF87a" && sig != "GIF89a") throw JpegBail
+    val sw: Int = u16(6)
+    val sh: Int = u16(8)
+    private def tableSize(packed: Int): Int =
+      if ((packed & 0x80) != 0) 2 << (packed & 7) else 0
+    private def palette(at: Int, n: Int): Array[Int] = {
       val p = new Array[Int](n)
       var i = 0
       while (i < n) {
-        p(i) = (u8(off + 3 * i) << 16) | (u8(off + 3 * i + 1) << 8) |
-          u8(off + 3 * i + 2)
+        p(i) = (u8(at + 3 * i) << 16) | (u8(at + 3 * i + 1) << 8) | u8(at + 3 * i + 2)
         i += 1
       }
       p
     }
-    var off = 6
-    val gpacked = u8(off + 4)
-    off += 7
-    var gct: Array[Int] = null
-    if ((gpacked & 0x80) != 0) {
-      val n = 2 << (gpacked & 7)
-      gct = palette(off, n); off += 3 * n
+    private val gctN = tableSize(u8(10))
+    private val gct = if (gctN > 0) palette(13, gctN) else null
+    private var off = 13 + 3 * gctN
+    private def skipSubBlocks(): Unit = {
+      var len = u8(off)
+      while (len != 0) { off += 1 + len; len = u8(off) }
+      off += 1
     }
-    while (off < b.length) {
-      u8(off) match {
-        case 0x21 => // extension: introducer + label + sub-block chain
-          off += 2
-          var len = u8(off)
-          while (len != 0) { off += 1 + len; len = u8(off) }
-          off += 1
-        case 0x3b => return null // trailer before any image
-        case 0x2c => // image descriptor: decode and return
-          val ileft = u16(off + 1); val itop = u16(off + 3)
-          val iw = u16(off + 5); val ih = u16(off + 7)
-          val ip = u8(off + 9)
-          off += 10
-          if (iw <= 0 || ih <= 0 || iw.toLong * ih * 3 > 64L * 1024 * 1024)
-            return null
-          // an image offset within (or smaller than) the logical screen
-          // must be composited onto that screen with the background color;
-          // decoding it image-local would diverge from a reference decoder.
-          // Honest null keeps the envelope strictly reproducing-decoders.
-          if (ileft != 0 || itop != 0 || iw != u16(6) || ih != u16(8))
-            return null
-          var pal = gct
-          if ((ip & 0x80) != 0) {
-            val n = 2 << (ip & 7)
-            pal = palette(off, n); off += 3 * n
-          }
-          if (pal == null) return null
-          val interlaced = (ip & 0x40) != 0
-          val mcs = u8(off); off += 1
-          if (mcs < 2 || mcs > 8) return null
-          val data = new java.io.ByteArrayOutputStream()
-          var len = u8(off)
-          while (len != 0) {
-            if (off + 1 + len > b.length) throw JpegBail
-            data.write(b, off + 1, len); off += 1 + len; len = u8(off)
-          }
-          val indices = gifLzw(data.toByteArray, mcs, iw * ih)
-          val pix = new Array[Byte](iw * ih * 3)
-          // interlace pass row order; sequential otherwise
-          val rows =
-            if (!interlaced) 0 until ih
-            else (0 until ih by 8) ++ (4 until ih by 8) ++
-              (2 until ih by 4) ++ (1 until ih by 2)
-          var src = 0
-          rows.foreach { y =>
-            var x = 0
-            while (x < iw) {
-              val idx = indices(src) & 0xff; src += 1
-              if (idx >= pal.length) throw JpegBail
-              val c = pal(idx)
-              val o = (y * iw + x) * 3
-              pix(o) = (c >> 16).toByte
-              pix(o + 1) = ((c >> 8) & 0xff).toByte
-              pix(o + 2) = (c & 0xff).toByte
-              x += 1
+
+    /** The current image's Graphic Control Extension: disposal method
+      * and transparent index (−1 for none); 0/−1 without a GCE.
+      */
+    var disposal = 0
+    var trans = -1
+    /** Some GCE so far was not the 4-byte block with disposal 0–3. */
+    var badControl = false
+    /** The current image descriptor and its LZW minimum code size. */
+    var left = 0; var top = 0; var iw = 0; var ih = 0; var mcs = 0
+    private var interlaced = false
+    private var lct = 0; private var lctN = 0
+    private var data = 0
+
+    /** Advance to the next image: true with its descriptor loaded, false
+      * at the trailer.
+      */
+    def nextImage(): Boolean = {
+      disposal = 0; trans = -1
+      while (true) {
+        u8(off) match {
+          case 0x21 => // extension: introducer + label + sub-block chain
+            if (u8(off + 1) == 0xf9) {
+              if (u8(off + 2) != 4) badControl = true
+              else {
+                val packed = u8(off + 3)
+                disposal = (packed >> 2) & 7
+                if (disposal > 3) badControl = true
+                trans = if ((packed & 1) != 0) u8(off + 6) else -1
+              }
             }
-          }
-          return new Raster(iw, ih, 3, pix)
-        case _ => return null
+            off += 2
+            skipSubBlocks()
+          case 0x2c =>
+            left = u16(off + 1); top = u16(off + 3)
+            iw = u16(off + 5); ih = u16(off + 7)
+            val ip = u8(off + 9)
+            interlaced = (ip & 0x40) != 0
+            lctN = tableSize(ip); lct = off + 10
+            off += 10 + 3 * lctN
+            mcs = u8(off)
+            data = off + 1
+            off += 1
+            skipSubBlocks()
+            return true
+          case 0x3b => return false
+          case _ => throw JpegBail
+        }
+      }
+      false
+    }
+
+    /** Decode the current image — LZW over its sub-block data, local or
+      * global palette — onto `canvas`, a screen-wide 0xRRGGBB grid, at the
+      * image's offset in interlace row order. Pixels of index `skip` (the
+      * GCE transparent index, or −1) leave the canvas untouched.
+      */
+    def paint(canvas: Array[Int], skip: Int): Unit = {
+      val pal = if (lctN > 0) palette(lct, lctN) else gct
+      if (pal == null || mcs < 2 || mcs > 8) throw JpegBail
+      val z = new java.io.ByteArrayOutputStream()
+      var o = data
+      var len = u8(o)
+      while (len != 0) { z.write(b, o + 1, len); o += 1 + len; len = u8(o) }
+      val indices = gifLzw(z.toByteArray, mcs, iw * ih)
+      // the four interlace passes: every 8th row from 0, every 8th from
+      // 4, every 4th from 2, every 2nd from 1
+      val rows =
+        if (!interlaced) 0 until ih
+        else (0 until ih by 8) ++ (4 until ih by 8) ++
+          (2 until ih by 4) ++ (1 until ih by 2)
+      var src = 0
+      rows.foreach { y =>
+        val row = (top + y) * sw + left
+        var x = 0
+        while (x < iw) {
+          val idx = indices(src) & 0xff; src += 1
+          if (idx >= pal.length) throw JpegBail
+          if (idx != skip) canvas(row + x) = pal(idx)
+          x += 1
+        }
       }
     }
-    null
+  }
+
+  /** Full GIF decode — LZW decompression (variable-width LSB-first codes,
+    * CLEAR/EOI, 4096-entry dictionary with the KwKwK case), global or
+    * local color table, optional interlace (the four-pass 8/8-4/8-2/4-1/2
+    * row order). FIRST image only: the [[GifWalk]] visitor that stops at
+    * the first image's end, so nothing after it (animation frames, the
+    * trailer) is read. An image whose descriptor places it at a nonzero
+    * left/top offset or smaller than the logical screen is out of
+    * envelope (that requires background-color compositing; decoding it
+    * image-local would diverge from a reference decoder, so it returns
+    * null instead). Output is interleaved RGB (bpp = 3). null for non-GIF
+    * / malformed / truncated / oversized streams — never garbage.
+    */
+  def decodeGif(bytes: Array[Byte]): Raster =
+    try {
+      val g = new GifWalk(bytes)
+      val w = g.sw; val h = g.sh
+      if (!g.nextImage() || g.left != 0 || g.top != 0 || g.iw != w ||
+          g.ih != h || w <= 0 || h <= 0 || w.toLong * h * 3 > 64L * 1024 * 1024)
+        return null
+      val canvas = new Array[Int](w * h)
+      g.paint(canvas, -1)
+      canvasRaster(w, h, canvas, 3)
+    } catch { case _: RuntimeException => null }
+
+  /** A 0xRRGGBB canvas as interleaved RGB (`bpp` 3), or as RGBA (`bpp`
+    * 4) with alpha 255 on painted pixels and (0,0,0,0) where the canvas
+    * holds −1 (transparent).
+    */
+  private def canvasRaster(w: Int, h: Int, canvas: Array[Int], bpp: Int): Raster = {
+    val pix = new Array[Byte](canvas.length * bpp)
+    var i = 0
+    while (i < canvas.length) {
+      val v = canvas(i)
+      if (v >= 0) {
+        pix(bpp * i) = (v >> 16).toByte
+        pix(bpp * i + 1) = (v >> 8).toByte
+        pix(bpp * i + 2) = v.toByte
+        if (bpp == 4) pix(bpp * i + 3) = -1
+      }
+      i += 1
+    }
+    new Raster(w, h, bpp, pix)
   }
 
   /** GIF LZW decompression to exactly `nOut` palette indices. Width
@@ -2437,66 +2450,37 @@ object MediaCodecHelper {
     out
   }
 
-  /** struct(width, height, channels, px_sum, px_min, px_max) over the
-    * fully decoded GIF raster (same shape as [[pngStats]]); null outside
-    * the envelope.
-    */
   /** GIF container metadata — struct(width, height, n_frames): the
-    * logical-screen dimensions plus a count of ALL image descriptors via
-    * the bounded sub-block walk (local color tables and LZW data are
-    * SKIPPED by length, never decoded), so animation length is a cheap
-    * header pass while pixel decode stays first-frame
-    * ([[decodeGif]]'s envelope). Null for non-GIF / malformed streams,
-    * and for a stream with no image before the trailer.
+    * logical-screen dimensions plus a count of ALL image descriptors: the
+    * [[GifWalk]] visitor that decodes nothing (local color tables and LZW
+    * data are SKIPPED by length), so animation length is a cheap header
+    * pass while pixel decode stays first-frame ([[decodeGif]]'s
+    * envelope). Null for non-GIF / malformed streams, for a stream with
+    * no image before the trailer, and without a trailer (truncated stream
+    * or a frame-count bomb past 2^20 images).
     */
-  def gifMeta(bytes: Array[Byte]): InternalRow = {
-    if (bytes == null || bytes.length < 14) return null
+  def gifMeta(bytes: Array[Byte]): InternalRow =
     try {
-      def u8(i: Int): Int = { if (i < 0 || i >= bytes.length) throw JpegBail; bytes(i) & 0xff }
-      def u16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-      val sig = new String(bytes, 0, 6, "US-ASCII")
-      if (sig != "GIF87a" && sig != "GIF89a") return null
-      val w = u16(6); val h = u16(8)
-      if (w <= 0 || h <= 0) return null
-      var off = 6
-      val gpacked = u8(off + 4)
-      off += 7
-      if ((gpacked & 0x80) != 0) off += 3 * (2 << (gpacked & 7))
+      val g = new GifWalk(bytes)
+      if (g.sw <= 0 || g.sh <= 0) return null
       var frames = 0
-      def skipSubBlocks(): Unit = {
-        var len = u8(off)
-        while (len != 0) { off += 1 + len; len = u8(off) }
-        off += 1
+      while (g.nextImage()) {
+        frames += 1
+        if (frames >= (1 << 20)) return null
       }
-      var done = false
-      while (!done && frames < (1 << 20)) {
-        u8(off) match { // u8 throws past the end: truncated -> null
-          case 0x21 => // extension
-            off += 2
-            skipSubBlocks()
-          case 0x3b => done = true // trailer
-          case 0x2c => // image descriptor
-            val ip = u8(off + 9)
-            off += 10
-            if ((ip & 0x80) != 0) off += 3 * (2 << (ip & 7))
-            off += 1 // LZW minimum code size
-            skipSubBlocks()
-            frames += 1
-          case _ => throw JpegBail
-        }
-      }
-      // no trailer (truncated stream / frame-count bomb) or no image:
-      // malformed -> honest null, like every decoder in this file
-      if (!done || frames == 0) return null
-      new GenericInternalRow(Array[Any](w, h, frames))
+      if (frames == 0) null
+      else new GenericInternalRow(Array[Any](g.sw, g.sh, frames))
     } catch { case _: RuntimeException => null }
-  }
 
   val GifMetaType: StructType = StructType(Seq(
     StructField("width", IntegerType, nullable = false),
     StructField("height", IntegerType, nullable = false),
     StructField("n_frames", IntegerType, nullable = false)))
 
+  /** struct(width, height, channels, px_sum, px_min, px_max) over the
+    * fully decoded GIF raster (same shape as [[pngStats]]); null outside
+    * the envelope.
+    */
   def gifStats(bytes: Array[Byte]): InternalRow = rasterStats(decodeGif(bytes))
 
   /** Multi-frame GIF COMPOSITING decode — the animation-aware path that
@@ -2521,15 +2505,13 @@ object MediaCodecHelper {
     * 16M pixels, or total composited work over 256M pixels (the
     * frame-count × screen-area bound).
     */
-  def gifAnimStats(bytes: Array[Byte]): InternalRow = {
-    if (bytes == null || bytes.length < 14) return null
+  def gifAnimStats(bytes: Array[Byte]): InternalRow =
     try {
       val c = gifComposite(bytes, stopAt = -1, collectStats = true)
       if (c == null) null
       else new GenericInternalRow(Array[Any](c.width, c.height,
         new GenericArrayData(c.stats.asInstanceOf[Array[Any]])))
     } catch { case _: RuntimeException => null }
-  }
 
   /** Extract composited frame `frame` of an animated GIF as an RGBA PNG
     * (alpha 255 on opaque canvas pixels, 0 on transparent) — the GIF
@@ -2543,27 +2525,15 @@ object MediaCodecHelper {
     * fewer than `frame`+1 images.
     */
   def gifFramePng(bytes: Array[Byte], frame: Int): Array[Byte] = {
-    if (bytes == null || bytes.length < 14 || frame < 0) return null
+    if (frame < 0) return null
     try {
       val c = gifComposite(bytes, stopAt = frame, collectStats = false)
-      if (c == null || c.canvas == null) return null
-      val pix = new Array[Byte](c.width * c.height * 4)
-      var i = 0
-      while (i < c.canvas.length) {
-        val v = c.canvas(i)
-        if (v >= 0) {
-          pix(4 * i) = ((v >> 16) & 0xff).toByte
-          pix(4 * i + 1) = ((v >> 8) & 0xff).toByte
-          pix(4 * i + 2) = (v & 0xff).toByte
-          pix(4 * i + 3) = 0xff.toByte
-        } // transparent stays (0,0,0,0)
-        i += 1
-      }
-      encodePng(new Raster(c.width, c.height, 4, pix))
+      if (c == null || c.canvas == null) null
+      else encodePng(canvasRaster(c.width, c.height, c.canvas, 4))
     } catch { case _: RuntimeException => null }
   }
 
-  /** Result of the shared compositing walk: per-frame stats rows (when
+  /** Result of the compositing visitor: per-frame stats rows (when
     * collected) and the canvas captured after frame `stopAt` rendered
     * (before its disposal), or the final canvas for stopAt = −1.
     */
@@ -2571,147 +2541,67 @@ object MediaCodecHelper {
                                    val stats: Array[InternalRow],
                                    val canvas: Array[Int])
 
-  /** The compositing walk both [[gifAnimStats]] (stopAt = −1, stats
-    * collected per frame) and [[gifFramePng]] (stop after `stopAt`,
-    * remaining image data skipped by length, structure still enforced
-    * through the trailer) share. Null outside the envelope; `canvas` is
-    * null when stopAt names a frame the stream does not have.
+  /** The compositing [[GifWalk]] visitor both [[gifAnimStats]] (stopAt =
+    * −1, stats collected per frame) and [[gifFramePng]] (stop after
+    * `stopAt`, remaining image data skipped by length, structure still
+    * enforced through the trailer) share. Null outside the envelope;
+    * `canvas` is null when stopAt names a frame the stream does not have.
     */
   private def gifComposite(b: Array[Byte], stopAt: Int,
                            collectStats: Boolean): GifComposite = {
-    def u8(i: Int): Int = { if (i < 0 || i >= b.length) throw JpegBail; b(i) & 0xff }
-    def u16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    val sig = new String(b, 0, 6, "US-ASCII")
-    if (sig != "GIF87a" && sig != "GIF89a") return null
-    val sw = u16(6); val sh = u16(8)
+    val g = new GifWalk(b)
+    val sw = g.sw; val sh = g.sh
     if (sw <= 0 || sh <= 0 || sw.toLong * sh > 16L * 1024 * 1024) return null
-    def palette(off: Int, n: Int): Array[Int] = {
-      val p = new Array[Int](n)
-      var i = 0
-      while (i < n) {
-        p(i) = (u8(off + 3 * i) << 16) | (u8(off + 3 * i + 1) << 8) |
-          u8(off + 3 * i + 2)
-        i += 1
-      }
-      p
-    }
-    var off = 6
-    val gpacked = u8(off + 4)
-    off += 7
-    var gct: Array[Int] = null
-    if ((gpacked & 0x80) != 0) {
-      val n = 2 << (gpacked & 7)
-      gct = palette(off, n); off += 3 * n
-    }
     val canvas = Array.fill(sw * sh)(-1) // -1 = transparent, else 0xRRGGBB
     val frames = scala.collection.mutable.ArrayBuffer[InternalRow]()
     var captured: Array[Int] = null
     var rendered = 0
-    var disposal = 0 // pending GCE state, consumed by the next image
-    var transIdx = -1
-    var done = false
-    while (!done) {
-      u8(off) match {
-        case 0x21 => // extension; 0xf9 = Graphic Control for the NEXT image
-          val label = u8(off + 1)
-          off += 2
-          if (label == 0xf9) {
-            if (u8(off) != 4) throw JpegBail
-            val packed = u8(off + 1)
-            disposal = (packed >> 2) & 7
-            if (disposal > 3) return null // reserved methods: out of envelope
-            transIdx = if ((packed & 1) != 0) u8(off + 4) else -1
-          }
-          var len = u8(off)
-          while (len != 0) { off += 1 + len; len = u8(off) }
-          off += 1
-        case 0x3b => done = true
-        case 0x2c =>
-          val pastStop = stopAt >= 0 && rendered > stopAt
-          // bound TOTAL compositing work, not just the screen area
-          if (!pastStop &&
-              (rendered + 1).toLong * sw * sh > 256L * 1024 * 1024)
-            return null
-          val ileft = u16(off + 1); val itop = u16(off + 3)
-          val iw = u16(off + 5); val ih = u16(off + 7)
-          val ip = u8(off + 9)
-          off += 10
-          if (iw <= 0 || ih <= 0 || ileft + iw > sw || itop + ih > sh)
-            return null
-          var pal = gct
-          if ((ip & 0x80) != 0) {
-            val n = 2 << (ip & 7)
-            if (pastStop) off += 3 * n
-            else { pal = palette(off, n); off += 3 * n }
-          }
-          if (!pastStop && pal == null) return null
-          val interlaced = (ip & 0x40) != 0
-          val mcs = u8(off); off += 1
-          if (mcs < 2 || mcs > 8) return null
-          val data = if (pastStop) null else new java.io.ByteArrayOutputStream()
-          var len = u8(off)
-          while (len != 0) {
-            if (off + 1 + len > b.length) throw JpegBail
-            if (!pastStop) data.write(b, off + 1, len)
-            off += 1 + len; len = u8(off)
-          }
-          off += 1 // past the 0 sub-block terminator
-          if (!pastStop) {
-            val indices = gifLzw(data.toByteArray, mcs, iw * ih)
-            val snap = if (disposal == 3) canvas.clone() else null
-            val rows =
-              if (!interlaced) 0 until ih
-              else (0 until ih by 8) ++ (4 until ih by 8) ++
-                (2 until ih by 4) ++ (1 until ih by 2)
-            var src = 0
-            rows.foreach { y =>
-              var x = 0
-              while (x < iw) {
-                val idx = indices(src) & 0xff; src += 1
-                if (idx >= pal.length) throw JpegBail
-                if (idx != transIdx)
-                  canvas((itop + y) * sw + (ileft + x)) = pal(idx)
-                x += 1
-              }
+    while (g.nextImage()) {
+      val pastStop = stopAt >= 0 && rendered > stopAt
+      // bound TOTAL compositing work, not just the screen area
+      if (!pastStop && (rendered + 1).toLong * sw * sh > 256L * 1024 * 1024)
+        return null
+      val left = g.left; val top = g.top; val iw = g.iw; val ih = g.ih
+      if (g.badControl || iw <= 0 || ih <= 0 || left + iw > sw ||
+          top + ih > sh || g.mcs < 2 || g.mcs > 8) return null
+      if (!pastStop) {
+        val snap = if (g.disposal == 3) canvas.clone() else null
+        g.paint(canvas, g.trans)
+        if (collectStats) {
+          var sum = 0L; var opaque = 0; var mn = 255; var mx = 0
+          var i = 0
+          while (i < canvas.length) {
+            val c = canvas(i)
+            if (c >= 0) {
+              opaque += 1
+              val r = (c >> 16) & 0xff; val gr = (c >> 8) & 0xff
+              val bb = c & 0xff
+              sum += r + gr + bb
+              if (r < mn) mn = r; if (gr < mn) mn = gr; if (bb < mn) mn = bb
+              if (r > mx) mx = r; if (gr > mx) mx = gr; if (bb > mx) mx = bb
             }
-            if (collectStats) {
-              var sum = 0L; var opaque = 0; var mn = 255; var mx = 0
-              var i = 0
-              while (i < canvas.length) {
-                val c = canvas(i)
-                if (c >= 0) {
-                  opaque += 1
-                  val r = (c >> 16) & 0xff; val g = (c >> 8) & 0xff
-                  val bb = c & 0xff
-                  sum += r + g + bb
-                  if (r < mn) mn = r; if (g < mn) mn = g; if (bb < mn) mn = bb
-                  if (r > mx) mx = r; if (g > mx) mx = g; if (bb > mx) mx = bb
-                }
-                i += 1
-              }
-              if (opaque == 0) { mn = -1; mx = -1 }
-              frames += new GenericInternalRow(Array[Any](sum, opaque, mn, mx))
-            }
-            if (rendered == stopAt) captured = canvas.clone()
-            if (disposal == 2) {
-              var y = 0
-              while (y < ih) {
-                var x = 0
-                while (x < iw) {
-                  canvas((itop + y) * sw + (ileft + x)) = -1; x += 1
-                }
-                y += 1
-              }
-            } else if (disposal == 3) {
-              System.arraycopy(snap, 0, canvas, 0, canvas.length)
-            }
+            i += 1
           }
-          rendered += 1
-          disposal = 0; transIdx = -1
-        case _ => return null
+          if (opaque == 0) { mn = -1; mx = -1 }
+          frames += new GenericInternalRow(Array[Any](sum, opaque, mn, mx))
+        }
+        if (rendered == stopAt) captured = canvas.clone()
+        if (g.disposal == 2) {
+          var y = 0
+          while (y < ih) {
+            java.util.Arrays.fill(canvas, (top + y) * sw + left,
+              (top + y) * sw + left + iw, -1)
+            y += 1
+          }
+        } else if (g.disposal == 3) {
+          System.arraycopy(snap, 0, canvas, 0, canvas.length)
+        }
       }
+      rendered += 1
     }
-    if (rendered == 0) return null
+    // a reserved disposal method anywhere, even after the last image, is
+    // out of envelope
+    if (g.badControl || rendered == 0) return null
     new GifComposite(sw, sh, frames.toArray,
       if (stopAt < 0) canvas else captured)
   }
@@ -2781,31 +2671,52 @@ object MediaCodecHelper {
     0x00, 0x00, 0x00, 0x00, 0x10, 0x00, 0x80, 0x00,
     0x00, 0xaa, 0x00, 0x38, 0x9b, 0x71).map(_.toByte)
 
+  /** A WAV's RIFF `fmt `/`data` header, located once through the chunk
+    * walk ([[RiffWalkHelper]]; LIST/fact chunks before `fmt ` are fine)
+    * and read once for every layout below: `fo` and `dOff` are the 0-based
+    * fmt and data payload offsets, `dataLen` the declared data length
+    * clipped to the blob.
+    */
+  private final class WavFmt(b: Array[Byte], val fo: Int, val dOff: Int) {
+    val fmtLen: Int = leInt(b, fo - 4)
+    val codec: Int = leShort(b, fo)
+    val channels: Int = leShort(b, fo + 2)
+    val rate: Int = leInt(b, fo + 4)
+    val blockAlign: Int = leShort(b, fo + 12)
+    val bits: Int = leShort(b, fo + 14)
+    val dataLen: Int =
+      math.min(leInt(b, dOff - 4).toLong, (b.length - dOff).toLong).toInt
+  }
+
+  /** The [[WavFmt]] of a WAV blob; null without both chunks or when the
+    * fmt payload is shorter than its 16 fixed bytes.
+    */
+  private def wavFmt(bytes: Array[Byte]): WavFmt = {
+    val fmtOff = RiffWalkHelper.chunkDataOffset(bytes, 'f', 'm', 't', ' ')
+    val dataOff = RiffWalkHelper.chunkDataOffset(bytes, 'd', 'a', 't', 'a')
+    if (fmtOff < 0 || dataOff < 0) return null
+    val fo = fmtOff.toInt - 1 // helper returns 1-based for SQL substr
+    val dOff = dataOff.toInt - 1
+    if (fo + 16 > bytes.length || dOff > bytes.length) null
+    else new WavFmt(bytes, fo, dOff)
+  }
+
   /** (dataOff0based, nSamples, sampleRate, channels, bits, codec) for
     * integer-PCM (codec 1, 8/16/24/32-bit), G.711 µ-law/A-law (codecs
     * 7/6, 8-bit), IEEE float32/float64 (codec 3), and WAVE_FORMAT_EXTENSIBLE
     * (0xFFFE) wrapping any of those — the returned codec is the EFFECTIVE
     * base format from the SubFormat GUID, so downstream sample access and
     * the codec-preserving frame sampler treat an extensible clip exactly
-    * as its payload format. Null otherwise (ADPCM, truncated
+    * as its payload format. Null otherwise (no header, ADPCM, truncated
     * fmt, an unknown GUID).
     */
-  private def pcmLayout(bytes: Array[Byte]): Array[Int] = {
-    if (bytes == null) return null
-    val fmtOff = RiffWalkHelper.chunkDataOffset(bytes, 'f', 'm', 't', ' ')
-    val dataOff = RiffWalkHelper.chunkDataOffset(bytes, 'd', 'a', 't', 'a')
-    if (fmtOff < 0 || dataOff < 0) return null
-    val fo = fmtOff.toInt - 1 // helper returns 1-based for SQL substr
-    val dOff = dataOff.toInt - 1
-    if (fo + 16 > bytes.length || dOff > bytes.length) return null
-    var codec = leShort(bytes, fo)
-    val channels = leShort(bytes, fo + 2)
-    val rate = leInt(bytes, fo + 4)
-    val bits = leShort(bytes, fo + 14)
+  private def pcmLayout(bytes: Array[Byte], f: WavFmt): Array[Int] = {
+    if (f == null) return null
+    val fo = f.fo
+    var codec = f.codec
     if (codec == 0xFFFE || codec == -2) { // WAVE_FORMAT_EXTENSIBLE
       // fmt must carry the 22-byte extension; SubFormat GUID at +24
-      val fmtLen = leInt(bytes, fo - 4)
-      if (fmtLen < 40 || fo + 40 > bytes.length) return null
+      if (f.fmtLen < 40 || fo + 40 > bytes.length) return null
       if (leShort(bytes, fo + 16) < 22) return null // cbSize
       var i = 0
       while (i < 14) {
@@ -2814,18 +2725,41 @@ object MediaCodecHelper {
       }
       codec = leShort(bytes, fo + 24) // wrapped base format
     }
+    val bits = f.bits
     val ok = codec match {
       case 1     => bits == 8 || bits == 16 || bits == 24 || bits == 32
       case 3     => bits == 32 || bits == 64 // IEEE float single/double
       case 6 | 7 => bits == 8 // G.711 A-law / µ-law: one byte per sample
       case _     => false
     }
-    if (!ok || channels < 1) return null
-    val dataLen0 = leInt(bytes, dOff - 4)
-    val dataLen = math.min(dataLen0.toLong, (bytes.length - dOff).toLong).toInt
-    if (dataLen < 0) return null
-    val bytesPer = bits / 8
-    Array(dOff, dataLen / (bytesPer * channels), rate, channels, bits, codec)
+    if (!ok || f.channels < 1 || f.dataLen < 0) return null
+    Array(f.dOff, f.dataLen / (bits / 8 * f.channels), f.rate, f.channels,
+      bits, codec)
+  }
+
+  /** The one running statistic behind every WAV codec: sum, sum of
+    * squares and peak over all samples, zero crossings over channel 0
+    * (chained across ADPCM blocks). Sums are exact: one that leaves int64
+    * throws ArithmeticException, which only 32-bit-scale PCM or hot float
+    * can reach (|v| ≤ 2^15 on the ADPCM paths cannot overflow before
+    * ~2^33 frames).
+    */
+  private final class WavAcc {
+    private var sum = 0L; private var sq = 0L; private var peak = 0L
+    private var zc = 0L
+    private var prevNeg = false; private var c0Seen = false
+    def add(v: Int, c: Int): Unit = {
+      sum = Math.addExact(sum, v)
+      sq = Math.addExact(sq, v.toLong * v.toLong) // |v| ≤ 2^31: the square fits
+      val a = math.abs(v.toLong); if (a > peak) peak = a
+      if (c == 0) {
+        val neg = v < 0
+        if (c0Seen && neg != prevNeg) zc += 1
+        prevNeg = neg; c0Seen = true
+      }
+    }
+    def row(frames: Long, rate: Int, bits: Int): InternalRow =
+      new GenericInternalRow(Array[Any](frames, rate, sum, sq, peak, zc, bits))
   }
 
   /** G.711 µ-law byte → 13-bit-magnitude linear sample: the canonical
@@ -2896,42 +2830,34 @@ object MediaCodecHelper {
   /** struct(n_samples, sample_rate, pcm_sum, pcm_sqsum, pcm_peak, pcm_zc,
     * pcm_bits) over all PCM frames (all channels; zero crossings over
     * channel 0 only — the per-channel metric). Integer outputs for exact
-    * oracle reproduction; RMS = sqrt(sqsum/n) downstream. IMA/DVI ADPCM
-    * routes through [[wavAdpcmStats]], Microsoft ADPCM through
-    * [[wavMsAdpcmStats]]. Null for blobs outside the decode
-    * envelope (see [[pcmLayout]] / [[adpcmLayout]] /
-    * [[msAdpcmLayout]]), and for a
-    * 32-bit or hot-float stream whose sum of squares exceeds int64
-    * (honest "can't represent" rather than a silent wrap — only reachable
-    * at 32-bit-scale values: 24-bit squares can't overflow any plausible
-    * clip length).
+    * oracle reproduction; RMS = sqrt(sqsum/n) downstream. The fmt/data
+    * header is read once ([[wavFmt]]) and its codec picks the layout:
+    * IMA/DVI ADPCM routes through [[wavAdpcmStats]], Microsoft ADPCM
+    * through [[wavMsAdpcmStats]], everything else through [[pcmLayout]];
+    * all three feed one [[WavAcc]]. Null for blobs outside the decode
+    * envelope, and for a 32-bit or hot-float stream whose sum of squares
+    * exceeds int64 (honest "can't represent" rather than a silent wrap —
+    * only reachable at 32-bit-scale values: 24-bit squares can't overflow
+    * any plausible clip length).
     */
   def wavPcmStats(bytes: Array[Byte]): InternalRow = {
-    val lay = pcmLayout(bytes)
-    if (lay == null) {
-      val ima = wavAdpcmStats(bytes)
-      return if (ima != null) ima else wavMsAdpcmStats(bytes)
-    }
+    val f = wavFmt(bytes)
+    if (f == null) return null
+    if (f.codec == 0x11) return wavAdpcmStats(bytes, f)
+    if (f.codec == 0x02) return wavMsAdpcmStats(bytes, f)
+    val lay = pcmLayout(bytes, f)
+    if (lay == null) return null
     val Array(dOff, n, rate, channels, bits, codec) = lay
-    var sum = 0L; var sq = 0L; var peak = 0L; var zc = 0L
-    var prevNeg = false
-    var i = 0
+    val acc = new WavAcc
     val total = n * channels
+    var i = 0
     try {
       while (i < total) {
-        val v = pcmSample(bytes, dOff, bits, codec, i)
-        sum = Math.addExact(sum, v)
-        sq = Math.addExact(sq, Math.multiplyExact(v.toLong, v.toLong))
-        val a = math.abs(v.toLong); if (a > peak) peak = a
-        if (i % channels == 0) { // channel 0 only
-          val neg = v < 0
-          if (i > 0 && neg != prevNeg) zc += 1
-          prevNeg = neg
-        }
+        acc.add(pcmSample(bytes, dOff, bits, codec, i), i % channels)
         i += 1
       }
     } catch { case _: ArithmeticException => return null }
-    new GenericInternalRow(Array[Any](n.toLong, rate, sum, sq, peak, zc, bits))
+    acc.row(n.toLong, rate, bits)
   }
 
   /** IMA/DVI ADPCM step-size table (IMA Digital Audio Compression and
@@ -2949,47 +2875,6 @@ object MediaCodecHelper {
 
   /** Step-index adjustment per nibble magnitude (sign bit ignored). */
   private val ImaIndexAdj: Array[Int] = Array(-1, -1, -1, -1, 2, 4, 6, 8)
-
-  /** (dOff, dataLen, rate, channels, blockAlign) for IMA/DVI ADPCM
-    * (WAVE codec 0x11, 4-bit nibbles). Block structure per the IMA WAV
-    * mapping: each `blockAlign`-byte block opens with one 4-byte header
-    * per channel (int16 predictor = the channel's first output sample,
-    * uint8 step index, reserved byte), then 4-byte nibble groups
-    * round-robined across channels (8 samples per group). Null unless
-    * the geometry is coherent — data a whole number of blocks, the
-    * nibble region a whole number of channel rounds, and any DECLARED
-    * wSamplesPerBlock (cbSize ≥ 2) equal to the computed
-    * `1 + 2·(blockAlign − 4·ch)/ch` (a lying header is an honest null,
-    * not a guess).
-    */
-  private def adpcmLayout(bytes: Array[Byte]): Array[Int] = {
-    if (bytes == null) return null
-    val fmtOff = RiffWalkHelper.chunkDataOffset(bytes, 'f', 'm', 't', ' ')
-    val dataOff = RiffWalkHelper.chunkDataOffset(bytes, 'd', 'a', 't', 'a')
-    if (fmtOff < 0 || dataOff < 0) return null
-    val fo = fmtOff.toInt - 1
-    val dOff = dataOff.toInt - 1
-    if (fo + 16 > bytes.length || dOff > bytes.length) return null
-    if (leShort(bytes, fo) != 0x11) return null
-    val channels = leShort(bytes, fo + 2)
-    val rate = leInt(bytes, fo + 4)
-    val blockAlign = leShort(bytes, fo + 12)
-    if (leShort(bytes, fo + 14) != 4) return null // 4-bit nibbles only
-    if (channels < 1) return null
-    val head = 4 * channels
-    if (blockAlign <= head || (blockAlign - head) % (4 * channels) != 0)
-      return null
-    val fmtLen = leInt(bytes, fo - 4)
-    if (fmtLen >= 20 && fo + 20 <= bytes.length &&
-        leShort(bytes, fo + 16) >= 2) {
-      val declared = leShort(bytes, fo + 18)
-      if (declared != 1 + 2 * (blockAlign - head) / channels) return null
-    }
-    val dataLen0 = leInt(bytes, dOff - 4)
-    val dataLen = math.min(dataLen0.toLong, (bytes.length - dOff).toLong).toInt
-    if (dataLen <= 0 || dataLen % blockAlign != 0) return null
-    Array(dOff, dataLen, rate, channels, blockAlign)
-  }
 
   /** One nibble through the IMA predictor: bit-serial difference
     * (`step>>3` plus the selected `step>>2`/`step>>1`/`step` terms — the
@@ -3011,34 +2896,44 @@ object MediaCodecHelper {
     (pred << 8) | idx
   }
 
-  /** [[wavPcmStats]] for IMA/DVI ADPCM (codec 0x11): sequential block
-    * decode — per block, each channel's header predictor IS its first
-    * output frame, then every nibble (low half-byte first) advances the
-    * channel's (predictor, step-index) recurrence one frame. n_samples
-    * counts FRAMES; sum/sqsum/peak span all channels; zero crossings
-    * chain over channel 0 across block boundaries (headers included),
-    * matching the PCM path's semantics. pcm_bits reports the STORAGE
-    * depth 4 (the fmt value), not the 16-bit decoded lattice.
+  /** [[wavPcmStats]] for IMA/DVI ADPCM (WAVE codec 0x11, 4-bit nibbles):
+    * sequential block decode. Block structure per the IMA WAV mapping:
+    * each `blockAlign`-byte block opens with one 4-byte header per
+    * channel (int16 predictor = the channel's first output frame, uint8
+    * step index, reserved byte), then 4-byte nibble groups round-robined
+    * across channels (8 samples per group); every nibble (low half-byte
+    * first) advances the channel's (predictor, step-index) recurrence one
+    * frame. n_samples counts FRAMES; sum/sqsum/peak span all channels;
+    * zero crossings chain over channel 0 across block boundaries (headers
+    * included), matching the PCM path's semantics. pcm_bits reports the
+    * STORAGE depth 4 (the fmt value), not the 16-bit decoded lattice.
+    * Null unless the geometry is coherent — data a whole number of
+    * blocks, the nibble region a whole number of channel rounds, and any
+    * DECLARED wSamplesPerBlock (cbSize ≥ 2) equal to the computed
+    * `1 + 2·(blockAlign − 4·ch)/ch` (a lying header is an honest null,
+    * not a guess).
     */
-  def wavAdpcmStats(bytes: Array[Byte]): InternalRow = {
-    val lay = adpcmLayout(bytes)
-    if (lay == null) return null
-    val Array(dOff, dataLen, rate, channels, blockAlign) = lay
+  def wavAdpcmStats(bytes: Array[Byte]): InternalRow =
+    wavAdpcmStats(bytes, wavFmt(bytes))
+
+  private def wavAdpcmStats(bytes: Array[Byte], f: WavFmt): InternalRow = {
+    if (f == null || f.codec != 0x11 || f.bits != 4 || f.channels < 1)
+      return null
+    val fo = f.fo; val dOff = f.dOff; val dataLen = f.dataLen
+    val channels = f.channels; val blockAlign = f.blockAlign
+    val head = 4 * channels
+    if (blockAlign <= head || (blockAlign - head) % (4 * channels) != 0)
+      return null
+    if (f.fmtLen >= 20 && fo + 20 <= bytes.length &&
+        leShort(bytes, fo + 16) >= 2 &&
+        leShort(bytes, fo + 18) != 1 + 2 * (blockAlign - head) / channels)
+      return null
+    if (dataLen <= 0 || dataLen % blockAlign != 0) return null
     val groupsPerBlock = (blockAlign - 4 * channels) / (4 * channels)
-    var sum = 0L; var sq = 0L; var peak = 0L; var zc = 0L
-    var prevNeg = false; var c0Seen = false; var frames = 0L
+    val acc = new WavAcc
+    var frames = 0L
     val pred = new Array[Int](channels)
     val idx = new Array[Int](channels)
-    def acc(v: Int, c: Int): Unit = {
-      sum += v
-      sq += v.toLong * v.toLong // |v| ≤ 2^15: no overflow before ~2^33 frames
-      val a = math.abs(v.toLong); if (a > peak) peak = a
-      if (c == 0) {
-        val neg = v < 0
-        if (c0Seen && neg != prevNeg) zc += 1
-        prevNeg = neg; c0Seen = true
-      }
-    }
     var bo = dOff
     while (bo < dOff + dataLen) {
       var c = 0
@@ -3048,7 +2943,7 @@ object MediaCodecHelper {
         if (si > 88) return null
         idx(c) = si
         // header predictor = the channel's first frame of this block
-        acc(pred(c), c)
+        acc.add(pred(c), c)
         c += 1
       }
       frames += 1
@@ -3066,7 +2961,7 @@ object MediaCodecHelper {
               val packed = imaStep(pred(c), idx(c), nib)
               pred(c) = packed >> 8
               idx(c) = packed & 0xff
-              acc(pred(c), c)
+              acc.add(pred(c), c)
               half += 1
             }
             bi += 1
@@ -3078,7 +2973,7 @@ object MediaCodecHelper {
       }
       bo += blockAlign
     }
-    new GenericInternalRow(Array[Any](frames, rate, sum, sq, peak, zc, 4))
+    acc.row(frames, f.rate, 4)
   }
 
   /** Microsoft ADPCM adaptation table (the WAVE spec's 16-entry delta
@@ -3097,34 +2992,39 @@ object MediaCodecHelper {
     */
   private val MsMaxDelta = 1L << 24
 
-  /** (dOff, dataLen, rate, channels, blockAlign, numCoef, coefOff) for
-    * Microsoft ADPCM (WAVE codec 0x02, 4-bit signed nibbles). fmt must
-    * carry the full extension — wSamplesPerBlock, wNumCoef and the
-    * wNumCoef (iCoef1, iCoef2) int16 pairs the bitstream's bPredictor
-    * indexes select (an in-stream table, like DHT: the standard 7 pairs
-    * are what encoders write, but the DECLARED table is what decodes).
-    * Geometry honest-nulls: channels beyond stereo (the nibble
-    * interleave is only defined for 1–2), a declared wSamplesPerBlock
-    * that disagrees with `2 + 2·(blockAlign − 7·ch)/ch`, ragged data,
-    * a truncated coefficient table.
+  /** [[wavPcmStats]] for Microsoft ADPCM (WAVE codec 0x02, 4-bit signed
+    * nibbles). fmt must carry the full extension — wSamplesPerBlock,
+    * wNumCoef and the wNumCoef (iCoef1, iCoef2) int16 pairs the
+    * bitstream's bPredictor indexes select (an in-stream table, like DHT:
+    * the standard 7 pairs are what encoders write, but the DECLARED table
+    * is what decodes). Per block, the 7-byte-per-channel header
+    * (bPredictor bytes, then iDelta, iSamp1, iSamp2 int16 runs, each field
+    * grouped across channels) emits iSamp2 as frame 0 and iSamp1 as frame
+    * 1 — the OLDER sample first, the documented output order — then each
+    * SIGNED nibble advances the channel's (samp1, samp2, delta)
+    * recurrence: pred = trunc((samp1·c1 + samp2·c2)/256) + nib·delta,
+    * int16 clamp, delta = max(16, trunc(Adapt[u]·delta/256)). HIGH nibble
+    * first; for stereo each byte is one frame (high = channel 0). Every
+    * step is trunc-toward-zero integer arithmetic (Java `/` == DuckDB
+    * `//`), so the oracle replays the recurrence exactly. n_samples counts
+    * FRAMES; zero crossings chain over channel 0 across blocks; pcm_bits
+    * reports the storage depth 4, like the IMA path. Geometry
+    * honest-nulls: channels beyond stereo (the nibble interleave is only
+    * defined for 1–2), a declared wSamplesPerBlock that disagrees with
+    * `2 + 2·(blockAlign − 7·ch)/ch`, ragged data, a truncated coefficient
+    * table.
     */
-  private def msAdpcmLayout(bytes: Array[Byte]): Array[Int] = {
-    if (bytes == null) return null
-    val fmtOff = RiffWalkHelper.chunkDataOffset(bytes, 'f', 'm', 't', ' ')
-    val dataOff = RiffWalkHelper.chunkDataOffset(bytes, 'd', 'a', 't', 'a')
-    if (fmtOff < 0 || dataOff < 0) return null
-    val fo = fmtOff.toInt - 1
-    val dOff = dataOff.toInt - 1
-    if (fo + 16 > bytes.length || dOff > bytes.length) return null
-    if (leShort(bytes, fo) != 0x02) return null
-    val channels = leShort(bytes, fo + 2)
-    val rate = leInt(bytes, fo + 4)
-    val blockAlign = leShort(bytes, fo + 12)
-    if (leShort(bytes, fo + 14) != 4) return null // 4-bit nibbles only
+  def wavMsAdpcmStats(bytes: Array[Byte]): InternalRow =
+    wavMsAdpcmStats(bytes, wavFmt(bytes))
+
+  private def wavMsAdpcmStats(bytes: Array[Byte], f: WavFmt): InternalRow = {
+    if (f == null || f.codec != 0x02 || f.bits != 4) return null
+    val fo = f.fo; val dOff = f.dOff; val dataLen = f.dataLen
+    val fmtLen = f.fmtLen
+    val channels = f.channels; val blockAlign = f.blockAlign
     if (channels < 1 || channels > 2) return null
     val head = 7 * channels
     if (blockAlign <= head) return null
-    val fmtLen = leInt(bytes, fo - 4)
     // full extension required: cbSize, wSamplesPerBlock, wNumCoef, pairs
     if (fmtLen < 22 || fo + 22 > bytes.length) return null
     val cbSize = leShort(bytes, fo + 16)
@@ -3141,47 +3041,15 @@ object MediaCodecHelper {
     if (numCoef < 1 || cbSize < 4 + 4 * numCoef ||
         fmtLen < 22 + 4 * numCoef ||
         fo + 22 + 4 * numCoef > bytes.length) return null
-    val dataLen0 = leInt(bytes, dOff - 4)
-    val dataLen = math.min(dataLen0.toLong, (bytes.length - dOff).toLong).toInt
     if (dataLen <= 0 || dataLen % blockAlign != 0) return null
-    Array(dOff, dataLen, rate, channels, blockAlign, numCoef, fo + 22)
-  }
-
-  /** [[wavPcmStats]] for Microsoft ADPCM (codec 0x02): per block, the
-    * 7-byte-per-channel header (bPredictor bytes, then iDelta, iSamp1,
-    * iSamp2 int16 runs, each field grouped across channels) emits iSamp2
-    * as frame 0 and iSamp1 as frame 1 — the OLDER sample first, the
-    * documented output order — then each SIGNED nibble advances the
-    * channel's (samp1, samp2, delta) recurrence:
-    * pred = trunc((samp1·c1 + samp2·c2)/256) + nib·delta, int16 clamp,
-    * delta = max(16, trunc(Adapt[u]·delta/256)). HIGH nibble first; for
-    * stereo each byte is one frame (high = channel 0). Every step is
-    * trunc-toward-zero integer arithmetic (Java `/` == DuckDB `//`), so
-    * the oracle replays the recurrence exactly. n_samples counts FRAMES;
-    * zero crossings chain over channel 0 across blocks; pcm_bits reports
-    * the storage depth 4, like the IMA path.
-    */
-  def wavMsAdpcmStats(bytes: Array[Byte]): InternalRow = {
-    val lay = msAdpcmLayout(bytes)
-    if (lay == null) return null
-    val Array(dOff, dataLen, rate, channels, blockAlign, numCoef, coefOff) = lay
-    var sum = 0L; var sq = 0L; var peak = 0L; var zc = 0L
-    var prevNeg = false; var c0Seen = false; var frames = 0L
+    val coefOff = fo + 22
+    val acc = new WavAcc
+    var frames = 0L
     val s1 = new Array[Int](channels)
     val s2 = new Array[Int](channels)
     val delta = new Array[Long](channels)
     val c1 = new Array[Int](channels)
     val c2 = new Array[Int](channels)
-    def acc(v: Int, c: Int): Unit = {
-      sum += v
-      sq += v.toLong * v.toLong // |v| ≤ 2^15: no overflow before ~2^33 frames
-      val a = math.abs(v.toLong); if (a > peak) peak = a
-      if (c == 0) {
-        val neg = v < 0
-        if (c0Seen && neg != prevNeg) zc += 1
-        prevNeg = neg; c0Seen = true
-      }
-    }
     var bo = dOff
     while (bo < dOff + dataLen) {
       var c = 0
@@ -3196,8 +3064,8 @@ object MediaCodecHelper {
         c += 1
       }
       // header samples, older first: frame 0 = iSamp2, frame 1 = iSamp1
-      c = 0; while (c < channels) { acc(s2(c), c); c += 1 }
-      c = 0; while (c < channels) { acc(s1(c), c); c += 1 }
+      c = 0; while (c < channels) { acc.add(s2(c), c); c += 1 }
+      c = 0; while (c < channels) { acc.add(s1(c), c); c += 1 }
       frames += 2
       val nibBytes = blockAlign - 7 * channels
       var j = 0
@@ -3215,7 +3083,7 @@ object MediaCodecHelper {
           s2(ch) = s1(ch); s1(ch) = pred
           delta(ch) = math.max(16L, MsAdapt(u) * delta(ch) / 256)
           if (delta(ch) > MsMaxDelta) return null
-          acc(pred, ch)
+          acc.add(pred, ch)
           if (channels == 1 || half == 1) frames += 1
           half += 1
         }
@@ -3223,7 +3091,7 @@ object MediaCodecHelper {
       }
       bo += blockAlign
     }
-    new GenericInternalRow(Array[Any](frames, rate, sum, sq, peak, zc, 4))
+    acc.row(frames, f.rate, 4)
   }
 
   val WavPcmStatsType: StructType = StructType(Seq(
@@ -3244,7 +3112,7 @@ object MediaCodecHelper {
     */
   def wavFrameSample(bytes: Array[Byte], step: Int): Array[Byte] = {
     if (step <= 0) return null
-    val lay = pcmLayout(bytes)
+    val lay = pcmLayout(bytes, wavFmt(bytes))
     if (lay == null) return null
     val Array(dOff, n, rate, channels, bits, codec) = lay
     val bp = bits / 8
@@ -3294,320 +3162,107 @@ object MediaCodecHelper {
   }
 }
 
-/** PNG decode + channel statistics (real inflate + unfilter), null when the
-  * blob is outside the supported envelope.
+/** The one Catalyst expression behind every media helper: `helper(blob,
+  * args*)`, where `helper` is the fully qualified name of a static method
+  * of [[MediaCodecHelper]] or [[AviCodecHelper]] that takes the binary
+  * child plus the int literal `args` and returns a `dataType` value, or
+  * null when the blob is outside its envelope. Codegen emits one static
+  * call per value, so decode/resize/feature-extract stay inside
+  * whole-stage codegen and scale as a map over the binary column; the
+  * interpreted path invokes the same method reflectively. `name` is the
+  * prettyName, which also names an unaliased output column. The int
+  * arguments are not children: they print in plans but not in column
+  * names.
   */
-case class PngStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaCodecHelper.PngStatsType
+case class MediaCall(child: Expression, helper: String, name: String,
+                     args: Seq[Int], dataType: DataType) extends UnaryExpression {
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_png_stats"
+  override def prettyName: String = name
+  override protected def stringArgs: Iterator[Any] = Iterator(child) ++ args
+
+  @transient private lazy val method = {
+    val dot = helper.lastIndexOf('.')
+    Class.forName(helper.take(dot)).getMethod(helper.drop(dot + 1),
+      classOf[Array[Byte]] +: args.map(_ => classOf[Int]): _*)
+  }
+
   override def nullSafeEval(input: Any): Any =
-    MediaCodecHelper.pngStats(input.asInstanceOf[Array[Byte]])
+    try method.invoke(null, (input.asInstanceOf[AnyRef] +: args.map(Int.box)): _*)
+    catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
       s"""
-         |${ev.value} = graft.expr.MediaCodecHelper.pngStats($c);
+         |${ev.value} = $helper($c${args.map(a => s", $a").mkString});
          |${ev.isNull} = (${ev.value} == null);
        """.stripMargin
     })
-  override protected def withNewChildInternal(newChild: Expression): PngStats =
+
+  override protected def withNewChildInternal(newChild: Expression): MediaCall =
     copy(child = newChild)
 }
 
-/** Nearest-neighbor PNG resize (decode → integer-floor index map →
-  * re-encode); null when the input is not decodable.
+/** Every media helper as a [[MediaCall]], with its prettyName. The Column
+  * API (`ops.Multimodal`) and the SQL functions (`GraftExtensions`) both
+  * build their expressions here.
   */
-case class PngResizeNearest(child: Expression, dstW: Int, dstH: Int)
-    extends UnaryExpression {
-  require(dstW > 0 && dstH > 0, s"bad resize target ${dstW}x$dstH")
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_png_resize"
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecHelper.pngResizeNearest(input.asInstanceOf[Array[Byte]], dstW, dstH)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.MediaCodecHelper.pngResizeNearest($c, $dstW, $dstH);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): PngResizeNearest =
-    copy(child = newChild)
-}
+object MediaCall {
+  private val M = "graft.expr.MediaCodecHelper."
+  private val A = "graft.expr.AviCodecHelper."
+  import MediaCodecHelper.{GifAnimStatsType, GifMetaType, Jpeg12StatsType,
+    JpegLosslessStatsType, JpegMetaType, PngStatsType, WavPcmStatsType}
 
-/** JPEG frame-header metadata (width, height, components) via the
-  * bounded SOI/SOF marker walk; null for non-JPEG or malformed blobs.
-  */
-case class JpegMeta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaCodecHelper.JpegMetaType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_jpeg_meta"
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecHelper.jpegMeta(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.MediaCodecHelper.jpegMeta($c);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): JpegMeta =
-    copy(child = newChild)
-}
+  def pngStats(c: Expression): MediaCall =
+    MediaCall(c, M + "pngStats", "graft_png_stats", Nil, PngStatsType)
+  def png16Stats(c: Expression): MediaCall =
+    MediaCall(c, M + "png16Stats", "graft_png16_stats", Nil, PngStatsType)
+  def gifStats(c: Expression): MediaCall =
+    MediaCall(c, M + "gifStats", "graft_gif_stats", Nil, PngStatsType)
+  def jpegStats(c: Expression): MediaCall =
+    MediaCall(c, M + "jpegStats", "graft_jpeg_stats", Nil, PngStatsType)
+  def jpeg12Stats(c: Expression): MediaCall =
+    MediaCall(c, M + "jpeg12Stats", "graft_jpeg12_stats", Nil, Jpeg12StatsType)
+  def jpegLosslessStats(c: Expression): MediaCall =
+    MediaCall(c, M + "jpegLosslessStats", "graft_jpeg_lossless_stats", Nil,
+      JpegLosslessStatsType)
+  def jpegMeta(c: Expression): MediaCall =
+    MediaCall(c, M + "jpegMeta", "graft_jpeg_meta", Nil, JpegMetaType)
+  def gifMeta(c: Expression): MediaCall =
+    MediaCall(c, M + "gifMeta", "graft_gif_meta", Nil, GifMetaType)
+  def gifAnimStats(c: Expression): MediaCall =
+    MediaCall(c, M + "gifAnimStats", "graft_gif_anim_stats", Nil, GifAnimStatsType)
+  def wavPcmStats(c: Expression): MediaCall =
+    MediaCall(c, M + "wavPcmStats", "graft_wav_pcm_stats", Nil, WavPcmStatsType)
+  def aviMeta(c: Expression): MediaCall =
+    MediaCall(c, A + "aviMeta", "graft_avi_meta", Nil, AviCodecHelper.AviMetaType)
 
-/** WAV sample statistics (integer PCM 8/16/24/32-bit, G.711, float32/
-  * float64, extensible wrappers) through the bounded RIFF walk; null for
-  * blobs outside the audio envelope (ADPCM).
-  */
-case class WavPcmStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaCodecHelper.WavPcmStatsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_wav_pcm_stats"
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecHelper.wavPcmStats(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.MediaCodecHelper.wavPcmStats($c);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): WavPcmStats =
-    copy(child = newChild)
-}
+  private def resize(c: Expression, helper: String, name: String,
+                     w: Int, h: Int): MediaCall = {
+    require(w > 0 && h > 0, s"bad resize target ${w}x$h")
+    MediaCall(c, helper, name, Seq(w, h), BinaryType)
+  }
+  def pngResizeNearest(c: Expression, w: Int, h: Int): MediaCall =
+    resize(c, M + "pngResizeNearest", "graft_png_resize", w, h)
+  def png16ResizeNearest(c: Expression, w: Int, h: Int): MediaCall =
+    resize(c, M + "png16ResizeNearest", "graft_png16_resize", w, h)
+  def jpegResizeToPng(c: Expression, w: Int, h: Int): MediaCall =
+    resize(c, M + "jpegResizeToPng", "graft_jpeg_resize_png", w, h)
 
-/** Full baseline JPEG decode + channel statistics (Huffman + dequant +
-  * IDCT + upsample + YCbCr→RGB), null outside the baseline envelope.
-  */
-/** Decode a GIF (LZW + palette, optional interlace) and report raster
-  * statistics; null outside the envelope.
-  */
-case class GifStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaCodecHelper.PngStatsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_gif_stats"
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecHelper.gifStats(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.MediaCodecHelper.gifStats($c);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): GifStats =
-    copy(child = newChild)
-}
-
-/** 16-bit PNG sample statistics (gray16/RGB16/alpha variants, sequential
-  * or Adam7) at full precision — no truncated 8-bit raster; null outside
-  * the envelope.
-  */
-case class Png16Stats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaCodecHelper.PngStatsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_png16_stats"
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecHelper.png16Stats(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.MediaCodecHelper.png16Stats($c);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): Png16Stats =
-    copy(child = newChild)
-}
-
-/** 12-bit extended-sequential JPEG (SOF1) sample statistics at full
-  * precision — the DICOM/medical gray shape; null outside the envelope.
-  */
-case class Jpeg12Stats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaCodecHelper.Jpeg12StatsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_jpeg12_stats"
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecHelper.jpeg12Stats(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.MediaCodecHelper.jpeg12Stats($c);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): Jpeg12Stats =
-    copy(child = newChild)
-}
-
-/** Lossless-JPEG (SOF3, T.81 Annex H) sample statistics at full
-  * precision (2–16 bit) — like 16-bit PNG, no truncated raster is
-  * fabricated; null outside the envelope.
-  */
-case class JpegLosslessStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaCodecHelper.JpegLosslessStatsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_jpeg_lossless_stats"
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecHelper.jpegLosslessStats(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.MediaCodecHelper.jpegLosslessStats($c);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): JpegLosslessStats =
-    copy(child = newChild)
-}
-
-/** Nearest-neighbor resize of a 16-bit PNG re-encoded at depth 16 (whole
-  * big-endian sample pairs copied — full precision survives); null
-  * outside the 16-bit envelope.
-  */
-case class Png16ResizeNearest(child: Expression, dstW: Int, dstH: Int)
-    extends UnaryExpression {
-  require(dstW > 0 && dstH > 0, s"bad resize target ${dstW}x$dstH")
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_png16_resize"
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecHelper.png16ResizeNearest(input.asInstanceOf[Array[Byte]], dstW, dstH)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.MediaCodecHelper.png16ResizeNearest($c, $dstW, $dstH);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): Png16ResizeNearest =
-    copy(child = newChild)
-}
-
-/** Multi-frame GIF compositing decode: per-frame opaque-canvas statistics
-  * with GCE disposal methods 0–3 and transparency honored; null outside
-  * the animation envelope.
-  */
-case class GifAnimStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaCodecHelper.GifAnimStatsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_gif_anim_stats"
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecHelper.gifAnimStats(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.MediaCodecHelper.gifAnimStats($c);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): GifAnimStats =
-    copy(child = newChild)
-}
-
-/** Composited frame `frame` of an animated GIF as an RGBA PNG (alpha 0 on
-  * transparent canvas pixels) — the GIF single-frame extract; null
-  * outside the animation envelope or past the last frame.
-  */
-case class GifFramePng(child: Expression, frame: Int)
-    extends UnaryExpression {
-  require(frame >= 0, s"bad frame index $frame")
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_gif_frame_png"
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecHelper.gifFramePng(input.asInstanceOf[Array[Byte]], frame)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.MediaCodecHelper.gifFramePng($c, $frame);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): GifFramePng =
-    copy(child = newChild)
-}
-
-/** GIF container metadata (logical-screen dims + image-descriptor count
-  * via the bounded sub-block walk — animation length without decode);
-  * null for non-GIF / malformed / imageless streams.
-  */
-case class GifMeta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaCodecHelper.GifMetaType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_gif_meta"
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecHelper.gifMeta(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.MediaCodecHelper.gifMeta($c);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): GifMeta =
-    copy(child = newChild)
-}
-
-case class JpegStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaCodecHelper.PngStatsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_jpeg_stats"
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecHelper.jpegStats(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.MediaCodecHelper.jpegStats($c);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): JpegStats =
-    copy(child = newChild)
-}
-
-/** JPEG → nearest-neighbor resize → PNG transcode (decode is the full
-  * baseline path; PNG is the lossless landing format); null when the
-  * input is not a decodable baseline JPEG.
-  */
-case class JpegResizeToPng(child: Expression, dstW: Int, dstH: Int)
-    extends UnaryExpression {
-  require(dstW > 0 && dstH > 0, s"bad resize target ${dstW}x$dstH")
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_jpeg_resize_png"
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecHelper.jpegResizeToPng(input.asInstanceOf[Array[Byte]], dstW, dstH)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.MediaCodecHelper.jpegResizeToPng($c, $dstW, $dstH);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): JpegResizeToPng =
-    copy(child = newChild)
-}
-
-/** Every-`step`-th-frame decimation of an integer-PCM WAV, re-encoded
-  * as a canonical WAV at the source depth; null for out-of-envelope audio
-  * blobs.
-  */
-case class WavFrameSample(child: Expression, step: Int) extends UnaryExpression {
-  require(step > 0, s"bad frame-sample step $step")
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_wav_frame_sample"
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecHelper.wavFrameSample(input.asInstanceOf[Array[Byte]], step)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.MediaCodecHelper.wavFrameSample($c, $step);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): WavFrameSample =
-    copy(child = newChild)
+  def gifFramePng(c: Expression, frame: Int): MediaCall = {
+    require(frame >= 0, s"bad frame index $frame")
+    MediaCall(c, M + "gifFramePng", "graft_gif_frame_png", Seq(frame), BinaryType)
+  }
+  def wavFrameSample(c: Expression, step: Int): MediaCall = {
+    require(step > 0, s"bad frame-sample step $step")
+    MediaCall(c, M + "wavFrameSample", "graft_wav_frame_sample", Seq(step), BinaryType)
+  }
+  def mjpegStats(c: Expression, step: Int): MediaCall = {
+    require(step > 0, s"bad frame-sample step $step")
+    MediaCall(c, A + "mjpegStats", "graft_mjpeg_stats", Seq(step),
+      AviCodecHelper.MjpegStatsType)
+  }
+  def mjpegFrame(c: Expression, idx: Int): MediaCall = {
+    require(idx >= 0, s"bad frame index $idx")
+    MediaCall(c, A + "mjpegFrame", "graft_mjpeg_frame", Seq(idx), BinaryType)
+  }
 }

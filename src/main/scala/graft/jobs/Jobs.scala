@@ -121,14 +121,14 @@ final class JobRunner(
         x.asInstanceOf[Map[String, Any]].map { case (k, v) => k -> v.toString }
       val req = JobRequest(setup("method").toString, setup("version").toString,
         smap(setup("options")), smap(setup("inputs")))
+      // a post.json that does not parse (a torn write, a truncated copy)
+      // leaves the job unfinished, like a missing one: it never matches,
+      // and the same request rebuilds under a new job id
       val postP = d.resolve("post.json")
-      val (outputs, finished) =
-        if (Files.exists(postP)) {
-          val post = JsonLite.parse(Files.readString(postP))
-            .asInstanceOf[Map[String, Any]]
-          (smap(post("outputs")), true)
-        } else (Map.empty[String, String], false)
-      JobRecord(d.getFileName.toString, req, outputs, finished)
+      val outputs = scala.util.Try(smap(JsonLite.parse(Files.readString(postP))
+        .asInstanceOf[Map[String, Any]]("outputs"))).toOption
+      JobRecord(d.getFileName.toString, req,
+        outputs.getOrElse(Map.empty), finished = outputs.isDefined)
       // numeric sort: lexicographic jobid order breaks past j-9999 (the
       // %04d width overflows and j-10000 would sort before j-9999); a
       // non-canonical dir name (j-0007.bak with a setup.json) must not
@@ -214,7 +214,7 @@ final class JobRunner(
       s""""options":${jmap(req.options)},"inputs":${jmap(req.inputs)}}""")
     val ctx = new JobContext(store, jobid, req, dir)
     val outputs = body(ctx)
-    Files.writeString(dir.resolve("post.json"),
+    SnapshotStore.writeAtomically(dir.resolve("post.json"),
       s"""{"outputs":${jmap(outputs)}}""")
     db = JobRecord(jobid, req, outputs, finished = true) :: db
     JobResult(jobid, cached = false, outputs)

@@ -2443,14 +2443,14 @@ object Multimodal {
     hex(substring(bin, 9, 4)) === "41564920"      // AVI_
 
   /** JPEG frame-header metadata via the codegen'd SOI/SOF marker walk
-    * (graft.expr.JpegMeta): struct(width, height, components), null for
+    * (graft.expr.MediaCall.jpegMeta): struct(width, height, components), null for
     * non-JPEG/malformed blobs. Cheaper than [[decodeJpeg]] (no entropy
     * decode) and wider (covers arithmetic/12-bit headers pixel decode
     * honestly nulls on) — the metadata-only dedup/gating path.
     */
   def jpegMeta(bin: Column): Column =
     org.apache.spark.sql.GraftBridge.column(
-      graft.expr.JpegMeta(org.apache.spark.sql.GraftBridge.expression(bin)))
+      graft.expr.MediaCall.jpegMeta(org.apache.spark.sql.GraftBridge.expression(bin)))
 
   def jpegWidth(bin: Column): Column =
     jpegMeta(bin).getField("width").cast("long")
@@ -2495,13 +2495,13 @@ object Multimodal {
     * outside the JVM-decodable envelope (route those to [[decodeImageStub]]
     * / an external codec).
     */
-  def decodeImage(bin: Column): Column = bridge(graft.expr.PngStats(ex(bin)))
+  def decodeImage(bin: Column): Column = bridge(graft.expr.MediaCall.pngStats(ex(bin)))
 
   /** REAL nearest-neighbor resize: decode → integer-floor index map →
     * re-encode as PNG. Null when not decodable.
     */
   def imageResize(bin: Column, w: Int, h: Int): Column =
-    bridge(graft.expr.PngResizeNearest(ex(bin), w, h))
+    bridge(graft.expr.MediaCall.pngResizeNearest(ex(bin), w, h))
 
   /** REAL baseline JPEG decode (Huffman + dequant + IDCT + 4:2:0/4:2:2
     * chroma upsample + integer YCbCr→RGB — ITU-T T.81, pure JVM):
@@ -2514,19 +2514,19 @@ object Multimodal {
     * composes here). Null for arithmetic-coded / 12-bit / lossless
     * streams.
     */
-  def decodeJpeg(bin: Column): Column = bridge(graft.expr.JpegStats(ex(bin)))
+  def decodeJpeg(bin: Column): Column = bridge(graft.expr.MediaCall.jpegStats(ex(bin)))
 
   /** Full GIF decode statistics (LZW + palette + optional interlace):
     * struct(width, height, channels, px_sum, px_min, px_max); null
     * outside the envelope. Codegen'd scan-side map like [[decodeJpeg]].
     */
-  def decodeGif(bin: Column): Column = bridge(graft.expr.GifStats(ex(bin)))
+  def decodeGif(bin: Column): Column = bridge(graft.expr.MediaCall.gifStats(ex(bin)))
 
   /** GIF container metadata: struct(width, height, n_frames) — animation
     * length from the bounded sub-block walk, no pixel decode. Null for
     * non-GIF / malformed / imageless blobs.
     */
-  def gifMeta(bin: Column): Column = bridge(graft.expr.GifMeta(ex(bin)))
+  def gifMeta(bin: Column): Column = bridge(graft.expr.MediaCall.gifMeta(ex(bin)))
 
   /** 16-bit PNG sample statistics at full precision (gray16/RGB16/alpha
     * variants, sequential or Adam7): struct(width, height, channels,
@@ -2534,7 +2534,7 @@ object Multimodal {
     * truncated 8-bit raster is fabricated. Null outside the envelope.
     */
   def decodeImage16(bin: Column): Column =
-    bridge(graft.expr.Png16Stats(ex(bin)))
+    bridge(graft.expr.MediaCall.png16Stats(ex(bin)))
 
   /** Lossless-JPEG (SOF3, T.81 Annex H) sample statistics at FULL
     * precision (2–16 bit — the DNG/raw-camera and medical-imaging
@@ -2545,7 +2545,7 @@ object Multimodal {
     * predictors 1–7, point transform, no restarts).
     */
   def jpegLosslessFeatures(bin: Column): Column =
-    bridge(graft.expr.JpegLosslessStats(ex(bin)))
+    bridge(graft.expr.MediaCall.jpegLosslessStats(ex(bin)))
 
   /** 12-bit extended-sequential JPEG (SOF1) sample statistics at FULL
     * precision — the DICOM/medical gray shape: struct(width, height,
@@ -2554,7 +2554,7 @@ object Multimodal {
     * 8- or 16-bit quant tables, restart markers).
     */
   def jpeg12Features(bin: Column): Column =
-    bridge(graft.expr.Jpeg12Stats(ex(bin)))
+    bridge(graft.expr.MediaCall.jpeg12Stats(ex(bin)))
 
   /** 16-bit PNG nearest-neighbor resize re-encoded AT DEPTH 16 — the
     * scientific/depth-image raster path: whole big-endian sample pairs
@@ -2563,7 +2563,7 @@ object Multimodal {
     * 16-bit envelope.
     */
   def png16Resize(bin: Column, w: Int, h: Int): Column =
-    bridge(graft.expr.Png16ResizeNearest(ex(bin), w, h))
+    bridge(graft.expr.MediaCall.png16ResizeNearest(ex(bin), w, h))
 
   /** Multi-frame GIF COMPOSITING statistics: struct(width, height,
     * frames: array of struct(px_sum, opaque, px_min, px_max)) — each
@@ -2575,7 +2575,7 @@ object Multimodal {
     * the animation envelope ([[graft.expr.MediaCodecHelper.gifAnimStats]]).
     */
   def gifAnimStats(bin: Column): Column =
-    bridge(graft.expr.GifAnimStats(ex(bin)))
+    bridge(graft.expr.MediaCall.gifAnimStats(ex(bin)))
 
   /** Composited animation frame `frame` extracted as an RGBA PNG (alpha
     * 0 where the canvas is transparent) — the GIF analogue of the MJPEG
@@ -2584,7 +2584,7 @@ object Multimodal {
     * outside the animation envelope or past the last frame.
     */
   def gifFramePng(bin: Column, frame: Int): Column =
-    bridge(graft.expr.GifFramePng(ex(bin), frame))
+    bridge(graft.expr.MediaCall.gifFramePng(ex(bin), frame))
 
   /** REAL JPEG → PNG transcode with nearest-neighbor resize: full
     * decode ([[decodeJpeg]]'s envelope, DHT-less frames included via the
@@ -2593,7 +2593,7 @@ object Multimodal {
     * a decodable JPEG.
     */
   def jpegResizePng(bin: Column, w: Int, h: Int): Column =
-    bridge(graft.expr.JpegResizeToPng(ex(bin), w, h))
+    bridge(graft.expr.MediaCall.jpegResizeToPng(ex(bin), w, h))
 
   /** REAL audio feature extraction (integer PCM at 8/16/24/32-bit,
     * G.711 µ-law/A-law, IEEE float32 AND float64 on the exact
@@ -2607,20 +2607,20 @@ object Multimodal {
     * zero-crossing count. Null for blobs outside the audio envelope
     * (compressed codecs beyond the two ADPCM families).
     */
-  def audioFeatures(bin: Column): Column = bridge(graft.expr.WavPcmStats(ex(bin)))
+  def audioFeatures(bin: Column): Column = bridge(graft.expr.MediaCall.wavPcmStats(ex(bin)))
 
   /** REAL frame-sampling: keep every `step`-th PCM frame, re-encoded as a
     * canonical WAV — the audio analogue of video frame thumbnailing.
     */
   def audioFrameSample(bin: Column, step: Int): Column =
-    bridge(graft.expr.WavFrameSample(ex(bin), step))
+    bridge(graft.expr.MediaCall.wavFrameSample(ex(bin), step))
 
   /** AVI container metadata via the bounded RIFF list walk
     * (graft.expr.AviCodecHelper): struct(width, height, n_frames,
     * usec_per_frame, handler), with n_frames COUNTED from the movi chunk
     * walk. Null for non-AVI blobs.
     */
-  def videoMeta(bin: Column): Column = bridge(graft.expr.AviMeta(ex(bin)))
+  def videoMeta(bin: Column): Column = bridge(graft.expr.MediaCall.aviMeta(ex(bin)))
 
   /** REAL video frame-sample decode for MJPEG AVIs: every `step`-th movi
     * frame decoded through the full baseline JPEG path, aggregated to
@@ -2628,7 +2628,7 @@ object Multimodal {
     * Frames outside the JPEG envelope count as sampled-not-decoded.
     */
   def videoFrameStats(bin: Column, step: Int): Column =
-    bridge(graft.expr.MjpegStats(ex(bin), step))
+    bridge(graft.expr.MediaCall.mjpegStats(ex(bin), step))
 
   /** The `idx`-th video frame's raw bytes — for MJPEG, a self-contained
     * JPEG that composes with [[decodeJpeg]]/[[jpegResizePng]] (video →
@@ -2638,7 +2638,7 @@ object Multimodal {
     * [[videoFrameStats]] decodes under.
     */
   def videoFrame(bin: Column, idx: Int): Column =
-    bridge(graft.expr.MjpegFrame(ex(bin), idx))
+    bridge(graft.expr.MediaCall.mjpegFrame(ex(bin), idx))
 
   /** STUB — the decode seam for INTER-FRAME video codecs (H.264/HEVC/
     * VP9/AV1), the one media family that genuinely needs an external

@@ -70,7 +70,7 @@ object MediaPack {
         col("jpg_h"), col("jpg_ch"), col("gif_type"), col("img_dups"))
   }
 
-  /** REAL decode round-trip: PNG pixels via inflate+unfilter (PngStats),
+  /** REAL decode round-trip: PNG pixels via inflate+unfilter (pngStats),
     * nearest-neighbor resize re-encoded and decoded AGAIN (two decodes +
     * one encode round-trip), WAV PCM stats via the RIFF walk, and
     * every-4th-frame audio decimation re-encoded and re-analyzed. Every

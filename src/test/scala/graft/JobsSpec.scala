@@ -133,4 +133,18 @@ class JobsSpec extends AnyFunSuite {
     store.write(spark.range(3).toDF("k"), "rt", slices = 1, caption = hostile)
     assert(new SnapshotStore(spark, s"$root/store").get("rt").meta.caption == hostile)
   }
+
+  test("a truncated post.json leaves its job unfinished, not the workdir unopenable") {
+    val root = tmpDir("jobs_torn_post")
+    val store = new SnapshotStore(spark, s"$root/store")
+    val req = JobRequest("m", "1", Map("o" -> "1"))
+    val a = new JobRunner(store, s"$root/jobs").build(req) { _ => Map("out" -> "v") }
+    val post = java.nio.file.Paths.get(s"$root/jobs", a.jobid, "post.json")
+    val text = java.nio.file.Files.readString(post)
+    java.nio.file.Files.writeString(post, text.take(text.length / 2))
+    val r = new JobRunner(store, s"$root/jobs")
+    assert(r.matchExact(req).isEmpty)
+    val b = r.build(req) { _ => Map("out" -> "w") }
+    assert(!b.cached && b.jobid != a.jobid && b.output("out") == "w")
+  }
 }

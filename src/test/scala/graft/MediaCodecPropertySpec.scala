@@ -157,5 +157,30 @@ class MediaCodecPropertySpec extends AnyFunSuite {
       if (row != null)
         assert(row.getInt(2) <= row.getInt(1) && row.getInt(1) <= row.getInt(0))
     }
+    // the same mutations through the GIF block walk, the PNG chunk walk
+    // and the WAV header read: every entry point is total on every
+    // container, and mutants still decode often enough to exercise them
+    val containers: Seq[Long => Array[Byte]] = Seq(gifFixtureBytes,
+      gifAnimFixtureBytes, gifComposeFixtureBytes,
+      palPngBytes, palAlphaPngBytes, grayAlphaPngBytes, rgbaPngBytes,
+      id => rgbPngBytes(5 + id.toInt, 4),
+      png1GrayBytes, png2GrayBytes, png4GrayKeyBytes, png4PaletteBytes,
+      gray16PngBytes, rgb16PngBytes, gray16KeyPngBytes, rgb16KeyPngBytes,
+      id => wavBytesWithList(8000, 40 + id.toInt), wav8Bytes, wav24Bytes,
+      wav32Bytes, wavUlawBytes, wavAlawBytes, wavFloatFixtureBytes,
+      wavFloat64FixtureBytes, wavExtPcmFixtureBytes, wavExtFloatFixtureBytes,
+      wavAdpcmMonoBytes, wavAdpcmStereoBytes, wavMsAdpcmMonoBytes,
+      wavMsAdpcmStereoBytes)
+    var nonNull = 0
+    for ((gen, fi) <- containers.zipWithIndex; id <- 0L until 6L;
+         m <- mutants(gen(id), 50000L + fi * 1000L + id)) {
+      val results = Seq[AnyRef](MediaCodecHelper.decodeGif(m),
+        MediaCodecHelper.gifMeta(m), MediaCodecHelper.gifAnimStats(m),
+        MediaCodecHelper.gifFramePng(m, 1), MediaCodecHelper.decodePng(m),
+        MediaCodecHelper.decodePng16(m), MediaCodecHelper.wavPcmStats(m),
+        MediaCodecHelper.wavFrameSample(m, 3))
+      nonNull += results.count(_ != null)
+    }
+    assert(nonNull > 3000, s"only $nonNull mutant results decoded")
   }
 }

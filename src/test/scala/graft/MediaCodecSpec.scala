@@ -1076,6 +1076,17 @@ class MediaCodecSpec extends AnyFunSuite {
       assert(r.getLong(8) == kept.length.toLong)
       assert(r.getLong(9) == kept.map(i => ((i % 256) * 128 - 16384).toLong).sum)
     }
+    // an unaliased output is named after the prettyName alone (the int
+    // arguments are not children), and the interpreted path calls the
+    // same helper as codegen
+    assert(df.select(Multimodal.imageResize(col("img"), 8, 8)).columns.toSeq ==
+      Seq("graft_png_resize(img)"))
+    val png = Multimodal.pngBytes(16, 9)
+    val lit = org.apache.spark.sql.catalyst.expressions.Literal(png)
+    assert(graft.expr.MediaCall.pngResizeNearest(lit, 8, 8).eval()
+      .asInstanceOf[Array[Byte]].toSeq ==
+      MediaCodecHelper.pngResizeNearest(png, 8, 8).toSeq)
+    assert(graft.expr.MediaCall.pngStats(lit).eval() == MediaCodecHelper.pngStats(png))
   }
 
   // Under AQE, EnsureRequirements only inserts exchanges at execution
@@ -1163,6 +1174,44 @@ class MediaCodecSpec extends AnyFunSuite {
     // interlace flag set but the stream is sequential-sized: the Adam7
     // pass layout expects more filtered bytes than the stream holds
     assert(MediaCodecHelper.decodePng(mutated(28, 1)) == null, "size mismatch")
+  }
+
+  test("PNG: IHDR is the first chunk and appears exactly once, 8- and 16-bit") {
+    def beInt(b: Array[Byte], o: Int) = java.nio.ByteBuffer.wrap(b, o, 4).getInt
+    // (tag, whole chunk) for every chunk after the signature
+    def chunks(b: Array[Byte]): Seq[(String, Array[Byte])] = {
+      val out = Seq.newBuilder[(String, Array[Byte])]
+      var off = 8
+      while (off < b.length) {
+        val len = beInt(b, off)
+        out += new String(b, off + 4, 4, "US-ASCII") -> b.slice(off, off + 12 + len)
+        off += 12 + len
+      }
+      out.result()
+    }
+    def png(cs: Seq[(String, Array[Byte])]) = Multimodal.pngBytes(1, 1).take(8) ++ cs.flatMap(_._2)
+    val text = {
+      val tagged = "tEXtComment\u0000first".getBytes("ISO-8859-1")
+      val crc = new java.util.zip.CRC32(); crc.update(tagged)
+      java.nio.ByteBuffer.allocate(8 + tagged.length).putInt(tagged.length - 4)
+        .put(tagged).putInt(crc.getValue.toInt).array()
+    }
+    val sample16 = (x: Int, y: Int, _: Int) => x * 4099 + y * 257
+    for ((decode, big, small) <- Seq(
+        (MediaCodecHelper.decodePng _, Multimodal.pngBytes(8, 8), Multimodal.pngBytes(4, 4)),
+        (MediaCodecHelper.decodePng16 _,
+          Multimodal.png16Bytes(8, 8, 0, interlaced = false, sample16),
+          Multimodal.png16Bytes(4, 4, 0, interlaced = false, sample16)))) {
+      val r = decode(big)
+      assert(r != null && r.width == 8 && r.height == 8)
+      // sig | IHDR 8x8 | IDAT | IHDR 4x4 | IDAT | IEND: a second IHDR
+      // must not reset the geometry into a 4x4 decode
+      val (head, iend) = chunks(big).span(_._1 != "IEND")
+      val second = chunks(small).filter(c => c._1 == "IHDR" || c._1 == "IDAT")
+      assert(decode(png(head ++ second ++ iend)) == null, "second IHDR")
+      // an ancillary chunk ahead of IHDR: IHDR must come first
+      assert(decode(png(("tEXt", text) +: chunks(big))) == null, "chunk before IHDR")
+    }
   }
 
   test("palette / alpha / RGBA PNGs decode to the exact fixture formulas") {

@@ -419,4 +419,18 @@ class SnapshotSpec extends AnyFunSuite {
     assert(c.minOf("f64").contains("0.0"), s"got ${c.minOf("f64")}")
     assert(c.maxOf("f64").contains("Infinity"), s"got ${c.maxOf("f64")}")
   }
+
+  test("a failed rewrite leaves no snapshot, not the old meta.json over new data") {
+    val root = tmpDir("snap_failed_rewrite")
+    val store = new SnapshotStore(spark, root)
+    store.write(spark.range(10).toDF("k"), "s", slices = 1)
+    assert(store.exists("s"))
+    val boom = udf { (k: Long) =>
+      if (k >= 0) throw new IllegalStateException("task failure"); k
+    }
+    intercept[Exception](store.write(
+      spark.range(10).toDF("k").select(boom(col("k")).as("k")), "s", slices = 1))
+    assert(!store.exists("s"))
+    assert(!new SnapshotStore(spark, root).exists("s"))
+  }
 }
