@@ -1,8 +1,11 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, Path}
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 /** Column-BY-NAME helper: `functions.col(name)` PARSES its argument
@@ -91,9 +94,10 @@ final case class Snapshot(meta: SnapshotMeta, dir: String) {
   * Scale note: the sidecar holds only O(columns) metadata; data goes through
   * `DataFrameWriter.parquet`, so a snapshot written from a 1000-executor
   * cluster is just a normal distributed Parquet write. The line count and
-  * zone-map min/max come from a second Spark job after the write, an agg
-  * that re-evaluates `df` from its source; they enable driver-side chain
-  * pruning before any scan is planned.
+  * zone-map min/max are observed on the write plan (`Dataset.observe`), so
+  * one Spark job writes the rows and counts them as they pass, and `df` is
+  * evaluated once; they let a chain walk skip whole snapshots before any
+  * scan is planned.
   *
   * `meta.json` is the commit record: a snapshot exists exactly when its
   * `meta.json` does, and every writer publishes it last, atomically
@@ -105,6 +109,12 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
   private def dirOf(name: String): String = s"$root/$name"
 
   /** Write `df` as snapshot `name`.
+    *
+    * One Spark job: the line count and the zone maps are observed on the
+    * write plan, so every row is read, typed and routed once, and the
+    * job that writes the files also counts them. The metrics arrive on
+    * Spark's listener bus after the write returns; if they do not arrive
+    * in time the write fails and `meta.json` is not published.
     *
     * @param hashlabel   if set, rows are hash-partitioned on this column
     *                    (reference: SipHash mod slices, dsutilmodule.c:273-281;
@@ -138,34 +148,8 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
       case Some(h) if !preRouted => df.repartition(n, Cols.q(h))
       case _                     => df
     }
-    val dir = dirOf(name)
-    val dataDir = s"$dir/data"
-    // A rewrite un-publishes the old snapshot before touching its data, so
-    // a write that fails part-way leaves no snapshot rather than the old
-    // meta.json (line count, zone maps) over new partial data.
-    Files.deleteIfExists(Paths.get(dir, "meta.json"))
-    metaCache.remove(name)
-    // Drop any stale bucket-table registration for this data dir (rewrites).
-    spark.sql(s"DROP TABLE IF EXISTS ${SnapshotStore.bucketTable(dataDir)}")
-    hashlabel match {
-      case Some(h) =>
-        // Hashed snapshots are written as a BUCKETED datasource table so the
-        // read side recovers HashPartitioning(h, n): bucket placement is
-        // HashPartitioning.partitionIdExpression = pmod(murmur3(h), n) —
-        // bit-identical to the repartition above, so each write task holds
-        // exactly one bucket and emits one file. A downstream groupBy/join
-        // on the hashlabel then plans NO Exchange — at 100 TB that is a full
-        // shuffle of the largest table saved (the reference gets the same
-        // effect from its sliced-by-hashlabel layout, dataset.py:58).
-        val p = new org.apache.hadoop.fs.Path(dataDir)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(p, true)
-        routed.write.format("parquet").option("path", dataDir)
-          .bucketBy(n, h).saveAsTable(SnapshotStore.bucketTable(dataDir))
-      case None =>
-        routed.write.mode("overwrite").parquet(dataDir)
-    }
-    // One agg pass for lines + zone maps (comparable, non-complex types only).
+    // Lines + zone maps (comparable, non-complex types only), observed on
+    // the rows the write consumes.
     val comparable = df.schema.fields.filter { f =>
       f.dataType.typeName match {
         case "binary" | "array" | "map" | "struct" => false
@@ -194,7 +178,36 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
         }
       } else Nil
     }.toSeq
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val obs = Observation()
+    val observed = routed.observe(obs, aggs.head, aggs.tail: _*)
+    val dir = dirOf(name)
+    val dataDir = s"$dir/data"
+    // A rewrite un-publishes the old snapshot before touching its data, so
+    // a write that fails part-way leaves no snapshot rather than the old
+    // meta.json (line count, zone maps) over new partial data.
+    Files.deleteIfExists(Paths.get(dir, "meta.json"))
+    metaCache.remove(name)
+    // Drop any stale bucket-table registration for this data dir (rewrites).
+    spark.sql(s"DROP TABLE IF EXISTS ${SnapshotStore.bucketTable(dataDir)}")
+    hashlabel match {
+      case Some(h) =>
+        // Hashed snapshots are written as a BUCKETED datasource table so the
+        // read side recovers HashPartitioning(h, n): bucket placement is
+        // HashPartitioning.partitionIdExpression = pmod(murmur3(h), n) —
+        // bit-identical to the repartition above, so each write task holds
+        // exactly one bucket and emits one file. A downstream groupBy/join
+        // on the hashlabel then plans NO Exchange — at 100 TB that is a full
+        // shuffle of the largest table saved (the reference gets the same
+        // effect from its sliced-by-hashlabel layout, dataset.py:58).
+        val p = new org.apache.hadoop.fs.Path(dataDir)
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        fs.delete(p, true)
+        observed.write.format("parquet").option("path", dataDir)
+          .bucketBy(n, h).saveAsTable(SnapshotStore.bucketTable(dataDir))
+      case None =>
+        observed.write.mode("overwrite").parquet(dataDir)
+    }
+    val row = SnapshotStore.observedRow(obs, name)
     val lines = row.getLong(0)
     val mm: Map[String, (Option[String], Option[String])] =
       if (zoneMaps)
@@ -254,7 +267,6 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
     * partition-monotone so the ordering is the write ordering).
     */
   def withRowId(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val schema = StructType(df.schema.fields :+ StructField(RowId, LongType, false))
     val rdd = df.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
@@ -690,6 +702,23 @@ object SnapshotStore {
       Files.move(tmp, path, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     } finally Files.deleteIfExists(tmp)
   }
+
+  /** How long a finished write waits for its observed metrics. */
+  private val ObservedWait = 60.seconds
+
+  /** The metrics `obs` observed on snapshot `name`'s write. Spark completes
+    * them from a QueryExecutionListener on the asynchronous listener bus,
+    * so they can land after the write returns: wait for them a bounded
+    * time, never forever (`Observation.get` would block forever if they
+    * never came).
+    */
+  private def observedRow(obs: Observation, name: String): Row =
+    try Await.result(obs.future, ObservedWait)
+    catch { case e: TimeoutException =>
+      throw new IllegalStateException(s"snapshot '$name': the write finished " +
+        s"but its line count and zone maps did not arrive within $ObservedWait; " +
+        "the snapshot is not published", e)
+    }
 
   /** Catalog table name for a hashed snapshot's bucketed data directory.
     * Keyed by the data dir (not the snapshot name) so metadata-only views

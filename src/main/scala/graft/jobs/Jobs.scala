@@ -114,21 +114,27 @@ final class JobRunner(
   private def loadAll(): List[JobRecord] = {
     val dirs = listDir(Paths.get(root))(
       _.filter(p => Files.exists(p.resolve("setup.json"))).toSeq)
-    dirs.map { d =>
-      val setup = JsonLite.parse(Files.readString(d.resolve("setup.json")))
-        .asInstanceOf[Map[String, Any]]
-      def smap(x: Any): Map[String, String] =
-        x.asInstanceOf[Map[String, Any]].map { case (k, v) => k -> v.toString }
-      val req = JobRequest(setup("method").toString, setup("version").toString,
-        smap(setup("options")), smap(setup("inputs")))
-      // a post.json that does not parse (a torn write, a truncated copy)
-      // leaves the job unfinished, like a missing one: it never matches,
-      // and the same request rebuilds under a new job id
-      val postP = d.resolve("post.json")
-      val outputs = scala.util.Try(smap(JsonLite.parse(Files.readString(postP))
-        .asInstanceOf[Map[String, Any]]("outputs"))).toOption
-      JobRecord(d.getFileName.toString, req,
-        outputs.getOrElse(Map.empty), finished = outputs.isDefined)
+    def smap(x: Any): Map[String, String] =
+      x.asInstanceOf[Map[String, Any]].map { case (k, v) => k -> v.toString }
+    // a setup.json or post.json that does not parse (a torn write, a
+    // truncated copy) must not make the whole jobs root unopenable: a job
+    // without a readable request is left out (allocate still counts its
+    // id, so the id is never reused), one without readable outputs is
+    // unfinished — neither ever matches, and the same request rebuilds
+    // under a new job id
+    dirs.flatMap { d =>
+      scala.util.Try {
+        val setup = JsonLite.parse(Files.readString(d.resolve("setup.json")))
+          .asInstanceOf[Map[String, Any]]
+        JobRequest(setup("method").toString, setup("version").toString,
+          smap(setup("options")), smap(setup("inputs")))
+      }.toOption.map { req =>
+        val outputs = scala.util.Try(smap(JsonLite.parse(
+          Files.readString(d.resolve("post.json")))
+          .asInstanceOf[Map[String, Any]]("outputs"))).toOption
+        JobRecord(d.getFileName.toString, req,
+          outputs.getOrElse(Map.empty), finished = outputs.isDefined)
+      }
       // numeric sort: lexicographic jobid order breaks past j-9999 (the
       // %04d width overflows and j-10000 would sort before j-9999); a
       // non-canonical dir name (j-0007.bak with a setup.json) must not
@@ -209,7 +215,7 @@ final class JobRunner(
     val jobid = allocate()
     val dir = jobDir(jobid)
     Files.createDirectories(dir)
-    Files.writeString(dir.resolve("setup.json"),
+    SnapshotStore.writeAtomically(dir.resolve("setup.json"),
       s"""{"method":${quote(req.method)},"version":${quote(req.version)},""" +
       s""""options":${jmap(req.options)},"inputs":${jmap(req.inputs)}}""")
     val ctx = new JobContext(store, jobid, req, dir)

@@ -18,6 +18,9 @@ import scala.util.control.NonFatal
   * Building a query's DataFrame may run its memoized fixture jobs (same
   * as Verify); a static explain plans without executing the query.
   *
+  * Every dump is [[mask]]ed, so two checkouts of the same code dump the
+  * same text whether their fixture caches were warm or cold.
+  *
   * Exits non-zero when any query failed to dump (ADVICE r20: a silent
   * partial dump set reads as "no plan change" to a diff harness), and
   * catches NonFatal only so OOM/interrupt propagate.
@@ -45,8 +48,8 @@ object PlanDump {
         // Executing through df's own QueryExecution (not a write's) is
         // what makes the SAME plan object adaptive-final for the dump.
         if (exec) df.queryExecution.toRdd.foreach(_ => ())
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val txt = mask(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
         Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
         System.err.println(s"[plandump] $name ok")
       } catch { case NonFatal(e) =>
@@ -60,4 +63,16 @@ object PlanDump {
       sys.exit(1)
     }
   }
+
+  /** Replace what differs from run to run in a plan's text: expression ids
+    * (`doc_id#42L`; a cold fixture cache builds fixtures first and shifts
+    * every id), `plan_id=` counters, bucket-table names (a hash of the
+    * data directory, see `SnapshotStore.bucketTable`) and the checkout
+    * directory that fixture paths start with.
+    */
+  private def mask(plan: String): String =
+    plan.replace(sys.props("user.dir"), "<checkout>")
+      .replaceAll("#\\d+L?\\b", "#N")
+      .replaceAll("plan_id=\\d+", "plan_id=N")
+      .replaceAll("graft_b_[0-9a-f]{16}", "graft_b_H")
 }

@@ -16,52 +16,7 @@ import TestSpark.{spark, tmpDir}
   * zone maps, checksum, and sort.
   */
 class AllTypesFixtureSpec extends AnyFunSuite {
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
-  private def dt(s: String) = java.sql.Date.valueOf(s)
-
-  private val schema = StructType(Seq(
-    StructField("float64", DoubleType),
-    StructField("float32", FloatType),
-    StructField("int64", LongType),
-    StructField("int32", IntegerType),
-    StructField("bits64", DecimalType(20, 0)),
-    StructField("bits32", LongType),
-    StructField("bool", BooleanType),
-    StructField("datetime", TimestampType),
-    StructField("date", DateType),
-    StructField("time_us", LongType),      // time-of-day: micros since midnight
-    StructField("bytes", BinaryType),
-    StructField("unicode", StringType),
-    StructField("ascii", StringType),
-    StructField("json", StringType),
-    StructField("cplx", StructType(Seq(
-      StructField("re", DoubleType), StructField("im", DoubleType)))),
-  ))
-
-  private val rows = Seq(
-    Row(1.0 / 3, 100.0f, 9223372036854775807L, -2147483647,
-      BigDecimal("18446744073709551615").bigDecimal, 4294967295L, true,
-      ts("1916-02-29 23:59:59.999999"), dt("2016-02-29"),
-      (12L * 3600) * 1000000L + 999999L, "foo".getBytes("UTF-8"),
-      "blå", "foo", """{"a":[1,2,{"b":{}}]}""", Row(1.5, 0.0)),
-    Row(1e100, -0.0f, -9223372036854775807L, 2147483647,
-      BigDecimal(0).bigDecimal, 0L, false,
-      ts("1916-02-29 23:59:59.999998"), dt("2016-02-28"),
-      (12L * 3600) * 1000000L + 999998L, "bar".getBytes("UTF-8"),
-      "blä", "bar", "null", Row(-1e100, 2e-8)),
-    Row(-9.0, 2.0f, 100L, -1,
-      BigDecimal("6172840429334713770").bigDecimal, 2857740885L, true,
-      ts("1970-01-01 00:00:00.000001"), dt("2017-06-27"),
-      62L * 1000000L + 3L, "blutti".getBytes("UTF-8"),
-      "bla", "blutti", "\"blä\"", Row(0.0, 5.3)),
-    Row(Double.NaN, Float.NaN, null, null, null, null, null,
-      null, null, null, null, null, null, null, null),
-  )
-
-  private def fixture() =
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 2), schema)
+  import AllTypesFixtureSpec._
 
   test("snapshot round-trip preserves every value, zone maps skip NaN/null") {
     val store = new SnapshotStore(spark, tmpDir("alltypes"))
@@ -114,4 +69,53 @@ class AllTypesFixtureSpec extends AnyFunSuite {
         col("datetime"), col("date")).collect().map(_.toSeq).toSet
     assert(round == want)
   }
+}
+
+/** The fixture itself, shared with SnapshotSpec's zone-map cases. */
+object AllTypesFixtureSpec {
+  def ts(s: String) = java.sql.Timestamp.valueOf(s)
+  def dt(s: String) = java.sql.Date.valueOf(s)
+
+  val schema = StructType(Seq(
+    StructField("float64", DoubleType),
+    StructField("float32", FloatType),
+    StructField("int64", LongType),
+    StructField("int32", IntegerType),
+    StructField("bits64", DecimalType(20, 0)),
+    StructField("bits32", LongType),
+    StructField("bool", BooleanType),
+    StructField("datetime", TimestampType),
+    StructField("date", DateType),
+    StructField("time_us", LongType),      // time-of-day: micros since midnight
+    StructField("bytes", BinaryType),
+    StructField("unicode", StringType),
+    StructField("ascii", StringType),
+    StructField("json", StringType),
+    StructField("cplx", StructType(Seq(
+      StructField("re", DoubleType), StructField("im", DoubleType)))),
+  ))
+
+  val rows = Seq(
+    Row(1.0 / 3, 100.0f, 9223372036854775807L, -2147483647,
+      BigDecimal("18446744073709551615").bigDecimal, 4294967295L, true,
+      ts("1916-02-29 23:59:59.999999"), dt("2016-02-29"),
+      (12L * 3600) * 1000000L + 999999L, "foo".getBytes("UTF-8"),
+      "blå", "foo", """{"a":[1,2,{"b":{}}]}""", Row(1.5, 0.0)),
+    Row(1e100, -0.0f, -9223372036854775807L, 2147483647,
+      BigDecimal(0).bigDecimal, 0L, false,
+      ts("1916-02-29 23:59:59.999998"), dt("2016-02-28"),
+      (12L * 3600) * 1000000L + 999998L, "bar".getBytes("UTF-8"),
+      "blä", "bar", "null", Row(-1e100, 2e-8)),
+    Row(-9.0, 2.0f, 100L, -1,
+      BigDecimal("6172840429334713770").bigDecimal, 2857740885L, true,
+      ts("1970-01-01 00:00:00.000001"), dt("2017-06-27"),
+      62L * 1000000L + 3L, "blutti".getBytes("UTF-8"),
+      "bla", "blutti", "\"blä\"", Row(0.0, 5.3)),
+    Row(Double.NaN, Float.NaN, null, null, null, null, null,
+      null, null, null, null, null, null, null, null),
+  )
+
+  def fixture() =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2), schema)
 }

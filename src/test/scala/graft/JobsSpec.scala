@@ -147,4 +147,23 @@ class JobsSpec extends AnyFunSuite {
     val b = r.build(req) { _ => Map("out" -> "w") }
     assert(!b.cached && b.jobid != a.jobid && b.output("out") == "w")
   }
+
+  test("a truncated setup.json leaves the workdir openable and its request rebuildable") {
+    val root = tmpDir("jobs_torn_setup")
+    val store = new SnapshotStore(spark, s"$root/store")
+    val reqA = JobRequest("m", "1", Map("o" -> "a"))
+    val reqB = JobRequest("m", "1", Map("o" -> "b"))
+    val r0 = new JobRunner(store, s"$root/jobs")
+    val a = r0.build(reqA) { _ => Map("out" -> "a") }
+    val b = r0.build(reqB) { _ => Map("out" -> "b") }
+    val setup = java.nio.file.Paths.get(s"$root/jobs", a.jobid, "setup.json")
+    val text = java.nio.file.Files.readString(setup)
+    java.nio.file.Files.writeString(setup, text.take(text.length / 2))
+    val r = new JobRunner(store, s"$root/jobs")
+    assert(r.matchExact(reqB).map(_.jobid).contains(b.jobid), "the other jobs still match")
+    assert(r.matchExact(reqA).isEmpty)
+    val a2 = r.build(reqA) { _ => Map("out" -> "a2") }
+    assert(!a2.cached && a2.output("out") == "a2")
+    assert(!Set(a.jobid, b.jobid).contains(a2.jobid), "the torn job's id is not reused")
+  }
 }

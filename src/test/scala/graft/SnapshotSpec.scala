@@ -1,8 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.core.{SnapshotStore, ZoneMapOrder}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import graft.core.{Cols, Measure, SnapshotStore, ZoneMapOrder}
 import TestSpark.{spark, tmpDir}
 
 /** Snapshot store: metadata round-trip, chain walk, and the zone-map
@@ -432,5 +434,111 @@ class SnapshotSpec extends AnyFunSuite {
       spark.range(10).toDF("k").select(boom(col("k")).as("k")), "s", slices = 1))
     assert(!store.exists("s"))
     assert(!new SnapshotStore(spark, root).exists("s"))
+  }
+
+  test("a write evaluates its source once, in the write's own stages") {
+    val sc = spark.sparkContext
+    val schema = StructType(Seq(StructField("k", LongType), StructField("v", StringType)))
+    Seq(None, Some("k")).foreach { hashlabel =>
+      val parsed = sc.longAccumulator
+      val rows = sc.parallelize(0 until 1000, 4).map { i =>
+        parsed.add(1); Row((i % 37).toLong, s"v$i")
+      }
+      val store = new SnapshotStore(spark,
+        tmpDir(s"snap_once_${hashlabel.getOrElse("plain")}"))
+      val counts = Measure.during(spark) {
+        store.write(spark.createDataFrame(rows, schema), "once",
+          hashlabel = hashlabel, slices = 4)
+      }
+      assert(store.get("once").meta.lines == 1000)
+      assert(parsed.value == 1000, s"hashlabel $hashlabel: every row is parsed once")
+      // unhashed: the write stage; hashed: the routing shuffle's map stage
+      // and the write stage
+      assert(counts.stages == (if (hashlabel.isDefined) 2 else 1),
+        s"hashlabel $hashlabel: $counts")
+    }
+  }
+
+  /** What the agg that used to run after every write computed over the
+    * same frame: the line count and, per comparable column, min/max as
+    * strings with NaN ignored unless every value is NaN. An oracle for the
+    * metrics the write now observes on its own plan.
+    */
+  private def aggMeta(df: DataFrame, zoneMaps: Boolean)
+      : (Long, Map[String, (Option[String], Option[String])]) = {
+    val comparable = df.schema.fields.filterNot(f =>
+      Set("binary", "array", "map", "struct").contains(f.dataType.typeName)).toSeq
+    val minMax = if (!zoneMaps) Nil else comparable.flatMap { f =>
+      val qc = Cols.q(f.name)
+      f.dataType.typeName match {
+        case "double" | "float" =>
+          val nonNaN = when(!isnan(qc), qc)
+          val allNaN = max(when(isnan(qc), lit("NaN")))
+          Seq(coalesce(min(nonNaN).cast("string"), allNaN),
+              coalesce(max(nonNaN).cast("string"), allNaN))
+        case _ => Seq(min(qc).cast("string"), max(qc).cast("string"))
+      }
+    }
+    val row = df.agg(count(lit(1)), minMax: _*).collect()(0)
+    val mm = if (!zoneMaps) Map.empty[String, (Option[String], Option[String])]
+      else comparable.zipWithIndex.map { case (f, i) =>
+        f.name -> (Option(row.getString(1 + 2 * i)), Option(row.getString(2 + 2 * i)))
+      }.toMap
+    (row.getLong(0), mm)
+  }
+
+  test("observed line count and zone maps equal the old agg's, case by case") {
+    val root = tmpDir("snap_observed")
+    val store = new SnapshotStore(spark, root)
+    val mixed = spark.range(300).select(
+      (col("id") % 37).as("k"),
+      concat(lit("v"), (col("id") % 53).cast("string")).as("s"),
+      when(col("id") % 11 === 0, lit(Double.NaN))
+        .otherwise(col("id") * 0.5 - 40).as("d"),
+      date_add(lit("2024-01-01").cast("date"), (col("id") % 90).cast("int")).as("day"),
+      when(col("id") % 7 =!= 0, (col("id") * 3).cast("decimal(12,2)")).as("dec"),
+      (col("id") % 3 === 0).as("flag"),
+      array(col("id")).as("arr"))
+    val empty = mixed.filter(lit(false))
+    val nans = Seq[(java.lang.Double, java.lang.Double)](
+      (Double.NaN, Double.NaN), (Double.NaN, Double.NaN), (null, Double.NaN))
+    val s = spark
+    import s.implicits._
+    // (name, frame, zoneMaps, the write)
+    val cases: Seq[(String, DataFrame, Boolean, (DataFrame, String) => Any)] = Seq(
+      ("unhashed", mixed, true, (df, n) => store.write(df, n)),
+      ("hashed", mixed, true, (df, n) => store.write(df, n, hashlabel = Some("k"), slices = 4)),
+      ("prerouted", mixed.repartition(4, col("k")), true,
+        (df, n) => store.write(df, n, hashlabel = Some("k"), slices = 4, preRouted = true)),
+      ("nozonemaps", mixed, false, (df, n) => store.write(df, n, zoneMaps = false)),
+      ("nozonemaps_hashed", mixed, false,
+        (df, n) => store.write(df, n, hashlabel = Some("k"), zoneMaps = false)),
+      ("oneslice", mixed, true, (df, n) => store.write(df, n, slices = 1)),
+      ("alltypes", AllTypesFixtureSpec.fixture(), true, (df, n) => store.write(df, n, slices = 2)),
+      ("allnan", nans.toDF("f64", "g64"), true, (df, n) => store.write(df, n, slices = 1)),
+      ("somenan", Seq(Double.NaN, 2.0, Double.NaN).toDF("f64"), true,
+        (df, n) => store.write(df, n, slices = 1)),
+      ("infinity", Seq(Double.NaN, Double.PositiveInfinity, 0.0, Double.NaN).toDF("f64"), true,
+        (df, n) => store.write(df, n, slices = 1)),
+      ("empty", empty, true, (df, n) => store.write(df, n)),
+      ("empty_hashed", empty, true, (df, n) => store.write(df, n, hashlabel = Some("k"))))
+    cases.foreach { case (name, df, zoneMaps, write) =>
+      write(df, name)
+      // meta.json as published, read by a fresh store
+      val meta = new SnapshotStore(spark, root).get(name).meta
+      val (lines, mm) = aggMeta(df, zoneMaps)
+      assert(meta.lines == lines, s"$name: lines")
+      meta.columns.foreach { c =>
+        assert((c.min, c.max) == mm.getOrElse(c.name, (None, None)), s"$name: column ${c.name}")
+      }
+    }
+    Seq("empty", "empty_hashed").foreach { name =>
+      val meta = store.get(name).meta
+      assert(meta.lines == 0 && meta.columns.forall(c => c.min.isEmpty && c.max.isEmpty), name)
+    }
+    // the comparison is not vacuous: the frames do carry zone maps
+    assert(store.get("hashed").minOf("d").contains("-39.5"))
+    assert(store.get("allnan").maxOf("f64").contains("NaN"))
+    assert(store.get("alltypes").maxOf("float64").contains("1.0E100"))
   }
 }
