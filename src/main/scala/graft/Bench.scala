@@ -46,10 +46,6 @@ object Bench {
     //  - sorted order: SparkEntry.queries is a Map, so adding a query
     //    permutes iteration order and shifts which neighbors' GC debt each
     //    query inherits. Sorting keeps run order stable across rounds.
-    //    SPARK_GRAFT_BENCH_ORDER=reverse runs the reverse-sorted order —
-    //    the order-independence experiment (VARIANCE.json order_note):
-    //    diffing the two orders measures how much a query's number is its
-    //    neighbors' GC debt rather than its own plan.
     // SPARK_GRAFT_BENCH_ONLY=<comma-separated name prefixes>: time only
     // matching queries — the local-reproduction switch for adjudicating
     // single-query drift (the driver sets nothing, so it always runs the
@@ -74,12 +70,8 @@ object Bench {
     // min-of-3 now spans three DIFFERENT orders, which de-correlates a
     // query's min from any one neighborhood. Seeds are fixed, so run
     // order is still reproducible round over round.
-    // SPARK_GRAFT_BENCH_ORDER=reverse forces reverse-sorted in every
-    // pass (the order-experiment switch).
     def orderFor(pass: Int): Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      if (sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("reverse"))
-        ordered0.reverse
-      else if (pass == 1) ordered0
+      if (pass == 1) ordered0
       else new scala.util.Random(pass.toLong * 7919L).shuffle(ordered0)
     // GC/heap telemetry: cumulative collector time across all GC beans, and
     // used-heap after each sample. Recorded per query per pass so a future

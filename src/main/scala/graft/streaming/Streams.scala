@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel
 import graft.core.{ArtifactFormats, SnapshotStore}
 import graft.jobs.Urd
 
@@ -20,6 +21,15 @@ import graft.jobs.Urd
   *    whose output is, at rest, exactly the reference's daily-append
   *    chain, so every batch operator (iterateChain, range skip, checksum,
   *    dedup…) works on the stream's history.
+  *
+  * Every chain sink (`chainSink` and the eleven `…Sink`s beside it) runs
+  * through one private `chainedBatch` skeleton and supplies only its
+  * per-batch transform. The skeleton writes each output against its
+  * prefix's COMMITTED tip and advances the tips only after every write of
+  * the batch has landed, so a crash between two writes (or between the
+  * writes and the checkpoint commit) replays the whole batch against the
+  * same tips and re-lands the same snapshots. Frames a transform persists
+  * are released once the writes end, whether they succeeded or threw.
   *
   * Scale notes: file-source streaming tracks seen files in the checkpoint
   * (maxFilesPerTrigger bounds batch size); watermarks bound state; the
@@ -82,22 +92,10 @@ object Streams {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"), col(itemCol), col("n"))
-    val tip = new ChainTip(store, prefix)
-    counts.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val top = graft.ops.TopKPerGroup(batch,
-            Seq("window_start", "window_end"), "n", k, Seq(itemCol))
-          val name = s"$prefix.$batchId"
-          store.write(top, name, previous = tip.prevFor(batchId))
-          tip.advance(name)
-        }
-        ()
-      }
-      .start()
+    chainedBatch(counts, store, checkpoint) { (batch, _, _) =>
+      Seq(ChainOut(prefix, graft.ops.TopKPerGroup(batch,
+        Seq("window_start", "window_end"), "n", k, Seq(itemCol))))
+    }
   }
 
   /** Incremental heavy-hitters sink: each micro-batch's tokens fold into
@@ -113,33 +111,20 @@ object Streams {
     */
   def heavyHittersSink(docs: DataFrame, textCol: String, groupCol: String,
                        store: SnapshotStore, prefix: String,
-                       checkpoint: String, k: Int = 32): StreamingQuery = {
-    val tip = new ChainTip(store, prefix)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val batchSummary = graft.ops.TrainingPipeline
-            .heavyHitters(batch, textCol, groupCol, k)
-          val prev = tip.prevFor(batchId)
-          val merged = prev match {
-            case Some(p) => graft.ops.TrainingPipeline.mergeHeavyHitters(
-              store.readArtifact(p, ArtifactFormats.TokenSketch)
-                .select(col(groupCol), col("token"), col("est")),
-              batchSummary, groupCol, k)
-            case None => batchSummary
-          }
-          val name = s"$prefix.$batchId"
-          store.write(merged, name, previous = prev,
-            formatVersion = Some(ArtifactFormats.TokenSketch))
-          tip.advance(name)
-        }
-        ()
+                       checkpoint: String, k: Int = 32): StreamingQuery =
+    chainedBatch(docs, store, checkpoint) { (batch, prev, _) =>
+      val batchSummary = graft.ops.TrainingPipeline
+        .heavyHitters(batch, textCol, groupCol, k)
+      val merged = prev(prefix) match {
+        case Some(p) => graft.ops.TrainingPipeline.mergeHeavyHitters(
+          store.readArtifact(p, ArtifactFormats.TokenSketch)
+            .select(col(groupCol), col("token"), col("est")),
+          batchSummary, groupCol, k)
+        case None => batchSummary
       }
-      .start()
-  }
+      Seq(ChainOut(prefix, merged,
+        formatVersion = Some(ArtifactFormats.TokenSketch)))
+    }
 
   final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
   final case class SessionState(start: Long, last: Long, events: Int, total: Double)
@@ -270,68 +255,39 @@ object Streams {
                        outPrefix: String, checkpoint: String,
                        n: Int = 3, k: Int = 16, bands: Int = 8,
                        threshold: Double = 0.8,
-                       compactEvery: Option[Int] = None): StreamingQuery = {
-    compactEvery.foreach(e => require(e >= 1, s"compactEvery must be >= 1, got $e"))
-    val idxTip = new ChainTip(store, indexPrefix)
-    val outTip = new ChainTip(store, outPrefix)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val batchIdx = graft.ops.Dedup
-            .minhashIndex(batch, idCol, textCol, n, k)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val prevIdx = idxTip.prevFor(batchId)
-          val history = prevIdx match {
-            case Some(tip) =>
-              store.requireArtifactFormat(tip, ArtifactFormats.MinhashIndex)
-              val chain = store.iterateChain(tip)
-              // keep the n/k parameter columns when the stored index has
-              // them — incrementalMinhash cross-validates the banding
-              // scheme from exactly these
-              val keep = Seq("id", "hs", "sig") ++
-                Seq("n", "k").filter(chain.columns.contains)
-              chain.select(keep.map(col): _*)
-            case None => batchIdx.limit(0)
-          }
-          val pairs = graft.ops.Dedup
-            .incrementalMinhash(batchIdx, history, k, bands, threshold)
-          // classify by id_b: batch and history id spaces are disjoint, so
-          // id_b ∈ batch ⇒ within-batch pair (drop the larger side, id_b);
-          // id_b ∉ batch ⇒ history pair (drop the batch side, id_a)
-          val batchIds = batchIdx.select(col("id"))
-          val dropWithin = pairs
-            .join(batchIds.withColumnRenamed("id", "id_b"), Seq("id_b"), "left_semi")
-            .select(col("id_b").as(idCol))
-          val dropCross = pairs
-            .join(batchIds.withColumnRenamed("id", "id_b"), Seq("id_b"), "left_anti")
-            .select(col("id_a").as(idCol))
-          val survivors = batch.join(
-            dropWithin.unionByName(dropCross).distinct(), Seq(idCol), "left_anti")
-          store.write(survivors, s"$outPrefix.$batchId",
-            previous = outTip.prevFor(batchId))
-          store.write(batchIdx, s"$indexPrefix.$batchId", previous = prevIdx,
-            formatVersion = Some(ArtifactFormats.MinhashIndex))
-          outTip.advance(s"$outPrefix.$batchId")
-          idxTip.advance(s"$indexPrefix.$batchId")
-          batchIdx.unpersist()
-          // periodic index maintenance: without it the index chain is
-          // O(batches) links of small snapshots, and every batch's history
-          // read unions the whole walk. Compaction folds the chain into
-          // one snapshot (same rows) that becomes the new chain base —
-          // steady-state history reads stay O(1) datasets deep.
-          if (compactEvery.exists(e => batchId > 0 && batchId % e == 0)) {
-            val cname = s"$indexPrefix.$batchId-c"
-            store.compactChain(s"$indexPrefix.$batchId", cname)
-            idxTip.advance(cname)
-          }
-        }
-        ()
+                       compactEvery: Option[Int] = None): StreamingQuery =
+    chainedBatch(docs, store, checkpoint, compactEvery) { (batch, prev, persist) =>
+      val batchIdx = persist(graft.ops.Dedup.minhashIndex(batch, idCol, textCol, n, k))
+      val history = prev(indexPrefix) match {
+        case Some(tip) =>
+          store.requireArtifactFormat(tip, ArtifactFormats.MinhashIndex)
+          val chain = store.iterateChain(tip)
+          // keep the n/k parameter columns when the stored index has
+          // them — incrementalMinhash cross-validates the banding
+          // scheme from exactly these
+          val keep = Seq("id", "hs", "sig") ++
+            Seq("n", "k").filter(chain.columns.contains)
+          chain.select(keep.map(col): _*)
+        case None => batchIdx.limit(0)
       }
-      .start()
-  }
+      val pairs = graft.ops.Dedup
+        .incrementalMinhash(batchIdx, history, k, bands, threshold)
+      // classify by id_b: batch and history id spaces are disjoint, so
+      // id_b ∈ batch ⇒ within-batch pair (drop the larger side, id_b);
+      // id_b ∉ batch ⇒ history pair (drop the batch side, id_a)
+      val batchIds = batchIdx.select(col("id"))
+      val dropWithin = pairs
+        .join(batchIds.withColumnRenamed("id", "id_b"), Seq("id_b"), "left_semi")
+        .select(col("id_b").as(idCol))
+      val dropCross = pairs
+        .join(batchIds.withColumnRenamed("id", "id_b"), Seq("id_b"), "left_anti")
+        .select(col("id_a").as(idCol))
+      val survivors = batch.join(
+        dropWithin.unionByName(dropCross).distinct(), Seq(idCol), "left_anti")
+      Seq(ChainOut(outPrefix, survivors),
+        ChainOut(indexPrefix, batchIdx,
+          formatVersion = Some(ArtifactFormats.MinhashIndex), compact = true))
+    }
 
   /** Streaming corpus-wide LINE dedup with a persistent chain index — the
     * stream twin of [[graft.ops.Dedup.incrementalLineDedup]], following
@@ -352,47 +308,24 @@ object Streams {
   def lineDedupSink(docs: DataFrame, idCol: String, textCol: String,
                     store: SnapshotStore, indexPrefix: String,
                     outPrefix: String, checkpoint: String,
-                    compactEvery: Option[Int] = None): StreamingQuery = {
-    compactEvery.foreach(e => require(e >= 1, s"compactEvery must be >= 1, got $e"))
-    val idxTip = new ChainTip(store, indexPrefix)
-    val outTip = new ChainTip(store, outPrefix)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val prevIdx = idxTip.prevFor(batchId)
-          val history = prevIdx match {
-            case Some(tip) =>
-              store.requireArtifactFormat(tip, ArtifactFormats.LineIndex)
-              store.iterateChain(tip).select(col("h"))
-            case None => graft.ops.Dedup.lineIndex(batch.limit(0), textCol)
-          }
-          val cleaned = graft.ops.Dedup
-            .incrementalLineDedup(batch, history, idCol, textCol)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // the kept lines are exactly the batch's fresh owners: they are
-          // the full delta the NEXT ingest must probe against
-          val newIdx = graft.ops.Dedup.lineIndex(
-            cleaned.select(col("text_dedup").as(textCol)), textCol)
-          store.write(cleaned, s"$outPrefix.$batchId",
-            previous = outTip.prevFor(batchId))
-          store.write(newIdx, s"$indexPrefix.$batchId", previous = prevIdx,
-            formatVersion = Some(ArtifactFormats.LineIndex))
-          outTip.advance(s"$outPrefix.$batchId")
-          idxTip.advance(s"$indexPrefix.$batchId")
-          cleaned.unpersist()
-          if (compactEvery.exists(e => batchId > 0 && batchId % e == 0)) {
-            val cname = s"$indexPrefix.$batchId-c"
-            store.compactChain(s"$indexPrefix.$batchId", cname)
-            idxTip.advance(cname)
-          }
-        }
-        ()
+                    compactEvery: Option[Int] = None): StreamingQuery =
+    chainedBatch(docs, store, checkpoint, compactEvery) { (batch, prev, persist) =>
+      val history = prev(indexPrefix) match {
+        case Some(tip) =>
+          store.requireArtifactFormat(tip, ArtifactFormats.LineIndex)
+          store.iterateChain(tip).select(col("h"))
+        case None => graft.ops.Dedup.lineIndex(batch.limit(0), textCol)
       }
-      .start()
-  }
+      val cleaned = persist(graft.ops.Dedup
+        .incrementalLineDedup(batch, history, idCol, textCol))
+      // the kept lines are exactly the batch's fresh owners: they are
+      // the full delta the NEXT ingest must probe against
+      val newIdx = graft.ops.Dedup.lineIndex(
+        cleaned.select(col("text_dedup").as(textCol)), textCol)
+      Seq(ChainOut(outPrefix, cleaned),
+        ChainOut(indexPrefix, newIdx,
+          formatVersion = Some(ArtifactFormats.LineIndex), compact = true))
+    }
 
   /** Streaming SEMANTIC dedup against a frozen centroid matrix and a
     * persistent chain index — the stream twin of
@@ -417,62 +350,27 @@ object Streams {
                         indexPrefix: String, outPrefix: String,
                         checkpoint: String, tauSq: Long,
                         quantShift: Int = 6, fpShift: Int = 10,
-                        compactEvery: Option[Int] = None): StreamingQuery = {
-    compactEvery.foreach(e => require(e >= 1, s"compactEvery must be >= 1, got $e"))
-    val idxTip = new ChainTip(store, indexPrefix)
-    val outTip = new ChainTip(store, outPrefix)
-    embs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val prevIdx = idxTip.prevFor(batchId)
-          val ab = graft.ops.KMeans
-            .assignTo(batch, idCol, vecCol, mus, quantShift, fpShift)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val history = prevIdx match {
-            case Some(tip) =>
-              store.requireArtifactFormat(tip, ArtifactFormats.SemanticIndex)
-              store.iterateChain(tip).select(col("cluster"), col("q"))
-            case None => ab.select(col("cluster"), col("q")).limit(0)
-          }
-          val keptIds = graft.ops.SemDeDup
-            .incrementalAssigned(ab, history, idCol, tauSq)
-            .filter(col("kept"))
-            .select(col(idCol))
-          val survivors = batch.join(keptIds, Seq(idCol), "left_semi")
-          val keptIdx = ab.join(keptIds, Seq(idCol), "left_semi")
-          store.write(survivors, s"$outPrefix.$batchId",
-            previous = outTip.prevFor(batchId))
-          store.write(keptIdx, s"$indexPrefix.$batchId", previous = prevIdx,
-            formatVersion = Some(ArtifactFormats.SemanticIndex))
-          outTip.advance(s"$outPrefix.$batchId")
-          idxTip.advance(s"$indexPrefix.$batchId")
-          ab.unpersist()
-          if (compactEvery.exists(e => batchId > 0 && batchId % e == 0)) {
-            val cname = s"$indexPrefix.$batchId-c"
-            store.compactChain(s"$indexPrefix.$batchId", cname)
-            idxTip.advance(cname)
-          }
-        }
-        ()
+                        compactEvery: Option[Int] = None): StreamingQuery =
+    chainedBatch(embs, store, checkpoint, compactEvery) { (batch, prev, persist) =>
+      val ab = persist(graft.ops.KMeans
+        .assignTo(batch, idCol, vecCol, mus, quantShift, fpShift))
+      val history = prev(indexPrefix) match {
+        case Some(tip) =>
+          store.requireArtifactFormat(tip, ArtifactFormats.SemanticIndex)
+          store.iterateChain(tip).select(col("cluster"), col("q"))
+        case None => ab.select(col("cluster"), col("q")).limit(0)
       }
-      .start()
-  }
+      val keptIds = graft.ops.SemDeDup
+        .incrementalAssigned(ab, history, idCol, tauSq)
+        .filter(col("kept"))
+        .select(col(idCol))
+      val survivors = batch.join(keptIds, Seq(idCol), "left_semi")
+      val keptIdx = ab.join(keptIds, Seq(idCol), "left_semi")
+      Seq(ChainOut(outPrefix, survivors),
+        ChainOut(indexPrefix, keptIdx,
+          formatVersion = Some(ArtifactFormats.SemanticIndex), compact = true))
+    }
 
-  /** Streaming NB classification against a FROZEN model — the stream twin
-    * of [[graft.ops.ModelFilter.naiveBayes]], same frozen-artifact
-    * contract as [[semanticDedupSink]]'s centroids: `cnt`/`classes` are
-    * [[graft.ops.ModelFilter.naiveBayesModel]] tables fitted OFFLINE
-    * (typically read back from the persisted snapshots the pl_nb_persisted
-    * job writes). Each micro-batch scores in one
-    * [[graft.ops.ModelFilter.naiveBayesScoreFrozen]] pass and lands
-    * predictions as chained snapshots — per-batch output is byte-identical
-    * to batch scoring of the same rows because the model is frozen and
-    * scoring is per-document (no cross-batch state, hence no index chain:
-    * this sink is the stateless end of the streaming-family spectrum).
-    */
   /** Streaming quality annotation — the ingest-time gate of a training
     * pipeline: each micro-batch of documents lands as a chained snapshot
     * of (id, n_cp, ent_char_fp, n_tok, ent_tok_fp, quality) rows —
@@ -486,28 +384,16 @@ object Streams {
                           store: SnapshotStore, prefix: String,
                           checkpoint: String): StreamingQuery = {
     import graft.functions.{TextFunctions => T}
-    val tip = new ChainTip(store, prefix)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val ce = T.charEntropyFp(col(textCol))
-          val te = T.tokenEntropyFp(col(textCol))
-          val scored = batch.select(col(idCol),
-            ce.getField("n").as("n_cp"),
-            ce.getField("ent_fp").as("ent_char_fp"),
-            te.getField("n").as("n_tok"),
-            te.getField("ent_fp").as("ent_tok_fp"),
-            T.qualityScore(col(textCol)).as("quality"))
-          store.write(scored, s"$prefix.$batchId",
-            previous = tip.prevFor(batchId))
-          tip.advance(s"$prefix.$batchId")
-        }
-        ()
-      }
-      .start()
+    chainedBatch(docs, store, checkpoint) { (batch, _, _) =>
+      val ce = T.charEntropyFp(col(textCol))
+      val te = T.tokenEntropyFp(col(textCol))
+      Seq(ChainOut(prefix, batch.select(col(idCol),
+        ce.getField("n").as("n_cp"),
+        ce.getField("ent_fp").as("ent_char_fp"),
+        te.getField("n").as("n_tok"),
+        te.getField("ent_fp").as("ent_tok_fp"),
+        T.qualityScore(col(textCol)).as("quality"))))
+    }
   }
 
   /** Multimodal ingest annotation — the media twin of
@@ -538,80 +424,62 @@ object Streams {
                         checkpoint: String,
                         compactEvery: Option[Int] = None): StreamingQuery = {
     import graft.ops.Multimodal
-    compactEvery.foreach(e => require(e >= 1, s"compactEvery must be >= 1, got $e"))
-    val tip = new ChainTip(store, prefix)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val img = Multimodal.decodeImage(col(binCol))
-          val jpg = Multimodal.decodeJpeg(col(binCol))
-          val jls = Multimodal.jpegLosslessFeatures(col(binCol))
-          val j12 = Multimodal.jpeg12Features(col(binCol))
-          val vid = Multimodal.videoFrameStats(col(binCol), 2)
-          val vm = Multimodal.videoMeta(col(binCol))
-          val wav = Multimodal.audioFeatures(col(binCol))
-          val gs = Multimodal.gifAnimStats(col(binCol))
-          // composited GIF totals fold over the per-frame stats array —
-          // still scan-side column work, no UDF
-          val gifPx = aggregate(gs.getField("frames"), lit(0L),
-            (acc, f) => acc + f.getField("px_sum"))
-          val annotated = batch.select(col(idCol),
-            Multimodal.mediaType(col(binCol)).as("media_type"),
-            coalesce(img.getField("width"), jpg.getField("width"),
-              jls.getField("width"), j12.getField("width"),
-              vm.getField("width"), gs.getField("width"))
-              .cast("long").as("width"),
-            coalesce(img.getField("height"), jpg.getField("height"),
-              jls.getField("height"), j12.getField("height"),
-              vm.getField("height"), gs.getField("height"))
-              .cast("long").as("height"),
-            coalesce(img.getField("px_sum"), jpg.getField("px_sum"),
-              jls.getField("px_sum"), j12.getField("px_sum"),
-              vid.getField("px_sum"), gifPx).as("px_sum"),
-            coalesce(vm.getField("n_frames").cast("long"),
-              size(gs.getField("frames")).cast("long")).as("n_frames"),
-            wav.getField("n_samples").as("n_samples"),
-            wav.getField("pcm_sum").as("pcm_sum"),
-            wav.getField("pcm_bits").cast("long").as("pcm_bits"),
-            md5(col(binCol)).as("content_md5"))
-          store.write(annotated, s"$prefix.$batchId",
-            previous = tip.prevFor(batchId))
-          tip.advance(s"$prefix.$batchId")
-          if (compactEvery.exists(e => batchId > 0 && batchId % e == 0)) {
-            val cname = s"$prefix.$batchId-c"
-            store.compactChain(s"$prefix.$batchId", cname)
-            tip.advance(cname)
-          }
-        }
-        ()
-      }
-      .start()
+    chainedBatch(docs, store, checkpoint, compactEvery) { (batch, _, _) =>
+      val img = Multimodal.decodeImage(col(binCol))
+      val jpg = Multimodal.decodeJpeg(col(binCol))
+      val jls = Multimodal.jpegLosslessFeatures(col(binCol))
+      val j12 = Multimodal.jpeg12Features(col(binCol))
+      val vid = Multimodal.videoFrameStats(col(binCol), 2)
+      val vm = Multimodal.videoMeta(col(binCol))
+      val wav = Multimodal.audioFeatures(col(binCol))
+      val gs = Multimodal.gifAnimStats(col(binCol))
+      // composited GIF totals fold over the per-frame stats array —
+      // still scan-side column work, no UDF
+      val gifPx = aggregate(gs.getField("frames"), lit(0L),
+        (acc, f) => acc + f.getField("px_sum"))
+      val annotated = batch.select(col(idCol),
+        Multimodal.mediaType(col(binCol)).as("media_type"),
+        coalesce(img.getField("width"), jpg.getField("width"),
+          jls.getField("width"), j12.getField("width"),
+          vm.getField("width"), gs.getField("width"))
+          .cast("long").as("width"),
+        coalesce(img.getField("height"), jpg.getField("height"),
+          jls.getField("height"), j12.getField("height"),
+          vm.getField("height"), gs.getField("height"))
+          .cast("long").as("height"),
+        coalesce(img.getField("px_sum"), jpg.getField("px_sum"),
+          jls.getField("px_sum"), j12.getField("px_sum"),
+          vid.getField("px_sum"), gifPx).as("px_sum"),
+        coalesce(vm.getField("n_frames").cast("long"),
+          size(gs.getField("frames")).cast("long")).as("n_frames"),
+        wav.getField("n_samples").as("n_samples"),
+        wav.getField("pcm_sum").as("pcm_sum"),
+        wav.getField("pcm_bits").cast("long").as("pcm_bits"),
+        md5(col(binCol)).as("content_md5"))
+      Seq(ChainOut(prefix, annotated, compact = true))
+    }
   }
 
+  /** Streaming NB classification against a FROZEN model — the stream twin
+    * of [[graft.ops.ModelFilter.naiveBayes]], same frozen-artifact
+    * contract as [[semanticDedupSink]]'s centroids: `cnt`/`classes` are
+    * [[graft.ops.ModelFilter.naiveBayesModel]] tables fitted OFFLINE
+    * (typically read back from the persisted snapshots the pl_nb_persisted
+    * job writes). Each micro-batch scores in one
+    * [[graft.ops.ModelFilter.naiveBayesScoreFrozen]] pass and lands
+    * predictions as chained snapshots — per-batch output is byte-identical
+    * to batch scoring of the same rows because the model is frozen and
+    * scoring is per-document (no cross-batch state, hence no index chain:
+    * this sink is the stateless end of the streaming-family spectrum).
+    */
   def nbScoreSink(docs: DataFrame, idCol: String, textCol: String,
                   labelCol: String, cnt: DataFrame, classes: DataFrame,
                   store: SnapshotStore, prefix: String,
-                  checkpoint: String): StreamingQuery = {
-    val tip = new ChainTip(store, prefix)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val scored = graft.ops.ModelFilter.naiveBayesScoreFrozen(
-            batch, idCol, textCol, labelCol, cnt, classes)
-          store.write(scored, s"$prefix.$batchId",
-            previous = tip.prevFor(batchId))
-          tip.advance(s"$prefix.$batchId")
-        }
-        ()
-      }
-      .start()
-  }
+                  checkpoint: String): StreamingQuery =
+    chainedBatch(docs, store, checkpoint) { (batch, _, _) =>
+      Seq(ChainOut(prefix, graft.ops.ModelFilter.naiveBayesScoreFrozen(
+        batch, idCol, textCol, labelCol, cnt, classes)))
+    }
 
   /** Streaming PQ encoding against FROZEN codebooks — the ingest path of
     * a growing compressed embedding store: each micro-batch of vectors
@@ -625,24 +493,11 @@ object Streams {
   def pqEncodeSink(vecs: DataFrame, idCol: String, vecCol: String,
                    books: Array[Array[Array[Long]]], store: SnapshotStore,
                    prefix: String, checkpoint: String,
-                   quantShift: Int = 6, fpShift: Int = 10): StreamingQuery = {
-    val tip = new ChainTip(store, prefix)
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val codes = graft.ops.Pq.encode(batch, idCol, vecCol, books,
-            quantShift, fpShift)
-          store.write(codes, s"$prefix.$batchId",
-            previous = tip.prevFor(batchId))
-          tip.advance(s"$prefix.$batchId")
-        }
-        ()
-      }
-      .start()
-  }
+                   quantShift: Int = 6, fpShift: Int = 10): StreamingQuery =
+    chainedBatch(vecs, store, checkpoint) { (batch, _, _) =>
+      Seq(ChainOut(prefix, graft.ops.Pq.encode(batch, idCol, vecCol, books,
+        quantShift, fpShift)))
+    }
 
   /** Streaming tokenizer encoding against a FROZEN model — the ingest
     * path of a training-data tokenization pipeline, completing the
@@ -661,28 +516,15 @@ object Streams {
   def tokenizerEncodeSink(docs: DataFrame, idCol: String, textCol: String,
                           pieces: Column => Column, store: SnapshotStore,
                           prefix: String,
-                          checkpoint: String): StreamingQuery = {
-    val tip = new ChainTip(store, prefix)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val enc = batch
-            .select(col(idCol), pieces(col(textCol)).as("ps"))
-            .select(col(idCol),
-              size(col("ps")).cast("long").as("n_tokens"),
-              size(flatten(col("ps"))).cast("long").as("n_pieces"),
-              xxhash64(to_json(col("ps"))).as("pieces_fp"))
-          store.write(enc, s"$prefix.$batchId",
-            previous = tip.prevFor(batchId))
-          tip.advance(s"$prefix.$batchId")
-        }
-        ()
-      }
-      .start()
-  }
+                          checkpoint: String): StreamingQuery =
+    chainedBatch(docs, store, checkpoint) { (batch, _, _) =>
+      Seq(ChainOut(prefix, batch
+        .select(col(idCol), pieces(col(textCol)).as("ps"))
+        .select(col(idCol),
+          size(col("ps")).cast("long").as("n_tokens"),
+          size(flatten(col("ps"))).cast("long").as("n_pieces"),
+          xxhash64(to_json(col("ps"))).as("pieces_fp"))))
+    }
 
   /** Streaming BM25 index ingestion — the stream twin of
     * [[graft.ops.Bm25.index]]: each micro-batch of documents is indexed
@@ -701,37 +543,13 @@ object Streams {
   def bm25IndexSink(docs: DataFrame, idCol: String, textCol: String,
                     store: SnapshotStore, prefix: String,
                     checkpoint: String,
-                    compactEvery: Option[Int] = None): StreamingQuery = {
-    compactEvery.foreach(e => require(e >= 1, s"compactEvery must be >= 1, got $e"))
-    val tips = Seq("post", "dict", "stats")
-      .map(p => p -> new ChainTip(store, s"$prefix-$p")).toMap
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val (post, dict, stats) =
-            graft.ops.Bm25.index(batch, idCol, textCol)
-          val parts = Seq("post" -> post, "dict" -> dict, "stats" -> stats)
-          parts.foreach { case (p, df) =>
-            val tip = tips(p)
-            val hl = if (p == "stats") None else Some("h")
-            store.write(df, s"$prefix-$p.$batchId",
-              previous = tip.prevFor(batchId), hashlabel = hl,
-              slices = if (p == "stats") 1 else 4)
-            tip.advance(s"$prefix-$p.$batchId")
-            if (compactEvery.exists(e => batchId > 0 && batchId % e == 0)) {
-              val cname = s"$prefix-$p.$batchId-c"
-              store.compactChain(s"$prefix-$p.$batchId", cname)
-              tip.advance(cname)
-            }
-          }
-        }
-        ()
-      }
-      .start()
-  }
+                    compactEvery: Option[Int] = None): StreamingQuery =
+    chainedBatch(docs, store, checkpoint, compactEvery) { (batch, _, _) =>
+      val (post, dict, stats) = graft.ops.Bm25.index(batch, idCol, textCol)
+      Seq(ChainOut(s"$prefix-post", post, hashlabel = Some("h"), slices = 4, compact = true),
+        ChainOut(s"$prefix-dict", dict, hashlabel = Some("h"), slices = 4, compact = true),
+        ChainOut(s"$prefix-stats", stats, slices = 1, compact = true))
+    }
 
   /** Stream → chain bridge: each micro-batch becomes a snapshot chained to
     * the previous batch's snapshot and logged on the urd timeline. The
@@ -740,34 +558,85 @@ object Streams {
   def chainSink(stream: DataFrame, store: SnapshotStore, prefix: String,
                 urd: Option[(Urd, String)] = None,
                 checkpoint: String,
-                compactEvery: Option[Int] = None): StreamingQuery = {
+                compactEvery: Option[Int] = None): StreamingQuery =
+    chainedBatch(stream, store, checkpoint, compactEvery, urd) { (batch, _, _) =>
+      Seq(ChainOut(prefix, batch, compact = true))
+    }
+
+  /** One output of a chained micro-batch: `frame` lands as
+    * `<prefix>.<batchId>`, chained to the prefix's committed tip, with
+    * the given format stamp, hashlabel and slices. `compact` marks the
+    * chains `chainedBatch` folds every `compactEvery` batches.
+    */
+  private final case class ChainOut(prefix: String, frame: DataFrame,
+                                    formatVersion: Option[Int] = None,
+                                    hashlabel: Option[String] = None,
+                                    slices: Int = 0,
+                                    compact: Boolean = false)
+
+  /** The foreachBatch skeleton every chain sink runs through. `body` gets
+    * the non-empty batch, `prev(prefix)` — the prefix's committed tip,
+    * strictly before this batch (see `ChainTip.prevFor`) — and
+    * `persist(df)`, which caches `df` until this batch's writes end, on
+    * success or failure. It returns the batch's outputs, which are written
+    * in that order, each against its prefix's committed tip; only after
+    * every write has landed do the tips advance. A crash between writes
+    * therefore replays the whole batch against the same tips, and the
+    * replay re-lands the same names (a rewrite replaces the snapshot).
+    *
+    * Every `compactEvery` batches the chains marked `compact` fold into
+    * one snapshot (`<prefix>.<batchId>-c`, same rows) that becomes the
+    * new chain base: without it a chain is O(batches) links of small
+    * snapshots, and every history read unions the whole walk.
+    *
+    * With `urd`, the batch's snapshot names are recorded on the timeline
+    * under `key` at timestamp `batchId`. Replay-idempotent: a crashed
+    * attempt of THIS batch may have already recorded the entry
+    * (foreachBatch side effects land before the checkpoint commit). The
+    * replay re-lands the same snapshot names, so the existing entry is
+    * already correct — re-adding would trip the timeline's
+    * duplicate-timestamp guard and kill the restarted stream.
+    */
+  private def chainedBatch(stream: DataFrame, store: SnapshotStore,
+                           checkpoint: String,
+                           compactEvery: Option[Int] = None,
+                           urd: Option[(Urd, String)] = None)(
+      body: (DataFrame, String => Option[String], DataFrame => DataFrame) => Seq[ChainOut]
+  ): StreamingQuery = {
     compactEvery.foreach(e => require(e >= 1, s"compactEvery must be >= 1, got $e"))
-    val tip = new ChainTip(store, prefix)
+    val tips = scala.collection.mutable.Map.empty[String, ChainTip]
+    def tip(prefix: String): ChainTip =
+      tips.getOrElseUpdate(prefix, new ChainTip(store, prefix))
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append())
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          val name = s"$prefix.$batchId"
-          store.write(batch, name, previous = tip.prevFor(batchId))
-          tip.advance(name)
-          // same maintenance trade as nearDupDedupSink: fold the chain
-          // periodically so consumers read O(1) datasets, not O(batches)
-          if (compactEvery.exists(e => batchId > 0 && batchId % e == 0)) {
-            val cname = s"$prefix.$batchId-c"
-            store.compactChain(name, cname)
-            tip.advance(cname)
-          }
+          val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+          val outs =
+            try {
+              val outs = body(batch, tip(_).prevFor(batchId),
+                df => { held += df; df.persist(StorageLevel.MEMORY_AND_DISK) })
+              outs.foreach { o =>
+                store.write(o.frame, s"${o.prefix}.$batchId",
+                  previous = tip(o.prefix).prevFor(batchId),
+                  formatVersion = o.formatVersion, hashlabel = o.hashlabel,
+                  slices = o.slices)
+              }
+              outs
+            } finally held.foreach(_.unpersist())
+          outs.foreach(o => tip(o.prefix).advance(s"${o.prefix}.$batchId"))
+          if (compactEvery.exists(e => batchId > 0 && batchId % e == 0))
+            outs.filter(_.compact).foreach { o =>
+              val cname = s"${o.prefix}.$batchId-c"
+              store.compactChain(s"${o.prefix}.$batchId", cname)
+              tip(o.prefix).advance(cname)
+            }
           urd.foreach { case (u, key) =>
             val ts = f"$batchId%010d"
-            // Replay-idempotent: a crashed attempt of THIS batch may have
-            // already recorded the entry (foreachBatch side effects land
-            // before the checkpoint commit). The replay re-lands the same
-            // snapshot name, so the existing entry is already correct —
-            // re-adding would trip the timeline's duplicate-timestamp guard
-            // and kill the restarted stream.
-            if (u.get(key, ts).isEmpty) u.add(key, ts, Seq(prefix -> name))
+            if (u.get(key, ts).isEmpty)
+              u.add(key, ts, outs.map(o => o.prefix -> s"${o.prefix}.$batchId"))
           }
         }
         ()

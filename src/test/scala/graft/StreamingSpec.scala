@@ -713,6 +713,93 @@ class StreamingSpec extends AnyFunSuite {
       "index chain holds each doc's sketch exactly once after replay")
   }
 
+  test("nearDupDedupSink: a failure between its two writes replays to the uninterrupted pair") {
+    val s = spark
+    import s.implicits._
+    val dir = tmpDir("ndfail_src")
+    val base = "the quick brown fox jumps over the lazy dog again and again"
+    // the same two batches as the crash-and-restart test above
+    Seq((1L, base), (2L, base + " extra")).toDF("doc_id", "text")
+      .coalesce(1).write.mode("append").parquet(dir)
+    Seq((3L, base + " bonus"),
+        (4L, "completely different words with no shared trigrams at all here"))
+      .toDF("doc_id", "text")
+      .coalesce(1).write.mode("append").parquet(dir)
+
+    def runSink(store: SnapshotStore, ckpt: String): Unit =
+      Streams.nearDupDedupSink(Streams.eventStream(s, dir), "doc_id", "text",
+        store, "ndidx", "ndout", checkpoint = ckpt,
+        n = 3, k = 16, bands = 8, threshold = 0.5).awaitTermination(120000)
+    // Dataset caches are named; the localCheckpoint RDDs inside
+    // incrementalMinhash are not, and are not the sink's to release
+    def namedCached(): Set[Int] = s.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if rdd.name != null => id }.toSet
+
+    val storeA = new SnapshotStore(s, tmpDir("ndfail_store_a"))
+    runSink(storeA, tmpDir("ndfail_ckpt_a"))
+
+    // a plain file where batch 1's index snapshot directory would go:
+    // batch 1 lands ndout.1, then its ndidx.1 write throws
+    val rootB = tmpDir("ndfail_store_b")
+    val blocker = java.nio.file.Paths.get(rootB, "ndidx.1")
+    java.nio.file.Files.write(blocker, Array[Byte](1))
+    val storeB = new SnapshotStore(s, rootB)
+    val ckptB = tmpDir("ndfail_ckpt_b")
+    val cachedBefore = namedCached()
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      runSink(storeB, ckptB))
+    assert(storeB.exists("ndout.1"))
+    assert(!storeB.exists("ndidx.1"))
+    assert(namedCached() -- cachedBefore == Set(),
+      "a failed batch must release the frames it persisted")
+
+    java.nio.file.Files.delete(blocker)
+    runSink(storeB, ckptB)
+    assert(storeB.list() == storeA.list(),
+      s"replay must land the uninterrupted pair: ${storeB.list()} vs ${storeA.list()}")
+    for (n <- storeA.list()) {
+      assert(storeB.get(n).meta.previous == storeA.get(n).meta.previous, n)
+      assert(storeB.get(n).meta.lines == storeA.get(n).meta.lines, n)
+    }
+    def rows(st: SnapshotStore, tip: String) =
+      st.iterateChain(tip).collect().map(_.toString).sorted.toSeq
+    for (tip <- Seq("ndout.1", "ndidx.1"))
+      assert(rows(storeB, tip) == rows(storeA, tip), s"$tip chain rows differ")
+  }
+
+  test("compactEvery below 1 is rejected before any query starts, on every sink that takes it") {
+    val s = spark
+    import s.implicits._
+    val dir = tmpDir("ce0_src")
+    Seq((1L, "a b c", Seq(1.0))).toDF("id", "text", "vec")
+      .coalesce(1).write.mode("append").parquet(dir)
+    val store = new SnapshotStore(s, tmpDir("ce0_store"))
+    val ckpt = tmpDir("ce0_ckpt")
+    def stream = Streams.eventStream(s, dir)
+    val zero = Some(0)
+    val sinks: Seq[(String, () => Any)] = Seq(
+      "chainSink" -> (() => Streams.chainSink(stream, store, "c",
+        checkpoint = ckpt, compactEvery = zero)),
+      "mediaAnnotateSink" -> (() => Streams.mediaAnnotateSink(stream, "id",
+        "text", store, "m", ckpt, compactEvery = zero)),
+      "bm25IndexSink" -> (() => Streams.bm25IndexSink(stream, "id", "text",
+        store, "b", ckpt, compactEvery = zero)),
+      "nearDupDedupSink" -> (() => Streams.nearDupDedupSink(stream, "id",
+        "text", store, "ni", "no", ckpt, compactEvery = zero)),
+      "lineDedupSink" -> (() => Streams.lineDedupSink(stream, "id", "text",
+        store, "li", "lo", ckpt, compactEvery = zero)),
+      "semanticDedupSink" -> (() => Streams.semanticDedupSink(stream, "id",
+        "vec", Array(Array(0L)), store, "si", "so", ckpt, tauSq = 0L,
+        compactEvery = zero)))
+    for ((name, start) <- sinks) {
+      val e = intercept[IllegalArgumentException](start())
+      assert(e.getMessage.contains("compactEvery must be >= 1, got 0"), name)
+    }
+    assert(s.streams.active.isEmpty, "no query may start")
+    assert(store.list().isEmpty)
+    assert(new java.io.File(ckpt).list().isEmpty, "no checkpoint may be written")
+  }
+
   test("semanticDedupSink: crash-and-restart replays against the committed index tip") {
     val s = spark
     import s.implicits._
