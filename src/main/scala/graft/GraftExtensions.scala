@@ -20,6 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
+  import graft.expr.{DecodePieces, KernelCall, ShingleHashes, TokenHashes}
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     // usage strings document intent here; ExpressionInfo's extended-doc
@@ -33,7 +34,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject("graft_shingle_hashes",
       "graft_shingle_hashes(text, n) - distinct 40-bit word-n-gram shingle hashes") {
       args => expect(args, 2)
-        graft.expr.ShingleHash40(tokensExpr(args(0)), litInt(args(1), "n"))
+        KernelCall(tokensExpr(args(0)), ShingleHashes(litInt(args(1), "n")))
     }
     inject("graft_minhash_sig",
       "graft_minhash_sig(hashes, k) - k-slot minhash signature of a long-array") {
@@ -48,7 +49,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject("graft_token_hashes",
       "graft_token_hashes(tokens) - per-token 40-bit hashes (non-distinct)") {
       args => expect(args, 1)
-        graft.expr.TokenHash40Array(args(0))
+        KernelCall(args(0), TokenHashes(40))
     }
     inject("graft_dot",
       "graft_dot(a, b) - sequential-fold dot product of two double arrays") {
@@ -181,7 +182,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject("graft_piece_decode",
       "graft_piece_decode(pieces, word_piece) - decode nested tokenizer pieces (array<array<string>>) back to text; <0xHH> byte tokens invert unconditionally (model-free by the byte-fallback convention), ## continuations strip at position > 0 when word_piece") {
       args => expect(args, 2)
-        graft.expr.PieceDecode(args(0), litBool(args(1), "word_piece"))
+        KernelCall(args(0), DecodePieces(litBool(args(1), "word_piece")))
     }
   }
 }

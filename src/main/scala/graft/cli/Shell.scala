@@ -218,9 +218,9 @@ object Shell {
     if (Files.exists(dir.resolve("post.json")))
       b ++= s"    post      ${Files.readString(dir.resolve("post.json"))}\n"
     else b ++= "    post      (unfinished)\n"
-    import scala.jdk.CollectionConverters._
-    val arts = Files.list(dir).iterator().asScala.map(_.getFileName.toString)
-      .filter(_.startsWith("artifact_")).map(_.stripPrefix("artifact_")).toSeq.sorted
+    val arts = SnapshotStore.withPaths(Files.list(dir))(
+      _.map(_.getFileName.toString).filter(_.startsWith("artifact_"))
+        .map(_.stripPrefix("artifact_")).toSeq.sorted)
     if (arts.nonEmpty) b ++= s"    artifacts ${arts.mkString(", ")}\n"
     b.toString
   }
@@ -268,17 +268,10 @@ object Shell {
     * operator set has no source dir to enumerate — documented deviation).
     */
   def methodInfo(jobsRoot: String): String = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(jobsRoot)
-    require(Files.isDirectory(root), s"no such jobs root $jobsRoot")
-    val rows = Files.list(root).iterator().asScala
-      .filter(p => Files.exists(p.resolve("setup.json"))).toSeq
-      .map { p =>
-        val m = JsonLite.parse(Files.readString(p.resolve("setup.json")))
-          .asInstanceOf[Map[String, Any]]
-        (m.getOrElse("method", "?").toString, m.getOrElse("version", "?").toString)
-      }
+    require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(jobsRoot)),
+      s"no such jobs root $jobsRoot")
+    val rows = graft.jobs.JobRunner.loadAll(jobsRoot)
+      .map(r => (r.request.method, r.request.version))
     rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (meth, vs) =>
       f"$meth%-28s ${vs.size}%4d jobs  versions ${vs.map(_._2).distinct.sorted.mkString(",")}"
     }.mkString("\n") + "\n"

@@ -263,15 +263,8 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
     */
   val RowId = SnapshotStore.RowIdName
 
-  /** Attach a stable rowid (one extra pass; indices are
-    * partition-monotone so the ordering is the write ordering).
-    */
-  def withRowId(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(df.schema.fields :+ StructField(RowId, LongType, false))
-    val rdd = df.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    spark.createDataFrame(rdd, schema)
-  }
+  /** Attach a stable rowid (see [[SnapshotStore.withPosition]]). */
+  def withRowId(df: DataFrame): DataFrame = SnapshotStore.withPosition(df, RowId)
 
   /** Parent column-append (reference dataset.py:864-941 /
     * DatasetWriter(parent=...)): store ONLY the new columns (+rowid);
@@ -683,13 +676,32 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
 
   def list(): Seq[String] =
     if (!Files.exists(Paths.get(root))) Nil
-    else Files.list(Paths.get(root)).iterator().asScala
-      .filter(p => Files.exists(p.resolve("meta.json")))
-      .map(_.getFileName.toString).toSeq.sorted
+    else SnapshotStore.withPaths(Files.list(Paths.get(root)))(
+      _.filter(p => Files.exists(p.resolve("meta.json")))
+        .map(_.getFileName.toString).toSeq.sorted)
 }
 
 object SnapshotStore {
   val RowIdName = "__rowid"
+
+  /** Append `posCol`, each row's physical position (one extra pass;
+    * indices are partition-monotone, so they capture the order the rows
+    * are actually produced in — after a sort, not a window re-derivation,
+    * so order bugs can't hide).
+    */
+  def withPosition(df: DataFrame, posCol: String): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val schema = StructType(df.schema.fields :+ StructField(posCol, LongType, false))
+    val rdd = df.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
+    df.sparkSession.createDataFrame(rdd, schema)
+  }
+
+  /** Run `f` over a `Files.list` or `Files.walk` stream, then close it:
+    * an unclosed stream holds its directory handle until GC.
+    */
+  private[graft] def withPaths[A](s: java.util.stream.Stream[Path])(
+      f: Iterator[Path] => A): A =
+    try f(s.iterator().asScala) finally s.close()
 
   /** Replace `path` with `text` atomically: write `<path>.tmp`, then
     * rename it over `path`. A crash leaves the old file or the new one,

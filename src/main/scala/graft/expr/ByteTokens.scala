@@ -1,11 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-
 /** Byte-fallback piece vocabulary — the SentencePiece `byte_fallback`
   * convention (also the id-space GPT-2's byte-level BPE guarantees): 256
   * reserved pieces `<0x00>`…`<0xFF>`, one per byte value, seeded into
@@ -48,69 +42,4 @@ object ByteTokens {
     new String(Character.toChars(cp))
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
       .map(b => tokens(b & 0xff))
-}
-
-/** Decode nested pieces (`array<array<string>>`) back to text: per token,
-  * pieces concatenate as UTF-8 bytes — byte tokens contribute their byte,
-  * every other piece its encoded text (with the `##` continuation marker
-  * stripped at positions > 0 when `wordPiece`) — then tokens join with
-  * single spaces. Because byte runs land in one buffer per token, a
-  * multi-byte codepoint split across byte tokens reassembles exactly.
-  * This is the decode side of the byte-fallback gate; the plain
-  * (non-fallback) round-trip queries keep their pure-column decode.
-  */
-case class PieceDecode(child: Expression, wordPiece: Boolean)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_piece_decode"
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(ArrayType(StringType, _), _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_piece_decode needs array<array<string>>, got ${other.simpleString}")
-    }
-
-  def compute(arr: ArrayData): UTF8String = {
-    val n = arr.numElements()
-    val sb = new java.lang.StringBuilder
-    val buf = new java.io.ByteArrayOutputStream()
-    var j = 0
-    while (j < n) {
-      if (j > 0) sb.append(' ')
-      if (!arr.isNullAt(j)) {
-        val ps = arr.getArray(j)
-        val m = ps.numElements()
-        buf.reset()
-        var i = 0
-        while (i < m) {
-          var p = ps.getUTF8String(i).toString
-          if (wordPiece && i > 0 && p.length > 2 && p.startsWith("##") &&
-              !ByteTokens.isByteToken(p))
-            p = p.substring(2)
-          if (ByteTokens.isByteToken(p)) buf.write(ByteTokens.byteOf(p))
-          else buf.write(p.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          i += 1
-        }
-        sb.append(new String(buf.toByteArray,
-          java.nio.charset.StandardCharsets.UTF_8))
-      }
-      j += 1
-    }
-    UTF8String.fromString(sb.toString)
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pieceDecode", this,
-      classOf[PieceDecode].getName)
-    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $ref.compute($x);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PieceDecode =
-    copy(child = newChild)
 }

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.expr.{KernelCall, PositionedShingleHashes, ShingleHashes, TokenHashes}
 
 /** Similarity primitives for dedup / nearest-neighbor over text shingles and
   * embedding vectors. Column combinators only — higher-order functions
@@ -32,33 +33,26 @@ object SimilarityFunctions {
       size(array_union(a, b)).cast("double")
 
   /** Distinct 40-bit shingle hashes straight from the text — fused
-    * single-pass expression (graft.expr.ShingleHash40); value-identical
+    * single-pass kernel (graft.expr.ShingleHashes); value-identical
     * to array_distinct(transform(wordShingles(text, n), tokenHash40))
     * but ~50× cheaper (the HOF chain evaluates interpreted per element).
     */
-  def shingleHashes(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    val toks = TextFunctions.tokens(TextFunctions.normalized(text))
-    GraftBridge.column(graft.expr.ShingleHash40(GraftBridge.expression(toks), n))
-  }
+  def shingleHashes(text: Column, n: Int): Column =
+    KernelCall.column(TextFunctions.tokens(TextFunctions.normalized(text)),
+      ShingleHashes(n))
 
   /** Positioned (non-distinct) 60-bit n-gram hashes over a token array:
     * element j hashes tokens j..j+n-1; empty when the doc has fewer than n
-    * tokens. Fused single-pass expression
-    * (graft.expr.PositionedShingleHash60) — feeds span-level dedup, where
+    * tokens. Fused single-pass kernel
+    * (graft.expr.PositionedShingleHashes) — feeds span-level dedup, where
     * a duplicated hash must map back to the token positions it covers.
     */
-  def positionedShingleHashes(toks: Column, n: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.expr.PositionedShingleHash60(
-      GraftBridge.expression(toks), n))
-  }
+  def positionedShingleHashes(toks: Column, n: Int): Column =
+    KernelCall.column(toks, PositionedShingleHashes(n))
 
-  /** Per-token 40-bit hashes, fused (graft.expr.TokenHash40Array). */
-  def tokenHashes40(toks: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.expr.TokenHash40Array(GraftBridge.expression(toks)))
-  }
+  /** Per-token 40-bit hashes, fused (graft.expr.TokenHashes). */
+  def tokenHashes40(toks: Column): Column =
+    KernelCall.column(toks, TokenHashes(40))
 
   /** MinHash signature over string shingles: sig[i] = min over shingles of
     * (a_i·h40(s) + b_i) mod 2^40 — the standard estimator (Broder '97),
@@ -106,7 +100,7 @@ object SimilarityFunctions {
   def simhash60(toks: Column): Column = {
     import org.apache.spark.sql.GraftBridge
     GraftBridge.column(graft.expr.SimHash(
-      graft.expr.TokenHash60Array(GraftBridge.expression(toks)), 60))
+      KernelCall(GraftBridge.expression(toks), TokenHashes(60)), 60))
   }
 
   /** Hamming distance between two 64-bit-or-narrower hashes. */

@@ -4,7 +4,6 @@ import graft.core.{JsonLite, Snapshot, SnapshotStore}
 import graft.core.JsonLite.quote
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
-import scala.jdk.CollectionConverters._
 
 /** Content-addressed job memoization — the reference's headline feature
   * ("re-runs a job only if code or params changed").
@@ -104,43 +103,7 @@ final class JobRunner(
   /** In-memory DB of finished jobs, newest first per method — rebuilt from
     * the job dirs at startup (reference database.py update_workspace).
     */
-  private var db: List[JobRecord] = loadAll()
-
-  private def listDir[A](p: java.nio.file.Path)(f: Iterator[java.nio.file.Path] => A): A = {
-    val s = Files.list(p)
-    try f(s.iterator().asScala) finally s.close() // DirectoryStream leaks an fd until GC otherwise
-  }
-
-  private def loadAll(): List[JobRecord] = {
-    val dirs = listDir(Paths.get(root))(
-      _.filter(p => Files.exists(p.resolve("setup.json"))).toSeq)
-    def smap(x: Any): Map[String, String] =
-      x.asInstanceOf[Map[String, Any]].map { case (k, v) => k -> v.toString }
-    // a setup.json or post.json that does not parse (a torn write, a
-    // truncated copy) must not make the whole jobs root unopenable: a job
-    // without a readable request is left out (allocate still counts its
-    // id, so the id is never reused), one without readable outputs is
-    // unfinished — neither ever matches, and the same request rebuilds
-    // under a new job id
-    dirs.flatMap { d =>
-      scala.util.Try {
-        val setup = JsonLite.parse(Files.readString(d.resolve("setup.json")))
-          .asInstanceOf[Map[String, Any]]
-        JobRequest(setup("method").toString, setup("version").toString,
-          smap(setup("options")), smap(setup("inputs")))
-      }.toOption.map { req =>
-        val outputs = scala.util.Try(smap(JsonLite.parse(
-          Files.readString(d.resolve("post.json")))
-          .asInstanceOf[Map[String, Any]]("outputs"))).toOption
-        JobRecord(d.getFileName.toString, req,
-          outputs.getOrElse(Map.empty), finished = outputs.isDefined)
-      }
-      // numeric sort: lexicographic jobid order breaks past j-9999 (the
-      // %04d width overflows and j-10000 would sort before j-9999); a
-      // non-canonical dir name (j-0007.bak with a setup.json) must not
-      // crash the whole jobs root — sort it oldest
-    }.sortBy(_.jobid.stripPrefix("j-").toIntOption.getOrElse(-1)).reverse.toList
-  }
+  private var db: List[JobRecord] = JobRunner.loadAll(root)
 
   private def versionsOk(reqV: String, jobV: String): Boolean =
     reqV == jobV || equivalentVersions.getOrElse(reqV, Nil).contains(jobV)
@@ -157,7 +120,7 @@ final class JobRunner(
     Files.readString(jobDir(jobid).resolve(s"artifact_$name"))
 
   def artifactNames(jobid: String): Seq[String] =
-    listDir(jobDir(jobid))(
+    SnapshotStore.withPaths(Files.list(jobDir(jobid)))(
       _.map(_.getFileName.toString).filter(_.startsWith("artifact_"))
         .map(_.stripPrefix("artifact_")).toSeq.sorted)
 
@@ -191,7 +154,7 @@ final class JobRunner(
     }.toMap
 
   private def allocate(): String = {
-    val used = listDir(Paths.get(root))(
+    val used = SnapshotStore.withPaths(Files.list(Paths.get(root)))(
       _.map(_.getFileName.toString).filter(_.startsWith("j-"))
         .flatMap(s => s.stripPrefix("j-").toIntOption).toSeq)
     f"j-${(used.maxOption.getOrElse(-1) + 1)}%04d"
@@ -224,5 +187,41 @@ final class JobRunner(
       s"""{"outputs":${jmap(outputs)}}""")
     db = JobRecord(jobid, req, outputs, finished = true) :: db
     JobResult(jobid, cached = false, outputs)
+  }
+}
+
+object JobRunner {
+  /** Every job dir under `root` with a readable `setup.json`, newest
+    * first (reference database.py update_workspace).
+    */
+  def loadAll(root: String): List[JobRecord] = {
+    val dirs = SnapshotStore.withPaths(Files.list(Paths.get(root)))(
+      _.filter(p => Files.exists(p.resolve("setup.json"))).toSeq)
+    def smap(x: Any): Map[String, String] =
+      x.asInstanceOf[Map[String, Any]].map { case (k, v) => k -> v.toString }
+    // a setup.json or post.json that does not parse (a torn write, a
+    // truncated copy) must not make the whole jobs root unopenable: a job
+    // without a readable request is left out (allocate still counts its
+    // id, so the id is never reused), one without readable outputs is
+    // unfinished — neither ever matches, and the same request rebuilds
+    // under a new job id
+    dirs.flatMap { d =>
+      scala.util.Try {
+        val setup = JsonLite.parse(Files.readString(d.resolve("setup.json")))
+          .asInstanceOf[Map[String, Any]]
+        JobRequest(setup("method").toString, setup("version").toString,
+          smap(setup("options")), smap(setup("inputs")))
+      }.toOption.map { req =>
+        val outputs = scala.util.Try(smap(JsonLite.parse(
+          Files.readString(d.resolve("post.json")))
+          .asInstanceOf[Map[String, Any]]("outputs"))).toOption
+        JobRecord(d.getFileName.toString, req,
+          outputs.getOrElse(Map.empty), finished = outputs.isDefined)
+      }
+      // numeric sort: lexicographic jobid order breaks past j-9999 (the
+      // %04d width overflows and j-10000 would sort before j-9999); a
+      // non-canonical dir name (j-0007.bak with a setup.json) must not
+      // crash the whole jobs root — sort it oldest
+    }.sortBy(_.jobid.stripPrefix("j-").toIntOption.getOrElse(-1)).reverse.toList
   }
 }

@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => T}
-import graft.expr.{BpeEncode, BpeModel}
+import graft.expr.BpeModel
 
 /** Trainable byte-pair-encoding tokenizer (Sennrich et al. 2016) — the
   * real thing, replacing TextFunctions' ceil(len/6) "BPE-ish" token-count
@@ -27,13 +27,13 @@ import graft.expr.{BpeEncode, BpeModel}
   * convention as the reference implementations, and the one the
   * plain-Scala spec model replays.
   *
-  * Encoding is scan-side: [[graft.expr.BpeEncode]] with the merge table
-  * broadcast as a codegen reference object. Pieces come back NESTED per
-  * token, so decode (`concat_ws(' ', transform(pieces, concat_ws('')))`)
+  * Encoding is scan-side ([[Tokenizer]]): one [[graft.expr.SubwordEncode]]
+  * kernel with the merge table broadcast as its reference object. Pieces
+  * come back NESTED per token, so decode (`concat_ws(' ', transform(pieces, concat_ws('')))`)
   * is exact for any token — no end-of-word sentinel to collide with
   * hostile text.
   */
-object Bpe {
+object Bpe extends Tokenizer[BpeModel] {
 
   /** Distributed word count → driver merge loop. `numMerges` bounds the
     * learned vocabulary (merges + base characters); `maxWords` bounds
@@ -151,30 +151,5 @@ object Bpe {
     val alphabet = rows.filter(_.getLong(0) == -1L)
       .map(_.getString(1)).sorted
     new BpeModel(merges, fallback, alphabet)
-  }
-
-  /** Per-token nested pieces column: `array<array<string>>` aligned with
-    * the token array of `textCol`.
-    */
-  def pieces(textCol: Column, model: BpeModel): Column =
-    GraftBridge.column(BpeEncode(
-      GraftBridge.expression(T.tokens(T.normalized(textCol))), model))
-
-  /** Encode a corpus: (idCol, n_tokens, n_pieces, decoded) where decoded
-    * is the exact reconstruction (pieces concatenated per token, tokens
-    * joined by ' ') — equal to the normalized text by construction, which
-    * is what the driver's oracle hash-gates: any encode bug that loses or
-    * reorders a single character anywhere in the corpus breaks the gate.
-    * n_pieces is the subword cost the ceil(len/6) proxy approximated.
-    */
-  def encodeStats(df: DataFrame, idCol: String, textCol: String,
-                  model: BpeModel): DataFrame = {
-    import graft.core.Cols.{q => Q}
-    df.select(Q(idCol), pieces(Q(textCol), model).as("ps"))
-      .select(Q(idCol),
-        size(col("ps")).cast("long").as("n_tokens"),
-        size(flatten(col("ps"))).cast("long").as("n_pieces"),
-        concat_ws(" ",
-          transform(col("ps"), x => concat_ws("", x))).as("decoded"))
   }
 }

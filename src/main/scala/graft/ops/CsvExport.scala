@@ -3,8 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Cols.{q => Q}
+import graft.core.SnapshotStore
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import scala.jdk.CollectionConverters._
 
 /** csvexport (reference standard_methods/a_csvexport.py:38-229): dataset →
   * CSV with custom separator, quote modes (always/lazy/off), `none_as`
@@ -22,10 +22,15 @@ final case class CsvExportConfig(
     header: Boolean = true,
     sliced: Boolean = false,
     compression: String = "none",        // none | gzip
-    encoding: String = "utf-8")          // output charset; "bytes" writes
+    encoding: String = "utf-8") {        // output charset; "bytes" writes
                                          // byte-preserving strings back as
                                          // their raw bytes (inverse of
                                          // CsvImportConfig.encoding="bytes")
+  // every write path honours exactly these two; anything else would write
+  // some outputs uncompressed and others compressed
+  require(compression == "none" || compression == "gzip",
+    s"csvexport: compression must be none or gzip, got $compression")
+}
 
 object CsvExport {
 
@@ -113,11 +118,7 @@ object CsvExport {
     val noneAs = cfg.noneAs.getOrElse(name, cfg.noneAs.getOrElse("*", ""))
     val sep = cfg.separator
     val q = "\""
-    val base0 = df.schema(name).dataType.typeName match {
-      case "binary" => Q(name).cast("string")
-      case _        => Q(name).cast("string")
-    }
-    val base = coalesce(base0, lit(noneAs))
+    val base = coalesce(Q(name).cast("string"), lit(noneAs))
     cfg.quoteMode match {
       case "off" => base
       case "always" =>
@@ -258,8 +259,8 @@ object CsvExport {
         val w = lines.write.mode("overwrite").option("lineSep", cfg.lineSeparator)
         (if (gzip) w.option("compression", "gzip") else w).text(tmp)
       } else writeEncoded(lines, tmp, cfg, gzip)
-      val parts = Files.list(Paths.get(tmp)).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-")).toSeq.sortBy(_.toString)
+      val parts = SnapshotStore.withPaths(Files.list(Paths.get(tmp)))(
+        _.filter(_.getFileName.toString.startsWith("part-")).toSeq.sortBy(_.toString))
       val out = Paths.get(path)
       Files.deleteIfExists(out)
       val outCh = java.nio.channels.FileChannel.open(out,
@@ -287,8 +288,8 @@ object CsvExport {
         }
       } finally outCh.close()
       // best-effort cleanup of the staging dir
-      Files.walk(Paths.get(tmp)).iterator().asScala.toSeq.reverse
-        .foreach(Files.deleteIfExists(_))
+      SnapshotStore.withPaths(Files.walk(Paths.get(tmp)))(
+        _.toSeq.reverse.foreach(Files.deleteIfExists(_)))
     }
   }
 }

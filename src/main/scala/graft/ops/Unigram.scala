@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => T}
-import graft.expr.{Log2Fp, UnigramEncode, UnigramModel}
+import graft.expr.{Log2Fp, UnigramModel}
 
 /** Trainable unigram-LM tokenizer (Kudo 2018, "Subword Regularization:
   * Improving Neural Network Translation Models with Multiple Subword
@@ -38,12 +38,12 @@ import graft.expr.{Log2Fp, UnigramEncode, UnigramModel}
   * encode total); unseen codepoints at encode time segment as UNK
   * singles at a floor score, preserving exact reconstruction.
   *
-  * Encoding is scan-side: [[graft.expr.UnigramEncode]] with the scored
-  * piece table broadcast as a codegen reference object, nested pieces
-  * per token — byte-identical decode, no sentinel to collide with
-  * hostile text (the BPE discipline).
+  * Encoding is scan-side ([[Tokenizer]]): one [[graft.expr.SubwordEncode]]
+  * kernel with the scored piece table broadcast as its reference object,
+  * nested pieces per token — byte-identical decode, no sentinel to
+  * collide with hostile text (the BPE discipline).
   */
-object Unigram {
+object Unigram extends Tokenizer[UnigramModel] {
 
   /** Distributed word count → driver seed/EM/prune loop. With
     * `byteFallback`, the 256 [[graft.expr.ByteTokens]] are seeded into
@@ -130,7 +130,7 @@ object Unigram {
     while (it < emIters) {
       val use = collection.mutable.Map.empty[String, Long]
       words.foreach { case (cps, c) =>
-        model.segmentWord(cps.mkString).foreach { p =>
+        model.encodeWord(cps.mkString).foreach { p =>
           use(p) = use.getOrElse(p, 0L) + c
         }
       }
@@ -198,25 +198,5 @@ object Unigram {
           "with byte_fallback; refusing to arm the fallback path")
     }
     new UnigramModel(pieces, marked || byteFallback)
-  }
-
-  /** Per-token nested pieces column, aligned with the token array. */
-  def pieces(textCol: Column, model: UnigramModel): Column =
-    GraftBridge.column(UnigramEncode(
-      GraftBridge.expression(T.tokens(T.normalized(textCol))), model))
-
-  /** Encode a corpus: (idCol, n_tokens, n_pieces, decoded) — `decoded`
-    * is the exact reconstruction the oracle hash-gates, `n_pieces` the
-    * subword cost. Same contract as [[Bpe.encodeStats]].
-    */
-  def encodeStats(df: DataFrame, idCol: String, textCol: String,
-                  model: UnigramModel): DataFrame = {
-    import graft.core.Cols.{q => Q}
-    df.select(Q(idCol), pieces(Q(textCol), model).as("ps"))
-      .select(Q(idCol),
-        size(col("ps")).cast("long").as("n_tokens"),
-        size(flatten(col("ps"))).cast("long").as("n_pieces"),
-        concat_ws(" ",
-          transform(col("ps"), x => concat_ws("", x))).as("decoded"))
   }
 }

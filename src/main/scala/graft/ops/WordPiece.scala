@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => T}
-import graft.expr.{WordPieceEncode, WordPieceModel}
+import graft.expr.{KernelCall, WordPieceModel, WordSymbols}
 
 /** Trainable WordPiece tokenizer (Schuster & Nakajima 2012; the BERT
   * vocabulary convention of Devlin et al. 2019) — the third production
@@ -26,19 +26,10 @@ import graft.expr.{WordPieceEncode, WordPieceModel}
   * (token-hash shuffle, map-side combine, capped at maxWords
   * deterministically) is the only corpus-sized computation; the merge
   * loop is driver-side over the bounded table. Encoding is scan-side
-  * greedy longest-match ([[graft.expr.WordPieceEncode]]) with the
-  * vocabulary broadcast as a codegen reference object.
+  * greedy longest-match ([[Tokenizer]], [[graft.expr.SubwordEncode]])
+  * with the vocabulary broadcast as the kernel's reference object.
   */
-object WordPiece {
-
-  /** Per-word vocabulary symbols (initial codepoint plain, the rest
-    * ##-prefixed) — the coverage pass below explodes these. Codegen'd
-    * ([[graft.expr.WordPieceSymbols]]): main source keeps interpreted
-    * UDFs to test fixtures only.
-    */
-  private def wordSymbols(w: Column): Column =
-    GraftBridge.column(graft.expr.WordPieceSymbols(
-      GraftBridge.expression(w)))
+object WordPiece extends Tokenizer[WordPieceModel] {
 
   /** Distributed word count → driver likelihood-gain merge loop. A
     * second, alphabet-sized aggregation collects the DISTINCT symbols of
@@ -67,7 +58,7 @@ object WordPiece {
       .limit(maxWords)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     val baseSyms = wordCounts
-      .select(explode(wordSymbols(col("w"))).as("s"))
+      .select(explode(KernelCall.column(col("w"), WordSymbols)).as("s"))
       .distinct().collect().map(_.getString(0)).toSeq
     wordCounts.unpersist()
     trainFromCounts(counts, numMerges, baseSyms, byteFallback)
@@ -215,31 +206,15 @@ object WordPiece {
     new WordPieceModel(vocab, marked || byteFallback)
   }
 
-  /** Per-token nested pieces column (vocabulary form, `##` carried). */
-  def pieces(textCol: Column, model: WordPieceModel): Column =
-    GraftBridge.column(WordPieceEncode(
-      GraftBridge.expression(T.tokens(T.normalized(textCol))), model))
-
-  /** Encode a corpus: (idCol, n_tokens, n_pieces, decoded), `decoded`
-    * stripping the `##` continuation prefixes — exact reconstruction
-    * whenever no token fell to `[UNK]`, which the shared oracle then
-    * hash-gates corpus-wide (training seeds every corpus codepoint, so
-    * the gated run has no `[UNK]`; a hostile unseen codepoint is the
-    * documented lossy case, spec-covered).
+  /** Pieces carry the `##` continuation prefix (the vocabulary form);
+    * decode strips it only at continuation POSITIONS (i > 0): a token
+    * whose text literally starts with "##" emits that as its word-initial
+    * piece, which must survive decode verbatim. Exact whenever no token
+    * fell to `[UNK]` — training seeds every corpus codepoint, so the
+    * gated run has none; a hostile unseen codepoint is the documented
+    * lossy case, spec-covered.
     */
-  def encodeStats(df: DataFrame, idCol: String, textCol: String,
-                  model: WordPieceModel): DataFrame = {
-    import graft.core.Cols.{q => Q}
-    df.select(Q(idCol), pieces(Q(textCol), model).as("ps"))
-      .select(Q(idCol),
-        size(col("ps")).cast("long").as("n_tokens"),
-        size(flatten(col("ps"))).cast("long").as("n_pieces"),
-        // strip ## only at continuation POSITIONS (i > 0): a token whose
-        // text literally starts with "##" emits that as its word-initial
-        // piece, which must survive decode verbatim
-        concat_ws(" ", transform(col("ps"), x => concat_ws("",
-          transform(x, (p, i) => when(i === 0, p)
-            .otherwise(regexp_replace(p, lit("^##"), lit("")))))))
-          .as("decoded"))
-  }
+  override protected def joinPieces(ps: Column): Column =
+    concat_ws("", transform(ps, (p, i) => when(i === 0, p)
+      .otherwise(regexp_replace(p, lit("^##"), lit("")))))
 }

@@ -46,15 +46,12 @@ object Fixtures {
       val root = Paths.get(d)
       if (!Files.exists(root)) "absent"
       else {
-        val walk = Files.walk(root)
-        try {
-          val entries = walk.iterator().asScala
-            .filter(Files.isRegularFile(_))
+        val entries = SnapshotStore.withPaths(Files.walk(root))(
+          _.filter(Files.isRegularFile(_))
             .map(p => s"${root.relativize(p)}\u0001${Files.size(p)}\u0001" +
               s"${Files.getLastModifiedTime(p).toMillis}")
-            .toSeq.sorted
-          sha256(entries.mkString("\u0002"))
-        } finally walk.close()
+            .toSeq.sorted)
+        sha256(entries.mkString("\u0002"))
       }
     })
 
@@ -78,13 +75,12 @@ object Fixtures {
             .map(e => s"${e.getName}${e.getSize}${e.getCrc}").toSeq.sorted
           finally zf.close()
         } else {
-          val walk = Files.walk(p)
-          try walk.iterator().asScala.filter(Files.isRegularFile(_)).map { f =>
-            val crc = new java.util.zip.CRC32()
-            crc.update(Files.readAllBytes(f))
-            s"${p.relativize(f)}${Files.size(f)}${crc.getValue}"
-          }.toSeq.sorted
-          finally walk.close()
+          SnapshotStore.withPaths(Files.walk(p))(
+            _.filter(Files.isRegularFile(_)).map { f =>
+              val crc = new java.util.zip.CRC32()
+              crc.update(Files.readAllBytes(f))
+              s"${p.relativize(f)}${Files.size(f)}${crc.getValue}"
+            }.toSeq.sorted)
         }
       sha256(entries.mkString(""))
     }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import graft.core.{SnapshotStore, Tables}
 import graft.jobs._
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 /** Oracle-checked queries for the job/build layer: content-addressed
   * memoization (build twice ⇒ second run links every job; change a param ⇒
@@ -21,7 +20,8 @@ object JobsPack {
   private def freshDir(sub: String): String = {
     val d = Paths.get(s"${sys.props("user.dir")}/target/qtmp/$sub")
     if (Files.exists(d))
-      Files.walk(d).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+      SnapshotStore.withPaths(Files.walk(d))(
+        _.toSeq.reverse.foreach(Files.deleteIfExists(_)))
     Files.createDirectories(d)
     d.toString
   }

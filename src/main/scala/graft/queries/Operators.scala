@@ -1,9 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType, LongType}
 import graft.cli.Shell
 import graft.core.{IterateControl, SnapshotStore, Tables}
 import graft.ops._
@@ -19,15 +18,6 @@ object Operators {
     val d = s"${sys.props("user.dir")}/target/qtmp/$sub"
     new java.io.File(d).mkdirs()
     d
-  }
-
-  /** Attach the physical row position after a sort — captures the *actual*
-    * produced order (not a window re-derivation), so order bugs can't hide.
-    */
-  private[queries] def withPosition(df: DataFrame, posCol: String): DataFrame = {
-    val schema = StructType(df.schema.fields :+ StructField(posCol, LongType, false))
-    val rdd = df.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    df.sparkSession.createDataFrame(rdd, schema)
   }
 
   /** csvexport(nation) → csvimport → dataset_type == nation. */
@@ -210,7 +200,7 @@ object Operators {
       Seq(DatasetSort.SortCol("l_shipdate", asc = false),
           DatasetSort.SortCol("l_orderkey"), DatasetSort.SortCol("l_linenumber")),
       acrossSlices = true)
-    withPosition(sorted, "pos").filter(col("pos") < 100)
+    SnapshotStore.withPosition(sorted, "pos").filter(col("pos") < 100)
   }
 
   /** After hashpart, every key lives in exactly one partition. */
@@ -236,7 +226,7 @@ object Operators {
     val ev = Tables.events(s, dir).select(col("event_id"), col("event_type"))
     val scattered = Roundrobin(ev, 32)
     val restored = Unroundrobin(scattered, "event_id", slices = 8)
-    withPosition(restored, "pos").filter(col("pos") < 200)
+    SnapshotStore.withPosition(restored, "pos").filter(col("pos") < 200)
   }
 
   /** Checksum is identical across different partitionings/orders of the
@@ -417,7 +407,7 @@ object Operators {
       // global numbering via range-sort + zipWithIndex (withPosition) —
       // no single-partition window even in fixture code, and no
       // WindowExec warning polluting the bench tail
-      val numbered = withPosition(
+      val numbered = SnapshotStore.withPosition(
         Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_totalprice"))
           .orderBy(col("o_orderkey")),

@@ -16,7 +16,7 @@ object OracleGen {
   /** Word-trigram shingle CTEs shared by the ngram/minhash oracles —
     * mirrors SimilarityFunctions.wordShingles (distinct, chr(1)-joined so
     * token boundaries stay significant — identical to wordShingles'
-    * U+0001 separator and ShingleHash40.Sep — whole-text fallback when
+    * U+0001 separator and ShingleHashes — whole-text fallback when
     * fewer than n tokens) followed by the 40-bit md5 shingle hashing (set
     * semantics survive hashing; both engines apply the identical hash, so
     * even collisions replicate).

@@ -483,7 +483,7 @@ object TextPack {
     * window-re-derived) and must equal the oracle's row_number order.
     */
   def pipelineShuffle(s: SparkSession, dir: String): DataFrame =
-    Operators.withPosition(
+    graft.core.SnapshotStore.withPosition(
       TrainingPipeline.shuffled(
         Tables.documents(s, dir).select(col("doc_id")), "doc_id", "e1"),
       "pos")
@@ -1276,32 +1276,17 @@ object TextPack {
       new String(Character.toChars(0x1f773)),
       "≠÷", "ᚠᚢᚦ", "☃")
 
-  /** BYTE-FALLBACK round-trip — the three tokenizers under the
-    * SentencePiece byte_fallback convention: models train on HALF the
-    * corpus (even doc_ids), every vocabulary seeds the 256
-    * [[graft.expr.ByteTokens]], and encoding then runs over EVERY
-    * document with a hostile suffix appended ([[BfHostile]]) so unseen
-    * codepoints are guaranteed at encode time. Uncovered codepoints
-    * decompose to the byte tokens of their UTF-8 bytes — `[UNK]` is
-    * impossible — and the scan-side [[graft.expr.PieceDecode]] inverts
-    * them, so decode∘encode == normalized text corpus-wide: the hash
-    * gate the plain round-trips could only claim for in-training
-    * alphabets now holds for arbitrary input.
+  /** Every document with its [[BfHostile]] suffix, encoded by all three
+    * fallback models and decoded back by the
+    * [[graft.expr.DecodePieces]] kernel.
     */
-  def byteFallbackQ(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    val d = Tables.documents(s, dir)
-    val half = d.filter(col("doc_id") % 2 === 0)
-    val bpe = Bpe.train(half, "text", numMerges = 120, byteFallback = true)
-    val uni = Unigram.train(half, "text", vocabSize = 200,
-      byteFallback = true)
-    val wp = WordPiece.train(half, "text", numMerges = 120,
-      byteFallback = true)
+  private def byteFallbackDecoded(d: DataFrame, bpe: graft.expr.BpeModel,
+                                  uni: graft.expr.UnigramModel,
+                                  wp: graft.expr.WordPieceModel): DataFrame = {
     val hx = element_at(lit(BfHostile),
       (col("doc_id") % BfHostile.length).cast("int") + 1)
     def dec(pieces: org.apache.spark.sql.Column, wordPiece: Boolean) =
-      GraftBridge.column(graft.expr.PieceDecode(
-        GraftBridge.expression(pieces), wordPiece))
+      graft.expr.KernelCall.column(pieces, graft.expr.DecodePieces(wordPiece))
     d.select(col("doc_id"),
         concat(col("text"), lit(" "), hx).as("t"))
       .select(col("doc_id"),
@@ -1315,6 +1300,29 @@ object TextPack {
         dec(col("wpp"), wordPiece = true).as("wp_dec"))
   }
 
+  /** BYTE-FALLBACK round-trip — the three tokenizers under the
+    * SentencePiece byte_fallback convention: models train on HALF the
+    * corpus (even doc_ids), every vocabulary seeds the 256
+    * [[graft.expr.ByteTokens]], and encoding then runs over EVERY
+    * document with a hostile suffix appended ([[BfHostile]]) so unseen
+    * codepoints are guaranteed at encode time. Uncovered codepoints
+    * decompose to the byte tokens of their UTF-8 bytes — `[UNK]` is
+    * impossible — and the scan-side [[graft.expr.DecodePieces]] inverts
+    * them, so decode∘encode == normalized text corpus-wide: the hash
+    * gate the plain round-trips could only claim for in-training
+    * alphabets now holds for arbitrary input.
+    */
+  def byteFallbackQ(s: SparkSession, dir: String): DataFrame = {
+    val d = Tables.documents(s, dir)
+    val half = d.filter(col("doc_id") % 2 === 0)
+    val bpe = Bpe.train(half, "text", numMerges = 120, byteFallback = true)
+    val uni = Unigram.train(half, "text", vocabSize = 200,
+      byteFallback = true)
+    val wp = WordPiece.train(half, "text", numMerges = 120,
+      byteFallback = true)
+    byteFallbackDecoded(d, bpe, uni, wp)
+  }
+
   /** Byte-fallback against PERSISTED models — the production shape: all
     * three fallback vocabularies (byte tokens included — they are real
     * vocabulary members) land as snapshots via the memoized job, models
@@ -1324,7 +1332,6 @@ object TextPack {
     * some document's reconstruction hash.
     */
   def byteFallbackPersistedQ(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
     val d = Tables.documents(s, dir)
     val (store, _) = Fixtures(s, dir, "job_bytefallback_models") { st =>
       val half = d.filter(col("doc_id") % 2 === 0)
@@ -1345,22 +1352,7 @@ object TextPack {
       byteFallback = true)
     val wp = WordPiece.modelFromDf(store.readArtifact("bf_wp_vocab", ArtifactFormats.TokenizerModel),
       byteFallback = true)
-    val hx = element_at(lit(BfHostile),
-      (col("doc_id") % BfHostile.length).cast("int") + 1)
-    def dec(pieces: org.apache.spark.sql.Column, wordPiece: Boolean) =
-      GraftBridge.column(graft.expr.PieceDecode(
-        GraftBridge.expression(pieces), wordPiece))
-    d.select(col("doc_id"),
-        concat(col("text"), lit(" "), hx).as("t"))
-      .select(col("doc_id"),
-        Bpe.pieces(col("t"), bpe).as("bp"),
-        Unigram.pieces(col("t"), uni).as("up"),
-        WordPiece.pieces(col("t"), wp).as("wpp"))
-      .select(col("doc_id"),
-        size(col("bp")).cast("long").as("n_tokens"),
-        dec(col("bp"), wordPiece = false).as("bpe_dec"),
-        dec(col("up"), wordPiece = false).as("uni_dec"),
-        dec(col("wpp"), wordPiece = true).as("wp_dec"))
+    byteFallbackDecoded(d, bpe, uni, wp)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

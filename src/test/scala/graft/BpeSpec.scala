@@ -5,7 +5,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.apache.spark.sql.functions._
 import graft.ops.Bpe
-import graft.expr.{BpeEncode, BpeModel}
+import graft.expr.BpeModel
 import TestSpark.spark
 
 /** The BPE tokenizer: the merge loop against hand-computed merges, the

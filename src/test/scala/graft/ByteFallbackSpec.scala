@@ -3,14 +3,14 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.UTF8String
-import graft.expr.{ByteTokens, PieceDecode, UnigramModel, WordPieceModel}
+import graft.expr.{ByteTokens, DecodePieces, UnigramModel, WordPieceModel}
 import graft.ops.{Bpe, Unigram, WordPiece}
 
 /** Byte-fallback laws across the tokenizer family: the SentencePiece
   * byte_fallback convention — unseen codepoints decompose to `<0xHH>`
   * byte tokens (UNK impossible), vocabularies close at trained ∪ byte
   * tokens, literal byte-token TEXT never collides with the tokens
-  * themselves, and PieceDecode inverts everything exactly.
+  * themselves, and DecodePieces inverts everything exactly.
   */
 class ByteFallbackSpec extends AnyFunSuite {
 
@@ -19,8 +19,7 @@ class ByteFallbackSpec extends AnyFunSuite {
       t.map(p => UTF8String.fromString(p): AnyRef).toArray): AnyRef).toArray)
 
   private def decode(tokens: Seq[Seq[String]], wp: Boolean): String =
-    PieceDecode(org.apache.spark.sql.catalyst.expressions.Literal(1), wp)
-      .compute(nested(tokens)).toString
+    DecodePieces(wp)(nested(tokens)).toString
 
   test("ByteTokens: shape, parse, codepoint decomposition") {
     assert(ByteTokens.tokens.length == 256)
@@ -103,17 +102,17 @@ class ByteFallbackSpec extends AnyFunSuite {
       (Array(("a", sc), ("b", sc), ("ab", sc)) ++
         ByteTokens.tokens.map((_, sc * 30))).sortBy(_._1),
       byteFallback = true)
-    assert(m.segmentWord("azb").toSeq == Seq("a", "<0x7A>", "b"))
-    assert(m.segmentWord("ab").toSeq == Seq("ab"))
+    assert(m.encodeWord("azb").toSeq == Seq("a", "<0x7A>", "b"))
+    assert(m.encodeWord("ab").toSeq == Seq("ab"))
     // astral + literal byte-token text both reconstruct
-    assert(decode(Seq(m.segmentWord("<0x41>").toSeq), wp = false) ==
+    assert(decode(Seq(m.encodeWord("<0x41>").toSeq), wp = false) ==
       "<0x41>")
     val astral = new String(Character.toChars(0x1f773))
-    assert(decode(Seq(m.segmentWord("a" + astral).toSeq), wp = false) ==
+    assert(decode(Seq(m.encodeWord("a" + astral).toSeq), wp = false) ==
       "a" + astral)
     // non-fallback: the literal UNK single survives (legacy semantics)
     val m0 = new UnigramModel(Array(("a", sc)))
-    assert(m0.segmentWord("az").toSeq == Seq("a", "z"))
+    assert(m0.encodeWord("az").toSeq == Seq("a", "z"))
   }
 
   test("Unigram fallback trainer: seeds byte tokens at the floor") {
@@ -123,9 +122,9 @@ class ByteFallbackSpec extends AnyFunSuite {
     assert(byteScores.length == 256)
     assert(byteScores.map(_._2).distinct.length == 1, "one floor score")
     // seeded tokens never text-match; unseen codepoints decompose
-    assert(m.segmentWord("<0x41>").forall(p =>
+    assert(m.encodeWord("<0x41>").forall(p =>
       ByteTokens.isByteToken(p) || p.length == 1))
-    assert(decode(Seq(m.segmentWord("azb").toSeq), wp = false) == "azb")
+    assert(decode(Seq(m.encodeWord("azb").toSeq), wp = false) == "azb")
   }
 
   test("BPE fallback: out-of-alphabet singles decompose, merges intact") {
@@ -179,7 +178,7 @@ class ByteFallbackSpec extends AnyFunSuite {
     assert(back.byteFallback)
     assert(back.pieces.toSeq == m.pieces.toSeq, "marker row stripped")
     for (w <- Seq("abab", "azb", "<0x41>"))
-      assert(back.segmentWord(w).toSeq == m.segmentWord(w).toSeq, w)
+      assert(back.encodeWord(w).toSeq == m.encodeWord(w).toSeq, w)
     // non-fallback snapshot: no marker, reloads non-fallback; FORCING
     // the flag against it fails loudly instead of re-arming silently
     val m0 = Unigram.trainFromCounts(Seq(("abab", 10L)), vocabSize = 6)

@@ -159,6 +159,22 @@ class CsvImportSpec extends AnyFunSuite {
       .collect().head.getString(1) == "val42")
   }
 
+  test("compression other than none or gzip fails before anything is written") {
+    val s = spark
+    import s.implicits._
+    val df = Seq(("1", "2")).toDF("a", "b")
+    val dir = tmpDir("csv_bad_codec")
+    Seq(CsvExportConfig(), CsvExportConfig(sliced = true),
+        CsvExportConfig(encoding = "iso-8859-1")).foreach { cfg =>
+      val out = s"$dir/out.csv"
+      val ex = intercept[IllegalArgumentException] {
+        CsvExport(df, out, cfg.copy(compression = "bzip2"))
+      }
+      assert(ex.getMessage.contains("bzip2"))
+      assert(!Files.exists(Paths.get(out)) && !Files.exists(Paths.get(s"$out.parts")))
+    }
+  }
+
   test("lineSeparator reaches data rows") {
     val s = spark
     import s.implicits._

@@ -244,10 +244,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
       val viaSql = s.sql(
         "SELECT graft_piece_decode(ps, false) AS d FROM pieces_v")
         .collect().map(_.getString(0)).toSeq
-      import org.apache.spark.sql.GraftBridge
-      val viaApi = pieces.select(GraftBridge.column(
-        graft.expr.PieceDecode(GraftBridge.expression(
-          org.apache.spark.sql.functions.col("ps")), wordPiece = false))
+      val viaApi = pieces.select(graft.expr.KernelCall.column(
+        org.apache.spark.sql.functions.col("ps"),
+        graft.expr.DecodePieces(wordPiece = false))
         .as("d")).collect().map(_.getString(0)).toSeq
       assert(viaSql == viaApi)
       assert(viaSql == Seq("abab z☃", "<0x41> ba"),

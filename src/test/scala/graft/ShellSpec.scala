@@ -91,6 +91,19 @@ class ShellSpec extends AnyFunSuite {
     assert(mi.contains("meth_y"))
   }
 
+  test("method skips a job dir whose setup.json is truncated") {
+    val root = tmpDir("shell_torn")
+    val jobs = new graft.jobs.JobRunner(store(), s"$root/jobs")
+    jobs.build(graft.jobs.JobRequest("meth_ok", "1")) { _ => Map.empty }
+    val torn = java.nio.file.Paths.get(s"$root/jobs/j-0001")
+    java.nio.file.Files.createDirectories(torn)
+    java.nio.file.Files.writeString(torn.resolve("setup.json"),
+      "{\"method\":\"meth_torn\",\"vers")
+    val mi = Shell.methodInfo(s"$root/jobs")
+    assert(mi.contains("meth_ok") && mi.contains("1 jobs"))
+    assert(!mi.contains("meth_torn"))
+  }
+
   test("grep filters rows by regex across selected columns") {
     val st = store()
     val hits = Shell.grepDf(st,

@@ -35,15 +35,14 @@ class SketchesSpec extends AnyFunSuite {
   test("ShingleHash40 joins with the separator exactly like concat_ws") {
     val s = spark
     import s.implicits._
-    import org.apache.spark.sql.GraftBridge
     // raw token arrays, bypassing the tokenizer: an empty leading token
     // must still get the separator (concat_ws puts it between non-null
     // elements even when one is empty); nulls are skipped without a sep
     val sep = "\u0001"
     def hashesOf(toks: Seq[String], n: Int): Seq[Long] =
       Seq(Tuple1(toks)).toDF("toks")
-        .select(GraftBridge.column(graft.expr.ShingleHash40(
-          GraftBridge.expression(col("toks")), n)))
+        .select(graft.expr.KernelCall.column(col("toks"),
+          graft.expr.ShingleHashes(n)))
         .collect().head.getSeq[Long](0)
     assert(hashesOf(Seq("", "a"), 2) == Seq(h40(sep + "a")))
     assert(hashesOf(Seq("a", "b", "c"), 2) ==

@@ -42,7 +42,7 @@ class UnigramSpec extends AnyFunSuite {
     // ab+c = -8, a+bc = -8, abc = -8, a+b+c = -10: three-way tie at -8;
     // any is valid — Viterbi must RETURN one of the maxima
     for (w <- Seq("abc", "ab", "aab", "abcabc", "aaa", "cba", "a", "")) {
-      val got = m.segmentWord(w)
+      val got = m.encodeWord(w)
       assert(got.mkString == w, s"'$w' reconstruction")
       if (w.nonEmpty) {
         val total = got.map(p => m.pieces.toMap.getOrElse(p, m.unkScore)).sum
@@ -64,7 +64,7 @@ class UnigramSpec extends AnyFunSuite {
       val (vocab, word) = gen.pureApply(Gen.Parameters.default, seed)
       seed = seed.next
       val m = new UnigramModel(vocab.sortBy(_._1))
-      val got = m.segmentWord(word)
+      val got = m.encodeWord(word)
       assert(got.mkString == word, s"'$word' reconstruction")
       if (word.nonEmpty) {
         val total = got.map(p => vocab.toMap.getOrElse(p, m.unkScore)).sum
@@ -102,7 +102,7 @@ class UnigramSpec extends AnyFunSuite {
     val m = Unigram.trainFromCounts(Seq(("hello", 5L), ("world", 3L)), 10)
     for (w <- Seq("hello", "world", "helloworld", "xyzzy", "\u0000\u0001",
         "émoji😀", "", "h", "ολα")) {
-      assert(m.segmentWord(w).mkString == w, s"'$w'")
+      assert(m.encodeWord(w).mkString == w, s"'$w'")
     }
   }
 
