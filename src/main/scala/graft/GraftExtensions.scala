@@ -15,20 +15,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Only expressions whose semantics SQL can't already express are
   * registered (the Column-combinator operators are plain SQL once
-  * written); each function builds the same codegen'd Expression the Scala
-  * API uses, so plans are identical whichever surface declared them.
+  * written); each function builds the same expression the Scala API
+  * uses, so plans are identical whichever surface declared them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
-  import graft.expr.{DecodePieces, KernelCall, ShingleHashes, TokenHashes}
+  import graft.expr.{BigNumCanon, DecodePieces, DotLong, DotProduct, KernelCall,
+    Log2Fp, MinHashSig, QuantizeInt8, QuantizeLong, ShingleHashes, SimHash,
+    SqDistLong, StringArrayEntropyFp, TokenHashes, UnicodeNormalize, Utf8EntropyFp}
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // usage strings document intent here; ExpressionInfo's extended-doc
-    // constructors validate a markup format, so registration passes only
-    // (class, db, name)
     def inject(name: String, usage: String)(b: Seq[Expression] => Expression): Unit =
       ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftExtensions].getName, null, name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
         b))
 
     inject("graft_shingle_hashes",
@@ -39,12 +38,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject("graft_minhash_sig",
       "graft_minhash_sig(hashes, k) - k-slot minhash signature of a long-array") {
       args => expect(args, 2)
-        graft.expr.MinHashSig(args(0), litInt(args(1), "k"))
+        KernelCall(args(0), MinHashSig(litInt(args(1), "k")))
     }
     inject("graft_simhash",
       "graft_simhash(hashes, bits) - simhash of a token-hash array") {
       args => expect(args, 2)
-        graft.expr.SimHash(args(0), litInt(args(1), "bits"))
+        KernelCall(args(0), SimHash(litInt(args(1), "bits")))
     }
     inject("graft_token_hashes",
       "graft_token_hashes(tokens) - per-token 40-bit hashes (non-distinct)") {
@@ -54,42 +53,42 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject("graft_dot",
       "graft_dot(a, b) - sequential-fold dot product of two double arrays") {
       args => expect(args, 2)
-        graft.expr.DotProduct(args(0), args(1))
+        KernelCall(args, DotProduct)
     }
     inject("graft_sqdist",
       "graft_sqdist(a, b) - squared Euclidean distance of two long arrays") {
       args => expect(args, 2)
-        graft.expr.SqDistLong(args(0), args(1))
+        KernelCall(args, SqDistLong)
     }
     inject("graft_dot_long",
       "graft_dot_long(a, b) - sequential-fold dot product of two long arrays") {
       args => expect(args, 2)
-        graft.expr.DotLong(args(0), args(1))
+        KernelCall(args, DotLong)
     }
     inject("graft_log2fp",
       "graft_log2fp(x) - integer-exact 2^20-scaled log2 of a positive BIGINT") {
       args => expect(args, 1)
-        graft.expr.Log2Fp(args(0))
+        KernelCall(args(0), Log2Fp)
     }
     inject("graft_quantize",
       "graft_quantize(v, shift) - floor(x * 2^shift) per element as longs") {
       args => expect(args, 2)
-        graft.expr.QuantizeLong(args(0), litInt(args(1), "shift"))
+        KernelCall(args(0), QuantizeLong(litInt(args(1), "shift"))())
     }
     inject("graft_quantize_int8",
       "graft_quantize_int8(v) - struct(scale, q): symmetric int8 codes of a double array") {
       args => expect(args, 1)
-        graft.expr.QuantizeInt8(args(0))
+        KernelCall(args(0), QuantizeInt8)
     }
     inject("graft_unicode_normalize",
       "graft_unicode_normalize(s, form) - Unicode NFC/NFD/NFKC/NFKD normalization") {
       args => expect(args, 2)
-        graft.expr.UnicodeNormalize(args(0), litStr(args(1), "form"))
+        KernelCall(args(0), UnicodeNormalize(litStr(args(1), "form")))
     }
     inject("graft_bignum",
       "graft_bignum(s) - canonical big integer (reference number range), null if invalid") {
       args => expect(args, 1)
-        graft.expr.BigNumCanon(args(0))
+        KernelCall(args(0), BigNumCanon)
     }
     inject("graft_bignum_sum",
       "graft_bignum_sum(s) - exact arbitrary-precision SUM of canonical bignum strings") {
@@ -104,12 +103,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject("graft_char_entropy_fp",
       "graft_char_entropy_fp(s) - struct(n, ent_fp): integer-exact code-point entropy, n*H*2^20") {
       args => expect(args, 1)
-        graft.expr.Utf8EntropyFp(args(0))
+        KernelCall(args(0), Utf8EntropyFp)
     }
     inject("graft_token_entropy_fp",
       "graft_token_entropy_fp(s) - struct(n, ent_fp): entropy of the normalized token multiset") {
       args => expect(args, 1)
-        graft.expr.StringArrayEntropyFp(tokensExpr(args(0)))
+        KernelCall(tokensExpr(args(0)), StringArrayEntropyFp)
     }
     inject("graft_jpeg_meta",
       "graft_jpeg_meta(bin) - struct(width, height, components) via the JPEG SOI/SOF marker walk") {
@@ -209,8 +208,8 @@ private object GraftExtensions {
   }
 
   /** Parameters that shape the expression (k, n, bits, form) must be
-    * foldable literals — they pick the generated code, they can't vary by
-    * row.
+    * foldable literals — they are kernel parameters, fixed for the whole
+    * query, so they can't vary by row.
     */
   private def litInt(e: Expression, what: String): Int = e match {
     case Literal(v: Int, IntegerType) => v

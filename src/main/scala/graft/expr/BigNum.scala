@@ -4,9 +4,8 @@ import java.math.BigInteger
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -64,29 +63,17 @@ object BigNumHelper {
 }
 
 /** dataset_type `number:bignum` — exact integer canonicalization beyond
-  * DECIMAL(38,0), to the reference's ±(2^1007−1). Codegen'd scan-side
-  * scalar; invalid or out-of-range input nulls out (bad value).
+  * DECIMAL(38,0), to the reference's ±(2^1007−1) ([[BigNumHelper.canon]]).
+  * A scan-side kernel; invalid or out-of-range input nulls out (bad
+  * value).
   */
-case class BigNumCanon(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string child, got ${child.dataType.catalogString}")
-  override def dataType: DataType = StringType
+case object BigNumCanon extends Kernel1[UTF8String, UTF8String] {
+  def prettyName: String = "graft_bignum_canon"
+  def inputType: DataType = StringType
+  def dataType: DataType = StringType
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_bignum_canon"
 
-  override def nullSafeEval(input: Any): Any =
-    BigNumHelper.canon(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""${ev.value} = graft.expr.BigNumHelper.canon($c);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): BigNumCanon =
-    copy(child = newChild)
+  def apply(s: UTF8String): UTF8String = BigNumHelper.canon(s)
 }
 
 /** Exact arbitrary-precision SUM over canonical bignum strings — the

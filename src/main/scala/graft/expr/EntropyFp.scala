@@ -1,8 +1,6 @@
 package graft.expr
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,13 +26,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * c_k·log2fp(n) ≤ n·63·2^20, so documents to ~2^37 symbols are exact
   * in a Long; addExact guards the impossible rest.
   */
-object EntropyFpHelper {
+object EntropyFp {
 
-  private def entropyOf(counts: java.util.HashMap[_, Long]): Array[Long] = {
+  /** struct(n, ent_fp) of a symbol multiset given as its counts. */
+  def of(counts: java.util.HashMap[_, Long]): InternalRow = {
     var n = 0L
     val it0 = counts.values().iterator()
     while (it0.hasNext) n = Math.addExact(n, it0.next())
-    if (n == 0L) return Array(0L, 0L)
+    if (n == 0L) return InternalRow(0L, 0L)
     val ln = Log2Fp.compute(n)
     var ent = 0L
     val it = counts.values().iterator()
@@ -43,33 +42,51 @@ object EntropyFpHelper {
       ent = Math.addExact(ent,
         Math.multiplyExact(c, ln - Log2Fp.compute(c)))
     }
-    Array(n, ent)
+    InternalRow(n, ent)
   }
 
-  /** (n_codepoints, ent_fp) over the string's Unicode code points —
-    * combining marks count separately (DuckDB's per-char split uses the
-    * same convention, so the replay is exact).
-    */
-  def utf8Entropy(s: UTF8String): InternalRow = {
+  val EntropyType: StructType = StructType(Seq(
+    StructField("n", LongType, nullable = false),
+    StructField("ent_fp", LongType, nullable = false)))
+}
+
+/** Code-point entropy of a string: struct(n_codepoints, ent_fp) over its
+  * Unicode code points — combining marks count separately (DuckDB's
+  * per-char split uses the same convention, so the replay is exact). It
+  * never returns null for a non-null string; the result stays declared
+  * nullable, as it always was.
+  */
+case object Utf8EntropyFp extends Kernel1[UTF8String, InternalRow] {
+  def prettyName: String = "graft_char_entropy_fp"
+  def inputType: DataType = StringType
+  def dataType: DataType = EntropyFp.EntropyType
+  override def nullable: Boolean = true
+
+  def apply(s: UTF8String): InternalRow = {
     val counts = new java.util.HashMap[Integer, Long]()
     val str = s.toString
     var i = 0
-    var n = 0L
     while (i < str.length) {
       val cp = str.codePointAt(i)
       counts.merge(cp, 1L, (a, b) => a + b)
-      n += 1
       i += Character.charCount(cp)
     }
-    val Array(nn, ent) = entropyOf(counts)
-    new GenericInternalRow(Array[Any](nn, ent))
+    EntropyFp.of(counts)
   }
+}
 
-  /** (n_tokens, ent_fp) over an array of token strings (null elements
-    * skipped — the tokenizer never emits them, but hostile arrays must
-    * not crash the scan).
-    */
-  def stringArrayEntropy(a: ArrayData): InternalRow = {
+/** Entropy of an array<string> symbol multiset: struct(n_tokens, ent_fp);
+  * null elements are skipped (the tokenizer never emits them, but hostile
+  * arrays must not crash the scan). Declared nullable like
+  * [[Utf8EntropyFp]].
+  */
+case object StringArrayEntropyFp extends Kernel1[ArrayData, InternalRow] {
+  def prettyName: String = "graft_token_entropy_fp"
+  def inputType: DataType = KernelCall.Strings
+  def dataType: DataType = EntropyFp.EntropyType
+  override def nullable: Boolean = true
+
+  def apply(a: ArrayData): InternalRow = {
     val counts = new java.util.HashMap[String, Long]()
     var i = 0
     while (i < a.numElements()) {
@@ -78,41 +95,6 @@ object EntropyFpHelper {
       }
       i += 1
     }
-    val Array(n, ent) = entropyOf(counts)
-    new GenericInternalRow(Array[Any](n, ent))
+    EntropyFp.of(counts)
   }
-
-  val EntropyType: StructType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("ent_fp", LongType, nullable = false)))
-}
-
-/** Code-point entropy of a string: struct(n, ent_fp); null in → null. */
-case class Utf8EntropyFp(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = EntropyFpHelper.EntropyType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_char_entropy_fp"
-  override def nullSafeEval(input: Any): Any =
-    EntropyFpHelper.utf8Entropy(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.expr.EntropyFpHelper.utf8Entropy($c);"
-    })
-  override protected def withNewChildInternal(newChild: Expression): Utf8EntropyFp =
-    copy(child = newChild)
-}
-
-/** Entropy of an array<string> symbol multiset: struct(n, ent_fp). */
-case class StringArrayEntropyFp(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = EntropyFpHelper.EntropyType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_token_entropy_fp"
-  override def nullSafeEval(input: Any): Any =
-    EntropyFpHelper.stringArrayEntropy(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.expr.EntropyFpHelper.stringArrayEntropy($c);"
-    })
-  override protected def withNewChildInternal(newChild: Expression): StringArrayEntropyFp =
-    copy(child = newChild)
 }

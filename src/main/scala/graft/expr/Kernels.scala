@@ -1,73 +1,145 @@
 package graft.expr
 
 import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext,
+  ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** A per-row kernel: one compiled Scala function from a column value to a
-  * column value, with the parameters or model it needs. [[KernelCall]] is
-  * the one Catalyst expression that runs it. Kernels are case classes, so
-  * equal parameters give equal kernels (models compare by reference),
-  * which is what CSE and exchange reuse compare.
+/** A per-row kernel: one compiled Scala function from one or two column
+  * values to a column value, with the parameters or model it needs.
+  * [[KernelCall]] is the one Catalyst expression that runs it. Kernels are
+  * case classes, so equal parameters give equal kernels (arrays and models
+  * compare by reference), which is what CSE and exchange reuse compare.
   *
   * `apply` takes and returns Catalyst's internal values (`ArrayData`,
-  * `UTF8String`); it never sees a null input.
+  * `UTF8String`, `InternalRow`, primitives); it never sees a null input.
   */
-abstract class Kernel[I, O] extends Product with Serializable {
+sealed abstract class Kernel extends Product with Serializable {
   /** The SQL function name, shown in plans. */
   def prettyName: String
-  /** The child type it reads; array nullability is not checked. */
-  def inputType: DataType
+  /** The child types it reads, one per argument. */
+  def inputTypes: Seq[DataType]
   def dataType: DataType
-  def apply(in: I): O
-}
+  /** Whether `apply` may return null for non-null inputs. A primitive
+    * result then comes boxed, so null can be told from a value.
+    */
+  def nullable: Boolean = false
 
-/** Runs a [[Kernel]] on its child: null in, null out. Codegen binds the
-  * kernel as a reference object typed as its concrete class and emits
-  * `ev.value = kernel.apply(c)` — a direct call into compiled Scala, so
-  * the operator stays inside WholeStageCodegen without inlining a string
-  * algorithm into generated Java.
-  */
-case class KernelCall(child: Expression, kernel: Kernel[_, _])
-    extends UnaryExpression {
-  override def dataType: DataType = kernel.dataType
-  override def prettyName: String = kernel.prettyName
-  override protected def stringArgs: Iterator[Any] =
-    Iterator(child) ++ kernel.productIterator
-
-  override def checkInputDataTypes(): TypeCheckResult = {
+  /** This kernel set up for children of `types`, or None when it cannot
+    * read them. Array nullability is not compared. A kernel that reads
+    * more than one input type overrides this to pick its reader.
+    */
+  def on(types: Seq[DataType]): Option[Kernel] = {
     def shape(t: DataType): DataType = t match {
       case ArrayType(e, _) => ArrayType(shape(e))
       case other           => other
     }
-    if (shape(child.dataType) == shape(kernel.inputType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName needs " +
-      s"${kernel.inputType.simpleString}, got ${child.dataType.simpleString}")
+    if (types.map(shape) == inputTypes.map(shape)) Some(this) else None
   }
+}
 
-  override def nullSafeEval(input: Any): Any =
-    kernel.asInstanceOf[Kernel[Any, Any]](input)
+/** A kernel of one argument. */
+abstract class Kernel1[I, O] extends Kernel {
+  def inputType: DataType
+  final def inputTypes: Seq[DataType] = Seq(inputType)
+  def apply(in: I): O
+}
+
+/** A kernel of two arguments. */
+abstract class Kernel2[A, B, O] extends Kernel {
+  def apply(a: A, b: B): O
+}
+
+/** Runs a [[Kernel]] on its children: a null child gives null, and so
+  * does a nullable kernel's null result. Codegen binds the kernel as a
+  * reference object typed as its concrete class and emits
+  * `kernel.apply(c0[, c1])`: a direct call into compiled Scala, so the
+  * operator stays inside WholeStageCodegen, and kernel parameters never
+  * reach the generated source, which is therefore the same for every
+  * parameter value (K-means iterations reuse one compiled class).
+  */
+case class KernelCall(children: Seq[Expression], kernel: Kernel)
+    extends Expression {
+  override def dataType: DataType = kernel.dataType
+  override def nullable: Boolean = kernel.nullable || children.exists(_.nullable)
+  override def prettyName: String = kernel.prettyName
+  override protected def stringArgs: Iterator[Any] =
+    children.iterator ++ kernel.productIterator
+
+  @transient private lazy val bound: Option[Kernel] =
+    kernel.on(children.map(_.dataType))
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (bound.isDefined) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName needs " +
+      s"${kernel.inputTypes.map(_.simpleString).mkString(", ")}, got " +
+      children.map(_.dataType.simpleString).mkString(", "))
+
+  override def eval(input: InternalRow): Any = {
+    val a = children.head.eval(input)
+    if (a == null) null
+    else bound.get match {
+      case k: Kernel1[Any, Any] @unchecked => k(a)
+      case k: Kernel2[Any, Any, Any] @unchecked =>
+        val b = children(1).eval(input)
+        if (b == null) null else k(a, b)
+    }
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("kernel", kernel, kernel.getClass.getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.apply($c);")
+    val k = bound.get
+    val ref = ctx.addReferenceObj("kernel", k, k.getClass.getName)
+    val args = children.map(_.genCode(ctx))
+    val call = s"$ref.apply(${args.map(_.value).mkString(", ")})"
+    val javaType = CodeGenerator.javaType(dataType)
+    val result =
+      if (!k.nullable) s"${ev.value} = $call;"
+      else if (CodeGenerator.isPrimitiveType(dataType)) {
+        val boxed = ctx.freshName("boxed")
+        s"""${CodeGenerator.boxedType(dataType)} $boxed = $call;
+           |${ev.isNull} = $boxed == null;
+           |if (!${ev.isNull}) ${ev.value} = $boxed.${javaType}Value();""".stripMargin
+      } else s"${ev.value} = $call;\n${ev.isNull} = ${ev.value} == null;"
+    if (nullable) {
+      // each child is evaluated only when the ones before it are not null
+      val body = args.zip(children).foldRight(s"${ev.isNull} = false;\n$result") {
+        case ((g, c), inner) => s"${g.code}\n${ctx.nullSafeExec(c.nullable, g.isNull)(inner)}"
+      }
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+        $body""")
+    } else {
+      ev.copy(code = code"""
+        ${args.map(_.code.toString).mkString("\n")}
+        $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+        $result""", isNull = FalseLiteral)
+    }
   }
 
-  override protected def withNewChildInternal(newChild: Expression): KernelCall =
-    copy(child = newChild)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): KernelCall = copy(children = newChildren)
 }
 
 object KernelCall {
-  def column(c: Column, kernel: Kernel[_, _]): Column =
+  def apply(child: Expression, kernel: Kernel): KernelCall =
+    KernelCall(Seq(child), kernel)
+
+  def column(c: Column, kernel: Kernel): Column =
     GraftBridge.column(KernelCall(GraftBridge.expression(c), kernel))
+
+  def column(a: Column, b: Column, kernel: Kernel): Column =
+    GraftBridge.column(KernelCall(Seq(a, b).map(GraftBridge.expression), kernel))
 
   private[expr] val Strings: DataType = ArrayType(StringType)
   private[expr] val Longs: DataType = ArrayType(LongType, containsNull = false)
+  private[expr] val Doubles: DataType = ArrayType(DoubleType)
   private[expr] val NestedStrings: DataType = ArrayType(ArrayType(StringType))
 }
 
@@ -114,7 +186,7 @@ object Md5Hash60 {
   * (SimilarityFunctions.wordShingles semantics; the DuckDB oracle joins
   * with chr(1) identically).
   */
-case class ShingleHashes(n: Int) extends Kernel[ArrayData, ArrayData] {
+case class ShingleHashes(n: Int) extends Kernel1[ArrayData, ArrayData] {
   def prettyName: String = "graft_shingle_hash40"
   def inputType: DataType = Strings
   def dataType: DataType = Longs
@@ -167,7 +239,7 @@ case class ShingleHashes(n: Int) extends Kernel[ArrayData, ArrayData] {
   * so they cannot contain the separator. Value-identical to the oracle's
   * `('0x'||substr(md5(array_to_string(ts[j+1:j+n],' ')),1,15))::BIGINT`.
   */
-case class PositionedShingleHashes(n: Int) extends Kernel[ArrayData, ArrayData] {
+case class PositionedShingleHashes(n: Int) extends Kernel1[ArrayData, ArrayData] {
   require(n > 0, s"n must be positive, got $n")
   def prettyName: String = "graft_positioned_shingle_hash60"
   def inputType: DataType = Strings
@@ -206,7 +278,7 @@ case class PositionedShingleHashes(n: Int) extends Kernel[ArrayData, ArrayData] 
   * whose 12-bit pieces give 24-bit band keys — the corpus-size dial for
   * the banded join's birthday-collision residual.
   */
-case class TokenHashes(width: Int) extends Kernel[ArrayData, ArrayData] {
+case class TokenHashes(width: Int) extends Kernel1[ArrayData, ArrayData] {
   require(width == 40 || width == 60, s"width must be 40 or 60, got $width")
   def prettyName: String = s"graft_token_hash$width"
   def inputType: DataType = Strings
@@ -232,7 +304,7 @@ case class TokenHashes(width: Int) extends Kernel[ArrayData, ArrayData] {
   * element encodes as an empty piece list, keeping the output
   * index-aligned with the input tokens.
   */
-case class SubwordEncode(model: SubwordModel) extends Kernel[ArrayData, ArrayData] {
+case class SubwordEncode(model: SubwordModel) extends Kernel1[ArrayData, ArrayData] {
   def prettyName: String = model.encodeName
   def inputType: DataType = Strings
   def dataType: DataType =
@@ -263,7 +335,7 @@ case class SubwordEncode(model: SubwordModel) extends Kernel[ArrayData, ArrayDat
   * This is the decode side of the byte-fallback gate; the plain
   * (non-fallback) round-trip queries keep their pure-column decode.
   */
-case class DecodePieces(wordPiece: Boolean) extends Kernel[ArrayData, UTF8String] {
+case class DecodePieces(wordPiece: Boolean) extends Kernel1[ArrayData, UTF8String] {
   def prettyName: String = "graft_piece_decode"
   def inputType: DataType = NestedStrings
   def dataType: DataType = StringType
@@ -304,7 +376,7 @@ case class DecodePieces(wordPiece: Boolean) extends Kernel[ArrayData, UTF8String
   * trainer's coverage explode ([[graft.ops.WordPiece.train]]). Runs over
   * the distinct-word aggregate (never the corpus).
   */
-case object WordSymbols extends Kernel[UTF8String, ArrayData] {
+case object WordSymbols extends Kernel1[UTF8String, ArrayData] {
   def prettyName: String = "graft_wordpiece_symbols"
   def inputType: DataType = StringType
   def dataType: DataType = ArrayType(StringType, containsNull = false)

@@ -1,8 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Integer-exact fixed-point log2: floor-ish 2^20-scaled binary logarithm
   * of a positive long, computed with ONLY integer shifts/multiplies so the
@@ -30,47 +28,20 @@ import org.apache.spark.sql.types._
   * Used by the model-filter family (ops/ModelFilter.scala): Naive Bayes
   * log-likelihoods, stupid-backoff LM scores, DSIR importance log-ratios.
   */
-case class Log2Fp(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
+case object Log2Fp extends Kernel1[Long, java.lang.Long] {
+  def prettyName: String = "graft_log2fp"
+  def inputType: DataType = LongType
+  def dataType: DataType = LongType
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_log2fp"
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (child.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_log2fp needs BIGINT, got ${child.dataType.simpleString}")
-  }
 
-  override def nullSafeEval(input: Any): Any = {
-    val x = input.asInstanceOf[Long]
-    if (x <= 0L) null else Log2Fp.compute(x)
-  }
+  def apply(x: Long): java.lang.Long = if (x <= 0L) null else compute(x)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      s"""
-         |if ($x <= 0L) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = graft.expr.Log2Fp.compute($x);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Log2Fp =
-    copy(child = newChild)
-}
-
-object Log2Fp {
   /** Fraction bits of the fixed-point result. */
   val F: Int = 20
 
   /** floor-ish(2^20 * log2 x) for x >= 1 — the exact integer recurrence the
-    * oracle replays. Called from generated code (hot path: one call per
-    * (token, class) row in NB scoring), so it stays a static, branch-light
-    * loop the JIT inlines.
+    * oracle replays. Called per row (hot path: one call per (token, class)
+    * row in NB scoring), so it stays a branch-light loop the JIT inlines.
     */
   def compute(x: Long): Long = {
     val n = 63 - java.lang.Long.numberOfLeadingZeros(x)

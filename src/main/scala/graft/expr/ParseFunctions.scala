@@ -173,30 +173,22 @@ object ParseFunctions {
   /** ascii / ascii:replace (reference default, dataset_type.py:143-152,
     * 794-798): bytes > 127 become \ooo octal escapes.
     */
-  def asciiReplace(c: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.expr.AsciiOctal(
-      GraftBridge.expression(c), escapeBackslash = false))
-  }
+  def asciiReplace(c: Column): Column =
+    KernelCall.column(c, AsciiOctal(escapeBackslash = false))
 
   /** ascii:encode (dataset_type.py:799-800): like replace, plus backslash
     * itself escapes as \134 — the output round-trips unambiguously.
     */
-  def asciiEncode(c: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.expr.AsciiOctal(
-      GraftBridge.expression(c), escapeBackslash = true))
-  }
+  def asciiEncode(c: Column): Column =
+    KernelCall.column(c, AsciiOctal(escapeBackslash = true))
 
   /** unicode:<codec>[/errors] (dataset_type.py:75-100, 789-792): decode a
     * byte-preserving string's raw bytes with `codec`; `errors` ∈
     * strict (failure → bad value) / replace (U+FFFD) / ignore (drop).
     */
   def unicodeRecode(c: Column, codec: String, errors: String): Column = {
-    import org.apache.spark.sql.GraftBridge
-    graft.expr.RecodeHelper.validate(codec, errors)
-    GraftBridge.column(graft.expr.RecodeCharset(
-      GraftBridge.expression(c), codec, errors))
+    RecodeHelper.validate(codec, errors)
+    KernelCall.column(c, RecodeCharset(codec, errors))
   }
 
   /** complex64/32 (dataset_type.py:734-737, Python complex() grammar):

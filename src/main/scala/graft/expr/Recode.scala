@@ -3,8 +3,6 @@ package graft.expr
 import java.nio.ByteBuffer
 import java.nio.charset.{Charset, CharsetDecoder, CodingErrorAction}
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,9 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * import (it is already-decoded text) — that is a bad value, not silently
   * re-encoded text.
   *
-  * Both expressions are codegen'd (a static call per VALUE, not an
-  * interpreted HOF per element) so the typing pass stays one codegen'd
-  * projection over the scan.
+  * The conversions are kernels ([[KernelCall]]: one compiled call per
+  * VALUE, not an interpreted HOF per element) so the typing pass stays
+  * one codegen'd projection over the scan.
   */
 object RecodeHelper {
   // CharsetDecoder is stateful and not thread-safe: one per (codec, errors)
@@ -31,7 +29,7 @@ object RecodeHelper {
     override def initialValue() = new java.util.HashMap[String, CharsetDecoder]
   }
 
-  private def decoderFor(charset: String, errors: String): CharsetDecoder = {
+  private[expr] def decoderFor(charset: String, errors: String): CharsetDecoder = {
     val key = charset + "/" + errors
     val m = decoders.get()
     var d = m.get(key)
@@ -57,11 +55,54 @@ object RecodeHelper {
     Charset.forName(charset) // throws on unknown codec
   }
 
-  /** Reinterpret a byte-preserving string's code units as raw bytes and
-    * decode them with `charset`. null = bad value (strict decode failure,
-    * or input that is not byte-preserving).
-    */
-  def recode(s: UTF8String, charset: String, errors: String): UTF8String = {
+  def formOf(form: String): java.text.Normalizer.Form = form match {
+    case "NFC"  => java.text.Normalizer.Form.NFC
+    case "NFD"  => java.text.Normalizer.Form.NFD
+    case "NFKC" => java.text.Normalizer.Form.NFKC
+    case "NFKD" => java.text.Normalizer.Form.NFKD
+    case other => throw new IllegalArgumentException(
+      s"unicode normal form must be NFC/NFD/NFKC/NFKD, got '$other'")
+  }
+}
+
+/** Unicode normalization (NFC/NFD/NFKC/NFKD) — the canonicalization step a
+  * text pipeline runs before tokenization/fingerprinting, so that composed
+  * and decomposed spellings of the same grapheme fingerprint identically.
+  * Fast path: `Normalizer.isNormalized` returns the input untouched for
+  * already-normal text (the overwhelmingly common case in web corpora), so
+  * the scan-side pass allocates nothing per row unless it must rewrite.
+  * Normal forms are fully specified by the Unicode standard — DuckDB's
+  * utf8proc-based nfc_normalize produces identical bytes, which is what the
+  * oracle checks.
+  */
+case class UnicodeNormalize(form: String) extends Kernel1[UTF8String, UTF8String] {
+  // resolved ONCE (which also fails an unknown form at plan time): per-row
+  // string→Form matching has no place on the hot path
+  private val f = RecodeHelper.formOf(form)
+  def prettyName: String = "graft_unicode_normalize"
+  def inputType: DataType = StringType
+  def dataType: DataType = StringType
+
+  def apply(s: UTF8String): UTF8String = {
+    val str = s.toString
+    if (java.text.Normalizer.isNormalized(str, f)) s
+    else UTF8String.fromString(java.text.Normalizer.normalize(str, f))
+  }
+}
+
+/** dataset_type `unicode:<codec>[/errors]` — reinterpret byte-preserving
+  * code units as raw bytes and decode them with `charset`. null = bad
+  * value: a strict decode failure, or input that is not byte-preserving
+  * (a code unit > 0xFF).
+  */
+case class RecodeCharset(charset: String, errors: String)
+    extends Kernel1[UTF8String, UTF8String] {
+  def prettyName: String = "graft_recode"
+  def inputType: DataType = StringType
+  def dataType: DataType = StringType
+  override def nullable: Boolean = true
+
+  def apply(s: UTF8String): UTF8String = {
     val str = s.toString
     val n = str.length
     val bytes = new Array[Byte](n)
@@ -72,34 +113,26 @@ object RecodeHelper {
       bytes(i) = ch.toByte
       i += 1
     }
-    val dec = decoderFor(charset, errors)
+    val dec = RecodeHelper.decoderFor(charset, errors)
     dec.reset()
     try UTF8String.fromString(dec.decode(ByteBuffer.wrap(bytes)).toString)
     catch { case _: java.nio.charset.CharacterCodingException => null }
   }
+}
 
-  def formOf(form: String): java.text.Normalizer.Form = form match {
-    case "NFC"  => java.text.Normalizer.Form.NFC
-    case "NFD"  => java.text.Normalizer.Form.NFD
-    case "NFKC" => java.text.Normalizer.Form.NFKC
-    case "NFKD" => java.text.Normalizer.Form.NFKD
-    case other => throw new IllegalArgumentException(
-      s"unicode normal form must be NFC/NFD/NFKC/NFKD, got '$other'")
-  }
+/** dataset_type `ascii[:replace|:encode]` (dataset_type.py:143-152,
+  * 797-800): every byte > 127 becomes a 3-digit octal escape \ooo;
+  * `escapeBackslash` (encode) additionally escapes backslash as \134.
+  * Code units ≤ 0xFF are the raw bytes (byte-preserving import); a rare
+  * > 0xFF unit (already-decoded text) escapes each of its UTF-8 bytes —
+  * the honest byte rendering. Never fails (output is always pure ASCII).
+  */
+case class AsciiOctal(escapeBackslash: Boolean) extends Kernel1[UTF8String, UTF8String] {
+  def prettyName: String = "graft_ascii_octal"
+  def inputType: DataType = StringType
+  def dataType: DataType = StringType
 
-  def normalize(s: UTF8String, f: java.text.Normalizer.Form): UTF8String = {
-    val str = s.toString
-    if (java.text.Normalizer.isNormalized(str, f)) s
-    else UTF8String.fromString(java.text.Normalizer.normalize(str, f))
-  }
-
-  /** ascii[:replace|:encode] (dataset_type.py:143-152, 797-800): every byte
-    * > 127 becomes a 3-digit octal escape \ooo; `encode` additionally
-    * escapes backslash as \134. Code units ≤ 0xFF are the raw bytes
-    * (byte-preserving import); a rare > 0xFF unit (already-decoded text)
-    * escapes each of its UTF-8 bytes — the honest byte rendering.
-    */
-  def asciiOctal(s: UTF8String, escapeBackslash: Boolean): UTF8String = {
+  def apply(s: UTF8String): UTF8String = {
     val str = s.toString
     val n = str.length
     var needs = false
@@ -136,92 +169,4 @@ object RecodeHelper {
     }
     UTF8String.fromString(sb.toString)
   }
-}
-
-/** Unicode normalization (NFC/NFD/NFKC/NFKD) — the canonicalization step a
-  * text pipeline runs before tokenization/fingerprinting, so that composed
-  * and decomposed spellings of the same grapheme fingerprint identically.
-  * Fast path: `Normalizer.isNormalized` returns the input untouched for
-  * already-normal text (the overwhelmingly common case in web corpora), so
-  * the scan-side pass allocates nothing per row unless it must rewrite.
-  * Normal forms are fully specified by the Unicode standard — DuckDB's
-  * utf8proc-based nfc_normalize produces identical bytes, which is what the
-  * oracle checks.
-  */
-case class UnicodeNormalize(child: Expression, form: String)
-    extends UnaryExpression {
-  // resolved ONCE (also validates at construction — unknown form fails at
-  // plan time): per-row string→Form matching has no place on the hot path
-  @transient private lazy val resolvedForm = RecodeHelper.formOf(form)
-  resolvedForm
-  // non-string children fail analysis, not per-row inside an executor
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a string child, got ${child.dataType.catalogString}")
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_unicode_normalize"
-
-  override def nullSafeEval(input: Any): Any =
-    RecodeHelper.normalize(input.asInstanceOf[UTF8String], resolvedForm)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val f = ctx.addReferenceObj("form", resolvedForm, "java.text.Normalizer.Form")
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.expr.RecodeHelper.normalize($c, $f);"
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): UnicodeNormalize =
-    copy(child = newChild)
-}
-
-/** dataset_type `unicode:<codec>[/errors]` — reinterpret byte-preserving
-  * code units as bytes and decode with `charset`; strict failure → null
-  * (bad value).
-  */
-case class RecodeCharset(child: Expression, charset: String, errors: String)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_recode"
-
-  override def nullSafeEval(input: Any): Any =
-    RecodeHelper.recode(input.asInstanceOf[UTF8String], charset, errors)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cs = ctx.addReferenceObj("charset", charset, "java.lang.String")
-    val er = ctx.addReferenceObj("errors", errors, "java.lang.String")
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.RecodeHelper.recode($c, $cs, $er);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): RecodeCharset =
-    copy(child = newChild)
-}
-
-/** dataset_type `ascii[:replace|:encode]` octal-escape conversion. Never
-  * fails (output is always pure ASCII).
-  */
-case class AsciiOctal(child: Expression, escapeBackslash: Boolean)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_ascii_octal"
-
-  override def nullSafeEval(input: Any): Any =
-    RecodeHelper.asciiOctal(input.asInstanceOf[UTF8String], escapeBackslash)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.expr.RecodeHelper.asciiOctal($c, $escapeBackslash);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): AsciiOctal =
-    copy(child = newChild)
 }

@@ -1,8 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
 /** Bounded RIFF chunk walk for WAV metadata extraction.
   *
@@ -44,30 +42,18 @@ object RiffWalkHelper {
 /** 1-based data offset of the first RIFF chunk tagged `tag` (4 ASCII
   * chars), null when the blob is not a WAV or lacks the chunk.
   */
-case class RiffChunkOffset(child: Expression, tag: String) extends UnaryExpression {
+case class RiffChunkOffset(tag: String) extends Kernel1[Array[Byte], java.lang.Long] {
   require(tag.length == 4 && tag.forall(_ < 128),
     s"RIFF chunk tag must be 4 ASCII chars, got '$tag'")
-  override def dataType: DataType = LongType
+  def prettyName: String = "graft_riff_chunk_offset"
+  def inputType: DataType = BinaryType
+  def dataType: DataType = LongType
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_riff_chunk_offset"
 
-  private def tb(i: Int): Byte = tag.charAt(i).toByte
+  private val tb: Array[Byte] = tag.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
 
-  override def nullSafeEval(input: Any): Any = {
-    val r = RiffWalkHelper.chunkDataOffset(
-      input.asInstanceOf[Array[Byte]], tb(0), tb(1), tb(2), tb(3))
+  def apply(bytes: Array[Byte]): java.lang.Long = {
+    val r = RiffWalkHelper.chunkDataOffset(bytes, tb(0), tb(1), tb(2), tb(3))
     if (r < 0) null else r
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.expr.RiffWalkHelper.chunkDataOffset(
-         |  $c, (byte) ${tb(0)}, (byte) ${tb(1)}, (byte) ${tb(2)}, (byte) ${tb(3)});
-         |${ev.isNull} = (${ev.value} < 0);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): RiffChunkOffset =
-    copy(child = newChild)
 }

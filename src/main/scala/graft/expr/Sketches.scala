@@ -1,17 +1,16 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Single-pass sketch expressions for the dedup family.
+import KernelCall.Longs
+
+/** Single-pass sketch kernels for the dedup family, run by [[KernelCall]].
   *
   * Round-1 built these sketches from higher-order functions — correct, but
   * `simhash` cost 64 array passes per row and `minhash` 128 (and HOFs are
-  * CodegenFallback anyway). These are real Catalyst expressions with
-  * `doGenCode`: ONE pass over the token-hash array per row, all slots
-  * updated in a tight generated loop.
+  * CodegenFallback anyway). These kernels make ONE pass over the
+  * token-hash array per row, all slots updated in a tight compiled loop.
   *
   * The hash inputs are 40-bit md5-derived token hashes
   * (TextFunctions.tokenHash40) and the per-slot mixing is pure int64
@@ -37,18 +36,15 @@ object MinHashConsts {
   * Null elements are skipped; empty input yields the all-M sentinel
   * signature (no shingles ⇒ matches nothing).
   */
-case class MinHashSig(child: Expression, k: Int)
-    extends UnaryExpression {
-  // input contract: array<long> (enforced by the SimilarityFunctions
-  // wrappers, which always hash to long before calling)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash_sig"
+case class MinHashSig(k: Int) extends Kernel1[ArrayData, ArrayData] {
+  def prettyName: String = "graft_minhash_sig"
+  def inputType: DataType = Longs
+  def dataType: DataType = Longs
 
-  private lazy val as: Array[Long] = Array.tabulate(k)(MinHashConsts.a)
-  private lazy val bs: Array[Long] = Array.tabulate(k)(MinHashConsts.b)
+  private val as: Array[Long] = Array.tabulate(k)(MinHashConsts.a)
+  private val bs: Array[Long] = Array.tabulate(k)(MinHashConsts.b)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def apply(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     val sig = Array.fill(k)(MinHashConsts.M)
     var idx = 0
@@ -66,51 +62,19 @@ case class MinHashSig(child: Expression, k: Int)
     }
     new GenericArrayData(sig)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("minhashA", as, "long[]")
-    val bRef = ctx.addReferenceObj("minhashB", bs, "long[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val sig = ctx.freshName("sig")
-      val n = ctx.freshName("n")
-      val idx = ctx.freshName("idx")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      s"""
-         |final int $n = $c.numElements();
-         |final long[] $sig = new long[$k];
-         |java.util.Arrays.fill($sig, ${MinHashConsts.M}L);
-         |for (int $idx = 0; $idx < $n; $idx++) {
-         |  if (!$c.isNullAt($idx)) {
-         |    final long $h = $c.getLong($idx);
-         |    for (int $i = 0; $i < $k; $i++) {
-         |      final long $v = ($aRef[$i] * $h + $bRef[$i]) % ${MinHashConsts.M}L;
-         |      if ($v < $sig[$i]) $sig[$i] = $v;
-         |    }
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
 }
 
 /** SimHash over an array of token hashes: bit i of the result (i < bits) is
   * the majority vote of bit i across the hashes (Charikar '02). One pass,
   * `bits` counters. Null elements skipped; empty input → 0.
   */
-case class SimHash(child: Expression, bits: Int)
-    extends UnaryExpression {
+case class SimHash(bits: Int) extends Kernel1[ArrayData, Long] {
   require(bits > 0 && bits <= 63, s"simhash bits must be in [1,63], got $bits")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash"
+  def prettyName: String = "graft_simhash"
+  def inputType: DataType = Longs
+  def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def apply(arr: ArrayData): Long = {
     val n = arr.numElements()
     val counts = new Array[Int](bits)
     var idx = 0
@@ -135,35 +99,4 @@ case class SimHash(child: Expression, bits: Int)
     }
     out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val counts = ctx.freshName("counts")
-      val n = ctx.freshName("n")
-      val total = ctx.freshName("total")
-      val idx = ctx.freshName("idx")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      s"""
-         |final int $n = $c.numElements();
-         |final int[] $counts = new int[$bits];
-         |int $total = 0;
-         |for (int $idx = 0; $idx < $n; $idx++) {
-         |  if (!$c.isNullAt($idx)) {
-         |    final long $h = $c.getLong($idx);
-         |    for (int $i = 0; $i < $bits; $i++) {
-         |      $counts[$i] += (int) (($h >>> $i) & 1L);
-         |    }
-         |    $total++;
-         |  }
-         |}
-         |${ev.value} = 0L;
-         |for (int $i = 0; $i < $bits; $i++) {
-         |  if (2 * $counts[$i] > $total) ${ev.value} |= (1L << $i);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash =
-    copy(child = newChild)
 }

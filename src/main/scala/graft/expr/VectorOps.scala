@@ -1,37 +1,84 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Codegen'd vector primitives for the similarity/dedup family.
+import KernelCall.{Doubles, Longs}
+
+/** Vector kernels for the similarity, dedup and curation families, run by
+  * [[KernelCall]].
   *
   * The higher-order-function formulations (`aggregate(zip_with(...))`) are
   * CodegenFallback — evaluated interpreted per ELEMENT, which puts ~10^3
   * interpreted calls per row into the hottest paths (LSH bucketing computes
   * tables×planes dot products per row, on both sides of a self-join). These
-  * expressions do the same math in one generated loop.
+  * kernels do the same math in one compiled loop inside whole-stage
+  * codegen.
   *
   * Numeric contract: identical IEEE754 results to the HOF versions — the
   * fold is sequential in element order (acc += v[j]*w[j], j ascending),
   * which is also DuckDB's list_dot_product order, so the oracle comparison
   * stays exact, not approximate.
   */
+private[expr] object VectorKernels {
+  val AssignType: StructType = StructType(Seq(
+    StructField("dist", LongType, nullable = false),
+    StructField("cluster", LongType, nullable = false)))
+
+  /** argmin over centroids `from until until` of `centroids` (flattened
+    * [j][i]) of sum_i (v_i - mu_j,i)^2, as struct(dist, j - from); ties to
+    * the lowest j. Every step is checked (`Math.*Exact`).
+    */
+  def argmin(v: Array[Long], dim: Int, centroids: Array[Long],
+             from: Int, until: Int): InternalRow = {
+    var bestD = Long.MaxValue
+    var bestC = 0L
+    var j = from
+    while (j < until) {
+      var acc = 0L
+      val base = j * dim
+      var i = 0
+      while (i < dim) {
+        val d = Math.subtractExact(v(i), centroids(base + i))
+        acc = Math.addExact(acc, Math.multiplyExact(d, d))
+        i += 1
+      }
+      if (acc < bestD) { bestD = acc; bestC = (j - from).toLong }
+      j += 1
+    }
+    InternalRow(bestD, bestC)
+  }
+
+  /** The vector scaled by `fp` (checked), or null when its length is not
+    * `dim` or an element is null.
+    */
+  def scaled(arr: ArrayData, dim: Int, fp: Long): Array[Long] = {
+    if (arr.numElements() != dim) return null
+    val v = new Array[Long](dim)
+    var i = 0
+    while (i < dim) {
+      if (arr.isNullAt(i)) return null
+      v(i) = Math.multiplyExact(arr.getLong(i), fp)
+      i += 1
+    }
+    v
+  }
+}
+
+import VectorKernels.{argmin, scaled, AssignType}
 
 /** Sequential-fold dot product of two double arrays. Null semantics match
   * `aggregate(zip_with(a, b, _*_), 0.0, _+_)`: unequal lengths or any null
   * element → null (zip_with pads with null, null poisons the fold).
   */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
+case object DotProduct extends Kernel2[ArrayData, ArrayData, java.lang.Double] {
+  def prettyName: String = "graft_dot"
+  def inputTypes: Seq[DataType] = Seq(Doubles, Doubles)
+  def dataType: DataType = DoubleType
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def apply(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
     if (y.numElements() != n) return null
     var acc = 0.0
@@ -43,33 +90,6 @@ case class DotProduct(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($b.numElements() != $n) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n && !${ev.isNull}; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) {
-         |      ${ev.isNull} = true;
-         |    } else {
-         |      $acc += $a.getDouble($i) * $b.getDouble($i);
-         |    }
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
 }
 
 /** All sign-LSH buckets of a vector in ONE pass: out[t] = OR over planes p
@@ -80,21 +100,20 @@ case class DotProduct(left: Expression, right: Expression)
   * Shape semantics match the per-plane HOF formulation
   * (`when(dot >= 0, 1<<p).otherwise(0)`): a vector of the wrong length or
   * containing a null element has null dots → every bucket 0. One
-  * DELIBERATE deviation: a top-level NULL vector yields NULL (UnaryExpr
-  * null propagation), so posexplode drops the row from the candidate
-  * space entirely — the HOF form bucketed NULL vectors at 0, letting
-  * rows with no vector surface as candidates with NULL cosine.
+  * DELIBERATE deviation: a top-level NULL vector yields NULL (null in,
+  * null out), so posexplode drops the row from the candidate space
+  * entirely — the HOF form bucketed NULL vectors at 0, letting rows with
+  * no vector surface as candidates with NULL cosine.
   */
-case class SignBuckets(child: Expression, tables: Int, planes: Int,
-                       dim: Int, weights: Array[Double])
-    extends UnaryExpression {
+case class SignBuckets(tables: Int, planes: Int, dim: Int, weights: Array[Double])
+    extends Kernel1[ArrayData, ArrayData] {
   require(weights.length == tables * planes * dim,
     s"weights must be tables*planes*dim = ${tables * planes * dim}, got ${weights.length}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_sign_buckets"
+  def prettyName: String = "graft_sign_buckets"
+  def inputType: DataType = Doubles
+  def dataType: DataType = Longs
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def apply(arr: ArrayData): ArrayData = {
     val out = new Array[Long](tables)
     if (arr.numElements() == dim) {
       val v = new Array[Double](dim)
@@ -124,58 +143,19 @@ case class SignBuckets(child: Expression, tables: Int, planes: Int,
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("signPlanes", weights, "double[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val out = ctx.freshName("out")
-      val v = ctx.freshName("v")
-      val ok = ctx.freshName("ok")
-      val t = ctx.freshName("t")
-      val p = ctx.freshName("p")
-      val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc")
-      val bkt = ctx.freshName("bkt")
-      val base = ctx.freshName("base")
-      s"""
-         |final long[] $out = new long[$tables];
-         |if ($c.numElements() == $dim) {
-         |  final double[] $v = new double[$dim];
-         |  boolean $ok = true;
-         |  for (int $j = 0; $ok && $j < $dim; $j++) {
-         |    if ($c.isNullAt($j)) $ok = false; else $v[$j] = $c.getDouble($j);
-         |  }
-         |  if ($ok) {
-         |    for (int $t = 0; $t < $tables; $t++) {
-         |      long $bkt = 0L;
-         |      for (int $p = 0; $p < $planes; $p++) {
-         |        double $acc = 0.0;
-         |        final int $base = ($t * $planes + $p) * $dim;
-         |        for (int $j = 0; $j < $dim; $j++) $acc += $v[$j] * $wRef[$base + $j];
-         |        if ($acc >= 0) $bkt |= (1L << $p);
-         |      }
-         |      $out[$t] = $bkt;
-         |    }
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SignBuckets =
-    copy(child = newChild)
 }
 
-/** Fixed-point quantization of a float/double vector in one generated
+/** Fixed-point quantization of a float/double vector in one compiled
   * loop: out[i] = floor(v[i] * 2^quantShift) as Long — the corpus-wide
   * embedding pass every curation consumer ([[graft.ops.KMeans]],
   * SemDeDup, IVF assignment) starts from. The `transform()` HOF
   * formulation is CodegenFallback (interpreted per element, ~dim boxed
   * calls per row) and this is the one stage that touches EVERY float
   * embedding of the corpus, so at scale it is the family's
-  * bandwidth-bound step; this expression is the same math in generated
-  * code.
+  * bandwidth-bound step; this kernel is the same math in compiled code.
+  *
+  * It reads `array<double>` or `array<float>`; `on` picks the element
+  * reader from the child type, so `floats` is never set by hand.
   *
   * Numeric contract — identical results to
   * `transform(v, x => floor(x.cast("double") * lit(scale)).cast("long"))`:
@@ -184,64 +164,35 @@ case class SignBuckets(child: Expression, tables: Int, planes: Int,
   * semantics also match the HOF: top-level null → null, a null element →
   * null element (floor(null) is null).
   */
-case class QuantizeLong(child: Expression, quantShift: Int)
-    extends UnaryExpression {
+case class QuantizeLong(quantShift: Int)(floats: Boolean = false)
+    extends Kernel1[ArrayData, ArrayData] {
   require(quantShift >= 0 && quantShift < 62, s"bad quantShift $quantShift")
   private val scale: Double = (1L << quantShift).toDouble
-  // resolved lazily: the child is unresolved at construction time
-  @transient private lazy val elemIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs array<float|double>, got ${other.sql}")
-    }
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "graft_quantize"
+  def prettyName: String = "graft_quantize"
+  def inputType: DataType = Doubles
+  def dataType: DataType = ArrayType(LongType, containsNull = true)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def on(types: Seq[DataType]): Option[Kernel] = types match {
+    case Seq(ArrayType(FloatType, _)) => Some(QuantizeLong(quantShift)(floats = true))
+    case _                            => super.on(types)
+  }
+
+  def apply(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     val out = new Array[Any](n)
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val v = if (elemIsFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
+        val v = if (floats) arr.getFloat(i).toDouble else arr.getDouble(i)
         out(i) = Math.floor(v * scale).toLong
       }
       i += 1
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val out = ctx.freshName("out")
-      val get = if (elemIsFloat) s"(double) $c.getFloat" else s"$c.getDouble"
-      s"""
-         |final int $n = $c.numElements();
-         |final Object[] $out = new Object[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$c.isNullAt($i)) {
-         |    $out[$i] = (Object) (long) java.lang.Math.floor($get($i) * ${scale}D);
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): QuantizeLong =
-    copy(child = newChild)
 }
 
-/** Squared Euclidean distance of two long arrays in one generated loop —
+/** Squared Euclidean distance of two long arrays in one compiled loop —
   * the pair predicate of SemDeDup's within-cluster compare. Null semantics
   * match `aggregate(zip_with(a, b, (x,y) => (x-y)*(x-y)), 0L, _+_)`:
   * unequal lengths or any null element → null.
@@ -253,15 +204,13 @@ case class QuantizeLong(child: Expression, quantShift: Int)
   * shift bound (quantShift+fpShift ≤ 20) keeps well-formed curation
   * inputs far from the guard; it exists for hostile magnitudes.
   */
-case class SqDistLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
+case object SqDistLong extends Kernel2[ArrayData, ArrayData, java.lang.Long] {
+  def prettyName: String = "graft_sqdist"
+  def inputTypes: Seq[DataType] = Seq(Longs, Longs)
+  def dataType: DataType = LongType
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_sqdist"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def apply(x: ArrayData, y: ArrayData): java.lang.Long = {
     val n = x.numElements()
     if (y.numElements() != n) return null
     var acc = 0L
@@ -274,145 +223,41 @@ case class SqDistLong(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val acc = ctx.freshName("acc")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($b.numElements() != $n) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $n && !${ev.isNull}; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) {
-         |      ${ev.isNull} = true;
-         |    } else {
-         |      final long $d = java.lang.Math.subtractExact($a.getLong($i), $b.getLong($i));
-         |      $acc = java.lang.Math.addExact($acc, java.lang.Math.multiplyExact($d, $d));
-         |    }
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SqDistLong =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Grouped k-means assignment — the level-2 step of two-level
   * (hierarchical) clustering: argmin over only the centroids belonging to
-  * the row's PARENT cluster. The full centroid set rides as one flattened
-  * reference array plus a per-parent offset table (parents can own fewer
-  * than k2 centroids when the parent cluster is smaller than k2);
-  * `struct(dist, cluster)` returns the LOCAL centroid index within the
-  * parent, ties to the lowest index — the same tie rule as
-  * [[KMeansAssign]], replayed identically by the DuckDB chain.
+  * the row's PARENT cluster (the second argument). The full centroid set
+  * rides in the kernel as one flattened array plus a per-parent offset
+  * table (parents can own fewer than k2 centroids when the parent cluster
+  * is smaller than k2); `struct(dist, cluster)` returns the LOCAL centroid
+  * index within the parent, ties to the lowest index — the same tie rule
+  * as [[KMeansAssign]], replayed identically by the DuckDB chain.
   *
-  * Null contract: null/wrong-length/null-element vector, or a parent id
-  * outside [0, parents) → null. Arithmetic checked like [[KMeansAssign]].
+  * Null contract: null/wrong-length/null-element vector, a parent id
+  * outside [0, parents), or a parent that owns no centroids → null.
+  * Arithmetic checked like [[KMeansAssign]].
   */
-case class KMeansAssignGrouped(left: Expression, right: Expression,
-                               dim: Int, fp: Long, centroids: Array[Long],
+case class KMeansAssignGrouped(dim: Int, fp: Long, centroids: Array[Long],
                                offsets: Array[Int])
-    extends BinaryExpression {
+    extends Kernel2[ArrayData, Long, InternalRow] {
   require(offsets.length >= 2 && offsets.head == 0 &&
     offsets.last * dim == centroids.length,
     s"offsets must cover the centroid array (dim=$dim, " +
       s"${centroids.length} longs, offsets ${offsets.toSeq})")
   private def parents: Int = offsets.length - 1
-  override def dataType: DataType = StructType(Seq(
-    StructField("dist", LongType, nullable = false),
-    StructField("cluster", LongType, nullable = false)))
+  def prettyName: String = "graft_kmeans_assign_grouped"
+  def inputTypes: Seq[DataType] = Seq(Longs, LongType)
+  def dataType: DataType = AssignType
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_kmeans_assign_grouped"
 
-  override def nullSafeEval(q: Any, parent: Any): Any = {
-    val arr = q.asInstanceOf[ArrayData]
-    val c1 = parent.asInstanceOf[Long]
-    if (arr.numElements() != dim || c1 < 0 || c1 >= parents) return null
-    val v = new Array[Long](dim)
-    var i = 0
-    while (i < dim) {
-      if (arr.isNullAt(i)) return null
-      v(i) = Math.multiplyExact(arr.getLong(i), fp)
-      i += 1
-    }
-    val from = offsets(c1.toInt)
-    val until = offsets(c1.toInt + 1)
-    if (until <= from) return null // parent owns no centroids (empty cluster)
-    var bestD = Long.MaxValue
-    var bestC = 0L
-    var j = from
-    while (j < until) {
-      var acc = 0L
-      val base = j * dim
-      i = 0
-      while (i < dim) {
-        val d = Math.subtractExact(v(i), centroids(base + i))
-        acc = Math.addExact(acc, Math.multiplyExact(d, d))
-        i += 1
-      }
-      if (acc < bestD) { bestD = acc; bestC = (j - from).toLong }
-      j += 1
-    }
-    org.apache.spark.sql.catalyst.InternalRow(bestD, bestC)
+  def apply(q: ArrayData, parent: Long): InternalRow = {
+    if (parent < 0 || parent >= parents) return null
+    val v = scaled(q, dim, fp)
+    val from = offsets(parent.toInt)
+    val until = offsets(parent.toInt + 1)
+    if (v == null || until <= from) null else argmin(v, dim, centroids, from, until)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val muRef = ctx.addReferenceObj("groupedCentroids", centroids, "long[]")
-    val offRef = ctx.addReferenceObj("groupedOffsets", offsets, "int[]")
-    nullSafeCodeGen(ctx, ev, (q, parent) => {
-      val v = ctx.freshName("v")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val d = ctx.freshName("d")
-      val acc = ctx.freshName("acc")
-      val base = ctx.freshName("base")
-      val from = ctx.freshName("from")
-      val until = ctx.freshName("until")
-      val bestD = ctx.freshName("bestD")
-      val bestC = ctx.freshName("bestC")
-      s"""
-         |if ($q.numElements() != $dim || $parent < 0 || $parent >= ${parents}L) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  final long[] $v = new long[$dim];
-         |  for (int $i = 0; $i < $dim && !${ev.isNull}; $i++) {
-         |    if ($q.isNullAt($i)) ${ev.isNull} = true;
-         |    else $v[$i] = java.lang.Math.multiplyExact($q.getLong($i), ${fp}L);
-         |  }
-         |  final int $from = $offRef[(int) $parent];
-         |  final int $until = $offRef[(int) $parent + 1];
-         |  if ($until <= $from) ${ev.isNull} = true;
-         |  if (!${ev.isNull}) {
-         |    long $bestD = Long.MAX_VALUE;
-         |    long $bestC = 0L;
-         |    for (int $j = $from; $j < $until; $j++) {
-         |      long $acc = 0L;
-         |      final int $base = $j * $dim;
-         |      for (int $i = 0; $i < $dim; $i++) {
-         |        final long $d = java.lang.Math.subtractExact($v[$i], $muRef[$base + $i]);
-         |        $acc = java.lang.Math.addExact($acc, java.lang.Math.multiplyExact($d, $d));
-         |      }
-         |      if ($acc < $bestD) { $bestD = $acc; $bestC = (long) ($j - $from); }
-         |    }
-         |    ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |      new Object[]{ (Object) $bestD, (Object) $bestC });
-         |  }
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): KMeansAssignGrouped =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Sequential-fold dot product of two LONG arrays — the stage-1 scorer of
@@ -425,15 +270,13 @@ case class KMeansAssignGrouped(left: Expression, right: Expression,
   * checked like [[SqDistLong]] (int8 codes over any practical dim sit far
   * below the guard; it exists for hostile magnitudes).
   */
-case class DotLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
+case object DotLong extends Kernel2[ArrayData, ArrayData, java.lang.Long] {
+  def prettyName: String = "graft_dot_long"
+  def inputTypes: Seq[DataType] = Seq(Longs, Longs)
+  def dataType: DataType = LongType
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_dot_long"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def apply(x: ArrayData, y: ArrayData): java.lang.Long = {
     val n = x.numElements()
     if (y.numElements() != n) return null
     var acc = 0L
@@ -445,37 +288,9 @@ case class DotLong(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($b.numElements() != $n) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $n && !${ev.isNull}; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) {
-         |      ${ev.isNull} = true;
-         |    } else {
-         |      $acc = java.lang.Math.addExact($acc,
-         |        java.lang.Math.multiplyExact($a.getLong($i), $b.getLong($i)));
-         |    }
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotLong =
-    copy(left = newLeft, right = newRight)
 }
 
-/** Symmetric int8 quantization of a double vector in ONE generated pass:
+/** Symmetric int8 quantization of a double vector in ONE compiled pass:
   * struct(scale, q) with scale = maxAbs/127 and q_i = floor(v_i/scale
   * + 0.5) — the compression scan of the embedding store
   * ([[graft.ops.SimilaritySearch]] quantizeInt8), which touches every
@@ -490,25 +305,19 @@ case class DotLong(left: Expression, right: Expression)
   *  - otherwise a null element stays a null code;
   *  - NaN elements: NaN wins the max fold (Java Math.max = Spark
   *    greatest NaN ordering), NaN/scale floors to 0L on both paths.
+  *
+  * It never returns null for a non-null vector; the result stays declared
+  * nullable, as the schema of the stores built from it has always been.
   */
-case class QuantizeInt8(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
+case object QuantizeInt8 extends Kernel1[ArrayData, InternalRow] {
+  def prettyName: String = "graft_quantize_int8"
+  def inputType: DataType = Doubles
+  def dataType: DataType = StructType(Seq(
     StructField("scale", DoubleType, nullable = false),
     StructField("q", ArrayType(LongType, containsNull = true), nullable = false)))
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_quantize_int8"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs array<double>, got ${other.sql}")
-    }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def apply(arr: ArrayData): InternalRow = {
     val n = arr.numElements()
     var maxAbs = 0.0
     var i = 0
@@ -525,41 +334,8 @@ case class QuantizeInt8(child: Expression) extends UnaryExpression {
         out(i) = Math.floor(arr.getDouble(i) / scale + 0.5).toLong
       i += 1
     }
-    org.apache.spark.sql.catalyst.InternalRow(scale, new GenericArrayData(out))
+    InternalRow(scale, new GenericArrayData(out))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val maxAbs = ctx.freshName("maxAbs")
-      val scale = ctx.freshName("scale")
-      val out = ctx.freshName("out")
-      s"""
-         |final int $n = $c.numElements();
-         |double $maxAbs = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$c.isNullAt($i)) {
-         |    $maxAbs = java.lang.Math.max($maxAbs, java.lang.Math.abs($c.getDouble($i)));
-         |  }
-         |}
-         |final double $scale = $maxAbs / 127.0;
-         |final Object[] $out = new Object[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($scale == 0.0) {
-         |    $out[$i] = (Object) 0L;
-         |  } else if (!$c.isNullAt($i)) {
-         |    $out[$i] = (Object) (long) java.lang.Math.floor($c.getDouble($i) / $scale + 0.5);
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |  new Object[]{ (Object) $scale,
-         |    new org.apache.spark.sql.catalyst.util.GenericArrayData($out) });
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): QuantizeInt8 =
-    copy(child = newChild)
 }
 
 /** One-pass k-means assignment: struct(dist, cluster) =
@@ -567,14 +343,15 @@ case class QuantizeInt8(child: Expression) extends UnaryExpression {
   * strict `<` in the scan is exactly the struct-min (dist, cluster)
   * ordering of the HOF formulation it replaces.
   *
-  * Why an Expression and not `array_min(array(struct(aggregate(zip_with`:
+  * Why a kernel and not `array_min(array(struct(aggregate(zip_with`:
   * the HOF tree is CodegenFallback — ~k*3*dim interpreted boxed calls per
   * row — and its centroid LITERALS change every Lloyd iteration, forcing a
-  * fresh plan each time. Here the centroid matrix rides in as a reference
-  * object (`ctx.addReferenceObj`), so the generated source is identical
-  * across iterations and the janino cache turns per-iteration compilation
-  * into a one-time cost. All arithmetic is Long — bit-identical to the
-  * KMeansSpec model and the generated DuckDB oracle.
+  * fresh plan each time. Here the centroid matrix rides in the kernel,
+  * which [[KernelCall]] binds as a reference object, so the generated
+  * source is identical across iterations and the janino cache turns
+  * per-iteration compilation into a one-time cost. All arithmetic is
+  * Long — bit-identical to the KMeansSpec model and the generated DuckDB
+  * oracle.
   *
   * Null contract: a null vector, a vector whose length differs from `dim`,
   * or any null element → null (the caller quantizes non-null float arrays,
@@ -586,114 +363,43 @@ case class QuantizeInt8(child: Expression) extends UnaryExpression {
   * and a silent wrap would break the bit-identical-replay contract with
   * no signal.
   */
-case class KMeansAssign(child: Expression, dim: Int, fp: Long,
-                        centroids: Array[Long])
-    extends UnaryExpression {
+case class KMeansAssign(dim: Int, fp: Long, centroids: Array[Long])
+    extends Kernel1[ArrayData, InternalRow] {
   require(centroids.length > 0 && centroids.length % dim == 0,
     s"centroids must be k*dim longs (dim=$dim, got ${centroids.length})")
-  private def k: Int = centroids.length / dim
-  override def dataType: DataType = StructType(Seq(
-    StructField("dist", LongType, nullable = false),
-    StructField("cluster", LongType, nullable = false)))
+  def prettyName: String = "graft_kmeans_assign"
+  def inputType: DataType = Longs
+  def dataType: DataType = AssignType
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_kmeans_assign"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    if (arr.numElements() != dim) return null
-    val v = new Array[Long](dim)
-    var i = 0
-    while (i < dim) {
-      if (arr.isNullAt(i)) return null
-      v(i) = Math.multiplyExact(arr.getLong(i), fp)
-      i += 1
-    }
-    var bestD = Long.MaxValue
-    var bestC = 0L
-    var j = 0
-    while (j < k) {
-      var acc = 0L
-      val base = j * dim
-      i = 0
-      while (i < dim) {
-        val d = Math.subtractExact(v(i), centroids(base + i))
-        acc = Math.addExact(acc, Math.multiplyExact(d, d))
-        i += 1
-      }
-      if (acc < bestD) { bestD = acc; bestC = j.toLong }
-      j += 1
-    }
-    org.apache.spark.sql.catalyst.InternalRow(bestD, bestC)
+  def apply(q: ArrayData): InternalRow = {
+    val v = scaled(q, dim, fp)
+    if (v == null) null else argmin(v, dim, centroids, 0, centroids.length / dim)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val muRef = ctx.addReferenceObj("kmeansCentroids", centroids, "long[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val v = ctx.freshName("v")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val d = ctx.freshName("d")
-      val acc = ctx.freshName("acc")
-      val base = ctx.freshName("base")
-      val bestD = ctx.freshName("bestD")
-      val bestC = ctx.freshName("bestC")
-      s"""
-         |if ($c.numElements() != $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  final long[] $v = new long[$dim];
-         |  for (int $i = 0; $i < $dim && !${ev.isNull}; $i++) {
-         |    if ($c.isNullAt($i)) ${ev.isNull} = true;
-         |    else $v[$i] = java.lang.Math.multiplyExact($c.getLong($i), ${fp}L);
-         |  }
-         |  if (!${ev.isNull}) {
-         |    long $bestD = Long.MAX_VALUE;
-         |    long $bestC = 0L;
-         |    for (int $j = 0; $j < $k; $j++) {
-         |      long $acc = 0L;
-         |      final int $base = $j * $dim;
-         |      for (int $i = 0; $i < $dim; $i++) {
-         |        final long $d = java.lang.Math.subtractExact($v[$i], $muRef[$base + $i]);
-         |        $acc = java.lang.Math.addExact($acc, java.lang.Math.multiplyExact($d, $d));
-         |      }
-         |      if ($acc < $bestD) { $bestD = $acc; $bestC = (long) $j; }
-         |    }
-         |    ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |      new Object[]{ (Object) $bestD, (Object) $bestC });
-         |  }
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): KMeansAssign =
-    copy(child = newChild)
 }
 
 /** Asymmetric-distance (ADC) lookup-sum for product quantization
   * (Jégou et al. 2011, "Product Quantization for Nearest Neighbor
   * Search"): score = Σ_j dtab[j·ksub + codes[j]] — the per-subspace
   * query-to-centroid distance table gathered by the corpus row's code
-  * word. One generated pass; both inputs are columns (codes from the
-  * encoded store, dtab broadcast per query), so no reference object is
-  * needed and the same compiled code serves every query.
+  * word. One compiled pass; both inputs are columns (codes from the
+  * encoded store, dtab broadcast per query), so the same compiled code
+  * serves every query.
   *
   * Null contract: null arrays, null elements, a code outside [0, ksub),
   * or dtab.length != codes.length·ksub → null (a malformed store row must
   * surface, not fabricate a distance). Sums are checked (addExact) like
-  * every curation expression — distances are bounded by the quantization
+  * every curation kernel — distances are bounded by the quantization
   * shifts, so overflow means corrupted inputs.
   */
-case class PqAdc(left: Expression, right: Expression, ksub: Int)
-    extends BinaryExpression {
+case class PqAdc(ksub: Int) extends Kernel2[ArrayData, ArrayData, java.lang.Long] {
   require(ksub >= 1, s"ksub must be >= 1, got $ksub")
-  override def dataType: DataType = LongType
+  def prettyName: String = "graft_pq_adc"
+  def inputTypes: Seq[DataType] = Seq(Longs, Longs)
+  def dataType: DataType = LongType
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_pq_adc"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val codes = a.asInstanceOf[ArrayData]
-    val dtab = b.asInstanceOf[ArrayData]
+  def apply(codes: ArrayData, dtab: ArrayData): java.lang.Long = {
     val m = codes.numElements()
     if (dtab.numElements() != m * ksub) return null
     var acc = 0L
@@ -709,34 +415,4 @@ case class PqAdc(left: Expression, right: Expression, ksub: Int)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val m = ctx.freshName("m")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val idx = ctx.freshName("idx")
-      val acc = ctx.freshName("acc")
-      s"""
-         |final int $m = $a.numElements();
-         |if ($b.numElements() != $m * $ksub) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $acc = 0L;
-         |  for (int $j = 0; $j < $m && !${ev.isNull}; $j++) {
-         |    if ($a.isNullAt($j)) { ${ev.isNull} = true; continue; }
-         |    final long $c = $a.getLong($j);
-         |    if ($c < 0 || $c >= $ksub) { ${ev.isNull} = true; continue; }
-         |    final int $idx = $j * $ksub + (int) $c;
-         |    if ($b.isNullAt($idx)) { ${ev.isNull} = true; continue; }
-         |    $acc = java.lang.Math.addExact($acc, $b.getLong($idx));
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqAdc =
-    copy(left = newLeft, right = newRight)
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.functions._
-import graft.expr.{BigNumCanon, BigNumSum}
+import graft.expr.{BigNumCanon, BigNumSum, KernelCall}
 
 /** Column API over the bignum expressions (graft.expr.BigNum): exact
   * integers beyond DECIMAL(38,0), up to the reference's ±(2^1007 − 1)
@@ -12,10 +12,9 @@ object BigNumFunctions {
 
   /** Canonical bignum from arbitrary text: optional '-', no leading zeros,
     * zero is "0"; non-integers and magnitudes ≥ 2^1007 null out (bad
-    * value). Codegen'd scalar, scan-side.
+    * value). A scan-side kernel.
     */
-  def canon(c: Column): Column =
-    GraftBridge.column(BigNumCanon(GraftBridge.expression(c)))
+  def canon(c: Column): Column = KernelCall.column(c, BigNumCanon)
 
   /** A string whose LEXICOGRAPHIC order equals the NUMERIC order of the
     * canonical bignum it was derived from — so ORDER BY / min / max /

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.expr.{KernelCall, PositionedShingleHashes, ShingleHashes, TokenHashes}
+import graft.expr.{DotProduct, KernelCall, MinHashSig, PositionedShingleHashes,
+  ShingleHashes, SimHash, TokenHashes}
 
 /** Similarity primitives for dedup / nearest-neighbor over text shingles and
   * embedding vectors. Column combinators only — higher-order functions
@@ -34,8 +35,7 @@ object SimilarityFunctions {
 
   /** Distinct 40-bit shingle hashes straight from the text — fused
     * single-pass kernel (graft.expr.ShingleHashes); value-identical
-    * to array_distinct(transform(wordShingles(text, n), tokenHash40))
-    * but ~50× cheaper (the HOF chain evaluates interpreted per element).
+    * to array_distinct(transform(wordShingles(text, n), tokenHash40)).
     */
   def shingleHashes(text: Column, n: Int): Column =
     KernelCall.column(TextFunctions.tokens(TextFunctions.normalized(text)),
@@ -56,19 +56,17 @@ object SimilarityFunctions {
 
   /** MinHash signature over string shingles: sig[i] = min over shingles of
     * (a_i·h40(s) + b_i) mod 2^40 — the standard estimator (Broder '97),
-    * Pr[sig_a[i] == sig_b[i]] = J(a,b). Single-pass custom Catalyst
-    * expression (graft.expr.MinHashSig) with codegen; hashing is
-    * md5-derived so the DuckDB oracle replicates it exactly.
+    * Pr[sig_a[i] == sig_b[i]] = J(a,b). Single-pass kernel
+    * (graft.expr.MinHashSig); hashing is md5-derived so the DuckDB oracle
+    * replicates it exactly.
     */
   def minhashSignature(shingles: Column, k: Int): Column =
     minhashSignatureHashed(
       transform(shingles, s => TextFunctions.tokenHash40(s)), k)
 
   /** Same, over pre-hashed (long) shingles. */
-  def minhashSignatureHashed(hashes: Column, k: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.expr.MinHashSig(GraftBridge.expression(hashes), k))
-  }
+  def minhashSignatureHashed(hashes: Column, k: Int): Column =
+    KernelCall.column(hashes, MinHashSig(k))
 
   /** Estimated Jaccard from two signatures: fraction of agreeing slots. */
   def minhashEstimate(sigA: Column, sigB: Column): Column =
@@ -77,15 +75,11 @@ object SimilarityFunctions {
 
   /** SimHash-40 over token arrays: per-token 40-bit md5-derived hash,
     * bitwise majority vote (Charikar '02 / Manku et al. '07). Near-dup
-    * docs differ in few bits. Single-pass custom expression
-    * (graft.expr.SimHash); 40 bits so the oracle's int64 arithmetic
-    * replicates bit-for-bit.
+    * docs differ in few bits. Single-pass kernel (graft.expr.SimHash);
+    * 40 bits so the oracle's int64 arithmetic replicates bit-for-bit.
     */
-  def simhash40(toks: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.expr.SimHash(
-      GraftBridge.expression(tokenHashes40(toks)), 40))
-  }
+  def simhash40(toks: Column): Column =
+    KernelCall.column(tokenHashes40(toks), SimHash(40))
 
   /** SimHash-60: the wide twin of [[simhash40]] (per-token hash = first
     * 15 md5 hex digits, the Md5Hash60/fingerprint formulation, so the
@@ -97,32 +91,23 @@ object SimilarityFunctions {
     * (measured compounding at fixed 40 bits: shuffle slope 1.467 at
     * x10 → 1.596 at x100, SCALE_CHECK).
     */
-  def simhash60(toks: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.expr.SimHash(
-      KernelCall(GraftBridge.expression(toks), TokenHashes(60)), 60))
-  }
+  def simhash60(toks: Column): Column =
+    KernelCall.column(KernelCall.column(toks, TokenHashes(60)), SimHash(60))
 
   /** Hamming distance between two 64-bit-or-narrower hashes. */
   def hamming64(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b)).cast("int")
 
   /** Dot product of two double arrays — sequential fold so the DuckDB
-    * oracle (list_dot_product) and Spark agree bit-for-bit. Codegen'd
-    * single-pass expression (graft.expr.DotProduct); the HOF formulation
-    * (aggregate∘zip_with) is CodegenFallback and costs ~2 interpreted
-    * calls per ELEMENT in the hottest join paths.
+    * oracle (list_dot_product) and Spark agree bit-for-bit. Single-pass
+    * kernel (graft.expr.DotProduct).
     */
-  def dot(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    // coerce to array<double> here: the expression reads 8-byte doubles,
-    // so an array<float>/array<int> input must be cast, not reinterpreted
-    // (the HOF formulation coerced implicitly; a redundant cast is erased
-    // by Catalyst, so double inputs pay nothing)
-    GraftBridge.column(graft.expr.DotProduct(
-      GraftBridge.expression(a.cast("array<double>")),
-      GraftBridge.expression(b.cast("array<double>"))))
-  }
+  def dot(a: Column, b: Column): Column =
+    // coerce to array<double> here: the kernel reads 8-byte doubles, so an
+    // array<float>/array<int> input must be cast (the HOF formulation
+    // coerced implicitly; a redundant cast is erased by Catalyst, so
+    // double inputs pay nothing)
+    KernelCall.column(a.cast("array<double>"), b.cast("array<double>"), DotProduct)
 
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 

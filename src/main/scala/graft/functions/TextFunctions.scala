@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.expr.{KernelCall, StringArrayEntropyFp, UnicodeNormalize, Utf8EntropyFp}
 
 /** Text-analysis functions for training-data pipelines: tokenization,
   * quality scoring, language ID, fingerprinting. All pure Column
@@ -243,36 +244,26 @@ object TextFunctions {
 
   /** Unicode normalization (default NFC): composed/decomposed spellings of
     * the same grapheme become byte-identical before tokenization and
-    * fingerprinting. Codegen'd expression (graft.expr.UnicodeNormalize)
-    * with an isNormalized fast path — no allocation for already-normal
-    * text.
+    * fingerprinting. A kernel (graft.expr.UnicodeNormalize) with an
+    * isNormalized fast path — no allocation for already-normal text.
     */
-  def normalizeUnicode(text: Column, form: String = "NFC"): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.expr.UnicodeNormalize(
-      GraftBridge.expression(text), form))
-  }
+  def normalizeUnicode(text: Column, form: String = "NFC"): Column =
+    KernelCall.column(text, UnicodeNormalize(form))
 
   /** Integer-exact code-point entropy struct(n, ent_fp) of the RAW text —
     * gibberish / binary-ish / boilerplate-repetition quality signal in
-    * fixed-point log2 units (n·H·2^20). See [[graft.expr.EntropyFpHelper]].
+    * fixed-point log2 units (n·H·2^20). See [[graft.expr.EntropyFp]].
     */
-  def charEntropyFp(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.expr.Utf8EntropyFp(
-      GraftBridge.expression(text)))
-  }
+  def charEntropyFp(text: Column): Column =
+    KernelCall.column(text, Utf8EntropyFp)
 
   /** Integer-exact entropy struct(n, ent_fp) over the normalized token
     * multiset — the vocabulary-diversity gate (a distinct-token RATIO
     * can't tell a two-token coin-flip document from a uniform-vocabulary
     * one; entropy can).
     */
-  def tokenEntropyFp(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.expr.StringArrayEntropyFp(
-      GraftBridge.expression(tokens(normalized(text)))))
-  }
+  def tokenEntropyFp(text: Column): Column =
+    KernelCall.column(tokens(normalized(text)), StringArrayEntropyFp)
 
   /** HTML → text: drop script/style ELEMENTS (content included), strip
     * remaining tags to a space, decode the five predefined entities +

@@ -374,8 +374,13 @@ object Dedup {
         S.hamming64(col("x.h"), col("y.h")).as("hamming"))
       // hamming is a pure function of the pair, so filtering BEFORE the
       // pair-dedup is equivalent — and shrinks the dropDuplicates shuffle
-      // from every block-sharing candidate to actual near-dups only
-      .filter(col("hamming") <= maxHamming)
+      // from every block-sharing candidate to actual near-dups only. The
+      // bound is null-tolerant (coalesce) on purpose: a null-intolerant
+      // predicate on h lets the optimizer infer isnotnull(h) for each join
+      // side and push it below the projection that computes h, which then
+      // evaluates the sketch (every token's md5) twice per document. A
+      // null h has a null key and joins nothing, so the pairs are the same.
+      .filter(coalesce(col("hamming"), lit(Int.MaxValue)) <= maxHamming)
       .dropDuplicates("id_a", "id_b")
   }
 

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.expr.{KernelCall, KMeansAssign, KMeansAssignGrouped, QuantizeLong}
 
 /** Integer-exact k-means over an embedding column — the clustering stage of
   * cluster-aware corpus curation (SemDeDup-style semantic dedup and
@@ -53,14 +54,12 @@ object KMeans {
 
   /** argmin over the centroid matrix — struct(dist, cluster), ties to the
     * lowest cluster id (the tie-break is part of the contract). One
-    * codegen'd pass ([[graft.expr.KMeansAssign]]); the matrix rides as a
-    * reference object, so every Lloyd iteration reuses the same compiled
-    * code.
+    * codegen'd pass ([[graft.expr.KMeansAssign]]); the matrix rides in the
+    * kernel, a reference object, so every Lloyd iteration reuses the same
+    * compiled code.
     */
   private def bestOf(q: Column, mus: Centroids, fp: Long): Column =
-    org.apache.spark.sql.GraftBridge.column(graft.expr.KMeansAssign(
-      org.apache.spark.sql.GraftBridge.expression(q),
-      mus.head.length, fp, mus.flatten.toArray))
+    KernelCall.column(q, KMeansAssign(mus.head.length, fp, mus.flatten.toArray))
 
   /** Cluster `df(vecCol)` into (at most) k clusters with `iters` exact
     * Lloyd iterations; returns (idCol, cluster, dist) where `dist` is the
@@ -123,18 +122,13 @@ object KMeans {
   }
 
   /** floor(x * 2^quantShift) per element, as one codegen'd pass
-    * ([[graft.expr.QuantizeLong]] — the `transform()` HOF is
-    * CodegenFallback, and this is the stage that scans every float
-    * embedding of the corpus).
+    * ([[graft.expr.QuantizeLong]]).
     */
   private def quantize(df: DataFrame, idCol: String, vecCol: String,
                        quantShift: Int): DataFrame = {
     val qdf = df.select(col(idCol).as("kid"), col(vecCol).as("__v"))
-    val qExpr = graft.expr.QuantizeLong(
-      org.apache.spark.sql.GraftBridge.expression(
-        qdf("__v")), quantShift)
     qdf.select(col("kid"),
-      org.apache.spark.sql.GraftBridge.column(qExpr).as("q"))
+      KernelCall.column(qdf("__v"), QuantizeLong(quantShift)()).as("q"))
   }
 
   private def finish(q: DataFrame, mus: Centroids, fp: Long,
@@ -244,10 +238,7 @@ object KMeans {
     }
     def bestOf2(m: Array[Array[Array[Long]]]): Column = {
       val (f, o) = flat(m)
-      org.apache.spark.sql.GraftBridge.column(graft.expr.KMeansAssignGrouped(
-        org.apache.spark.sql.GraftBridge.expression(col("q")),
-        org.apache.spark.sql.GraftBridge.expression(col("c1")),
-        dim, fp, f, o))
+      KernelCall.column(col("q"), col("c1"), KMeansAssignGrouped(dim, fp, f, o))
     }
 
     for (_ <- 0 until iters2) {

@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{SimilarityFunctions => S, TextFunctions => T}
-import graft.expr.Log2Fp
+import graft.expr.{KernelCall, Log2Fp}
 
 /** Model-based quality filtering — the learned-scoring layer of a
   * training-data curation stack, complementing the heuristic filters
@@ -47,7 +47,7 @@ object ModelFilter {
 
   /** Fixed-point log2 column (see [[graft.expr.Log2Fp]]); x <= 0 → null. */
   def log2fp(c: Column): Column =
-    GraftBridge.column(Log2Fp(GraftBridge.expression(c.cast("long"))))
+    KernelCall.column(c.cast("long"), Log2Fp)
 
   private def toksOf(df: DataFrame, idCol: String, textCol: String,
                      extra: Column*): DataFrame = {

@@ -2408,14 +2408,13 @@ object Multimodal {
     hex(substring(bin, 9, 4)) === "57415645"      // WAVE
 
   /** 1-based data offset of a RIFF chunk — a bounded, bounds-checked chunk
-    * WALK (graft.expr.RiffChunkOffset, codegen'd), not a fixed offset: real
+    * WALK (graft.expr.RiffChunkOffset, a kernel), not a fixed offset: real
     * WAVs put LIST/fact/bext chunks before `fmt `, and fixed offsets
     * silently return garbage on them. Null when the chunk is absent, which
     * nulls every derived field below (honest "don't know", never garbage).
     */
   private def chunkOff(bin: Column, tag: String): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.expr.RiffChunkOffset(org.apache.spark.sql.GraftBridge.expression(bin), tag))
+    graft.expr.KernelCall.column(bin, graft.expr.RiffChunkOffset(tag))
 
   // fmt chunk data layout: format(2), channels(2), rate(4), byteRate(4),
   // blockAlign(2), bits(2); data chunk's size field sits 4 bytes before

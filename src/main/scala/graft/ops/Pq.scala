@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Cols.{q => Q}
+import graft.expr.{KernelCall, KMeansAssign, PqAdc, QuantizeLong}
 
 /** Product quantization ANN (Jégou et al. 2011): split each dim-D vector
   * into `m` subvectors, learn a `ksub`-centroid codebook per subspace,
@@ -112,8 +113,7 @@ object Pq {
   }
 
   private def quant(c: Column, quantShift: Int): Column =
-    GraftBridge.column(graft.expr.QuantizeLong(
-      GraftBridge.expression(c), quantShift))
+    KernelCall.column(c, QuantizeLong(quantShift)())
 
   /** (id, q) with q = the codegen'd floor-quantized vector — the shared
     * integer domain of the whole PQ family; exposed so evaluation
@@ -126,8 +126,7 @@ object Pq {
 
   private def assign(qArr: Column, mus: Array[Array[Long]], sub: Int,
                      fp: Long): Column =
-    GraftBridge.column(graft.expr.KMeansAssign(
-      GraftBridge.expression(qArr), sub, fp, mus.flatten))
+    KernelCall.column(qArr, KMeansAssign(sub, fp, mus.flatten))
 
   /** Encode the corpus against frozen codebooks: ONE scan (quantize once,
     * then m codegen'd subspace assignments over slices) → (id, codes)
@@ -201,9 +200,7 @@ object Pq {
     val scored = codes.crossJoin(broadcast(qdf))
       .filter(col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
-        GraftBridge.column(graft.expr.PqAdc(
-          GraftBridge.expression(col("codes")),
-          GraftBridge.expression(col("dtab")), ksub)).as("adist"))
+        KernelCall.column(col("codes"), col("dtab"), PqAdc(ksub)).as("adist"))
     TopKPerGroup(scored, Seq("qid"), "adist", k, Seq("nid"),
       ascending = true)
   }
@@ -295,9 +292,7 @@ object Pq {
       .filter(array_contains(col("probes"), col("cluster")) &&
         col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
-        GraftBridge.column(graft.expr.PqAdc(
-          GraftBridge.expression(col("codes")),
-          GraftBridge.expression(col("dtab")), ksub)).as("adist"))
+        KernelCall.column(col("codes"), col("dtab"), PqAdc(ksub)).as("adist"))
     TopKPerGroup(scored, Seq("qid"), "adist", k, Seq("nid"),
       ascending = true)
   }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.GraftBridge
+import graft.expr.{KernelCall, SqDistLong}
 import org.apache.spark.storage.StorageLevel
 
 /** Cluster-aware corpus curation over the [[KMeans]] assignment —
@@ -31,9 +31,7 @@ import org.apache.spark.storage.StorageLevel
   */
 object SemDeDup {
 
-  private def sq(c: Column, d: Column): Column =
-    GraftBridge.column(graft.expr.SqDistLong(
-      GraftBridge.expression(c), GraftBridge.expression(d)))
+  private def sq(c: Column, d: Column): Column = KernelCall.column(c, d, SqDistLong)
 
   /** Default ceiling for the within-cluster pair join. SemDeDup's O(Σc²)
     * pair compare is sound ONLY while clusters stay bounded — the paper's

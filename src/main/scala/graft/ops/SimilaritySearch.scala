@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Cols.{q => Q}
+import graft.expr.{DotLong, KernelCall, QuantizeInt8, SignBuckets}
 import graft.functions.{SimilarityFunctions => S}
 
 /** Scale-safe per-group top-k: a bounded-heap aggregate instead of a
@@ -80,14 +81,10 @@ object SimilaritySearch {
     * Scale: scan-side per-row math, no shuffle.
     */
   def quantizeInt8(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
     val base = df.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
-    // one codegen'd pass (graft.expr.QuantizeInt8) — the HOF chain
-    // (aggregate max-abs + two transforms) ran interpreted per element in
-    // the scan that touches every float of the store
-    val sq = GraftBridge.column(graft.expr.QuantizeInt8(
-      GraftBridge.expression(base("v"))))
+    // one codegen'd pass (graft.expr.QuantizeInt8)
+    val sq = KernelCall.column(base("v"), QuantizeInt8)
     base.select(col("id"), col("v"),
       sq.getField("scale").as("scale"), sq.getField("q").as("q"))
   }
@@ -137,11 +134,7 @@ object SimilaritySearch {
     require(rerank >= k, s"rerank=$rerank must be >= k=$k")
     // codegen'd long-array dot (graft.expr.DotLong): this evaluates per
     // (corpus × query) candidate pair — the widest inner loop here
-    def dotq(a: Column, b: Column): Column = {
-      import org.apache.spark.sql.GraftBridge
-      GraftBridge.column(graft.expr.DotLong(
-        GraftBridge.expression(a), GraftBridge.expression(b)))
-    }
+    def dotq(a: Column, b: Column): Column = KernelCall.column(a, b, DotLong)
     def n2(q: Column): Column = dotq(q, q)
     val ci = index.select(col("id").as("nid"), col("q").as("cq"))
       .withColumn("cn2", n2(col("cq")))
@@ -183,19 +176,16 @@ object SimilaritySearch {
     * (graft.expr.SignBuckets): bit p of bucket t = sign of
     * dot(v, plane[t][p]). The sequential fold matches the oracle's
     * list_dot_product exactly (same op order ⇒ same IEEE754 result ⇒ same
-    * sign, always). The HOF-per-plane formulation this replaces evaluated
-    * tables×planes×dim interpreted calls per row.
+    * sign, always).
     */
   private[ops] def signBucketsAll(v: Column, tables: Int, planes: Int,
                                   dim: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
     val w = Array.tabulate(tables * planes * dim) { idx =>
       val t = idx / (planes * dim)
       val r = idx % (planes * dim)
       planeWeight(t, r / dim, r % dim)
     }
-    GraftBridge.column(graft.expr.SignBuckets(
-      GraftBridge.expression(v.cast("array<double>")), tables, planes, dim, w))
+    KernelCall.column(v.cast("array<double>"), SignBuckets(tables, planes, dim, w))
   }
 
   def bruteForce(corpus: DataFrame, queries: DataFrame,

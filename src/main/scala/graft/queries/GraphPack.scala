@@ -201,9 +201,7 @@ object GraphPack {
         broadcast(qz.select(col("nid").as("qid"), col("q").as("qq"))))
       .filter(col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
-        org.apache.spark.sql.GraftBridge.column(graft.expr.SqDistLong(
-          org.apache.spark.sql.GraftBridge.expression(col("q")),
-          org.apache.spark.sql.GraftBridge.expression(col("qq"))))
+        graft.expr.KernelCall.column(col("q"), col("qq"), graft.expr.SqDistLong)
           .as("dist"))
     val knn = TopKPerGroup(pairs, Seq("qid"), "dist", k, Seq("nid"),
       ascending = true)
@@ -249,9 +247,7 @@ object GraphPack {
       col("q").as("qb"))
     val pairs = a.join(b, col("ca") === col("cb") && col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
-        org.apache.spark.sql.GraftBridge.column(graft.expr.SqDistLong(
-          org.apache.spark.sql.GraftBridge.expression(col("qa")),
-          org.apache.spark.sql.GraftBridge.expression(col("qb"))))
+        graft.expr.KernelCall.column(col("qa"), col("qb"), graft.expr.SqDistLong)
           .as("dist"))
     val knn = TopKPerGroup(pairs, Seq("qid"), "dist", k, Seq("nid"),
       ascending = true)
@@ -295,9 +291,7 @@ object GraphPack {
       col("q").as("qb"))
     val pairs = a.join(b, col("ca") === col("cb") && col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
-        org.apache.spark.sql.GraftBridge.column(graft.expr.SqDistLong(
-          org.apache.spark.sql.GraftBridge.expression(col("qa")),
-          org.apache.spark.sql.GraftBridge.expression(col("qb"))))
+        graft.expr.KernelCall.column(col("qa"), col("qb"), graft.expr.SqDistLong)
           .as("dist"))
     val knn = TopKPerGroup(pairs, Seq("qid"), "dist", k, Seq("nid"),
       ascending = true)

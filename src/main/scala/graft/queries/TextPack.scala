@@ -397,9 +397,7 @@ object TextPack {
             .select(col("nid").as("qid"), col("q").as("qq"))))
         .filter(col("nid") =!= col("qid"))
         .select(col("qid"), col("nid"),
-          org.apache.spark.sql.GraftBridge.column(graft.expr.SqDistLong(
-            org.apache.spark.sql.GraftBridge.expression(col("q")),
-            org.apache.spark.sql.GraftBridge.expression(col("qq"))))
+          graft.expr.KernelCall.column(col("q"), col("qq"), graft.expr.SqDistLong)
             .as("dist"))
       graft.ops.TopKPerGroup(pairs, Seq("qid"), "dist", k, Seq("nid"),
         ascending = true).select(col("qid"), col("nid"))
@@ -1099,9 +1097,7 @@ object TextPack {
           .select(col("nid").as("qid"), col("q").as("qq"))))
       .filter(col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
-        org.apache.spark.sql.GraftBridge.column(graft.expr.SqDistLong(
-          org.apache.spark.sql.GraftBridge.expression(col("q")),
-          org.apache.spark.sql.GraftBridge.expression(col("qq"))))
+        graft.expr.KernelCall.column(col("q"), col("qq"), graft.expr.SqDistLong)
           .as("dist"))
     val sem = TopKPerGroup(pairs, Seq("qid"), "dist", k, Seq("nid"),
         ascending = true)
@@ -1128,9 +1124,7 @@ object TextPack {
           .select(col("nid").as("qid"), col("q").as("qq"))))
       .filter(col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
-        org.apache.spark.sql.GraftBridge.column(graft.expr.SqDistLong(
-          org.apache.spark.sql.GraftBridge.expression(col("q")),
-          org.apache.spark.sql.GraftBridge.expression(col("qq"))))
+        graft.expr.KernelCall.column(col("q"), col("qq"), graft.expr.SqDistLong)
           .as("dist"))
     val ranked = TopKPerGroup(pairs, Seq("qid"), "dist", k, Seq("nid"),
       ascending = true)

@@ -181,6 +181,21 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("DESCRIBE FUNCTION shows a usage for every injected function") {
+    withExtSession { s =>
+      val names = s.sql("SHOW FUNCTIONS LIKE 'graft_*'").collect()
+        .map(_.getString(0)).toSeq
+      assert(names.size == 29 && names.contains("graft_dot") &&
+        names.contains("graft_bignum_sum"), names)
+      names.foreach { n =>
+        val usage = s.sql(s"DESCRIBE FUNCTION $n").collect().map(_.getString(0))
+          .find(_.startsWith("Usage:"))
+        assert(usage.exists(u => u.startsWith(s"Usage: $n(") && u.length > 30),
+          s"$n: $usage")
+      }
+    }
+  }
+
   test("aggregates resolve: exact bignum sum and MG heavy hitters") {
     withExtSession { s =>
       val big = "9" * 40 // past DECIMAL(38) range

@@ -2,9 +2,10 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{GraftBridge, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -13,11 +14,12 @@ import graft.ops.{Bpe, Unigram, WordPiece}
 import TestSpark.spark
 
 /** Laws every per-row kernel keeps, table-driven over all of them: on
-  * nulls, empty arrays, null elements and hostile unicode, interpreted
-  * `eval`, generated code (the DataFrame path, with codegen fallback off)
-  * and a plain-Scala model agree; equal parameters give semantically
-  * equal expressions and different ones do not; a child of the wrong
-  * type fails analysis.
+  * nulls, empty arrays, null elements, hostile unicode and each kernel's
+  * null-returning edges, interpreted `eval`, generated code (the
+  * DataFrame path, with codegen fallback off, calling the kernel through
+  * its reference object) and a plain-Scala model agree; equal parameters
+  * give semantically equal expressions and different ones do not; a child
+  * of the wrong type fails analysis.
   */
 class KernelLawSpec extends AnyFunSuite {
 
@@ -67,10 +69,18 @@ class KernelLawSpec extends AnyFunSuite {
     hostile.map(h => uni.encodeWord(h).toSeq))
 
   /** One kernel under test: how to build it (twice, for the equality
-    * law), its SQL name, its inputs, and its plain-Scala model.
+    * law), its SQL name, its argument tuples, its plain-Scala model over a
+    * tuple with no null argument, and the child types when they are not
+    * the kernel's own `inputTypes`.
     */
-  private case class Law(make: () => Kernel[_, _], prettyName: String,
-                         inputs: Seq[Any], model: Any => Any)
+  private case class Law(make: () => Kernel, prettyName: String,
+                         inputs: Seq[Seq[Any]], model: Seq[Any] => Any,
+                         types: Seq[DataType] = Nil)
+
+  /** A one-argument law. */
+  private def law(make: () => Kernel, prettyName: String, inputs: Seq[Any],
+                  model: Any => Any, types: Seq[DataType] = Nil): Law =
+    Law(make, prettyName, inputs.map(Seq(_)), args => model(args.head), types)
 
   private def onTokens(f: Seq[String] => Any): Any => Any =
     v => f(v.asInstanceOf[Seq[String]])
@@ -92,34 +102,295 @@ class KernelLawSpec extends AnyFunSuite {
   private def tokenHashes(width: Int): Any => Any = onTokens(_.map(t =>
     md5Prefix(if (t == null) "" else t, width / 4)))
 
+  // ---- vectors and sketches ----
+
+  private def nums[A](v: Any): Seq[A] = v.asInstanceOf[Seq[A]]
+
+  /** Element-wise pair fold, null on a length mismatch or a null element. */
+  private def pairFold[A](z: A)(f: (A, Any, Any) => A): Seq[Any] => Any = {
+    case Seq(x: Seq[_], y: Seq[_]) =>
+      if (x.size != y.size || (x ++ y).contains(null)) null
+      else x.zip(y).foldLeft(z) { case (acc, (a, b)) => f(acc, a, b) }
+  }
+
+  private val doublePairs: Seq[Seq[Any]] = Seq(
+    Seq(Seq(1.0, 2.0), Seq(3.0, 4.0)), Seq(Seq(0.1, 0.2, 0.3), Seq(0.3, 0.2, 0.1)),
+    Seq(Seq(), Seq()), Seq(Seq(1.0), Seq(1.0, 2.0)), Seq(Seq(1.0, null), Seq(1.0, 2.0)),
+    Seq(null, Seq(1.0)), Seq(Seq(1.0), null))
+
+  private val longPairs: Seq[Seq[Any]] = Seq(
+    Seq(Seq(1L, 5L), Seq(4L, 1L)), Seq(Seq(-7L, 0L, 9L), Seq(3L, 2L, -1L)),
+    Seq(Seq(), Seq()), Seq(Seq(1L), Seq(1L, 2L)), Seq(Seq(1L, null), Seq(1L, 2L)),
+    Seq(null, Seq(1L)))
+
+  private val doubleVectors: Seq[Any] = Seq(null, Seq(), Seq(null),
+    Seq(1.0, -2.0), Seq(0.5, 0.25), Seq(1.0, null), Seq(1.0), Seq(0.0, 0.0),
+    Seq(1.5, -2.0, null, 0.75))
+
+  private val signDim = 2
+  private val signWeights: Array[Double] =
+    Array(0.5, -1.0, -0.25, 0.75, 1.0, 1.0, -1.0, 0.5, 0.0, -1.0, 0.25, 0.25)
+
+  private def signModel(v: Any): Any = {
+    val xs = nums[Any](v)
+    Seq.tabulate(2) { t =>
+      if (xs.size != signDim || xs.contains(null)) 0L
+      else (0 until 3).map { p =>
+        val dot = (0 until signDim).foldLeft(0.0) { (acc, j) =>
+          acc + xs(j).asInstanceOf[Double] * signWeights((t * 3 + p) * signDim + j)
+        }
+        if (dot >= 0) 1L << p else 0L
+      }.sum
+    }
+  }
+
+  private def quantizeModel(shift: Int): Any => Any = v => nums[Any](v).map {
+    case null      => null
+    case f: Float  => math.floor(f.toDouble * (1L << shift)).toLong
+    case d: Double => math.floor(d * (1L << shift)).toLong
+  }
+
+  private def int8Model(v: Any): Any = {
+    val xs = nums[Any](v)
+    val scale = xs.collect { case d: Double => math.abs(d) }
+      .foldLeft(0.0)(math.max) / 127.0
+    Row(scale, xs.map {
+      case _ if scale == 0.0 => 0L
+      case null              => null
+      case d: Double         => math.floor(d / scale + 0.5).toLong
+    })
+  }
+
+  private val centroids: Array[Long] = Array(0L, 0L, 8L, 8L, -12L, 20L, 4L, 4L)
+
+  /** struct(dist, local index) of the nearest of centroids `from until
+    * until` to v·fp, ties to the lowest; null for a malformed vector.
+    */
+  private def assignModel(v: Any, fp: Long, from: Int, until: Int): Any = {
+    val xs = nums[Any](v)
+    if (xs.size != 2 || xs.contains(null) || until <= from) null
+    else {
+      val (d, j) = (from until until).map { j =>
+        (xs.indices.map { i =>
+          val d = xs(i).asInstanceOf[Long] * fp - centroids(j * 2 + i); d * d
+        }.sum, (j - from).toLong)
+      }.min
+      Row(d, j)
+    }
+  }
+
+  private val longVectors: Seq[Any] = Seq(null, Seq(), Seq(1L, 2L), Seq(-3L, 5L),
+    Seq(1L, 1L), Seq(1L), Seq(1L, null), Seq(2L, 2L, 2L))
+
+  private val groupedInputs: Seq[Seq[Any]] =
+    Seq(0L, 1L, 2L, 3L, -1L).flatMap(p => longVectors.map(v => Seq(v, p))) :+
+      Seq(Seq(1L, 2L), null)
+
+  private val offsets: Array[Int] = Array(0, 2, 2, 4)
+
+  private def pqModel(ksub: Int): Seq[Any] => Any = {
+    case Seq(codes: Seq[Any] @unchecked, dtab: Seq[Any] @unchecked) =>
+      if (dtab.size != codes.size * ksub || codes.contains(null)) null
+      else {
+        val cs = codes.map(_.asInstanceOf[Long])
+        if (cs.exists(c => c < 0 || c >= ksub)) null
+        else {
+          val picked = cs.zipWithIndex.map { case (c, j) => dtab(j * ksub + c.toInt) }
+          if (picked.contains(null)) null else picked.map(_.asInstanceOf[Long]).sum
+        }
+      }
+  }
+
+  private val hashArrays: Seq[Any] = Seq(null, Seq(), Seq(null),
+    Seq(0xAL, 0x8L, 0x2L), Seq(null, 5L, 7L), Seq(1L << 39, (1L << 40) - 1, 0L),
+    Seq(123456789L, 987654321L, 123456789L))
+
+  private def minhashModel(k: Int): Any => Any = v => {
+    val hs = nums[Any](v).collect { case h: Long => h }
+    Seq.tabulate(k) { i =>
+      (hs.map(h => (MinHashConsts.a(i) * h + MinHashConsts.b(i)) % MinHashConsts.M) :+
+        MinHashConsts.M).min
+    }
+  }
+
+  private def simhashModel(bits: Int): Any => Any = v => {
+    val hs = nums[Any](v).collect { case h: Long => h }
+    (0 until bits).filter(i => 2 * hs.count(h => ((h >>> i) & 1L) == 1L) > hs.size)
+      .map(1L << _).sum
+  }
+
+  // ---- text ----
+
+  private def recodeModel(charset: String, errors: String): Any => Any = v => {
+    val s = v.asInstanceOf[String]
+    if (s.exists(_ > 0xFF)) null
+    else {
+      val action =
+        if (errors == "replace") java.nio.charset.CodingErrorAction.REPLACE
+        else java.nio.charset.CodingErrorAction.REPORT
+      val dec = java.nio.charset.Charset.forName(charset).newDecoder()
+        .onMalformedInput(action).onUnmappableCharacter(action)
+      try dec.decode(java.nio.ByteBuffer.wrap(s.map(_.toByte).toArray)).toString
+      catch { case _: java.nio.charset.CharacterCodingException => null }
+    }
+  }
+
+  private def octalModel(escapeBackslash: Boolean): Any => Any = v => {
+    def esc(b: Int): String = f"\\${(b >> 6) & 7}${(b >> 3) & 7}${b & 7}"
+    v.asInstanceOf[String].codePoints().toArray.map {
+      case '\\' if escapeBackslash => esc('\\')
+      case cp if cp <= 127           => new String(Character.toChars(cp))
+      case cp if cp <= 0xFF          => esc(cp)
+      case cp => new String(Character.toChars(cp)).getBytes(UTF_8)
+        .map(b => esc(b & 0xFF)).mkString
+    }.mkString
+  }
+
+  private def entropyModel(symbols: Seq[Any]): Row = {
+    val n = symbols.size.toLong
+    Row(n, if (n == 0) 0L else symbols.groupBy(identity).values.map { g =>
+      g.size * (Log2Fp.compute(n) - Log2Fp.compute(g.size.toLong))
+    }.sum)
+  }
+
+  private val bytePreserving: Seq[Any] = Seq(null, "", "abc", "\u00C3\u00A9",
+    "\u00E2\u0098\u0083", "\u00FF", "caf\u00C3", "\u4E2D", "a\\b", "\u00E9t\u00E9")
+
+  private val bignums: Seq[Any] = Seq(null, "0", "-0", "+0", "007", "-0042", "+12",
+    " 42 ", "", "-", "+", "1.5", "1e3", "12a", "\u0661", "9" * 303, "1" + "0" * 303,
+    "-" + "9" * 304, "9" * 305, BigInt(2).pow(1007).toString,
+    (BigInt(2).pow(1007) - 1).toString)
+
+  private def bignumModel(v: Any): Any = {
+    val t = v.asInstanceOf[String].trim
+    if (!t.matches("[+-]?[0-9]+")) null
+    else {
+      val b = BigInt(t)
+      if (b.abs > BigInt(2).pow(1007) - 1) null else b.toString
+    }
+  }
+
+  /** RIFF/WAVE blobs with the 1-based offset of their `data` payload
+    * (null when there is none): `data` after `fmt `, after an odd-sized
+    * (padded) LIST chunk, missing, a non-WAVE RIFF, and a short blob.
+    */
+  private val riffBlobs: Seq[(Array[Byte], Any)] = {
+    def le32(n: Int): Array[Byte] = Array.tabulate(4)(i => ((n >> (8 * i)) & 0xff).toByte)
+    def chunk(tag: String, payload: Int): Array[Byte] =
+      tag.getBytes(UTF_8) ++ le32(payload) ++ Array.fill(payload + (payload & 1))(7.toByte)
+    def riff(form: String, chunks: Array[Byte]*): Array[Byte] = {
+      val body = form.getBytes(UTF_8) ++ chunks.flatten
+      "RIFF".getBytes(UTF_8) ++ le32(body.length) ++ body
+    }
+    Seq(
+      riff("WAVE", chunk("fmt ", 16), chunk("data", 4)) -> (12 + 24 + 9L),
+      riff("WAVE", chunk("LIST", 3), chunk("fmt ", 16), chunk("data", 2)) ->
+        (12 + 12 + 24 + 9L),
+      riff("WAVE", chunk("fmt ", 16)) -> null,
+      riff("AVI ", chunk("data", 4)) -> null,
+      "RIFF".getBytes(UTF_8) -> null)
+  }
+
   private val laws: Seq[Law] = Seq(
-    Law(() => ShingleHashes(1), "graft_shingle_hash40", tokenArrays, shingles(1)),
-    Law(() => ShingleHashes(3), "graft_shingle_hash40", tokenArrays, shingles(3)),
-    Law(() => PositionedShingleHashes(2), "graft_positioned_shingle_hash60",
+    law(() => ShingleHashes(1), "graft_shingle_hash40", tokenArrays, shingles(1)),
+    law(() => ShingleHashes(3), "graft_shingle_hash40", tokenArrays, shingles(3)),
+    law(() => PositionedShingleHashes(2), "graft_positioned_shingle_hash60",
       tokenArrays, positioned(2)),
-    Law(() => TokenHashes(40), "graft_token_hash40", tokenArrays, tokenHashes(40)),
-    Law(() => TokenHashes(60), "graft_token_hash60", tokenArrays, tokenHashes(60)),
-    Law(() => SubwordEncode(bpe), "graft_bpe_encode", tokenArrays, encodeModel(bpe)),
-    Law(() => SubwordEncode(uni), "graft_unigram_encode", tokenArrays,
+    law(() => TokenHashes(40), "graft_token_hash40", tokenArrays, tokenHashes(40)),
+    law(() => TokenHashes(60), "graft_token_hash60", tokenArrays, tokenHashes(60)),
+    law(() => SubwordEncode(bpe), "graft_bpe_encode", tokenArrays, encodeModel(bpe)),
+    law(() => SubwordEncode(uni), "graft_unigram_encode", tokenArrays,
       encodeModel(uni)),
-    Law(() => SubwordEncode(wp), "graft_wordpiece_encode", tokenArrays,
+    law(() => SubwordEncode(wp), "graft_wordpiece_encode", tokenArrays,
       encodeModel(wp)),
-    Law(() => DecodePieces(false), "graft_piece_decode", nestedArrays,
+    law(() => DecodePieces(false), "graft_piece_decode", nestedArrays,
       v => decodeModel(v.asInstanceOf[Seq[Seq[String]]], wordPiece = false)),
-    Law(() => DecodePieces(true), "graft_piece_decode", nestedArrays,
+    law(() => DecodePieces(true), "graft_piece_decode", nestedArrays,
       v => decodeModel(v.asInstanceOf[Seq[Seq[String]]], wordPiece = true)),
-    Law(() => WordSymbols, "graft_wordpiece_symbols", null +: hostile,
+    law(() => WordSymbols, "graft_wordpiece_symbols", null +: hostile,
       v => v.asInstanceOf[String].codePoints().toArray.toSeq.zipWithIndex
         .map { case (cp, i) =>
-          (if (i == 0) "" else "##") + new String(Character.toChars(cp)) }))
+          (if (i == 0) "" else "##") + new String(Character.toChars(cp)) }),
+    Law(() => DotProduct, "graft_dot", doublePairs,
+      pairFold(0.0)((acc, a, b) => acc + a.asInstanceOf[Double] * b.asInstanceOf[Double])),
+    law(() => SignBuckets(2, 3, signDim, signWeights), "graft_sign_buckets",
+      doubleVectors, signModel),
+    law(() => QuantizeLong(3)(), "graft_quantize", doubleVectors, quantizeModel(3)),
+    law(() => QuantizeLong(2)(), "graft_quantize",
+      Seq(null, Seq(), Seq(1.5f, null, -2.25f, 0.1f), Seq(Float.MaxValue / 8, -3.0e-5f)),
+      quantizeModel(2), types = Seq(ArrayType(FloatType))),
+    Law(() => SqDistLong, "graft_sqdist", longPairs, pairFold(0L) { (acc, a, b) =>
+      val d = a.asInstanceOf[Long] - b.asInstanceOf[Long]; acc + d * d }),
+    Law(() => KMeansAssignGrouped(2, 4L, centroids, offsets),
+      "graft_kmeans_assign_grouped", groupedInputs, { case Seq(v, p: Long) =>
+        if (p < 0 || p >= 3) null
+        else assignModel(v, 4L, offsets(p.toInt), offsets(p.toInt + 1))
+      }),
+    Law(() => DotLong, "graft_dot_long", longPairs,
+      pairFold(0L)((acc, a, b) => acc + a.asInstanceOf[Long] * b.asInstanceOf[Long])),
+    law(() => QuantizeInt8, "graft_quantize_int8", doubleVectors, int8Model),
+    law(() => KMeansAssign(2, 4L, centroids), "graft_kmeans_assign", longVectors,
+      v => assignModel(v, 4L, 0, 4)),
+    Law(() => PqAdc(2), "graft_pq_adc", Seq(
+      Seq(Seq(0L, 1L), Seq(10L, 20L, 30L, 40L)), Seq(Seq(0L, 2L), Seq(10L, 20L, 30L, 40L)),
+      Seq(Seq(-1L, 0L), Seq(10L, 20L, 30L, 40L)), Seq(Seq(0L), Seq(10L, 20L, 30L, 40L)),
+      Seq(Seq(0L, 1L), Seq(10L, null, 30L, 40L)), Seq(Seq(1L, 1L), Seq(10L, null, 30L, 40L)),
+      Seq(Seq(null, 1L), Seq(10L, 20L, 30L, 40L)), Seq(Seq(), Seq()),
+      Seq(null, Seq(1L))), pqModel(2)),
+    law(() => MinHashSig(4), "graft_minhash_sig", hashArrays, minhashModel(4)),
+    law(() => SimHash(8), "graft_simhash", hashArrays, simhashModel(8)),
+    law(() => SimHash(40), "graft_simhash", hashArrays, simhashModel(40)),
+    law(() => UnicodeNormalize("NFC"), "graft_unicode_normalize", null +: hostile,
+      v => java.text.Normalizer.normalize(v.asInstanceOf[String],
+        java.text.Normalizer.Form.NFC)),
+    law(() => UnicodeNormalize("NFKD"), "graft_unicode_normalize", null +: hostile,
+      v => java.text.Normalizer.normalize(v.asInstanceOf[String],
+        java.text.Normalizer.Form.NFKD)),
+    law(() => RecodeCharset("UTF-8", "strict"), "graft_recode", bytePreserving,
+      recodeModel("UTF-8", "strict")),
+    law(() => RecodeCharset("UTF-8", "replace"), "graft_recode", bytePreserving,
+      recodeModel("UTF-8", "replace")),
+    law(() => AsciiOctal(false), "graft_ascii_octal",
+      bytePreserving ++ hostile.filter(_.nonEmpty), octalModel(false)),
+    law(() => AsciiOctal(true), "graft_ascii_octal",
+      bytePreserving ++ hostile.filter(_.nonEmpty), octalModel(true)),
+    law(() => Utf8EntropyFp, "graft_char_entropy_fp", null +: hostile,
+      v => entropyModel(v.asInstanceOf[String].codePoints().toArray.toSeq)),
+    law(() => StringArrayEntropyFp, "graft_token_entropy_fp", tokenArrays,
+      onTokens(ts => entropyModel(ts.filter(_ != null)))),
+    law(() => Log2Fp, "graft_log2fp",
+      Seq(null, 1L, 2L, 3L, 10L, 1024L, (1L << 31) - 1, Long.MaxValue, 0L, -5L,
+        Long.MinValue),
+      { case x: Long => if (x <= 0) null else Log2Fp.compute(x) }),
+    law(() => BigNumCanon, "graft_bignum_canon", bignums, bignumModel),
+    law(() => RiffChunkOffset("data"), "graft_riff_chunk_offset",
+      null +: riffBlobs.map(_._1),
+      v => riffBlobs.find(_._1 eq v.asInstanceOf[AnyRef]).get._2))
 
-  /** Scala collections of any flavour as Lists, for comparison. */
+  /** Scala collections of any flavour as Lists, rows field by field, for
+    * comparison.
+    */
   private def norm(v: Any): Any = v match {
     case s: scala.collection.Seq[_] => s.map(norm).toList
+    case r: Row                     => Row.fromSeq(r.toSeq.map(norm))
     case other                      => other
   }
 
   private def label(l: Law): String = s"${l.make()}"
+
+  /** The child types of a law, arrays with nullable elements so inputs
+    * can carry null elements.
+    */
+  private def childTypes(l: Law): Seq[DataType] = {
+    def nullableElements(t: DataType): DataType = t match {
+      case ArrayType(e, _) => ArrayType(nullableElements(e), containsNull = true)
+      case other           => other
+    }
+    (if (l.types.nonEmpty) l.types else l.make().inputTypes).map(nullableElements)
+  }
+
+  private def refs(types: Seq[DataType]): Seq[BoundReference] =
+    types.zipWithIndex.map { case (t, i) => BoundReference(i, t, nullable = true) }
 
   test("interpreted eval, generated code and the plain-Scala model agree") {
     // a separate session: codegen failures must throw here, not fall
@@ -129,13 +400,13 @@ class KernelLawSpec extends AnyFunSuite {
     s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     laws.foreach { l =>
       val k = l.make()
-      val inType = k.inputType
-      val expected = l.inputs.map(v => if (v == null) null else norm(l.model(v)))
+      val types = childTypes(l)
+      val expected = l.inputs.map(args =>
+        if (args.contains(null)) null else norm(l.model(args)))
 
-      val ref = BoundReference(0, inType, nullable = true)
-      val interpreted = l.inputs.map { v =>
-        val out = KernelCall(ref, k).eval(
-          InternalRow(CatalystTypeConverters.convertToCatalyst(v)))
+      val interpreted = l.inputs.map { args =>
+        val out = KernelCall(refs(types), k).eval(
+          InternalRow.fromSeq(args.map(CatalystTypeConverters.convertToCatalyst)))
         norm(CatalystTypeConverters.convertToScala(out, k.dataType))
       }
       assert(interpreted == expected, s"${label(l)}: interpreted eval")
@@ -143,47 +414,85 @@ class KernelLawSpec extends AnyFunSuite {
       // an RDD source, so the optimizer cannot fold the projection into a
       // local relation and evaluate it before execution
       val df = s.createDataFrame(
-        s.sparkContext.parallelize(l.inputs.map(v => Row(v)), 1),
-        StructType(Seq(StructField("c", inType, nullable = true))))
-        .select(KernelCall.column(col("c"), k))
-      val plan = df.queryExecution.executedPlan
+        s.sparkContext.parallelize(l.inputs.map(Row.fromSeq), 1),
+        StructType(types.zipWithIndex.map { case (t, i) =>
+          StructField(s"c$i", t, nullable = true) }))
+      val call = KernelCall(types.indices.map(i => GraftBridge.expression(col(s"c$i"))), k)
+      val out = df.select(GraftBridge.column(call))
+      val plan = out.queryExecution.executedPlan
       assert(plan.isInstanceOf[WholeStageCodegenExec] &&
         plan.toString.contains(l.prettyName),
         s"${label(l)}: the kernel runs inside whole-stage codegen\n$plan")
-      val generated = df.collect().map(r => norm(r.get(0))).toSeq
+      // one direct call through the reference object, cast to the
+      // kernel's own class; a primitive result boxes only when it may be
+      // null
+      val code = plan.asInstanceOf[WholeStageCodegenExec].doCodeGen()._2.body
+      assert(code.contains(s"((${k.getClass.getName}) references[") &&
+        code.contains("/* kernel */).apply("), s"${label(l)}: kernel call\n$code")
+      assert(code.contains("boxed") ==
+        (k.nullable && CodeGenerator.isPrimitiveType(k.dataType)),
+        s"${label(l)}: boxing\n$code")
+      val generated = out.collect().map(r => norm(r.get(0))).toSeq
       assert(generated == expected, s"${label(l)}: generated code")
     }
   }
 
   test("SQL names, equality by parameters, models by reference") {
-    val a = BoundReference(0, ArrayType(StringType), nullable = true)
     laws.foreach { l =>
       val (k1, k2) = (l.make(), l.make())
-      assert(KernelCall(a, k1).prettyName == l.prettyName)
-      assert(KernelCall(a, k1).semanticEquals(KernelCall(a, k2)), label(l))
-      assert(KernelCall(a, k1).canonicalized == KernelCall(a, k2).canonicalized)
+      val cs = refs(k1.inputTypes)
+      assert(KernelCall(cs, k1).prettyName == l.prettyName)
+      assert(KernelCall(cs, k1).semanticEquals(KernelCall(cs, k2)), label(l))
+      assert(KernelCall(cs, k1).canonicalized == KernelCall(cs, k2).canonicalized)
     }
-    def differ(k1: Kernel[_, _], k2: Kernel[_, _]): Unit =
-      assert(!KernelCall(a, k1).semanticEquals(KernelCall(a, k2)), s"$k1 vs $k2")
+    def differ(k1: Kernel, k2: Kernel): Unit = {
+      val cs = refs(k1.inputTypes)
+      assert(!KernelCall(cs, k1).semanticEquals(KernelCall(cs, k2)), s"$k1 vs $k2")
+    }
     differ(ShingleHashes(3), ShingleHashes(4))
     differ(TokenHashes(40), TokenHashes(60))
     differ(PositionedShingleHashes(2), PositionedShingleHashes(3))
     differ(DecodePieces(false), DecodePieces(true))
     differ(SubwordEncode(bpe), SubwordEncode(new BpeModel(bpe.merges)))
     differ(SubwordEncode(wp), SubwordEncode(new WordPieceModel(wp.vocab)))
+    differ(QuantizeLong(2)(), QuantizeLong(3)())
+    differ(KMeansAssign(2, 4L, centroids), KMeansAssign(2, 4L, centroids.clone()))
+    differ(KMeansAssign(2, 4L, centroids), KMeansAssign(2, 8L, centroids))
+    differ(KMeansAssignGrouped(2, 4L, centroids, offsets),
+      KMeansAssignGrouped(2, 4L, centroids, offsets.clone()))
+    differ(PqAdc(2), PqAdc(3))
+    differ(MinHashSig(4), MinHashSig(5))
+    differ(SimHash(8), SimHash(40))
+    differ(UnicodeNormalize("NFC"), UnicodeNormalize("NFD"))
+    differ(RecodeCharset("UTF-8", "strict"), RecodeCharset("UTF-8", "replace"))
+    differ(AsciiOctal(false), AsciiOctal(true))
+    differ(RiffChunkOffset("data"), RiffChunkOffset("fmt "))
+    // the element reader a kernel picks for its child type is not a
+    // parameter: the bound kernel equals the one that was built
+    assert(QuantizeLong(2)().on(Seq(ArrayType(FloatType))) == Some(QuantizeLong(2)()))
   }
 
   test("a child of the wrong type fails analysis") {
     laws.foreach { l =>
       val k = l.make()
-      val check = KernelCall(Literal(1), k).checkInputDataTypes()
-      assert(check.isFailure, label(l))
+      val arity = k.inputTypes.size
+      assert(KernelCall(Seq.fill(arity)(Literal(1)), k).checkInputDataTypes()
+        .isFailure, label(l))
+      assert(KernelCall(Seq.fill(arity + 1)(Literal(1)), k).checkInputDataTypes()
+        .isFailure, s"${label(l)}: one child too many")
+      assert(intercept[org.apache.spark.sql.AnalysisException] {
+        spark.range(1).select(GraftBridge.column(KernelCall(
+          Seq.fill(arity)(GraftBridge.expression(col("id").cast("int"))), k))).collect()
+      }.getMessage.contains(l.prettyName), label(l))
     }
     val nested = KernelCall(Literal.create(null, ArrayType(StringType)),
       DecodePieces(false)).checkInputDataTypes()
     assert(nested.isFailure)
-    assert(intercept[org.apache.spark.sql.AnalysisException] {
-      spark.range(1).select(KernelCall.column(col("id"), TokenHashes(40))).collect()
-    }.getMessage.contains("graft_token_hash40"))
+    val badParent = KernelCall(Seq(Literal.create(Seq(1L, 2L), ArrayType(LongType)),
+      Literal(1)), KMeansAssignGrouped(2, 4L, centroids, offsets)).checkInputDataTypes()
+    assert(badParent.isFailure, "an int parent id is not a bigint")
+    val floats = KernelCall(Literal.create(Seq(1.0f), ArrayType(FloatType)),
+      QuantizeInt8).checkInputDataTypes()
+    assert(floats.isFailure, "only graft_quantize reads float arrays")
   }
 }

@@ -42,7 +42,8 @@ class ModelFilterSpec extends AnyFunSuite {
     val viaDf = xs.toDF("x")
       .select(ModelFilter.log2fp(col("x")).as("l")).as[Long].collect()
     xs.zip(viaDf).foreach { case (x, l) =>
-      val interp = Log2Fp(org.apache.spark.sql.catalyst.expressions.Literal(x))
+      val interp = graft.expr.KernelCall(
+        org.apache.spark.sql.catalyst.expressions.Literal(x), Log2Fp)
         .eval(InternalRow.empty).asInstanceOf[Long]
       assert(l == interp && l == Log2Fp.compute(x), s"x=$x")
     }

@@ -96,20 +96,18 @@ class PqSpec extends AnyFunSuite {
   test("PqAdc: interpreted == codegen, null on bad code / length mismatch") {
     val s = spark
     import s.implicits._
-    import org.apache.spark.sql.GraftBridge
     def adc(codes: Seq[Long], dtab: Seq[Long], kk: Int): Option[Long] = {
       val df = Seq((codes, dtab)).toDF("c", "d")
-        .select(GraftBridge.column(graft.expr.PqAdc(
-          GraftBridge.expression(col("c")),
-          GraftBridge.expression(col("d")), kk)).as("s"))
+        .select(graft.expr.KernelCall.column(col("c"), col("d"),
+          graft.expr.PqAdc(kk)).as("s"))
       val viaDf = df.collect().head
-      val interp = graft.expr.PqAdc(
+      val interp = graft.expr.KernelCall(Seq(
         org.apache.spark.sql.catalyst.expressions.Literal.create(
           codes, org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.LongType)),
         org.apache.spark.sql.catalyst.expressions.Literal.create(
           dtab, org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.LongType)), kk)
+            org.apache.spark.sql.types.LongType))), graft.expr.PqAdc(kk))
         .eval(org.apache.spark.sql.catalyst.InternalRow.empty)
       assert(Option(viaDf.get(0)) == Option(interp),
         s"mode disagreement for codes=$codes")

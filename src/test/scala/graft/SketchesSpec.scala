@@ -1,7 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.expr.MinHashConsts
 import graft.functions.{SimilarityFunctions => S, TextFunctions => T}
 import graft.ops.SimilaritySearch
@@ -152,6 +154,27 @@ class SketchesSpec extends AnyFunSuite {
       assert(got == want60,
         s"bits=60 blocks=$blocks must find exactly the brute-force pairs " +
           s"(missing ${want60 -- got}, extra ${got -- want60})")
+    }
+  }
+
+  test("simhash evaluates each document's sketch once; a null text pairs with nothing") {
+    val s = spark
+    // an RDD source, so the optimizer cannot fold the plan into a local
+    // relation and drop the operators this test looks at
+    val docs = s.createDataFrame(
+      s.sparkContext.parallelize(Seq(Row(1L, "a b c d e f g h"),
+        Row(2L, "a b c d e f g h"), Row(3L, null), Row(4L, null)), 1),
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+    for (bits <- Seq(40, 60)) {
+      val pairs = graft.ops.Dedup.simhash(docs, "doc_id", "text", bits = bits)
+      // the projection computes the sketch; no Filter may compute it again
+      val filters = pairs.queryExecution.optimizedPlan.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.sql
+      }
+      assert(filters.nonEmpty && !filters.exists(_.contains("graft_token_hash")),
+        filters.mkString("\n"))
+      assert(pairs.select("id_a", "id_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 2L)))
     }
   }
 

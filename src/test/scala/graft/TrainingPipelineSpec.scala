@@ -389,8 +389,7 @@ class TrainingPipelineSpec extends AnyFunSuite {
     assert(run("NFKC")(3)._2 == "file", "NFKC folds the ligature")
     assert(run("NFD")(1)._2 == decomposed, "NFD decomposes")
     intercept[IllegalArgumentException] {
-      graft.expr.UnicodeNormalize(
-        org.apache.spark.sql.GraftBridge.expression(col("t")), "NFX")
+      graft.expr.UnicodeNormalize("NFX")
     }
   }
 

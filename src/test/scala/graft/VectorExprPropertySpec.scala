@@ -4,8 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
-import graft.expr.{DotLong, KMeansAssign, QuantizeInt8, QuantizeLong, SqDistLong}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+import graft.expr.{DotLong, KMeansAssign, KernelCall, QuantizeInt8, QuantizeLong, SqDistLong}
 import TestSpark.spark
 
 /** The curation expressions' three evaluation paths must agree: the
@@ -36,14 +39,11 @@ class VectorExprPropertySpec extends AnyFunSuite {
     for (i <- 1 to 60) {
       val (a, b) = (sample(vecGen, i), sample(vecGen, 1000 + i))
       val model = a.zip(b).map { case (x, y) => val d = x - y; d * d }.sum
-      val interp = SqDistLong(lit(a), lit(b))
+      val interp = KernelCall(Seq(lit(a), lit(b)), SqDistLong)
         .eval(InternalRow.empty).asInstanceOf[Long]
       assert(interp == model)
       val viaCol = Seq((a.toSeq, b.toSeq)).toDF("a", "b")
-        .select(org.apache.spark.sql.GraftBridge.column(
-          SqDistLong(
-            org.apache.spark.sql.GraftBridge.expression(col("a")),
-            org.apache.spark.sql.GraftBridge.expression(col("b")))).as("d"))
+        .select(KernelCall.column(col("a"), col("b"), SqDistLong).as("d"))
         .head.getLong(0)
       assert(viaCol == model)
     }
@@ -52,14 +52,11 @@ class VectorExprPropertySpec extends AnyFunSuite {
   test("SqDistLong: length mismatch and null elements are null on both paths") {
     val s = spark
     import s.implicits._
-    val interp = SqDistLong(lit(Array(1L, 2L)), lit(Array(1L, 2L, 3L)))
+    val interp = KernelCall(Seq(lit(Array(1L, 2L)), lit(Array(1L, 2L, 3L))), SqDistLong)
       .eval(InternalRow.empty)
     assert(interp == null)
     val viaCol = Seq((Seq(1L, 2L), Seq(1L, 2L, 3L))).toDF("a", "b")
-      .select(org.apache.spark.sql.GraftBridge.column(
-        SqDistLong(
-          org.apache.spark.sql.GraftBridge.expression(col("a")),
-          org.apache.spark.sql.GraftBridge.expression(col("b")))).as("d"))
+      .select(KernelCall.column(col("a"), col("b"), SqDistLong).as("d"))
       .head
     assert(viaCol.isNullAt(0))
   }
@@ -79,14 +76,11 @@ class VectorExprPropertySpec extends AnyFunSuite {
         }
         (acc, j.toLong)
       }.min
-      val interp = KMeansAssign(lit(v), dim, fp, mus)
+      val interp = KernelCall(lit(v), KMeansAssign(dim, fp, mus))
         .eval(InternalRow.empty).asInstanceOf[InternalRow]
       assert((interp.getLong(0), interp.getLong(1)) == model)
       val viaCol = Seq(Tuple1(v.toSeq)).toDF("v")
-        .select(org.apache.spark.sql.GraftBridge.column(
-          KMeansAssign(
-            org.apache.spark.sql.GraftBridge.expression(col("v")),
-            dim, fp, mus)).as("s"))
+        .select(KernelCall.column(col("v"), KMeansAssign(dim, fp, mus)).as("s"))
         .select(col("s.dist"), col("s.cluster"))
         .head
       assert((viaCol.getLong(0), viaCol.getLong(1)) == model)
@@ -104,9 +98,7 @@ class VectorExprPropertySpec extends AnyFunSuite {
       val scale = (1L << shift).toDouble
       val model = v.map(x => math.floor(x.toDouble * scale).toLong).toSeq
       val df = Seq(Tuple1(v.toSeq)).toDF("v")
-      val viaExpr = df.select(org.apache.spark.sql.GraftBridge.column(
-          QuantizeLong(
-            org.apache.spark.sql.GraftBridge.expression(col("v")), shift)).as("q"))
+      val viaExpr = df.select(KernelCall.column(col("v"), QuantizeLong(shift)()).as("q"))
         .head.getSeq[Long](0)
       assert(viaExpr == model)
       // the HOF formulation this expression replaced — must stay value-identical
@@ -121,7 +113,7 @@ class VectorExprPropertySpec extends AnyFunSuite {
       Seq[java.lang.Double](1.5, null, -2.25),
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.DoubleType, containsNull = true))
-    val out = QuantizeLong(lit2, 2).eval(InternalRow.empty)
+    val out = KernelCall(lit2, QuantizeLong(2)()).eval(InternalRow.empty)
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
     assert(out.numElements() == 3 && !out.isNullAt(0) && out.isNullAt(1))
     assert(out.getLong(0) == 6L && out.getLong(2) == -9L)
@@ -133,20 +125,19 @@ class VectorExprPropertySpec extends AnyFunSuite {
     for (i <- 1 to 40) {
       val (a, b) = (sample(vecGen, 7000 + i), sample(vecGen, 8000 + i))
       val model = a.zip(b).map { case (x, y) => x * y }.sum
-      val interp = DotLong(lit(a), lit(b)).eval(InternalRow.empty).asInstanceOf[Long]
+      val interp = KernelCall(Seq(lit(a), lit(b)), DotLong)
+        .eval(InternalRow.empty).asInstanceOf[Long]
       assert(interp == model)
       val row = Seq((a.toSeq, b.toSeq)).toDF("a", "b")
         .select(
-          org.apache.spark.sql.GraftBridge.column(DotLong(
-            org.apache.spark.sql.GraftBridge.expression(col("a")),
-            org.apache.spark.sql.GraftBridge.expression(col("b")))).as("d"),
+          KernelCall.column(col("a"), col("b"), DotLong).as("d"),
           aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
             org.apache.spark.sql.functions.lit(0L), (acc, x) => acc + x).as("hof"))
         .head
       assert(row.getLong(0) == model && row.getLong(1) == model)
     }
     // length mismatch / null element -> null, like the HOF
-    assert(DotLong(lit(Array(1L, 2L)), lit(Array(1L, 2L, 3L)))
+    assert(KernelCall(Seq(lit(Array(1L, 2L)), lit(Array(1L, 2L, 3L))), DotLong)
       .eval(InternalRow.empty) == null)
   }
 
@@ -165,10 +156,11 @@ class VectorExprPropertySpec extends AnyFunSuite {
       val v = sample(dGen, 9000 + i)
       val (wScale, wQ) = model(v)
       // interpreted
-      val interp = QuantizeInt8(
+      val interp = KernelCall(
         org.apache.spark.sql.catalyst.expressions.Literal.create(v.toSeq,
           org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType, containsNull = false)))
+            org.apache.spark.sql.types.DoubleType, containsNull = false)),
+        QuantizeInt8)
         .eval(InternalRow.empty).asInstanceOf[InternalRow]
       assert(interp.getDouble(0) == wScale)
       // codegen + the HOF chain it replaced, side by side
@@ -177,8 +169,7 @@ class VectorExprPropertySpec extends AnyFunSuite {
           aggregate(col("v"), org.apache.spark.sql.functions.lit(0.0),
             (acc, x) => greatest(acc, abs(x))).as("ma"))
         .select(
-          org.apache.spark.sql.GraftBridge.column(graft.expr.QuantizeInt8(
-            org.apache.spark.sql.GraftBridge.expression(col("v")))).as("sq"),
+          KernelCall.column(col("v"), QuantizeInt8).as("sq"),
           (col("ma") / org.apache.spark.sql.functions.lit(127.0)).as("hofScale"),
           col("v"))
         .select(col("sq.scale"), col("sq.q"), col("hofScale"),
@@ -192,11 +183,12 @@ class VectorExprPropertySpec extends AnyFunSuite {
       assert(row.getSeq[Long](1) == wQ && row.getSeq[Long](3) == wQ)
     }
     // zero vector: scale 0, all-zero codes on the interpreted path too
-    val z = QuantizeInt8(
+    val z = KernelCall(
       org.apache.spark.sql.catalyst.expressions.Literal.create(
         Seq(0.0, 0.0),
         org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, containsNull = false)))
+          org.apache.spark.sql.types.DoubleType, containsNull = false)),
+      QuantizeInt8)
       .eval(InternalRow.empty).asInstanceOf[InternalRow]
     assert(z.getDouble(0) == 0.0)
     assert(z.getArray(1).toLongArray().toSeq == Seq(0L, 0L))
@@ -209,22 +201,19 @@ class VectorExprPropertySpec extends AnyFunSuite {
     val neg = Array(Long.MinValue / 2, 0L, 0L, 0L, 0L, 0L)
     // interpreted
     intercept[ArithmeticException] {
-      SqDistLong(lit(big), lit(neg)).eval(InternalRow.empty)
+      KernelCall(Seq(lit(big), lit(neg)), SqDistLong).eval(InternalRow.empty)
     }
     // codegen (DataFrame path)
     val ex = intercept[Exception] {
       Seq((big.toSeq, neg.toSeq)).toDF("a", "b")
-        .select(org.apache.spark.sql.GraftBridge.column(
-          SqDistLong(
-            org.apache.spark.sql.GraftBridge.expression(col("a")),
-            org.apache.spark.sql.GraftBridge.expression(col("b")))).as("d"))
+        .select(KernelCall.column(col("a"), col("b"), SqDistLong).as("d"))
         .head
     }
     def rootIsArithmetic(t: Throwable): Boolean =
       t != null && (t.isInstanceOf[ArithmeticException] || rootIsArithmetic(t.getCause))
     assert(rootIsArithmetic(ex))
     intercept[ArithmeticException] {
-      KMeansAssign(lit(big), dim, 1L << 10, Array.fill(dim)(Long.MinValue / 2))
+      KernelCall(lit(big), KMeansAssign(dim, 1L << 10, Array.fill(dim)(Long.MinValue / 2)))
         .eval(InternalRow.empty)
     }
   }
@@ -238,22 +227,38 @@ class VectorExprPropertySpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("graft_quantize"), plan)
     assert(!plan.contains("transform("), plan)
-    assert(!QuantizeLong(
-      org.apache.spark.sql.GraftBridge.expression(col("v")), 6)
+    assert(!KernelCall(
+      org.apache.spark.sql.GraftBridge.expression(col("v")), QuantizeLong(6)())
       .isInstanceOf[org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback])
+  }
+
+  test("KMeansAssign: calls that differ only in centroids share one generated source") {
+    val s = spark
+    // an RDD source, so the projection is not folded away before codegen
+    val df = s.createDataFrame(
+      s.sparkContext.parallelize(Seq(Row(Seq(1L, 2L, 3L, 4L, 5L, 6L))), 1),
+      StructType(Seq(StructField("v", ArrayType(LongType), nullable = true))))
+    def source(mus: Array[Long]): (String, Long) = {
+      val q = df.select(KernelCall.column(col("v"), KMeansAssign(dim, 1024L, mus))
+        .getField("cluster"))
+      val plan = q.queryExecution.executedPlan
+      (plan.asInstanceOf[WholeStageCodegenExec].doCodeGen()._2.body,
+        q.head.getLong(0))
+    }
+    val (a, clusterA) = source(Array.fill(dim)(0L) ++ Array.fill(dim)(1L << 20))
+    val (b, clusterB) = source(Array.fill(dim)(1L << 20) ++ Array.fill(dim)(0L))
+    assert((clusterA, clusterB) == (0L, 1L), "the centroids do reach the kernel")
+    assert(a == b)
   }
 
   test("KMeansAssign: wrong-length vector is null on both paths") {
     val s = spark
     import s.implicits._
     val mus = Array.fill(2 * dim)(0L)
-    assert(KMeansAssign(lit(Array(1L, 2L)), dim, 1024L, mus)
+    assert(KernelCall(lit(Array(1L, 2L)), KMeansAssign(dim, 1024L, mus))
       .eval(InternalRow.empty) == null)
     val viaCol = Seq(Tuple1(Seq(1L, 2L))).toDF("v")
-      .select(org.apache.spark.sql.GraftBridge.column(
-        KMeansAssign(
-          org.apache.spark.sql.GraftBridge.expression(col("v")),
-          dim, 1024L, mus)).as("s"))
+      .select(KernelCall.column(col("v"), KMeansAssign(dim, 1024L, mus)).as("s"))
       .head
     assert(viaCol.isNullAt(0))
   }
