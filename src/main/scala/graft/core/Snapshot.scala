@@ -120,7 +120,6 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
     *                    (reference: SipHash mod slices, dsutilmodule.c:273-281;
     *                    ours: Spark Murmur3 via `repartition` — bit-layout
     *                    compat is a non-goal, co-partitioning is the point).
-    * @param zoneMaps    compute per-column min/max for chain skipping.
     */
   def write(
       df: DataFrame,
@@ -129,7 +128,6 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
       previous: Option[String] = None,
       slices: Int = 0,
       refTypes: Map[String, String] = Map.empty,
-      zoneMaps: Boolean = true,
       caption: String = "",
       formatVersion: Option[Int] = None,
       preRouted: Boolean = false): Snapshot = {
@@ -157,26 +155,23 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
       }
     }
     val aggs = count(lit(1)).as("__lines") +: comparable.flatMap { f =>
-      if (zoneMaps) {
-        // NaN must not poison float zone maps (Spark's max sorts NaN above
-        // everything; the reference excludes NaN/None, dataset.py:875-897)
-        // — UNLESS NaN is the only value, where the reference records
-        // min=max=NaN (a_test_dataset_nan.py). Range skipping stays safe:
-        // every comparison against a "NaN" bound is false, so such a
-        // snapshot is never skipped.
-        f.dataType.typeName match {
-          case "double" | "float" =>
-            val qc = Cols.q(f.name)
-            val nonNaN = when(!isnan(qc), qc)
-            val allNaN = max(when(isnan(qc), lit("NaN")))
-            Seq(coalesce(min(nonNaN).cast("string"), allNaN).as(s"__min_${f.name}"),
-                coalesce(max(nonNaN).cast("string"), allNaN).as(s"__max_${f.name}"))
-          case _ =>
-            val qc = Cols.q(f.name)
-            Seq(min(qc).cast("string").as(s"__min_${f.name}"),
-                max(qc).cast("string").as(s"__max_${f.name}"))
-        }
-      } else Nil
+      // NaN must not poison float zone maps (Spark's max sorts NaN above
+      // everything; the reference excludes NaN/None, dataset.py:875-897)
+      // — UNLESS NaN is the only value, where the reference records
+      // min=max=NaN (a_test_dataset_nan.py). Range skipping stays safe:
+      // every comparison against a "NaN" bound is false, so such a
+      // snapshot is never skipped.
+      val qc = Cols.q(f.name)
+      f.dataType.typeName match {
+        case "double" | "float" =>
+          val nonNaN = when(!isnan(qc), qc)
+          val allNaN = max(when(isnan(qc), lit("NaN")))
+          Seq(coalesce(min(nonNaN).cast("string"), allNaN).as(s"__min_${f.name}"),
+              coalesce(max(nonNaN).cast("string"), allNaN).as(s"__max_${f.name}"))
+        case _ =>
+          Seq(min(qc).cast("string").as(s"__min_${f.name}"),
+              max(qc).cast("string").as(s"__max_${f.name}"))
+      }
     }.toSeq
     val obs = Observation()
     val observed = routed.observe(obs, aggs.head, aggs.tail: _*)
@@ -209,13 +204,10 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
     }
     val row = SnapshotStore.observedRow(obs, name)
     val lines = row.getLong(0)
-    val mm: Map[String, (Option[String], Option[String])] =
-      if (zoneMaps)
-        comparable.zipWithIndex.map { case (f, i) =>
-          f.name -> (Option(row.getString(1 + 2 * i)),
-                     Option(row.getString(2 + 2 * i)))
-        }.toMap
-      else Map.empty
+    val mm = comparable.zipWithIndex.map { case (f, i) =>
+      f.name -> (Option(row.getString(1 + 2 * i)),
+                 Option(row.getString(2 + 2 * i)))
+    }.toMap
     val cols = df.schema.fields.map { f =>
       val (mn, mx) = mm.getOrElse(f.name, (None, None))
       ColumnMeta(f.name, f.dataType.simpleString,

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Cached
 import graft.functions.{SimilarityFunctions => S, TextFunctions => T}
 
 /** Deduplication operators for training-data pipelines.
@@ -79,17 +80,15 @@ object Dedup {
     */
   def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
                    maxDf: Int,
-                   n: Int = 3, threshold: Double = 0.8): DataFrame = {
+                   n: Int = 3, threshold: Double = 0.8): DataFrame = Cached.frame { c =>
     val withHs = df.select(col(idCol).as("id"),
       S.shingleHashes(col(textCol), n).as("hs"))
     // the posting list feeds FIVE branches (hot, cold, hotPost, sizes, hot
     // counts) — persist it so the shingle+md5 computation runs once, not
     // per branch (MEMORY_AND_DISK: spills instead of recomputing at scale)
-    val posting = withHs.select(col("id"), explode(col("hs")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hot = posting.groupBy("h").count()
-      .filter(col("count") > maxDf).select("h")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val posting = c(withHs.select(col("id"), explode(col("hs")).as("h")))
+    val hot = c(posting.groupBy("h").count()
+      .filter(col("count") > maxDf).select("h"))
     val cold = posting.join(hot, Seq("h"), "left_anti")
     val hotPost = posting.join(hot, Seq("h"), "left_semi")
 
@@ -124,19 +123,12 @@ object Dedup {
       .join(hy, Seq("id_b", "h"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("c_hot"))
 
-    val result = survivors.join(cHot, Seq("id_a", "id_b"), "left")
+    survivors.join(cHot, Seq("id_a", "id_b"), "left")
       .withColumn("c", col("c_cold") + coalesce(col("c_hot"), lit(0L)))
       .select(col("id_a"), col("id_b"),
         (col("c").cast("double") /
          (col("sz_a") + col("sz_b") - col("c")).cast("double")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      // materialize (pairs are tiny next to the corpus), then release the
-      // big cached intermediates — a long-lived driver calling dedup
-      // repeatedly must not accumulate executor storage
-      .localCheckpoint()
-    posting.unpersist()
-    hot.unpersist()
-    result
   }
 
   /** MinHash + banded-LSH near-dup pairs — the constant-memory at-scale
@@ -154,12 +146,11 @@ object Dedup {
     */
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
                  n: Int = 3, k: Int = 16, bands: Int = 8,
-                 threshold: Double = 0.8): DataFrame = {
+                 threshold: Double = 0.8): DataFrame = Cached.frame { c =>
     require(k % bands == 0, s"k=$k must be a multiple of bands=$bands")
     val rows = k / bands
     // reused by the band path and both verify joins
-    val idx = minhashIndex(df, idCol, textCol, n, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val idx = c(minhashIndex(df, idCol, textCol, n, k))
     val br = bandRows(idx, bands, rows)
     val cands = br.as("x").join(br.as("y"),
         col("x.band") === col("y.band") && col("x.bslice") === col("y.bslice") &&
@@ -168,13 +159,10 @@ object Dedup {
       .distinct()
     val a = idx.select(col("id").as("id_a"), col("hs").as("hs_a"))
     val b = idx.select(col("id").as("id_b"), col("hs").as("hs_b"))
-    val result = cands.join(a, "id_a").join(b, "id_b")
+    cands.join(a, "id_a").join(b, "id_b")
       .select(col("id_a"), col("id_b"),
         S.jaccard(col("hs_a"), col("hs_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .localCheckpoint() // see ngramJaccard: release the cache below
-    idx.unpersist()
-    result
   }
 
   /** Minhash index rows — per doc, the hashed shingle set and the k-slot
@@ -219,7 +207,7 @@ object Dedup {
     */
   def incrementalMinhash(batchIdx: DataFrame, historyIdx: DataFrame,
                          k: Int = 16, bands: Int = 8,
-                         threshold: Double = 0.8): DataFrame = {
+                         threshold: Double = 0.8): DataFrame = Cached.frame { c =>
     require(k % bands == 0, s"k=$k must be a multiple of bands=$bands")
     val rows = k / bands
     // the index frames were built with SOME k — a mismatch with this k
@@ -240,15 +228,10 @@ object Dedup {
           lit(s", caller expects k=$k")))))
     }
     // the batch index is referenced four times (two band joins + both
-    // verify sides) — persist it, or the batch's signature computation
+    // verify sides) — cache it, or the batch's signature computation
     // re-executes per reference, violating the "batch pays once" contract
-    // (the history side is a persisted snapshot already). A frame the
-    // CALLER already persisted is left alone — and left persisted.
-    val callerCached =
-      batchIdx.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val batch =
-      if (callerCached) batchIdx
-      else batchIdx.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // (the history side is a persisted snapshot already)
+    val batch = c(batchIdx)
     // shingle size n is invisible in the hashes — a batch indexed with a
     // different n than history silently skews every jaccard. When both
     // frames carry [[minhashIndex]]'s `n` column, cross-check each
@@ -289,13 +272,10 @@ object Dedup {
     // columns (an old persisted index without n/k vs a fresh batch)
     val both = batch.select(col("id").as("id_b"), col("hs").as("hs_b"))
       .unionByName(historyChecked.select(col("id").as("id_b"), col("hs").as("hs_b")))
-    val result = cands.join(a, "id_a").join(both, "id_b")
+    cands.join(a, "id_a").join(both, "id_b")
       .select(col("id_a"), col("id_b"),
         S.jaccard(col("hs_a"), col("hs_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .localCheckpoint() // release the cache below without cutting the result
-    if (!callerCached) batch.unpersist()
-    result
   }
 
   /** SimHash near-dup pairs with Hamming distance ≤ maxHamming over the
@@ -430,7 +410,7 @@ object Dedup {
     */
   def dupClusters(pairs: DataFrame, maxIter: Int = 30,
                   warnOnly: Boolean = false,
-                  localThreshold: Long = 1L << 20): DataFrame = {
+                  localThreshold: Long = 1L << 20): DataFrame = Cached.frame { c =>
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     Seq("id_a", "id_b").foreach { c =>
       val t = pairs.schema(c).dataType
@@ -438,81 +418,75 @@ object Dedup {
         s"dupClusters: $c must be an integral type, got ${t.simpleString} — " +
         "hash non-integral ids to long first (e.g. xxhash64)")
     }
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // canonical undirected pairs, oriented u >= v; self-loops carry no
     // connectivity but their ids must still appear in the output
-    val canon = pairs
+    val canon = c(pairs
       .select(greatest(col("id_a"), col("id_b")).cast("long").as("u"),
               least(col("id_a"), col("id_b")).cast("long").as("v"))
-      .distinct().persist(lvl)
+      .distinct())
     val loops = canon.filter(col("u") === col("v")).select(col("u").as("id"))
-    var edges = canon.filter(col("u") =!= col("v"))
-    val edgeCount = edges.count()
-    if (edgeCount <= localThreshold) {
-      val labeled = localClusters(pairs.sparkSession, edges.collect())
-      val out = withSelfLoops(labeled, loops).localCheckpoint()
-      canon.unpersist()
-      return out
-    }
-    var converged = false
-    var i = 0
-    var prev: (Long, java.math.BigDecimal) = null
-    while (!converged && i < maxIter) {
-      // LARGE-STAR over both directions: x's neighborhood min m =
-      // min(N(x) ∪ {x}); every neighbor nbr > x re-links to m.
-      val bidir = edges.select(col("u").as("x"), col("v").as("nbr"))
-        .unionByName(edges.select(col("v").as("x"), col("u").as("nbr")))
-      val mins = bidir.groupBy("x").agg(least(min(col("nbr")), col("x")).as("m"))
-      val large = bidir.join(mins, "x")
-        .filter(col("nbr") > col("x"))
-        .select(col("nbr").as("u"), col("m").as("v"))
-        .distinct()
-      // SMALL-STAR over the (u > v)-oriented result: u's min smaller
-      // neighbor m; u and all its other smaller neighbors link to m.
-      val mins2 = large.groupBy("u").agg(min(col("v")).as("m"))
-      val relinked = large.join(mins2, "u")
-        .filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-      val next0 = relinked.unionByName(mins2.select(col("u"), col("m").as("v")))
-        .distinct()
-      // lineage grows by ~4 joins per round — checkpoint every other round,
-      // persist in between; the fixpoint agg below scans every partition,
-      // fully materializing the new cache BEFORE the superseded one is
-      // released (recompute-through-released-lineage pitfall)
-      val next = if ((i + 1) % 2 == 0) next0.localCheckpoint() else next0.persist(lvl)
-      val row = next.agg(count(lit(1)),
-        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).collect()(0)
-      val stats = (row.getLong(0), row.getDecimal(1))
-      edges.unpersist() // superseded — executor storage would leak per round
-      edges = next
-      converged = prev != null && prev._1 == stats._1 &&
-        ((prev._2 == null && stats._2 == null) ||
-         (prev._2 != null && stats._2 != null && prev._2.compareTo(stats._2) == 0))
-      prev = stats
-      i += 1
-    }
-    if (!converged) {
-      val msg = s"graft.ops.Dedup.dupClusters: maxIter=$maxIter reached " +
-        "without convergence — cluster labels would be silently split"
-      if (warnOnly) System.err.println(s"WARN $msg")
-      else throw new IllegalStateException(msg)
-    }
-    // fixpoint is a star per component: u→v edges ARE the labels; roots
-    // (appearing only as v) label themselves
-    val roots = edges.select(col("v")).distinct()
-      .join(edges.select(col("u").as("v")), Seq("v"), "left_anti")
-    val raw = edges.select(col("u").as("id"), col("v").as("cluster"))
-      .unionByName(roots.select(col("v").as("id"), col("v").as("cluster")))
-    // a non-converged (warnOnly) edge set is not a star — a node can carry
-    // several labels and labels can chain; keep the minimum so the output
-    // is at least one label per id (possibly non-minimal, as warned)
+    val edges0 = canon.filter(col("u") =!= col("v"))
     val labeled =
-      if (converged) raw
-      else raw.groupBy("id").agg(min(col("cluster")).as("cluster"))
-    val out = withSelfLoops(labeled, loops).localCheckpoint()
-    edges.unpersist()
-    canon.unpersist()
-    out
+      if (edges0.count() <= localThreshold)
+        localClusters(pairs.sparkSession, edges0.collect())
+      else {
+        var edges = edges0
+        var converged = false
+        var i = 0
+        var prev: (Long, java.math.BigDecimal) = null
+        while (!converged && i < maxIter) {
+          // LARGE-STAR over both directions: x's neighborhood min m =
+          // min(N(x) ∪ {x}); every neighbor nbr > x re-links to m.
+          val bidir = edges.select(col("u").as("x"), col("v").as("nbr"))
+            .unionByName(edges.select(col("v").as("x"), col("u").as("nbr")))
+          val mins = bidir.groupBy("x").agg(least(min(col("nbr")), col("x")).as("m"))
+          val large = bidir.join(mins, "x")
+            .filter(col("nbr") > col("x"))
+            .select(col("nbr").as("u"), col("m").as("v"))
+            .distinct()
+          // SMALL-STAR over the (u > v)-oriented result: u's min smaller
+          // neighbor m; u and all its other smaller neighbors link to m.
+          val mins2 = large.groupBy("u").agg(min(col("v")).as("m"))
+          val relinked = large.join(mins2, "u")
+            .filter(col("v") =!= col("m"))
+            .select(col("v").as("u"), col("m").as("v"))
+          val next0 = relinked.unionByName(mins2.select(col("u"), col("m").as("v")))
+            .distinct()
+          // lineage grows by ~4 joins per round — checkpoint every other round,
+          // persist in between; the fixpoint agg below scans every partition,
+          // fully materializing the new cache BEFORE the superseded one is
+          // released (recompute-through-released-lineage pitfall)
+          val next = if ((i + 1) % 2 == 0) c.checkpoint(next0) else c(next0)
+          val row = next.agg(count(lit(1)),
+            sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).collect()(0)
+          val stats = (row.getLong(0), row.getDecimal(1))
+          c.release(edges) // superseded — executor storage would grow per round
+          edges = next
+          converged = prev != null && prev._1 == stats._1 &&
+            ((prev._2 == null && stats._2 == null) ||
+             (prev._2 != null && stats._2 != null && prev._2.compareTo(stats._2) == 0))
+          prev = stats
+          i += 1
+        }
+        if (!converged) {
+          val msg = s"graft.ops.Dedup.dupClusters: maxIter=$maxIter reached " +
+            "without convergence — cluster labels would be silently split"
+          if (warnOnly) System.err.println(s"WARN $msg")
+          else throw new IllegalStateException(msg)
+        }
+        // fixpoint is a star per component: u→v edges ARE the labels; roots
+        // (appearing only as v) label themselves
+        val roots = edges.select(col("v")).distinct()
+          .join(edges.select(col("u").as("v")), Seq("v"), "left_anti")
+        val raw = edges.select(col("u").as("id"), col("v").as("cluster"))
+          .unionByName(roots.select(col("v").as("id"), col("v").as("cluster")))
+        // a non-converged (warnOnly) edge set is not a star — a node can carry
+        // several labels and labels can chain; keep the minimum so the output
+        // is at least one label per id (possibly non-minimal, as warned)
+        if (converged) raw
+        else raw.groupBy("id").agg(min(col("cluster")).as("cluster"))
+      }
+    withSelfLoops(labeled, loops)
   }
 
   /** Ids appearing only in self-pairs connect to nothing: label themselves. */

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Cached
 import graft.core.Cols.{q => Q}
 
 /** Graph profiling — the one-row report card the graph family's operators
@@ -91,11 +92,12 @@ object Graphs {
   /** One row: n_nodes, n_edges, n_dangling, max_out_deg, max_in_deg,
     * n_reciprocal — over the DISTINCT directed edge set.
     */
-  def report(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = edges.select(Q(srcCol).cast("long").as("src"),
+  def report(edges: DataFrame, srcCol: String,
+             dstCol: String): DataFrame = Cached.frame { c =>
+    val e = c(edges.select(Q(srcCol).cast("long").as("src"),
         Q(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().persist() // released at exit, result materialized first
+      .distinct())
     // One grouped pass builds (v, out-degree, in-degree) for every node;
     // then: n_nodes = count, n_edges = Σ od (each distinct edge counted
     // exactly once at its src), n_dangling = count(od = 0), and the
@@ -136,10 +138,7 @@ object Graphs {
           col("src") === col("rsrc") && col("dst") === col("rdst"))
         .agg(count(lit(1)).as("n_reciprocal"))
     }
-    val out = summary.crossJoin(nRecip).persist()
-    out.count()
-    e.unpersist()
-    out
+    summary.crossJoin(nRecip)
   }
 
   /** Census-shape diagnostic: one row (n_wedges, n_candidates,
@@ -154,14 +153,14 @@ object Graphs {
     * outdeg checks the O(√m) adjacency bound the orientation exists for.
     */
   def triangleDiag(edges: DataFrame, srcCol: String,
-                   dstCol: String): DataFrame = {
+                   dstCol: String): DataFrame = Cached.frame { c =>
     val e = edges.select(Q(srcCol).cast("long").as("src"),
         Q(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
-    val und = e.select(least(col("src"), col("dst")).as("a"),
+    val und = c(e.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .distinct().persist()
+      .distinct())
     val deg = und.select(col("a").as("v"))
       .unionAll(und.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
@@ -186,10 +185,7 @@ object Graphs {
       coalesce(sum(col("outn")), lit(0L)).as("n_oriented_edges"),
       coalesce(max(col("outn")), lit(0L)).as("max_oriented_outdeg"))
       .drop("__nv")
-    val out = wedges.crossJoin(cand).crossJoin(eStats).persist()
-    out.count()
-    und.unpersist()
-    out
+    wedges.crossJoin(cand).crossJoin(eStats)
   }
 
   /** Triangle census of the UNDIRECTED graph underlying the edge set:
@@ -210,22 +206,22 @@ object Graphs {
     * still hash-matches.
     */
   def triangleStats(edges: DataFrame, srcCol: String,
-                    dstCol: String): DataFrame = {
+                    dstCol: String): DataFrame = Cached.frame { c =>
     val e = edges.select(Q(srcCol).cast("long").as("src"),
         Q(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
     // undirected support: one row per unordered pair
-    val und = e.select(least(col("src"), col("dst")).as("a"),
+    val und = c(e.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .distinct().persist() // released at exit, result materialized first
+      .distinct())
     val deg = und.select(col("a").as("v"))
       .unionAll(und.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
     val wedges = deg.agg(coalesce(sum(expr("(d * (d - 1)) div 2")),
       lit(0L)).as("n_wedges"))
     // (degree, id)-ordered orientation
-    val ranked = und
+    val ranked = c(und
       .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
       .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
       .select(
@@ -234,7 +230,7 @@ object Graphs {
           struct(col("a").as("lo"), col("b").as("hi")))
           .otherwise(struct(col("b").as("lo"), col("a").as("hi")))
           .as("o"))
-      .select(col("o.lo").as("x"), col("o.hi").as("y")).persist()
+      .select(col("o.lo").as("x"), col("o.hi").as("y")))
     // The wedge-candidate exchange is the op's one super-linear byte
     // stream (Σ d_out² rows — compact-forward bounds d_out by O(√m) but
     // the count still grows faster than m on densifying graphs). When
@@ -262,17 +258,10 @@ object Graphs {
         .join(e3, col("x") === col("x1") && col("z") === col("z1"))
         .agg(count(lit(1)).as("n_triangles"))
     }
-    // The census is ONE row: materialize it, then release both internal
-    // caches so repeated invocations leak nothing (ADVICE r11).
-    val out = tri.crossJoin(wedges)
+    tri.crossJoin(wedges)
       .select(col("n_triangles"), col("n_wedges"),
         when(col("n_wedges") > 0,
           expr("(30000 * n_triangles) div n_wedges")).otherwise(0L)
           .as("global_cc_bp"))
-      .persist()
-    out.count()
-    ranked.unpersist()
-    und.unpersist()
-    out
   }
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.core.Cached
 import graft.expr.{KernelCall, KMeansAssign, KMeansAssignGrouped, QuantizeLong}
 
 /** Integer-exact k-means over an embedding column — the clustering stage of
@@ -73,24 +73,24 @@ object KMeans {
   /** [[fixedPoint]] plus the quantized vector each row was assigned with —
     * (idCol, cluster, dist, q: array<long>). The cluster-aware curation
     * consumers ([[SemDeDup]]) need q for within-cluster pair distances
-    * without re-quantizing.
-    *
-    * Caching: the quantized frame persists for the Lloyd loop and stays
-    * cached so the returned assignment's consumers don't re-quantize;
-    * the lifetime is CALLER-OWNED — a long-lived session invoking this
-    * repeatedly should `spark.catalog.clearCache()` (or unpersist the
-    * consumed plan) between invocations, as the bench harness does
-    * per-pass.
+    * without re-quantizing; the assignment comes back materialized, so
+    * they scan it as often as they like.
     */
   def assigned(df: DataFrame, idCol: String, vecCol: String, k: Int,
-               iters: Int, quantShift: Int = 6, fpShift: Int = 10): DataFrame = {
+               iters: Int, quantShift: Int = 6, fpShift: Int = 10): DataFrame =
+    Cached.frame(assignedIn(_, df, idCol, vecCol, k, iters, quantShift, fpShift))
+
+  /** [[assigned]] in the caller's scope, left lazy over the quantized
+    * vectors the scope caches.
+    */
+  private def assignedIn(c: Cached, df: DataFrame, idCol: String,
+                         vecCol: String, k: Int, iters: Int, quantShift: Int,
+                         fpShift: Int): DataFrame = {
     require(quantShift + fpShift <= 20,
       "quantShift+fpShift beyond 20 bits risks Long overflow in the distance sum")
     val fp = 1L << fpShift
-    val q = quantize(df, idCol, vecCol, quantShift)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val mus = lloyd(q, k, iters, fp)
-    finish(q, mus, fp, idCol)
+    val q = c(quantize(df, idCol, vecCol, quantShift))
+    finish(q, lloyd(q, k, iters, fp), fp, idCol)
   }
 
   /** Fit alone: the final fixed-point centroid matrix (k × dim longs) —
@@ -98,15 +98,11 @@ object KMeans {
     * against ([[SemDeDup.incremental]]) without refitting.
     */
   def fit(df: DataFrame, idCol: String, vecCol: String, k: Int,
-          iters: Int, quantShift: Int = 6, fpShift: Int = 10): Array[Array[Long]] = {
+          iters: Int, quantShift: Int = 6,
+          fpShift: Int = 10): Array[Array[Long]] = Cached { c =>
     require(quantShift + fpShift <= 20,
       "quantShift+fpShift beyond 20 bits risks Long overflow in the distance sum")
-    val fp = 1L << fpShift
-    val q = quantize(df, idCol, vecCol, quantShift)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val mus = lloyd(q, k, iters, fp)
-    q.unpersist()
-    mus
+    lloyd(c(quantize(df, idCol, vecCol, quantShift)), k, iters, 1L << fpShift)
   }
 
   /** Assign rows to a GIVEN centroid matrix (no fitting) — one scan,
@@ -204,12 +200,12 @@ object KMeans {
     */
   def assignedTwoLevel(df: DataFrame, idCol: String, vecCol: String,
                        k1: Int, iters1: Int, k2: Int, iters2: Int,
-                       quantShift: Int = 6, fpShift: Int = 10): DataFrame = {
+                       quantShift: Int = 6,
+                       fpShift: Int = 10): DataFrame = Cached.frame { c =>
     require(k2 >= 1 && iters2 >= 0, s"need k2>=1, iters2>=0 (got k2=$k2 iters2=$iters2)")
     val fp = 1L << fpShift
-    val a1 = assigned(df, idCol, vecCol, k1, iters1, quantShift, fpShift)
-      .select(col(idCol).as("kid"), col("cluster").as("c1"), col("q"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val a1 = c(assignedIn(c, df, idCol, vecCol, k1, iters1, quantShift, fpShift)
+      .select(col(idCol).as("kid"), col("cluster").as("c1"), col("q")))
 
     // per-parent seeds: the k2 smallest (md5(id), id) of each parent —
     // ≤ k1·k2 rows reach the driver

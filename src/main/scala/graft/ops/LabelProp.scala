@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Cached
 
 /** Semi-supervised label propagation (Zhu & Ghahramani 2002, the clamped
   * majority-vote variant) — spread a small set of trusted labels (quality
@@ -31,23 +32,20 @@ object LabelProp {
     * @param nodes (v, seed_lbl): seed_lbl non-null = clamped seed.
     * @param edges (src, dst): src's label flows to dst.
     * @return (v, lbl) — null lbl for nodes never reached by any label.
-    *   PERSISTED and eagerly materialized: the single caller-owned cache;
-    *   internals (the edge store and per-iteration label states) are
-    *   released before return.
     */
-  def propagate(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
+  def propagate(nodes: DataFrame, edges: DataFrame,
+                iters: Int): DataFrame = Cached.frame { c =>
     require(iters >= 1 && iters <= 64, s"iters out of range: $iters")
     // cached pre-partitioned on src, the every-iteration join key (see
-    // PageRank.eDeg); released at exit once the result is materialized
-    val e = edges.select(col("src").cast("long").as("src"),
+    // PageRank.eDeg)
+    val e = c(edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().repartition(col("src")).persist()
+      .distinct().repartition(col("src")))
     val n0 = nodes.select(col("v").cast("long").as("v"),
       col("seed_lbl").cast("int").as("seed_lbl"))
     var cur = n0.withColumn("lbl", col("seed_lbl"))
-    var prevCache: DataFrame = null
-    for (i <- 1 to iters) {
+    for (_ <- 1 to iters) {
       val cnt = e
         .join(cur.select(col("v").as("src"), col("lbl").as("nlbl")), "src")
         .where(col("nlbl").isNotNull)
@@ -56,22 +54,19 @@ object LabelProp {
         .agg(max(struct(col("c"), (-col("nlbl")).as("nl"))).as("m"))
         .select(col("dst"), (-col("m.nl")).cast("int").as("blbl"))
       // Each iteration reads the previous state TWICE (the cnt chain and
-      // the direct join), so the state is persisted per round — without
+      // the direct join), so the state is materialized per round — without
       // this the physical plan doubles the whole prefix chain every
       // iteration (2^iters subtrees at the allowed iters=64; ADVICE r11).
-      // Materializing round i lets round i-1's cache be released
-      // immediately: peak cached state is two (v, int) relations.
-      cur = cur.join(best, cur("v") === best("dst"), "left")
+      // Materializing round i lets round i-1's state be released
+      // immediately: peak held state is two (v, int) relations.
+      val prev = cur
+      cur = c.checkpoint(cur.join(best, cur("v") === best("dst"), "left")
         .select(cur("v"), col("seed_lbl"),
           when(col("seed_lbl").isNotNull, col("seed_lbl"))
             .when(col("blbl").isNotNull, col("blbl"))
-            .otherwise(cur("lbl")).as("lbl"))
-        .persist()
-      cur.count()
-      if (prevCache != null) prevCache.unpersist()
-      prevCache = cur
+            .otherwise(cur("lbl")).as("lbl")))
+      c.release(prev)
     }
-    e.unpersist()
     cur.select(col("v"), col("lbl"))
   }
 }

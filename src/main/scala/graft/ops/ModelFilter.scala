@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Cached
 import graft.functions.{SimilarityFunctions => S, TextFunctions => T}
 import graft.expr.{KernelCall, Log2Fp}
 
@@ -287,15 +288,14 @@ object ModelFilter {
     * broadcast; per-doc features reduce map-side to (id, bucket, n); the
     * weight is one grouped sum. Nothing global, nothing quadratic.
     *
-    * Eager: constructing the returned frame runs a Spark job — the one
-    * corpus pass, which persists the (id, is_target, bkt, n) proxy
-    * relation and collects the B-row model to the driver — before any
-    * action on the result. The persisted proxy relation is caller-owned:
-    * nothing here unpersists it, so a caller that builds many weight
-    * frames releases it (or purges the session's cache) itself.
+    * Eager: constructing the returned frame runs the Spark jobs — the
+    * one corpus pass, which caches the (id, is_target, bkt, n) proxy
+    * relation and collects the B-row model to the driver, then the
+    * per-doc weights, which come back materialized.
     */
   def dsirWeights(df: DataFrame, idCol: String, textCol: String,
-                  targetFilter: Column, buckets: Int = 2048): DataFrame = {
+                  targetFilter: Column,
+                  buckets: Int = 2048): DataFrame = Cached.frame { c =>
     require(buckets > 0, s"buckets must be positive, got $buckets")
     val base = toksOf(df, idCol, textCol, targetFilter.as("is_target"))
       .withColumn("fs", concat(
@@ -323,15 +323,12 @@ object ModelFilter {
     // literal: no plan subtree, no second corpus pass, no re-planned
     // stage. The cached relation is (id, is_target, bkt, n) — the
     // lightweight proxy rows, never text — and MEMORY_AND_DISK spills
-    // gracefully at scale. Lifetime is caller-owned, like
-    // KMeans.assigned: the bench harness purges persisted state between
-    // passes.
-    val docAll = base.select(col("id"), col("is_target"),
+    // gracefully at scale.
+    val docAll = c(base.select(col("id"), col("is_target"),
       explode(col("fs")).as("h"))
       .groupBy(col("id"), col("is_target"),
         (col("h") % buckets).as("bkt"))
-      .agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("n")))
 
     // B-row model, finished driver-side: per-bucket delta + the shared
     // normalizer constant (both exact integer arithmetic).

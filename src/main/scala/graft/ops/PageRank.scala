@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Cached
 import graft.core.Cols.{q => Q}
 
 /** Integer-exact fixed-point PageRank (Page et al. 1999) — graph-quality
@@ -46,8 +47,7 @@ import graft.core.Cols.{q => Q}
   *
   * 100 TB shape: `edges` is pre-joined once with out-degrees and cached
   * for the loop (released before return once the final rank vector is
-  * materialized; the persisted RESULT is the one caller-owned cache);
-  * each iteration is then exactly one shuffle — the
+  * materialized); each iteration is then exactly one shuffle — the
   * groupBy(dst) contribution sum — plus a co-partitioned left join back
   * to the node set. Rank state is (v, Long): 16 bytes/node regardless of
   * iteration count. Edges partitioned by src join the rank state on its
@@ -186,7 +186,7 @@ object PageRank {
                    seeds: Option[DataFrame] = None,
                    init: Option[DataFrame] = None,
                    checkpointEvery: Int = 0,
-                   cacheEdges: Boolean = true): DataFrame = {
+                   cacheEdges: Boolean = true): DataFrame = Cached.frame { c =>
     require(iters >= 1 && iters <= 64, s"iters out of range: $iters")
     require(fpShift >= 4 && fpShift <= 24, s"fpShift out of range: $fpShift")
     require(dampNum > 0 && dampDen > 0 && dampNum < dampDen,
@@ -217,12 +217,12 @@ object PageRank {
                 " (r*w would overflow Long)"))))
           .otherwise(col("w").cast("long")).as("w"),
         col("sw").cast("long").as("sw"))
-    val eDegC = if (cacheEdges) eDeg.persist() else eDeg
+    val eDegC = if (cacheEdges) c(eDeg) else eDeg
     val nodes0 = eDegC.select(col("src").as("v"))
       .union(eDegC.select(col("dst").as("v"))).distinct()
     // teleport mass: everywhere 1 for plain PageRank, seed-indicator for
     // personalized. Broadcast-join the (small) seed set at the node scan.
-    val nodes = (seeds match {
+    val nodes = c(seeds match {
       case None => nodes0.withColumn("tp", lit(1L))
       case Some(sd) =>
         val s0 = sd.toDF("sv").select(col("sv").cast("long").as("sv"))
@@ -230,7 +230,7 @@ object PageRank {
         nodes0.join(broadcast(s0), nodes0("v") === col("sv"), "left")
           .select(col("v"),
             when(col("sv").isNotNull, 1L).otherwise(0L).as("tp"))
-    }).persist() // nodes0.distinct() is already hashpartitioning(v)
+    }) // nodes0.distinct() is already hashpartitioning(v)
 
     val r0 = init match {
       case None => nodes.select(col("v"), col("tp"), (col("tp") * fp).as("r"))
@@ -271,22 +271,14 @@ object PageRank {
         // which on a driver that mostly coordinates may be never; the
         // checkpoint cadence is chosen to make iteration shuffles
         // reclaimable, so reclaim them NOW, inside the window the cadence
-        // bought. Old checkpoint blocks are node-sized and evicted under
-        // memory pressure; the session-level purge (Bench/ScaleCheck)
-        // releases them between queries.
-        r = r.localCheckpoint()
+        // bought. The superseded checkpoint is released at once.
+        val prev = r
+        r = c.checkpoint(r)
+        c.release(prev)
         System.gc()
       }
     }
-    // Materialize the final rank vector once, then release the two
-    // internal caches (eDeg, nodes): the persisted result is the only
-    // cache surviving this call — repeated invocations no longer
-    // accumulate unreachable cached RDDs (ADVICE r11).
-    val out = r.select(col("v"), col("r").as("rank_fp")).persist()
-    out.count()
-    if (cacheEdges) eDegC.unpersist()
-    nodes.unpersist()
-    out
+    r.select(col("v"), col("r").as("rank_fp"))
   }
 
   /** Continue the iteration from persisted ranks: ranks(e, a) resumed for

@@ -288,8 +288,13 @@ object Pq {
       (qid, probeList(coarse, qv, nprobe, fp),
         adcTable(books, qv, fpShift).toSeq)
     }.toSeq.toDF("qid", "probes", "dtab")
+    // The probe test is null-tolerant (coalesce) on purpose: a
+    // null-intolerant predicate on `cluster` lets the optimizer infer
+    // isnotnull(cluster) and push it below the projection that computes
+    // the assignment, which then evaluates it twice per corpus row. A
+    // null cluster is in no probe list either way.
     val scored = store.crossJoin(broadcast(qdf))
-      .filter(array_contains(col("probes"), col("cluster")) &&
+      .filter(coalesce(array_contains(col("probes"), col("cluster")), lit(false)) &&
         col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
         KernelCall.column(col("codes"), col("dtab"), PqAdc(ksub)).as("adist"))

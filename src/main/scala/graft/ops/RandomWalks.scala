@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Cached
 import graft.core.Cols.{q => Q}
 
 /** Deterministic random-walk corpus over a directed graph — the DeepWalk
@@ -62,11 +63,7 @@ object RandomWalks {
 
   /** @param starts (v) seed nodes; walk_id = the seed node id.
     * @return (walk_id, step, node), step 0..steps, dense until the walk
-    *   dies at a dangling node. The result is PERSISTED and eagerly
-    *   materialized — the single caller-owned cache handle; every
-    *   internal cache (the neighbor index and the per-step frontiers) is
-    *   released before return, so repeated invocations do not accumulate
-    *   unreachable cached RDDs (the ADVICE r11 leak).
+    *   dies at a dangling node.
     */
   def walks(edges: DataFrame, srcCol: String, dstCol: String,
             starts: DataFrame, steps: Int): DataFrame =
@@ -77,12 +74,11 @@ object RandomWalks {
     * build; the walk corpus is identical (the index is deterministic).
     */
   def walksIndexed(index: DataFrame, starts: DataFrame,
-                   steps: Int): DataFrame = {
+                   steps: Int): DataFrame = Cached.frame { c =>
     require(steps >= 1 && steps <= 128, s"steps out of range: $steps")
-    val nbr = index.select(col("src").cast("long").as("src"),
+    val nbr = c(index.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("idx").cast("long").as("idx"),
-        col("deg").cast("long").as("deg"))
-      .persist()
+        col("deg").cast("long").as("deg")))
     def draw(t: Int) =
       conv(substring(md5(concat(col("walk_id").cast("string"),
         lit(s"|$t"))), 1, 15), 16, 10).cast("long")
@@ -91,7 +87,6 @@ object RandomWalks {
       .select(col("walk_id"), col("walk_id").as("node"))
     var acc = frontier.select(col("walk_id"), lit(0L).as("step"),
       col("node"))
-    val stepCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (t <- 1 to steps) {
       // Each step's frontier is CACHED (|walks| rows): the output unions
       // every step's state, so without this the union branch for step t
@@ -101,24 +96,17 @@ object RandomWalks {
       // the caller); without the explicit hint the planner sort-merge
       // joins, re-sorting the full cached neighbor table every step.
       val f = broadcast(frontier)
-      frontier = f
+      frontier = c(f
         .join(nbr, f("node") === nbr("src"))
         .where(draw(t) % col("deg") === col("idx"))
-        .select(col("walk_id"), col("dst").as("node"))
-        .persist()
-      stepCaches += frontier
+        .select(col("walk_id"), col("dst").as("node")))
       acc = acc.unionByName(
         frontier.select(col("walk_id"), lit(t.toLong).as("step"),
           col("node")))
     }
-    // Materialize the walk corpus once (every step computes exactly once
-    // against the live per-step caches), then release the internals: the
-    // persisted `out` is the only cache that survives this call.
-    val out = acc.persist()
-    out.count()
-    stepCaches.foreach(_.unpersist())
-    nbr.unpersist()
-    out
+    // materialized on exit: every step computes exactly once against the
+    // live per-step caches
+    acc
   }
 
   /** Deterministic node2vec walks — the biased SECOND-ORDER extension of
@@ -154,8 +142,7 @@ object RandomWalks {
     * @param starts (v) seed nodes; walk_id = the seed node id.
     * @param p return parameter (≥ 1); @param q in-out parameter (≥ 1).
     * @return (walk_id, step, node), step 0..steps, dense until the walk
-    *   dies; PERSISTED and eagerly materialized, internal caches
-    *   released before return (the [[walks]] cache contract).
+    *   dies.
     */
   def node2vecWalks(edges: DataFrame, srcCol: String, dstCol: String,
                     starts: DataFrame, steps: Int, p: Int, q: Int): DataFrame =
@@ -165,14 +152,13 @@ object RandomWalks {
     * skip-the-index-build shape as [[walksIndexed]].
     */
   def node2vecIndexed(index: DataFrame, starts: DataFrame,
-                      steps: Int, p: Int, q: Int): DataFrame = {
+                      steps: Int, p: Int, q: Int): DataFrame = Cached.frame { c =>
     require(steps >= 1 && steps <= 128, s"steps out of range: $steps")
     require(p >= 1 && p <= 1000 && q >= 1 && q <= 1000,
       s"p/q out of range: $p/$q (integer 1..1000)")
-    val nbr = index.select(col("src").cast("long").as("src"),
+    val nbr = c(index.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("idx").cast("long").as("idx"),
-        col("deg").cast("long").as("deg"))
-      .persist()
+        col("deg").cast("long").as("deg")))
     def draw(t: Int) =
       conv(substring(md5(concat(col("walk_id").cast("string"),
         lit(s"|$t"))), 1, 15), 16, 10).cast("long")
@@ -183,7 +169,6 @@ object RandomWalks {
     // frontier carries (walk_id, prev, node); step 1 is the uniform
     // first-order draw (no predecessor to bias against)
     var frontier = seeds.select(col("walk_id"), col("walk_id").as("node"))
-    val stepCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (t <- 1 to steps) {
       val next =
         if (t == 1) {
@@ -206,20 +191,17 @@ object RandomWalks {
           // overflows 2 GB). The checkpoint pins it to a leaf, so the
           // per-step plan stays constant-size; the probe result is
           // frontier-bounded (|frontier| · max-out-degree id rows), never
-          // graph-sized, so the materialization is cheap and the blocks
-          // are released by the context cleaner when the step's lineage
-          // drops out.
+          // graph-sized, so the materialization is cheap.
           val keys = frontier.select(col("walk_id"),
               col("node").as("k"), col("node"), col("prev"),
               lit(true).as("is_cand"))
             .unionByName(frontier.select(col("walk_id"),
               col("prev").as("k"), col("node"), col("prev"),
               lit(false).as("is_cand")))
-          val probed = broadcast(keys)
+          val probed = c.checkpoint(broadcast(keys)
             .join(nbr, col("k") === nbr("src"))
             .select(col("walk_id"), col("is_cand"), col("prev"),
-              col("node"), col("idx"), col("dst"))
-            .localCheckpoint()
+              col("node"), col("idx"), col("dst")))
           val cand = probed.where(col("is_cand"))
           // distance-1 marks: (walk_id, dst) pairs reachable from prev —
           // unique because nbr's edges are distinct, so the left join
@@ -248,17 +230,12 @@ object RandomWalks {
             .select(col("walk_id"), col("node").as("prev"),
               col("dst").as("node"))
         }
-      frontier = next.persist()
-      stepCaches += frontier
+      frontier = c(next)
       acc = acc.unionByName(
         frontier.select(col("walk_id"), lit(t.toLong).as("step"),
           col("node")))
     }
-    val out = acc.persist()
-    out.count()
-    stepCaches.foreach(_.unpersist())
-    nbr.unpersist()
-    out
+    acc
   }
 
   /** Skip-gram training pairs from a walk corpus — the step that turns

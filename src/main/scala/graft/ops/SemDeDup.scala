@@ -2,8 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Cached
 import graft.expr.{KernelCall, SqDistLong}
-import org.apache.spark.storage.StorageLevel
 
 /** Cluster-aware corpus curation over the [[KMeans]] assignment —
   * SemDeDup-style semantic dedup and cluster-balanced sampling (Abbas et
@@ -42,7 +42,7 @@ object SemDeDup {
     */
   val DefaultMaxClusterSize: Long = 100000L
 
-  /** The skew gate: one ids-only aggregation over the (persisted)
+  /** The skew gate: one ids-only aggregation over the (materialized)
     * assignment. A degenerate fit — k too small for N, or collapsed
     * centroids — otherwise turns the cluster-keyed self-join into a
     * single reducer doing quadratic work, the classic scale-killer, with
@@ -80,14 +80,8 @@ object SemDeDup {
     * `maxClusterSize` is the skew gate ([[DefaultMaxClusterSize]]): the
     * call fails fast when any cluster exceeds it, because the pair join
     * below is quadratic per cluster. Checked eagerly (the Lloyd fit is
-    * already eager, so this adds one ids-only job over the persisted
+    * already eager, so this adds one ids-only job over the materialized
     * assignment, not a laziness change).
-    *
-    * Caching: the assignment persists for the two scans below; the
-    * lifetime is caller-owned — call `spark.catalog.clearCache()` (or
-    * unpersist via the returned plan's children) between repeated
-    * invocations in one long-lived session, as [[KMeans.assignTo]] /
-    * [[incrementalAssigned]] already document.
     */
   def semantic(df: DataFrame, idCol: String, vecCol: String, k: Int,
                iters: Int, tauSq: Long, quantShift: Int = 6,
@@ -95,7 +89,6 @@ object SemDeDup {
                maxClusterSize: Long = DefaultMaxClusterSize): DataFrame = {
     require(tauSq >= 0, s"tauSq must be >= 0, got $tauSq")
     val a = KMeans.assigned(df, idCol, vecCol, k, iters, quantShift, fpShift)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     guardClusterSizes(a, maxClusterSize, "SemDeDup.semantic")
     val dropped = droppedWithin(a, idCol, tauSq)
     a.join(dropped.withColumn("__dropped", lit(true)),
@@ -143,7 +136,6 @@ object SemDeDup {
     require(tauSq >= 0, s"tauSq must be >= 0, got $tauSq")
     val a = KMeans.assignedTwoLevel(df, idCol, vecCol, k1, iters1, k2, iters2,
         quantShift, fpShift)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     guardClusterSizes(a, maxClusterSize, "SemDeDup.semanticHierarchical")
     val dropped = droppedWithin(a, idCol, tauSq)
     a.join(dropped.withColumn("__dropped", lit(true)),
@@ -193,8 +185,8 @@ object SemDeDup {
     *      cluster from the pruned set.
     *
     * Scale shape: the float embeddings are read once and quantized in
-    * the scan; the assignment (ids + dim-long vectors) persists and
-    * feeds every stage, so `q` crosses an exchange only in the
+    * the scan; the assignment (ids + dim-long vectors) is materialized
+    * once and feeds every stage, so `q` crosses an exchange only in the
     * cluster-keyed pair join of stage 2. Stages 3-4 are bounded windows
     * over (id, cluster, dist) — the vectors are already gone. All three
     * policy stages share stage 1's cluster partitioning.
@@ -210,7 +202,6 @@ object SemDeDup {
       s"keep fraction must be 0 <= $keepNum/$keepDen <= 1")
     require(n >= 1, s"need n >= 1, got $n")
     val a = KMeans.assigned(df, idCol, vecCol, k, iters, quantShift, fpShift)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     guardClusterSizes(a, maxClusterSize, "SemDeDup.curate")
     val surv = a.join(droppedWithin(a, idCol, tauSq),
         col(idCol) === col("xid"), "left_anti")
@@ -307,13 +298,14 @@ object SemDeDup {
                   tauSq: Long, quantShift: Int = 6,
                   fpShift: Int = 10,
                   maxClusterSize: Long = DefaultMaxClusterSize): DataFrame =
-    incrementalAssigned(
-      KMeans.assignTo(batch, idCol, vecCol, mus, quantShift, fpShift)
-        .persist(StorageLevel.MEMORY_AND_DISK),
-      history, idCol, tauSq, maxClusterSize)
+    Cached.frame { c =>
+      incrementalAssigned(
+        c(KMeans.assignTo(batch, idCol, vecCol, mus, quantShift, fpShift)),
+        history, idCol, tauSq, maxClusterSize)
+    }
 
   /** [[incremental]]'s core over an ALREADY-assigned batch — `ab` is the
-    * (idCol, cluster, dist, q) shape of [[KMeans.assignTo]] (persisted by
+    * (idCol, cluster, dist, q) shape of [[KMeans.assignTo]] (cached by
     * the caller; it is scanned three times). The streaming sink assigns
     * once per micro-batch and reuses the frame here.
     *

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Cached
 import graft.functions.{SimilarityFunctions => S, TextFunctions => T}
 
 /** Corpus-preparation operators for training pipelines: deterministic
@@ -602,15 +603,15 @@ object TrainingPipeline {
     * count because the order key is a total order.
     */
   def packSequences(df: DataFrame, idCol: String, lenCol: String,
-                    seed: String, capacity: Int): DataFrame = {
+                    seed: String, capacity: Int): DataFrame = Cached.frame { c =>
     require(capacity > 0, s"capacity must be positive, got $capacity")
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val ordered = df
+    // cached: the two passes below must see the same sorted partitions
+    val rdd = c(df
       .select(col(idCol), col(lenCol).cast("long").as("n_tokens"))
-      .orderBy(md5(concat(lit(seed), col(idCol).cast("string"))), col(idCol))
-    val rdd = ordered.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .orderBy(md5(concat(lit(seed), col(idCol).cast("string"))), col(idCol)))
+      .rdd
     val totals = rdd.mapPartitionsWithIndex { (i, it) =>
       var s = 0L
       it.foreach { r =>
@@ -638,16 +639,10 @@ object TrainingPipeline {
     val cap = lit(capacity.toLong)
     val packId = floor(col("global_off") / cap).cast("long")
     val lastPack = floor((col("global_off") + greatest(col("n_tokens"), lit(1L)) - 1) / cap).cast("long")
-    val result = df.sparkSession.createDataFrame(withOff, schema)
+    df.sparkSession.createDataFrame(withOff, schema)
       .select(col(idCol), col("n_tokens"),
         packId.as("pack_id"),
         (col("global_off") % cap).as("pack_off"),
         (lastPack - packId + 1L).as("packs_spanned"))
-      // materialize before releasing the sorted RDD (one row per doc —
-      // tiny next to the corpus); a long-lived driver must not accumulate
-      // executor storage across repeated packing runs
-      .localCheckpoint()
-    rdd.unpersist()
-    result
   }
 }

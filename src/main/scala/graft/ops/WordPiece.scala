@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Cached
 import graft.functions.{TextFunctions => T}
 import graft.expr.{KernelCall, WordPieceModel, WordSymbols}
 
@@ -49,18 +50,19 @@ object WordPiece extends Tokenizer[WordPieceModel] {
     // ONE corpus-sized pass (the word-count shuffle); both the capped
     // table and the coverage symbols derive from the DISTINCT-WORD
     // aggregate, so the corpus text is never re-scanned
-    val wordCounts = df
-      .select(explode(T.tokens(T.normalized(Q(textCol)))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = wordCounts
-      .orderBy(col("c").desc, col("w").asc)
-      .limit(maxWords)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val baseSyms = wordCounts
-      .select(explode(KernelCall.column(col("w"), WordSymbols)).as("s"))
-      .distinct().collect().map(_.getString(0)).toSeq
-    wordCounts.unpersist()
+    val (counts, baseSyms) = Cached { c =>
+      val wordCounts = c(df
+        .select(explode(T.tokens(T.normalized(Q(textCol)))).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("c")))
+      val counts = wordCounts
+        .orderBy(col("c").desc, col("w").asc)
+        .limit(maxWords)
+        .collect().map(r => (r.getString(0), r.getLong(1)))
+      val baseSyms = wordCounts
+        .select(explode(KernelCall.column(col("w"), WordSymbols)).as("s"))
+        .distinct().collect().map(_.getString(0)).toSeq
+      (counts, baseSyms)
+    }
     trainFromCounts(counts, numMerges, baseSyms, byteFallback)
   }
 

@@ -365,10 +365,8 @@ object GraphPack {
     */
   def walkPairsQ(s: SparkSession, dir: String): DataFrame = {
     val (store, _) = Fixtures(s, dir, "job_walk_corpus") { st =>
-      val w = walksQ(s, dir) // caller-owned cache (walks() persists)
-      st.write(w, "walk_corpus", slices = 4,
+      st.write(walksQ(s, dir), "walk_corpus", slices = 4,
         formatVersion = Some(ArtifactFormats.WalkIndex))
-      w.unpersist() // the snapshot IS the artifact; drop the build cache
       Map("walks" -> "walk_corpus")
     }
     graft.ops.RandomWalks.skipGramPairs(

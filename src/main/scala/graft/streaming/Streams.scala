@@ -3,8 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.storage.StorageLevel
-import graft.core.{ArtifactFormats, SnapshotStore}
+import graft.core.{ArtifactFormats, Cached, SnapshotStore}
 import graft.jobs.Urd
 
 /** Structured Streaming surface.
@@ -28,8 +27,9 @@ import graft.jobs.Urd
   * prefix's COMMITTED tip and advances the tips only after every write of
   * the batch has landed, so a crash between two writes (or between the
   * writes and the checkpoint commit) replays the whole batch against the
-  * same tips and re-lands the same snapshots. Frames a transform persists
-  * are released once the writes end, whether they succeeded or threw.
+  * same tips and re-lands the same snapshots. Frames a transform caches
+  * in the batch's [[graft.core.Cached]] scope are released once the
+  * writes end, whether they succeeded or threw.
   *
   * Scale notes: file-source streaming tracks seen files in the checkpoint
   * (maxFilesPerTrigger bounds batch size); watermarks bound state; the
@@ -256,8 +256,8 @@ object Streams {
                        n: Int = 3, k: Int = 16, bands: Int = 8,
                        threshold: Double = 0.8,
                        compactEvery: Option[Int] = None): StreamingQuery =
-    chainedBatch(docs, store, checkpoint, compactEvery) { (batch, prev, persist) =>
-      val batchIdx = persist(graft.ops.Dedup.minhashIndex(batch, idCol, textCol, n, k))
+    chainedBatch(docs, store, checkpoint, compactEvery) { (batch, prev, c) =>
+      val batchIdx = c(graft.ops.Dedup.minhashIndex(batch, idCol, textCol, n, k))
       val history = prev(indexPrefix) match {
         case Some(tip) =>
           store.requireArtifactFormat(tip, ArtifactFormats.MinhashIndex)
@@ -309,14 +309,14 @@ object Streams {
                     store: SnapshotStore, indexPrefix: String,
                     outPrefix: String, checkpoint: String,
                     compactEvery: Option[Int] = None): StreamingQuery =
-    chainedBatch(docs, store, checkpoint, compactEvery) { (batch, prev, persist) =>
+    chainedBatch(docs, store, checkpoint, compactEvery) { (batch, prev, c) =>
       val history = prev(indexPrefix) match {
         case Some(tip) =>
           store.requireArtifactFormat(tip, ArtifactFormats.LineIndex)
           store.iterateChain(tip).select(col("h"))
         case None => graft.ops.Dedup.lineIndex(batch.limit(0), textCol)
       }
-      val cleaned = persist(graft.ops.Dedup
+      val cleaned = c(graft.ops.Dedup
         .incrementalLineDedup(batch, history, idCol, textCol))
       // the kept lines are exactly the batch's fresh owners: they are
       // the full delta the NEXT ingest must probe against
@@ -351,8 +351,8 @@ object Streams {
                         checkpoint: String, tauSq: Long,
                         quantShift: Int = 6, fpShift: Int = 10,
                         compactEvery: Option[Int] = None): StreamingQuery =
-    chainedBatch(embs, store, checkpoint, compactEvery) { (batch, prev, persist) =>
-      val ab = persist(graft.ops.KMeans
+    chainedBatch(embs, store, checkpoint, compactEvery) { (batch, prev, c) =>
+      val ab = c(graft.ops.KMeans
         .assignTo(batch, idCol, vecCol, mus, quantShift, fpShift))
       val history = prev(indexPrefix) match {
         case Some(tip) =>
@@ -576,9 +576,9 @@ object Streams {
 
   /** The foreachBatch skeleton every chain sink runs through. `body` gets
     * the non-empty batch, `prev(prefix)` — the prefix's committed tip,
-    * strictly before this batch (see `ChainTip.prevFor`) — and
-    * `persist(df)`, which caches `df` until this batch's writes end, on
-    * success or failure. It returns the batch's outputs, which are written
+    * strictly before this batch (see `ChainTip.prevFor`) — and the
+    * batch's [[Cached]] scope, whose caches last until this batch's
+    * writes end, on success or failure. It returns the batch's outputs, which are written
     * in that order, each against its prefix's committed tip; only after
     * every write has landed do the tips advance. A crash between writes
     * therefore replays the whole batch against the same tips, and the
@@ -601,7 +601,7 @@ object Streams {
                            checkpoint: String,
                            compactEvery: Option[Int] = None,
                            urd: Option[(Urd, String)] = None)(
-      body: (DataFrame, String => Option[String], DataFrame => DataFrame) => Seq[ChainOut]
+      body: (DataFrame, String => Option[String], Cached) => Seq[ChainOut]
   ): StreamingQuery = {
     compactEvery.foreach(e => require(e >= 1, s"compactEvery must be >= 1, got $e"))
     val tips = scala.collection.mutable.Map.empty[String, ChainTip]
@@ -613,19 +613,16 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-          val outs =
-            try {
-              val outs = body(batch, tip(_).prevFor(batchId),
-                df => { held += df; df.persist(StorageLevel.MEMORY_AND_DISK) })
-              outs.foreach { o =>
-                store.write(o.frame, s"${o.prefix}.$batchId",
-                  previous = tip(o.prefix).prevFor(batchId),
-                  formatVersion = o.formatVersion, hashlabel = o.hashlabel,
-                  slices = o.slices)
-              }
-              outs
-            } finally held.foreach(_.unpersist())
+          val outs = Cached { c =>
+            val outs = body(batch, tip(_).prevFor(batchId), c)
+            outs.foreach { o =>
+              store.write(o.frame, s"${o.prefix}.$batchId",
+                previous = tip(o.prefix).prevFor(batchId),
+                formatVersion = o.formatVersion, hashlabel = o.hashlabel,
+                slices = o.slices)
+            }
+            outs
+          }
           outs.foreach(o => tip(o.prefix).advance(s"${o.prefix}.$batchId"))
           if (compactEvery.exists(e => batchId > 0 && batchId % e == 0))
             outs.filter(_.compact).foreach { o =>

@@ -67,12 +67,18 @@ object PlanDump {
   /** Replace what differs from run to run in a plan's text: expression ids
     * (`doc_id#42L`; a cold fixture cache builds fixtures first and shifts
     * every id), `plan_id=` counters, bucket-table names (a hash of the
-    * data directory, see `SnapshotStore.bucketTable`) and the checkout
-    * directory that fixture paths start with.
+    * data directory, see `SnapshotStore.bucketTable`), the checkout
+    * directory that fixture paths start with, object identity hashes
+    * (`[J@1dd36967`, `graft.expr.BpeModel@71efa96c`), RDD ids
+    * (`MapPartitionsRDD[1059]`, in checkpoint scans) and call-site source
+    * lines (`Dedup.scala:448`).
     */
-  private def mask(plan: String): String =
+  private[graft] def mask(plan: String): String =
     plan.replace(sys.props("user.dir"), "<checkout>")
       .replaceAll("#\\d+L?\\b", "#N")
       .replaceAll("plan_id=\\d+", "plan_id=N")
       .replaceAll("graft_b_[0-9a-f]{16}", "graft_b_H")
+      .replaceAll("(?<=[\\w;$])@[0-9a-f]{1,8}\\b", "@H")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
+      .replaceAll("\\.scala:\\d+", ".scala:N")
 }

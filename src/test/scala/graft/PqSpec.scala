@@ -76,6 +76,17 @@ class PqSpec extends AnyFunSuite {
     assert(got == want)
   }
 
+  test("searchIvfPq computes each corpus row's coarse assignment once") {
+    val got = Pq.searchIvfPq(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
+      dim, m, ksub, iters = 1, nlist = 4, nprobe = 2, k = 3)
+    // the projection computes the assignment; no Filter may compute it again
+    val filters = got.queryExecution.optimizedPlan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.sql
+    }
+    assert(filters.nonEmpty && !filters.exists(_.contains("graft_kmeans_assign")),
+      filters.mkString("\n"))
+  }
+
   test("ADC of a row's own code == its per-subspace assignment distance sum") {
     // the law tying encode, adcTable, and the KMeansAssign metric together
     for ((id, qv) <- vecs.take(20)) {

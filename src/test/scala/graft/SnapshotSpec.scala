@@ -464,11 +464,11 @@ class SnapshotSpec extends AnyFunSuite {
     * strings with NaN ignored unless every value is NaN. An oracle for the
     * metrics the write now observes on its own plan.
     */
-  private def aggMeta(df: DataFrame, zoneMaps: Boolean)
+  private def aggMeta(df: DataFrame)
       : (Long, Map[String, (Option[String], Option[String])]) = {
     val comparable = df.schema.fields.filterNot(f =>
       Set("binary", "array", "map", "struct").contains(f.dataType.typeName)).toSeq
-    val minMax = if (!zoneMaps) Nil else comparable.flatMap { f =>
+    val minMax = comparable.flatMap { f =>
       val qc = Cols.q(f.name)
       f.dataType.typeName match {
         case "double" | "float" =>
@@ -480,10 +480,9 @@ class SnapshotSpec extends AnyFunSuite {
       }
     }
     val row = df.agg(count(lit(1)), minMax: _*).collect()(0)
-    val mm = if (!zoneMaps) Map.empty[String, (Option[String], Option[String])]
-      else comparable.zipWithIndex.map { case (f, i) =>
-        f.name -> (Option(row.getString(1 + 2 * i)), Option(row.getString(2 + 2 * i)))
-      }.toMap
+    val mm = comparable.zipWithIndex.map { case (f, i) =>
+      f.name -> (Option(row.getString(1 + 2 * i)), Option(row.getString(2 + 2 * i)))
+    }.toMap
     (row.getLong(0), mm)
   }
 
@@ -504,29 +503,26 @@ class SnapshotSpec extends AnyFunSuite {
       (Double.NaN, Double.NaN), (Double.NaN, Double.NaN), (null, Double.NaN))
     val s = spark
     import s.implicits._
-    // (name, frame, zoneMaps, the write)
-    val cases: Seq[(String, DataFrame, Boolean, (DataFrame, String) => Any)] = Seq(
-      ("unhashed", mixed, true, (df, n) => store.write(df, n)),
-      ("hashed", mixed, true, (df, n) => store.write(df, n, hashlabel = Some("k"), slices = 4)),
-      ("prerouted", mixed.repartition(4, col("k")), true,
+    // (name, frame, the write)
+    val cases: Seq[(String, DataFrame, (DataFrame, String) => Any)] = Seq(
+      ("unhashed", mixed, (df, n) => store.write(df, n)),
+      ("hashed", mixed, (df, n) => store.write(df, n, hashlabel = Some("k"), slices = 4)),
+      ("prerouted", mixed.repartition(4, col("k")),
         (df, n) => store.write(df, n, hashlabel = Some("k"), slices = 4, preRouted = true)),
-      ("nozonemaps", mixed, false, (df, n) => store.write(df, n, zoneMaps = false)),
-      ("nozonemaps_hashed", mixed, false,
-        (df, n) => store.write(df, n, hashlabel = Some("k"), zoneMaps = false)),
-      ("oneslice", mixed, true, (df, n) => store.write(df, n, slices = 1)),
-      ("alltypes", AllTypesFixtureSpec.fixture(), true, (df, n) => store.write(df, n, slices = 2)),
-      ("allnan", nans.toDF("f64", "g64"), true, (df, n) => store.write(df, n, slices = 1)),
-      ("somenan", Seq(Double.NaN, 2.0, Double.NaN).toDF("f64"), true,
+      ("oneslice", mixed, (df, n) => store.write(df, n, slices = 1)),
+      ("alltypes", AllTypesFixtureSpec.fixture(), (df, n) => store.write(df, n, slices = 2)),
+      ("allnan", nans.toDF("f64", "g64"), (df, n) => store.write(df, n, slices = 1)),
+      ("somenan", Seq(Double.NaN, 2.0, Double.NaN).toDF("f64"),
         (df, n) => store.write(df, n, slices = 1)),
-      ("infinity", Seq(Double.NaN, Double.PositiveInfinity, 0.0, Double.NaN).toDF("f64"), true,
+      ("infinity", Seq(Double.NaN, Double.PositiveInfinity, 0.0, Double.NaN).toDF("f64"),
         (df, n) => store.write(df, n, slices = 1)),
-      ("empty", empty, true, (df, n) => store.write(df, n)),
-      ("empty_hashed", empty, true, (df, n) => store.write(df, n, hashlabel = Some("k"))))
-    cases.foreach { case (name, df, zoneMaps, write) =>
+      ("empty", empty, (df, n) => store.write(df, n)),
+      ("empty_hashed", empty, (df, n) => store.write(df, n, hashlabel = Some("k"))))
+    cases.foreach { case (name, df, write) =>
       write(df, name)
       // meta.json as published, read by a fresh store
       val meta = new SnapshotStore(spark, root).get(name).meta
-      val (lines, mm) = aggMeta(df, zoneMaps)
+      val (lines, mm) = aggMeta(df)
       assert(meta.lines == lines, s"$name: lines")
       meta.columns.foreach { c =>
         assert((c.min, c.max) == mm.getOrElse(c.name, (None, None)), s"$name: column ${c.name}")
