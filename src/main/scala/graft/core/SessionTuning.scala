@@ -12,18 +12,17 @@ object SessionTuning {
     * (-XX:DontCompileHugeMethods, on by default) — it runs INTERPRETED
     * forever. Spark's whole-stage codegen only abandons a generated
     * method above spark.sql.codegen.hugeMethodLimit, whose default
-    * (65535) is far past the JIT cliff: a wide projection of parse/regex
-    * expressions (e.g. a 9-column dataset_type pass) lands in the
-    * 8k-64k gap and runs 2-3x slower than the non-codegen fallback.
-    * Measured on op_type_fuzz at sf0.1 (graft.tools.ProfileFuzz):
-    * 40.4s with the default, 9.3s with the limit at 8000 (Spark falls
-    * back to per-operator eval, which JITs fine). Aligning the limit
-    * with the JIT's is the documented production remedy (SPARK-21871
-    * discussion). Note: keeping Filter and Project as separate codegen
-    * nodes is part of the win — fusing the parse expressions into one
-    * wide Project (to let CSE dedupe the double evaluation) measured
-    * 13.6s vs 9.3s under this limit, because the fused method is the
-    * thing that breaches the limit.
+    * (65535) is far past the JIT cliff: a wide projection of inlined
+    * expressions lands in the 8k-64k gap and runs 2-3x slower than the
+    * non-codegen fallback. It was found on the typing pass when each
+    * spec was a regex/cast/CaseWhen composition: op_type_fuzz at sf0.1
+    * (graft.tools.ProfileFuzz) took 40.4s with the default and 9.3s with
+    * the limit at 8000 (Spark falls back to per-operator eval, which
+    * JITs fine). The hot specs are now one kernel call each
+    * ([[graft.expr.ParseFunctions]]), which keeps that method small, but
+    * other wide projections (regex text filters, media decoders) still
+    * rely on the limit. Aligning it with the JIT's is the documented
+    * production remedy (SPARK-21871 discussion).
     */
   val HugeMethodLimit = 8000
 
@@ -42,6 +41,9 @@ object SessionTuning {
 
   def tune(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.codegen.hugeMethodLimit", HugeMethodLimit.toString)
+      // local files get their permission bits in process, not by a forked
+      // chmod per created file and directory ([[PosixLocalFileSystem]])
+      .config("spark.hadoop.fs.file.impl", classOf[PosixLocalFileSystem].getName)
       // A Union of co-bucketed scans must not report its children's hash
       // partitioning: with the Spark 4.1 default (true) a group-by on the
       // hashlabel over an unfiltered multi-link iterateChain plans no

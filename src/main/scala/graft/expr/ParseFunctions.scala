@@ -1,17 +1,27 @@
 package graft.expr
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Column-level parse/convert functions implementing the reference's
-  * `dataset_type` conversion semantics (reference
-  * standard_methods/dataset_type.py:730-810) as codegen-friendly
-  * compositions of Spark built-ins. Each returns NULL on unparseable input
-  * (the caller layers defaults / filter_bad on top).
+/** The `dataset_type` conversions (reference
+  * standard_methods/dataset_type.py:730-828), one `Column` per spec, each
+  * NULL on unparseable input (the caller layers defaults / filter_bad on
+  * top).
   *
-  * Kept as `Column` combinators (not UDFs) so every conversion stays inside
-  * whole-stage codegen — at 100 TB the typing pass is a single codegen'd
-  * projection over the scan, no JVM⇄closure boundary per value.
+  * The hot specs -- int64/int32 in bases 10, 16, 8 and 0, the
+  * garbage-tolerant int64i/int32i, float64/float32/number (strtod
+  * spellings, numeric_comma), strbool, and date/datetime in the default
+  * formats, `%s` and `java` -- are byte-level [[Kernel]]s run by
+  * [[KernelCall]]: each reads the value's UTF-8 bytes once, with no regex,
+  * no `String` (except a float of more than 18 significant digits, see
+  * [[ParseDouble]]) and no java.time formatter, the same one-pass shape as
+  * the reference's C converters. The rarer specs stay compositions of
+  * Spark built-ins. Either way every conversion stays inside whole-stage
+  * codegen.
   */
 object ParseFunctions {
 
@@ -20,21 +30,14 @@ object ParseFunctions {
     * whitespace-only input is true in the reference
     * (a_test_dataset_type_corner_cases.py:149).
     */
-  def strBool(c: Column): Column =
-    when(c.isNull, lit(null).cast("boolean"))
-      .otherwise(!lower(c).isin("false", "0", "f", "no", "off", "nil", "null", ""))
+  def strBool(c: Column): Column = KernelCall.column(c, StrBool)
 
   /** Float parse with the reference's C-strtod spellings: inf/infinity/nan
-    * in any case with optional sign (dataset_type.py float conversions use
-    * strtod; Spark's cast only accepts "Infinity"/"NaN").
+    * in any case with optional sign; with `comma`, ',' is the decimal
+    * separator ([[ParseDouble]]).
     */
-  def floatParse(c: Column): Column = {
-    val t = lower(trim(c))
-    when(t.isin("inf", "+inf", "infinity", "+infinity"), lit(Double.PositiveInfinity))
-      .when(t.isin("-inf", "-infinity"), lit(Double.NegativeInfinity))
-      .when(t.isin("nan", "+nan", "-nan"), lit(Double.NaN))
-      .otherwise(c.try_cast("double"))
-  }
+  def floatParse(c: Column, comma: Boolean = false): Column =
+    KernelCall.column(c, ParseDouble(comma))
 
   /** floatbool (dataset_type.py:521-535): strtod then truthiness; empty or
     * whitespace-only input parses as 0.0 → false (strtod's no-conversion
@@ -51,36 +54,18 @@ object ParseFunctions {
     */
   def number(c: Column): Column = floatParse(c)
 
-  /** int64/int32 with base (dataset_type.py:746-765). Base 10 uses try_cast;
-    * base 16/8 go through conv() after strict validation; base 0 auto-detects
-    * a 0x/0o prefix like Python int(s, 0).
+  /** A long parse narrowed to int for 32 bits: out of range is NULL (a bad
+    * value, as the reference rejects it, a_test_dataset_type_corner_cases.py
+    * "nearly good numbers"), not an ANSI overflow error.
     */
-  def intBase(c: Column, bits: Int, base: Int): Column = {
-    // try_cast for the narrowing too: out-of-range → NULL (bad value), not
-    // an ANSI overflow error (reference rejects out-of-range the same way,
-    // a_test_dataset_type_corner_cases.py "nearly good numbers")
-    val target = if (bits == 64) "long" else "int"
-    def viaConv(src: Column, b: Int): Column = {
-      val valid = if (b == 16) "^[-+]?[0-9a-fA-F]+$" else "^[-+]?[0-7]+$"
-      when(trim(src).rlike(valid),
-        when(trim(src).startsWith("-"),
-          -conv(regexp_replace(trim(src), "^[-+]", ""), b, 10).try_cast("long"))
-        .otherwise(conv(regexp_replace(trim(src), "^[+]", ""), b, 10).try_cast("long"))
-      ).try_cast(target)
-    }
-    base match {
-      case 10 => trim(c).try_cast("long").try_cast(target)
-      case 16 => viaConv(regexp_replace(trim(c), "(?i)^([-+]?)0x", "$1"), 16)
-      case 8  => viaConv(regexp_replace(trim(c), "(?i)^([-+]?)0o", "$1"), 8)
-      case 0 =>
-        when(trim(c).rlike("(?i)^[-+]?0x"),
-             viaConv(regexp_replace(trim(c), "(?i)^([-+]?)0x", "$1"), 16))
-          .when(trim(c).rlike("(?i)^[-+]?0o"),
-             viaConv(regexp_replace(trim(c), "(?i)^([-+]?)0o", "$1"), 8))
-          .otherwise(trim(c).try_cast("long").try_cast(target))
-      case b => throw new IllegalArgumentException(s"unsupported int base $b")
-    }
-  }
+  private def narrow(v: Column, bits: Int): Column =
+    if (bits == 64) v else v.try_cast("int")
+
+  /** int64/int32 with base 10, 16, 8 or 0 (dataset_type.py:746-765; base 0
+    * auto-detects a 0x/0o prefix like Python int(s, 0)), see [[ParseLong]].
+    */
+  def intBase(c: Column, bits: Int, base: Int): Column =
+    narrow(KernelCall.column(c, ParseLong(base)), bits)
 
   /** floatint{e,s} (dataset_type.py:752-763): parse float then to int;
     * `exact` nulls out non-integral values, `saturate` clamps to range.
@@ -118,21 +103,9 @@ object ParseFunctions {
     when(m === "", lit(null).cast("double")).otherwise(m.try_cast("double"))
   }
 
-  def intI(c: Column, bits: Int): Column = {
-    val target = if (bits == 64) "long" else "int"
-    val m = regexp_extract(c, "[-+]?\\d+", 0)
-    when(m === "", lit(null).cast(target))
-      .otherwise(m.try_cast("long").try_cast(target))
-  }
-
-  /** numeric_comma (a_dataset_type.py:74, locale-based strtod): ',' is THE
-    * decimal separator — a '.' anywhere makes the value bad (the C locale
-    * parse stops at '.' leaving trailing garbage), exactly mirroring how
-    * '3.14' fails under a comma locale.
-    */
-  def floatParseComma(c: Column): Column =
-    when(c.contains("."), lit(null).cast("double"))
-      .otherwise(floatParse(translate(c, ",", ".")))
+  /** int64i/int32i: the first signed integer in the value ([[FirstLong]]). */
+  def intI(c: Column, bits: Int): Column =
+    narrow(KernelCall.column(c, FirstLong), bits)
 
   /** bits32 (dataset_type.py: unsigned 32-bit): reject negatives and
     * values ≥ 2^32; stored as LongType (uint32 always fits).
@@ -301,16 +274,25 @@ object ParseFunctions {
     when(m === "", lit(null).cast("string")).otherwise(m)
   }
 
+  /** The active session's time zone, which the wall-clock kernels read
+    * their values in, as `try_to_timestamp` does.
+    */
+  private def sessionZone: String =
+    SparkSession.active.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key)
+
   /** date:%fmt — with `%s` = unix epoch seconds (dataset_type.py:787-803). */
   def parseDate(c: Column, fmt: String): Column = fmt match {
-    case "%s" => to_date(timestamp_seconds(c.try_cast("long")))
-    case f    => try_to_timestamp(c, lit(strftimeToSpark(f))).cast("date")
+    case "%Y-%m-%d" =>
+      KernelCall.column(c, ParseTimestamp(time = false, sessionZone)).cast("date")
+    case "%s"       => to_date(KernelCall.column(c, EpochTimestamp(1000000L)))
+    case f          => try_to_timestamp(c, lit(strftimeToSpark(f))).cast("date")
   }
 
   /** datetime:%fmt; `%s` epoch seconds; `java` = epoch millis. */
   def parseDatetime(c: Column, fmt: String): Column = fmt match {
-    case "%s"   => timestamp_seconds(c.try_cast("long"))
-    case "java" => timestamp_millis(c.try_cast("long"))
+    case "%Y-%m-%d %H:%M:%S" => KernelCall.column(c, ParseTimestamp(time = true, sessionZone))
+    case "%s"   => KernelCall.column(c, EpochTimestamp(1000000L))
+    case "java" => KernelCall.column(c, EpochTimestamp(1000L))
     case f      => try_to_timestamp(c, lit(strftimeToSpark(f)))
   }
 
@@ -326,16 +308,418 @@ object ParseFunctions {
     when(c.rlike(p) && h < 24 && m < 60 && s < 60,
       ((h * 3600 + m * 60 + s) * 1000000L) + f)
   }
+}
 
-  /** micros-since-midnight → display string (export round-trip helper). */
-  def formatTimeMicros(c: Column): Column = {
-    val secs = (c / 1000000L).cast("long")
-    val frac = (c % 1000000L).cast("long")
-    concat(
-      lpad((secs / 3600).cast("string"), 2, "0"), lit(":"),
-      lpad(((secs % 3600) / 60).cast("string"), 2, "0"), lit(":"),
-      lpad((secs % 60).cast("string"), 2, "0"),
-      when(frac > 0, concat(lit("."), rpad(lpad(frac.cast("string"), 6, "0"), 6, "0")))
-        .otherwise(lit("")))
+/** Byte scanning shared by the parse kernels. Bytes of a non-ASCII
+  * character are all ≥ 0x80, so they never match an ASCII test here.
+  */
+private[expr] object ParseBytes {
+  /** A byte Spark's string-to-integral cast trims: whitespace or an ISO
+    * control character (0x00-0x20, 0x7F).
+    */
+  def wsOrControl(b: Byte): Boolean = (b & 0xff) <= 0x20 || b == 0x7f
+
+  def digit(b: Byte): Int = if (b >= '0' && b <= '9') b - '0' else -1
+
+  /** A digit of `radix` (8, 10 or 16), else -1. */
+  def digit(b: Byte, radix: Int): Int = {
+    val d =
+      if (b >= '0' && b <= '9') b - '0'
+      else if (b >= 'a' && b <= 'f') b - 'a' + 10
+      else if (b >= 'A' && b <= 'F') b - 'A' + 10
+      else -1
+    if (d < radix) d else -1
+  }
+
+  def lowerAscii(b: Byte): Int = if (b >= 'A' && b <= 'Z') b + 32 else b
+
+  /** Whether bytes [from, until) equal ASCII `word`, ignoring ASCII case. */
+  def equalsIgnoreCase(s: UTF8String, from: Int, until: Int, word: String): Boolean =
+    until - from == word.length && {
+      var i = 0
+      while (i < word.length && lowerAscii(s.getByte(from + i)) == word.charAt(i)) i += 1
+      i == word.length
+    }
+
+  /** Bytes [from, until) as a long, the way Spark casts a trimmed string:
+    * an optional sign, then ASCII digits only. Empty, another byte or a
+    * value outside the long range give null.
+    */
+  def decimalLong(s: UTF8String, from: Int, until: Int): java.lang.Long = {
+    var i = from
+    val neg = i < until && s.getByte(i) == '-'
+    if (neg || (i < until && s.getByte(i) == '+')) i += 1
+    if (i >= until) return null
+    // accumulated negative, so Long.MinValue fits
+    var r = 0L
+    while (i < until) {
+      val d = digit(s.getByte(i))
+      if (d < 0 || r < Long.MinValue / 10) return null
+      r = r * 10 - d
+      if (r > 0) return null
+      i += 1
+    }
+    if (neg) r else if (r == Long.MinValue) null else -r
+  }
+
+  /** Spark's string-to-long cast: [[decimalLong]] after trimming
+    * [[wsOrControl]] bytes from both ends.
+    */
+  def castLong(s: UTF8String): java.lang.Long = {
+    var a = 0
+    var z = s.numBytes
+    while (a < z && wsOrControl(s.getByte(a))) a += 1
+    while (z > a && wsOrControl(s.getByte(z - 1))) z -= 1
+    decimalLong(s, a, z)
+  }
+}
+
+import ParseBytes._
+
+/** int64 in base 10, 16, 8 or 0 (dataset_type.py:746-765), null when
+  * unparseable or outside the long range.
+  *
+  *  - 10: Spark's string-to-long cast: whitespace and control bytes trimmed,
+  *    an optional sign, ASCII digits.
+  *  - 16 and 8: spaces trimmed; an optional `0x`/`0o` prefix in any case,
+  *    kept after a sign before it (`-0x1f`) or followed by spaces and its
+  *    own sign (`0x -1f`); then an optional sign and at least one digit of
+  *    the base; then at most one line terminator (`\n`, `\r`, `\r\n`,
+  *    U+0085, U+2028, U+2029), as a regex `$` allows.
+  *  - 0: base 16 after a `0x` prefix (an optional sign before it), base 8
+  *    after `0o`, else base 10, like Python's `int(s, 0)`.
+  */
+case class ParseLong(base: Int) extends Kernel1[UTF8String, java.lang.Long] {
+  require(Seq(0, 8, 10, 16).contains(base), s"unsupported int base $base")
+  def prettyName: String = "graft_parse_long"
+  def inputType: DataType = StringType
+  def dataType: DataType = LongType
+  override def nullable: Boolean = true
+
+  def apply(s: UTF8String): java.lang.Long = base match {
+    case 10 => castLong(s)
+    case 0 =>
+      var i = 0
+      while (i < s.numBytes && s.getByte(i) == ' ') i += 1
+      if (i < s.numBytes && (s.getByte(i) == '-' || s.getByte(i) == '+')) i += 1
+      if (prefixed(s, i, 'x')) radix(s, 16)
+      else if (prefixed(s, i, 'o')) radix(s, 8)
+      else castLong(s)
+    case b => radix(s, b)
+  }
+
+  private def prefixed(s: UTF8String, i: Int, mark: Char): Boolean =
+    i + 1 < s.numBytes && s.getByte(i) == '0' && lowerAscii(s.getByte(i + 1)) == mark
+
+  private def radix(s: UTF8String, r: Int): java.lang.Long = {
+    var a = 0
+    var z = s.numBytes
+    while (a < z && s.getByte(a) == ' ') a += 1
+    while (z > a && s.getByte(z - 1) == ' ') z -= 1
+    var i = a
+    var signed = false
+    var neg = false
+    if (i < z && (s.getByte(i) == '-' || s.getByte(i) == '+')) {
+      signed = true; neg = s.getByte(i) == '-'; i += 1
+    }
+    if (prefixed(s, i, if (r == 16) 'x' else 'o')) {
+      i += 2
+      if (!signed) {
+        while (i < z && s.getByte(i) == ' ') i += 1
+        if (i < z && (s.getByte(i) == '-' || s.getByte(i) == '+')) {
+          neg = s.getByte(i) == '-'; i += 1
+        }
+      }
+    }
+    val first = i
+    var v = 0L
+    var d = if (i < z) digit(s.getByte(i), r) else -1
+    while (d >= 0) {
+      if (v > (Long.MaxValue - d) / r) return null
+      v = v * r + d
+      i += 1
+      d = if (i < z) digit(s.getByte(i), r) else -1
+    }
+    if (i == first || !lineEnd(s, i, z)) null
+    else if (neg) -v else v
+  }
+
+  /** Whether [i, z) is empty or one line terminator. */
+  private def lineEnd(s: UTF8String, i: Int, z: Int): Boolean = z - i match {
+    case 0 => true
+    case 1 => s.getByte(i) == '\n' || s.getByte(i) == '\r'
+    case 2 => s.getByte(i) == '\r' && s.getByte(i + 1) == '\n' ||
+      (s.getByte(i) & 0xff) == 0xc2 && (s.getByte(i + 1) & 0xff) == 0x85
+    case 3 => (s.getByte(i) & 0xff) == 0xe2 && (s.getByte(i + 1) & 0xff) == 0x80 &&
+      ((s.getByte(i + 2) & 0xff) == 0xa8 || (s.getByte(i + 2) & 0xff) == 0xa9)
+    case _ => false
+  }
+}
+
+/** int64i (dataset_type.py:812-828): the first signed integer anywhere in
+  * the value (a sign counts when it is right before the first ASCII
+  * digit), garbage around it ignored; null when there is no digit or the
+  * integer is outside the long range.
+  */
+case object FirstLong extends Kernel1[UTF8String, java.lang.Long] {
+  def prettyName: String = "graft_first_long"
+  def inputType: DataType = StringType
+  def dataType: DataType = LongType
+  override def nullable: Boolean = true
+
+  def apply(s: UTF8String): java.lang.Long = {
+    val n = s.numBytes
+    var p = 0
+    while (p < n && digit(s.getByte(p)) < 0) p += 1
+    if (p == n) return null
+    var z = p
+    while (z < n && digit(s.getByte(z)) >= 0) z += 1
+    val from = if (p > 0 && (s.getByte(p - 1) == '-' || s.getByte(p - 1) == '+')) p - 1 else p
+    decimalLong(s, from, z)
+  }
+}
+
+/** float64 with the strtod spellings (dataset_type.py float conversions):
+  * whitespace and control bytes trimmed, then `inf`/`infinity`/`nan` in
+  * any case with an optional sign, or Java's decimal grammar (an optional
+  * sign, digits with an optional '.', an optional exponent, an optional
+  * `f`/`d` suffix); Java's hexadecimal floats are also read. Null when
+  * unparseable. Up to 18 significant digits and a power of ten up to 22
+  * are computed exactly in one rounding; longer values go through
+  * `Double.parseDouble`, which rounds them correctly too.
+  *
+  * With `comma` (numeric_comma, a_dataset_type.py:74, a locale strtod) ','
+  * is THE decimal separator and a '.' anywhere makes the value bad, as
+  * '3.14' fails under a comma locale.
+  *
+  * Two signed NaN spellings keep a quirk of the composition this replaced:
+  * `+nan`/`-nan` parse only when the trimmed bytes were spaces, except in
+  * Java's exact case `+NaN`/`-NaN`.
+  */
+case class ParseDouble(comma: Boolean) extends Kernel1[UTF8String, java.lang.Double] {
+  def prettyName: String = "graft_parse_double"
+  def inputType: DataType = StringType
+  def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+
+  private val dot: Byte = if (comma) ',' else '.'
+
+  def apply(s: UTF8String): java.lang.Double = {
+    var a = 0
+    var z = s.numBytes
+    if (comma) {
+      var i = 0
+      while (i < z) { if (s.getByte(i) == '.') return null; i += 1 }
+    }
+    while (a < z && (s.getByte(a) & 0xff) <= 0x20) a += 1
+    while (z > a && (s.getByte(z - 1) & 0xff) <= 0x20) z -= 1
+    if (z == a) return null
+    val sign = s.getByte(a)
+    val neg = sign == '-'
+    val i = if (neg || sign == '+') a + 1 else a
+    if (i < z && lowerAscii(s.getByte(i)) >= 'a') special(s, a, i, z, neg)
+    else decimal(s, a, i, z, neg)
+  }
+
+  private def special(s: UTF8String, a: Int, i: Int, z: Int, neg: Boolean): java.lang.Double =
+    if (equalsIgnoreCase(s, i, z, "inf") || equalsIgnoreCase(s, i, z, "infinity"))
+      if (neg) Double.NegativeInfinity else Double.PositiveInfinity
+    else if (equalsIgnoreCase(s, i, z, "nan") && (i == a ||
+        (s.getByte(i) == 'N' && s.getByte(i + 1) == 'a' && s.getByte(i + 2) == 'N') ||
+        onlySpacesTrimmed(s, a, z)))
+      Double.NaN
+    else null
+
+  private def onlySpacesTrimmed(s: UTF8String, a: Int, z: Int): Boolean = {
+    var i = 0
+    while (i < a && s.getByte(i) == ' ') i += 1
+    var j = s.numBytes
+    while (j > z && s.getByte(j - 1) == ' ') j -= 1
+    i == a && j == z
+  }
+
+  private def decimal(s: UTF8String, a: Int, start: Int, z: Int, neg: Boolean): java.lang.Double = {
+    if (start + 1 < z && s.getByte(start) == '0' && lowerAscii(s.getByte(start + 1)) == 'x')
+      return slow(s, a, z)
+    var i = start
+    var m = 0L        // significant digits, leading zeros skipped
+    var sig = 0       // how many of them
+    var scale = 0     // digits after the separator
+    var digits = 0
+    var d = if (i < z) digit(s.getByte(i)) else -1
+    while (d >= 0) {
+      if (m > 0 || d > 0) { m = m * 10 + d; sig += 1 }
+      digits += 1; i += 1
+      d = if (i < z) digit(s.getByte(i)) else -1
+    }
+    if (i < z && s.getByte(i) == dot) {
+      i += 1
+      d = if (i < z) digit(s.getByte(i)) else -1
+      while (d >= 0) {
+        if (m > 0 || d > 0) { m = m * 10 + d; sig += 1 }
+        scale += 1; digits += 1; i += 1
+        d = if (i < z) digit(s.getByte(i)) else -1
+      }
+    }
+    if (digits == 0 || sig > 18) return if (digits == 0) null else slow(s, a, z)
+    var exp = 0
+    if (i < z && lowerAscii(s.getByte(i)) == 'e') {
+      i += 1
+      val eneg = i < z && s.getByte(i) == '-'
+      if (i < z && (eneg || s.getByte(i) == '+')) i += 1
+      val first = i
+      d = if (i < z) digit(s.getByte(i)) else -1
+      while (d >= 0) {
+        if (exp < 100000) exp = exp * 10 + d
+        i += 1
+        d = if (i < z) digit(s.getByte(i)) else -1
+      }
+      if (i == first) return null
+      if (eneg) exp = -exp
+    }
+    if (i < z && "fFdD".indexOf(s.getByte(i)) >= 0) i += 1
+    if (i != z) return null
+    val e = exp - scale
+    val v =
+      if (m == 0) 0.0
+      else if (m < (1L << 53) && e >= 0 && e <= 22) m * ParseDouble.Pow10(e)
+      else if (m < (1L << 53) && e < 0 && e >= -22) m / ParseDouble.Pow10(-e)
+      else return slow(s, a, z)
+    if (neg) -v else v
+  }
+
+  /** `Double.parseDouble` of the trimmed bytes, ',' read as '.' under
+    * `comma`.
+    */
+  private def slow(s: UTF8String, a: Int, z: Int): java.lang.Double = {
+    val str = new String(s.getBytes, a, z - a, java.nio.charset.StandardCharsets.ISO_8859_1)
+    try java.lang.Double.parseDouble(if (comma) str.replace(',', '.') else str)
+    catch { case _: NumberFormatException => null }
+  }
+}
+
+object ParseDouble {
+  private val Pow10: Array[Double] = Array.tabulate(23)(i => math.pow(10, i))
+}
+
+/** strbool (dataset_type.py:772-775): false, 0, f, no, off, nil, null and
+  * the empty string, in any ASCII case, are false; anything else is true.
+  * No trimming: whitespace-only input is true.
+  */
+case object StrBool extends Kernel1[UTF8String, Boolean] {
+  def prettyName: String = "graft_strbool"
+  def inputType: DataType = StringType
+  def dataType: DataType = BooleanType
+
+  private val Falsy = Array("false", "0", "f", "no", "off", "nil", "null")
+
+  def apply(s: UTF8String): Boolean = {
+    val n = s.numBytes
+    var i = 0
+    while (i < Falsy.length && !equalsIgnoreCase(s, 0, n, Falsy(i))) i += 1
+    n > 0 && i == Falsy.length
+  }
+}
+
+/** A wall-clock `yyyy-MM-dd` value (`time` false) or `yyyy-MM-dd
+  * HH:mm:ss` (`time` true), read in `zone` as an instant: what
+  * `try_to_timestamp` gives for these patterns, which are the defaults of
+  * date and datetime (dataset_type.py:766-771).
+  *
+  * The year is four digits, or more after a '+', or four or more after a
+  * '-' (not -0000); every other field is exactly two ASCII digits; the
+  * date must exist in the proleptic Gregorian calendar, and hours run to
+  * 23, minutes and seconds to 59. A local time in a zone's gap moves
+  * forward by the gap and one in an overlap takes the earlier offset.
+  * Null when unparseable or outside the timestamp range.
+  */
+case class ParseTimestamp(time: Boolean, zone: String) extends Kernel1[UTF8String, java.lang.Long] {
+  def prettyName: String = "graft_parse_timestamp"
+  def inputType: DataType = StringType
+  def dataType: DataType = TimestampType
+  override def nullable: Boolean = true
+
+  @transient private lazy val zoneId = DateTimeUtils.getZoneId(zone)
+  /** The zone's offset in seconds when it never changes, else None. */
+  @transient private lazy val fixedOffset: Option[Int] = {
+    val rules = zoneId.getRules
+    if (rules.isFixedOffset) Some(rules.getOffset(java.time.Instant.EPOCH).getTotalSeconds)
+    else None
+  }
+
+  def apply(s: UTF8String): java.lang.Long = {
+    val n = s.numBytes
+    if (n == 0) return null
+    val sign = s.getByte(0)
+    var i = if (sign == '-' || sign == '+') 1 else 0
+    val first = i
+    var year = 0L
+    while (i < n && digit(s.getByte(i)) >= 0) {
+      if (year < 1000000L) year = year * 10 + digit(s.getByte(i))
+      i += 1
+    }
+    val width = i - first
+    if (width < 4 || width > 19 || (sign == '+' && width == 4) ||
+        (first == 0 && width > 4) || (sign == '-' && year == 0) || year > 300000L) return null
+    if (sign == '-') year = -year
+    val month = field(s, i, '-')
+    val day = field(s, i + 3, '-')
+    val hour = if (time) field(s, i + 6, ' ') else 0
+    val minute = if (time) field(s, i + 9, ':') else 0
+    val second = if (time) field(s, i + 12, ':') else 0
+    if (i + (if (time) 15 else 6) != n || month < 1 || month > 12 || day < 1 ||
+        day > monthLength(year, month) || hour < 0 || hour > 23 || minute < 0 ||
+        minute > 59 || second < 0 || second > 59) return null
+    val secs = fixedOffset match {
+      case Some(off) =>
+        epochDay(year, month, day) * 86400L + hour * 3600L + minute * 60L + second - off
+      case None =>
+        java.time.ZonedDateTime.of(year.toInt, month, day, hour, minute, second, 0, zoneId)
+          .toEpochSecond
+    }
+    if (secs > Long.MaxValue / 1000000L || secs < Long.MinValue / 1000000L) null
+    else secs * 1000000L
+  }
+
+  /** The two digits after separator `sep` at `i`, or -1. */
+  private def field(s: UTF8String, i: Int, sep: Char): Int =
+    if (i + 2 < s.numBytes && s.getByte(i) == sep) {
+      val (h, l) = (digit(s.getByte(i + 1)), digit(s.getByte(i + 2)))
+      if (h < 0 || l < 0) -1 else h * 10 + l
+    } else -1
+
+  private def monthLength(year: Long, month: Int): Int = month match {
+    case 2 => if ((year & 3) == 0 && (year % 100 != 0 || year % 400 == 0)) 29 else 28
+    case 4 | 6 | 9 | 11 => 30
+    case _ => 31
+  }
+
+  /** Days since 1970-01-01 of a proleptic Gregorian date (H. Hinnant's
+    * days_from_civil).
+    */
+  private def epochDay(year: Long, month: Int, day: Int): Long = {
+    val y = if (month <= 2) year - 1 else year
+    val era = Math.floorDiv(y, 400L)
+    val yoe = y - era * 400
+    val doy = (153 * (if (month > 2) month - 3 else month + 9) + 2) / 5 + day - 1
+    val doe = yoe * 365 + yoe / 4 - yoe / 100 + doy
+    era * 146097 + doe - 719468
+  }
+}
+
+/** Epoch seconds (`unitMicros` 1000000, the `%s` format) or milliseconds
+  * (1000, `java`) as a timestamp: the integer read as Spark casts a string
+  * to long; null when unparseable or outside the timestamp range.
+  */
+case class EpochTimestamp(unitMicros: Long) extends Kernel1[UTF8String, java.lang.Long] {
+  def prettyName: String = "graft_epoch_timestamp"
+  def inputType: DataType = StringType
+  def dataType: DataType = TimestampType
+  override def nullable: Boolean = true
+
+  def apply(s: UTF8String): java.lang.Long = {
+    val v = castLong(s)
+    if (v == null || v > Long.MaxValue / unitMicros || v < Long.MinValue / unitMicros) null
+    else v * unitMicros
   }
 }

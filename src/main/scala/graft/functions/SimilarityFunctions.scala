@@ -11,14 +11,6 @@ import graft.expr.{DotProduct, KernelCall, MinHashSig, PositionedShingleHashes,
   */
 object SimilarityFunctions {
 
-  /** Character n-gram shingles of the normalized text (distinct). */
-  def charShingles(text: Column, n: Int): Column = {
-    val norm = TextFunctions.normalized(text)
-    array_distinct(
-      transform(sequence(lit(0), greatest(length(norm) - n, lit(0))),
-        i => substring(norm, lit(1) + i, lit(n))))
-  }
-
   /** Word n-gram shingles (distinct), joined with '\u0001'. */
   def wordShingles(text: Column, n: Int): Column = {
     val toks = TextFunctions.tokens(TextFunctions.normalized(text))

@@ -32,15 +32,6 @@ object TextFunctions {
     size(array_distinct(tokens(text))).cast("double") /
       greatest(size(tokens(text)), lit(1)).cast("double")
 
-  /** Fraction of characters matching `clazz` (a regex char class). */
-  def charClassRatio(text: Column, clazz: String): Column =
-    (length(text) - length(regexp_replace(text, clazz, ""))).cast("double") /
-      greatest(length(text), lit(1)).cast("double")
-
-  def punctRatio(text: Column): Column = charClassRatio(text, "[.,;:!?]")
-  def digitRatio(text: Column): Column = charClassRatio(text, "[0-9]")
-  def upperRatio(text: Column): Column = charClassRatio(text, "[A-Z]")
-
   val EnStopwords: Seq[String] = Seq(
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
     "that", "for", "on", "with", "as", "at", "by", "be", "this")

@@ -76,8 +76,6 @@ final class JobContext(
     jobDir: java.nio.file.Path) {
   def spark = store.spark
   def input(name: String): Snapshot = store.get(request.inputs(name))
-  def inputOpt(name: String): Option[Snapshot] =
-    request.inputs.get(name).filter(_.nonEmpty).map(store.get)
   /** Job-scoped snapshot name (reference: datasets live inside their job
     * dir, `jobid/name`).
     */

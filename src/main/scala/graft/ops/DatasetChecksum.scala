@@ -34,34 +34,59 @@ object DatasetChecksum {
     md5(to_json(payload))
   }
 
+  /** Each row's digest as two 60-bit longs, (hi, lo): its hex digits 1-15
+    * and 17-31.
+    */
+  private def halves(df: DataFrame, columns: Seq[String], sort: Boolean,
+                     orderCol: Option[String]): DataFrame = {
+    require(sort || orderCol.isDefined,
+      "order-sensitive checksum needs an explicit order column")
+    val digest = rowDigest(df, columns, if (sort) None else orderCol)
+    df.select(conv(substring(digest, 1, 15), 16, 10).cast("long").as("hi"),
+      conv(substring(digest, 17, 15), 16, 10).cast("long").as("lo"))
+  }
+
   /** One-row DataFrame: (sum_hi, sum_lo, lines). Equal datasets (as
     * multisets of rows) ⇒ equal checksums regardless of partitioning or
     * row order.
     */
   def apply(df: DataFrame, columns: Seq[String] = Nil, sort: Boolean = true,
-            orderCol: Option[String] = None): DataFrame = {
-    require(sort || orderCol.isDefined,
-      "order-sensitive checksum needs an explicit order column")
-    val digest = rowDigest(df, columns, if (sort) None else orderCol)
-    val hi = conv(substring(digest, 1, 15), 16, 10).cast("decimal(38,0)")
-    val lo = conv(substring(digest, 17, 15), 16, 10).cast("decimal(38,0)")
-    df.select(hi.as("hi"), lo.as("lo"))
-      .agg(sum(col("hi")).as("sum_hi"), sum(col("lo")).as("sum_lo"),
+            orderCol: Option[String] = None): DataFrame =
+    halves(df, columns, sort, orderCol)
+      .agg(sum(col("hi").cast("decimal(38,0)")).as("sum_hi"),
+           sum(col("lo").cast("decimal(38,0)")).as("sum_lo"),
            count(lit(1)).as("lines"))
-  }
 
-  /** Scalar convenience for tests: (hi, lo, lines). */
+  /** [[apply]]'s (sum_hi, sum_lo, lines) as values, in one Spark job: each
+    * partition sums its halves split at bit 32, so no long overflows below
+    * 2^31 rows a partition, and the driver adds the partitions up exactly.
+    * An empty dataset gives (0, 0, 0).
+    */
   def value(df: DataFrame, columns: Seq[String] = Nil, sort: Boolean = true,
-            orderCol: Option[String] = None): (BigDecimal, BigDecimal, Long) = {
-    val r = apply(df, columns, sort, orderCol).collect()(0)
-    (BigDecimal(r.getDecimal(0)), BigDecimal(r.getDecimal(1)), r.getLong(2))
+            orderCol: Option[String] = None): (BigDecimal, BigDecimal, Long) =
+    sums(halves(df, columns, sort, orderCol))
+
+  private def sums(halves: DataFrame): (BigDecimal, BigDecimal, Long) = {
+    val parts = halves.queryExecution.toRdd.mapPartitions { rows =>
+      val s = new Array[Long](5) // hi high, hi low, lo high, lo low, lines
+      rows.foreach { r =>
+        val hi = r.getLong(0)
+        val lo = r.getLong(1)
+        s(0) += hi >>> 32; s(1) += hi & 0xffffffffL
+        s(2) += lo >>> 32; s(3) += lo & 0xffffffffL
+        s(4) += 1
+      }
+      Iterator(s)
+    }.collect()
+    def total(i: Int): BigInt = parts.map(p => BigInt(p(i))).sum
+    (BigDecimal((total(0) << 32) + total(1)), BigDecimal((total(2) << 32) + total(3)),
+      total(4).toLong)
   }
 
   /** dataset_checksum_chain (reference a_dataset_checksum_chain.py:36-51):
-    * per-snapshot checksum combined over a chain — sums add.
+    * per-snapshot checksum combined over a chain — sums add. One Spark job
+    * over the union of the links' digests.
     */
   def chain(dfs: Seq[DataFrame], columns: Seq[String] = Nil): (BigDecimal, BigDecimal, Long) =
-    dfs.map(value(_, columns)).reduce { (a, b) =>
-      (a._1 + b._1, a._2 + b._2, a._3 + b._3)
-    }
+    sums(dfs.map(halves(_, columns, sort = true, None)).reduce(_ union _))
 }

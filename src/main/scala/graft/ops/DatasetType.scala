@@ -60,8 +60,7 @@ object DatasetType {
       case -1 => (spec, "")
       case i  => (spec.substring(0, i), spec.substring(i + 1))
     }
-    def fl(x: Column): Column =
-      if (opts.numericComma) floatParseComma(x) else floatParse(x)
+    def fl(x: Column): Column = floatParse(x, opts.numericComma)
     def tz(ts: Column): Column = opts.timezone match {
       case Some(z) => to_utc_timestamp(ts, z)
       case None    => ts

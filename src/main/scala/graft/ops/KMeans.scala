@@ -63,12 +63,13 @@ object KMeans {
 
   /** Cluster `df(vecCol)` into (at most) k clusters with `iters` exact
     * Lloyd iterations; returns (idCol, cluster, dist) where `dist` is the
-    * integer squared fixed-point distance to the final centroid.
+    * integer squared fixed-point distance to the final centroid. Only these
+    * three columns are materialized, never the quantized vectors.
     */
   def fixedPoint(df: DataFrame, idCol: String, vecCol: String, k: Int,
                  iters: Int, quantShift: Int = 6, fpShift: Int = 10): DataFrame =
-    assigned(df, idCol, vecCol, k, iters, quantShift, fpShift)
-      .select(col(idCol), col("cluster"), col("dist"))
+    Cached.frame(assignedIn(_, df, idCol, vecCol, k, iters, quantShift, fpShift)
+      .select(col(idCol), col("cluster"), col("dist")))
 
   /** [[fixedPoint]] plus the quantized vector each row was assigned with —
     * (idCol, cluster, dist, q: array<long>). The cluster-aware curation
@@ -200,8 +201,17 @@ object KMeans {
     */
   def assignedTwoLevel(df: DataFrame, idCol: String, vecCol: String,
                        k1: Int, iters1: Int, k2: Int, iters2: Int,
-                       quantShift: Int = 6,
-                       fpShift: Int = 10): DataFrame = Cached.frame { c =>
+                       quantShift: Int = 6, fpShift: Int = 10): DataFrame =
+    Cached.frame(assignedTwoLevelIn(_, df, idCol, vecCol, k1, iters1, k2, iters2,
+      quantShift, fpShift))
+
+  /** [[assignedTwoLevel]] in the caller's scope: the level-1 assignment is
+    * cached there, the leaf assignment is left lazy.
+    */
+  private def assignedTwoLevelIn(c: Cached, df: DataFrame, idCol: String,
+                                 vecCol: String, k1: Int, iters1: Int, k2: Int,
+                                 iters2: Int, quantShift: Int,
+                                 fpShift: Int): DataFrame = {
     require(k2 >= 1 && iters2 >= 0, s"need k2>=1, iters2>=0 (got k2=$k2 iters2=$iters2)")
     val fp = 1L << fpShift
     val a1 = c(assignedIn(c, df, idCol, vecCol, k1, iters1, quantShift, fpShift)
@@ -261,8 +271,8 @@ object KMeans {
   def fixedPointTwoLevel(df: DataFrame, idCol: String, vecCol: String,
                          k1: Int, iters1: Int, k2: Int, iters2: Int,
                          quantShift: Int = 6, fpShift: Int = 10): DataFrame =
-    assignedTwoLevel(df, idCol, vecCol, k1, iters1, k2, iters2, quantShift, fpShift)
-      .select(col(idCol), col("cluster"), col("dist"))
+    Cached.frame(assignedTwoLevelIn(_, df, idCol, vecCol, k1, iters1, k2, iters2,
+      quantShift, fpShift).select(col(idCol), col("cluster"), col("dist")))
 
   /** The DuckDB replay of [[fixedPoint]] as a WITH-chain: one (assign,
     * update) CTE pair per iteration, then the final assignment. Generated,

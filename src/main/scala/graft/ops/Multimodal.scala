@@ -2473,15 +2473,6 @@ object Multimodal {
   def contentFingerprint(bin: Column): Column =
     conv(substring(md5(bin), 1, 15), 16, 10).cast("long")
 
-  /** Exact dedup over a binary column: group by the FULL md5 — at the
-    * 10^9-blob design scale a 60-bit truncation has ~40% birthday-collision
-    * probability (silently merging distinct blobs); the full 128 bits cost
-    * the same one shuffle.
-    */
-  def dedupByContent(df: DataFrame, idCol: String, binCol: String): DataFrame =
-    df.groupBy(md5(col(binCol)).as("content_md5"))
-      .agg(min(col(idCol)).as(idCol), count(lit(1)).as("dup_count"))
-
   private def bridge(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     org.apache.spark.sql.GraftBridge.column(e)
   private def ex(c: Column) = org.apache.spark.sql.GraftBridge.expression(c)

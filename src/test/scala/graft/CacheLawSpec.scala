@@ -82,6 +82,9 @@ class CacheLawSpec extends AnyFunSuite {
     "KMeans.fit" -> (() => KMeans.fit(emb, "vec_id", "embedding", 4, 2)),
     "KMeans.assignedTwoLevel" -> (() =>
       KMeans.assignedTwoLevel(emb, "vec_id", "embedding", 2, 1, 2, 1)),
+    "KMeans.fixedPoint" -> (() => KMeans.fixedPoint(emb, "vec_id", "embedding", 4, 2)),
+    "KMeans.fixedPointTwoLevel" -> (() =>
+      KMeans.fixedPointTwoLevel(emb, "vec_id", "embedding", 2, 1, 2, 1)),
     "SemDeDup.semantic" -> (() =>
       SemDeDup.semantic(emb, "vec_id", "embedding", 4, 2, tauSq = 4000)),
     "SemDeDup.semanticHierarchical" -> (() => SemDeDup.semanticHierarchical(
@@ -126,6 +129,15 @@ class CacheLawSpec extends AnyFunSuite {
         assert(added.keySet.subsetOf(behind(df)),
           s"storage not behind the result: ${added.keySet -- behind(df)}")
       case _ => assert(added.isEmpty, s"storage left behind: $added")
+    }
+  }
+
+  test("k-means results without vectors materialize no vectors") {
+    for (out <- Seq(KMeans.fixedPoint(emb, "vec_id", "embedding", 4, 2),
+                    KMeans.fixedPointTwoLevel(emb, "vec_id", "embedding", 2, 1, 2, 1))) {
+      val stored = out.queryExecution.logical.collect { case r: LogicalRDD => r.output }
+      assert(stored.map(_.map(_.name)) == Seq(Seq("vec_id", "cluster", "dist")),
+        "the checkpoint holds (id, cluster, dist) and no q")
     }
   }
 

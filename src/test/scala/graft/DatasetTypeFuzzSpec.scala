@@ -22,11 +22,9 @@ import TestSpark.{spark, strings1}
   * tautology. Fixed seed: a failure reproduces exactly.
   */
 class DatasetTypeFuzzSpec extends AnyFunSuite {
+  import DatasetTypeFuzzSpec._
 
-  private val N = 400
-
-  private def sample[A](g: Gen[A], seed: Long): Seq[A] =
-    Gen.listOfN(N, g).pureApply(Gen.Parameters.default, Seed(seed))
+  private def sample[A](g: Gen[A], seed: Long): Seq[A] = DatasetTypeFuzzSpec.sample(g, 400, seed)
 
   /** Type `vals` with one spec in one Spark job, null-safe collect. */
   private def conv(spec: String, vals: Seq[String],
@@ -41,55 +39,25 @@ class DatasetTypeFuzzSpec extends AnyFunSuite {
     }
   }
 
-  // digit-, sign- and dot-free junk (so the embedded number stays the
-  // FIRST match); includes non-ASCII to exercise the regex on multibyte
-  private val junkChar: Gen[Char] =
-    Gen.oneOf("azAZ_ #!~?/|(){}é世界ß".toSeq)
-  private val junk: Gen[String] =
-    Gen.chooseNum(0, 8).flatMap(n => Gen.stringOfN(n, junkChar))
-  // suffix additionally must not START with a char that extends a numeric
-  // match (digit, '.', e/E exponent head) — junkChar already excludes them
-  private val sign: Gen[String] = Gen.oneOf("", "+", "-")
-
   test("int64i: first signed integer extracted from arbitrary garbage") {
-    val g = for {
-      p <- junk; s <- sign
-      abs <- Gen.chooseNum(0L, Long.MaxValue)
-      t <- junk
-    } yield (s"$p$s$abs$t", if (s == "-") -abs else abs)
-    val cases = sample(g, seed = 101)
+    val cases = sample(int64iCases, seed = 101)
     assertAll(cases.map(_._1), conv("int64i", cases.map(_._1)),
       cases.map(_._2))
   }
 
   test("float64i: first float (incl. e-notation) extracted from garbage") {
-    val g = for {
-      p <- junk
-      d <- Gen.chooseNum(-1e12, 1e12)
-      scaled = BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-      t <- junk
-    } yield (s"$p${scaled.bigDecimal.toPlainString}$t", scaled.bigDecimal.doubleValue)
-    val cases = sample(g, seed = 102)
+    val cases = sample(float64iCases, seed = 102)
     assertAll(cases.map(_._1), conv("float64i", cases.map(_._1)),
       cases.map(_._2))
   }
 
   test("float64: whitespace padding tolerated; value is the correctly-rounded parse") {
-    val g = for {
-      lpad <- Gen.stringOfN(2, Gen.oneOf(' ', '\t'))
-      d <- Gen.chooseNum(-1e30, 1e30)
-      rpad <- Gen.stringOfN(1, Gen.oneOf(' ', '\t'))
-    } yield (s"$lpad$d$rpad", d)
-    val cases = sample(g, seed = 103)
+    val cases = sample(paddedFloatCases, seed = 103)
     assertAll(cases.map(_._1), conv("float64", cases.map(_._1)), cases.map(_._2))
   }
 
   test("numeric_comma: comma is THE decimal separator; any dot makes the value bad") {
-    val g = for {
-      d <- Gen.chooseNum(-1e9, 1e9)
-      scaled = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-    } yield scaled
-    val cases = sample(g, seed = 104)
+    val cases = sample(commaDecimals, seed = 104)
     val commaed = cases.map(_.bigDecimal.toPlainString.replace('.', ','))
     assertAll(commaed, conv("float64", commaed, TypeOptions(numericComma = true)),
       cases.map(_.bigDecimal.doubleValue))
@@ -100,61 +68,24 @@ class DatasetTypeFuzzSpec extends AnyFunSuite {
   }
 
   test("int64 base 10: sign + leading zeros ok; beyond ±2^63 rejected as bad") {
-    val inRange = for {
-      s <- sign
-      z <- Gen.chooseNum(0, 3)
-      abs <- Gen.chooseNum(0L, Long.MaxValue)
-    } yield (s"$s${"0" * z}$abs", if (s == "-") -abs else abs)
-    val cases = sample(inRange, seed = 105)
+    val cases = sample(int64Cases, seed = 105)
     assertAll(cases.map(_._1), conv("int64", cases.map(_._1)), cases.map(_._2))
-    val outOfRange = for {
-      s <- Gen.oneOf("", "-")
-      extra <- Gen.chooseNum(1L, Long.MaxValue)
-    } yield s + (BigInt(Long.MaxValue) + BigInt(extra) + (if (s == "-") 1 else 0)).toString
-    val bad = sample(outOfRange, seed = 106)
+    val bad = sample(int64OutOfRange, seed = 106)
     assertAll(bad, conv("int64", bad), bad.map(_ => null))
   }
 
   test("int32: values outside int range are bad, inside parse exactly") {
-    val g = for {
-      v <- Gen.chooseNum(Int.MinValue.toLong * 3, Int.MaxValue.toLong * 3)
-    } yield (v.toString,
-      if (v >= Int.MinValue && v <= Int.MaxValue) Int.box(v.toInt) else null)
-    val cases = sample(g, seed = 107)
+    val cases = sample(int32Cases, seed = 107)
     assertAll(cases.map(_._1), conv("int32", cases.map(_._1)), cases.map(_._2))
   }
 
   test("int64_0 auto-detect: random-cased 0x/0o prefixes and bare decimal") {
-    val g = for {
-      s <- sign
-      abs <- Gen.chooseNum(0L, Long.MaxValue)
-      kind <- Gen.oneOf("hex", "oct", "dec")
-      xCase <- Gen.oneOf("0x", "0X")
-      hexCase <- Gen.oneOf(true, false)
-    } yield {
-      val body = kind match {
-        case "hex" =>
-          val h = java.lang.Long.toHexString(abs)
-          xCase + (if (hexCase) h.toUpperCase else h)
-        case "oct" => "0o" + java.lang.Long.toOctalString(abs)
-        case "dec" => abs.toString
-      }
-      (s + body, if (s == "-") -abs else abs)
-    }
-    val cases = sample(g, seed = 108)
+    val cases = sample(int64AutoCases, seed = 108)
     assertAll(cases.map(_._1), conv("int64_0", cases.map(_._1)), cases.map(_._2))
   }
 
   test("strbool: falsy spellings in any case are false; everything else true") {
-    val falsy = Seq("false", "0", "f", "no", "off", "nil", "null", "")
-    val randomCase: String => Gen[String] = s =>
-      Gen.listOfN(s.length, Gen.oneOf(true, false)).map(bs =>
-        s.lazyZip(bs).map((c, up) => if (up) c.toUpper else c).mkString)
-    val g = Gen.frequency(
-      5 -> Gen.oneOf(falsy).flatMap(randomCase),
-      5 -> Gen.chooseNum(1, 6).flatMap(n =>
-        Gen.stringOfN(n, Gen.oneOf("abcxyz YN?!01".toSeq))))
-    val vals = sample(g, seed = 109)
+    val vals = sample(strboolInputs, seed = 109)
     val want = vals.map(v => Boolean.box(!falsy.contains(v.toLowerCase)))
     assertAll(vals, conv("strbool", vals), want)
   }
@@ -163,8 +94,7 @@ class DatasetTypeFuzzSpec extends AnyFunSuite {
     // lower bound 1900, not year 1: collect() rebases pre-1582 instants
     // into java.sql.Timestamp's hybrid Julian calendar (a JDBC display
     // convention, not a parse defect), which would shift the Instant
-    val g = Gen.chooseNum(-2208988800L, 253402300799L) // 1900 .. 9999
-    val epochs = sample(g, seed = 110)
+    val epochs = sample(epochSeconds, seed = 110)
     val got = conv("datetime:%s", epochs.map(_.toString))
     epochs.lazyZip(got).foreach { (e, g) =>
       val ts = g.asInstanceOf[java.sql.Timestamp]
@@ -189,4 +119,93 @@ class DatasetTypeFuzzSpec extends AnyFunSuite {
     assertAll(cases.map(_._1), conv("ascii:strict", cases.map(_._1)),
       cases.map(_._2))
   }
+}
+
+/** The generators, shared with [[KernelLawSpec]]'s parse-kernel rows. */
+object DatasetTypeFuzzSpec {
+
+  def sample[A](g: Gen[A], n: Int, seed: Long): Seq[A] =
+    Gen.listOfN(n, g).pureApply(Gen.Parameters.default, Seed(seed))
+
+  // digit-, sign- and dot-free junk (so the embedded number stays the
+  // FIRST match); includes non-ASCII to exercise the regex on multibyte
+  val junkChar: Gen[Char] =
+    Gen.oneOf("azAZ_ #!~?/|(){}é世界ß".toSeq)
+  val junk: Gen[String] =
+    Gen.chooseNum(0, 8).flatMap(n => Gen.stringOfN(n, junkChar))
+  // suffix additionally must not START with a char that extends a numeric
+  // match (digit, '.', e/E exponent head) — junkChar already excludes them
+  val sign: Gen[String] = Gen.oneOf("", "+", "-")
+
+  /** (value, the integer it holds) with garbage around it. */
+  val int64iCases: Gen[(String, Long)] = for {
+    p <- junk; s <- sign
+    abs <- Gen.chooseNum(0L, Long.MaxValue)
+    t <- junk
+  } yield (s"$p$s$abs$t", if (s == "-") -abs else abs)
+
+  val float64iCases: Gen[(String, Double)] = for {
+    p <- junk
+    d <- Gen.chooseNum(-1e12, 1e12)
+    scaled = BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+    t <- junk
+  } yield (s"$p${scaled.bigDecimal.toPlainString}$t", scaled.bigDecimal.doubleValue)
+
+  val paddedFloatCases: Gen[(String, Double)] = for {
+    lpad <- Gen.stringOfN(2, Gen.oneOf(' ', '\t'))
+    d <- Gen.chooseNum(-1e30, 1e30)
+    rpad <- Gen.stringOfN(1, Gen.oneOf(' ', '\t'))
+  } yield (s"$lpad$d$rpad", d)
+
+  val commaDecimals: Gen[BigDecimal] = for {
+    d <- Gen.chooseNum(-1e9, 1e9)
+  } yield BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP)
+
+  val int64Cases: Gen[(String, Long)] = for {
+    s <- sign
+    z <- Gen.chooseNum(0, 3)
+    abs <- Gen.chooseNum(0L, Long.MaxValue)
+  } yield (s"$s${"0" * z}$abs", if (s == "-") -abs else abs)
+
+  val int64OutOfRange: Gen[String] = for {
+    s <- Gen.oneOf("", "-")
+    extra <- Gen.chooseNum(1L, Long.MaxValue)
+  } yield s + (BigInt(Long.MaxValue) + BigInt(extra) + (if (s == "-") 1 else 0)).toString
+
+  val int32Cases: Gen[(String, Any)] = for {
+    v <- Gen.chooseNum(Int.MinValue.toLong * 3, Int.MaxValue.toLong * 3)
+  } yield (v.toString,
+    if (v >= Int.MinValue && v <= Int.MaxValue) Int.box(v.toInt) else null)
+
+  /** Random-cased 0x/0o prefixes and bare decimal, signed. */
+  val int64AutoCases: Gen[(String, Long)] = for {
+    s <- sign
+    abs <- Gen.chooseNum(0L, Long.MaxValue)
+    kind <- Gen.oneOf("hex", "oct", "dec")
+    xCase <- Gen.oneOf("0x", "0X")
+    hexCase <- Gen.oneOf(true, false)
+  } yield {
+    val body = kind match {
+      case "hex" =>
+        val h = java.lang.Long.toHexString(abs)
+        xCase + (if (hexCase) h.toUpperCase else h)
+      case "oct" => "0o" + java.lang.Long.toOctalString(abs)
+      case "dec" => abs.toString
+    }
+    (s + body, if (s == "-") -abs else abs)
+  }
+
+  val falsy: Seq[String] = Seq("false", "0", "f", "no", "off", "nil", "null", "")
+
+  val strboolInputs: Gen[String] = {
+    val randomCase: String => Gen[String] = s =>
+      Gen.listOfN(s.length, Gen.oneOf(true, false)).map(bs =>
+        s.lazyZip(bs).map((c, up) => if (up) c.toUpper else c).mkString)
+    Gen.frequency(
+      5 -> Gen.oneOf(falsy).flatMap(randomCase),
+      5 -> Gen.chooseNum(1, 6).flatMap(n =>
+        Gen.stringOfN(n, Gen.oneOf("abcxyz YN?!01".toSeq))))
+  }
+
+  val epochSeconds: Gen[Long] = Gen.chooseNum(-2208988800L, 253402300799L) // 1900 .. 9999
 }

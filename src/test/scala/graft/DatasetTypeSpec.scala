@@ -226,6 +226,26 @@ class DatasetTypeSpec extends AnyFunSuite {
     assert(counts("a") == 1 && counts("b") == 2)
   }
 
+  test("filter_bad over the hot specs plans byte-level kernels, no regex or formatter") {
+    val s = spark
+    import s.implicits._
+    // perfbench's day columns and specs
+    val types = Map("id" -> "int64", "qty" -> "int32", "code" -> "int64_16",
+      "price" -> "float64", "day" -> "date", "ts" -> "datetime", "flag" -> "strbool")
+    val df = Seq(("1", "k1", "2", "ff", "1.5", "2026-01-01", "2026-01-01 10:00:00", "true"),
+      ("2", "k2", "q2", "ff", "1.5", "2026-01-01", "2026-01-01 10:00:00", "off"))
+      .toDF("id", "key", "qty", "code", "price", "day", "ts", "flag")
+    val res = DatasetType(df, types, filterBad = true, hashlabel = Some("key"))
+    for (out <- Seq(res.good, res.bad)) {
+      val plan = out.queryExecution.optimizedPlan.toString.toLowerCase
+      for (banned <- Seq("rlike", "regexp_replace", "conv(", "gettimestamp", "to_timestamp"))
+        assert(!plan.contains(banned), s"$banned in\n$plan")
+    }
+    assert(res.good.select("id", "qty", "code", "flag").collect().map(_.toSeq).toSeq ==
+      Seq(Seq(1L, 2, 255L, true)))
+    assert(res.bad.count() == 1)
+  }
+
   test("defaults only apply to parse failures, nulls pass through") {
     val s = spark
     import s.implicits._

@@ -2,13 +2,16 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{GraftBridge, Row}
+import org.apache.spark.sql.{Column, GraftBridge, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.WholeStageCodegenExec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.expr._
 import graft.ops.{Bpe, Unigram, WordPiece}
 import TestSpark.spark
@@ -291,6 +294,159 @@ class KernelLawSpec extends AnyFunSuite {
       "RIFF".getBytes(UTF_8) -> null)
   }
 
+  // ---- dataset_type parse kernels ----
+
+  /** The Column compositions the parse kernels replaced, kept here as
+    * their models, exactly as they were.
+    */
+  private object Composed {
+    def strBool(c: Column): Column =
+      when(c.isNull, lit(null).cast("boolean"))
+        .otherwise(!lower(c).isin("false", "0", "f", "no", "off", "nil", "null", ""))
+
+    def floatParse(c: Column): Column = {
+      val t = lower(trim(c))
+      when(t.isin("inf", "+inf", "infinity", "+infinity"), lit(Double.PositiveInfinity))
+        .when(t.isin("-inf", "-infinity"), lit(Double.NegativeInfinity))
+        .when(t.isin("nan", "+nan", "-nan"), lit(Double.NaN))
+        .otherwise(c.try_cast("double"))
+    }
+
+    def floatParseComma(c: Column): Column =
+      when(c.contains("."), lit(null).cast("double"))
+        .otherwise(floatParse(translate(c, ",", ".")))
+
+    def intBase(c: Column, base: Int): Column = {
+      def viaConv(src: Column, b: Int): Column = {
+        val valid = if (b == 16) "^[-+]?[0-9a-fA-F]+$" else "^[-+]?[0-7]+$"
+        when(trim(src).rlike(valid),
+          when(trim(src).startsWith("-"),
+            -conv(regexp_replace(trim(src), "^[-+]", ""), b, 10).try_cast("long"))
+          .otherwise(conv(regexp_replace(trim(src), "^[+]", ""), b, 10).try_cast("long"))
+        ).try_cast("long")
+      }
+      base match {
+        case 10 => trim(c).try_cast("long")
+        case 16 => viaConv(regexp_replace(trim(c), "(?i)^([-+]?)0x", "$1"), 16)
+        case 8  => viaConv(regexp_replace(trim(c), "(?i)^([-+]?)0o", "$1"), 8)
+        case 0 =>
+          when(trim(c).rlike("(?i)^[-+]?0x"),
+               viaConv(regexp_replace(trim(c), "(?i)^([-+]?)0x", "$1"), 16))
+            .when(trim(c).rlike("(?i)^[-+]?0o"),
+               viaConv(regexp_replace(trim(c), "(?i)^([-+]?)0o", "$1"), 8))
+            .otherwise(trim(c).try_cast("long"))
+      }
+    }
+
+    def intI(c: Column): Column = {
+      val m = regexp_extract(c, "[-+]?\\d+", 0)
+      when(m === "", lit(null).cast("long")).otherwise(m.try_cast("long"))
+    }
+  }
+
+  /** A composition as a model: evaluated interpreted on the driver, one
+    * value at a time, in a session whose time zone is `zone`. A value it
+    * overflows on (conv() past 64 bits, a timestamp past its range) is
+    * null, which is what the kernel answers.
+    */
+  private def composed(f: Column => Column, zone: String = "UTC"): Any => Any = {
+    lazy val e = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.session.timeZone", zone)
+      val df = s.createDataFrame(s.sparkContext.parallelize(Seq(Row("x")), 1),
+        StructType(Seq(StructField("v", StringType))))
+      val p = df.select(f(col("v"))).queryExecution.optimizedPlan.asInstanceOf[Project]
+      BindReferences.bindReference(p.projectList.head, p.child.output)
+    }
+    v => try toScala(e.eval(InternalRow(UTF8String.fromString(v.asInstanceOf[String]))),
+        e.dataType)
+      catch { case _: ArithmeticException => null }
+  }
+
+  import DatasetTypeFuzzSpec.{sample, int64iCases, float64iCases, paddedFloatCases,
+    commaDecimals, int64Cases, int64OutOfRange, int32Cases, int64AutoCases,
+    strboolInputs, epochSeconds}
+
+  /** Hand-picked edges: padding of every kind, signs, overflow at ±2^63
+    * and 2^31, leading zeros, prefixes, non-ASCII digits, empty values.
+    */
+  private val numberEdges: Seq[String] = Seq("", " ", "\t", "0", "-0", "+0", "007",
+    "-007", "42", " 42 ", "\t42\t", "42\n", "\u007f42", "42\u0000", "42\u000b",
+    "\u00a042", "+42", "-42", "--42", "+-42", "4 2", "+", "-", "1.5", "1.", ".5", "1e3",
+    "9223372036854775807", "9223372036854775808", "-9223372036854775808",
+    "-9223372036854775809", "2147483647", "2147483648", "-2147483648",
+    "-2147483649", "99999999999999999999", "\u0661\u0662", "\uff14\uff12",
+    "x1", "1x", "0x10", "0X1f", "-0x10", "+0x10", "0x+5", "0x-5", "0x 5", " 0x 5 ",
+    "-0x 5", "0x", "0x0x1", "ff", "FF", "-ff", "+ff", "ff\n", "ff\r\n", "ff\r",
+    "ff\u0085", "ff\u2028", "ff\n\n", "ff ", "\tff", "- ff", "7fffffffffffffff",
+    "8000000000000000", "-8000000000000000", "-7fffffffffffffff",
+    "ffffffffffffffff", "1ffffffffffffffff", "0000000000000000ff", "0o17",
+    "0O17", "-0o17", "0o-17", "0o 17", "0o8", "17", "89", "777777777777777777777",
+    "1000000000000000000000", "2000000000000000000000", "0o", "0b1",
+    "id=123;end", "99 bottles", "junk-12tail", "+-5", "a+5b", "1e3x")
+
+  private val floatEdges: Seq[String] = Seq("", " ", "1", "1.5", " 1.5 ",
+    "\t1.5\t", "1.5\n", "\u000b1", "1\u0000", "1\u007f", "1e3", "1E-3", "1.",
+    ".5", ".", "-.5", "+1", "--1", "+.5e-3", "1d", "1f", "1D", "1F", "1.f", "1e5d",
+    "0x1p3", "0X1P-2", "-0x1.8p1", "0x1", "inf", "INF", "+inf", "-inf",
+    "infinity", "-Infinity", "+Infinity", "nan", "NaN", "-nan", "+nan", "+NaN",
+    "-NaN", " -nan ", "\t-nan", "\t+NaN", " inf ", "\tinf", "infin", "NaN1",
+    "Infinityx", "in f", "1,5", "3,14", "1,000,5", ",5", "5,", ",", "1,5e3",
+    " 1,5 ", "1,5d", "3.14", "1e", "e3", "1e+", "1.5.5", "\u0661", "\uff11.5",
+    "1e400", "-1e400", "1e-400", "4.9e-324", "2.2250738585072011e-308",
+    "123456789012345678901234567890", "0.1", "3.14159265358979323846",
+    "9007199254740993", "9007199254740992", "1_000", "-0", "-0.0",
+    "1e0000000000000000001", "1e99999999999999999999",
+    "00000000000000000000000000001.5", "1.7976931348623157e308",
+    "1.7976931348623159e308", "12345.67", "0.000001", "1e22", "1e23", "-1e-22",
+    "123456789012345678", "1234567890123456789", "0.30000000000000004")
+
+  /** Leap days, Feb 30, 24:00:00, signed and long years, padding, zone
+    * gaps and overlaps, the edges of the timestamp range.
+    */
+  private val dateEdges: Seq[String] = Seq("", "2020-01-01", "2020-1-1",
+    "2020-01-1", "20-01-01", "02020-01-01", "12345-01-01", "+12345-01-01",
+    "-2020-01-01", "+2020-01-01", "0000-01-01", "-0000-01-01", "+00000-01-01",
+    "-00001-01-01", "0001-01-01", "1582-10-10", "1900-02-29", "2000-02-29",
+    "2020-02-29", "2019-02-29", "2020-02-30", "2020-04-31", "2020-13-01",
+    "2020-00-01", "2020-01-00", "2020-01-32", " 2020-01-01", "2020-01-01 ",
+    "2020-01-01\n", "2020/01/01", "2020-01-01T00:00", "\u0662020-01-01",
+    "2020-\uff101-01", "9999-12-31", "10000-01-01", "+10000-01-01",
+    "+294247-01-01", "+300000-01-01", "-290308-01-01", "+0002020-01-01",
+    "2020-01-01x", "+9999999999-01-01", "2011-12-30", "1970-01-01")
+
+  private val datetimeEdges: Seq[String] = dateEdges ++ Seq("2020-01-01 00:00:00",
+    "2020-01-01 23:59:59", "2020-01-01 24:00:00", "2020-01-01 23:60:00",
+    "2020-01-01 23:59:60", "2020-01-01T00:00:00", "2020-01-01  00:00:00",
+    "2020-01-01 0:00:00", "2020-01-01 00:00:00.5", "2020-01-01 00:00",
+    "2020-02-29 12:00:00", "2019-02-29 12:00:00", "2020-02-30 12:00:00",
+    " 2020-01-01 00:00:00", "2020-01-01 00:00:00 ", "+12345-01-01 00:00:00",
+    "-0001-01-01 00:00:00", "0001-01-01 00:00:00", "1582-10-10 00:00:00",
+    "1900-01-01 00:00:00", "2021-03-14 02:30:00", "2021-11-07 01:30:00",
+    "2021-03-28 01:30:00", "+294247-01-10 04:00:54", "+294247-01-10 04:00:55",
+    "-290308-12-21 19:59:06", "-290308-12-21 19:59:05", "2020-01-01 12:00:00Z",
+    "2020-01-01 12:00:00+01:00", "2020-01-01 1a:00:00", "2020-01-01 12-00-00",
+    "2020-12-31 23:59:59")
+
+  private val epochEdges: Seq[String] = Seq("", "0", "86400", "-86400", " 5 ",
+    "\t5\n", "1.5", "1e3", "x", "+7", "-1", "9223372036854", "9223372036855",
+    "-9223372036854", "-9223372036855", "9223372036854775", "9223372036854776",
+    "9223372036854775807", "9223372036854775808", "\u0661")
+
+  private val fuzz: Seq[String] = Seq(int64iCases.map(_._1), float64iCases.map(_._1),
+    paddedFloatCases.map(_._1), int64Cases.map(_._1), int64OutOfRange,
+    int32Cases.map(_._1), int64AutoCases.map(_._1), strboolInputs)
+    .zipWithIndex.flatMap { case (g, i) => sample(g, 25, 300L + i) }
+
+  private val commaFuzz: Seq[String] = sample(commaDecimals, 40, 320L)
+    .flatMap { d => val t = d.bigDecimal.toPlainString; Seq(t, t.replace('.', ',')) }
+
+  private val dateFuzz: Seq[String] = sample(epochSeconds, 40, 330L).flatMap { e =>
+    val t = java.time.LocalDateTime.ofEpochSecond(e, 0, java.time.ZoneOffset.UTC)
+    Seq(e.toString, t.toLocalDate.toString,
+      f"${t.toLocalDate} ${t.getHour}%02d:${t.getMinute}%02d:${t.getSecond}%02d")
+  }
+
   private val laws: Seq[Law] = Seq(
     law(() => ShingleHashes(1), "graft_shingle_hash40", tokenArrays, shingles(1)),
     law(() => ShingleHashes(3), "graft_shingle_hash40", tokenArrays, shingles(3)),
@@ -365,7 +521,39 @@ class KernelLawSpec extends AnyFunSuite {
     law(() => BigNumCanon, "graft_bignum_canon", bignums, bignumModel),
     law(() => RiffChunkOffset("data"), "graft_riff_chunk_offset",
       null +: riffBlobs.map(_._1),
-      v => riffBlobs.find(_._1 eq v.asInstanceOf[AnyRef]).get._2))
+      v => riffBlobs.find(_._1 eq v.asInstanceOf[AnyRef]).get._2)) ++
+    Seq(10, 16, 8, 0).map(b => law(() => ParseLong(b), "graft_parse_long",
+      null +: (numberEdges ++ fuzz), composed(Composed.intBase(_, b)))) ++ Seq(
+    law(() => FirstLong, "graft_first_long", null +: (numberEdges ++ fuzz),
+      composed(Composed.intI)),
+    law(() => ParseDouble(false), "graft_parse_double",
+      null +: (floatEdges ++ numberEdges ++ fuzz ++ commaFuzz),
+      composed(Composed.floatParse)),
+    law(() => ParseDouble(true), "graft_parse_double",
+      null +: (floatEdges ++ numberEdges ++ commaFuzz),
+      composed(Composed.floatParseComma)),
+    law(() => StrBool, "graft_strbool", null +: (numberEdges ++ floatEdges ++ fuzz ++
+      Seq("FALSE", "fAlSe", "F", "NO", "Off", "NIL", "NULL", "false ", " false",
+        "n", "nul", "nulll", "\u0130", "\u212a", "\uff26ALSE", "n\u0130l")),
+      composed(Composed.strBool)),
+    law(() => ParseTimestamp(time = false, "UTC"), "graft_parse_timestamp",
+      null +: (datetimeEdges ++ dateFuzz),
+      composed(try_to_timestamp(_, lit("yyyy-MM-dd")))),
+    law(() => ParseTimestamp(time = true, "UTC"), "graft_parse_timestamp",
+      null +: (datetimeEdges ++ dateFuzz),
+      composed(try_to_timestamp(_, lit("yyyy-MM-dd HH:mm:ss")))),
+    law(() => ParseTimestamp(time = true, "America/New_York"), "graft_parse_timestamp",
+      null +: (datetimeEdges ++ dateFuzz),
+      composed(try_to_timestamp(_, lit("yyyy-MM-dd HH:mm:ss")), "America/New_York")),
+    law(() => ParseTimestamp(time = false, "Pacific/Apia"), "graft_parse_timestamp",
+      null +: (datetimeEdges ++ dateFuzz),
+      composed(try_to_timestamp(_, lit("yyyy-MM-dd")), "Pacific/Apia")),
+    law(() => EpochTimestamp(1000000L), "graft_epoch_timestamp",
+      null +: (epochEdges ++ numberEdges ++ dateFuzz),
+      composed(c => timestamp_seconds(c.try_cast("long")))),
+    law(() => EpochTimestamp(1000L), "graft_epoch_timestamp",
+      null +: (epochEdges ++ numberEdges ++ dateFuzz),
+      composed(c => timestamp_millis(c.try_cast("long")))))
 
   /** Scala collections of any flavour as Lists, rows field by field, for
     * comparison.
@@ -373,7 +561,17 @@ class KernelLawSpec extends AnyFunSuite {
   private def norm(v: Any): Any = v match {
     case s: scala.collection.Seq[_] => s.map(norm).toList
     case r: Row                     => Row.fromSeq(r.toSeq.map(norm))
+    // NaN equals nothing and -0.0 equals 0.0 numerically: compare as text
+    case d: Double if d.isNaN || 1 / d < 0 && d == 0 => d.toString
     case other                      => other
+  }
+
+  /** A Catalyst value as Scala; a timestamp as an Instant, which (unlike
+    * java.sql.Timestamp) holds every instant the type does.
+    */
+  private def toScala(v: Any, t: DataType): Any = (v, t) match {
+    case (micros: Long, TimestampType) => DateTimeUtils.microsToInstant(micros)
+    case _ => CatalystTypeConverters.convertToScala(v, t)
   }
 
   private def label(l: Law): String = s"${l.make()}"
@@ -398,6 +596,8 @@ class KernelLawSpec extends AnyFunSuite {
     val s = spark.newSession()
     s.conf.set("spark.sql.codegen.fallback", "false")
     s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    // timestamps collect as Instants, which reach the ends of the range
+    s.conf.set("spark.sql.datetime.java8API.enabled", "true")
     laws.foreach { l =>
       val k = l.make()
       val types = childTypes(l)
@@ -407,9 +607,12 @@ class KernelLawSpec extends AnyFunSuite {
       val interpreted = l.inputs.map { args =>
         val out = KernelCall(refs(types), k).eval(
           InternalRow.fromSeq(args.map(CatalystTypeConverters.convertToCatalyst)))
-        norm(CatalystTypeConverters.convertToScala(out, k.dataType))
+        norm(toScala(out, k.dataType))
       }
-      assert(interpreted == expected, s"${label(l)}: interpreted eval")
+      // the inputs whose results differ, not two long lists
+      def differences(got: Seq[Any]): String = l.inputs.lazyZip(got).lazyZip(expected)
+        .collect { case (in, g, w) if g != w => s"$in: got $g, want $w" }.mkString("; ")
+      assert(interpreted == expected, s"${label(l)}: interpreted eval: ${differences(interpreted)}")
 
       // an RDD source, so the optimizer cannot fold the projection into a
       // local relation and evaluate it before execution
@@ -433,7 +636,7 @@ class KernelLawSpec extends AnyFunSuite {
         (k.nullable && CodeGenerator.isPrimitiveType(k.dataType)),
         s"${label(l)}: boxing\n$code")
       val generated = out.collect().map(r => norm(r.get(0))).toSeq
-      assert(generated == expected, s"${label(l)}: generated code")
+      assert(generated == expected, s"${label(l)}: generated code: ${differences(generated)}")
     }
   }
 
@@ -467,6 +670,11 @@ class KernelLawSpec extends AnyFunSuite {
     differ(RecodeCharset("UTF-8", "strict"), RecodeCharset("UTF-8", "replace"))
     differ(AsciiOctal(false), AsciiOctal(true))
     differ(RiffChunkOffset("data"), RiffChunkOffset("fmt "))
+    differ(ParseLong(10), ParseLong(16))
+    differ(ParseDouble(false), ParseDouble(true))
+    differ(ParseTimestamp(time = true, "UTC"), ParseTimestamp(time = false, "UTC"))
+    differ(ParseTimestamp(time = true, "UTC"), ParseTimestamp(time = true, "Asia/Kolkata"))
+    differ(EpochTimestamp(1000L), EpochTimestamp(1000000L))
     // the element reader a kernel picks for its child type is not a
     // parameter: the bound kernel equals the one that was built
     assert(QuantizeLong(2)().on(Seq(ArrayType(FloatType))) == Some(QuantizeLong(2)()))

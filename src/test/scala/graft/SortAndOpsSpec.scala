@@ -86,6 +86,48 @@ class SortAndOpsSpec extends AnyFunSuite {
     assert(DatasetChecksum.chain(Seq(a, b)) == DatasetChecksum.value(whole))
   }
 
+  /** Spark jobs `body` runs. */
+  private def jobs(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${System.nanoTime}"
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("checksum value and chain: one Spark job, the aggregate frame's values") {
+    def frameValue(df: org.apache.spark.sql.DataFrame, columns: Seq[String] = Nil,
+                   sort: Boolean = true, orderCol: Option[String] = None) = {
+      val r = DatasetChecksum(df, columns, sort, orderCol).collect()(0)
+      (BigDecimal(r.getDecimal(0)), BigDecimal(r.getDecimal(1)), r.getLong(2))
+    }
+    val fixture = AllTypesFixtureSpec.fixture()
+    // (frame, its jobs): a shuffle in the input runs as a job of its own
+    val frames = Seq(fixture -> 1, fixture.repartition(3) -> 2,
+      fixture.filter(col("int64").isNull) -> 1)
+    for ((df, n) <- frames) {
+      var v: (BigDecimal, BigDecimal, Long) = null
+      assert(jobs { v = DatasetChecksum.value(df) } == n)
+      assert(v == frameValue(df))
+      assert(DatasetChecksum.value(df, Seq("float64", "unicode")) ==
+        frameValue(df, Seq("float64", "unicode")))
+    }
+    val ordered = fixture.withColumn("pos", monotonically_increasing_id())
+    assert(DatasetChecksum.value(ordered, sort = false, orderCol = Some("pos")) ==
+      frameValue(ordered, sort = false, orderCol = Some("pos")))
+    val links = Seq(fixture.limit(2), fixture.filter(col("int32") === -1), fixture)
+    var c: (BigDecimal, BigDecimal, Long) = null
+    assert(jobs { c = DatasetChecksum.chain(links) } <= 2, "a limit adds its own job")
+    val sums = links.map(frameValue(_))
+    assert(c == sums.reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3)))
+    val s = spark
+    import s.implicits._
+    val plain = Seq(Seq((1, "x")).toDF("k", "v"), Seq((2, "y"), (3, "z")).toDF("k", "v"),
+      Seq((4, "w")).toDF("k", "v"))
+    assert(jobs { c = DatasetChecksum.chain(plain) } == 1)
+    assert(c == DatasetChecksum.value(plain.reduce(_ unionByName _)))
+  }
+
   test("hashpart: each key in exactly one partition") {
     val s = spark
     import s.implicits._
