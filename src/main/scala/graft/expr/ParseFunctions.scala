@@ -1,9 +1,8 @@
 package graft.expr
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -274,23 +273,23 @@ object ParseFunctions {
     when(m === "", lit(null).cast("string")).otherwise(m)
   }
 
-  /** The active session's time zone, which the wall-clock kernels read
-    * their values in, as `try_to_timestamp` does.
+  /** date:%fmt — with `%s` = unix epoch seconds (dataset_type.py:787-803).
+    * The default format is read in time zone `zone`, the session time zone
+    * of the frame being typed; other formats resolve the session zone
+    * themselves when Spark analyzes the frame.
     */
-  private def sessionZone: String =
-    SparkSession.active.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key)
-
-  /** date:%fmt — with `%s` = unix epoch seconds (dataset_type.py:787-803). */
-  def parseDate(c: Column, fmt: String): Column = fmt match {
+  def parseDate(c: Column, fmt: String, zone: String): Column = fmt match {
     case "%Y-%m-%d" =>
-      KernelCall.column(c, ParseTimestamp(time = false, sessionZone)).cast("date")
+      KernelCall.column(c, ParseTimestamp(time = false, zone)).cast("date")
     case "%s"       => to_date(KernelCall.column(c, EpochTimestamp(1000000L)))
     case f          => try_to_timestamp(c, lit(strftimeToSpark(f))).cast("date")
   }
 
-  /** datetime:%fmt; `%s` epoch seconds; `java` = epoch millis. */
-  def parseDatetime(c: Column, fmt: String): Column = fmt match {
-    case "%Y-%m-%d %H:%M:%S" => KernelCall.column(c, ParseTimestamp(time = true, sessionZone))
+  /** datetime:%fmt; `%s` epoch seconds; `java` = epoch millis. `zone` as
+    * in [[parseDate]].
+    */
+  def parseDatetime(c: Column, fmt: String, zone: String): Column = fmt match {
+    case "%Y-%m-%d %H:%M:%S" => KernelCall.column(c, ParseTimestamp(time = true, zone))
     case "%s"   => KernelCall.column(c, EpochTimestamp(1000000L))
     case "java" => KernelCall.column(c, EpochTimestamp(1000L))
     case f      => try_to_timestamp(c, lit(strftimeToSpark(f)))
@@ -640,12 +639,6 @@ case class ParseTimestamp(time: Boolean, zone: String) extends Kernel1[UTF8Strin
   override def nullable: Boolean = true
 
   @transient private lazy val zoneId = DateTimeUtils.getZoneId(zone)
-  /** The zone's offset in seconds when it never changes, else None. */
-  @transient private lazy val fixedOffset: Option[Int] = {
-    val rules = zoneId.getRules
-    if (rules.isFixedOffset) Some(rules.getOffset(java.time.Instant.EPOCH).getTotalSeconds)
-    else None
-  }
 
   def apply(s: UTF8String): java.lang.Long = {
     val n = s.numBytes
@@ -670,13 +663,8 @@ case class ParseTimestamp(time: Boolean, zone: String) extends Kernel1[UTF8Strin
     if (i + (if (time) 15 else 6) != n || month < 1 || month > 12 || day < 1 ||
         day > monthLength(year, month) || hour < 0 || hour > 23 || minute < 0 ||
         minute > 59 || second < 0 || second > 59) return null
-    val secs = fixedOffset match {
-      case Some(off) =>
-        epochDay(year, month, day) * 86400L + hour * 3600L + minute * 60L + second - off
-      case None =>
-        java.time.ZonedDateTime.of(year.toInt, month, day, hour, minute, second, 0, zoneId)
-          .toEpochSecond
-    }
+    val secs = java.time.ZonedDateTime.of(year.toInt, month, day, hour, minute, second, 0, zoneId)
+      .toEpochSecond
     if (secs > Long.MaxValue / 1000000L || secs < Long.MinValue / 1000000L) null
     else secs * 1000000L
   }
@@ -684,7 +672,8 @@ case class ParseTimestamp(time: Boolean, zone: String) extends Kernel1[UTF8Strin
   /** The two digits after separator `sep` at `i`, or -1. */
   private def field(s: UTF8String, i: Int, sep: Char): Int =
     if (i + 2 < s.numBytes && s.getByte(i) == sep) {
-      val (h, l) = (digit(s.getByte(i + 1)), digit(s.getByte(i + 2)))
+      val h = digit(s.getByte(i + 1))
+      val l = digit(s.getByte(i + 2))
       if (h < 0 || l < 0) -1 else h * 10 + l
     } else -1
 
@@ -692,18 +681,6 @@ case class ParseTimestamp(time: Boolean, zone: String) extends Kernel1[UTF8Strin
     case 2 => if ((year & 3) == 0 && (year % 100 != 0 || year % 400 == 0)) 29 else 28
     case 4 | 6 | 9 | 11 => 30
     case _ => 31
-  }
-
-  /** Days since 1970-01-01 of a proleptic Gregorian date (H. Hinnant's
-    * days_from_civil).
-    */
-  private def epochDay(year: Long, month: Int, day: Int): Long = {
-    val y = if (month <= 2) year - 1 else year
-    val era = Math.floorDiv(y, 400L)
-    val yoe = y - era * 400
-    val doy = (153 * (if (month > 2) month - 3 else month + 9) + 2) / 5 + day - 1
-    val doe = yoe * 365 + yoe / 4 - yoe / 100 + doy
-    era * 146097 + doe - 719468
   }
 }
 

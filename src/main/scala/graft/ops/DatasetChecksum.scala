@@ -48,19 +48,19 @@ object DatasetChecksum {
 
   /** One-row DataFrame: (sum_hi, sum_lo, lines). Equal datasets (as
     * multisets of rows) ⇒ equal checksums regardless of partitioning or
-    * row order.
+    * row order. An empty dataset gives (0, 0, 0).
     */
   def apply(df: DataFrame, columns: Seq[String] = Nil, sort: Boolean = true,
-            orderCol: Option[String] = None): DataFrame =
+            orderCol: Option[String] = None): DataFrame = {
+    def total(c: String): Column =
+      coalesce(sum(col(c).cast("decimal(38,0)")), lit(0).cast("decimal(38,0)"))
     halves(df, columns, sort, orderCol)
-      .agg(sum(col("hi").cast("decimal(38,0)")).as("sum_hi"),
-           sum(col("lo").cast("decimal(38,0)")).as("sum_lo"),
-           count(lit(1)).as("lines"))
+      .agg(total("hi").as("sum_hi"), total("lo").as("sum_lo"), count(lit(1)).as("lines"))
+  }
 
   /** [[apply]]'s (sum_hi, sum_lo, lines) as values, in one Spark job: each
     * partition sums its halves split at bit 32, so no long overflows below
     * 2^31 rows a partition, and the driver adds the partitions up exactly.
-    * An empty dataset gives (0, 0, 0).
     */
   def value(df: DataFrame, columns: Seq[String] = Nil, sort: Boolean = true,
             orderCol: Option[String] = None): (BigDecimal, BigDecimal, Long) =

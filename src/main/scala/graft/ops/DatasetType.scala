@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import graft.core.Cols.{q => Q}
 import graft.expr.ParseFunctions._
 
@@ -29,8 +30,9 @@ final case class TypedResult(good: DataFrame, bad: DataFrame,
   def badCounts(types: Map[String, String]): Map[String, Long] = {
     if (bad.isEmpty) types.keys.map(_ -> 0L).toMap
     else {
+      val zone = DatasetType.sessionZone(bad)
       val aggs = types.keys.toSeq.map { c =>
-        sum(when(DatasetType.parse(Q(c), types(c), opts).isNull && Q(c).isNotNull, 1L)
+        sum(when(DatasetType.parse(Q(c), types(c), opts, zone).isNull && Q(c).isNotNull, 1L)
           .otherwise(0L)).as(c)
       }
       val row = bad.agg(aggs.head, aggs.tail: _*).collect()(0)
@@ -52,10 +54,18 @@ final case class TypeOptions(
 
 object DatasetType {
 
-  /** Compile one conversion spec to a Column expression producing NULL on
-    * parse failure.
+  /** The session time zone of `df`, which wall-clock date and datetime
+    * values are read in: the zone Spark's own timestamp parsing resolves
+    * when it analyzes `df`.
     */
-  def parse(c: Column, spec: String, opts: TypeOptions = TypeOptions()): Column = {
+  private[ops] def sessionZone(df: DataFrame): String =
+    df.sparkSession.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key)
+
+  /** Compile one conversion spec to a Column expression producing NULL on
+    * parse failure; wall-clock values are read in time zone `zone`
+    * ([[sessionZone]] of the frame being typed).
+    */
+  def parse(c: Column, spec: String, opts: TypeOptions, zone: String): Column = {
     val (base, fmt) = spec.indexOf(':') match {
       case -1 => (spec, "")
       case i  => (spec.substring(0, i), spec.substring(i + 1))
@@ -117,23 +127,23 @@ object DatasetType {
       case "floatbooli" => floatBoolI(c)
       case "complex64" => parseComplex(c, 64)
       case "complex32" => parseComplex(c, 32)
-      case "date"      => parseDate(c, if (fmt.isEmpty) "%Y-%m-%d" else fmt)
+      case "date"      => parseDate(c, if (fmt.isEmpty) "%Y-%m-%d" else fmt, zone)
       case "datetime"  =>
         // timezone applies to wall-clock formats only: epoch inputs are
         // already absolute instants
         val f = if (fmt.isEmpty) "%Y-%m-%d %H:%M:%S" else fmt
-        if (f == "%s" || f == "java") parseDatetime(c, f)
-        else tz(parseDatetime(c, f))
-      case "javadatetime" => parseDatetime(c, "java")
+        if (f == "%s" || f == "java") parseDatetime(c, f, zone)
+        else tz(parseDatetime(c, f, zone))
+      case "javadatetime" => parseDatetime(c, "java", zone)
       case "datei" =>
         val f = if (fmt.isEmpty) "%Y-%m-%d" else fmt
-        if (f == "%s") parseDate(intI(c, 64).cast("string"), "%s")
-        else parseDate(extractLeading(c, f), f)
+        if (f == "%s") parseDate(intI(c, 64).cast("string"), "%s", zone)
+        else parseDate(extractLeading(c, f), f, zone)
       case "datetimei" =>
         val f = if (fmt.isEmpty) "%Y-%m-%d %H:%M:%S" else fmt
-        if (f == "%s" || f == "java") parseDatetime(intI(c, 64).cast("string"), f)
-        else tz(parseDatetime(extractLeading(c, f), f))
-      case "javadatetimei" => parseDatetime(intI(c, 64).cast("string"), "java")
+        if (f == "%s" || f == "java") parseDatetime(intI(c, 64).cast("string"), f, zone)
+        else tz(parseDatetime(extractLeading(c, f), f, zone))
+      case "javadatetimei" => parseDatetime(intI(c, 64).cast("string"), "java", zone)
       case "time"      => parseTimeMicros(c)
       case "timei"     => parseTimeMicros(
         regexp_extract(c, "^\\s*(\\d{1,2}:\\d{2}:\\d{2}(\\.\\d{1,6})?)", 1))
@@ -199,6 +209,8 @@ object DatasetType {
     types.keys.foreach { c =>
       require(df.columns.contains(c), s"dataset_type: no column '$c' in input")
     }
+    val zone = sessionZone(df)
+    def parse(c: Column, spec: String): Column = DatasetType.parse(c, spec, opts, zone)
     // fail fast on an unparseable default: it would otherwise compile to a
     // constant NULL, silently nulling every parse failure — and with
     // filterBad those rows are ALSO excluded from `bad` (data loss from a
@@ -206,18 +218,18 @@ object DatasetType {
     defaults.foreach { case (name, d) =>
       if (types.contains(name)) {
         val ok = !df.sparkSession.range(1)
-          .select(parse(lit(d), types(name), opts).as("v")).collect()(0).isNullAt(0)
+          .select(parse(lit(d), types(name)).as("v")).collect()(0).isNullAt(0)
         require(ok,
           s"dataset_type: default '$d' for column '$name' does not parse as ${types(name)}")
       }
     }
 
     def typedCol(name: String): Column = {
-      val parsed = parse(Q(name), types(name), opts)
+      val parsed = parse(Q(name), types(name))
       defaults.get(name) match {
         case Some(d) =>
           // input null → null; parse failure on non-null input → default
-          val dv = parse(lit(d), types(name), opts)
+          val dv = parse(lit(d), types(name))
           coalesce(parsed, when(Q(name).isNotNull, dv)).as(name)
         case None => parsed.as(name)
       }
@@ -242,7 +254,7 @@ object DatasetType {
       // row is bad iff some typed col: input non-null, parse null, no default
       val colBad = types.keys.toSeq.map { name =>
         if (defaults.contains(name)) lit(false)
-        else Q(name).isNotNull && parse(Q(name), types(name), opts).isNull
+        else Q(name).isNotNull && parse(Q(name), types(name)).isNull
       }
       val rowBad = colBad.reduce(_ || _)
       TypedResult(rehash(df.filter(!rowBad).select(outCols: _*)), df.filter(rowBad), opts)

@@ -126,6 +126,13 @@ class SortAndOpsSpec extends AnyFunSuite {
       Seq((4, "w")).toDF("k", "v"))
     assert(jobs { c = DatasetChecksum.chain(plain) } == 1)
     assert(c == DatasetChecksum.value(plain.reduce(_ unionByName _)))
+    // an empty dataset sums to zero on both paths, and adds nothing to a chain
+    val zero = (BigDecimal(0), BigDecimal(0), 0L)
+    val empty = fixture.limit(0)
+    assert(DatasetChecksum.value(empty) == zero)
+    assert(frameValue(empty) == zero)
+    assert(DatasetChecksum.chain(Seq(empty)) == zero)
+    assert(DatasetChecksum.chain(Seq(fixture, empty)) == frameValue(fixture))
   }
 
   test("hashpart: each key in exactly one partition") {
