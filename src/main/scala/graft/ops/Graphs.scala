@@ -112,8 +112,7 @@ object Graphs {
       count(lit(1)).as("n_nodes"),
       coalesce(sum(col("od")), lit(0L)).as("n_edges"),
       count(when(col("od") === 0, 1)).as("n_dangling"),
-      // edge-free input: all-zero row, not NULL extrema — the same
-      // convention as triangleDiag (r13)
+      // edge-free input: all-zero row, not NULL extrema
       coalesce(max(col("od")), lit(0L)).as("max_out_deg"),
       coalesce(max(col("id")), lit(0L)).as("max_in_deg"))
     // Reciprocity self-join — the op's one edge-sized exchange. Same
@@ -139,53 +138,6 @@ object Graphs {
         .agg(count(lit(1)).as("n_reciprocal"))
     }
     summary.crossJoin(nRecip)
-  }
-
-  /** Census-shape diagnostic: one row (n_wedges, n_candidates,
-    * n_oriented_edges, max_oriented_outdeg) where n_candidates is the
-    * oriented two-hop join size Σ_v in(v)·out(v) — the EXACT row count
-    * [[triangleStats]]'s first join materializes, i.e. the shuffle the
-    * census pays. Wedges measure the DATA (Σ d(d−1)/2 grows when
-    * replication densifies a fixed node domain); candidates measure the
-    * ENGINE (what the degree-ordered orientation admits of those
-    * wedges). Candidates tracking wedges at scale = densification;
-    * candidates outgrowing wedges = an orientation bug. max_oriented_
-    * outdeg checks the O(√m) adjacency bound the orientation exists for.
-    */
-  def triangleDiag(edges: DataFrame, srcCol: String,
-                   dstCol: String): DataFrame = Cached.frame { c =>
-    val e = edges.select(Q(srcCol).cast("long").as("src"),
-        Q(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-    val und = c(e.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct())
-    val deg = und.select(col("a").as("v"))
-      .unionAll(und.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("d"))
-    val wedges = deg.agg(coalesce(sum(expr("(d * (d - 1)) div 2")),
-      lit(0L)).as("n_wedges"))
-    val ranked = und
-      .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
-      .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
-      .select(
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("lo"), col("b").as("hi")))
-          .otherwise(struct(col("b").as("lo"), col("a").as("hi")))
-          .as("o"))
-      .select(col("o.lo").as("x"), col("o.hi").as("y"))
-    val outs = ranked.groupBy("x").agg(count(lit(1)).as("outn"))
-    val ins = ranked.groupBy("y").agg(count(lit(1)).as("inn"))
-    val cand = outs.join(ins, outs("x") === ins("y"))
-      .agg(coalesce(sum(col("outn") * col("inn")), lit(0L))
-        .as("n_candidates"))
-    val eStats = outs.agg(count(lit(1)).as("__nv"),
-      coalesce(sum(col("outn")), lit(0L)).as("n_oriented_edges"),
-      coalesce(max(col("outn")), lit(0L)).as("max_oriented_outdeg"))
-      .drop("__nv")
-    wedges.crossJoin(cand).crossJoin(eStats)
   }
 
   /** Triangle census of the UNDIRECTED graph underlying the edge set:

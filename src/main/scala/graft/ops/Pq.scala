@@ -301,43 +301,4 @@ object Pq {
     TopKPerGroup(scored, Seq("qid"), "adist", k, Seq("nid"),
       ascending = true)
   }
-
-  /** IVF probe observability: per query, how many code-store rows its
-    * `nprobe` lists actually contain — (qid, scanned, total). scanned /
-    * total is the I/O fraction the nprobe/nlist design bound promises
-    * (~25% at the gated 4/16 sizing); publishing it at each measured
-    * scale is what turns the "memory-bound 100 TB path" claim from plan
-    * shape into numbers (the dd_simhash-histogram pattern applied to
-    * retrieval). Re-runs the coarse fit/assign — a diagnostic, untimed.
-    */
-  def probeStats(corpus: DataFrame, queries: DataFrame, idCol: String,
-                 vecCol: String, iters: Int, nlist: Int, nprobe: Int,
-                 quantShift: Int = 6, fpShift: Int = 10): DataFrame = {
-    require(nprobe >= 1 && nprobe <= nlist, s"need 1 <= nprobe=$nprobe <= nlist=$nlist")
-    val s = corpus.sparkSession
-    val fp = 1L << fpShift
-    val coarse = KMeans.fit(corpus, idCol, vecCol, nlist, iters,
-      quantShift, fpShift)
-    val sizes = KMeans.assignTo(corpus, idCol, vecCol, coarse,
-      quantShift, fpShift)
-      .groupBy("cluster").agg(count(lit(1)).as("n"))
-    val total = corpus.count()
-    val qRows = queries
-      .select(Q(idCol).as("qid"), quant(Q(vecCol), quantShift).as("__q"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    import s.implicits._
-    val qdf = qRows.map { case (qid, qv) =>
-      (qid, probeList(coarse, qv, nprobe, fp))
-    }.toSeq.toDF("qid", "probes")
-    // Left join: a probed-but-empty cluster contributes 0 rows scanned,
-    // and a query whose probe lists are all empty still reports
-    // scanned = 0 instead of vanishing (ADVICE r12 — ScaleCheck's probe
-    // fraction averages over these rows).
-    qdf.select(col("qid"), explode_outer(col("probes")).as("cluster"))
-      .join(sizes, Seq("cluster"), "left")
-      .groupBy("qid")
-      .agg(coalesce(sum(col("n")), lit(0L)).as("scanned"))
-      .withColumn("total", lit(total))
-  }
 }

@@ -129,7 +129,7 @@ object GraphPack {
     // onto hash(src) — an EDGE-SIZED shuffle (exchange reuse dedups the
     // per-iteration copies into one, but that one is a full disk
     // materialization of the graph, measured 2-3x the family's x10
-    // shuffle bytes, SCALE_CHECK_REPRO r20). The bucketed scan recovers
+    // shuffle bytes in the r20 x10 repro rows). The bucketed scan recovers
     // HashPartitioning(src, 32) and the loop pays zero edge-side
     // exchanges — the Scaladoc's "edge store bucketed by src" shape,
     // delivered in the gated queries; the PageRankSpec layout law pins
@@ -443,16 +443,6 @@ object GraphPack {
     */
   def trianglesQ(s: SparkSession, dir: String): DataFrame =
     graft.ops.Graphs.triangleStats(triangleDenseEdges(s, dir),
-      "src", "dst")
-
-  /** The census adjudication diagnostic over gr_triangles' exact edge
-    * set — wedges (data growth) vs oriented two-hop candidates (engine
-    * cost); published by ScaleCheck's gr_triangles note.
-    */
-  def trianglesDiag(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Graphs.triangleDiag(
-      edgeStore(s, dir)
-        .where(col("src") % 2 === 0 && col("dst") % 2 === 0),
       "src", "dst")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

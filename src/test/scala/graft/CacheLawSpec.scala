@@ -54,7 +54,6 @@ class CacheLawSpec extends AnyFunSuite {
 
   private val ok: Seq[(String, () => Any)] = Seq(
     "Graphs.report" -> (() => Graphs.report(edges, "src", "dst")),
-    "Graphs.triangleDiag" -> (() => Graphs.triangleDiag(edges, "src", "dst")),
     "Graphs.triangleStats" -> (() => Graphs.triangleStats(edges, "src", "dst")),
     "PageRank.ranksIndexed" -> (() =>
       PageRank.ranksIndexed(PageRank.normalizedEdges(edges, "src", "dst"), iters = 3)),

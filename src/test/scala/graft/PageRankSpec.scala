@@ -197,7 +197,7 @@ class PageRankSpec extends AnyFunSuite {
   }
 
   test("bucketed edge store: the run pays no edge-sized exchange") {
-    // The r20 layout law behind SCALE_CHECK_REPRO's 3-6x shuffle cut
+    // The r20 layout law behind the 3-6x x10 shuffle cut (docs/SCALE.md)
     // (gr_ppr/gr_pagerank_w/gr_pagerank_resume): a src-bucketed snapshot
     // read recovers HashPartitioning(src), so the rank loop's edge side
     // joins exchange-free; an UNBUCKETED read must exchange the whole

@@ -14,6 +14,10 @@ import scala.jdk.CollectionConverters._
   * Cache lifetime has one owner: `graft.core.Cached`. Outside it, only
   * the session purge (`Materialize.purge`) and `CsvImport`'s lazy result
   * with its `release()` handle may persist or release anything.
+  *
+  * Timing has one loop: `graft.core.TimedPasses`. It alone materializes
+  * a query for the clock, and the retired ScaleCheck modes and their side
+  * artifacts stay retired.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -53,5 +57,25 @@ class SourceHygieneSpec extends AnyFunSuite {
       }.toSeq
     assert(offenders.isEmpty,
       s"cache calls outside graft.core.Cached:\n${offenders.mkString("\n")}")
+  }
+
+  test("one timed runner: only TimedPasses materializes, no retired scale modes") {
+    val main = Paths.get(sys.props("user.dir"), "src/main/scala")
+    val self = "graft/SourceHygieneSpec.scala"
+    def lines(root: Path): Iterator[(String, String, Int)] =
+      Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          val rel = root.relativize(p).toString.replace('\\', '/')
+          Files.readAllLines(p).asScala.iterator.zipWithIndex.map { case (l, i) => (rel, l, i + 1) }
+        }
+    val materialize = lines(main).collect {
+      case (f, l, i) if l.contains("Materialize.full(") && f != "graft/core/TimedPasses.scala" =>
+        s"$f:$i: ${l.trim}"
+    }.toSeq
+    assert(materialize.isEmpty, s"Materialize.full outside TimedPasses:\n${materialize.mkString("\n")}")
+    val retired = Seq("SPARK_GRAFT_SCALE_X100", "SPARK_GRAFT_SCALE_X1000", "SCALE_CHECK_REPRO")
+    val named = Seq(main, Paths.get(sys.props("user.dir"), "src/test/scala")).flatMap(lines)
+      .collect { case (f, l, i) if f != self && retired.exists(l.contains) => s"$f:$i: ${l.trim}" }
+    assert(named.isEmpty, s"retired scale modes named:\n${named.mkString("\n")}")
   }
 }
